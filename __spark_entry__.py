@@ -18,6 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_integration_and_harmonization_spark.functions.concurrency import overlap
 from data_integration_and_harmonization_spark.functions.indexing import with_global_index
 from data_integration_and_harmonization_spark.operators import clean as C
 from data_integration_and_harmonization_spark.operators import dedup as DD
@@ -757,8 +758,6 @@ def q_ml_classification(spark: SparkSession, sf: str) -> DataFrame:
     # ran back-to-back leaving most cores idle. Concurrent driver
     # threads overlap them; result VALUES are unchanged and the result
     # dict is assembled in the original key order below.
-    from concurrent.futures import ThreadPoolExecutor
-
     def _zoo_chain():
         return ML.train_models(labeled, "target", is_classification=True)
 
@@ -801,13 +800,9 @@ def q_ml_classification(spark: SparkSession, sf: str) -> DataFrame:
             small.unpersist(False)
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    with ThreadPoolExecutor(max_workers=3) as _pool:
-        _f_zoo = _pool.submit(_zoo_chain)
-        _f_s8 = _pool.submit(_s8_chain)
-        _f_qc = _pool.submit(ML.quality_classifier, docs)
-        res = _f_zoo.result()
-        disagree = _f_s8.result()
-        qc_res = _f_qc.result()
+    res, disagree, qc_res = overlap(
+        _zoo_chain, _s8_chain, lambda: ML.quality_classifier(docs)
+    )
     res["Persistence"] = {"SaveLoadPredictAgree": 1.0 if disagree == 0 else 0.0}
 
     # P8: the missing-target guard must trip (ref:56-57)
@@ -1373,19 +1368,11 @@ def q_src_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         )
         return z_row, skip_row, del_row, merge_row, evolve_row
 
-    # Launch the four Spark-bound chains now; the driver-side fixture
-    # ENCODES below (pdf/docx/pptx/epub/zip/warc/wiki byte builders —
-    # pure Python) run on the main thread, overlapping the chains'
-    # JVM work instead of serializing after it.
-    from concurrent.futures import ThreadPoolExecutor
-
-    _pool = ThreadPoolExecutor(max_workers=4)
-    _f_ingest = _pool.submit(_ingest_chain)
-    _f_part = _pool.submit(_part_chain)
-    _f_zver = _pool.submit(_zver_chain)
-    _f_compact = _pool.submit(_compact_chain)
-    try:
-
+    # The driver-side fixture ENCODES below (pdf/docx/pptx/epub/zip/
+    # warc/wiki byte builders — pure Python) run as a fifth chain next
+    # to the four Spark-bound ones, overlapping the chains' JVM work
+    # instead of serializing after it.
+    def _fixture_chain():
         # '__pdf' + '__pdfmd5_*' rows (r11): baseline PDF text extraction
         # (functions/pdf.py — Flate content streams + Tj/TJ show
         # operators, ISO 32000-1). One two-page PDF per region row is
@@ -1906,13 +1893,37 @@ def q_src_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
             F.lit(None).cast("long").alias("sum_nkey"),
             F.lit(None).cast("long").alias("sum_rkey"),
         )
-        agg, prev_row = _f_ingest.result()
-        part_row = _f_part.result()
-        z_row, skip_row, del_row, merge_row, evolve_row = _f_zver.result()
-        comp_row = _f_compact.result()
-    finally:
-        _pool.shutdown()
-    return (
+        return [
+            pdf_row,
+            pdf_md5_row,
+            docx_row,
+            docx_md5_row,
+            pdf15_row,
+            pdf15_md5_row,
+            pdfcid_row,
+            pdfcid_md5_row,
+            pdf2col_row,
+            pdf2col_md5_row,
+            epub_row,
+            epub_md5_row,
+            srt_row,
+            vtt_row,
+            warc_row,
+            warc_md5_row,
+            zip_row,
+            wiki_row,
+            wikitxt_row,
+            ass_row,
+        ]
+
+    (
+        (agg, prev_row),
+        part_row,
+        (z_row, skip_row, del_row, merge_row, evolve_row),
+        comp_row,
+        fixture_rows,
+    ) = overlap(_ingest_chain, _part_chain, _zver_chain, _compact_chain, _fixture_chain)
+    out = (
         agg.unionByName(prev_row)
         .unionByName(part_row)
         .unionByName(z_row)
@@ -1923,27 +1934,10 @@ def q_src_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         .unionByName(skip_row)
         .unionByName(xlsx_ds_row)
         .unionByName(dlq_row)
-        .unionByName(pdf_row)
-        .unionByName(pdf_md5_row)
-        .unionByName(docx_row)
-        .unionByName(docx_md5_row)
-        .unionByName(pdf15_row)
-        .unionByName(pdf15_md5_row)
-        .unionByName(pdfcid_row)
-        .unionByName(pdfcid_md5_row)
-        .unionByName(pdf2col_row)
-        .unionByName(pdf2col_md5_row)
-        .unionByName(epub_row)
-        .unionByName(epub_md5_row)
-        .unionByName(srt_row)
-        .unionByName(vtt_row)
-        .unionByName(warc_row)
-        .unionByName(warc_md5_row)
-        .unionByName(zip_row)
-        .unionByName(wiki_row)
-        .unionByName(wikitxt_row)
-        .unionByName(ass_row)
     )
+    for row in fixture_rows:
+        out = out.unionByName(row)
+    return out
 
 
 def q_ml_exact_split(spark: SparkSession, sf: str) -> DataFrame:
@@ -2103,27 +2097,115 @@ def q_stream_batch_twin(spark: SparkSession, sf: str) -> DataFrame:
     s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     stream_ev = SP.ensure_event_time(SP.stream_events(s2, f"{sf}/events.parquet"))
 
-    # The three drains are independent Structured Streaming queries —
-    # start them from concurrent driver threads so their fixed
-    # per-query costs (checkpoint setup, micro-batch planning) overlap
-    # instead of serializing (~2.5 s each alone; ~one query's cost
-    # concurrent). Results are deterministic per drain, so concurrency
-    # cannot change values.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # The drains are independent Structured Streaming queries — start
+    # them from concurrent driver threads so their fixed per-query
+    # costs (checkpoint setup, micro-batch planning) overlap instead of
+    # serializing (~2.5 s each alone; ~one query's cost concurrent).
+    # Results are deterministic per drain, so concurrency cannot change
+    # values.
     dd_keys = ["user_id", "event_type"]
-    # 10 workers for the 9 submitted drains (r13: was 8 — the ninth
-    # queued behind a full pool; the drains are latency-bound
-    # streaming fixed costs, exactly the overlap-friendly shape)
-    with ThreadPoolExecutor(max_workers=10) as pool:
-        f_tumble = pool.submit(
-            SP.run_availablenow,
-            SP.tumbling_stream(stream_ev),
-            f"twin_{run_id}",
-            "parquet",
+
+    # 6th leg: transactional versioned-table sink — every micro-batch
+    # commits a manifest version (append), so a pinned reader never
+    # sees a half-visible batch. The 9th leg's DRAIN (r11), the
+    # manifest_cdf streaming source over this table, follows it in the
+    # same thread: its input is this drain's commit chain, and its
+    # fixed streaming-query cost still overlaps the remaining drains.
+    def _drain_versioned():
+        import os as _os
+
+        from data_integration_and_harmonization_spark.functions.caching import (
+            scratch_dir as _scratch,
         )
-        f_dd = pool.submit(
-            SP.run_availablenow,
+        from data_integration_and_harmonization_spark.sources.cdf_stream import (
+            read_manifest_cdf,
+        )
+
+        b = _scratch(f"twin_ver_{run_id}")
+        root = _os.path.join(b, "tbl")
+        vs = SP.stream_to_versioned_table(
+            SP.stream_events(s2, f"{sf}/events.parquet"),
+            root,
+            _os.path.join(b, "data"),
+        )
+        fb = _scratch(f"twin_cdf_feed_{run_id}")
+        out = _os.path.join(fb, "out")
+        (
+            read_manifest_cdf(spark, root, ["event_id"])
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", _os.path.join(fb, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        return root, vs, out
+
+    # 7th leg: streaming CDC MERGE — per-batch upserts into a manifest
+    # table with newer-wins conflict resolution; the final state must
+    # equal the batch per-key argmax regardless of micro-batch
+    # boundaries.
+    def _drain_cdc():
+        import os as _os
+
+        from data_integration_and_harmonization_spark.functions.caching import (
+            scratch_dir as _scratch,
+        )
+
+        b = _scratch(f"twin_cdc_{run_id}")
+        root = _os.path.join(b, "tbl")
+        SP.stream_cdc_to_versioned_table(
+            SP.stream_events(
+                s2, f"{sf}/events.parquet", max_files_per_trigger=2
+            ).where(F.col("user_id") % 25 == 0),
+            root,
+            _os.path.join(b, "data"),
+            ["user_id", "event_type"],
+            ["ts", "event_id"],
+        )
+        return root
+
+    # 8th leg: streaming DQ quarantine routing (dead-letter queue) —
+    # row-local rules only, so the union of per-batch routings must
+    # equal the batch dq_split exactly, label-group for label-group.
+    _dq_rules = [
+        ("in_range", "value", 0.0, 250.0),
+        ("accepted", "event_type", ["click", "view", "purchase", "signup"]),
+        ("not_null", "user_id"),
+    ]
+
+    def _drain_dq():
+        import os as _os
+
+        from data_integration_and_harmonization_spark.functions.caching import (
+            scratch_dir as _scratch,
+        )
+
+        b = _scratch(f"twin_dq_{run_id}")
+        p_dir = _os.path.join(b, "passed")
+        q_dir = _os.path.join(b, "quarantined")
+        SP.stream_dq_split(
+            SP.stream_events(s2, f"{sf}/events.parquet"),
+            _dq_rules,
+            p_dir,
+            q_dir,
+        )
+        return p_dir, q_dir
+
+    (
+        drained,
+        dd,
+        st,
+        sj_pairs,
+        sess,
+        (ver_root, ver_versions, cdf_out),
+        cdc_root,
+        (dq_passed_dir, dq_quar_dir),
+    ) = overlap(
+        lambda: SP.run_availablenow(
+            SP.tumbling_stream(stream_ev), f"twin_{run_id}", "parquet"
+        ),
+        lambda: SP.run_availablenow(
             ST.dedup_stream(
                 SP.stream_events(s2, f"{sf}/events.parquet"),
                 dd_keys,
@@ -2134,19 +2216,15 @@ def q_stream_batch_twin(spark: SparkSession, sf: str) -> DataFrame:
             "parquet",
             None,
             "append",
-        )
-        f_st = pool.submit(
-            SP.run_availablenow,
-            ST.user_running_stats(
-                SP.stream_events(s2, f"{sf}/events.parquet")
-            ),
+        ),
+        lambda: SP.run_availablenow(
+            ST.user_running_stats(SP.stream_events(s2, f"{sf}/events.parquet")),
             f"twin_st_{run_id}",
             "parquet",
             None,
             "update",
-        )
-        f_join = pool.submit(
-            SP.run_availablenow,
+        ),
+        lambda: SP.run_availablenow(
             SP.interval_join_stream(
                 SP.stream_events(s2, f"{sf}/events.parquet"),
                 SP.stream_events(s2, f"{sf}/events.parquet"),
@@ -2155,134 +2233,16 @@ def q_stream_batch_twin(spark: SparkSession, sf: str) -> DataFrame:
             "parquet",
             None,
             "append",
-        )
-        f_sess = pool.submit(
-            SP.run_availablenow,
-            SP.session_stream(
-                SP.stream_events(s2, f"{sf}/events.parquet")
-            ),
+        ),
+        lambda: SP.run_availablenow(
+            SP.session_stream(SP.stream_events(s2, f"{sf}/events.parquet")),
             f"twin_sess_{run_id}",
             "parquet",
-        )
-
-        # 6th leg: transactional versioned-table sink — every
-        # micro-batch commits a manifest version (append), so a
-        # pinned reader never sees a half-visible batch.
-        def _drain_versioned():
-            import os as _os
-
-            from data_integration_and_harmonization_spark.functions.caching import (
-                scratch_dir as _scratch,
-            )
-
-            b = _scratch(f"twin_ver_{run_id}")
-            root = _os.path.join(b, "tbl")
-            vs = SP.stream_to_versioned_table(
-                SP.stream_events(s2, f"{sf}/events.parquet"),
-                root,
-                _os.path.join(b, "data"),
-            )
-            return root, vs
-
-        f_ver = pool.submit(_drain_versioned)
-
-        # 7th leg: streaming CDC MERGE — per-batch upserts into a
-        # manifest table with newer-wins conflict resolution; the
-        # final state must equal the batch per-key argmax regardless
-        # of micro-batch boundaries.
-        def _drain_cdc():
-            import os as _os
-
-            from data_integration_and_harmonization_spark.functions.caching import (
-                scratch_dir as _scratch,
-            )
-
-            b = _scratch(f"twin_cdc_{run_id}")
-            root = _os.path.join(b, "tbl")
-            SP.stream_cdc_to_versioned_table(
-                SP.stream_events(
-                    s2, f"{sf}/events.parquet", max_files_per_trigger=2
-                ).where(F.col("user_id") % 25 == 0),
-                root,
-                _os.path.join(b, "data"),
-                ["user_id", "event_type"],
-                ["ts", "event_id"],
-            )
-            return root
-
-        f_cdc = pool.submit(_drain_cdc)
-
-        # 8th leg: streaming DQ quarantine routing (dead-letter queue)
-        # — row-local rules only, so the union of per-batch routings
-        # must equal the batch dq_split exactly, label-group for
-        # label-group.
-        _dq_rules = [
-            ("in_range", "value", 0.0, 250.0),
-            ("accepted", "event_type", ["click", "view", "purchase", "signup"]),
-            ("not_null", "user_id"),
-        ]
-
-        def _drain_dq():
-            import os as _os
-
-            from data_integration_and_harmonization_spark.functions.caching import (
-                scratch_dir as _scratch,
-            )
-
-            b = _scratch(f"twin_dq_{run_id}")
-            p_dir = _os.path.join(b, "passed")
-            q_dir = _os.path.join(b, "quarantined")
-            SP.stream_dq_split(
-                SP.stream_events(s2, f"{sf}/events.parquet"),
-                _dq_rules,
-                p_dir,
-                q_dir,
-            )
-            return p_dir, q_dir
-
-        f_dq = pool.submit(_drain_dq)
-
-        # 9th leg's DRAIN (r11): the manifest_cdf streaming source over
-        # the versioned drain's table. Submitted INTO the pool, gated
-        # on f_ver (its input is that drain's commit chain), so its
-        # fixed streaming-query cost overlaps the remaining drains
-        # instead of serializing after them.
-        def _drain_cdf_feed():
-            import os as _os
-
-            from data_integration_and_harmonization_spark.functions.caching import (
-                scratch_dir as _scratch,
-            )
-            from data_integration_and_harmonization_spark.sources.cdf_stream import (
-                read_manifest_cdf,
-            )
-
-            root, _ = f_ver.result()
-            b = _scratch(f"twin_cdf_feed_{run_id}")
-            out = _os.path.join(b, "out")
-            (
-                read_manifest_cdf(spark, root, ["event_id"])
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", _os.path.join(b, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-            return out
-
-        f_cdf_feed = pool.submit(_drain_cdf_feed)
-        drained, dd, st, sj_pairs, sess, (ver_root, ver_versions), cdc_root = (
-            f_tumble.result(),
-            f_dd.result(),
-            f_st.result(),
-            f_join.result(),
-            f_sess.result(),
-            f_ver.result(),
-            f_cdc.result(),
-        )
-        dq_passed_dir, dq_quar_dir = f_dq.result()
-        cdf_out = f_cdf_feed.result()
+        ),
+        _drain_versioned,
+        _drain_cdc,
+        _drain_dq,
+    )
     s = drained.select(
         "window_start", "event_type", F.col("n_events").alias("s_n"), F.col("sum_value").alias("s_sum")
     )

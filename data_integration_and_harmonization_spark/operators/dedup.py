@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_integration_and_harmonization_spark.functions.concurrency import overlap
 from data_integration_and_harmonization_spark.operators import graph as _graph
 from data_integration_and_harmonization_spark.operators.text import normalized, tokens
 
@@ -55,10 +56,8 @@ def _shingle_hash(col: Column, hash_family: str) -> Column:
     raise ValueError(f"unknown hash_family: {hash_family!r}")
 
 
-def word_shingles(
-    col: Column | str, gram: int = 3, toks: Column | None = None
-) -> Column:
-    """Distinct word ``gram``-shingles of the document.
+def word_shingles(toks: Column, gram: int = 3) -> Column:
+    """Distinct word ``gram``-shingles of a token-array column.
 
     Shape matters: higher-order functions run interpreted, and a
     lambda that CAPTURES an outer expression re-evaluates it per
@@ -69,17 +68,16 @@ def word_shingles(
     slice/arrays_zip — each evaluated once per row — and the lambda
     touches nothing but its own zipped element.
 
-    ``toks``: a pre-staged token-array column. Without it the
-    ``tokens(col)`` regexp tree is INLINED at every reference below
-    (2 per slice: the slice input and the length bound) — Catalyst
-    does not CSE regexp trees, so the tokenizer runs ~2*gram times
-    per row (r14, guide §1.2; the same trap r13 fixed in
-    document_profile). Callers that control a projection should stage
-    ``tokens(...)`` under an alias there and pass it here.
+    ``toks`` must be a pre-staged token-array column: an inline
+    ``tokens(...)`` regexp tree would be repeated at every reference
+    below (2 per slice: the slice input and the length bound) —
+    Catalyst does not CSE regexp trees, so the tokenizer would run
+    ~2*gram times per row (r14, guide §1.2; the same trap r13 fixed in
+    document_profile). Callers stage ``tokens(...)`` under an alias in
+    a prior projection and pass that column here.
     """
-    t = tokens(col) if toks is None else toks
-    n = F.greatest(F.size(t) - (gram - 1), F.lit(0))
-    z = F.arrays_zip(*[F.slice(t, j + 1, n) for j in range(gram)])
+    n = F.greatest(F.size(toks) - (gram - 1), F.lit(0))
+    z = F.arrays_zip(*[F.slice(toks, j + 1, n) for j in range(gram)])
     return F.array_distinct(
         F.transform(z, lambda x: F.concat_ws(" ", *[x[str(j)] for j in range(gram)]))
     )
@@ -120,7 +118,7 @@ def minhash_signatures(
     # makes the tokenizer run once per document instead of ~6x.
     staged = src.select("id", tokens("t").alias("__tk"))
     ex = staged.select(
-        "id", F.explode(word_shingles("t", gram, toks=F.col("__tk"))).alias("s")
+        "id", F.explode(word_shingles(F.col("__tk"), gram)).alias("s")
     ).select("id", _shingle_hash(F.col("s"), hash_family).alias("h"))
     aggs = [
         F.min((F.col("h") * (2 * i + 1) + (7 * i + 3)) % _P).alias(f"m{i}")
@@ -926,8 +924,6 @@ def incremental_near_dedup(
     # so it runs on a driver thread CONCURRENTLY with the in-batch
     # component chain (guide §2.6) instead of as a sequential action
     # after it.
-    from concurrent.futures import ThreadPoolExecutor
-
     from data_integration_and_harmonization_spark.functions.stores import (
         complete_batches,
         store_fs,
@@ -959,32 +955,31 @@ def incremental_near_dedup(
             "batch layout; re-ingest it (or move each batch's parquet "
             "into a sigs/ subdir and rebuild the index/ partitions)"
         )
-    _kpool = ThreadPoolExecutor(max_workers=1)
-    try:
-        keys_future = None
-        if batches:
-            # the batch's collided partition set, computed from ALL of
-            # the batch's signatures rather than the post-dedup keepers:
-            # a SUPERSET of the keepers' key set, so the pruned index
-            # read admits every directory the join needs (results are
-            # identical — the join itself still pairs only keeper rows);
-            # the superset costs at most a few extra directory opens and
-            # buys the probe independence from the component chain, so
-            # the two run concurrently. Still bounded by
-            # bands x store_partitions, never by batch or corpus size.
-            all_banded = _banded_rows(sig, num_hashes, bands, hash_family).withColumn(
-                "pbucket", pb(F.col("bucket"))
-            )
-            _k = (F.col("band") * P + F.col("pbucket")).alias("k")
-            keys_future = _kpool.submit(
-                lambda: [r["k"] for r in all_banded.select(_k).distinct().collect()]
-            )
+
+    def _keys():
+        if not batches:
+            return None
+        # the batch's collided partition set, computed from ALL of the
+        # batch's signatures rather than the post-dedup keepers: a
+        # SUPERSET of the keepers' key set, so the pruned index read
+        # admits every directory the join needs (results are identical
+        # — the join itself still pairs only keeper rows); the superset
+        # costs at most a few extra directory opens and buys the probe
+        # independence from the component chain, so the two run
+        # concurrently. Still bounded by bands x store_partitions,
+        # never by batch or corpus size.
+        all_banded = _banded_rows(sig, num_hashes, bands, hash_family).withColumn(
+            "pbucket", pb(F.col("bucket"))
+        )
+        _k = (F.col("band") * P + F.col("pbucket")).alias("k")
+        return [r["k"] for r in all_banded.select(_k).distinct().collect()]
+
+    def _keepers():
         comp = duplicate_clusters(pairs)  # (id, cluster_id); members only
         dominated = comp.where(F.col("id") != F.col("cluster_id")).select("id")
-        keep_sig = sig.join(dominated, "id", "left_anti")
-        keys = keys_future.result() if keys_future is not None else None
-    finally:
-        _kpool.shutdown()
+        return sig.join(dominated, "id", "left_anti")
+
+    keys, keep_sig = overlap(_keys, _keepers)
     nb = (
         _banded_rows(keep_sig, num_hashes, bands, hash_family)
         .withColumn("pbucket", pb(F.col("bucket")))
@@ -1220,12 +1215,11 @@ def duplicated_ngram_stats(
     from data_integration_and_harmonization_spark.functions.caching import track
 
     ex = (
-        # staged tokenize (r14): see minhash_signatures — unstaged,
-        # word_shingles inlines the regexp tokenizer ~2*gram times
+        # staged tokenize (r14): see minhash_signatures
         df.select(F.col(id_col).alias("id"), tokens(text_col).alias("__tk"))
         .select(
             "id",
-            F.explode(word_shingles(text_col, gram, toks=F.col("__tk"))).alias("g"),
+            F.explode(word_shingles(F.col("__tk"), gram)).alias("g"),
         )
         .select("id", F.md5("g").alias("h"))
     )
@@ -1468,7 +1462,7 @@ def ngram_jaccard_pairs(
     base = base.repartition(n, *[F.col(k) for k in keys])
     # staged tokenize (r14): see minhash_signatures
     s = base.select("id", *keys, tokens("__t").alias("__tk")).select(
-        "id", *keys, word_shingles("__t", gram, toks=F.col("__tk")).alias("sh")
+        "id", *keys, word_shingles(F.col("__tk"), gram).alias("sh")
     )
     left, right = s.alias("l"), s.alias("r")
     on = (F.col("l.id") < F.col("r.id"))
@@ -1512,7 +1506,7 @@ def lsh_verified_pairs(
         .repartition(n, "id")
         # staged tokenize (r14): see minhash_signatures
         .select("id", tokens("t").alias("__tk"))
-        .select("id", word_shingles("t", gram, toks=F.col("__tk")).alias("sh"))
+        .select("id", word_shingles(F.col("__tk"), gram).alias("sh"))
     )
     j = (
         cands.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
@@ -1815,8 +1809,6 @@ def dedup_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 F.col("id").alias("keep_id"),
             )
 
-        from concurrent.futures import ThreadPoolExecutor
-
         # r13 threaded the exact chain alongside the near chain and
         # REVERTED it (then: 13.4 s sequential vs 14.5 s threaded —
         # the near chain was wall-to-wall 32-wide stages). r14 cut the
@@ -1826,33 +1818,30 @@ def dedup_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # threaded 11.1 s vs sequential 11.4 s min (12.0 vs 13.4
         # median), so the exact chain rides a driver thread again,
         # next to the CDF drain.
-        _pool = ThreadPoolExecutor(max_workers=2)
-        _f_cdfnd = _pool.submit(_cdfnd_chain)
-
         def _exact_chain():
             store = scratch_dir("fp_store") + "/store"
             eb1 = incremental_exact_dedup(docs.where(F.col("doc_id") % 2 == 0), store)
             eb2 = incremental_exact_dedup(docs.where(F.col("doc_id") % 2 == 1), store)
             return eb1, eb2
 
-        _f_exact = _pool.submit(_exact_chain)
         # 'nd1'/'nd2' legs: the NEAR-dup admit sequence
         # (incremental_near_dedup) over the same even/odd batches —
         # signature-store matching (banded LSH + estimated Jaccard at
         # 0.5), md5 family so the oracle replays signatures, in-batch
         # components, and history hits bit-for-bit.
-        nd_store = scratch_dir("nd_store") + "/store"
-        n1 = incremental_near_dedup(
-            docs.where(F.col("doc_id") % 2 == 0), nd_store,
-            threshold=0.5, hash_family="md5",
-        )
-        n2 = incremental_near_dedup(
-            docs.where(F.col("doc_id") % 2 == 1), nd_store,
-            threshold=0.5, hash_family="md5",
-        )
-        b1, b2 = _f_exact.result()
-        cdfnd = _f_cdfnd.result()
-        _pool.shutdown()
+        def _near_chain():
+            nd_store = scratch_dir("nd_store") + "/store"
+            n1 = incremental_near_dedup(
+                docs.where(F.col("doc_id") % 2 == 0), nd_store,
+                threshold=0.5, hash_family="md5",
+            )
+            n2 = incremental_near_dedup(
+                docs.where(F.col("doc_id") % 2 == 1), nd_store,
+                threshold=0.5, hash_family="md5",
+            )
+            return n1, n2
+
+        cdfnd, (b1, b2), (n1, n2) = overlap(_cdfnd_chain, _exact_chain, _near_chain)
 
         def inc_rows(b: DataFrame, kind: str) -> DataFrame:
             # same null-text sentinel the store uses, so a null-text
@@ -1944,8 +1933,6 @@ def dedup_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             resolve_entities,
         )
 
-        from concurrent.futures import ThreadPoolExecutor
-
         from data_integration_and_harmonization_spark.functions.caching import (
             track,
         )
@@ -1985,13 +1972,7 @@ def dedup_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         def _pr_chain():
             return pagerank_ppb_leg(spark.read.parquet(f"{sf}/lineitem.parquet"))
 
-        with ThreadPoolExecutor(max_workers=3) as _pool:
-            _f_doc = _pool.submit(_doc_chain)
-            _f_er = _pool.submit(_er_chain)
-            _f_pr = _pool.submit(_pr_chain)
-            doc_cl = _f_doc.result()
-            er_cl = _f_er.result()
-            pr_leg = _f_pr.result()
+        doc_cl, er_cl, pr_leg = overlap(_doc_chain, _er_chain, _pr_chain)
         # kind='tri': per-node triangle counts over the NEAR-DUP doc
         # graph (the LSH-verified pairs already computed above) —
         # triangle density measures duplicate-cluster cohesion
@@ -2300,7 +2281,6 @@ def dedup_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # independent lineages run back-to-back before; concurrent
         # driver threads overlap their many short jobs. Values are
         # unchanged — both chains are deterministic in isolation.
-        from concurrent.futures import ThreadPoolExecutor
 
         def _seed_chain():
             sd = semantic_dedup(
@@ -2346,11 +2326,7 @@ def dedup_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .first()["d"]
             )
 
-        with ThreadPoolExecutor(max_workers=2) as _pool:
-            _f_seed = _pool.submit(_seed_chain)
-            _f_km = _pool.submit(_km_chain)
-            sd, d_seed = _f_seed.result()
-            d_km, km_stats, bad_keep = _f_km.result()
+        (sd, d_seed), (d_km, km_stats, bad_keep) = overlap(_seed_chain, _km_chain)
 
         cell_rows = sd.select(
             F.lit("sem_cell").alias("kind"),

@@ -25,6 +25,7 @@ reference's structure with distributed execution underneath.
 
 from __future__ import annotations
 
+import functools
 from typing import Any
 
 from pyspark.ml.evaluation import MulticlassClassificationEvaluator, RegressionEvaluator
@@ -33,6 +34,7 @@ from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_integration_and_harmonization_spark.functions.concurrency import overlap
 from data_integration_and_harmonization_spark.operators.clean import numeric_cols
 
 # Metric display names (ref:110-119): classification reports
@@ -483,21 +485,15 @@ def train_models(
     # (guide §2.6) changes no value (counts only materialize, the
     # distinct is the same aggregate).
     test = test.cache()
-    from concurrent.futures import ThreadPoolExecutor
 
-    n_classes = 0
-    with ThreadPoolExecutor(max_workers=2) as _pre:
-        _f_tr = _pre.submit(train.count)
-        _f_te = _pre.submit(test.count)
-        if is_classification:
-            n_classes = base.select("label").distinct().count()
-        _f_tr.result()
-        _f_te.result()
+    def _n_classes():
+        return base.select("label").distinct().count() if is_classification else 0
+
+    _, _, n_classes = overlap(train.count, test.count, _n_classes)
     base.unpersist(False)
 
-    with ThreadPoolExecutor(max_workers=len(zoo)) as pool:
-        futures = {name: pool.submit(fit_one, name, model) for name, model in zoo.items()}
-        results = {name: futures[name].result() for name in zoo}
+    fits = overlap(*[functools.partial(fit_one, name, model) for name, model in zoo.items()])
+    results = dict(zip(zoo, fits))
     train.unpersist()
     test.unpersist()
     return results

@@ -67,7 +67,7 @@ def local_media_frame(spark: SparkSession, rows: list[tuple], schema: str) -> Da
     """
     import pandas as pd
 
-    names = [f.split()[0] for f in schema.split(",")]
+    names = T._parse_datatype_string(schema).names
     pdf = pd.DataFrame(
         {
             n: [bytes(r[i]) if isinstance(r[i], (bytearray, memoryview)) else r[i] for r in rows]
@@ -330,16 +330,6 @@ def frame_sample_stub(payload: bytes, n_frames: int = 4, frame_size: int = 16) -
     return out
 
 
-AUDIO_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("n_frames", T.LongType(), True),
-        T.StructField("rms", T.DoubleType(), True),
-        T.StructField("band_share", T.ArrayType(T.DoubleType()), True),
-    ]
-)
-
-
 def audio_band_features(
     payload: bytes, n_bands: int = 8, frame: int = 256
 ) -> tuple[int, float, list[float]] | None:
@@ -378,37 +368,6 @@ def audio_band_features(
         round(rms, 9),
         [round(float(s), 9) for s in shares],
     )
-
-
-def extract_audio_features(
-    media: DataFrame, n_bands: int = 8, frame: int = 256
-) -> DataFrame:
-    """Arrow-batched spectral feature extraction over WAV payloads —
-    the audio sibling of :func:`extract_features` (same one-Python-
-    stage cost model; numpy rFFT is the per-payload C-speed kernel).
-    Non-WAV / too-short rows surface with NULL features rather than
-    dropping (a curation pass wants to SEE the undecodable rows)."""
-    import pandas as pd
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            ids, nfs, rmss, bands = [], [], [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                r = audio_band_features(p, n_bands, frame)
-                ids.append(mid)
-                if r is None:
-                    nfs.append(None)
-                    rmss.append(None)
-                    bands.append(None)
-                else:
-                    nfs.append(r[0])
-                    rmss.append(r[1])
-                    bands.append(r[2])
-            yield pd.DataFrame(
-                {"media_id": ids, "n_frames": nfs, "rms": rmss, "band_share": bands}
-            )
-
-    return media.mapInPandas(batches, schema=AUDIO_SCHEMA)
 
 
 def video_temporal_features(

@@ -23,6 +23,8 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_integration_and_harmonization_spark.functions.concurrency import overlap
+
 
 def money(col: str, scale: int = 2) -> "F.Column":
     """Exact fixed-point view of a money-valued double column.
@@ -206,16 +208,6 @@ def customers_without_orders(customer: DataFrame, orders: DataFrame) -> DataFram
     """Left-anti join: NOT EXISTS."""
     return customer.join(orders, customer["c_custkey"] == orders["o_custkey"], "left_anti").select(
         "c_custkey", "c_mktsegment"
-    )
-
-
-def distinct_agg(lineitem: DataFrame) -> DataFrame:
-    """Exact distinct aggregation per group (expand + two-phase agg in
-    Spark; `approx_count_distinct` is the one-pass scale variant)."""
-    return lineitem.groupBy("l_returnflag").agg(
-        F.countDistinct("l_partkey").alias("n_parts"),
-        F.countDistinct("l_suppkey").alias("n_supps"),
-        F.approx_count_distinct("l_orderkey").alias("approx_orders"),
     )
 
 
@@ -818,19 +810,11 @@ def relational_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 else 0.0
             )
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as _pool:
-            _f_cms = _pool.submit(_cms_chain)
-            _f_hh = _pool.submit(
-                lambda: set(
-                    li.stat.freqItems(["l_returnflag"], support=0.1).collect()[0][0]
-                )
-            )
-            _f_bloom = _pool.submit(_bloom_chain)
-            hot_rows, total, cms_ok = _f_cms.result()
-            approx_hot = _f_hh.result()
-            bloom_ok = _f_bloom.result()
+        (hot_rows, total, cms_ok), approx_hot, bloom_ok = overlap(
+            _cms_chain,
+            lambda: set(li.stat.freqItems(["l_returnflag"], support=0.1).collect()[0][0]),
+            _bloom_chain,
+        )
         exact_hot = {r["l_returnflag"] for r in hot_rows if r["n"] > 0.1 * total}
         hh_ok = 1.0 if exact_hot <= approx_hot else 0.0
         g = li.groupBy("l_returnflag").agg(

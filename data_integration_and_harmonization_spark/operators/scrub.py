@@ -64,19 +64,19 @@ def decontaminate(
 
     Output: (id, n_grams, n_hit, contamination, contaminated).
     """
-    # staged tokenize on both sides (r14): word_shingles inlines its
-    # regexp tokenizer ~2*gram times unless the token array is staged
-    # under an alias in a prior projection (see dedup.word_shingles)
+    # staged tokenize on both sides (r14): word_shingles references its
+    # token array ~2*gram times, so the array is staged under an alias
+    # in a prior projection (see dedup.word_shingles)
     ev = (
         eval_df.select(tokens(text_col).alias("__tk"))
-        .select(F.explode(word_shingles(text_col, gram, toks=F.col("__tk"))).alias("g"))
+        .select(F.explode(word_shingles(F.col("__tk"), gram)).alias("g"))
         .select(F.md5("g").alias("h"))
         .distinct()
         .withColumn("__hit", F.lit(1))
     )
     ex = (
         corpus.select(F.col(id_col).alias("id"), tokens(text_col).alias("__tk"))
-        .select("id", F.explode(word_shingles(text_col, gram, toks=F.col("__tk"))).alias("g"))
+        .select("id", F.explode(word_shingles(F.col("__tk"), gram)).alias("g"))
         .select("id", F.md5("g").alias("h"))
     )
     per_doc = (

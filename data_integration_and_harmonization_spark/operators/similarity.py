@@ -27,6 +27,8 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_integration_and_harmonization_spark.functions.concurrency import overlap
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential-order dot product of two array<numeric> columns."""
@@ -1417,17 +1419,11 @@ def similarity_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # short jobs. Concurrent driver threads overlap them; every
         # chain is deterministic in isolation, so values are
         # unchanged.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as _tpool:
-            _f_served = _tpool.submit(_served_chain)
-            _f_trained = _tpool.submit(_trained_chain)
-            _f_dseed = _tpool.submit(
-                lambda: enc.agg(F.avg("__err")).collect()[0][0]
-            )
-            served_rows = _f_served.result()
-            t_n, n_q, d_trained = _f_trained.result()
-            d_seed = _f_dseed.result()
+        served_rows, (t_n, n_q, d_trained), d_seed = overlap(
+            _served_chain,
+            _trained_chain,
+            lambda: enc.agg(F.avg("__err")).collect()[0][0],
+        )
         ok = d_trained <= d_seed + 1e-9 and t_n == 5 * n_q
         trained_row = spark.range(1).select(
             F.lit("pq_trained").alias("kind"),

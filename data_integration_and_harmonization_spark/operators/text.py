@@ -32,10 +32,6 @@ def tokens(col: Column | str) -> Column:
     return F.regexp_extract_all(F.lower(F.col(col) if isinstance(col, str) else col), F.lit(TOKEN_RE), 0)
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokens(col))
-
-
 # GPT-2-flavored pre-tokenizer pattern, restricted to constructs both
 # Java regex (Spark) and RE2 (DuckDB) support (no lookahead).
 BPE_RE = r"'(?:[sdmt]|ll|ve|re)| ?[A-Za-z]+| ?[0-9]+| ?[^\sA-Za-z0-9]+|\s+"

@@ -30,28 +30,6 @@ def register_tables(
             spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
 
 
-SHIPPING_PRIORITY_SQL = """
-SELECT l_orderkey,
-       round(sum(l_extendedprice * (1 - l_discount)), 6) AS revenue,
-       o_orderdate
-FROM customer
-JOIN orders   ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1997-03-15'
-  AND l_shipdate > TIMESTAMP '1997-03-15'
-GROUP BY l_orderkey, o_orderdate
-ORDER BY revenue DESC, l_orderkey
-LIMIT 10
-"""
-
-
-def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3-shaped query through the SQL API."""
-    register_tables(spark, sf_dir, ["customer", "orders", "lineitem"])
-    return spark.sql(SHIPPING_PRIORITY_SQL)
-
-
 # One ANSI text, two engines: this statement runs VERBATIM on Spark
 # (the engine under test) and DuckDB (the oracle) — the strongest
 # form of the SQL-surface claim. Four classic decorrelation shapes:

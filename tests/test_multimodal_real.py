@@ -265,6 +265,20 @@ def test_mm_query_fixtures_still_stub_path(spark):
     assert feat == MM.decode_stub(b"plain text body", "text/plain")
 
 
+def test_local_media_frame_nested_schema(spark):
+    # commas inside a nested type belong to the type, not the column list
+    rows = [(1, [(1, 2), (3, 4)], b"\x00\x01"), (2, [], b"")]
+    df = MM.local_media_frame(
+        spark, rows, "id long, x array<struct<a:int,b:int>>, payload binary"
+    )
+    assert df.columns == ["id", "x", "payload"]
+    got = [
+        (r["id"], [(s["a"], s["b"]) for s in r["x"]], bytes(r["payload"]))
+        for r in df.orderBy("id").collect()
+    ]
+    assert got == rows
+
+
 # ---------------------------------------------------------------- Y4M
 
 

@@ -4,7 +4,7 @@ artifact (the judge checks plan claims against these files).
 
 Usage: python tools/capture_plans.py <sf_dir> <suffix> [query ...]
 
-The round dir is $SPARK_GRAFT_PLANS_DIR (default plans/r14).
+The round dir is plans/$SPARK_GRAFT_PLANS_ROUND (default r14).
 
 Each file holds the formatted physical plan of the query's RETURNED
 frame. Queries whose construction runs eager artifact work (store

@@ -1,7 +1,8 @@
 """Profile one or more declared queries: warm passes, then timed
 passes with per-pass wall, JVM process CPU, and Spark JOB COUNT
 (counted via a per-pass job group — statusTracker.getJobIdsForGroup is
-public API and needs no UI).
+public API and needs no UI; jobs a query submits from driver threads
+through ``functions.concurrency.overlap`` inherit the group).
 
 Usage:
     python tools/profile_query.py QUERY [QUERY...] [--sf DIR] [--warm N]
@@ -73,10 +74,6 @@ def main() -> int:
             wall = time.time() - t0
             c1 = _jvm_cpu_ns(spark)
             sc.setJobGroup(None, None)
-            # job-group propagation is thread-local: jobs submitted by
-            # driver THREADS inside a query aren't in the group, so
-            # n_jobs undercounts threaded chains — still comparable
-            # across A/B variants of the same query.
             n_jobs = len(sc.statusTracker().getJobIdsForGroup(gid))
             cpu = (c1 - c0) / 1e9 if c0 is not None and c1 is not None else float("nan")
             res[q].append((wall, cpu, n_jobs))
@@ -88,7 +85,7 @@ def main() -> int:
         jobs = res[q][-1][2]
         print(
             f"{q}: min {walls[0]:.2f}s med {walls[len(walls) // 2]:.2f}s "
-            f"runs {[round(x[0], 2) for x in res[q]]} jobs(main-thread) {jobs}"
+            f"runs {[round(x[0], 2) for x in res[q]]} jobs {jobs}"
         )
     return 0
 
