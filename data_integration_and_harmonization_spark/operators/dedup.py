@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_integration_and_harmonization_spark.functions import stores
 from data_integration_and_harmonization_spark.functions.concurrency import overlap
 from data_integration_and_harmonization_spark.operators import graph as _graph
 from data_integration_and_harmonization_spark.operators.text import normalized, tokens
@@ -703,24 +704,20 @@ def incremental_exact_dedup(
     any other.
 
     SIDE EFFECT: the survivors' fingerprints are written to a NEW
-    batch subdirectory under ``store_path`` before returning, so the
-    next batch sees them. The write is distributed (executor-side
-    parquet). Batch subdirectories also make the returned frame
-    recompute-stable: the history read captures the EXPLICIT list of
-    batch paths that existed at call time, so re-executing the plan
-    after this batch's own write cannot anti-join the batch against
-    itself (a plain append into one directory would — parquet reads
-    re-list the live directory per action). Not atomic across
-    concurrent callers — serialize batches, which is how ingestion
-    pipelines run anyway. Returns the surviving rows of ``new_docs``
+    data dir of the store and committed (:mod:`..functions.stores`)
+    before returning, so the next batch sees them. The write is
+    distributed (executor-side parquet). The history read captures
+    the EXPLICIT dir list of the head it matched against, so
+    re-executing the returned plan after this batch's own commit
+    cannot anti-join the batch against itself. Of two batches matched
+    against the same head only one commits; the other raises
+    ``CommitConflictError`` rather than admitting duplicates the
+    winner holds. Returns the surviving rows of ``new_docs``
     (original columns).
 
     ``normalize=True`` fingerprints the :func:`~.text.normalized`
     form, admitting only one case/whitespace/punct variant corpus-wide.
     """
-    import os
-    import uuid
-
     spark = new_docs.sparkSession
     # md5(NULL) is NULL and a null key matches nothing in the keep
     # join / anti-join — a sentinel keeps null-text docs as ONE
@@ -734,18 +731,10 @@ def incremental_exact_dedup(
     # (a) within-batch: keep the minimum id per fingerprint
     keep = fresh.groupBy("__fp").agg(F.min(id_col).alias("__keep"))
     fresh = fresh.join(keep, "__fp").where(F.col(id_col) == F.col("__keep")).drop("__keep")
-    # (b) against history: anti-join the digests of every COMPLETE
-    # batch admitted so far. Listed through the Hadoop FileSystem API
-    # so remote stores (hdfs://, s3a://) work identically to local
-    # paths — a driver-local os.listdir would silently see no store
-    # and admit every duplicate forever. Batches without _SUCCESS
-    # (a crashed prior writer) are skipped the same way Spark's own
-    # committers ignore uncommitted output.
-    from data_integration_and_harmonization_spark.functions.stores import (
-        complete_batches,
-    )
-
-    batches = complete_batches(spark, store_path)
+    # (b) against history: anti-join the digests of every batch the
+    # store's head lists
+    doc = stores.head(spark, store_path)
+    batches = [f["path"] for f in doc["files"]]
     if batches:
         seen = spark.read.parquet(*batches)
         fresh = fresh.join(seen.select(F.col("fp").alias("__fp")), "__fp", "left_anti")
@@ -754,10 +743,11 @@ def incremental_exact_dedup(
     from data_integration_and_harmonization_spark.functions.caching import track
 
     fresh = track(fresh.persist())
-    out_dir = os.path.join(
-        store_path, f"batch-{len(batches):06d}-{uuid.uuid4().hex[:8]}"
-    )
+    out_dir = stores.new_dir(store_path, doc)
     fresh.select(F.col("__fp").alias("fp")).write.parquet(out_dir)
+    stores.commit(
+        spark, store_path, doc, doc["files"] + [{"path": out_dir, "tag": None}]
+    )
     return fresh.drop("__fp")
 
 
@@ -830,15 +820,15 @@ def incremental_near_dedup(
     (:func:`duplicate_clusters` over the batch's estimated pairs) keep
     the min id; (b) surviving keepers whose signature matches ANY
     admitted doc at ``threshold`` are dropped; (c) survivors'
-    signatures are appended to the store (batch subdirectory +
-    _SUCCESS protocol, same recompute-stability and crash-visibility
-    contract as the exact variant). Docs too short to shingle (< gram
-    tokens) have no signature: always admitted, never stored — they
-    cannot near-dup anything at signature granularity.
+    signatures are committed to the store as a new data dir (same
+    commit protocol and recompute-stability as the exact variant; a
+    batch that admits nothing commits nothing). Docs too short to
+    shingle (< gram tokens) have no signature: always admitted, never
+    stored — they cannot near-dup anything at signature granularity.
 
     Scale shape: signatures are one exploded aggregate; candidates are
     (band, bucket) equi-joins (bucket groups are near-dup-cluster
-    sized, never corpus-sized). Each batch dir holds TWO tables (r9
+    sized, never corpus-sized). Each data dir holds TWO tables (r9
     verdict item 4):
 
     - ``sigs/``  — (id, sig), the 256-byte standing record;
@@ -859,14 +849,13 @@ def incremental_near_dedup(
     directory stays worker-sized. The sigs scan that feeds the
     estimator verify touches only candidate ids via the join
     (digest-width rows, id-sorted files for row-group skipping).
-    Nothing corpus-sized is collected or broadcast. Serialize batches
-    like the exact variant.
+    Nothing corpus-sized is collected or broadcast.
 
     ``tag`` makes the admit IDEMPOTENT per logical batch — the
     contract a streaming ``foreachBatch`` maintenance consumer needs
     (:func:`..sources.cdf_stream.stream_cdf_neardedup_maintenance`):
-    the batch dir is named by the tag, and a replay whose tag already
-    names a complete batch EXCLUDES that dir from the history it
+    the committed entry carries the tag, and a replay whose tag the
+    head already lists EXCLUDES that dir from the history it
     matches against and skips the store write — recomputing exactly
     the original run's survivors without doubling the store. Replays
     are only well-defined for the LAST admitted batch (streaming's
@@ -876,18 +865,9 @@ def incremental_near_dedup(
     Returns the surviving rows of ``new_docs`` (original columns).
     """
     import os
-    import re
-    import uuid
 
     from data_integration_and_harmonization_spark.functions.caching import track
 
-    if tag is not None and (
-        not re.fullmatch(r"[A-Za-z0-9_.=-]+", tag) or "compact" in tag
-    ):
-        raise ValueError(
-            f"near-dedup store tag {tag!r} must be a plain token and must "
-            "not contain 'compact' (reserved for the compactor's dirs)"
-        )
     spark = new_docs.sparkSession
     sig = track(
         minhash_signatures(
@@ -918,43 +898,19 @@ def incremental_near_dedup(
         )
         .select("id_a", "id_b")
     )
-    # history prep BEFORE the in-batch clustering (r14): the store
-    # listing / replay filtering is jobless FS work, and the collided
+    # history prep BEFORE the in-batch clustering (r14): the head
+    # read / replay filtering is jobless FS work, and the collided
     # partition-key probe below only needs the batch's signatures —
     # so it runs on a driver thread CONCURRENTLY with the in-batch
     # component chain (guide §2.6) instead of as a sequential action
-    # after it.
-    from data_integration_and_harmonization_spark.functions.stores import (
-        complete_batches,
-        store_fs,
-    )
-
-    jvm, fs, _ = store_fs(spark, store_path)
-    batches = complete_batches(spark, store_path)
-    replayed = False
-    if tag is not None:
-        # dir format is batch-NNNNNN-<tag>: compare the exact tag
-        # segment (the profile store's suffix-match lesson). A replay
-        # matches against history WITHOUT its own prior admit and
-        # skips the write — same survivors, no double-count.
-        own = {b for b in batches if b.rsplit("/", 1)[-1].split("-", 2)[2] == tag}
-        if own:
-            replayed = True
-            batches = [b for b in batches if b not in own]
+    # after it. A replay matches against history WITHOUT its own prior
+    # admit and skips the write — same survivors, no double-count.
+    doc = stores.head(spark, store_path)
+    batches = [f["path"] for f in doc["files"] if tag is None or f["tag"] != tag]
+    replayed = len(batches) < len(doc["files"])
     P = int(store_partitions)
     # bucket is a string key — hash to a stable int before the mod
     pb = lambda c: F.pmod(F.xxhash64(c), F.lit(P))  # noqa: E731
-    if batches and not fs.exists(
-        jvm.org.apache.hadoop.fs.Path(batches[0], "sigs")
-    ):
-        # a store written by the pre-r10 FLAT layout (id, sig at the
-        # batch root) passes the _SUCCESS check but has no sigs/ —
-        # fail with the cause instead of an opaque PATH_NOT_FOUND
-        raise ValueError(
-            f"signature store {store_path!r} predates the sigs/+index/ "
-            "batch layout; re-ingest it (or move each batch's parquet "
-            "into a sigs/ subdir and rebuild the index/ partitions)"
-        )
 
     def _keys():
         if not batches:
@@ -1026,41 +982,27 @@ def incremental_near_dedup(
         keep_sig = keep_sig.join(hits, "id", "left_anti")
     keep_sig = track(keep_sig.persist())
     if not replayed:
-        out_dir = os.path.join(
-            store_path,
-            f"batch-{len(batches):06d}-"
-            f"{tag if tag is not None else uuid.uuid4().hex[:8]}",
-        )
-        if tag is not None:
-            # a writer that crashed BETWEEN the table writes and the
-            # _SUCCESS create left a torn dir under this same tagged
-            # name (invisible to reads, but in the way of the replay's
-            # rewrite) — sweep it first
-            torn = jvm.org.apache.hadoop.fs.Path(out_dir)
-            if fs.exists(torn):
-                fs.delete(torn, True)
-        # two tables per batch, then ONE _SUCCESS at the batch root: a
-        # crash between writes leaves the batch invisible (same
-        # visibility contract as before, now covering both tables).
-        # sigs sort by id so each part file's min/max id stats are
-        # tight — the estimator join's hid fetch can row-group-skip
-        # instead of scanning every admitted signature. A batch that
-        # admits NOTHING (full replay / all-duplicate) leaves no dir
-        # at all: an empty partitioned dir would crash every later
-        # schema-inferring read of the store, and a no-op batch must
-        # not grow it.
+        # two tables per data dir, then the commit: a crash before it
+        # leaves the dir unlisted, so invisible to reads. sigs sort by
+        # id so each part file's min/max id stats are tight — the
+        # estimator join's hid fetch can row-group-skip instead of
+        # scanning every admitted signature. A batch that admits
+        # NOTHING (all-duplicate) commits nothing: an empty
+        # partitioned dir would crash every later schema-inferring
+        # read of the store, and a no-op batch must not grow it.
         #
         # The sigs write runs FIRST and doubles as the cache
         # materializer; the emptiness check then reads the cache
         # (~free) instead of probing BEFORE the write — the old
         # pre-write isEmpty ran every upstream map stage (the whole
         # minhash + banded self-join + history pipeline) a second
-        # time just to peek at one partition (r14, guide §1.2). An
-        # all-duplicate batch wrote nothing before and writes one
-        # empty sigs table that is immediately deleted now — same
-        # visible store state (no _SUCCESS at any point).
+        # time just to peek at one partition (r14, guide §1.2). The
+        # empty dir is deleted at once; after a crash in between,
+        # the next compaction reaps it.
+        out_dir = stores.new_dir(store_path, doc)
         keep_sig.sort("id").write.parquet(os.path.join(out_dir, "sigs"))
         if keep_sig.isEmpty():
+            jvm, fs, _ = stores.store_fs(spark, out_dir)
             fs.delete(jvm.org.apache.hadoop.fs.Path(out_dir), True)
         else:
             (
@@ -1072,9 +1014,9 @@ def incremental_near_dedup(
                 .write.partitionBy("band", "pbucket")
                 .parquet(os.path.join(out_dir, "index"))
             )
-            fs.create(
-                jvm.org.apache.hadoop.fs.Path(out_dir, "_SUCCESS"), True
-            ).close()
+            stores.commit(
+                spark, store_path, doc, doc["files"] + [{"path": out_dir, "tag": tag}]
+            )
     # survivors: batch rows minus (dominated within batch) minus
     # (history hits) — i.e. anything whose id left the signature set,
     # PLUS the no-signature (too short) docs, which are never dropped
@@ -1087,46 +1029,33 @@ def incremental_near_dedup(
 
 
 def compact_near_dedup_store(spark, store_path: str) -> dict:
-    """Merge every complete batch of an :func:`incremental_near_dedup`
-    store into ONE batch dir — the store's lifecycle maintenance: a
+    """Merge every batch of an :func:`incremental_near_dedup` store
+    into ONE data dir — the store's lifecycle maintenance: a
     continuously ingesting pipeline accumulates one dir (and one
     id-sorted sigs file + one partition-dir set) per batch, and after
     10^3-10^4 batches per-batch listing and footer overheads dominate
     the history scan. Compaction unions the sigs (re-sorted by id, so
     row-group stats stay tight) and the pre-banded index rows
     (rewritten into one (band, pbucket) directory set — no re-banding,
-    no parameters needed: pbucket is already a column), commits the
-    new dir under the batch _SUCCESS protocol, then deletes the old
-    dirs. A crash between commit and deletion leaves duplicate
-    signatures, which is semantically harmless (the same matches fire,
-    ``distinct`` collapses candidate pairs) and is cleared by the next
-    compaction. Returns {"batches_compacted", "rows", "out_dir"}."""
+    no parameters needed: pbucket is already a column), commits a
+    version listing only the new dir, then reaps every dir that
+    version does not list (:func:`..functions.stores.reap`). A crash
+    before the commit leaves the old batches serving. Returns
+    {"batches_compacted", "rows", "out_dir"}."""
     import os
-    import uuid
 
     from functools import reduce
 
-    from data_integration_and_harmonization_spark.functions.stores import (
-        complete_batches,
-        store_fs,
-    )
-
-    jvm, fs, _ = store_fs(spark, store_path)
-    batches = complete_batches(spark, store_path)
+    doc = stores.head(spark, store_path)
+    batches = [f["path"] for f in doc["files"]]
     if len(batches) < 2:
         return {"batches_compacted": 0, "rows": 0, "out_dir": None}
-    # dropDuplicates makes compaction the CLEANUP the crash-window
-    # docstring promises: a prior compact that committed but crashed
-    # before deleting its sources left every signature twice — the
-    # merge collapses them instead of baking them in permanently
-    sigs = spark.read.parquet(*[f"{b}/sigs" for b in batches]).dropDuplicates(["id"])
+    sigs = spark.read.parquet(*[f"{b}/sigs" for b in batches])
     idx = reduce(
         lambda a, b2: a.unionByName(b2),
         [spark.read.parquet(f"{b}/index") for b in batches],
-    ).distinct()
-    out_dir = os.path.join(
-        store_path, f"batch-{len(batches):06d}-compact-{uuid.uuid4().hex[:8]}"
     )
+    out_dir = stores.new_dir(store_path, doc)
     sigs.sort("id").write.parquet(os.path.join(out_dir, "sigs"))
     (
         idx.repartition("band", "pbucket")
@@ -1134,9 +1063,8 @@ def compact_near_dedup_store(spark, store_path: str) -> dict:
         .parquet(os.path.join(out_dir, "index"))
     )
     n_rows = spark.read.parquet(os.path.join(out_dir, "sigs")).count()
-    fs.create(jvm.org.apache.hadoop.fs.Path(out_dir, "_SUCCESS"), True).close()
-    for b in batches:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(b), True)
+    stores.commit(spark, store_path, doc, [{"path": out_dir, "tag": None}])
+    stores.reap(spark, store_path)
     return {
         "batches_compacted": len(batches),
         "rows": int(n_rows),

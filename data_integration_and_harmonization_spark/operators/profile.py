@@ -13,6 +13,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_integration_and_harmonization_spark.functions import stores
 from data_integration_and_harmonization_spark.operators.clean import numeric_cols, string_cols
 
 
@@ -618,61 +619,6 @@ def sketch_distinct_report(
     )
 
 
-def _store_listing(spark, store_path: str) -> tuple[list[str], list[str]]:
-    """(live, masked_leftovers) — the store's COMPLETE batch
-    subdirectories (the shared batch- + _SUCCESS protocol,
-    :mod:`..functions.stores`), refined for the profile store's
-    compaction crash windows:
-
-    - a ``-compact-`` batch without its ``_replaces`` sidecar is NOT
-      yet live (the compactor crashed between the parquet commit and
-      the sidecar) — the original batches still serve, and the orphan
-      compact dir joins the leftovers so the next compaction's reap
-      sweep deletes it instead of leaking it on disk forever;
-    - batches a sidecar names are MASKED even while still on disk (a
-      compactor that crashed between sidecar and deletes) — counts
-      are sums, so double-listing would silently double the profile.
-      The leftovers are returned separately so the next compaction
-      can reap them."""
-    from data_integration_and_harmonization_spark.functions.stores import (
-        complete_batches,
-        store_fs,
-    )
-
-    jvm, fs, _ = store_fs(spark, store_path)
-    out: list[str] = []
-    orphans: list[str] = []
-    replaced: set[str] = set()
-    for p in complete_batches(spark, store_path):
-        name = p.rsplit("/", 1)[-1]
-        side = jvm.org.apache.hadoop.fs.Path(p, "_replaces")
-        has_side = fs.exists(side)
-        if "-compact-" in name and not has_side:
-            # crashed between parquet _SUCCESS and the sidecar: never
-            # served, but reapable — the originals it meant to fold
-            # are still live, so its content is fully redundant
-            orphans.append(p)
-            continue
-        out.append(p)
-        if has_side:
-            stream = fs.open(side)
-            try:
-                data = bytes(stream.readAllBytes()).decode("utf-8")
-            finally:
-                stream.close()
-            replaced.update(n for n in data.splitlines() if n)
-    live = sorted(p for p in out if p.rsplit("/", 1)[-1] not in replaced)
-    leftovers = sorted(
-        [p for p in out if p.rsplit("/", 1)[-1] in replaced] + orphans
-    )
-    return live, leftovers
-
-
-def _complete_batches(spark, store_path: str) -> list[str]:
-    """The live batch list (see :func:`_store_listing`)."""
-    return _store_listing(spark, store_path)[0]
-
-
 PROFILE_STORE_SCHEMA = "col_name string, sketch binary, n_nonnull long, n_rows long"
 
 
@@ -691,12 +637,12 @@ def profile_store_update(
     (:func:`profile_store_estimate`) that never rescans history —
     profiling cost is O(new batch), not O(corpus).
 
-    Store layout: ``store_path/batch-NNNNNN-<uuid>/`` parquet under
-    the engine's batch + _SUCCESS protocol (same as the dedup
-    signature stores: crashed writers stay invisible, and the explicit
-    batch list makes reads recompute-stable). Not atomic across
-    concurrent callers — serialize batches, which is how ingestion
-    runs anyway. Returns the new batch directory.
+    Each batch is one parquet data dir committed through the engine's
+    store protocol (:mod:`..functions.stores`, shared with the dedup
+    stores): crashed writers stay invisible, the explicit dir list
+    makes reads recompute-stable, and of two appends on the same head
+    one raises ``CommitConflictError``. Returns the new batch
+    directory.
 
     Scale shape: ONE map-side-combined aggregate over the batch
     (sketches + counts fused), melted to a column-per-row frame of
@@ -707,31 +653,19 @@ def profile_store_update(
     nothing, so estimates are unchanged (pinned by the empty-batch
     check in tests).
 
-    ``tag`` makes the append IDEMPOTENT per logical batch: the dir is
-    named by the tag instead of a fresh uuid, and a complete batch
-    already carrying it is returned without rewriting — the contract a
+    ``tag`` makes the append IDEMPOTENT per logical batch: the
+    committed entry carries the tag, and a batch the head already
+    lists under it is returned without rewriting — the contract a
     streaming ``foreachBatch`` caller needs (a replayed micro-batch
     after a crash must not double the counts; pass the checkpointed
     batch_id as the tag).
     """
-    import os
-    import uuid
-
     spark = batch_df.sparkSession
+    doc = stores.head(spark, store_path)
     if tag is not None:
-        import re
-
-        if not re.fullmatch(r"[A-Za-z0-9_.=-]+", tag) or "compact" in tag:
-            raise ValueError(
-                f"profile store tag {tag!r} must be a plain token and must "
-                "not contain 'compact' (reserved for the compactor's dirs)"
-            )
-        for p in _complete_batches(spark, store_path):
-            # dir format is batch-NNNNNN-<tag>; compare the exact tag
-            # segment (tags may themselves contain '-', so a suffix
-            # match would false-positive on e.g. '16' vs '2026-08-16')
-            if p.rsplit("/", 1)[-1].split("-", 2)[2] == tag:
-                return p  # replayed batch: already admitted
+        for f in doc["files"]:
+            if f["tag"] == tag:
+                return f["path"]  # replayed batch: already admitted
     val = _sketch_val(batch_df, cols)
     agg = batch_df.agg(
         *[
@@ -755,12 +689,11 @@ def profile_store_update(
         ).alias("col_name", "sketch", "n_nonnull"),
         F.col("__n").alias("n_rows"),
     )
-    batches = _complete_batches(spark, store_path)
-    out_dir = os.path.join(
-        store_path,
-        f"batch-{len(batches):06d}-{tag if tag is not None else uuid.uuid4().hex[:8]}",
+    out_dir = stores.new_dir(store_path, doc)
+    rows.write.parquet(out_dir)
+    stores.commit(
+        spark, store_path, doc, doc["files"] + [{"path": out_dir, "tag": tag}]
     )
-    rows.write.mode("overwrite").parquet(out_dir)
     return out_dir
 
 
@@ -770,7 +703,7 @@ def profile_store_estimate(spark, store_path: str) -> DataFrame:
     sketch — mergeability is exactly why the store can stand for the
     corpus), total non-null and row counts, and the batch count. One
     scan of a store that is ~KB per admitted batch."""
-    batches = _complete_batches(spark, store_path)
+    batches = stores.complete_batches(spark, store_path)
     if not batches:
         raise FileNotFoundError(f"profile store {store_path!r} has no batches")
     rows = spark.read.schema(PROFILE_STORE_SCHEMA).parquet(*batches)
@@ -783,38 +716,24 @@ def profile_store_estimate(spark, store_path: str) -> DataFrame:
 
 
 def compact_profile_store(spark, store_path: str) -> dict:
-    """Merge every complete batch of a profile store into ONE batch —
-    the store-lifecycle sibling of ``compact_near_dedup_store``: after
+    """Merge every batch of a profile store into ONE batch — the
+    store-lifecycle sibling of ``compact_near_dedup_store``: after
     10^4 ingested batches the per-column profile is 10^4 sketch rows
     that every estimate re-unions; compaction folds them to one row
     per column (HLL union is lossless — register-wise max — and the
     counts are sums), preserving every future estimate exactly.
 
-    Protocol (every crash window read-correct — sketches union
-    idempotently but counts are sums, so double-listing would
-    silently double the profile):
-
-    1. write the merged rows to a new ``batch-*-compact-*`` dir (the
-       parquet committer's _SUCCESS lands last) — but a compact dir
-       is NOT live yet: ``_complete_batches`` ignores compact dirs
-       without a ``_replaces`` sidecar, so a crash here leaves the
-       originals authoritative;
-    2. write the ``_replaces`` sidecar naming the folded batches —
-       the compact batch is now live and the originals are MASKED
-       even while still on disk;
-    3. delete the originals — pure housekeeping at this point; a
-       failure here (or a crash mid-loop) never changes what the
-       reader serves, and leftovers are reaped by the next
-       compaction.
-
-    Not atomic across concurrent writers — serialize with updates,
-    as ingestion already does. Returns {'batches_before', 'out_dir',
-    'undeleted'}.
+    The merged rows land in a new data dir, and ONE commit swaps the
+    head's batch list for that dir, so no reader ever lists both the
+    originals and their merge (counts are sums: double-listing would
+    silently double the profile). A crash before the commit leaves the
+    originals serving; after it, :func:`..functions.stores.reap`
+    deletes every dir the new head does not list, including those a
+    crashed writer or compactor left behind. Returns
+    {'batches_before', 'out_dir', 'undeleted'}.
     """
-    import os
-    import uuid
-
-    batches, leftovers = _store_listing(spark, store_path)
+    doc = stores.head(spark, store_path)
+    batches = [f["path"] for f in doc["files"]]
     if not batches:
         raise FileNotFoundError(f"profile store {store_path!r} has no batches")
     rows = spark.read.schema(PROFILE_STORE_SCHEMA).parquet(*batches)
@@ -823,31 +742,11 @@ def compact_profile_store(spark, store_path: str) -> dict:
         F.sum("n_nonnull").alias("n_nonnull"),
         F.sum("n_rows").alias("n_rows"),
     )
-    out_dir = os.path.join(
-        store_path, f"batch-{len(batches):06d}-compact-{uuid.uuid4().hex[:8]}"
-    )
+    out_dir = stores.new_dir(store_path, doc)
     merged.write.parquet(out_dir)
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(store_path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-    side = jvm.org.apache.hadoop.fs.Path(out_dir, "_replaces")
-    stream = fs.create(side, True)
-    try:
-        stream.write(
-            "\n".join(b.rsplit("/", 1)[-1] for b in batches).encode("utf-8")
-        )
-    finally:
-        stream.close()
-    undeleted = []
-    # the folded batches, plus any masked leftovers a previously
-    # crashed compactor left behind (they're excluded from the live
-    # listing, so this sweep is their only reaper)
-    for b in batches + leftovers:
-        if not fs.delete(jvm.org.apache.hadoop.fs.Path(b), True):
-            undeleted.append(b)  # masked by the sidecar; reaped later
+    stores.commit(spark, store_path, doc, [{"path": out_dir, "tag": None}])
     return {
         "batches_before": len(batches),
         "out_dir": out_dir,
-        "undeleted": undeleted,
+        "undeleted": stores.reap(spark, store_path),
     }

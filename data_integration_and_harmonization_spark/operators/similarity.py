@@ -27,7 +27,12 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_integration_and_harmonization_spark.functions import stores
 from data_integration_and_harmonization_spark.functions.concurrency import overlap
+from data_integration_and_harmonization_spark.sources.manifest import (
+    list_versions,
+    read_manifest,
+)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -771,36 +776,19 @@ def ivfpq_topk(
     return _refine_exact(scored, corpus, q, k, refine, id_col, vec_col)
 
 
-def _ann_fs(spark, path: str):
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, root.getFileSystem(spark._jsc.hadoopConfiguration()), root
+def _write_quantizers(spark: SparkSession, vdir: str, books, centers) -> None:
+    """Persist PQ codebooks and coarse centers as the tiny ``books/``
+    and ``centers/`` tables of an index data dir."""
+    import os
 
-
-def _ann_versions(fs, root, require_success: bool) -> list[int]:
-    """Version numbers of ``v-%06d`` dirs under the index root —
-    ``require_success=False`` includes torn builds (so the NEXT
-    version number never collides with any existing dir, complete or
-    not), ``True`` is the read path's visibility filter."""
-    out = []
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if not (st.isDirectory() and name.startswith("v-")):
-                continue
-            if require_success and not fs.exists(
-                st.getPath().suffix("/_SUCCESS")
-            ):
-                continue
-            out.append(int(name[2:]))
-    return sorted(out)
-
-
-def _next_ann_version(fs, root) -> int:
-    """max+1, NOT count: a vacuumed/removed old version must never
-    make a new write collide with (and corrupt) a live one."""
-    vs = _ann_versions(fs, root, require_success=False)
-    return (vs[-1] + 1) if vs else 0
+    spark.createDataFrame(
+        [(i, j, [float(x) for x in c]) for i, sub in enumerate(books) for j, c in enumerate(sub)],
+        "i int, j int, center array<double>",
+    ).repartition(1).write.parquet(os.path.join(vdir, "books"))
+    spark.createDataFrame(
+        [(cell, [float(x) for x in c]) for cell, c in enumerate(centers)],
+        "cell int, center array<double>",
+    ).repartition(1).write.parquet(os.path.join(vdir, "centers"))
 
 
 def build_ann_index(
@@ -821,10 +809,10 @@ def build_ann_index(
     once per corpus version, then every query batch reads the
     artifact instead of re-encoding the corpus per run.
 
-    Layout under ``path`` (one ``v-%06d`` dir per build, ``_SUCCESS``
-    committed last — same crash-visibility contract as the dedup
-    signature store; :func:`load_ann_index` reads the latest complete
-    version):
+    The index is a store (:mod:`..functions.stores`): each version's
+    manifest lists the data dirs that make it up and carries the
+    build parameters as its ``meta``; :func:`load_ann_index` reads the
+    head. A build writes one data dir holding
 
     - ``codes/``   — (id, code, __err) PARTITIONED BY ``cell``: a
       served query's probed-cells-only scan becomes partition-pruned
@@ -832,7 +820,8 @@ def build_ann_index(
     - ``books/``   — (i, j, center) PQ codebook rows (m*k, tiny);
     - ``centers/`` — (cell, center) coarse centroids (n_clusters,
       tiny);
-    - ``meta/``    — one row of build parameters.
+
+    and commits a version listing only that dir.
 
     ``trained=True`` fits Lloyd codebooks (:func:`train_pq_codebooks`,
     deterministic sample + seed) instead of the zero-training seeds.
@@ -841,9 +830,8 @@ def build_ann_index(
     import os
 
     spark = corpus.sparkSession
-    jvm, fs, root = _ann_fs(spark, path)
-    version = _next_ann_version(fs, root)
-    vdir = os.path.join(path, f"v-{version:06d}")
+    doc = stores.head(spark, path)
+    vdir = stores.new_dir(path, doc)
 
     books = (
         train_pq_codebooks(corpus, m=m, k=k, sample=sample, iters=iters,
@@ -865,16 +853,9 @@ def build_ann_index(
         .write.partitionBy("cell")
         .parquet(os.path.join(vdir, "codes"))
     )
-    spark.createDataFrame(
-        [(i, j, [float(x) for x in c]) for i, sub in enumerate(books) for j, c in enumerate(sub)],
-        "i int, j int, center array<double>",
-    ).repartition(1).write.parquet(os.path.join(vdir, "books"))
-    spark.createDataFrame(
-        [(cell, [float(x) for x in c]) for cell, c in enumerate(centers)],
-        "cell int, center array<double>",
-    ).repartition(1).write.parquet(os.path.join(vdir, "centers"))
+    _write_quantizers(spark, vdir, books, centers)
     meta = {
-        "version": version,
+        "version": doc["version"] + 1,
         "m": m,
         "k": k,
         "n_clusters": n_clusters,
@@ -883,42 +864,27 @@ def build_ann_index(
         "vec_col": vec_col,
         "parent": None,
     }
-    _write_ann_meta(spark, vdir, meta)
-    fs.create(jvm.org.apache.hadoop.fs.Path(vdir, "_SUCCESS"), True).close()
+    stores.commit(
+        spark, path, doc, [_ann_entry(vdir, _BASE_TABLES)], dict(meta, tag=None)
+    )
     return meta
 
 
-_ANN_META_SCHEMA = (
-    "version int, m int, k int, n_clusters int, trained boolean, "
-    "id_col string, vec_col string, parent int, tag string"
-)
+# the tables of a self-contained index data dir (a build or a compaction)
+_BASE_TABLES = ["books", "centers", "codes"]
 
 
-def _write_ann_meta(spark: SparkSession, vdir: str, meta: dict) -> None:
-    import os
-
-    # .get: metas written before a field existed (e.g. pre-r12 'tag')
-    # flow through as NULL — per-version meta dirs read independently,
-    # so mixed-schema chains are fine
-    spark.createDataFrame(
-        [tuple(meta.get(f.split(" ")[0]) for f in _ANN_META_SCHEMA.split(", "))],
-        _ANN_META_SCHEMA,
-    ).repartition(1).write.parquet(os.path.join(vdir, "meta"))
+def _ann_entry(vdir: str, tables: list[str], tag: str | None = None) -> dict:
+    return {"path": vdir, "tag": tag, "tables": tables}
 
 
 def _find_ann_tag(spark: SparkSession, path: str, tag: str) -> dict | None:
-    """Meta of the complete chain version already carrying ``tag``,
-    or None — the replay-idempotency scan behind the maintenance
-    writers' ``tag`` parameter (bounded by chain length: one tiny
-    one-row meta read per version, the same cost the chain walk in
-    ``load_ann_index`` already pays)."""
-    import os
-
-    jvm, fs, root = _ann_fs(spark, path)
-    for v in _ann_versions(fs, root, require_success=True):
-        vdir = os.path.join(path, f"v-{v:06d}")
-        row = spark.read.parquet(os.path.join(vdir, "meta")).first()
-        meta = row.asDict()
+    """Meta of the index version already carrying ``tag``, or None —
+    the replay-idempotency scan behind the maintenance writers' ``tag``
+    parameter (one small JSON read per retained version, no Spark
+    job)."""
+    for v in list_versions(spark, path):
+        meta = read_manifest(spark, path, v)["meta"]
         if meta.get("tag") == tag:
             return meta
     return None
@@ -933,23 +899,25 @@ def append_ann_index(
     """Grow a persisted index INCREMENTALLY — the continuously
     ingesting corpus case, where rebuilding a 10^10-vector index per
     increment is not viable. The new batch is encoded with the
-    chain's FROZEN codebooks and coarse centers (quantizer drift
+    index's FROZEN codebooks and coarse centers (quantizer drift
     would silently corrupt ADC distances against old codes), its
-    cell-partitioned codes land in a NEW version dir, and the meta
-    row records the parent version — old codes are referenced in
-    place, zero bytes move. :func:`load_ann_index` unions the chain,
-    so served queries see base + every increment; re-train by running
+    cell-partitioned codes land in a NEW data dir, and the new
+    version lists it after the parent version's dirs, with the parent
+    recorded in its meta — old codes are referenced in place, zero
+    bytes move. :func:`load_ann_index` unions the listed codes, so
+    served queries see base + every increment; re-train by running
     :func:`build_ann_index` again (a fresh base, parent-less).
 
-    New ids must be disjoint from the chain's (an id appended twice
+    New ids must be disjoint from the index's (an id appended twice
     would serve duplicate neighbors) — enforced with one id-column
     semi-join scan, digest-width at any scale. Returns the committed
-    meta (incl. ``version`` and ``parent``).
+    meta (incl. ``version`` and ``parent``). Of two appends on the
+    same head one raises ``CommitConflictError``.
 
     ``tag`` makes the append IDEMPOTENT per logical batch (the
     streaming-maintenance contract, same as the signature/profile
-    stores): a tag already carried by a complete chain version
-    returns that version's meta without writing anything."""
+    stores): a tag already carried by a committed version returns
+    that version's meta without writing anything."""
     import os
 
     spark = new_vectors.sparkSession
@@ -957,7 +925,9 @@ def append_ann_index(
         prior = _find_ann_tag(spark, path, tag)
         if prior is not None:
             return prior  # replayed batch: already admitted
-    idx = load_ann_index(spark, path, version)
+    head = stores.head(spark, path)
+    doc = _ann_doc(spark, path, version, head)
+    idx = _ann_from_doc(spark, doc)
     meta = idx["meta"]
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     dup = (
@@ -971,9 +941,7 @@ def append_ann_index(
             "append_ann_index: new ids overlap the index chain; "
             "appends must carry previously-unseen ids"
         )
-    jvm, fs, root = _ann_fs(spark, path)
-    version = _next_ann_version(fs, root)
-    vdir = os.path.join(path, f"v-{version:06d}")
+    vdir = stores.new_dir(path, head)
     enc = pq_encode(
         new_vectors,
         idx["books"],
@@ -985,9 +953,10 @@ def append_ann_index(
     enc.repartition("cell").write.partitionBy("cell").parquet(
         os.path.join(vdir, "codes")
     )
-    new_meta = dict(meta, version=version, parent=meta["version"], tag=tag)
-    _write_ann_meta(spark, vdir, new_meta)
-    fs.create(jvm.org.apache.hadoop.fs.Path(vdir, "_SUCCESS"), True).close()
+    new_meta = dict(meta, version=head["version"] + 1, parent=meta["version"], tag=tag)
+    stores.commit(
+        spark, path, head, doc["files"] + [_ann_entry(vdir, ["codes"], tag)], new_meta
+    )
     return new_meta
 
 
@@ -1000,15 +969,15 @@ def delete_from_ann_index(
     """Remove vectors from a persisted index without rewriting any
     codes — the tombstone half of incremental maintenance (dedup and
     takedown pipelines REMOVE corpus members as often as ingestion
-    adds them). A new chain version holds only a ``tombstones/`` id
-    table (+ meta with the parent); :func:`load_ann_index` anti-joins
-    the chain's accumulated tombstones out of the unioned codes, so
-    served queries never return a deleted neighbor and zero code
-    bytes move. Missing ids are a no-op (Delta DELETE semantics).
-    ``ids``: one column, the index's id column. Re-adding a deleted
-    id later via :func:`append_ann_index` works — the append
-    id-disjointness check runs against the LIVE (post-tombstone)
-    code set. ``tag``: replay idempotency, as on
+    adds them). The new version lists one more data dir holding only
+    a ``tombstones/`` id table (+ meta with the parent);
+    :func:`load_ann_index` anti-joins each tombstone table out of the
+    codes listed before it, so served queries never return a deleted
+    neighbor and zero code bytes move. Missing ids are a no-op (Delta
+    DELETE semantics). ``ids``: one column, the index's id column.
+    Re-adding a deleted id later via :func:`append_ann_index` works —
+    the append id-disjointness check runs against the LIVE
+    (post-tombstone) code set. ``tag``: replay idempotency, as on
     :func:`append_ann_index`."""
     import os
 
@@ -1017,18 +986,19 @@ def delete_from_ann_index(
         prior = _find_ann_tag(spark, path, tag)
         if prior is not None:
             return prior  # replayed batch: already applied
-    # meta-only load: a tombstone write needs the chain head's meta,
-    # not the books/centers collects or the codes union
-    meta = load_ann_index(spark, path, version, meta_only=True)["meta"]
-    jvm, fs, root = _ann_fs(spark, path)
-    new_version = _next_ann_version(fs, root)
-    vdir = os.path.join(path, f"v-{new_version:06d}")
+    head = stores.head(spark, path)
+    doc = _ann_doc(spark, path, version, head)
+    vdir = stores.new_dir(path, head)
     ids.toDF("id").dropDuplicates(["id"]).repartition(1).write.parquet(
         os.path.join(vdir, "tombstones")
     )
-    new_meta = dict(meta, version=new_version, parent=meta["version"], tag=tag)
-    _write_ann_meta(spark, vdir, new_meta)
-    fs.create(jvm.org.apache.hadoop.fs.Path(vdir, "_SUCCESS"), True).close()
+    new_meta = dict(
+        doc["meta"], version=head["version"] + 1, parent=doc["version"], tag=tag
+    )
+    stores.commit(
+        spark, path, head, doc["files"] + [_ann_entry(vdir, ["tombstones"], tag)],
+        new_meta,
+    )
     return new_meta
 
 
@@ -1036,86 +1006,103 @@ def compact_ann_index(spark: SparkSession, path: str, sweep: bool = True) -> dic
     """Fold an index CHAIN into one parent-less version — the
     lifecycle twin of ``dedup.compact_near_dedup_store`` (r10 verdict
     item 3): a long-lived incrementally-maintained index accumulates
-    append/delete versions forever, and every served query pays one
-    union arm + one anti-join per chain link. Compaction materializes
-    the LIVE code set (chain union minus accumulated tombstones) once,
-    after which :func:`load_ann_index` resolves in a single read.
+    append/delete dirs forever, and every served query pays one
+    union arm + one anti-join per listed dir. Compaction materializes
+    the LIVE code set (codes union minus tombstones) once, after
+    which :func:`load_ann_index` resolves in a single read.
 
-    Protocol (each crash window read-correct, same reasoning as the
-    profile-store compactor):
-
-    1. write the new version dir — live codes (cell-PARTITIONED, so
-       probed-cells pruning survives compaction), the base's frozen
-       books/centers, a parent-less meta — with ``_SUCCESS`` last: a
-       crash before the marker leaves the chain authoritative (the
-       incomplete dir is invisible to loads and reaped by the next
-       compaction's sweep);
-    2. the ``_SUCCESS`` create IS the commit: loads serve the highest
-       complete version, now the compacted one, and the old chain
-       became garbage in the same instant;
-    3. delete every older version dir — pure housekeeping; a crash
-       mid-sweep changes nothing a reader serves, and leftovers are
-       reaped by the next compaction.
+    The live codes (cell-PARTITIONED, so probed-cells pruning survives
+    compaction) and the base's frozen books/centers land in a new
+    data dir; one commit makes it the only dir the head lists. A
+    crash before the commit leaves the chain serving. The sweep
+    (:func:`..functions.stores.reap`) then deletes the superseded
+    versions and every dir the new head does not list.
 
     Compaction DESTROYS pinned-version history by design — the chain
     is a maintenance log, not time travel (the manifest tables in
     ``sources/manifest.py`` own that contract); run it when chain
     length, not history, is what you're paying for.
 
-    CONCURRENT READERS: step 3's sweep assumes no LIVE reader holds a
+    CONCURRENT READERS: the sweep assumes no LIVE reader holds a
     lazy DataFrame over the old chain — ``load_ann_index`` returns
     lazy scans, and a query planned before compaction that
     materializes after the sweep fails with FileNotFound (the crash
-    windows above cover the WRITER, not readers). When readers may
-    overlap maintenance, pass ``sweep=False``: the old dirs are left
-    in place (still invisible to new loads — version resolution picks
-    the highest complete dir) and the NEXT compaction's sweep reaps
-    them, giving in-flight queries one full compaction interval of
-    grace. Returns {'versions_before', 'version', 'undeleted'}."""
+    window above covers the WRITER, not readers). When readers may
+    overlap maintenance, pass ``sweep=False``: the old versions and
+    dirs are left in place (new loads read the head) and the NEXT
+    compaction's sweep reaps them, giving in-flight queries one full
+    compaction interval of grace. Returns {'versions_before',
+    'version', 'undeleted'} (``undeleted``: the superseded versions
+    still on disk)."""
     import os
 
-    idx = load_ann_index(spark, path)
-    meta = idx["meta"]
-    jvm, fs, root = _ann_fs(spark, path)
-    all_vs = _ann_versions(fs, root, require_success=False)
-    new_version = _next_ann_version(fs, root)
-    vdir = os.path.join(path, f"v-{new_version:06d}")
+    head = stores.head(spark, path)
+    idx = _ann_from_doc(spark, _ann_doc(spark, path, None, head))
+    versions_before = list_versions(spark, path)
+    vdir = stores.new_dir(path, head)
     (
         idx["codes"]
         .repartition("cell")
         .write.partitionBy("cell")
         .parquet(os.path.join(vdir, "codes"))
     )
-    spark.createDataFrame(
-        [
-            (i, j, [float(x) for x in c])
-            for i, sub in enumerate(idx["books"])
-            for j, c in enumerate(sub)
-        ],
-        "i int, j int, center array<double>",
-    ).repartition(1).write.parquet(os.path.join(vdir, "books"))
-    spark.createDataFrame(
-        [(cell, [float(x) for x in c]) for cell, c in enumerate(idx["centers"])],
-        "cell int, center array<double>",
-    ).repartition(1).write.parquet(os.path.join(vdir, "centers"))
-    _write_ann_meta(
-        spark, vdir, dict(meta, version=new_version, parent=None, tag=None)
+    _write_quantizers(spark, vdir, idx["books"], idx["centers"])
+    new_version = stores.commit(
+        spark, path, head, [_ann_entry(vdir, _BASE_TABLES)],
+        dict(idx["meta"], version=head["version"] + 1, parent=None, tag=None),
     )
-    fs.create(jvm.org.apache.hadoop.fs.Path(vdir, "_SUCCESS"), True).close()
-    undeleted: list[int] = []
-    for v in all_vs:
-        if v >= new_version:
-            continue
-        if not sweep:
-            undeleted.append(v)  # grace mode: next compaction reaps
-            continue
-        p = jvm.org.apache.hadoop.fs.Path(os.path.join(path, f"v-{v:06d}"))
-        if not fs.delete(p, True):
-            undeleted.append(v)
+    if sweep:
+        stores.reap(spark, path)
     return {
-        "versions_before": len(all_vs),
+        "versions_before": len(versions_before),
         "version": new_version,
-        "undeleted": undeleted,
+        "undeleted": [v for v in list_versions(spark, path) if v != new_version],
+    }
+
+
+def _ann_doc(spark: SparkSession, path: str, version: int | None, head: dict) -> dict:
+    """The manifest of index version ``version`` (default: ``head``)."""
+    if head["version"] < 0:
+        raise FileNotFoundError(f"no complete ANN index version under {path!r}")
+    if version is None or int(version) == head["version"]:
+        return head
+    return read_manifest(spark, path, int(version))
+
+
+def _ann_from_doc(spark: SparkSession, doc: dict) -> dict:
+    meta = doc["meta"]
+    # replay the listed dirs in commit order: the first is the base
+    # (books/centers/codes; appends freeze the quantizers), each later
+    # one either ADDS codes (append) or MASKS the codes listed before
+    # it with tombstones (delete) — so a later re-append of a deleted
+    # id is live again. No broadcast hint on the anti-join: tombstone
+    # sets are usually takedown-sized (AQE broadcasts them), but a
+    # mass-delete can be arbitrarily large — let the planner pick.
+    import os
+
+    listed = stores.entries(doc)
+    base = listed[0]["path"]
+    m, k = meta["m"], meta["k"]
+    books = [[None] * k for _ in range(m)]
+    for r in spark.read.parquet(os.path.join(base, "books")).collect():
+        books[r["i"]][r["j"]] = list(r["center"])
+    centers_rows = spark.read.parquet(os.path.join(base, "centers")).collect()
+    centers = [None] * len(centers_rows)
+    for r in centers_rows:
+        centers[r["cell"]] = list(r["center"])
+    codes = None
+    for f in listed:
+        if "codes" in f["tables"]:
+            part = spark.read.parquet(os.path.join(f["path"], "codes"))
+            codes = part if codes is None else codes.unionByName(part)
+        if "tombstones" in f["tables"] and codes is not None:
+            tombs = spark.read.parquet(os.path.join(f["path"], "tombstones"))
+            codes = codes.join(tombs.dropDuplicates(["id"]), "id", "left_anti")
+    return {
+        "books": books,
+        "centers": centers,
+        "codes": codes,
+        "meta": meta,
     }
 
 
@@ -1126,86 +1113,21 @@ def load_ann_index(
     meta_only: bool = False,
 ) -> dict:
     """Load a :func:`build_ann_index` artifact: {'books', 'centers',
-    'codes' (lazy DataFrame, cell-partitioned), 'meta'}. Latest
-    ``_SUCCESS``-complete version unless pinned. The books/centers
-    collects are bounded by construction (m*k and n_clusters rows) —
-    the corpus-sized part of the index stays a lazy scan.
-    ``meta_only=True`` skips them all and returns just {'meta'} (the
-    tombstone-write path needs nothing else).
+    'codes' (lazy DataFrame, cell-partitioned), 'meta'}. The head
+    version unless pinned. The books/centers collects are bounded by
+    construction (m*k and n_clusters rows) — the corpus-sized part of
+    the index stays a lazy scan. ``meta_only=True`` skips them all
+    and returns just {'meta'}.
 
-    An APPENDED version (:func:`append_ann_index`) resolves through
-    its parent chain: codes are the UNION of every chain member's
+    An APPENDED version (:func:`append_ann_index`) lists every dir
+    of its chain in one manifest: codes are the UNION of each listed
     cell-partitioned dir (one read per dir — a pruning filter pushed
     by ``ivfpq_topk(prune_codes=True)`` lands below each union arm,
     so partition pruning survives the chain), books/centers come from
-    the chain's base. Meta walks are bounded by chain length (tiny
-    one-row reads)."""
-    import os
-
-    jvm, fs, root = _ann_fs(spark, path)
-    complete = _ann_versions(fs, root, require_success=True)
-    if not complete:
-        raise FileNotFoundError(f"no complete ANN index version under {path!r}")
-    v = max(complete) if version is None else int(version)
-    if v not in complete:
-        raise FileNotFoundError(f"ANN index version {v} not complete under {path!r}")
-    vdir = os.path.join(path, f"v-{v:06d}")
-    mrow = spark.read.parquet(os.path.join(vdir, "meta")).first()
-    meta = mrow.asDict()
-    if meta_only:
-        return {"meta": meta}
-    # resolve the parent chain: codes dirs newest-to-base; books and
-    # centers live at the base (appends freeze the quantizers)
-    chain = [v]
-    cur = meta
-    while cur.get("parent") is not None:
-        p = int(cur["parent"])
-        if p not in complete:
-            raise FileNotFoundError(
-                f"ANN index version {v} chains to incomplete parent {p}"
-            )
-        chain.append(p)
-        cur = (
-            spark.read.parquet(os.path.join(path, f"v-{p:06d}", "meta"))
-            .first()
-            .asDict()
-        )
-    vdir = os.path.join(path, f"v-{chain[-1]:06d}")  # base: books/centers
-    m, k = meta["m"], meta["k"]
-    books = [[None] * k for _ in range(m)]
-    for r in spark.read.parquet(os.path.join(vdir, "books")).collect():
-        books[r["i"]][r["j"]] = list(r["center"])
-    centers_rows = spark.read.parquet(os.path.join(vdir, "centers")).collect()
-    centers = [None] * len(centers_rows)
-    for r in centers_rows:
-        centers[r["cell"]] = list(r["center"])
-    def _exists(cv: int, sub: str) -> bool:
-        return fs.exists(
-            jvm.org.apache.hadoop.fs.Path(os.path.join(path, f"v-{cv:06d}", sub))
-        )
-
-    # replay the chain base -> newest: each version either ADDS codes
-    # (build/append) or MASKS the accumulated set with tombstones
-    # (delete). A tombstone epoch masks only what PRECEDED it, so a
-    # later re-append of a deleted id is live again. No broadcast
-    # hint on the anti-join: tombstone sets are usually
-    # takedown-sized (AQE broadcasts them), but a mass-delete epoch
-    # can be arbitrarily large — let the planner pick.
-    codes = None
-    for cv in reversed(chain):
-        vpath = os.path.join(path, f"v-{cv:06d}")
-        if _exists(cv, "codes"):
-            part = spark.read.parquet(os.path.join(vpath, "codes"))
-            codes = part if codes is None else codes.unionByName(part)
-        if _exists(cv, "tombstones") and codes is not None:
-            tombs = spark.read.parquet(os.path.join(vpath, "tombstones"))
-            codes = codes.join(tombs.dropDuplicates(["id"]), "id", "left_anti")
-    return {
-        "books": books,
-        "centers": centers,
-        "codes": codes,
-        "meta": meta,
-    }
+    the base dir. Resolving a version reads one manifest, no Spark
+    job."""
+    doc = _ann_doc(spark, path, version, stores.head(spark, path))
+    return {"meta": doc["meta"]} if meta_only else _ann_from_doc(spark, doc)
 
 
 # ------------------------------------------------------- query registry

@@ -99,10 +99,14 @@ def commit_files(
     note: str = "",
     fmt: str = "parquet",
     version: int | None = None,
+    meta: dict | None = None,
 ) -> int:
     """Commit an EXPLICIT file list as the next version — the primitive
     behind reference-in-place maintenance (a new version that reuses
     most of the previous version's files moves zero bytes).
+
+    ``meta`` is per-version payload, stored verbatim in the manifest
+    and returned by :func:`read_manifest`.
 
     ``version`` pins WHICH version number this commit claims — pass it
     when the file list was derived from version-1 so a concurrent
@@ -117,6 +121,8 @@ def commit_files(
         "note": note,
         "files": sorted(files, key=lambda f: f["path"]),
     }
+    if meta is not None:
+        doc["meta"] = meta
     # The version number is CLAIMED by whoever creates the manifest
     # file first — optimistic concurrency, the Delta-log commit
     # protocol. A losing concurrent writer gets a typed
@@ -490,11 +496,11 @@ def vacuum(
     table_root: str,
     keep_versions: list[int] | None = None,
 ) -> dict:
-    """Retention: physically delete data files referenced ONLY by
-    versions outside ``keep_versions`` (default: keep the latest), and
-    drop the vacuumed manifests. Files shared with a kept version —
-    e.g. everything ``delete_rows`` carried over untouched — survive,
-    exactly like Delta's VACUUM.
+    """Retention: physically delete data files (or directory entries)
+    referenced ONLY by versions outside ``keep_versions`` (default:
+    keep the latest), and drop the vacuumed manifests. Files shared
+    with a kept version — e.g. everything ``delete_rows`` carried over
+    untouched — survive, exactly like Delta's VACUUM.
 
     Driver-side FS metadata work, O(files across versions); nothing
     scans data. Returns {"deleted": [paths], "kept_versions": [...]}.
@@ -520,7 +526,7 @@ def vacuum(
     fs, _, jvm = _fs_and_path(spark, table_root)
     HPath = jvm.org.apache.hadoop.fs.Path
     for p in sorted(doomed):
-        fs.delete(HPath(p), False)
+        fs.delete(HPath(p), True)
     for v in versions:
         if v not in keep:
             fs.delete(HPath(_manifest_dir(table_root) + f"/v{v:06d}.json"), False)

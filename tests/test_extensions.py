@@ -542,8 +542,8 @@ def test_incremental_dedup_null_text_and_partial_batches(spark, tmp_path):
     # rest dedupe — nothing silently vanishes
     assert {r.doc_id for r in out1.collect()} == {1, 2}
 
-    # a crashed writer's partial batch dir (no _SUCCESS) must be
-    # ignored, not crash the listing or poison the history
+    # a crashed writer's partial dir (never committed) must be
+    # ignored, not crash the read or poison the history
     os.makedirs(os.path.join(store, "batch-999999-dead"), exist_ok=True)
     b2 = spark.createDataFrame([(10, None), (11, "y")], "doc_id long, text string")
     out2 = incremental_exact_dedup(b2, store)
@@ -810,13 +810,16 @@ def test_near_dedup_store_layout_prunes(spark, tmp_path):
     pre-banded index/ partitioned by (band, pbucket); the history
     read pushes the new batch's collided partition set as a PARTITION
     filter, so only colliding bucket directories are opened. Checks
-    the layout on disk, the _SUCCESS-at-root visibility marker, and
-    that a one-doc second batch physically touches a fraction of the
-    index's partition directories."""
+    the layout on disk, that the committed head lists the batch dir
+    (its visibility), and that a one-doc second batch physically
+    touches a fraction of the index's partition directories."""
     import os
 
     from pyspark.sql import functions as F
 
+    from data_integration_and_harmonization_spark.functions.stores import (
+        complete_batches,
+    )
     from data_integration_and_harmonization_spark.operators.dedup import (
         incremental_near_dedup,
     )
@@ -833,9 +836,8 @@ def test_near_dedup_store_layout_prunes(spark, tmp_path):
         "doc_id long, text string",
     )
     incremental_near_dedup(b1, store, threshold=0.5, hash_family="md5")
-    (batch1,) = [d for d in os.listdir(store) if d.startswith("batch-")]
-    root = os.path.join(store, batch1)
-    assert os.path.exists(os.path.join(root, "_SUCCESS"))
+    (root,) = complete_batches(spark, store)
+    assert os.path.dirname(root) == store
     assert os.path.isdir(os.path.join(root, "sigs"))
     bands = [d for d in os.listdir(os.path.join(root, "index")) if d.startswith("band=")]
     assert bands, "index must be partitioned by band"
@@ -893,6 +895,9 @@ def test_near_dedup_store_compaction(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from data_integration_and_harmonization_spark.functions.stores import (
+        complete_batches,
+    )
     from data_integration_and_harmonization_spark.operators.dedup import (
         compact_near_dedup_store,
         incremental_near_dedup,
@@ -906,13 +911,16 @@ def test_near_dedup_store_compaction(spark, tmp_path):
     incremental_near_dedup(mk(0, 10), store, threshold=0.5, hash_family="md5")
     incremental_near_dedup(mk(10, 20), store, threshold=0.5, hash_family="md5")
     incremental_near_dedup(mk(20, 30), store, threshold=0.5, hash_family="md5")
-    assert len([d for d in os.listdir(store) if d.startswith("batch-")]) == 3
+    assert len(complete_batches(spark, store)) == 3
 
     stats = compact_near_dedup_store(spark, store)
     assert stats["batches_compacted"] == 3 and stats["rows"] == 30
-    dirs = [d for d in os.listdir(store) if d.startswith("batch-")]
-    assert len(dirs) == 1 and "compact" in dirs[0]
-    assert os.path.isdir(os.path.join(store, dirs[0], "index"))
+    # the head lists only the merged dir, and it is the only data dir
+    # left on disk
+    assert complete_batches(spark, store) == [stats["out_dir"]]
+    out_name = os.path.basename(stats["out_dir"])
+    assert sorted(os.listdir(store)) == sorted(["_manifests", out_name])
+    assert os.path.isdir(os.path.join(stats["out_dir"], "index"))
 
     # replaying an admitted batch against the compacted store: no-op
     out = incremental_near_dedup(mk(10, 20), store, threshold=0.5, hash_family="md5")

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_integration_and_harmonization_spark.operators import features as FE
@@ -473,13 +474,15 @@ def test_profile_store_empty_batch_harmless(spark, tmp_path):
     assert rows["id"]["n_batches"] == 3 and rows["id"]["n_rows"] == 200
 
 
-def test_compact_profile_store_crash_windows_read_correct(spark, tmp_path):
-    """Every compactor crash window serves correct counts: a compact
-    dir without its _replaces sidecar is not yet live; once the
-    sidecar exists, still-present originals are masked; the next
-    compaction sweeps masked leftovers."""
+def test_compact_profile_store_crash_windows_read_correct(spark, tmp_path, monkeypatch):
+    """Every compactor crash window serves correct counts: a merged
+    dir whose commit never landed is not live; once the commit lands,
+    originals the sweep did not delete stay on disk but are not
+    served; the next compaction reaps them."""
     import os
-    import shutil
+
+    from data_integration_and_harmonization_spark.functions import stores
+    from data_integration_and_harmonization_spark.sources import manifest as MAN
 
     store = str(tmp_path / "prof_w")
     df = spark.range(500)
@@ -490,37 +493,39 @@ def test_compact_profile_store_crash_windows_read_correct(spark, tmp_path):
         r = P.profile_store_estimate(spark, store).collect()[0]
         return r["n_rows"], r["n_batches"]
 
-    assert est() == (500, 2)
-    # window 1: compact dir committed but no sidecar -> ignored
-    dead = os.path.join(store, "batch-000099-compact-dead")
-    os.makedirs(dead)
-    open(os.path.join(dead, "_SUCCESS"), "w").close()
-    assert est() == (500, 2)
-    shutil.rmtree(dead)
+    def crash(*a, **kw):
+        raise RuntimeError("injected crash before commit")
 
-    out = P.compact_profile_store(spark, store)
-    assert est() == (500, 1)
-    # window 2: an original the compactor failed to delete reappears —
-    # the sidecar masks it, counts do NOT double
-    replaced = open(os.path.join(out["out_dir"], "_replaces")).read().splitlines()
-    leftover_name = replaced[0]
-    src = out["out_dir"]  # any valid batch dir's parquet serves as content
-    leftover = os.path.join(store, leftover_name)
-    shutil.copytree(src, leftover)
-    os.remove(os.path.join(leftover, "_replaces"))
-    assert est() == (500, 1)
-    # the next compaction reaps the masked leftover
+    assert est() == (500, 2)
+    originals = stores.complete_batches(spark, store)
+    # window 1: merged dir written, commit never landed -> ignored
+    monkeypatch.setattr(MAN, "commit_files", crash)
+    with pytest.raises(RuntimeError, match="injected"):
+        P.compact_profile_store(spark, store)
+    monkeypatch.undo()
+    assert est() == (500, 2)
+
+    # window 2: the commit lands but the sweep never runs — the
+    # originals stay on disk unlisted, counts do NOT double
+    monkeypatch.setattr(stores, "reap", lambda spark_, root: [])
     P.compact_profile_store(spark, store)
-    assert not os.path.exists(leftover)
+    monkeypatch.undo()
+    assert all(os.path.exists(p) for p in originals)
+    assert est() == (500, 1)
+    # the next compaction reaps the leftovers
+    P.compact_profile_store(spark, store)
+    assert not any(os.path.exists(p) for p in originals)
     assert est() == (500, 1)
 
 
-def test_profile_store_orphan_compact_dir_is_reaped(spark, tmp_path):
-    """A compactor that crashed between the parquet _SUCCESS and the
-    _replaces sidecar leaves an orphan compact dir: it must never be
-    SERVED (the originals stay authoritative) and must be REAPED by
-    the next compaction instead of leaking on disk forever."""
+def test_profile_store_orphan_compact_dir_is_reaped(spark, tmp_path, monkeypatch):
+    """A compactor that crashed between writing its merged dir and
+    committing leaves an orphan dir: it must never be SERVED (the
+    originals stay authoritative) and must be REAPED by the next
+    compaction instead of leaking on disk forever."""
     import os
+
+    from data_integration_and_harmonization_spark.sources import manifest as MAN
 
     store = str(tmp_path / "prof_orphan")
     df = spark.range(2000).select(
@@ -532,17 +537,18 @@ def test_profile_store_orphan_compact_dir_is_reaped(spark, tmp_path):
         r["col_name"]: r for r in P.profile_store_estimate(spark, store).collect()
     }
 
-    # simulate the crash window: a committed compact batch WITHOUT its
-    # sidecar — same rows as a real compaction would write
-    rows = spark.read.schema(P.PROFILE_STORE_SCHEMA).parquet(
-        *[os.path.join(store, d) for d in os.listdir(store)]
-    )
-    orphan = os.path.join(store, "batch-000002-compact-deadbeef")
-    rows.groupBy("col_name").agg(
-        F.hll_union_agg("sketch").alias("sketch"),
-        F.sum("n_nonnull").alias("n_nonnull"),
-        F.sum("n_rows").alias("n_rows"),
-    ).write.parquet(orphan)
+    # the crash window: the real compaction's merged rows are on disk,
+    # its commit never landed
+    def crash(*a, **kw):
+        raise RuntimeError("injected crash before commit")
+
+    dirs = set(os.listdir(store))
+    monkeypatch.setattr(MAN, "commit_files", crash)
+    with pytest.raises(RuntimeError, match="injected"):
+        P.compact_profile_store(spark, store)
+    monkeypatch.undo()
+    (orphan,) = set(os.listdir(store)) - dirs
+    orphan = os.path.join(store, orphan)
     assert os.path.exists(os.path.join(orphan, "_SUCCESS"))
 
     # never served: estimates unchanged, batch counts still 2
@@ -562,10 +568,10 @@ def test_profile_store_orphan_compact_dir_is_reaped(spark, tmp_path):
 
 
 def test_profile_store_tag_exact_segment_match(spark, tmp_path):
-    """Replay idempotency compares the EXACT tag segment of the batch
-    dir (batch-NNNNNN-<tag>), not a dash-suffix: a tag like '16' must
-    not false-match an earlier '2026-08-16' batch (which would
-    silently drop the new batch's counts)."""
+    """Replay idempotency compares the EXACT tag a committed batch
+    carries, not a dash-suffix: a tag like '16' must not false-match
+    an earlier '2026-08-16' batch (which would silently drop the new
+    batch's counts)."""
     store = str(tmp_path / "prof_tag")
     df = spark.range(100)
     p1 = P.profile_store_update(df, store, ["id"], tag="2026-08-16")

@@ -195,16 +195,15 @@ def test_pq_encode_err_col_matches_distortion(spark, emb):
     assert abs(d_enc - d_standalone) < 1e-9
 
 
-def test_ann_index_save_load_serve_agreement(spark, emb, tmp_path):
+def test_ann_index_save_load_serve_agreement(spark, emb, tmp_path, monkeypatch):
     """r9 verdict item 6: build_ann_index persists codebooks, coarse
     centers, and cell-PARTITIONED codes as a versioned artifact;
-    load_ann_index reads the latest complete version; serving
+    load_ann_index reads the latest committed version; serving
     ivfpq_topk from the loaded artifact (probed-cells partition-pruned
     scan) returns row-for-row the build-fresh result. A second build
-    bumps the version; an incomplete dir (no _SUCCESS) is invisible."""
-    import os
-    import shutil
-
+    bumps the version; a build whose commit never lands is
+    invisible."""
+    from data_integration_and_harmonization_spark.sources import manifest as MAN
     from data_integration_and_harmonization_spark.operators.similarity import (
         build_ann_index,
         ivfpq_topk,
@@ -234,15 +233,27 @@ def test_ann_index_save_load_serve_agreement(spark, emb, tmp_path):
          for r in served.collect()}
     assert a == b and len(a) == 30
 
-    # versioning: new build -> v1 wins; torn build (no _SUCCESS) invisible
+    # versioning: new build -> v1 wins; a torn build (crash after its
+    # data write, before the commit) is invisible — the head and a
+    # pinned older version both still load
     meta2 = build_ann_index(emb, idx_dir, m=4, k=8, n_clusters=8)
     assert meta2["version"] == 1
     assert load_ann_index(spark, idx_dir)["meta"]["version"] == 1
-    os.remove(os.path.join(idx_dir, "v-000001", "_SUCCESS"))
-    assert load_ann_index(spark, idx_dir)["meta"]["version"] == 0
-    shutil.rmtree(os.path.join(idx_dir, "v-000000"))
+
+    def crash(*a, **kw):
+        raise RuntimeError("injected crash before commit")
+
+    torn_dir = str(tmp_path / "ann_torn")
+    monkeypatch.setattr(MAN, "commit_files", crash)
+    for d in (idx_dir, torn_dir):
+        with pytest.raises(RuntimeError, match="injected"):
+            build_ann_index(emb, d, m=4, k=8, n_clusters=8)
+    monkeypatch.undo()
+    assert load_ann_index(spark, idx_dir)["meta"]["version"] == 1
+    assert load_ann_index(spark, idx_dir, version=0)["meta"]["version"] == 0
+    # an index whose only build is torn has no version to serve
     with pytest.raises(FileNotFoundError, match="no complete"):
-        load_ann_index(spark, idx_dir)
+        load_ann_index(spark, torn_dir)
 
 
 def test_ann_index_incremental_append(spark, emb, tmp_path):
@@ -408,14 +419,19 @@ def test_ann_index_streaming_maintenance(spark, emb, tmp_path):
     assert a == b and len(a) == 25
 
 
-def test_ann_index_chain_compaction(spark, emb, tmp_path):
+def test_ann_index_chain_compaction(spark, emb, tmp_path, monkeypatch):
     """compact_ann_index (r10 verdict item 3): build + append +
     tombstone-delete, then compact — serving is IDENTICAL before and
     after, the chain is length 1 (parent-less), old version dirs are
-    deleted, and the crash window (compacted dir without _SUCCESS)
-    leaves the chain authoritative and is reaped by the next run."""
+    deleted, and the crash window (compacted dir written, commit
+    never landed) leaves the chain authoritative and is reaped by
+    the next run."""
     import os
 
+    from data_integration_and_harmonization_spark.functions.stores import (
+        complete_batches,
+    )
+    from data_integration_and_harmonization_spark.sources import manifest as MAN
     from data_integration_and_harmonization_spark.operators.similarity import (
         append_ann_index,
         build_ann_index,
@@ -452,14 +468,19 @@ def test_ann_index_chain_compaction(spark, emb, tmp_path):
     assert idx_pre["meta"]["parent"] is not None  # a real chain
     chain_dirs = set(os.listdir(idx_dir))
 
-    # crash window: a compactor that died between writing its codes
-    # and creating _SUCCESS leaves an incomplete version dir — loads
-    # ignore it and the chain still serves identically
-    orphan = os.path.join(idx_dir, "v-000099")
-    os.makedirs(os.path.join(orphan, "codes"))
+    # crash window: a compactor that died between writing its data
+    # dir and committing leaves an unlisted dir — loads ignore it and
+    # the chain still serves identically
+    def crash(*a, **kw):
+        raise RuntimeError("injected crash before commit")
+
+    monkeypatch.setattr(MAN, "commit_files", crash)
+    with pytest.raises(RuntimeError, match="injected"):
+        compact_ann_index(spark, idx_dir)
+    monkeypatch.undo()
     idx_crash, during = serve()
     assert during == before
-    assert set(os.listdir(idx_dir)) == chain_dirs | {"v-000099"}
+    (orphan,) = set(os.listdir(idx_dir)) - chain_dirs
 
     # the real compaction folds the chain AND reaps the orphan
     stats = compact_ann_index(spark, idx_dir)
@@ -467,8 +488,12 @@ def test_ann_index_chain_compaction(spark, emb, tmp_path):
     assert after == before and len(after) == 30
     assert idx_post["meta"]["parent"] is None
     assert idx_post["codes"].count() == n_live_pre
-    # chain folded to ONE version dir on disk; orphan reaped
-    assert sorted(os.listdir(idx_dir)) == [f"v-{stats['version']:06d}"]
+    # chain folded to ONE data dir on disk, one retained version;
+    # orphan reaped
+    (live,) = complete_batches(spark, idx_dir)
+    assert orphan != os.path.basename(live)
+    assert sorted(os.listdir(idx_dir)) == sorted(["_manifests", os.path.basename(live)])
+    assert MAN.list_versions(spark, idx_dir) == [stats["version"]]
     assert not stats["undeleted"]
     # idempotent lifecycle: compaction of a length-1 chain still works
     stats2 = compact_ann_index(spark, idx_dir)
@@ -483,6 +508,9 @@ def test_ann_compaction_reader_grace_sweep_false(spark, emb, tmp_path):
     compaction's sweep reaps the leftovers."""
     import os
 
+    from data_integration_and_harmonization_spark.functions.stores import (
+        complete_batches,
+    )
     from data_integration_and_harmonization_spark.operators.similarity import (
         append_ann_index,
         build_ann_index,
@@ -514,7 +542,9 @@ def test_ann_compaction_reader_grace_sweep_false(spark, emb, tmp_path):
     assert lazy_old.count() == 12
     # next compaction (default sweep) reaps everything older
     stats2 = compact_ann_index(spark, idx_dir)
-    assert sorted(os.listdir(idx_dir)) == [f"v-{stats2['version']:06d}"]
+    (live,) = complete_batches(spark, idx_dir)
+    assert sorted(os.listdir(idx_dir)) == sorted(["_manifests", os.path.basename(live)])
+    assert not stats2["undeleted"]
 
 
 def test_stream_cdf_ann_maintenance_tracks_versions(spark, emb, tmp_path):
