@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_integration_and_harmonization_spark.functions import stores
+from data_integration_and_harmonization_spark.functions.arrow import payload_stage
 from data_integration_and_harmonization_spark.functions.concurrency import overlap
 from data_integration_and_harmonization_spark.operators import graph as _graph
 from data_integration_and_harmonization_spark.operators.text import normalized, tokens
@@ -396,8 +397,6 @@ def image_phash_table(
     image-dedup recipe: re-encodes, quality shifts and minor touch-ups
     land within a few bits (pinned by the recompression test), while
     distinct content sits ~32 bits apart."""
-    import pandas as pd
-
     from data_integration_and_harmonization_spark.functions.media_codecs import (
         phash64_of_payload,
     )
@@ -405,20 +404,9 @@ def image_phash_table(
     src = media.select(
         F.col(id_col).cast("long").alias("id"), F.col(payload_col).alias("payload")
     )
-
-    def batches(it):
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "sig": pd.array(
-                        [phash64_of_payload(p) for p in pdf["payload"]],
-                        dtype="Int64",
-                    ),
-                }
-            )
-
-    return src.mapInPandas(batches, schema="id long, sig long")
+    return payload_stage(
+        src, ["id"], lambda p: [(phash64_of_payload(p),)], "id long, sig long"
+    )
 
 
 def media_signature_table(
@@ -440,33 +428,16 @@ def media_signature_table(
     :func:`duplicate_clusters` — with this stage, every modality the
     engine decodes (text has :func:`simhash_pairs`) shares one
     near-dup pipeline."""
-    import pandas as pd
-
     from data_integration_and_harmonization_spark.functions import media_codecs as MC
 
     src = media.select(
         F.col(id_col).cast("long").alias("id"), F.col(payload_col).alias("payload")
     )
-
-    def batches(it):
-        for pdf in it:
-            kinds, sigs = [], []
-            for p in pdf["payload"]:
-                # single-decode dispatch: a GIF is decoded ONCE and
-                # routed by frame count (animated -> video hash,
-                # single-frame -> image hash)
-                k, s = MC.media_signature(p)
-                kinds.append(k)
-                sigs.append(s)
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "kind": kinds,
-                    "sig": pd.array(sigs, dtype="Int64"),
-                }
-            )
-
-    return src.mapInPandas(batches, schema="id long, kind string, sig long")
+    # single-decode dispatch: a GIF is decoded ONCE and routed by frame
+    # count (animated -> video hash, single-frame -> image hash)
+    return payload_stage(
+        src, ["id"], lambda p: [MC.media_signature(p)], "id long, kind string, sig long"
+    )
 
 
 def phash_pairs(

@@ -24,13 +24,14 @@ per-payload C-speed (zlib/numpy) under a thin Python chunk walk.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_integration_and_harmonization_spark.functions import media_codecs as MC
+from data_integration_and_harmonization_spark.functions.arrow import payload_stage
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -224,24 +225,16 @@ def extract_features(media: DataFrame, dim: int = 8, batch_size_hint: int | None
     dropped on output so only fixed-width features shuffle
     downstream. Per payload: real decode (PNG/GIF/WAV, PIL when
     available) with stub fallback — see :func:`decode_features`."""
-    import pandas as pd
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            feats = [
-                decode_features(p, t, dim)
-                for p, t in zip(pdf["payload"], pdf["media_type"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": pdf["n_bytes"],
-                    "feature": feats,
-                }
-            )
-
-    return media.mapInPandas(batches, schema=FEATURE_SCHEMA)
+    # media_type rides through as a key AND feeds the kernel
+    src = media.select(
+        "media_id", "media_type", "n_bytes", "payload", F.col("media_type").alias("_type")
+    )
+    return payload_stage(
+        src,
+        ["media_id", "media_type", "n_bytes"],
+        lambda p, t: [(decode_features(p, t, dim),)],
+        FEATURE_SCHEMA,
+    )
 
 
 def resize_real(payload: bytes, target: int = 64) -> bytes | None:
@@ -533,159 +526,99 @@ def extract_temporal_features(
       (0.0 for absent track fields).
     - kind NULL otherwise — undecodable rows stay visible.
     """
-    import pandas as pd
+    return payload_stage(
+        media.select("media_id", "payload"),
+        ["media_id"],
+        lambda p: [temporal_features(p, n_bands, frame, n_sample)],
+        TEMPORAL_SCHEMA,
+    )
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            kinds, vals = [], []
-            for p in pdf["payload"]:
-                fmt = MC.sniff_format(p) if p is not None else None
-                if fmt == "wav":
-                    r = audio_band_features(p, n_bands, frame)
-                    if r is None:
-                        kinds.append(None)
-                        vals.append(None)
-                    else:
-                        kinds.append("audio")
-                        vals.append(r[2] + [float(r[0]), r[1]])
-                elif fmt == "tiff":
-                    try:
-                        tm = MC.parse_tiff_meta(p)
-                    except ValueError:
-                        kinds.append(None)
-                        vals.append(None)
-                    else:
-                        kinds.append("image_meta")
-                        vals.append(
-                            [
-                                float(tm["height"] or 0),
-                                float(tm["width"] or 0),
-                                float(tm["bits_per_sample"] or 0),
-                                float(tm["compression"] or 0),
-                                float(tm["n_ifds"]),
-                            ]
-                        )
-                elif fmt == "webp":
-                    try:
-                        w = MC.parse_webp_meta(p)
-                    except ValueError:
-                        kinds.append(None)
-                        vals.append(None)
-                    else:
-                        kinds.append("image_meta")
-                        vals.append(
-                            [
-                                float(w["height"]),
-                                float(w["width"]),
-                                float(w["has_alpha"]),
-                                float(w["has_anim"]),
-                            ]
-                        )
-                elif fmt == "webm":
-                    try:
-                        wm = MC.parse_webm_meta(p)
-                    except ValueError:
-                        kinds.append(None)
-                        vals.append(None)
-                    else:
-                        vt = next(
-                            (t for t in wm["tracks"] if t["type"] == "video"), {}
-                        )
-                        at = next(
-                            (t for t in wm["tracks"] if t["type"] == "audio"), {}
-                        )
-                        kinds.append("video_meta")
-                        vals.append(
-                            [
-                                wm["duration_sec"],
-                                float(vt.get("height") or 0),
-                                float(vt.get("width") or 0),
-                                float(at.get("sample_rate") or 0),
-                                float(at.get("channels") or 0),
-                            ]
-                        )
-                elif fmt == "ogg":
-                    try:
-                        og = MC.parse_ogg_meta(p)
-                    except ValueError:
-                        kinds.append(None)
-                        vals.append(None)
-                    else:
-                        kinds.append("audio_meta")
-                        vals.append(
-                            [
-                                og["duration_sec"],
-                                float(og["preskip"]),
-                                float(og["sample_rate"] or 0),
-                                float(og["last_granule"] or 0),
-                                float(og["channels"] or 0),
-                            ]
-                        )
-                elif fmt == "flac":
-                    try:
-                        fm = MC.parse_flac_meta(p)
-                    except ValueError:
-                        kinds.append(None)
-                        vals.append(None)
-                    else:
-                        kinds.append("audio_meta")
-                        vals.append(
-                            [
-                                fm["duration_sec"],
-                                float(fm["bits_per_sample"]),
-                                float(fm["sample_rate"]),
-                                float(fm["total_samples"]),
-                                float(fm["channels"]),
-                            ]
-                        )
-                elif fmt == "mp3":
-                    try:
-                        m = MC.parse_mp3_meta(p)
-                    except ValueError:
-                        kinds.append(None)
-                        vals.append(None)
-                    else:
-                        kinds.append("audio_meta")
-                        # slot 5 (r13): Layer III shell fraction from
-                        # the side-info walk — 1.0 = zero-filled
-                        # header shell, ~0 = real encode, NULL for
-                        # Layer I/II (they have no L3 side info)
-                        vals.append(
-                            [
-                                m["duration_sec"],
-                                float(m["bitrate_kbps"]),
-                                float(m["sample_rate"] or 0),
-                                float(m["n_frames"]),
-                                float(m["channels"]),
-                                MC.mp3_shell_fraction(p),
-                            ]
-                        )
-                elif fmt in ("y4m", "gif", "mp4", "avi"):
-                    r = video_temporal_features(p, n_sample)
-                    if r is None:
-                        kinds.append(None)
-                        vals.append(None)
-                    else:
-                        nf, fps, h, w, luma, motion = r
-                        kinds.append("video")
-                        vals.append(
-                            luma
-                            + motion
-                            + [
-                                float(nf),
-                                None if fps is None else round(fps, 9),
-                                float(h),
-                                float(w),
-                            ]
-                        )
-                else:
-                    kinds.append(None)
-                    vals.append(None)
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "kind": kinds, "vals": vals}
-            )
 
-    return media.mapInPandas(batches, schema=TEMPORAL_SCHEMA)
+def temporal_features(
+    payload: bytes | None, n_bands: int = 8, frame: int = 256, n_sample: int = 4
+) -> tuple[str | None, list[float | None] | None]:
+    """``(kind, vals)`` of one payload — the per-payload kernel of
+    :func:`extract_temporal_features`, which documents each kind's
+    ``vals`` layout; ``(None, None)`` when no codec recognizes it."""
+    fmt = MC.sniff_format(payload) if payload is not None else None
+    if fmt == "wav":
+        r = audio_band_features(payload, n_bands, frame)
+        if r is None:
+            return None, None
+        return "audio", r[2] + [float(r[0]), r[1]]
+    if fmt in ("y4m", "gif", "mp4", "avi"):
+        r = video_temporal_features(payload, n_sample)
+        if r is None:
+            return None, None
+        nf, fps, h, w, luma, motion = r
+        tail = [float(nf), None if fps is None else round(fps, 9), float(h), float(w)]
+        return "video", luma + motion + tail
+    parse = {
+        "tiff": MC.parse_tiff_meta,
+        "webp": MC.parse_webp_meta,
+        "webm": MC.parse_webm_meta,
+        "ogg": MC.parse_ogg_meta,
+        "flac": MC.parse_flac_meta,
+        "mp3": MC.parse_mp3_meta,
+    }.get(fmt)
+    if parse is None:
+        return None, None
+    try:
+        m = parse(payload)
+    except ValueError:
+        return None, None
+    if fmt == "tiff":
+        return "image_meta", [
+            float(m["height"] or 0),
+            float(m["width"] or 0),
+            float(m["bits_per_sample"] or 0),
+            float(m["compression"] or 0),
+            float(m["n_ifds"]),
+        ]
+    if fmt == "webp":
+        return "image_meta", [
+            float(m["height"]),
+            float(m["width"]),
+            float(m["has_alpha"]),
+            float(m["has_anim"]),
+        ]
+    if fmt == "webm":
+        vt = next((t for t in m["tracks"] if t["type"] == "video"), {})
+        at = next((t for t in m["tracks"] if t["type"] == "audio"), {})
+        return "video_meta", [
+            m["duration_sec"],
+            float(vt.get("height") or 0),
+            float(vt.get("width") or 0),
+            float(at.get("sample_rate") or 0),
+            float(at.get("channels") or 0),
+        ]
+    if fmt == "ogg":
+        return "audio_meta", [
+            m["duration_sec"],
+            float(m["preskip"]),
+            float(m["sample_rate"] or 0),
+            float(m["last_granule"] or 0),
+            float(m["channels"] or 0),
+        ]
+    if fmt == "flac":
+        return "audio_meta", [
+            m["duration_sec"],
+            float(m["bits_per_sample"]),
+            float(m["sample_rate"]),
+            float(m["total_samples"]),
+            float(m["channels"]),
+        ]
+    # mp3; slot 5 (r13): Layer III shell fraction from the side-info
+    # walk — 1.0 = zero-filled header shell, ~0 = real encode, NULL for
+    # Layer I/II (they have no L3 side info)
+    return "audio_meta", [
+        m["duration_sec"],
+        float(m["bitrate_kbps"]),
+        float(m["sample_rate"] or 0),
+        float(m["n_frames"]),
+        float(m["channels"]),
+        MC.mp3_shell_fraction(payload),
+    ]
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -708,48 +641,32 @@ FRAMES_SCHEMA = T.StructType(
 def resize_media(media: DataFrame, target: int = 64) -> DataFrame:
     """Arrow-batched resize over the media table: real decode+resample
     +re-encode for recognized images, byte-striding stub otherwise."""
-    import pandas as pd
 
-    def resize_one(p):
+    def resize(p):
         r = resize_real(p, target)
-        return r if r is not None else resize_stub(p, target)
+        if r is None:
+            r = resize_stub(p, target)
+        return [(r, None if r is None else len(r))]
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            resized = [resize_one(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": resized,
-                    "n_bytes": [len(r) if r is not None else None for r in resized],
-                }
-            )
-
-    return media.mapInPandas(batches, schema=RESIZED_SCHEMA)
+    return payload_stage(
+        media.select("media_id", "payload"), ["media_id"], resize, RESIZED_SCHEMA
+    )
 
 
 def sample_frames(media: DataFrame, n_frames: int = 4, frame_size: int = 16) -> DataFrame:
     """Arrow-batched frame sampling: one output row per (media, frame)
     — the fan-out happens inside the batch, so downstream is a plain
     long-format frame table ready for per-frame feature extraction."""
-    import pandas as pd
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            ids, idxs, frames = [], [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                fs = frame_sample_real(p, n_frames)
-                if fs is None:
-                    fs = frame_sample_stub(p, n_frames, frame_size)
-                if fs is None:
-                    continue
-                for i, fr in enumerate(fs):
-                    ids.append(mid)
-                    idxs.append(i)
-                    frames.append(fr)
-            yield pd.DataFrame({"media_id": ids, "frame_idx": idxs, "frame": frames})
+    def frames(p):
+        fs = frame_sample_real(p, n_frames)
+        if fs is None:
+            fs = frame_sample_stub(p, n_frames, frame_size)
+        return enumerate(fs or ())
 
-    return media.mapInPandas(batches, schema=FRAMES_SCHEMA)
+    return payload_stage(
+        media.select("media_id", "payload"), ["media_id"], frames, FRAMES_SCHEMA
+    )
 
 
 # ------------------------------------------------------- query registry
@@ -762,26 +679,16 @@ def video_duration_table(
     container/header arithmetic only (mp4 stts/mdhd, mp3 frame walk,
     wav data chunk, gif GCE delays), no frame decode. NULL duration
     for unrecognized or timing-free payloads."""
-    import pandas as pd
-
     src = videos.select(
         F.col(id_col).cast("long").alias("video_id"),
         F.col(payload_col).alias("payload"),
     )
-
-    def batches(it: Iterator) -> Iterator:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "video_id": pdf["video_id"],
-                    "duration_ms": pd.array(
-                        [MC.media_duration_ms(p) for p in pdf["payload"]],
-                        dtype="Int64",
-                    ),
-                }
-            )
-
-    return src.mapInPandas(batches, schema="video_id long, duration_ms long")
+    return payload_stage(
+        src,
+        ["video_id"],
+        lambda p: [(MC.media_duration_ms(p),)],
+        "video_id long, duration_ms long",
+    )
 
 
 def transcript_video_alignment(

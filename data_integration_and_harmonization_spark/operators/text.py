@@ -478,6 +478,30 @@ def document_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _document_stage(
+    df: DataFrame, id_col: str, payload_col: str, fn: Callable, schema: str
+) -> DataFrame:
+    """``fn`` per payload of ``df`` in one Arrow stage, keyed by the
+    long-cast ``id_col``."""
+    from data_integration_and_harmonization_spark.functions.arrow import (
+        payload_stage,
+    )
+
+    src = df.select(
+        F.col(id_col).cast("long").alias("id"), F.col(payload_col).alias("payload")
+    )
+    return payload_stage(src, ["id"], fn, schema)
+
+
+def _extract_table(df: DataFrame, id_col: str, payload_col: str, fmt: str) -> DataFrame:
+    from data_integration_and_harmonization_spark.sources.readers import DOC_FORMATS
+
+    extract = DOC_FORMATS[fmt][1]
+    return _document_stage(
+        df, id_col, payload_col, lambda p: [(extract(p),)], "id long, text string"
+    )
+
+
 def pdf_text_table(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
@@ -491,26 +515,7 @@ def pdf_text_table(
     document source. Same cost model as the media codecs: payload
     bytes cross into Python once, batch-wise; only the extracted text
     comes back."""
-    import pandas as pd
-
-    from data_integration_and_harmonization_spark.functions.pdf import (
-        extract_pdf_text,
-    )
-
-    src = df.select(
-        F.col(id_col).cast("long").alias("id"), F.col(payload_col).alias("payload")
-    )
-
-    def batches(it):
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "text": [extract_pdf_text(p) for p in pdf["payload"]],
-                }
-            )
-
-    return src.mapInPandas(batches, schema="id long, text string")
+    return _extract_table(df, id_col, payload_col, "pdf")
 
 
 def docx_text_table(
@@ -522,26 +527,7 @@ def docx_text_table(
     (:mod:`..sources.docx` — zip + ``word/document.xml`` run walk)
     per payload. Non-docx or text-free payloads surface with text
     NULL for quarantine; only the extracted text crosses back."""
-    import pandas as pd
-
-    from data_integration_and_harmonization_spark.sources.docx import (
-        extract_docx_text,
-    )
-
-    src = df.select(
-        F.col(id_col).cast("long").alias("id"), F.col(payload_col).alias("payload")
-    )
-
-    def batches(it):
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "text": [extract_docx_text(p) for p in pdf["payload"]],
-                }
-            )
-
-    return src.mapInPandas(batches, schema="id long, text string")
+    return _extract_table(df, id_col, payload_col, "docx")
 
 
 def document_text_table(
@@ -557,49 +543,15 @@ def document_text_table(
     Python worker round-trip instead of one per format (the r4
     fixed-overhead lesson). Unrecognized or text-free payloads ride
     with fmt/text NULL for quarantine."""
-    import pandas as pd
+    from data_integration_and_harmonization_spark.sources.readers import document_text
 
-    from data_integration_and_harmonization_spark.functions.pdf import (
-        extract_pdf_text,
-        is_pdf,
+    return _document_stage(
+        df,
+        id_col,
+        payload_col,
+        lambda p: [document_text(p)],
+        "id long, fmt string, text string",
     )
-    from data_integration_and_harmonization_spark.sources.docx import (
-        extract_docx_text,
-        extract_pptx_text,
-        is_docx,
-        is_pptx,
-    )
-    from data_integration_and_harmonization_spark.sources.epub import (
-        extract_epub_text,
-        is_epub,
-    )
-
-    src = df.select(
-        F.col(id_col).cast("long").alias("id"), F.col(payload_col).alias("payload")
-    )
-
-    def batches(it):
-        for pdf in it:
-            fmts, texts = [], []
-            for p in pdf["payload"]:
-                if p is not None and is_pdf(p):
-                    fmts.append("pdf")
-                    texts.append(extract_pdf_text(p))
-                elif p is not None and is_docx(p):
-                    fmts.append("docx")
-                    texts.append(extract_docx_text(p))
-                elif p is not None and is_epub(p):
-                    fmts.append("epub")
-                    texts.append(extract_epub_text(p))
-                elif p is not None and is_pptx(p):
-                    fmts.append("pptx")
-                    texts.append(extract_pptx_text(p))
-                else:
-                    fmts.append(None)
-                    texts.append(None)
-            yield pd.DataFrame({"id": pdf["id"], "fmt": fmts, "text": texts})
-
-    return src.mapInPandas(batches, schema="id long, fmt string, text string")
 
 
 # ------------------------------------------------------- query registry

@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
+from data_integration_and_harmonization_spark.sources.manifest import manifest_path
+
 # direct type objects, not DDL: the DataSource's schema() runs inside
 # Spark's planning python worker, where no SparkSession exists (DDL
 # parsing would need one)
@@ -56,12 +58,8 @@ _ARROW_TO_SPARK = {
 }
 
 
-def _manifest_dir(root: str) -> str:
-    return root.rstrip("/") + "/_manifests"
-
-
 def _versions(root: str) -> list[int]:
-    mdir = _manifest_dir(root)
+    mdir = manifest_path(root)
     if not os.path.isdir(mdir):
         return []
     out = []
@@ -72,7 +70,7 @@ def _versions(root: str) -> list[int]:
 
 
 def _manifest(root: str, v: int) -> dict:
-    with open(os.path.join(_manifest_dir(root), f"v{v:06d}.json")) as fh:
+    with open(manifest_path(root, v)) as fh:
         return json.load(fh)
 
 

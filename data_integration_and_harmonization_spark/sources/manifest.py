@@ -53,12 +53,17 @@ def _fs_and_path(spark: SparkSession, path: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath, jvm
 
 
-def _manifest_dir(root: str) -> str:
-    return root.rstrip("/") + "/_manifests"
+def manifest_path(table_root: str, version: int | None = None) -> str:
+    """The manifest layout, named once: ``<root>/_manifests``, or
+    version ``version``'s ``vNNNNNN.json`` inside it. Plain string
+    work with no session, so the CDF stream reader can call it inside
+    its DataSource worker."""
+    mdir = table_root.rstrip("/") + "/_manifests"
+    return mdir if version is None else f"{mdir}/v{version:06d}.json"
 
 
 def list_versions(spark: SparkSession, table_root: str) -> list[int]:
-    fs, mdir, _ = _fs_and_path(spark, _manifest_dir(table_root))
+    fs, mdir, _ = _fs_and_path(spark, manifest_path(table_root))
     if not fs.exists(mdir):
         return []
     out = []
@@ -129,9 +134,9 @@ def commit_files(
     # CommitConflictError instead of silently clobbering.
     from urllib.parse import unquote, urlparse
 
-    fs, mdir, jvm = _fs_and_path(spark, _manifest_dir(table_root))
+    fs, mdir, jvm = _fs_and_path(spark, manifest_path(table_root))
     fs.mkdirs(mdir)
-    target_str = _manifest_dir(table_root) + f"/v{version:06d}.json"
+    target_str = manifest_path(table_root, version)
     parsed = urlparse(target_str)
     payload = json.dumps(doc).encode("utf-8")
     if parsed.scheme in ("", "file"):
@@ -146,7 +151,7 @@ def commit_files(
         import os
         import uuid as _uuid
 
-        mdir_local = unquote(urlparse(_manifest_dir(table_root)).path)
+        mdir_local = unquote(urlparse(manifest_path(table_root)).path)
         target_local = unquote(parsed.path)
         tmp = os.path.join(mdir_local, f".tmp_{_uuid.uuid4().hex}")
         with open(tmp, "wb") as fh:
@@ -479,7 +484,7 @@ def read_manifest(spark: SparkSession, table_root: str, version: int | None = No
     # WITHOUT launching a Spark job: the old wholeTextFiles().collect()
     # cost one full job (~0.1-0.2 s) per manifest read, and a manifest
     # read fronts every versioned-table operation (r13).
-    mpath = _manifest_dir(table_root) + f"/v{v:06d}.json"
+    mpath = manifest_path(table_root, v)
     jvm = spark._jvm
     path = jvm.org.apache.hadoop.fs.Path(mpath)
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -529,7 +534,7 @@ def vacuum(
         fs.delete(HPath(p), True)
     for v in versions:
         if v not in keep:
-            fs.delete(HPath(_manifest_dir(table_root) + f"/v{v:06d}.json"), False)
+            fs.delete(HPath(manifest_path(table_root, v)), False)
     return {"deleted": sorted(doomed), "kept_versions": keep}
 
 

@@ -15,10 +15,30 @@ source sequence, then row order within the source.
 
 from __future__ import annotations
 
+import gzip
 import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+
+from data_integration_and_harmonization_spark.functions.arrow import (
+    payload_stage,
+    scan_files,
+)
+from data_integration_and_harmonization_spark.functions.pdf import (
+    extract_pdf_text,
+    is_pdf,
+)
+from data_integration_and_harmonization_spark.sources.docx import (
+    extract_docx_text,
+    extract_pptx_text,
+    is_docx,
+    is_pptx,
+)
+from data_integration_and_harmonization_spark.sources.epub import (
+    extract_epub_text,
+    is_epub,
+)
 
 TPCH_TABLES = (
     "region",
@@ -32,6 +52,29 @@ TPCH_TABLES = (
     "documents",
     "embeddings",
 )
+
+# Document formats by magic bytes: fmt -> (sniffer, extractor), in
+# dispatch order. pdf (ISO 32000-1 from-spec extractor), docx (ECMA-376
+# run walk), epub (OCF/OPF spine-order chapters), pptx (DrawingML slide
+# text). epub sniffs before pptx, so a zip carrying both an EPUB
+# mimetype and ppt/presentation.xml reads as epub through every door.
+DOC_FORMATS = {
+    "pdf": (is_pdf, extract_pdf_text),
+    "docx": (is_docx, extract_docx_text),
+    "epub": (is_epub, extract_epub_text),
+    "pptx": (is_pptx, extract_pptx_text),
+}
+
+
+def document_text(payload: bytes | None) -> tuple[str | None, str | None]:
+    """``(fmt, text)`` of one document payload: the first format in
+    :data:`DOC_FORMATS` whose magic bytes match, and its extracted
+    text (NULL when text-free); ``(None, None)`` when none matches."""
+    if payload is not None:
+        for fmt, (sniff, extract) in DOC_FORMATS.items():
+            if sniff(payload):
+                return fmt, extract(payload)
+    return None, None
 
 
 def read_any(
@@ -62,45 +105,28 @@ def read_any(
             decode_http_text,
         )
 
-        pattern = (
-            os.path.join(path, "*.txt*") if os.path.isdir(path) else path
-        )  # *.txt* also picks up .txt.gz members of a mixed dump
-        bins = (
-            spark.read.format("binaryFile").load(pattern).select("content")
-        )
         whole = ext == "wholetext"
-        enc = encoding
 
-        def _decode_text_batches(it):
-            import gzip as _gzip
+        def decode(payload):
+            b = bytes(payload)
+            if b[:2] == b"\x1f\x8b":
+                # .txt.gz corpora: the JVM path decompresses via the
+                # Hadoop codec; the Arrow path must do its own (a gz
+                # text file is one stream, not members)
+                try:
+                    b = gzip.decompress(b)
+                except (OSError, EOFError):
+                    return ()  # torn archive: quarantine the file
+            t = (
+                decode_http_text(b, None)
+                if encoding == "auto"
+                else b.decode(encoding, errors="replace")
+            )
+            return [(t,)] if whole else [(line,) for line in t.splitlines()]
 
-            import pandas as pd
-
-            for pdf in it:
-                texts: list[str] = []
-                for payload in pdf["content"]:
-                    b = bytes(payload)
-                    if b[:2] == b"\x1f\x8b":
-                        # .txt.gz corpora: the JVM path decompresses
-                        # via the Hadoop codec; the Arrow path must
-                        # do its own (torn members keep nothing —
-                        # a gz text file is one stream, not members)
-                        try:
-                            b = _gzip.decompress(b)
-                        except (OSError, EOFError):
-                            continue  # torn archive: quarantine file
-                    t = (
-                        decode_http_text(b, None)
-                        if enc == "auto"
-                        else b.decode(enc, errors="replace")
-                    )
-                    if whole:
-                        texts.append(t)
-                    else:
-                        texts.extend(t.splitlines())
-                yield pd.DataFrame({"text": texts})
-
-        return bins.mapInPandas(_decode_text_batches, "text string")
+        # *.txt* also picks up .txt.gz members of a mixed dump
+        bins = scan_files(spark, path, "*.txt*").select("payload")
+        return payload_stage(bins, [], decode, "text string")
     if ext == "parquet":
         return spark.read.parquet(path)
     if ext == "orc":
@@ -135,181 +161,37 @@ def read_any(
 
             return read_xlsx_corpus(spark, path)
         return _read_excel_driver_side(spark, path)
-    if ext == "pdf":
-        # a PDF corpus through the document front door: Spark's
-        # binaryFile source distributes the byte scan (payloads never
-        # touch the driver), then ONE Arrow stage runs the engine's
-        # from-spec baseline extractor (functions/pdf.py), carrying
-        # file provenance THROUGH the stage (no synthetic join key —
-        # monotonically_increasing_id is re-evaluation-unstable).
-        # Output (text, _src_file) matches the txt/wholetext corpora
-        # shapes plus provenance; undecodable PDFs surface as NULL
-        # text for quarantine rather than failing the scan.
-        pattern = os.path.join(path, "*.pdf") if os.path.isdir(path) else path
-        bins = spark.read.format("binaryFile").load(pattern).select("content", "path")
-
-        def _extract_batches(it):
-            import pandas as pd
-
-            from data_integration_and_harmonization_spark.functions.pdf import (
-                extract_pdf_text,
-            )
-
-            for pdf in it:
-                yield pd.DataFrame(
-                    {
-                        "text": [extract_pdf_text(p) for p in pdf["content"]],
-                        "_src_file": [
-                            p.rsplit("/", 1)[-1] for p in pdf["path"]
-                        ],
-                    }
-                )
-
-        return bins.mapInPandas(_extract_batches, "text string, _src_file string")
-    if ext == "docx":
-        # a DOCX corpus through the same document front door as pdf:
-        # distributed binaryFile scan, ONE Arrow stage running the
-        # stdlib ECMA-376 extractor (sources/docx.py — the
-        # WordprocessingML sibling of the xlsx codec), provenance
-        # carried through the stage. Output (text, _src_file);
-        # non-docx / text-free payloads surface as NULL text.
-        pattern = os.path.join(path, "*.docx") if os.path.isdir(path) else path
-        bins = spark.read.format("binaryFile").load(pattern).select("content", "path")
-
-        def _extract_docx_batches(it):
-            import pandas as pd
-
-            from data_integration_and_harmonization_spark.sources.docx import (
-                extract_docx_text,
-            )
-
-            for pdf in it:
-                yield pd.DataFrame(
-                    {
-                        "text": [extract_docx_text(p) for p in pdf["content"]],
-                        "_src_file": [
-                            p.rsplit("/", 1)[-1] for p in pdf["path"]
-                        ],
-                    }
-                )
-
-        return bins.mapInPandas(
-            _extract_docx_batches, "text string, _src_file string"
-        )
-    if ext == "pptx":
-        # a slide-deck corpus: same document front door shape
-        # (binaryFile scan + one Arrow stage -> (text, _src_file));
-        # visible DrawingML text per slide, NULL quarantine
-        pattern = os.path.join(path, "*.pptx") if os.path.isdir(path) else path
-        bins = spark.read.format("binaryFile").load(pattern).select("content", "path")
-
-        def _extract_pptx_batches(it):
-            import pandas as pd
-
-            from data_integration_and_harmonization_spark.sources.docx import (
-                extract_pptx_text,
-            )
-
-            for pdf in it:
-                yield pd.DataFrame(
-                    {
-                        "text": [extract_pptx_text(p) for p in pdf["content"]],
-                        "_src_file": [
-                            p.rsplit("/", 1)[-1] for p in pdf["path"]
-                        ],
-                    }
-                )
-
-        return bins.mapInPandas(
-            _extract_pptx_batches, "text string, _src_file string"
-        )
-    if ext == "epub":
-        # a books corpus: same document front door shape (binaryFile
-        # scan + one Arrow stage -> (text, _src_file)); spine-order
-        # chapter text per the OCF/OPF chain, NULL quarantine
-        pattern = os.path.join(path, "*.epub") if os.path.isdir(path) else path
-        bins = spark.read.format("binaryFile").load(pattern).select("content", "path")
-
-        def _extract_epub_batches(it):
-            import pandas as pd
-
-            from data_integration_and_harmonization_spark.sources.epub import (
-                extract_epub_text,
-            )
-
-            for pdf in it:
-                yield pd.DataFrame(
-                    {
-                        "text": [extract_epub_text(p) for p in pdf["content"]],
-                        "_src_file": [
-                            p.rsplit("/", 1)[-1] for p in pdf["path"]
-                        ],
-                    }
-                )
-
-        return bins.mapInPandas(
-            _extract_epub_batches, "text string, _src_file string"
+    if ext in DOC_FORMATS:
+        # a pdf/docx/pptx/epub corpus through the document front door:
+        # a distributed binaryFile scan (payloads never touch the
+        # driver), then ONE Arrow stage running that format's
+        # extractor, carrying file provenance THROUGH the stage (no
+        # synthetic join key — monotonically_increasing_id is
+        # re-evaluation-unstable). Output (text, _src_file) matches the
+        # txt/wholetext corpora shapes plus provenance; undecodable or
+        # text-free payloads surface as NULL text for quarantine rather
+        # than failing the scan.
+        extract = DOC_FORMATS[ext][1]
+        return payload_stage(
+            scan_files(spark, path, f"*.{ext}"),
+            ["_src_file"],
+            lambda p: [(extract(p),)],
+            "text string, _src_file string",
         )
     if ext in ("docs", "documents"):
         # a MIXED document corpus (a real crawl bucket holds pdf and
-        # docx interleaved): one distributed binaryFile scan over the
-        # directory, ONE fused Arrow stage dispatching per payload by
-        # magic bytes (the same kernel as operators.text.
+        # docx interleaved): one scan over the directory, ONE fused
+        # Arrow stage dispatching per payload by magic bytes
+        # (:func:`document_text`, the same kernel as operators.text.
         # document_text_table). Output (fmt, text, _src_file);
         # unrecognized or text-free payloads ride with fmt/text NULL
         # for quarantine. Explicit fmt= only — 'docs' is not a file
         # extension.
-        pattern = os.path.join(path, "*") if os.path.isdir(path) else path
-        bins = spark.read.format("binaryFile").load(pattern).select("content", "path")
-
-        def _extract_mixed_batches(it):
-            import pandas as pd
-
-            from data_integration_and_harmonization_spark.functions.pdf import (
-                extract_pdf_text,
-                is_pdf,
-            )
-            from data_integration_and_harmonization_spark.sources.docx import (
-                extract_docx_text,
-                extract_pptx_text,
-                is_docx,
-                is_pptx,
-            )
-            from data_integration_and_harmonization_spark.sources.epub import (
-                extract_epub_text,
-                is_epub,
-            )
-
-            for pdf in it:
-                fmts, texts = [], []
-                for p in pdf["content"]:
-                    if p is not None and is_pdf(p):
-                        fmts.append("pdf")
-                        texts.append(extract_pdf_text(p))
-                    elif p is not None and is_docx(p):
-                        fmts.append("docx")
-                        texts.append(extract_docx_text(p))
-                    elif p is not None and is_pptx(p):
-                        fmts.append("pptx")
-                        texts.append(extract_pptx_text(p))
-                    elif p is not None and is_epub(p):
-                        fmts.append("epub")
-                        texts.append(extract_epub_text(p))
-                    else:
-                        fmts.append(None)
-                        texts.append(None)
-                yield pd.DataFrame(
-                    {
-                        "fmt": fmts,
-                        "text": texts,
-                        "_src_file": [
-                            p.rsplit("/", 1)[-1] for p in pdf["path"]
-                        ],
-                    }
-                )
-
-        return bins.mapInPandas(
-            _extract_mixed_batches, "fmt string, text string, _src_file string"
+        return payload_stage(
+            scan_files(spark, path, "*"),
+            ["_src_file"],
+            lambda p: [document_text(p)],
+            "fmt string, text string, _src_file string",
         )
     if ext in ("warc", "gz") and (ext == "warc" or path.endswith(".warc.gz")):
         # web-crawl archives (ISO 28500 / the Common Crawl container):
@@ -752,33 +634,6 @@ def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_b
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: Sequence[str],
-    n_buckets: int = 32,
-    sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
-    fmt: str = "parquet",
-) -> None:
-    """Bucketed table sink: pre-shuffles rows into ``n_buckets`` hash
-    buckets on ``bucket_cols`` at WRITE time, so every later join or
-    aggregation on those columns skips its shuffle entirely (Catalyst
-    sees the bucketing and plans a zero-exchange sort-merge join when
-    both sides are bucketed the same way).
-
-    This is the 100 TB pattern for fact tables that are joined on the
-    same key repeatedly: pay the shuffle once at ingest, never again.
-    ``sort_cols`` additionally sorts within buckets, removing the
-    per-task sort from future sort-merge joins. Goes through
-    ``saveAsTable`` — bucketing metadata lives in the session catalog
-    (path-based ``.parquet()`` writes cannot carry it)."""
-    writer = df.write.mode(mode).format(fmt).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
 
 
 def read_csv_audited(

@@ -21,10 +21,17 @@ from __future__ import annotations
 
 import io
 import re
+import tarfile
+import zipfile
 import zlib
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+
+from data_integration_and_harmonization_spark.functions.arrow import (
+    payload_stage,
+    scan_files,
+)
 
 _CRLF2 = b"\r\n\r\n"
 
@@ -289,6 +296,19 @@ def encode_warc(
     return out.getvalue()
 
 
+def _tar_members(payload):
+    try:
+        with tarfile.open(fileobj=io.BytesIO(payload), mode="r:*") as tf:
+            for m in tf:
+                if not m.isfile():
+                    continue
+                fh = tf.extractfile(m)
+                if fh is not None:
+                    yield m.name, fh.read()
+    except (tarfile.TarError, OSError, EOFError):
+        return  # alien or torn archive: keep the members that read
+
+
 def read_tar_corpus(spark: SparkSession, path: str) -> DataFrame:
     """Distributed TAR-archive corpus scan — document dumps commonly
     ship as (optionally gzipped) tarballs of per-document files: one
@@ -298,43 +318,28 @@ def read_tar_corpus(spark: SparkSession, path: str) -> DataFrame:
     — feed payloads to ``operators.text.document_text_table`` (pdf/
     docx/pptx dispatch) or the media codecs. Directories, links and
     torn archives degrade to the members that did read."""
-    import os
-
-    pattern = os.path.join(path, "*.tar*") if os.path.isdir(path) else path
-    bins = (
-        spark.read.format("binaryFile").load(pattern).select("content", "path")
+    return payload_stage(
+        scan_files(spark, path, "*.tar*"),
+        ["_src_file"],
+        _tar_members,
+        "member string, payload binary, _src_file string",
     )
 
-    def batches(it):
-        import io as _io
-        import tarfile
 
-        import pandas as pd
-
-        for pdf in it:
-            members, payloads, srcs = [], [], []
-            for payload, p in zip(pdf["content"], pdf["path"]):
-                src = p.rsplit("/", 1)[-1]
+def _zip_members(payload):
+    try:
+        with zipfile.ZipFile(io.BytesIO(payload)) as zf:
+            for info in zf.infolist():
+                if info.is_dir():
+                    continue
                 try:
-                    with tarfile.open(fileobj=_io.BytesIO(payload), mode="r:*") as tf:
-                        for m in tf:
-                            if not m.isfile():
-                                continue
-                            fh = tf.extractfile(m)
-                            if fh is None:
-                                continue
-                            members.append(m.name)
-                            payloads.append(fh.read())
-                            srcs.append(src)
-                except (tarfile.TarError, OSError, EOFError):
-                    continue  # alien or torn archive
-            yield pd.DataFrame(
-                {"member": members, "payload": payloads, "_src_file": srcs}
-            )
-
-    return bins.mapInPandas(
-        batches, "member string, payload binary, _src_file string"
-    )
+                    data = zf.read(info)
+                except (RuntimeError, OSError, EOFError, zipfile.BadZipFile,
+                        NotImplementedError, zlib.error):
+                    continue  # encrypted or torn member
+                yield info.filename, data
+    except (zipfile.BadZipFile, OSError, EOFError):
+        return  # alien or torn archive: keep the members that read
 
 
 def read_zip_corpus(spark: SparkSession, path: str) -> DataFrame:
@@ -351,46 +356,23 @@ def read_zip_corpus(spark: SparkSession, path: str) -> DataFrame:
     dispatch) or the media codecs. Directory entries, encrypted
     members, and torn/alien archives degrade to the members that did
     read."""
-    import os
-
-    pattern = os.path.join(path, "*.zip") if os.path.isdir(path) else path
-    bins = (
-        spark.read.format("binaryFile").load(pattern).select("content", "path")
+    return payload_stage(
+        scan_files(spark, path, "*.zip"),
+        ["_src_file"],
+        _zip_members,
+        "member string, payload binary, _src_file string",
     )
 
-    def batches(it):
-        import io as _io
-        import zipfile
 
-        import pandas as pd
-
-        for pdf in it:
-            members, payloads, srcs = [], [], []
-            for payload, p in zip(pdf["content"], pdf["path"]):
-                src = p.rsplit("/", 1)[-1]
-                try:
-                    with zipfile.ZipFile(_io.BytesIO(payload)) as zf:
-                        for info in zf.infolist():
-                            if info.is_dir():
-                                continue
-                            try:
-                                data = zf.read(info)
-                            except (RuntimeError, OSError, EOFError,
-                                    zipfile.BadZipFile, NotImplementedError,
-                                    zlib.error):
-                                continue  # encrypted or torn member
-                            members.append(info.filename)
-                            payloads.append(data)
-                            srcs.append(src)
-                except (zipfile.BadZipFile, OSError, EOFError):
-                    continue  # alien or torn archive
-            yield pd.DataFrame(
-                {"member": members, "payload": payloads, "_src_file": srcs}
-            )
-
-    return bins.mapInPandas(
-        batches, "member string, payload binary, _src_file string"
-    )
+def _warc_rows(payload):
+    try:
+        recs = parse_warc_records(payload)
+    except Exception:  # noqa: BLE001 — alien archive
+        return []
+    return [
+        (r["warc_type"], r["url"], r["date"], r["http_content_type"], r["body"], r["text"])
+        for r in recs
+    ]
 
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
@@ -403,46 +385,10 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     entities (feed it to ``html_to_text``), None otherwise.
     Unparseable archives yield the records that did parse; a
     wholly-alien file yields none."""
-    import os
-
-    pattern = (
-        os.path.join(path, "*.warc*") if os.path.isdir(path) else path
-    )
-    bins = (
-        spark.read.format("binaryFile").load(pattern).select("content", "path")
-    )
-
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            rows = {
-                "warc_type": [],
-                "url": [],
-                "date": [],
-                "http_content_type": [],
-                "body": [],
-                "text": [],
-                "_src_file": [],
-            }
-            for payload, p in zip(pdf["content"], pdf["path"]):
-                src = p.rsplit("/", 1)[-1]
-                try:
-                    recs = parse_warc_records(payload)
-                except Exception:  # noqa: BLE001 — alien archive
-                    recs = []
-                for r in recs:
-                    rows["warc_type"].append(r["warc_type"])
-                    rows["url"].append(r["url"])
-                    rows["date"].append(r["date"])
-                    rows["http_content_type"].append(r["http_content_type"])
-                    rows["body"].append(r["body"])
-                    rows["text"].append(r["text"])
-                    rows["_src_file"].append(src)
-            yield pd.DataFrame(rows)
-
-    return bins.mapInPandas(
-        batches,
+    return payload_stage(
+        scan_files(spark, path, "*.warc*"),
+        ["_src_file"],
+        _warc_rows,
         "warc_type string, url string, date string, "
         "http_content_type string, body binary, text string, "
         "_src_file string",

@@ -24,6 +24,11 @@ from xml.etree import ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_integration_and_harmonization_spark.functions.arrow import (
+    payload_stage,
+    scan_files,
+)
+
 
 def _local(tag: str) -> str:
     return tag.rsplit("}", 1)[-1] if "}" in tag else tag
@@ -100,6 +105,13 @@ def parse_mediawiki_pages(payload: bytes) -> list[dict]:
     return out
 
 
+def _page_rows(payload):
+    return [
+        (pg["page_id"], pg["ns"], pg["title"], pg["redirect"], pg["text"])
+        for pg in parse_mediawiki_pages(payload)
+    ]
+
+
 def read_mediawiki(spark: SparkSession, path: str) -> DataFrame:
     """Distributed MediaWiki dump scan: ``binaryFile`` over
     ``*.xml``/``*.xml.bz2``/``*.xml.gz`` part files (one task per
@@ -107,38 +119,10 @@ def read_mediawiki(spark: SparkSession, path: str) -> DataFrame:
     pages. Output one row per page: ``(page_id, ns, title, redirect,
     text, _src_file)`` — filter ``ns = 0 AND redirect IS NULL`` for
     article text. Unparseable parts yield the pages that did parse."""
-    import os
-
-    pattern = os.path.join(path, "*.xml*") if os.path.isdir(path) else path
-    bins = (
-        spark.read.format("binaryFile").load(pattern).select("content", "path")
-    )
-
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            rows = {
-                "page_id": [],
-                "ns": [],
-                "title": [],
-                "redirect": [],
-                "text": [],
-                "_src_file": [],
-            }
-            for payload, p in zip(pdf["content"], pdf["path"]):
-                src = p.rsplit("/", 1)[-1]
-                for pg in parse_mediawiki_pages(payload):
-                    rows["page_id"].append(pg["page_id"])
-                    rows["ns"].append(pg["ns"])
-                    rows["title"].append(pg["title"])
-                    rows["redirect"].append(pg["redirect"])
-                    rows["text"].append(pg["text"])
-                    rows["_src_file"].append(src)
-            yield pd.DataFrame(rows)
-
-    return bins.mapInPandas(
-        batches,
+    return payload_stage(
+        scan_files(spark, path, "*.xml*"),
+        ["_src_file"],
+        _page_rows,
         "page_id long, ns int, title string, redirect string, "
         "text string, _src_file string",
     )

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_integration_and_harmonization_spark.sources import readers as R
+from data_integration_and_harmonization_spark.sources import writers as W
 
 
 @pytest.fixture(scope="module")
@@ -145,8 +146,8 @@ def test_orc_roundtrip(spark, tmpdir):
 def test_bucketed_join_skips_shuffle(spark):
     left = spark.range(0, 1000).selectExpr("id AS k", "id * 2 AS a")
     right = spark.range(0, 1000).selectExpr("id AS k", "id * 3 AS b")
-    R.write_bucketed(left, "bkt_left", ["k"], n_buckets=8, sort_cols=["k"])
-    R.write_bucketed(right, "bkt_right", ["k"], n_buckets=8, sort_cols=["k"])
+    W.write_bucketed(left, "bkt_left", ["k"], 8, sort_cols=["k"])
+    W.write_bucketed(right, "bkt_right", ["k"], 8, sort_cols=["k"])
     # disable broadcast so the planner exercises the bucketed path (at
     # real scale neither side of a fact-fact join is broadcastable;
     # with tiny test tables broadcast would win and bypass bucketing)
@@ -1625,6 +1626,39 @@ def test_pptx_codec_and_front_doors(spark, tmp_path):
         3: ("pptx", "\n\n".join(slides)),
         4: (None, None),
     }
+
+
+def test_document_dispatch_is_one_kernel(spark, tmp_path):
+    """Both document doors classify a payload the same way: a zip that
+    carries an EPUB mimetype AND ppt/presentation.xml is epub (pdf,
+    docx, epub, pptx sniff order) through read_any(fmt='docs') and
+    through document_text_table alike."""
+    import io
+    import zipfile
+
+    from data_integration_and_harmonization_spark.operators.text import (
+        document_text_table,
+    )
+    from data_integration_and_harmonization_spark.sources import docx as D
+    from data_integration_and_harmonization_spark.sources import epub as E
+    from data_integration_and_harmonization_spark.sources.readers import read_any
+
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as out:
+        for part in (E.encode_epub(["book chapter"]), D.encode_pptx(["deck slide"])):
+            with zipfile.ZipFile(io.BytesIO(part)) as z:
+                for info in z.infolist():
+                    out.writestr(info, z.read(info))
+    both = buf.getvalue()
+    assert E.is_epub(both) and D.is_pptx(both)
+
+    d = tmp_path / "bucket"
+    d.mkdir()
+    (d / "both.bin").write_bytes(both)
+    door = [(r["fmt"], r["text"]) for r in read_any(spark, str(d), fmt="docs").collect()]
+    table = spark.createDataFrame([(1, bytearray(both))], "doc_id long, payload binary")
+    op = [(r["fmt"], r["text"]) for r in document_text_table(table).collect()]
+    assert door == op == [("epub", E.extract_epub_text(both))]
 
 
 def test_warc_reader_distributed(spark, tmp_path):
