@@ -6,6 +6,11 @@
                    for genuinely non-SQL-expressible ops; those get the
                    weaker rows-only check).
 
+Both are derived from ``CATALOG``, the one ordered table of
+``(name, builder, oracle_sql)`` rows at the end of this module; each
+builder and its oracle string live in the module whose operators they
+exercise.
+
 Column names are aliased identically on both sides; float outputs are
 rounded to 6 decimals on both sides so the order-insensitive value
 hash is deterministic across engines.
@@ -226,10 +231,10 @@ def _masked_lineitem(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_clean_repair(spark: SparkSession, sf: str) -> DataFrame:
-    # C3 interpolation + C4 ffill in ONE repair pass (merged from r1's
-    # clean_interpolate / clean_ffill — both derive from the same
-    # prev/next anchor windows, so one query halves the bench cost AND
-    # frees a slot under the correctness runner's 50-query cap).
+    # C3 interpolation + C4 ffill in ONE repair pass: both derive from
+    # the same prev/next anchor windows, so one query halves the bench
+    # cost AND takes one slot, not two, under the correctness runner's
+    # 50-query cap.
     # with_global_index output is physically range-partitioned (its
     # index comes from sortWithinPartitions + partition row counters,
     # no window reshuffle) and persisted -> the repair legally skips
@@ -717,10 +722,6 @@ def q_feat_label_encode(spark: SparkSession, sf: str) -> DataFrame:
         .alias("code"),
     )
     return m.unionByName(rows).unionByName(onehot_rows).unionByName(ok_row)
-
-
-def _q_sql_shipping(spark: SparkSession, sf: str) -> DataFrame:
-    return _SQL.correlated_analytics(spark, sf)
 
 
 def q_ml_classification(spark: SparkSession, sf: str) -> DataFrame:
@@ -2516,123 +2517,6 @@ def q_stream_batch_twin(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# Registration order is deliberate: the driver's correctness pass
-# records at most 50 queries in registration order (r1 registered 55
-# and the last 5 were silently untested), so the previously-unchecked
-# and newly-added queries come FIRST and the expensive ML fits come
-# last. The assert below keeps the registry at exactly <= 50.
-_QUERY_ORDER = [
-    # unchecked in r1 (registered past the cap); session+props and
-    # meta+features pairs each merged to one tagged query in r2
-    "events_sessions_props",
-    # r5: mm_frames folded into mm_meta_features as its 'frame' leg;
-    # the freed slot carries the golden-record linkage pipeline
-    "mm_meta_features",
-    "link_golden",
-    # r5: rel_set_ops folded into rel_semi_anti_join (both membership
-    # predicates); the freed slot carries the composed curation funnel
-    "curate_pipeline",
-    # new in r2
-    "text_decontaminate",
-    "text_scrub",
-    "samp_deterministic",
-    "dedup_clusters",
-    "seq_pack",
-    "src_roundtrip",
-    "ml_exact_split",
-    "dedup_lsh_pipeline",
-    "stream_batch_twin",
-    # new in r3: corpus-statistics scoring + embedding transforms
-    "text_bm25_topk",
-    "text_lm_quality",
-    "emb_pool_quantize",
-    # reference core surface
-    "harmonize_union",
-    "clean_coerce",
-    "clean_repair",
-    "clean_cascade",
-    "describe_all",
-    "corr_matrix",
-    "feat_zscore",
-    "feat_label_encode",
-    "sql_shipping_priority",
-    # EDA aggregations
-    "eda_binned",
-    "eda_box_stats",
-    "eda_pair_projection",
-    # relational surface
-    "rel_pricing_summary",
-    "rel_revenue_by_nation",
-    "rel_topk_per_segment",
-    "rel_grouping_sets",
-    "rel_pivot",
-    "rel_semi_anti_join",
-    "rel_distinct_agg",
-    "rel_asof_join",
-    "rel_range_join",
-    "rel_date_breakdown",
-    "rel_running_window",
-    # text / dedup / similarity / events
-    "text_profile",
-    "dedup_exact_fp",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "sim_topk_recall",
-    "sim_ivf_recall",
-    "events_windows",
-    # ML orchestration (expensive distributed fits) last
-    "ml_classification",
-    "ml_regression",
-    "ml_tuned",
-]
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        "harmonize_union": q_harmonize_union,
-        "clean_coerce": q_clean_coerce,
-        "clean_repair": q_clean_repair,
-        "clean_cascade": q_clean_cascade,
-        "describe_all": q_describe_all,
-        "corr_matrix": q_corr_matrix,
-        "feat_zscore": q_feat_zscore,
-        "feat_label_encode": q_feat_label_encode,
-        "ml_classification": q_ml_classification,
-        "ml_regression": q_ml_regression,
-        "ml_tuned": q_ml_tuned,
-        "ml_exact_split": q_ml_exact_split,
-        "src_roundtrip": q_src_roundtrip,
-        "stream_batch_twin": q_stream_batch_twin,
-        "sql_shipping_priority": _q_sql_shipping,
-    }
-    q.update(E.eda_queries())
-    q.update(REL.relational_queries())
-    q.update(TX.text_queries())
-    q.update(DD.dedup_queries())
-    q.update(SIM.similarity_queries())
-    q.update(EV.events_queries())
-    q.update(MM.multimodal_queries())
-    q.update(SAMP.sampling_queries())
-    q.update(PK.packing_queries())
-    q.update(SCRUB.scrub_queries())
-    q.update(SC.scoring_queries())
-    q.update(EMB.embeddings_queries())
-    q.update(LK.linkage_queries())
-    q.update(CUR.curation_queries())
-    # RuntimeError, not assert: these guards protect against the exact
-    # silent-truncation failure r1 hit (driver records only the first
-    # 50 queries), and asserts vanish under ``python -O``.
-    if set(q) != set(_QUERY_ORDER):
-        raise RuntimeError(
-            f"registry drift: extra={sorted(set(q) - set(_QUERY_ORDER))} "
-            f"missing={sorted(set(_QUERY_ORDER) - set(q))}"
-        )
-    if len(_QUERY_ORDER) > 50:
-        raise RuntimeError("driver correctness pass caps at 50 queries")
-    return {name: _guarded(q[name]) for name in _QUERY_ORDER}
-
-
 # ---------------------------------------------------------------- oracles
 
 _MASKED_CTE = """
@@ -3063,9 +2947,8 @@ FROM (
 """
 
 
-def oracle_sql() -> dict[str, str]:
-    o = {
-        "harmonize_union": """
+HARMONIZE_UNION_SQL = (
+    """
 SELECT c_custkey AS cust_key, c_name AS name, c_nationkey AS nation_key,
        c_acctbal AS acct_bal, c_mktsegment AS mktsegment,
        CAST(NULL AS BIGINT) AS supp_key
@@ -3076,10 +2959,12 @@ SELECT CAST(NULL AS BIGINT), s_name, s_nationkey, s_acctbal,
 FROM supplier
 UNION ALL
 """
-        + _schema_match_oracle()
-        + "\nUNION ALL\n"
-        + _integration_funnel_oracle(),
-        "clean_coerce": f"""
+    + _schema_match_oracle()
+    + "\nUNION ALL\n"
+    + _integration_funnel_oracle()
+)
+
+CLEAN_COERCE_SQL = f"""
 SELECT l_orderkey, l_linenumber,
   CASE WHEN l_linenumber = 1 THEN NULL
        WHEN l_linenumber = 2 THEN NULL
@@ -3113,9 +2998,11 @@ FROM (
     )
   )
 )
-""",
-        "clean_repair": _MASKED_CTE
-        + """
+"""
+
+CLEAN_REPAIR_SQL = (
+    _MASKED_CTE
+    + """
 SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
   round(CASE WHEN v IS NOT NULL THEN v
              WHEN pv IS NOT NULL AND nv IS NOT NULL
@@ -3123,8 +3010,10 @@ SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
              ELSE coalesce(pv, nv) END, 6) AS v_interp,
   round(CASE WHEN v IS NOT NULL THEN v ELSE pv END, 6) AS v_fill
 FROM w
-""",
-        "src_roundtrip": r"""
+"""
+)
+
+SRC_ROUNDTRIP_SQL = r"""
 WITH src AS (
   SELECT l_returnflag, l_quantity, CAST(NULL AS BIGINT) AS n_nationkey,
          CAST(NULL AS BIGINT) AS r_regionkey
@@ -3450,8 +3339,9 @@ FROM (SELECT r_regionkey,
              ELSE 'Region (' || r_name || ')' || chr(10) ||
                   'key & ' || r_regionkey END AS txt
       FROM region)
-""",
-        "ml_exact_split": """
+"""
+
+ML_EXACT_SPLIT_SQL = """
 WITH ranked AS (
   SELECT l_quantity,
          (row_number() OVER (
@@ -3482,16 +3372,20 @@ UNION ALL
 SELECT 'fold_ok', 0::BIGINT,
        (SELECT count(DISTINCT l_orderkey) FROM lineitem)::BIGINT,
        CAST(NULL AS DOUBLE)
-""",
-        "clean_cascade": """
+"""
+
+CLEAN_CASCADE_SQL = """
 SELECT c_custkey,
        CAST(c_nationkey AS DOUBLE) AS c_nationkey,
        CAST(c_acctbal AS DOUBLE) AS c_acctbal
 FROM customer
-""",
-        "describe_all": _describe_all_oracle(),
-        "corr_matrix": _corr_matrix_oracle(),
-        "feat_zscore": f"""
+"""
+
+DESCRIBE_ALL_SQL = _describe_all_oracle()
+
+CORR_MATRIX_SQL = _corr_matrix_oracle()
+
+FEAT_ZSCORE_SQL = f"""
 -- scaler family: z-score (pop std), RobustScaler (median/IQR with
 -- quantile_cont == Spark's exact interpolated percentile) and
 -- MinMaxScaler, all as window-free global stats
@@ -3539,8 +3433,9 @@ SELECT l_orderkey, l_linenumber,
   -- within n/accuracy of the target rank) on both columns
   1::BIGINT AS ra_ok
 FROM lineitem JOIN c ON lineitem.l_returnflag = c.f, s
-""",
-        "feat_label_encode": """
+"""
+
+FEAT_LABEL_ENCODE_SQL = """
 SELECT 'map' AS kind, value AS key, (row_number() OVER (ORDER BY value) - 1)::BIGINT AS code
 FROM (SELECT DISTINCT coalesce(CAST(c_mktsegment AS VARCHAR), 'nan') AS value FROM customer)
 UNION ALL
@@ -3557,19 +3452,15 @@ UNION ALL
 SELECT 'onehot_ok', '*',
        (CASE WHEN (SELECT count(*) FROM customer WHERE c_mktsegment IS NULL) = 0
              THEN 1 ELSE 0 END)::BIGINT
-""",
-        # ONE ANSI text, two engines: the oracle executes the exact
-        # string Catalyst parses (plans/sql.py CORRELATED_SQL) — Q3
-        # plus the correlated-subquery decorrelation family
-        # (Q17 scalar-correlated, Q4 EXISTS, Q22 NOT EXISTS + scalar).
-        "sql_shipping_priority": _SQL.CORRELATED_SQL,
-        # Each streaming path must reproduce its batch twin exactly,
-        # so every agreement summary is itself SQL-derivable:
-        # n_windows = n_agree = the batch-side group count per leg,
-        # and every group agrees. A dropped/duplicated/mis-aggregated
-        # window, a missed/phantom dedup key, or a wrong carried state
-        # in the streaming path breaks the hash match.
-        "stream_batch_twin": """
+"""
+
+# Each streaming path must reproduce its batch twin exactly,
+# so every agreement summary is itself SQL-derivable:
+# n_windows = n_agree = the batch-side group count per leg,
+# and every group agrees. A dropped/duplicated/mis-aggregated
+# window, a missed/phantom dedup key, or a wrong carried state
+# in the streaming path breaks the hash match.
+STREAM_BATCH_TWIN_SQL = """
 SELECT 'tumbling' AS kind, count(*)::BIGINT AS n_windows,
        count(*)::BIGINT AS n_agree, true AS all_agree
 FROM (
@@ -3646,20 +3537,96 @@ UNION ALL
 -- executor-side in pyarrow) — append-only table, so the cumulative
 -- feed is exactly one 'added' row per event, compared key-for-key
 SELECT 'cdf_feed', count(*)::BIGINT, count(*)::BIGINT, true FROM events
-""",
-    }
-    o.update(E.eda_oracles())
-    o.update(REL.relational_oracles())
-    o.update(TX.text_oracles())
-    o.update(DD.dedup_oracles())
-    o.update(SIM.similarity_oracles())
-    o.update(EV.events_oracles())
-    o.update(MM.multimodal_oracles())
-    o.update(SAMP.sampling_oracles())
-    o.update(PK.packing_oracles())
-    o.update(SCRUB.scrub_oracles())
-    o.update(SC.scoring_oracles())
-    o.update(EMB.embeddings_oracles())
-    o.update(LK.linkage_oracles())
-    o.update(CUR.curation_oracles())
-    return o
+"""
+
+
+# ---------------------------------------------------------------- catalog
+
+# One row per query: (name, builder, DuckDB oracle SQL). The oracle is
+# None only for the three ML fits, which get the weaker rows-only check.
+# Row order is registration order, and it is deliberate: the correctness
+# runner records at most 50 queries in registration order (r1 registered
+# 55 and the last 5 were silently untested), so the previously-unchecked
+# and newly-added queries come FIRST and the expensive ML fits come last.
+CATALOG: tuple[tuple[str, Callable[[SparkSession, str], DataFrame], str | None], ...] = (
+    # unchecked in r1 (registered past the cap); session+props and
+    # meta+features pairs each merged to one tagged query in r2
+    ("events_sessions_props", EV.q_events_sessions_props, EV.EVENTS_SESSIONS_PROPS_SQL),
+    # r5: mm_frames folded into mm_meta_features as its 'frame' leg;
+    # the freed slot carries the golden-record linkage pipeline
+    ("mm_meta_features", MM.q_mm_meta_features, MM.MM_META_FEATURES_SQL),
+    ("link_golden", LK.q_link_golden, LK.LINK_GOLDEN_SQL),
+    # r5: rel_set_ops folded into rel_semi_anti_join (both membership
+    # predicates); the freed slot carries the composed curation funnel
+    ("curate_pipeline", CUR.q_curate_pipeline, CUR.CURATE_PIPELINE_SQL),
+    # new in r2
+    ("text_decontaminate", SCRUB.q_text_decontaminate, SCRUB.TEXT_DECONTAMINATE_SQL),
+    ("text_scrub", SCRUB.q_text_scrub, SCRUB.TEXT_SCRUB_SQL),
+    ("samp_deterministic", SAMP.q_samp_deterministic, SAMP.SAMP_DETERMINISTIC_SQL),
+    ("dedup_clusters", DD.q_dedup_clusters, DD.DEDUP_CLUSTERS_SQL),
+    ("seq_pack", PK.q_seq_pack, PK.SEQ_PACK_SQL),
+    ("src_roundtrip", q_src_roundtrip, SRC_ROUNDTRIP_SQL),
+    ("ml_exact_split", q_ml_exact_split, ML_EXACT_SPLIT_SQL),
+    ("dedup_lsh_pipeline", DD.q_dedup_lsh_pipeline, DD.DEDUP_LSH_PIPELINE_SQL),
+    ("stream_batch_twin", q_stream_batch_twin, STREAM_BATCH_TWIN_SQL),
+    # new in r3: corpus-statistics scoring + embedding transforms
+    ("text_bm25_topk", SC.q_text_bm25_topk, SC.TEXT_BM25_TOPK_SQL),
+    ("text_lm_quality", SC.q_text_lm_quality, SC.TEXT_LM_QUALITY_SQL),
+    ("emb_pool_quantize", EMB.q_emb_pool_quantize, EMB.EMB_POOL_QUANTIZE_SQL),
+    # reference core surface
+    ("harmonize_union", q_harmonize_union, HARMONIZE_UNION_SQL),
+    ("clean_coerce", q_clean_coerce, CLEAN_COERCE_SQL),
+    ("clean_repair", q_clean_repair, CLEAN_REPAIR_SQL),
+    ("clean_cascade", q_clean_cascade, CLEAN_CASCADE_SQL),
+    ("describe_all", q_describe_all, DESCRIBE_ALL_SQL),
+    ("corr_matrix", q_corr_matrix, CORR_MATRIX_SQL),
+    ("feat_zscore", q_feat_zscore, FEAT_ZSCORE_SQL),
+    ("feat_label_encode", q_feat_label_encode, FEAT_LABEL_ENCODE_SQL),
+    # ONE ANSI text, two engines: the oracle executes the exact
+    # string Catalyst parses (plans/sql.py CORRELATED_SQL) — Q3
+    # plus the correlated-subquery decorrelation family
+    # (Q17 scalar-correlated, Q4 EXISTS, Q22 NOT EXISTS + scalar).
+    ("sql_shipping_priority", _SQL.correlated_analytics, _SQL.CORRELATED_SQL),
+    # EDA aggregations
+    ("eda_binned", E.q_eda_binned, E.EDA_BINNED_SQL),
+    ("eda_box_stats", E.q_eda_box_stats, E.EDA_BOX_STATS_SQL),
+    ("eda_pair_projection", E.q_eda_pair_projection, E.EDA_PAIR_PROJECTION_SQL),
+    # relational surface
+    ("rel_pricing_summary", REL.q_rel_pricing_summary, REL.REL_PRICING_SUMMARY_SQL),
+    ("rel_revenue_by_nation", REL.q_rel_revenue_by_nation, REL.REL_REVENUE_BY_NATION_SQL),
+    ("rel_topk_per_segment", REL.q_rel_topk_per_segment, REL.REL_TOPK_PER_SEGMENT_SQL),
+    ("rel_grouping_sets", REL.q_rel_grouping_sets, REL.REL_GROUPING_SETS_SQL),
+    ("rel_pivot", REL.q_rel_pivot, REL.REL_PIVOT_SQL),
+    ("rel_semi_anti_join", REL.q_rel_semi_anti_join, REL.REL_SEMI_ANTI_JOIN_SQL),
+    ("rel_distinct_agg", REL.q_rel_distinct_agg, REL.REL_DISTINCT_AGG_SQL),
+    ("rel_asof_join", REL.q_rel_asof_join, REL.REL_ASOF_JOIN_SQL),
+    ("rel_range_join", REL.q_rel_range_join, REL.REL_RANGE_JOIN_SQL),
+    ("rel_date_breakdown", REL.q_rel_date_breakdown, REL.REL_DATE_BREAKDOWN_SQL),
+    ("rel_running_window", REL.q_rel_running_window, REL.REL_RUNNING_WINDOW_SQL),
+    # text / dedup / similarity / events
+    ("text_profile", TX.q_text_profile, TX.TEXT_PROFILE_SQL),
+    ("dedup_exact_fp", DD.q_dedup_exact_fp, DD.DEDUP_EXACT_FP_SQL),
+    ("dedup_ngram_jaccard", DD.q_dedup_ngram_jaccard, DD.DEDUP_NGRAM_JACCARD_SQL),
+    ("dedup_simhash", DD.q_dedup_simhash, DD.DEDUP_SIMHASH_SQL),
+    ("dedup_embedding_cosine", DD.q_dedup_embedding_cosine, DD.DEDUP_EMBEDDING_COSINE_SQL),
+    ("sim_topk_recall", SIM.q_sim_topk_recall, SIM.SIM_TOPK_RECALL_SQL),
+    ("sim_ivf_recall", SIM.q_sim_ivf_recall, SIM.SIM_IVF_RECALL_SQL),
+    ("events_windows", EV.q_events_windows, EV.EVENTS_WINDOWS_SQL),
+    # ML orchestration (expensive distributed fits) last
+    ("ml_classification", q_ml_classification, None),
+    ("ml_regression", q_ml_regression, None),
+    ("ml_tuned", q_ml_tuned, None),
+)
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    # RuntimeError, not assert: this guard protects against the exact
+    # silent-truncation failure r1 hit (the correctness runner records
+    # only the first 50 queries), and asserts vanish under ``python -O``.
+    if len(CATALOG) > 50:
+        raise RuntimeError("driver correctness pass caps at 50 queries")
+    return {n: _guarded(b) for n, b, _ in CATALOG}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {n: o for n, _, o in CATALOG if o is not None}

@@ -24,8 +24,6 @@ Five levels, cheapest first; each is the standard scale architecture:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -34,7 +32,7 @@ from data_integration_and_harmonization_spark.functions import stores
 from data_integration_and_harmonization_spark.functions.arrow import payload_stage
 from data_integration_and_harmonization_spark.functions.concurrency import overlap
 from data_integration_and_harmonization_spark.operators import graph as _graph
-from data_integration_and_harmonization_spark.operators.text import normalized, tokens
+from data_integration_and_harmonization_spark.operators.text import TOKEN_RE, normalized, tokens
 
 # minhash: h_i(x) = (a_i * base(x) + b_i) mod p — classic affine
 # permutation family over a Mersenne prime. ``base`` is the shingle
@@ -1602,676 +1600,671 @@ def semantic_dedup(
     )
 
 
-# ------------------------------------------------------- query registry
+# ------------------------------------------------------- queries and oracles
 
-def dedup_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    def q_exact_fp(spark, sf):
-        # exact + normalized-fingerprint dedup in one tagged result
-        # (merged from r1's dedup_exact / dedup_fingerprint — the
-        # driver's correctness pass records at most 50 queries, so
-        # same-shaped operators share an entry), plus the
-        # incremental_exact_dedup two-batch admit sequence as
-        # 'inc1'/'inc2' legs: the even-keyed half is admitted first,
-        # then the odd half runs against the persisted fingerprint
-        # store — batch-2 survivors are exactly the odd fingerprints
-        # never seen in batch 1, which the oracle replays as a
-        # groupBy + anti-join. The per-call store (under the process
-        # scratch root, reaped at exit) keeps repeated invocations
-        # (bench warm passes) independent; n_copies is null for the
-        # inc legs (survivor rows, not group counts).
-        #
-        # 'diff_added'/'diff_removed'/'diff_changed' legs: snapshot_diff
-        # between two deterministic corpus versions — old drops ids
-        # with doc_id % 11 == 3 (so those classify 'added'), new drops
-        # doc_id % 7 == 0 ('removed') and rewrites the text of
-        # doc_id % 5 == 0 survivors ('changed'). The oracle replays the
-        # same two snapshots and the same full-outer fp compare in SQL.
-        from data_integration_and_harmonization_spark.functions.caching import (
-            scratch_dir,
+def q_dedup_exact_fp(spark: SparkSession, sf: str) -> DataFrame:
+    # exact + normalized-fingerprint dedup in one tagged result
+    # (merged from r1's dedup_exact / dedup_fingerprint — the
+    # driver's correctness pass records at most 50 queries, so
+    # same-shaped operators share an entry), plus the
+    # incremental_exact_dedup two-batch admit sequence as
+    # 'inc1'/'inc2' legs: the even-keyed half is admitted first,
+    # then the odd half runs against the persisted fingerprint
+    # store — batch-2 survivors are exactly the odd fingerprints
+    # never seen in batch 1, which the oracle replays as a
+    # groupBy + anti-join. The per-call store (under the process
+    # scratch root, reaped at exit) keeps repeated invocations
+    # (bench warm passes) independent; n_copies is null for the
+    # inc legs (survivor rows, not group counts).
+    #
+    # 'diff_added'/'diff_removed'/'diff_changed' legs: snapshot_diff
+    # between two deterministic corpus versions — old drops ids
+    # with doc_id % 11 == 3 (so those classify 'added'), new drops
+    # doc_id % 7 == 0 ('removed') and rewrites the text of
+    # doc_id % 5 == 0 survivors ('changed'). The oracle replays the
+    # same two snapshots and the same full-outer fp compare in SQL.
+    from data_integration_and_harmonization_spark.functions.caching import (
+        scratch_dir,
+    )
+
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    e = exact_dedup(docs).select(
+        F.lit("exact").alias("kind"),
+        F.col("text_fp").alias("fp"),
+        "n_copies",
+        "keep_id",
+    )
+    fp = fingerprint_dedup(docs).select(
+        F.lit("normalized").alias("kind"), "fp", "n_copies", "keep_id"
+    )
+    # 'cdfnd' leg (r12): the CDF-DRIVEN maintenance consumer
+    # (stream_cdf_neardedup_maintenance, the signature store's
+    # sibling of the profile consumer) checked VALUE-FOR-VALUE:
+    # the 20% subset (doc_id % 5 == 0) is committed as TWO
+    # manifest versions (even ids, then odd ids) and ONE
+    # availableNow drain catches up across both — a true
+    # multi-version drain, one micro-batch admit. Each leg row is
+    # a stored signature with fp = md5 of the rendered sig array,
+    # so the ORACLE pins the streamed store's full content (ids
+    # AND all 32 minima) by replaying the subset admit with the
+    # 'c_'-prefixed CTE chain — no Spark-side batch twin needed.
+    # Sequential drains / history hits / tag replay are pinned by
+    # tests/test_streaming.py. The chain runs on a DRIVER THREAD
+    # so its streaming fixed costs overlap the main sequence's
+    # store builds (independent stores — no ordering between the
+    # chains).
+    def _cdfnd_chain():
+        import os as _os
+
+        from data_integration_and_harmonization_spark.functions.stores import (
+            complete_batches,
+        )
+        from data_integration_and_harmonization_spark.sources.cdf_stream import (
+            stream_cdf_neardedup_maintenance,
+        )
+        from data_integration_and_harmonization_spark.sources.manifest import (
+            commit_files,
+            commit_version,
+            read_manifest,
+        )
+        from data_integration_and_harmonization_spark.sources.writers import (
+            list_data_files,
         )
 
-        docs = spark.read.parquet(f"{sf}/documents.parquet")
-        e = exact_dedup(docs).select(
-            F.lit("exact").alias("kind"),
-            F.col("text_fp").alias("fp"),
-            "n_copies",
-            "keep_id",
+        sub = docs.where(F.col("doc_id") % 5 == 0).select("doc_id", "text")
+        cb = scratch_dir("cdfnd")
+        root = _os.path.join(cb, "tbl")
+        s_stream = _os.path.join(cb, "store")
+        ckpt = _os.path.join(cb, "ckpt")
+        d1 = _os.path.join(cb, "d1")
+        d2 = _os.path.join(cb, "d2")
+        sub.where(F.col("doc_id") % 2 == 0).write.parquet(d1)
+        commit_version(spark, root, d1, note="even")
+        sub.where(F.col("doc_id") % 2 == 1).write.parquet(d2)
+        commit_files(
+            spark,
+            root,
+            read_manifest(spark, root)["files"]
+            + [{"path": p, "bytes": b} for p, b in list_data_files(spark, d2)],
+            note="odd",
         )
-        fp = fingerprint_dedup(docs).select(
-            F.lit("normalized").alias("kind"), "fp", "n_copies", "keep_id"
+        stream_cdf_neardedup_maintenance(
+            spark, root, s_stream, ckpt, threshold=0.5, hash_family="md5"
         )
-        # 'cdfnd' leg (r12): the CDF-DRIVEN maintenance consumer
-        # (stream_cdf_neardedup_maintenance, the signature store's
-        # sibling of the profile consumer) checked VALUE-FOR-VALUE:
-        # the 20% subset (doc_id % 5 == 0) is committed as TWO
-        # manifest versions (even ids, then odd ids) and ONE
-        # availableNow drain catches up across both — a true
-        # multi-version drain, one micro-batch admit. Each leg row is
-        # a stored signature with fp = md5 of the rendered sig array,
-        # so the ORACLE pins the streamed store's full content (ids
-        # AND all 32 minima) by replaying the subset admit with the
-        # 'c_'-prefixed CTE chain — no Spark-side batch twin needed.
-        # Sequential drains / history hits / tag replay are pinned by
-        # tests/test_streaming.py. The chain runs on a DRIVER THREAD
-        # so its streaming fixed costs overlap the main sequence's
-        # store builds (independent stores — no ordering between the
-        # chains).
-        def _cdfnd_chain():
-            import os as _os
-
-            from data_integration_and_harmonization_spark.functions.stores import (
-                complete_batches,
-            )
-            from data_integration_and_harmonization_spark.sources.cdf_stream import (
-                stream_cdf_neardedup_maintenance,
-            )
-            from data_integration_and_harmonization_spark.sources.manifest import (
-                commit_files,
-                commit_version,
-                read_manifest,
-            )
-            from data_integration_and_harmonization_spark.sources.writers import (
-                list_data_files,
-            )
-
-            sub = docs.where(F.col("doc_id") % 5 == 0).select("doc_id", "text")
-            cb = scratch_dir("cdfnd")
-            root = _os.path.join(cb, "tbl")
-            s_stream = _os.path.join(cb, "store")
-            ckpt = _os.path.join(cb, "ckpt")
-            d1 = _os.path.join(cb, "d1")
-            d2 = _os.path.join(cb, "d2")
-            sub.where(F.col("doc_id") % 2 == 0).write.parquet(d1)
-            commit_version(spark, root, d1, note="even")
-            sub.where(F.col("doc_id") % 2 == 1).write.parquet(d2)
-            commit_files(
-                spark,
-                root,
-                read_manifest(spark, root)["files"]
-                + [{"path": p, "bytes": b} for p, b in list_data_files(spark, d2)],
-                note="odd",
-            )
-            stream_cdf_neardedup_maintenance(
-                spark, root, s_stream, ckpt, threshold=0.5, hash_family="md5"
-            )
-            streamed = spark.read.parquet(
-                *[f"{p}/sigs" for p in complete_batches(spark, s_stream)]
-            )
-            return streamed.select(
-                F.lit("cdfnd").alias("kind"),
-                F.md5(
-                    F.array_join(
-                        F.transform("sig", lambda x: x.cast("string")), ","
-                    )
-                ).alias("fp"),
-                F.lit(None).cast("long").alias("n_copies"),
-                F.col("id").alias("keep_id"),
-            )
-
-        # r13 threaded the exact chain alongside the near chain and
-        # REVERTED it (then: 13.4 s sequential vs 14.5 s threaded —
-        # the near chain was wall-to-wall 32-wide stages). r14 cut the
-        # near chain's sequential actions (post-write emptiness probe,
-        # threaded history-key probe), which re-opened scheduler gaps;
-        # a fresh interleaved A/B (min-of-5, same process) now reads
-        # threaded 11.1 s vs sequential 11.4 s min (12.0 vs 13.4
-        # median), so the exact chain rides a driver thread again,
-        # next to the CDF drain.
-        def _exact_chain():
-            store = scratch_dir("fp_store") + "/store"
-            eb1 = incremental_exact_dedup(docs.where(F.col("doc_id") % 2 == 0), store)
-            eb2 = incremental_exact_dedup(docs.where(F.col("doc_id") % 2 == 1), store)
-            return eb1, eb2
-
-        # 'nd1'/'nd2' legs: the NEAR-dup admit sequence
-        # (incremental_near_dedup) over the same even/odd batches —
-        # signature-store matching (banded LSH + estimated Jaccard at
-        # 0.5), md5 family so the oracle replays signatures, in-batch
-        # components, and history hits bit-for-bit.
-        def _near_chain():
-            nd_store = scratch_dir("nd_store") + "/store"
-            n1 = incremental_near_dedup(
-                docs.where(F.col("doc_id") % 2 == 0), nd_store,
-                threshold=0.5, hash_family="md5",
-            )
-            n2 = incremental_near_dedup(
-                docs.where(F.col("doc_id") % 2 == 1), nd_store,
-                threshold=0.5, hash_family="md5",
-            )
-            return n1, n2
-
-        cdfnd, (b1, b2), (n1, n2) = overlap(_cdfnd_chain, _exact_chain, _near_chain)
-
-        def inc_rows(b: DataFrame, kind: str) -> DataFrame:
-            # same null-text sentinel the store uses, so a null-text
-            # survivor reports the fingerprint it was admitted under
-            return b.select(
-                F.lit(kind).alias("kind"),
-                F.coalesce(F.md5("text"), F.lit("__null_text__")).alias("fp"),
-                F.lit(None).cast("long").alias("n_copies"),
-                F.col("doc_id").alias("keep_id"),
-            )
-
-        v_old = docs.where(F.col("doc_id") % 11 != 3)
-        v_new = docs.where(F.col("doc_id") % 7 != 0).withColumn(
-            "text",
-            F.when(
-                F.col("doc_id") % 5 == 0, F.concat(F.col("text"), F.lit("!"))
-            ).otherwise(F.col("text")),
+        streamed = spark.read.parquet(
+            *[f"{p}/sigs" for p in complete_batches(spark, s_stream)]
         )
-        diff = snapshot_diff(v_old, v_new).select(
-            F.concat(F.lit("diff_"), F.col("status")).alias("kind"),
-            F.coalesce("new_fp", "old_fp").alias("fp"),
+        return streamed.select(
+            F.lit("cdfnd").alias("kind"),
+            F.md5(
+                F.array_join(
+                    F.transform("sig", lambda x: x.cast("string")), ","
+                )
+            ).alias("fp"),
             F.lit(None).cast("long").alias("n_copies"),
             F.col("id").alias("keep_id"),
         )
 
-        return (
-            e.unionByName(fp)
-            .unionByName(inc_rows(b1, "inc1"))
-            .unionByName(inc_rows(b2, "inc2"))
-            .unionByName(inc_rows(n1, "nd1"))
-            .unionByName(inc_rows(n2, "nd2"))
-            .unionByName(cdfnd)
-            .unionByName(diff)
+    # r13 threaded the exact chain alongside the near chain and
+    # REVERTED it (then: 13.4 s sequential vs 14.5 s threaded —
+    # the near chain was wall-to-wall 32-wide stages). r14 cut the
+    # near chain's sequential actions (post-write emptiness probe,
+    # threaded history-key probe), which re-opened scheduler gaps;
+    # a fresh interleaved A/B (min-of-5, same process) now reads
+    # threaded 11.1 s vs sequential 11.4 s min (12.0 vs 13.4
+    # median), so the exact chain rides a driver thread again,
+    # next to the CDF drain.
+    def _exact_chain():
+        store = scratch_dir("fp_store") + "/store"
+        eb1 = incremental_exact_dedup(docs.where(F.col("doc_id") % 2 == 0), store)
+        eb2 = incremental_exact_dedup(docs.where(F.col("doc_id") % 2 == 1), store)
+        return eb1, eb2
+
+    # 'nd1'/'nd2' legs: the NEAR-dup admit sequence
+    # (incremental_near_dedup) over the same even/odd batches —
+    # signature-store matching (banded LSH + estimated Jaccard at
+    # 0.5), md5 family so the oracle replays signatures, in-batch
+    # components, and history hits bit-for-bit.
+    def _near_chain():
+        nd_store = scratch_dir("nd_store") + "/store"
+        n1 = incremental_near_dedup(
+            docs.where(F.col("doc_id") % 2 == 0), nd_store,
+            threshold=0.5, hash_family="md5",
+        )
+        n2 = incremental_near_dedup(
+            docs.where(F.col("doc_id") % 2 == 1), nd_store,
+            threshold=0.5, hash_family="md5",
+        )
+        return n1, n2
+
+    cdfnd, (b1, b2), (n1, n2) = overlap(_cdfnd_chain, _exact_chain, _near_chain)
+
+    def inc_rows(b: DataFrame, kind: str) -> DataFrame:
+        # same null-text sentinel the store uses, so a null-text
+        # survivor reports the fingerprint it was admitted under
+        return b.select(
+            F.lit(kind).alias("kind"),
+            F.coalesce(F.md5("text"), F.lit("__null_text__")).alias("fp"),
+            F.lit(None).cast("long").alias("n_copies"),
+            F.col("doc_id").alias("keep_id"),
         )
 
-    def q_jaccard(spark, sf):
-        # Oracle-checked on a deterministic 20% subset (the all-pairs
-        # form is the semantics demo; the scale path is the
-        # lsh_verified_pairs stage of dedup_lsh_pipeline below).
-        docs = spark.read.parquet(f"{sf}/documents.parquet").where(
-            F.col("doc_id") % 5 == 0
-        )
-        return (
-            ngram_jaccard_pairs(docs, threshold=0.0)
-            .orderBy(F.desc("jaccard"), "id_a", "id_b")
-            .limit(200)
+    v_old = docs.where(F.col("doc_id") % 11 != 3)
+    v_new = docs.where(F.col("doc_id") % 7 != 0).withColumn(
+        "text",
+        F.when(
+            F.col("doc_id") % 5 == 0, F.concat(F.col("text"), F.lit("!"))
+        ).otherwise(F.col("text")),
+    )
+    diff = snapshot_diff(v_old, v_new).select(
+        F.concat(F.lit("diff_"), F.col("status")).alias("kind"),
+        F.coalesce("new_fp", "old_fp").alias("fp"),
+        F.lit(None).cast("long").alias("n_copies"),
+        F.col("id").alias("keep_id"),
+    )
+
+    return (
+        e.unionByName(fp)
+        .unionByName(inc_rows(b1, "inc1"))
+        .unionByName(inc_rows(b2, "inc2"))
+        .unionByName(inc_rows(n1, "nd1"))
+        .unionByName(inc_rows(n2, "nd2"))
+        .unionByName(cdfnd)
+        .unionByName(diff)
+    )
+
+
+def q_dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
+    # Oracle-checked on a deterministic 20% subset (the all-pairs
+    # form is the semantics demo; the scale path is the
+    # lsh_verified_pairs stage of dedup_lsh_pipeline below).
+    docs = spark.read.parquet(f"{sf}/documents.parquet").where(
+        F.col("doc_id") % 5 == 0
+    )
+    return (
+        ngram_jaccard_pairs(docs, threshold=0.0)
+        .orderBy(F.desc("jaccard"), "id_a", "id_b")
+        .limit(200)
+    )
+
+
+def q_dedup_lsh_pipeline(spark: SparkSession, sf: str) -> DataFrame:
+    # the banded candidate graph AND the Jaccard-verified pair set
+    # in one tagged entry (candidate rows val=n_shared_bands,
+    # verified rows val=jaccard). md5 hash family => both stages
+    # are reproduced by the DuckDB oracle pair-for-pair (murmur3
+    # stays the scale default in the API).
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    cand = minhash_lsh_candidates(docs, hash_family="md5").select(
+        F.lit("candidate").alias("kind"),
+        "id_a",
+        "id_b",
+        F.col("n_shared_bands").cast("double").alias("val"),
+    )
+    ver = lsh_verified_pairs(docs, threshold=0.5, hash_family="md5").select(
+        F.lit("verified").alias("kind"), "id_a", "id_b", F.col("jaccard").alias("val")
+    )
+    return cand.unionByName(ver)
+
+
+def q_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
+    """Three tagged graph-family legs through one hash-matched result:
+
+    - kind='doc': LSH-propose -> Jaccard-verify -> connected
+      components over documents (md5 family => the component
+      assignment is checked node-for-node by a recursive-CTE
+      oracle);
+    - kind='er': entity resolution over customer records —
+      blocked (nation, mktsegment) Levenshtein<=1 name linkage
+      resolved by the same connected-components operator, the
+      classic record-linkage pipeline (operators/linkage.py);
+    - kind='pr': 5-iteration PageRank over the co-purchase part
+      graph (operators/graph.py) — the engine's second iterative
+      graph algorithm; rank rides as parts-per-billion in
+      cluster_id, replayed node-for-node by an unrolled 5-CTE
+      oracle.
+    """
+    from data_integration_and_harmonization_spark.operators.graph import (
+        pagerank_ppb_leg,
+        triangle_counts,
+    )
+    from data_integration_and_harmonization_spark.operators.linkage import (
+        resolve_entities,
+    )
+
+    from data_integration_and_harmonization_spark.functions.caching import (
+        track,
+    )
+
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    # persisted ONCE for its two consumers (the components chain
+    # materializes it; the triangle leg's serve action then reads
+    # the cache instead of re-running the whole LSH propose+verify
+    # pipeline — r13: the tri leg was the query's slowest served
+    # leg, 1.0 s of pure recompute)
+    pairs = track(
+        lsh_verified_pairs(docs, threshold=0.5, hash_family="md5").persist()
+    )
+
+    # r13 optimization (guide §2.6): the three build-side chains —
+    # doc components (persist/count/collect), ER blocking +
+    # components, and the 5-round PageRank loop (3 counts + 5
+    # eager checkpoints) — are independent lineages; sequentially
+    # each runs many short, low-parallelism jobs. Concurrent
+    # driver threads let the scheduler back-fill; per-chain
+    # results are unchanged (each is deterministic in isolation).
+    def _doc_chain():
+        return duplicate_clusters(pairs).select(
+            F.lit("doc").alias("kind"), "id", "cluster_id"
         )
 
-    def q_lsh_pipeline(spark, sf):
-        # the banded candidate graph AND the Jaccard-verified pair set
-        # in one tagged entry (candidate rows val=n_shared_bands,
-        # verified rows val=jaccard). md5 hash family => both stages
-        # are reproduced by the DuckDB oracle pair-for-pair (murmur3
-        # stays the scale default in the API).
-        docs = spark.read.parquet(f"{sf}/documents.parquet")
-        cand = minhash_lsh_candidates(docs, hash_family="md5").select(
-            F.lit("candidate").alias("kind"),
-            "id_a",
-            "id_b",
-            F.col("n_shared_bands").cast("double").alias("val"),
-        )
-        ver = lsh_verified_pairs(docs, threshold=0.5, hash_family="md5").select(
-            F.lit("verified").alias("kind"), "id_a", "id_b", F.col("jaccard").alias("val")
-        )
-        return cand.unionByName(ver)
+    def _er_chain():
+        cust = spark.read.parquet(f"{sf}/customer.parquet")
+        return resolve_entities(
+            cust,
+            id_col="c_custkey",
+            name_col="c_name",
+            block_cols=["c_nationkey", "c_mktsegment"],
+            max_edit=1,
+        ).select(F.lit("er").alias("kind"), "id", "cluster_id")
 
-    def q_clusters(spark, sf):
-        """Three tagged graph-family legs through one hash-matched result:
+    def _pr_chain():
+        return pagerank_ppb_leg(spark.read.parquet(f"{sf}/lineitem.parquet"))
 
-        - kind='doc': LSH-propose -> Jaccard-verify -> connected
-          components over documents (md5 family => the component
-          assignment is checked node-for-node by a recursive-CTE
-          oracle);
-        - kind='er': entity resolution over customer records —
-          blocked (nation, mktsegment) Levenshtein<=1 name linkage
-          resolved by the same connected-components operator, the
-          classic record-linkage pipeline (operators/linkage.py);
-        - kind='pr': 5-iteration PageRank over the co-purchase part
-          graph (operators/graph.py) — the engine's second iterative
-          graph algorithm; rank rides as parts-per-billion in
-          cluster_id, replayed node-for-node by an unrolled 5-CTE
-          oracle.
-        """
-        from data_integration_and_harmonization_spark.operators.graph import (
-            pagerank_ppb_leg,
-            triangle_counts,
-        )
-        from data_integration_and_harmonization_spark.operators.linkage import (
-            resolve_entities,
-        )
-
-        from data_integration_and_harmonization_spark.functions.caching import (
-            track,
-        )
-
-        docs = spark.read.parquet(f"{sf}/documents.parquet")
-        # persisted ONCE for its two consumers (the components chain
-        # materializes it; the triangle leg's serve action then reads
-        # the cache instead of re-running the whole LSH propose+verify
-        # pipeline — r13: the tri leg was the query's slowest served
-        # leg, 1.0 s of pure recompute)
-        pairs = track(
-            lsh_verified_pairs(docs, threshold=0.5, hash_family="md5").persist()
-        )
-
-        # r13 optimization (guide §2.6): the three build-side chains —
-        # doc components (persist/count/collect), ER blocking +
-        # components, and the 5-round PageRank loop (3 counts + 5
-        # eager checkpoints) — are independent lineages; sequentially
-        # each runs many short, low-parallelism jobs. Concurrent
-        # driver threads let the scheduler back-fill; per-chain
-        # results are unchanged (each is deterministic in isolation).
-        def _doc_chain():
-            return duplicate_clusters(pairs).select(
-                F.lit("doc").alias("kind"), "id", "cluster_id"
+    doc_cl, er_cl, pr_leg = overlap(_doc_chain, _er_chain, _pr_chain)
+    # kind='tri': per-node triangle counts over the NEAR-DUP doc
+    # graph (the LSH-verified pairs already computed above) —
+    # triangle density measures duplicate-cluster cohesion
+    # (transitive near-dups triangulate; chains don't). The
+    # degree-ordered orientation keeps wedges O(E^1.5) and
+    # hub-safe. NOT run on the co-purchase graph: basket cliques
+    # make triangle counting cubic in basket size (measured 166 s
+    # at sf0.1 — an order with 40 parts alone contributes ~10k
+    # triangles); the near-dup graph is sparse by construction.
+    sym_pairs = pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+                F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
             )
+        ).alias("e")
+    ).select("e.src", "e.dst")
+    tri_leg = triangle_counts(sym_pairs).select(
+        F.lit("tri").alias("kind"),
+        "id",
+        F.col("n_triangles").alias("cluster_id"),
+    )
+    return (
+        doc_cl.unionByName(er_cl).unionByName(pr_leg).unionByName(tri_leg)
+    )
 
-        def _er_chain():
-            cust = spark.read.parquet(f"{sf}/customer.parquet")
-            return resolve_entities(
-                cust,
-                id_col="c_custkey",
-                name_col="c_name",
-                block_cols=["c_nationkey", "c_mktsegment"],
-                max_edit=1,
-            ).select(F.lit("er").alias("kind"), "id", "cluster_id")
 
-        def _pr_chain():
-            return pagerank_ppb_leg(spark.read.parquet(f"{sf}/lineitem.parquet"))
+def q_dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    # md5 hash family => banded candidates + exact Hamming filter
+    # are reproduced by the DuckDB oracle pair-for-pair (murmur3
+    # stays the 64-bit scale default in the API).
+    text = simhash_pairs(
+        docs, max_hamming=3, bands=4, hash_family="md5"
+    ).select(F.lit("text").alias("kind"), "id_a", "id_b", "hamming")
 
-        doc_cl, er_cl, pr_leg = overlap(_doc_chain, _er_chain, _pr_chain)
-        # kind='tri': per-node triangle counts over the NEAR-DUP doc
-        # graph (the LSH-verified pairs already computed above) —
-        # triangle density measures duplicate-cluster cohesion
-        # (transitive near-dups triangulate; chains don't). The
-        # degree-ordered orientation keeps wedges O(E^1.5) and
-        # hub-safe. NOT run on the co-purchase graph: basket cliques
-        # make triangle counting cubic in basket size (measured 166 s
-        # at sf0.1 — an order with 40 parts alone contributes ~10k
-        # triangles); the near-dup graph is sparse by construction.
-        sym_pairs = pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-                    F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
-                )
-            ).alias("e")
-        ).select("e.src", "e.dst")
-        tri_leg = triangle_counts(sym_pairs).select(
-            F.lit("tri").alias("kind"),
-            "id",
-            F.col("n_triangles").alias("cluster_id"),
-        )
-        return (
-            doc_cl.unionByName(er_cl).unionByName(pr_leg).unionByName(tri_leg)
-        )
+    # 'img_bits' + 'img_pair' legs (r11): image near-dup via the
+    # 64-bit DCT perceptual hash. The corpus is engine-ENCODED
+    # synthetic images whose pixel values are pure integer
+    # formulas, so the oracle replays the ENTIRE pHash pipeline in
+    # SQL — nearest 32x32 resample (src index = i//2 for the 16x16
+    # image), BT.601 luma for the color constants, the 8x8
+    # low-band DCT as an explicit cos-product sum, median
+    # threshold — spec-derived, independent of the decoder AND of
+    # numpy. Formula choice is deliberate: the quadratic-residue
+    # textures have every low-band coefficient >= ~4.3 away from
+    # the median (no platform-noise bit flips), constants have all
+    # AC coefficients at exactly 0.0 after the documented
+    # 6-decimal rounding, and image -2 is image -1 with a one-
+    # column bump tuned to land at Hamming distance 2 — a true
+    # near-dup the banded join must find (recall is EXACT for
+    # hamming <= bands-1 by pigeonhole).
+    import numpy as np
 
-    def q_simhash(spark, sf):
-        docs = spark.read.parquet(f"{sf}/documents.parquet")
-        # md5 hash family => banded candidates + exact Hamming filter
-        # are reproduced by the DuckDB oracle pair-for-pair (murmur3
-        # stays the 64-bit scale default in the API).
-        text = simhash_pairs(
-            docs, max_hamming=3, bands=4, hash_family="md5"
-        ).select(F.lit("text").alias("kind"), "id_a", "id_b", "hamming")
+    from data_integration_and_harmonization_spark.functions import (
+        media_codecs as MC,
+    )
+    from data_integration_and_harmonization_spark.functions.caching import track
 
-        # 'img_bits' + 'img_pair' legs (r11): image near-dup via the
-        # 64-bit DCT perceptual hash. The corpus is engine-ENCODED
-        # synthetic images whose pixel values are pure integer
-        # formulas, so the oracle replays the ENTIRE pHash pipeline in
-        # SQL — nearest 32x32 resample (src index = i//2 for the 16x16
-        # image), BT.601 luma for the color constants, the 8x8
-        # low-band DCT as an explicit cos-product sum, median
-        # threshold — spec-derived, independent of the decoder AND of
-        # numpy. Formula choice is deliberate: the quadratic-residue
-        # textures have every low-band coefficient >= ~4.3 away from
-        # the median (no platform-noise bit flips), constants have all
-        # AC coefficients at exactly 0.0 after the documented
-        # 6-decimal rounding, and image -2 is image -1 with a one-
-        # column bump tuned to land at Hamming distance 2 — a true
-        # near-dup the banded join must find (recall is EXACT for
-        # hamming <= bands-1 by pigeonhole).
-        import numpy as np
+    # 'aud_bits' / 'aud_pair' legs (r11 second wave): audio
+    # near-dup via the spectral band-energy fingerprint
+    # (media_codecs.audio_simhash64). The corpus is tone SEQUENCES
+    # whose per-segment bins are leakage-free (bin 8+16b of a
+    # 256-sample frame lands wholly in band b) and whose 16-bit
+    # PCM quantization noise rounds to exactly 0.0 at the recipe's
+    # 3-decimal cell rounding — so the expected bit grid is pure
+    # arithmetic: bit(bucket*8+band) = 1 iff segment `bucket`
+    # plays band `band`. -12 is -11 with ONE segment's band moved
+    # (Hamming 2, a true pair); -13 reverses the sequence (Hamming
+    # 16, excluded); -14 is silence (hash 0, pairs nothing).
+    # Images and audio hash in the SAME Arrow stage
+    # (media_signature_table dispatches by sniffed format); the
+    # banded join runs per modality.
+    yy, xx = np.mgrid[0:32, 0:32]
+    quad = (xx * xx * 7 + yy * yy * 3 + xx * yy) % 256
+    y16, x16 = np.mgrid[0:16, 0:16]
 
-        from data_integration_and_harmonization_spark.functions import (
-            media_codecs as MC,
-        )
-        from data_integration_and_harmonization_spark.functions.caching import track
-
-        # 'aud_bits' / 'aud_pair' legs (r11 second wave): audio
-        # near-dup via the spectral band-energy fingerprint
-        # (media_codecs.audio_simhash64). The corpus is tone SEQUENCES
-        # whose per-segment bins are leakage-free (bin 8+16b of a
-        # 256-sample frame lands wholly in band b) and whose 16-bit
-        # PCM quantization noise rounds to exactly 0.0 at the recipe's
-        # 3-decimal cell rounding — so the expected bit grid is pure
-        # arithmetic: bit(bucket*8+band) = 1 iff segment `bucket`
-        # plays band `band`. -12 is -11 with ONE segment's band moved
-        # (Hamming 2, a true pair); -13 reverses the sequence (Hamming
-        # 16, excluded); -14 is silence (hash 0, pairs nothing).
-        # Images and audio hash in the SAME Arrow stage
-        # (media_signature_table dispatches by sniffed format); the
-        # banded join runs per modality.
-        yy, xx = np.mgrid[0:32, 0:32]
-        quad = (xx * xx * 7 + yy * yy * 3 + xx * yy) % 256
-        y16, x16 = np.mgrid[0:16, 0:16]
-
-        def tone_seq(bands_seq):
-            t = np.arange(1024)
-            return MC.encode_wav(
-                8192,
-                np.concatenate(
-                    [
-                        0.5 * np.sin(2 * np.pi * (8 + 16 * b) * t / 256)
-                        for b in bands_seq
-                    ]
-                ),
-            )
-
-        def _mjpeg_block_frame(cx, cy, cxy, cxx=0, bump_col=None, bump=0):
-            by, bx = np.mgrid[0:32, 0:32]
-            bx, by = bx // 8, by // 8
-            v = 128 + 3 * ((bx * cx + by * cy + bx * by * cxy
-                            + bx * bx * cxx) % 30) - 45
-            if bump_col is not None:
-                v = v + np.where(bx == bump_col, bump, 0)
-            return v.astype(np.uint8)
-
-        payloads = [
-            (-1, MC.encode_png(quad.astype(np.uint8))),
-            # -9 (r13): the SAME quad pattern as PNG -1, BMP-encoded
-            # (24-bit BI_RGB bottom-up) — both formats are lossless,
-            # so the pair lands at hamming 0: the image family's
-            # cross-FORMAT twin of the WAV/Layer-I/Layer-II audio
-            # triple and the oracle reuses -1's pixel formula.
-            (-9, MC.encode_bmp(quad.astype(np.uint8))),
-            (-2, MC.encode_png(((quad + (xx == 5) * 8) % 256).astype(np.uint8))),
-            (-3, MC.encode_png(((xx * 13 + yy * 29 + xx * yy * 5) % 256).astype(np.uint8))),
-            (-4, MC.encode_png(((x16 * x16 * 11 + y16 * y16 * 5) % 256).astype(np.uint8))),
-            (-5, MC.encode_png(np.full((16, 16), 77, dtype=np.uint8))),
-            (-6, MC.encode_jpeg(np.full((12, 9), 77, dtype=np.uint8), quality=90)),
-            (-7, MC.encode_png(np.full((6, 5, 3), (10, 200, 30), dtype=np.uint8))),
-            (-8, MC.encode_gif([np.full((8, 8, 3), (40, 80, 120), dtype=np.uint8)])),
-            (-11, tone_seq([0, 1, 2, 3, 4, 5, 6, 7])),
-            (-12, tone_seq([0, 1, 2, 3, 4, 5, 6, 6])),
-            (-13, tone_seq([7, 6, 5, 4, 3, 2, 1, 0])),
-            (-14, MC.encode_wav(8192, np.zeros(8192))),
-            # 'aud' mp1 fixtures (r12): the SAME band sequences as the
-            # WAV tones, but MPEG-1 Layer I encoded — the from-spec
-            # bitstream decode (media_codecs.decode_mp1_subbands)
-            # feeds the compressed-domain fingerprint, whose bit grid
-            # is the same closed form (bit = 1 iff segment plays
-            # band). -31 therefore hashes IDENTICALLY to WAV -11
-            # (hamming 0 — the cross-FORMAT near-dup pair that is the
-            # point of the content tier); -32 is -31 with one segment
-            # moved (hamming 2, pairs with both -31 and -12); -33
-            # reverses (excluded).
-            (-31, MC.encode_mp1_tones([0, 1, 2, 3, 4, 5, 6, 7])),
-            (-32, MC.encode_mp1_tones([0, 1, 2, 3, 4, 5, 6, 6])),
-            (-33, MC.encode_mp1_tones([7, 6, 5, 4, 3, 2, 1, 0])),
-            # 'aud' mp2 fixtures (r13): the SAME band sequences once
-            # more, MPEG-1 Layer II encoded — the broadcast layer's
-            # from-spec decode (media_codecs.decode_mp2_subbands:
-            # Table 3-B.2 allocation, scfsi-shared scalefactors,
-            # grouped-class degrouping, Table 3-B.4 requantization)
-            # feeds the same closed-form bit grid, so -41 hashes
-            # IDENTICALLY to WAV -11 AND Layer I -31 (the three-way
-            # cross-format near-dup family); -42 moves one segment
-            # (hamming 2); -43 reverses (excluded).
-            (-41, MC.encode_mp2_tones([0, 1, 2, 3, 4, 5, 6, 7])),
-            (-42, MC.encode_mp2_tones([0, 1, 2, 3, 4, 5, 6, 6])),
-            (-43, MC.encode_mp2_tones([7, 6, 5, 4, 3, 2, 1, 0])),
-            # 'vid_bits' / 'vid_pair' fixtures: video near-dup via the
-            # temporal-average pHash (video_phash64 — sample i*T//4
-            # frames, mean luma, DCT pHash). With 2 frames the picks
-            # are [0,0,1,1], so the mean is (f0+f1)/2 — a pure formula
-            # the oracle replays through the SAME px->coef->bits SQL
-            # as the images. -22 bumps one frame's column (mean moves
-            # by bump/2 -> Hamming 2, a true pair); -23 is different
-            # footage; -24 is an animated constant GIF (temporal mean
-            # constant -> hash 1, also pins the GIF-as-video dispatch).
-            (-21, MC.encode_y4m([quad.astype(np.uint8), ((xx * 13 + yy * 29 + xx * yy * 5) % 256).astype(np.uint8)])),
-            (
-                -22,
-                MC.encode_y4m(
-                    [
-                        ((quad + (xx == 5) * 16) % 256).astype(np.uint8),
-                        ((xx * 13 + yy * 29 + xx * yy * 5) % 256).astype(np.uint8),
-                    ]
-                ),
+    def tone_seq(bands_seq):
+        t = np.arange(1024)
+        return MC.encode_wav(
+            8192,
+            np.concatenate(
+                [
+                    0.5 * np.sin(2 * np.pi * (8 + 16 * b) * t / 256)
+                    for b in bands_seq
+                ]
             ),
-            (-23, MC.encode_y4m([((xx * 31 + yy * 17 + xx * xx * 5) % 256).astype(np.uint8)] * 2)),
-            (
-                -24,
-                MC.encode_gif(
-                    [
-                        np.full((8, 8, 3), 30, dtype=np.uint8),
-                        np.full((8, 8, 3), 90, dtype=np.uint8),
-                    ]
-                ),
-            ),
-            # 'vid' MJPEG-AVI fixtures (r13): a REAL container format
-            # reaching the same temporal-average pHash. Frames are
-            # 32x32 BLOCK-constant grids (8x8 blocks) whose values
-            # stay in 128+3Z, so the q90 JPEG tier round-trips them
-            # BYTE-EXACTLY (DC quant step 3, every AC analytically
-            # zero) and the oracle replays the decoded pixels as pure
-            # integer formulas of the block index. -52 bumps one
-            # block-column of frame 0 by 36 (mean moves 18 -> hamming
-            # 2, a true pair with -51); -53 is different footage
-            # (hamming 24, excluded).
-            (
-                -51,
-                MC.encode_avi_mjpeg(
-                    [_mjpeg_block_frame(7, 3, 1), _mjpeg_block_frame(13, 5, 0)],
-                    fps=10,
-                ),
-            ),
-            (
-                -52,
-                MC.encode_avi_mjpeg(
-                    [
-                        _mjpeg_block_frame(7, 3, 1, bump_col=2, bump=36),
-                        _mjpeg_block_frame(13, 5, 0),
-                    ],
-                    fps=10,
-                ),
-            ),
-            (
-                -53,
-                MC.encode_avi_mjpeg(
-                    [_mjpeg_block_frame(11, 7, 0, 1)] * 2, fps=10
-                ),
-            ),
-        ]
-        from data_integration_and_harmonization_spark.operators.multimodal import (
-            local_media_frame,
         )
 
-        # JVM LocalTableScan, not defaultParallelism pickled slices —
-        # each slice of a plain-list local frame costs the downstream
-        # Arrow stage a Python-worker round-trip per task (r14)
-        media = local_media_frame(
-            spark,
-            [(i, bytearray(p)) for i, p in payloads],
-            "media_id long, payload binary",
-        )
-        # persisted: the signature table feeds FOUR legs, so the Arrow
-        # decode stage runs once (a few dozen rows — the persist is
-        # bookkeeping, not a size concern)
-        sig = track(media_signature_table(media).persist())
+    def _mjpeg_block_frame(cx, cy, cxy, cxx=0, bump_col=None, bump=0):
+        by, bx = np.mgrid[0:32, 0:32]
+        bx, by = bx // 8, by // 8
+        v = 128 + 3 * ((bx * cx + by * cy + bx * by * cxy
+                        + bx * bx * cxx) % 30) - 45
+        if bump_col is not None:
+            v = v + np.where(bx == bump_col, bump, 0)
+        return v.astype(np.uint8)
 
-        def bit_rows(kind_tag, kind_val):
-            return (
-                sig.where(F.col("kind") == kind_val)
-                .select(
-                    F.lit(kind_tag).alias("kind"),
-                    F.col("id").alias("id_a"),
-                    F.posexplode(
-                        F.array(
-                            *[
-                                F.shiftright("sig", i)
-                                .bitwiseAND(F.lit(1))
-                                .cast("long")
-                                for i in range(64)
-                            ]
-                        )
-                    ).alias("id_b", "hamming"),
-                )
-                .select(
-                    "kind", "id_a", F.col("id_b").cast("long").alias("id_b"), "hamming"
-                )
-            )
+    payloads = [
+        (-1, MC.encode_png(quad.astype(np.uint8))),
+        # -9 (r13): the SAME quad pattern as PNG -1, BMP-encoded
+        # (24-bit BI_RGB bottom-up) — both formats are lossless,
+        # so the pair lands at hamming 0: the image family's
+        # cross-FORMAT twin of the WAV/Layer-I/Layer-II audio
+        # triple and the oracle reuses -1's pixel formula.
+        (-9, MC.encode_bmp(quad.astype(np.uint8))),
+        (-2, MC.encode_png(((quad + (xx == 5) * 8) % 256).astype(np.uint8))),
+        (-3, MC.encode_png(((xx * 13 + yy * 29 + xx * yy * 5) % 256).astype(np.uint8))),
+        (-4, MC.encode_png(((x16 * x16 * 11 + y16 * y16 * 5) % 256).astype(np.uint8))),
+        (-5, MC.encode_png(np.full((16, 16), 77, dtype=np.uint8))),
+        (-6, MC.encode_jpeg(np.full((12, 9), 77, dtype=np.uint8), quality=90)),
+        (-7, MC.encode_png(np.full((6, 5, 3), (10, 200, 30), dtype=np.uint8))),
+        (-8, MC.encode_gif([np.full((8, 8, 3), (40, 80, 120), dtype=np.uint8)])),
+        (-11, tone_seq([0, 1, 2, 3, 4, 5, 6, 7])),
+        (-12, tone_seq([0, 1, 2, 3, 4, 5, 6, 6])),
+        (-13, tone_seq([7, 6, 5, 4, 3, 2, 1, 0])),
+        (-14, MC.encode_wav(8192, np.zeros(8192))),
+        # 'aud' mp1 fixtures (r12): the SAME band sequences as the
+        # WAV tones, but MPEG-1 Layer I encoded — the from-spec
+        # bitstream decode (media_codecs.decode_mp1_subbands)
+        # feeds the compressed-domain fingerprint, whose bit grid
+        # is the same closed form (bit = 1 iff segment plays
+        # band). -31 therefore hashes IDENTICALLY to WAV -11
+        # (hamming 0 — the cross-FORMAT near-dup pair that is the
+        # point of the content tier); -32 is -31 with one segment
+        # moved (hamming 2, pairs with both -31 and -12); -33
+        # reverses (excluded).
+        (-31, MC.encode_mp1_tones([0, 1, 2, 3, 4, 5, 6, 7])),
+        (-32, MC.encode_mp1_tones([0, 1, 2, 3, 4, 5, 6, 6])),
+        (-33, MC.encode_mp1_tones([7, 6, 5, 4, 3, 2, 1, 0])),
+        # 'aud' mp2 fixtures (r13): the SAME band sequences once
+        # more, MPEG-1 Layer II encoded — the broadcast layer's
+        # from-spec decode (media_codecs.decode_mp2_subbands:
+        # Table 3-B.2 allocation, scfsi-shared scalefactors,
+        # grouped-class degrouping, Table 3-B.4 requantization)
+        # feeds the same closed-form bit grid, so -41 hashes
+        # IDENTICALLY to WAV -11 AND Layer I -31 (the three-way
+        # cross-format near-dup family); -42 moves one segment
+        # (hamming 2); -43 reverses (excluded).
+        (-41, MC.encode_mp2_tones([0, 1, 2, 3, 4, 5, 6, 7])),
+        (-42, MC.encode_mp2_tones([0, 1, 2, 3, 4, 5, 6, 6])),
+        (-43, MC.encode_mp2_tones([7, 6, 5, 4, 3, 2, 1, 0])),
+        # 'vid_bits' / 'vid_pair' fixtures: video near-dup via the
+        # temporal-average pHash (video_phash64 — sample i*T//4
+        # frames, mean luma, DCT pHash). With 2 frames the picks
+        # are [0,0,1,1], so the mean is (f0+f1)/2 — a pure formula
+        # the oracle replays through the SAME px->coef->bits SQL
+        # as the images. -22 bumps one frame's column (mean moves
+        # by bump/2 -> Hamming 2, a true pair); -23 is different
+        # footage; -24 is an animated constant GIF (temporal mean
+        # constant -> hash 1, also pins the GIF-as-video dispatch).
+        (-21, MC.encode_y4m([quad.astype(np.uint8), ((xx * 13 + yy * 29 + xx * yy * 5) % 256).astype(np.uint8)])),
+        (
+            -22,
+            MC.encode_y4m(
+                [
+                    ((quad + (xx == 5) * 16) % 256).astype(np.uint8),
+                    ((xx * 13 + yy * 29 + xx * yy * 5) % 256).astype(np.uint8),
+                ]
+            ),
+        ),
+        (-23, MC.encode_y4m([((xx * 31 + yy * 17 + xx * xx * 5) % 256).astype(np.uint8)] * 2)),
+        (
+            -24,
+            MC.encode_gif(
+                [
+                    np.full((8, 8, 3), 30, dtype=np.uint8),
+                    np.full((8, 8, 3), 90, dtype=np.uint8),
+                ]
+            ),
+        ),
+        # 'vid' MJPEG-AVI fixtures (r13): a REAL container format
+        # reaching the same temporal-average pHash. Frames are
+        # 32x32 BLOCK-constant grids (8x8 blocks) whose values
+        # stay in 128+3Z, so the q90 JPEG tier round-trips them
+        # BYTE-EXACTLY (DC quant step 3, every AC analytically
+        # zero) and the oracle replays the decoded pixels as pure
+        # integer formulas of the block index. -52 bumps one
+        # block-column of frame 0 by 36 (mean moves 18 -> hamming
+        # 2, a true pair with -51); -53 is different footage
+        # (hamming 24, excluded).
+        (
+            -51,
+            MC.encode_avi_mjpeg(
+                [_mjpeg_block_frame(7, 3, 1), _mjpeg_block_frame(13, 5, 0)],
+                fps=10,
+            ),
+        ),
+        (
+            -52,
+            MC.encode_avi_mjpeg(
+                [
+                    _mjpeg_block_frame(7, 3, 1, bump_col=2, bump=36),
+                    _mjpeg_block_frame(13, 5, 0),
+                ],
+                fps=10,
+            ),
+        ),
+        (
+            -53,
+            MC.encode_avi_mjpeg(
+                [_mjpeg_block_frame(11, 7, 0, 1)] * 2, fps=10
+            ),
+        ),
+    ]
+    from data_integration_and_harmonization_spark.operators.multimodal import (
+        local_media_frame,
+    )
 
-        def pair_rows(kind_tag, kind_val):
-            return hamming_pairs(
-                sig.where(F.col("kind") == kind_val).select("id", "sig"),
-                bits=64,
-                bands=4,
-                max_hamming=3,
-            ).select(F.lit(kind_tag).alias("kind"), "id_a", "id_b", "hamming")
+    # JVM LocalTableScan, not defaultParallelism pickled slices —
+    # each slice of a plain-list local frame costs the downstream
+    # Arrow stage a Python-worker round-trip per task (r14)
+    media = local_media_frame(
+        spark,
+        [(i, bytearray(p)) for i, p in payloads],
+        "media_id long, payload binary",
+    )
+    # persisted: the signature table feeds FOUR legs, so the Arrow
+    # decode stage runs once (a few dozen rows — the persist is
+    # bookkeeping, not a size concern)
+    sig = track(media_signature_table(media).persist())
 
+    def bit_rows(kind_tag, kind_val):
         return (
-            text.unionByName(bit_rows("img_bits", "image"))
-            .unionByName(pair_rows("img_pair", "image"))
-            .unionByName(bit_rows("aud_bits", "audio"))
-            .unionByName(pair_rows("aud_pair", "audio"))
-            .unionByName(bit_rows("vid_bits", "video"))
-            .unionByName(pair_rows("vid_pair", "video"))
-        )
-
-    def q_emb_cosine(spark, sf):
-        """Tagged embedding-dedup entry, every leg oracle-replayed:
-
-        - 'pair': sign-bucket LSH near-dup pairs (id_a, id_b,
-          val=cosine) — the unclustered family.
-        - 'sem_cell': SemDeDup cell assignment (id_a=id, id_b=cell) —
-          pins the coarse quantizer argmin node-for-node.
-        - 'sem': SemDeDup verdicts (id_a=id, id_b=cluster_id,
-          val=keep) — in-cell cosine components, min-id survivor.
-        - 'sem_km': the Lloyd path (centroids='kmeans', the quality
-          default at scale) end-to-end, gauged like the trained-PQ
-          leg: one verdict row (id_a=-1, id_b=assigned count —
-          SQL-derivable, val=1.0 iff the gauge holds). The gauge:
-          every id labeled exactly once, exactly one min-id keep per
-          duplicate component, AND mean within-cell distortion under
-          kmeans cells <= the seed cells' (Lloyd minimizes exactly
-          that objective; recall on the synthetic corpus is too noisy
-          to order the two at small n, distortion is not).
-
-        Synthetic embeddings top out near cosine 0.43, so both
-        families run at threshold 0.3 to keep the checked output
-        non-trivial; seed centroids keep the oracle replay exact.
-        The cell count is ADAPTIVE — max(32, ceil(sqrt(n))) — because
-        the clustering is the bound on the in-cell quadratic pass: a
-        fixed cell count turns 10x corpus into ~100x candidate pairs
-        (the 10x scale probe measured exactly that with k=32 pinned:
-        2.8 s -> 37.6 s); sqrt scaling keeps candidate pairs ~n^1.5,
-        the standard SemDeDup/IVF trade. The oracle computes the
-        identical k in SQL.
-        """
-        import math
-
-        emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-        pairs = embedding_near_dup_pairs(emb, threshold=0.3).select(
-            F.lit("pair").alias("kind"),
-            "id_a",
-            "id_b",
-            F.col("cosine_sim").alias("val"),
-        )
-        n = emb.count()  # one job: sizes k AND the sem_km gauge below
-        k = max(32, int(math.ceil(math.sqrt(n))))
-
-        # r13 optimization (guide §2.6): the seed chain (argmin assign
-        # + in-cell components — a collect-path CC) and the Lloyd
-        # chain (KMeans fit + CC + three gauge aggregations) are
-        # independent lineages run back-to-back before; concurrent
-        # driver threads overlap their many short jobs. Values are
-        # unchanged — both chains are deterministic in isolation.
-
-        def _seed_chain():
-            sd = semantic_dedup(
-                emb, n_clusters=k, threshold=0.3, centroids="seed"
+            sig.where(F.col("kind") == kind_val)
+            .select(
+                F.lit(kind_tag).alias("kind"),
+                F.col("id").alias("id_a"),
+                F.posexplode(
+                    F.array(
+                        *[
+                            F.shiftright("sig", i)
+                            .bitwiseAND(F.lit(1))
+                            .cast("long")
+                            for i in range(64)
+                        ]
+                    )
+                ).alias("id_b", "hamming"),
             )
-            return sd, _distortion(sd.select("id", "cell"))
-
-        def _km_chain():
-            sd_km = semantic_dedup(
-                emb, n_clusters=k, threshold=0.3, centroids="kmeans"
+            .select(
+                "kind", "id_a", F.col("id_b").cast("long").alias("id_b"), "hamming"
             )
-            d_km = _distortion(sd_km.select("id", "cell"))
-            km_stats = sd_km.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.countDistinct("id").alias("nd"),
-            ).first()
-            bad_keep = (
-                sd_km.groupBy("cluster_id")
-                .agg(
-                    F.sum(F.col("keep").cast("int")).alias("nk"),
-                    F.min("id").alias("mn"),
-                    F.min(F.when(F.col("keep"), F.col("id"))).alias("kept"),
-                )
-                .where((F.col("nk") != 1) | (F.col("kept") != F.col("mn")))
-                .count()
-            )
-            return d_km, km_stats, bad_keep
-
-        ev = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
-
-        def _distortion(cells: DataFrame) -> float:
-            # mean per-coordinate squared deviation from the assigned
-            # cell's MEAN vector — same objective for both center
-            # families, so the comparison is apples to apples. One
-            # posexplode + two aggs; n*dim rows, all map-combinable.
-            x = cells.join(ev, "id").select(
-                "cell", F.posexplode(F.col("v").cast("array<double>")).alias("i", "x")
-            )
-            cent = x.groupBy("cell", "i").agg(F.avg("x").alias("c"))
-            return (
-                x.join(cent, ["cell", "i"])
-                .agg(F.avg((F.col("x") - F.col("c")) ** 2).alias("d"))
-                .first()["d"]
-            )
-
-        (sd, d_seed), (d_km, km_stats, bad_keep) = overlap(_seed_chain, _km_chain)
-
-        cell_rows = sd.select(
-            F.lit("sem_cell").alias("kind"),
-            F.col("id").alias("id_a"),
-            F.col("cell").cast("long").alias("id_b"),
-            F.lit(None).cast("double").alias("val"),
-        )
-        sem_rows = sd.select(
-            F.lit("sem").alias("kind"),
-            F.col("id").alias("id_a"),
-            F.col("cluster_id").alias("id_b"),
-            F.col("keep").cast("double").alias("val"),
         )
 
-        # ---- sem_km leg: the Lloyd-trained path end to end. Cell
-        # labels aren't oracle-derivable (Spark ML kmeans), so the leg
-        # ships a GAUGE row: structural invariants + the distortion
-        # ordering Lloyd guarantees, all computed distributed with
-        # bounded (1-row / k-row) driver traffic. The chain itself ran
-        # in the thread pool above (_km_chain).
-        km_ok = int(
-            km_stats["n"] == n
-            and km_stats["nd"] == n
-            and bad_keep == 0
-            and d_km <= d_seed
+    def pair_rows(kind_tag, kind_val):
+        return hamming_pairs(
+            sig.where(F.col("kind") == kind_val).select("id", "sig"),
+            bits=64,
+            bands=4,
+            max_hamming=3,
+        ).select(F.lit(kind_tag).alias("kind"), "id_a", "id_b", "hamming")
+
+    return (
+        text.unionByName(bit_rows("img_bits", "image"))
+        .unionByName(pair_rows("img_pair", "image"))
+        .unionByName(bit_rows("aud_bits", "audio"))
+        .unionByName(pair_rows("aud_pair", "audio"))
+        .unionByName(bit_rows("vid_bits", "video"))
+        .unionByName(pair_rows("vid_pair", "video"))
+    )
+
+
+def q_dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
+    """Tagged embedding-dedup entry, every leg oracle-replayed:
+
+    - 'pair': sign-bucket LSH near-dup pairs (id_a, id_b,
+      val=cosine) — the unclustered family.
+    - 'sem_cell': SemDeDup cell assignment (id_a=id, id_b=cell) —
+      pins the coarse quantizer argmin node-for-node.
+    - 'sem': SemDeDup verdicts (id_a=id, id_b=cluster_id,
+      val=keep) — in-cell cosine components, min-id survivor.
+    - 'sem_km': the Lloyd path (centroids='kmeans', the quality
+      default at scale) end-to-end, gauged like the trained-PQ
+      leg: one verdict row (id_a=-1, id_b=assigned count —
+      SQL-derivable, val=1.0 iff the gauge holds). The gauge:
+      every id labeled exactly once, exactly one min-id keep per
+      duplicate component, AND mean within-cell distortion under
+      kmeans cells <= the seed cells' (Lloyd minimizes exactly
+      that objective; recall on the synthetic corpus is too noisy
+      to order the two at small n, distortion is not).
+
+    Synthetic embeddings top out near cosine 0.43, so both
+    families run at threshold 0.3 to keep the checked output
+    non-trivial; seed centroids keep the oracle replay exact.
+    The cell count is ADAPTIVE — max(32, ceil(sqrt(n))) — because
+    the clustering is the bound on the in-cell quadratic pass: a
+    fixed cell count turns 10x corpus into ~100x candidate pairs
+    (the 10x scale probe measured exactly that with k=32 pinned:
+    2.8 s -> 37.6 s); sqrt scaling keeps candidate pairs ~n^1.5,
+    the standard SemDeDup/IVF trade. The oracle computes the
+    identical k in SQL.
+    """
+    import math
+
+    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
+    pairs = embedding_near_dup_pairs(emb, threshold=0.3).select(
+        F.lit("pair").alias("kind"),
+        "id_a",
+        "id_b",
+        F.col("cosine_sim").alias("val"),
+    )
+    n = emb.count()  # one job: sizes k AND the sem_km gauge below
+    k = max(32, int(math.ceil(math.sqrt(n))))
+
+    # r13 optimization (guide §2.6): the seed chain (argmin assign
+    # + in-cell components — a collect-path CC) and the Lloyd
+    # chain (KMeans fit + CC + three gauge aggregations) are
+    # independent lineages run back-to-back before; concurrent
+    # driver threads overlap their many short jobs. Values are
+    # unchanged — both chains are deterministic in isolation.
+
+    def _seed_chain():
+        sd = semantic_dedup(
+            emb, n_clusters=k, threshold=0.3, centroids="seed"
         )
-        km_row = spark.range(1).select(
-            F.lit("sem_km").alias("kind"),
-            F.lit(-1).cast("long").alias("id_a"),
-            F.lit(km_stats["n"]).cast("long").alias("id_b"),
-            F.lit(float(km_ok)).alias("val"),
+        return sd, _distortion(sd.select("id", "cell"))
+
+    def _km_chain():
+        sd_km = semantic_dedup(
+            emb, n_clusters=k, threshold=0.3, centroids="kmeans"
         )
+        d_km = _distortion(sd_km.select("id", "cell"))
+        km_stats = sd_km.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.countDistinct("id").alias("nd"),
+        ).first()
+        bad_keep = (
+            sd_km.groupBy("cluster_id")
+            .agg(
+                F.sum(F.col("keep").cast("int")).alias("nk"),
+                F.min("id").alias("mn"),
+                F.min(F.when(F.col("keep"), F.col("id"))).alias("kept"),
+            )
+            .where((F.col("nk") != 1) | (F.col("kept") != F.col("mn")))
+            .count()
+        )
+        return d_km, km_stats, bad_keep
+
+    ev = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
+
+    def _distortion(cells: DataFrame) -> float:
+        # mean per-coordinate squared deviation from the assigned
+        # cell's MEAN vector — same objective for both center
+        # families, so the comparison is apples to apples. One
+        # posexplode + two aggs; n*dim rows, all map-combinable.
+        x = cells.join(ev, "id").select(
+            "cell", F.posexplode(F.col("v").cast("array<double>")).alias("i", "x")
+        )
+        cent = x.groupBy("cell", "i").agg(F.avg("x").alias("c"))
         return (
-            pairs.unionByName(cell_rows)
-            .unionByName(sem_rows)
-            .unionByName(km_row)
+            x.join(cent, ["cell", "i"])
+            .agg(F.avg((F.col("x") - F.col("c")) ** 2).alias("d"))
+            .first()["d"]
         )
 
-    return {
-        "dedup_exact_fp": q_exact_fp,
-        "dedup_ngram_jaccard": q_jaccard,
-        "dedup_simhash": q_simhash,
-        "dedup_lsh_pipeline": q_lsh_pipeline,
-        "dedup_clusters": q_clusters,
-        "dedup_embedding_cosine": q_emb_cosine,
-    }
+    (sd, d_seed), (d_km, km_stats, bad_keep) = overlap(_seed_chain, _km_chain)
+
+    cell_rows = sd.select(
+        F.lit("sem_cell").alias("kind"),
+        F.col("id").alias("id_a"),
+        F.col("cell").cast("long").alias("id_b"),
+        F.lit(None).cast("double").alias("val"),
+    )
+    sem_rows = sd.select(
+        F.lit("sem").alias("kind"),
+        F.col("id").alias("id_a"),
+        F.col("cluster_id").alias("id_b"),
+        F.col("keep").cast("double").alias("val"),
+    )
+
+    # ---- sem_km leg: the Lloyd-trained path end to end. Cell
+    # labels aren't oracle-derivable (Spark ML kmeans), so the leg
+    # ships a GAUGE row: structural invariants + the distortion
+    # ordering Lloyd guarantees, all computed distributed with
+    # bounded (1-row / k-row) driver traffic. The chain itself ran
+    # in the thread pool above (_km_chain).
+    km_ok = int(
+        km_stats["n"] == n
+        and km_stats["nd"] == n
+        and bad_keep == 0
+        and d_km <= d_seed
+    )
+    km_row = spark.range(1).select(
+        F.lit("sem_km").alias("kind"),
+        F.lit(-1).cast("long").alias("id_a"),
+        F.lit(km_stats["n"]).cast("long").alias("id_b"),
+        F.lit(float(km_ok)).alias("val"),
+    )
+    return (
+        pairs.unionByName(cell_rows)
+        .unionByName(sem_rows)
+        .unionByName(km_row)
+    )
 
 
 def _md5_minhash_cte(
@@ -2330,8 +2323,6 @@ def _md5_simhash_sql(max_hamming: int = 3, bands: int = 4) -> str:
     """DuckDB twin of ``simhash_pairs(hash_family='md5')``: same token
     hash (first 15 md5 hex chars = 60 bits), same per-bit vote sums,
     same 15-bit band buckets, same Hamming filter."""
-    from data_integration_and_harmonization_spark.operators.text import TOKEN_RE
-
     bits = simhash_bits("md5")
     rpb = bits // bands
     mask = (1 << rpb) - 1
@@ -2600,44 +2591,45 @@ def _nd_admit_cte(
     )
 
 
-def dedup_oracles() -> dict[str, str]:
-    from data_integration_and_harmonization_spark.operators.text import TOKEN_RE
+_SHINGLES = (
+    f"list_distinct(list_transform("
+    f"range(1, greatest(len(regexp_extract_all(lower(text), '{TOKEN_RE}')) - 2, 0) + 1), "
+    f"i -> regexp_extract_all(lower(text), '{TOKEN_RE}')[i] || ' ' || "
+    f"regexp_extract_all(lower(text), '{TOKEN_RE}')[i+1] || ' ' || "
+    f"regexp_extract_all(lower(text), '{TOKEN_RE}')[i+2]))"
+)
 
-    shingles = (
-        f"list_distinct(list_transform("
-        f"range(1, greatest(len(regexp_extract_all(lower(text), '{TOKEN_RE}')) - 2, 0) + 1), "
-        f"i -> regexp_extract_all(lower(text), '{TOKEN_RE}')[i] || ' ' || "
-        f"regexp_extract_all(lower(text), '{TOKEN_RE}')[i+1] || ' ' || "
-        f"regexp_extract_all(lower(text), '{TOKEN_RE}')[i+2]))"
+_MINHASH_CTE = _md5_minhash_cte(_SHINGLES)
+
+# incremental_near_dedup twin: estimated-Jaccard pairs over the
+# banded candidates, per-parity in-batch components, history hits
+# of odd keepers against the stored (signature-bearing) even
+# survivors — the same admit arithmetic the engine runs. Two
+# instances in one WITH block: the full-corpus chain (nd1/nd2
+# legs, unprefixed) and the 20%-subset chain ('c_' prefix) that
+# replays the CDF-driven streaming maintenance twin.
+# the cdfnd replay: ONE joint-batch admit over the 20% subset
+# (the streamed multi-version drain lands both versions in one
+# micro-batch) — in-batch components keep the min id, stored =
+# signature-bearing keepers, fp pins all 32 minima per id
+_SIG_RENDER = " || ',' || ".join(f"m{i}::VARCHAR" for i in range(32))
+
+_AGREE_SUM = " + ".join(
+    f"CASE WHEN a.m{i} = b.m{i} THEN 1 ELSE 0 END" for i in range(32)
+)
+
+_CDF_CTE = (
+    _md5_minhash_cte(
+        _SHINGLES,
+        bare=True,
+        source="(SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0)",
+        prefix="c_",
     )
-    minhash_cte = _md5_minhash_cte(shingles)
-    # incremental_near_dedup twin: estimated-Jaccard pairs over the
-    # banded candidates, per-parity in-batch components, history hits
-    # of odd keepers against the stored (signature-bearing) even
-    # survivors — the same admit arithmetic the engine runs. Two
-    # instances in one WITH block: the full-corpus chain (nd1/nd2
-    # legs, unprefixed) and the 20%-subset chain ('c_' prefix) that
-    # replays the CDF-driven streaming maintenance twin.
-    # the cdfnd replay: ONE joint-batch admit over the 20% subset
-    # (the streamed multi-version drain lands both versions in one
-    # micro-batch) — in-batch components keep the min id, stored =
-    # signature-bearing keepers, fp pins all 32 minima per id
-    sig_render = " || ',' || ".join(f"m{i}::VARCHAR" for i in range(32))
-    agree_sum = " + ".join(
-        f"CASE WHEN a.m{i} = b.m{i} THEN 1 ELSE 0 END" for i in range(32)
-    )
-    cdf_cte = (
-        _md5_minhash_cte(
-            shingles,
-            bare=True,
-            source="(SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0)",
-            prefix="c_",
-        )
-        + f""",
+    + f""",
 c_agree AS (
   SELECT c.id_a, c.id_b
   FROM c_cand c JOIN c_sig a ON a.id = c.id_a JOIN c_sig b ON b.id = c.id_b
-  WHERE ({agree_sum}) / 32.0 >= 0.5
+  WHERE ({_AGREE_SUM}) / 32.0 >= 0.5
 ),
 c_edges AS (
   SELECT id_a AS src, id_b AS dst FROM c_agree
@@ -2651,15 +2643,17 @@ c_reach(id, lbl) AS (
 ),
 c_comp AS (SELECT id, min(lbl) AS cid FROM c_reach GROUP BY id),
 c_stored AS (
-  SELECT id, md5({sig_render}) AS sig_fp FROM c_sig
+  SELECT id, md5({_SIG_RENDER}) AS sig_fp FROM c_sig
   WHERE id NOT IN (SELECT id FROM c_comp WHERE id <> cid)
 )
 """
-    )
-    nd_cte = "WITH RECURSIVE " + _nd_admit_cte(shingles) + "," + cdf_cte
-    return {
-        "dedup_exact_fp": nd_cte
-        + """
+)
+
+_ND_CTE = "WITH RECURSIVE " + _nd_admit_cte(_SHINGLES) + "," + _CDF_CTE
+
+DEDUP_EXACT_FP_SQL = (
+    _ND_CTE
+    + """
 SELECT 'exact' AS kind, md5(text) AS fp, count(*)::BIGINT AS n_copies, min(doc_id) AS keep_id
 FROM documents GROUP BY 2
 UNION ALL
@@ -2713,9 +2707,12 @@ FROM (
   ) n ON o.id = n.id
 )
 WHERE status IS NOT NULL
-""",
-        "dedup_lsh_pipeline": minhash_cte
-        + """
+"""
+)
+
+DEDUP_LSH_PIPELINE_SQL = (
+    _MINHASH_CTE
+    + """
 SELECT 'candidate' AS kind, id_a, id_b, n_shared_bands::DOUBLE AS val FROM cand
 UNION ALL
 SELECT 'verified' AS kind, id_a, id_b, jaccard AS val FROM (
@@ -2729,13 +2726,17 @@ SELECT 'verified' AS kind, id_a, id_b, jaccard AS val FROM (
   JOIN sh b ON b.id = c.id_b
 )
 WHERE jaccard >= 0.5
-""",
-        "dedup_simhash": _simhash_phash_sql(),
-        # transitive closure by recursive CTE: reach(id, lbl) grows the
-        # set of component-mates per node; min over it = the same
-        # min-label fixpoint duplicate_clusters iterates to.
-        "dedup_clusters": minhash_cte.replace("WITH ", "WITH RECURSIVE ", 1)
-        + """
+"""
+)
+
+DEDUP_SIMHASH_SQL = _simhash_phash_sql()
+
+# transitive closure by recursive CTE: reach(id, lbl) grows the
+# set of component-mates per node; min over it = the same
+# min-label fixpoint duplicate_clusters iterates to.
+DEDUP_CLUSTERS_SQL = (
+    _MINHASH_CTE.replace("WITH ", "WITH RECURSIVE ", 1)
+    + """
 , verified AS (
   SELECT c.id_a, c.id_b
   FROM cand c JOIN sh a ON a.id = c.id_a JOIN sh b ON b.id = c.id_b
@@ -2766,9 +2767,9 @@ WHERE jaccard >= 0.5
   UNION
   SELECT e.dst, r.lbl FROM er_reach r JOIN er_edges e ON e.src = r.id
 )"""
-        + _graph.pagerank_cte_fragment(min_support=2, damping=0.85, n_iter=5)
-        + _graph.triangle_cte_fragment("edges")
-        + """
+    + _graph.pagerank_cte_fragment(min_support=2, damping=0.85, n_iter=5)
+    + _graph.triangle_cte_fragment("edges")
+    + """
 SELECT 'doc' AS kind, id, min(lbl)::BIGINT AS cluster_id FROM reach GROUP BY id
 UNION ALL
 SELECT 'er' AS kind, id, min(lbl)::BIGINT AS cluster_id FROM er_reach GROUP BY id
@@ -2776,12 +2777,14 @@ UNION ALL
 SELECT 'tri' AS kind, id, n_triangles AS cluster_id FROM g_tri
 UNION ALL
 """
-        + _graph.pagerank_ppb_leg_sql()
-        + "\n",
-        "dedup_ngram_jaccard": f"""
+    + _graph.pagerank_ppb_leg_sql()
+    + "\n"
+)
+
+DEDUP_NGRAM_JACCARD_SQL = f"""
 WITH s AS (
   SELECT doc_id AS id, lang, floor(length(text) / 100)::BIGINT AS blk,
-         {shingles} AS sh
+         {_SHINGLES} AS sh
   FROM documents
   WHERE doc_id % 5 = 0
 )
@@ -2792,8 +2795,9 @@ SELECT l.id AS id_a, r.id AS id_b,
 FROM s l JOIN s r ON l.blk = r.blk AND l.lang = r.lang AND l.id < r.id
 ORDER BY jaccard DESC, id_a, id_b
 LIMIT 200
-""",
-        "dedup_embedding_cosine": """
+"""
+
+DEDUP_EMBEDDING_COSINE_SQL = """
 WITH RECURSIVE s AS (
   SELECT vec_id AS id, embedding AS v,
     list_sum(list_transform(range(1, 9),
@@ -2862,5 +2866,4 @@ UNION ALL
 -- (id_b = corpus count) and its verdict holds (val = 1: one min-id
 -- keep per component, kmeans within-cell distortion <= seed's)
 SELECT 'sem_km', -1, (SELECT count(*) FROM embeddings)::BIGINT, 1.0
-""",
-    }
+"""

@@ -10,7 +10,7 @@ binning needs is a 1-row broadcast cross join, not a driver value.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -125,68 +125,43 @@ def pair_projection(
     return df.select(*order_cols, *cols).orderBy(*order_cols).limit(limit)
 
 
-# ------------------------------------------------------- query registry
+# ------------------------------------------------------- queries and oracles
 
-def eda_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    def q_binned(spark, sf):
-        # A1 1-D histogram + A5 2-D density grid in one tagged entry
-        # (same binned-count shape; frees a slot under the driver's
-        # 50-query correctness cap)
-        li = spark.read.parquet(f"{sf}/lineitem.parquet")
-        h1 = histogram(li, "l_extendedprice", 30).select(
-            F.lit("h1").alias("kind"),
-            F.col("bucket").alias("bx"),
-            F.lit(None).cast("long").alias("by"),
-            "n",
-        )
-        h2 = density2d(li, "l_quantity", "l_discount", 30).select(
-            F.lit("h2").alias("kind"), "bx", "by", "n"
-        )
-        return h1.unionByName(h2)
-
-    def q_box_stats(spark, sf):
-        li = spark.read.parquet(f"{sf}/lineitem.parquet")
-        d = box_stats(li, ["l_quantity", "l_extendedprice", "l_discount"])
-        return d.select(
-            "col_name",
-            *[F.round(c, 6).alias(c) for c in ["q1", "median", "q3", "lo_fence", "hi_fence"]],
-            "n_outliers",
-        )
-
-    def q_pair_projection(spark, sf):
-        li = spark.read.parquet(f"{sf}/lineitem.parquet")
-        return pair_projection(
-            li, ["l_quantity", "l_extendedprice"], ["l_orderkey", "l_linenumber"], 1000
-        )
-
-    return {
-        "eda_binned": q_binned,
-        "eda_box_stats": q_box_stats,
-        "eda_pair_projection": q_pair_projection,
-    }
+def q_eda_binned(spark: SparkSession, sf: str) -> DataFrame:
+    # A1 1-D histogram + A5 2-D density grid in one tagged entry
+    # (same binned-count shape; frees a slot under the driver's
+    # 50-query correctness cap)
+    li = spark.read.parquet(f"{sf}/lineitem.parquet")
+    h1 = histogram(li, "l_extendedprice", 30).select(
+        F.lit("h1").alias("kind"),
+        F.col("bucket").alias("bx"),
+        F.lit(None).cast("long").alias("by"),
+        "n",
+    )
+    h2 = density2d(li, "l_quantity", "l_discount", 30).select(
+        F.lit("h2").alias("kind"), "bx", "by", "n"
+    )
+    return h1.unionByName(h2)
 
 
-def _box_oracle() -> str:
-    parts = []
-    for c in ["l_quantity", "l_extendedprice", "l_discount"]:
-        parts.append(
-            f"""SELECT '{c}' AS col_name,
-  round(any_value(q1), 6) AS q1, round(any_value(q2), 6) AS median, round(any_value(q3), 6) AS q3,
-  round(any_value(q1 - 1.5 * (q3 - q1)), 6) AS lo_fence,
-  round(any_value(q3 + 1.5 * (q3 - q1)), 6) AS hi_fence,
-  count(CASE WHEN {c} < q1 - 1.5 * (q3 - q1) OR {c} > q3 + 1.5 * (q3 - q1) THEN 1 END)::BIGINT AS n_outliers
-FROM lineitem CROSS JOIN (
-  SELECT quantile_cont({c}::DOUBLE, 0.25) AS q1,
-         quantile_cont({c}::DOUBLE, 0.5) AS q2,
-         quantile_cont({c}::DOUBLE, 0.75) AS q3
-  FROM lineitem) s"""
-        )
-    return "\nUNION ALL\n".join(parts)
+def q_eda_box_stats(spark: SparkSession, sf: str) -> DataFrame:
+    li = spark.read.parquet(f"{sf}/lineitem.parquet")
+    d = box_stats(li, ["l_quantity", "l_extendedprice", "l_discount"])
+    return d.select(
+        "col_name",
+        *[F.round(c, 6).alias(c) for c in ["q1", "median", "q3", "lo_fence", "hi_fence"]],
+        "n_outliers",
+    )
 
 
-def eda_oracles() -> dict[str, str]:
-    return {
-        "eda_binned": """
+def q_eda_pair_projection(spark: SparkSession, sf: str) -> DataFrame:
+    li = spark.read.parquet(f"{sf}/lineitem.parquet")
+    return pair_projection(
+        li, ["l_quantity", "l_extendedprice"], ["l_orderkey", "l_linenumber"], 1000
+    )
+
+
+EDA_BINNED_SQL = """
 WITH s1 AS (SELECT min(l_extendedprice)::DOUBLE AS mn, max(l_extendedprice)::DOUBLE AS mx FROM lineitem),
 h1 AS (
   SELECT 'h1' AS kind,
@@ -212,12 +187,25 @@ h2 AS (
   GROUP BY 1, 2, 3
 )
 SELECT * FROM h1 UNION ALL SELECT * FROM h2
-""",
-        "eda_box_stats": _box_oracle(),
-        "eda_pair_projection": """
+"""
+
+EDA_BOX_STATS_SQL = "\nUNION ALL\n".join(
+    f"""SELECT '{c}' AS col_name,
+  round(any_value(q1), 6) AS q1, round(any_value(q2), 6) AS median, round(any_value(q3), 6) AS q3,
+  round(any_value(q1 - 1.5 * (q3 - q1)), 6) AS lo_fence,
+  round(any_value(q3 + 1.5 * (q3 - q1)), 6) AS hi_fence,
+  count(CASE WHEN {c} < q1 - 1.5 * (q3 - q1) OR {c} > q3 + 1.5 * (q3 - q1) THEN 1 END)::BIGINT AS n_outliers
+FROM lineitem CROSS JOIN (
+  SELECT quantile_cont({c}::DOUBLE, 0.25) AS q1,
+         quantile_cont({c}::DOUBLE, 0.5) AS q2,
+         quantile_cont({c}::DOUBLE, 0.75) AS q3
+  FROM lineitem) s"""
+    for c in ["l_quantity", "l_extendedprice", "l_discount"]
+)
+
+EDA_PAIR_PROJECTION_SQL = """
 SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
 FROM lineitem
 ORDER BY l_orderkey, l_linenumber
 LIMIT 1000
-""",
-    }
+"""

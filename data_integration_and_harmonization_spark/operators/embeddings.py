@@ -23,8 +23,6 @@ from __future__ import annotations
 
 import math
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -217,115 +215,113 @@ def random_projection(
     return df.withColumn(out_col or vec_col, F.array(*comps))
 
 
-# ------------------------------------------------------- query registry
+# ------------------------------------------------------- queries and oracles
 
 
-def embeddings_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    def q_pool_quantize(spark, sf):
-        """Normalize -> per-label mean-pool + per-vector int8 quantize,
-        hashed in one tagged long-format result:
+def q_emb_pool_quantize(spark: SparkSession, sf: str) -> DataFrame:
+    """Normalize -> per-label mean-pool + per-vector int8 quantize,
+    hashed in one tagged long-format result:
 
-        - kind='pool':  key=label, pos, val=round(pooled component, 6)
-        - kind='quant': key=vec_id, pos=-1, val=sum(q) (code checksum)
-        - kind='scale': key=vec_id, pos=-1, val=round(scale, 6)
-        - kind='trunc': key=vec_id, pos=-1, val=round(sum of the
-          16-dim matryoshka prefix after re-normalization, 6) — the
-          oracle replays the identical slice -> norm -> divide -> sum
-          ladder, element order and all, so the checksum pins
-          truncate_dim's exact arithmetic.
-        """
-        emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-        unit = l2_normalize(emb)
-        pooled = mean_pool(unit, "label", exact_mean=True).select(
-            F.lit("pool").alias("kind"),
-            F.col("label").cast("long").alias("key"),
-            F.posexplode("pooled"),
-        ).select("kind", "key", F.col("pos").cast("long").alias("pos"), F.round("col", 6).alias("val"))
-        q = quantize_int8(unit)
-        quant = q.select(
-            F.lit("quant").alias("kind"),
-            F.col("vec_id").alias("key"),
-            F.lit(-1).cast("long").alias("pos"),
-            F.aggregate("q", F.lit(0.0), lambda a, x: a + x.cast("double")).alias("val"),
-        )
-        scales = q.select(
-            F.lit("scale").alias("kind"),
-            F.col("vec_id").alias("key"),
-            F.lit(-1).cast("long").alias("pos"),
-            F.round("q_scale", 6).alias("val"),
-        )
-        trunc = truncate_dim(emb, 16).select(
-            F.lit("trunc").alias("kind"),
-            F.col("vec_id").alias("key"),
-            F.lit(-1).cast("long").alias("pos"),
-            F.round(
-                F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x), 6
-            ).alias("val"),
-        )
-        # r8 'jl' legs: JL random projection of the unit vectors to 32
-        # dims — val is round(||Pv||^2, 6) per vector (the quantity the
-        # JL lemma bounds; the oracle inlines the SAME seeded Gaussian
-        # literals via list_dot_product), plus one 'jl_ok' verdict row:
-        # the fraction of vectors whose projected squared norm lands in
-        # [0.4, 1.6] must be >= 0.95 (k=32, unit inputs — far inside
-        # the lemma's envelope; a wiring bug nukes it to ~0).
-        proj = random_projection(unit, 32, out_col="p")
-        jl = proj.select(
-            F.lit("jl").alias("kind"),
-            F.col("vec_id").alias("key"),
-            F.lit(-1).cast("long").alias("pos"),
-            F.round(
-                F.aggregate("p", F.lit(0.0), lambda a, x: a + x * x), 6
-            ).alias("val"),
-        )
-        jl_ok = jl.agg(
-            F.lit("jl_ok").alias("kind"),
-            F.lit(-1).cast("long").alias("key"),
-            F.lit(-1).cast("long").alias("pos"),
-            F.when(
-                F.avg(
-                    F.col("val").between(0.4, 1.6).cast("double")
-                )
-                >= 0.95,
-                F.lit(1.0),
+    - kind='pool':  key=label, pos, val=round(pooled component, 6)
+    - kind='quant': key=vec_id, pos=-1, val=sum(q) (code checksum)
+    - kind='scale': key=vec_id, pos=-1, val=round(scale, 6)
+    - kind='trunc': key=vec_id, pos=-1, val=round(sum of the
+      16-dim matryoshka prefix after re-normalization, 6) — the
+      oracle replays the identical slice -> norm -> divide -> sum
+      ladder, element order and all, so the checksum pins
+      truncate_dim's exact arithmetic.
+    """
+    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
+    unit = l2_normalize(emb)
+    pooled = mean_pool(unit, "label", exact_mean=True).select(
+        F.lit("pool").alias("kind"),
+        F.col("label").cast("long").alias("key"),
+        F.posexplode("pooled"),
+    ).select("kind", "key", F.col("pos").cast("long").alias("pos"), F.round("col", 6).alias("val"))
+    q = quantize_int8(unit)
+    quant = q.select(
+        F.lit("quant").alias("kind"),
+        F.col("vec_id").alias("key"),
+        F.lit(-1).cast("long").alias("pos"),
+        F.aggregate("q", F.lit(0.0), lambda a, x: a + x.cast("double")).alias("val"),
+    )
+    scales = q.select(
+        F.lit("scale").alias("kind"),
+        F.col("vec_id").alias("key"),
+        F.lit(-1).cast("long").alias("pos"),
+        F.round("q_scale", 6).alias("val"),
+    )
+    trunc = truncate_dim(emb, 16).select(
+        F.lit("trunc").alias("kind"),
+        F.col("vec_id").alias("key"),
+        F.lit(-1).cast("long").alias("pos"),
+        F.round(
+            F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x), 6
+        ).alias("val"),
+    )
+    # r8 'jl' legs: JL random projection of the unit vectors to 32
+    # dims — val is round(||Pv||^2, 6) per vector (the quantity the
+    # JL lemma bounds; the oracle inlines the SAME seeded Gaussian
+    # literals via list_dot_product), plus one 'jl_ok' verdict row:
+    # the fraction of vectors whose projected squared norm lands in
+    # [0.4, 1.6] must be >= 0.95 (k=32, unit inputs — far inside
+    # the lemma's envelope; a wiring bug nukes it to ~0).
+    proj = random_projection(unit, 32, out_col="p")
+    jl = proj.select(
+        F.lit("jl").alias("kind"),
+        F.col("vec_id").alias("key"),
+        F.lit(-1).cast("long").alias("pos"),
+        F.round(
+            F.aggregate("p", F.lit(0.0), lambda a, x: a + x * x), 6
+        ).alias("val"),
+    )
+    jl_ok = jl.agg(
+        F.lit("jl_ok").alias("kind"),
+        F.lit(-1).cast("long").alias("key"),
+        F.lit(-1).cast("long").alias("pos"),
+        F.when(
+            F.avg(
+                F.col("val").between(0.4, 1.6).cast("double")
             )
-            .otherwise(F.lit(0.0))
-            .alias("val"),
+            >= 0.95,
+            F.lit(1.0),
         )
-        return (
-            pooled.unionByName(quant)
-            .unionByName(scales)
-            .unionByName(trunc)
-            .unionByName(jl)
-            .unionByName(jl_ok)
-        )
-
-    return {"emb_pool_quantize": q_pool_quantize}
-
-
-def embeddings_oracles() -> dict[str, str]:
-    unit = (
-        "CASE WHEN sqrt(list_sum(list_transform(embedding, "
-        "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) > 0 "
-        "THEN list_transform(embedding, x -> CAST(x AS DOUBLE) / "
-        "sqrt(list_sum(list_transform(embedding, "
-        "y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))) "
-        "ELSE list_transform(embedding, x -> CAST(x AS DOUBLE)) END"
+        .otherwise(F.lit(0.0))
+        .alias("val"),
     )
-    # the SAME seeded Gaussian literals the engine projects with
-    # (full-precision repr round-trips identically into both engines'
-    # doubles); ||Pv||^2 = sum_j dot(v, R_j)^2
-    R = projection_matrix(64, 32, seed=42)
-    jl_sq = " + ".join(
-        "power(list_dot_product(v, ["
-        + ", ".join(repr(float(w)) for w in R[j])
-        + "]), 2)"
-        for j in range(32)
+    return (
+        pooled.unionByName(quant)
+        .unionByName(scales)
+        .unionByName(trunc)
+        .unionByName(jl)
+        .unionByName(jl_ok)
     )
-    return {
-        "emb_pool_quantize": f"""
+
+
+_UNIT = (
+    "CASE WHEN sqrt(list_sum(list_transform(embedding, "
+    "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) > 0 "
+    "THEN list_transform(embedding, x -> CAST(x AS DOUBLE) / "
+    "sqrt(list_sum(list_transform(embedding, "
+    "y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))) "
+    "ELSE list_transform(embedding, x -> CAST(x AS DOUBLE)) END"
+)
+
+# the SAME seeded Gaussian literals the engine projects with
+# (full-precision repr round-trips identically into both engines'
+# doubles); ||Pv||^2 = sum_j dot(v, R_j)^2
+_R = projection_matrix(64, 32, seed=42)
+
+_JL_SQ = " + ".join(
+    "power(list_dot_product(v, ["
+    + ", ".join(repr(float(w)) for w in _R[j])
+    + "]), 2)"
+    for j in range(32)
+)
+
+EMB_POOL_QUANTIZE_SQL = f"""
 WITH unit AS (
-  SELECT vec_id, label, {unit} AS v FROM embeddings
+  SELECT vec_id, label, {_UNIT} AS v FROM embeddings
 ), ex AS (
   SELECT label, vec_id, i - 1 AS pos, v[i] AS x
   FROM unit, unnest(range(1, len(v) + 1)) AS r(i)
@@ -372,9 +368,8 @@ SELECT * FROM pool UNION ALL SELECT * FROM quant
 UNION ALL SELECT * FROM scale_rows UNION ALL SELECT * FROM trunc
 UNION ALL
 SELECT 'jl' AS kind, vec_id AS key, -1::BIGINT AS pos,
-       round({jl_sq}, 6) AS val
+       round({_JL_SQ}, 6) AS val
 FROM unit
 UNION ALL
 SELECT 'jl_ok', -1::BIGINT, -1::BIGINT, CAST(1.0 AS DOUBLE)
-""",
-    }
+"""

@@ -11,8 +11,6 @@ key) — the canonical streaming-agg layout.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -395,156 +393,147 @@ def variant_props_agg(events: DataFrame) -> DataFrame:
     )
 
 
-# ------------------------------------------------------- query registry
+# ------------------------------------------------------- queries and oracles
 
-def events_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    _ev = load_events
-
-    def q_windows(spark, sf):
-        # tumbling + sliding window aggs in one tagged result (merged
-        # from r1's events_tumbling / events_sliding — the driver's
-        # correctness pass records at most 50 queries)
-        ev = _ev(spark, sf)
-        t = tumbling_agg(ev).select(
-            F.lit("tumbling").alias("kind"), "window_start", "event_type", "n_events", "sum_value"
-        )
-        s = sliding_agg(ev).select(
-            F.lit("sliding").alias("kind"),
-            "window_start",
-            F.lit(None).cast("string").alias("event_type"),
-            "n_events",
-            F.lit(None).cast("double").alias("sum_value"),
-        )
-        # r8 'resample' leg: densified hourly spine per event_type with
-        # zero-count gap rows and forward-filled hourly sums
-        r = resample_ffill(ev).select(
-            F.lit("resample").alias("kind"),
-            "window_start",
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-        # r8 'funnel' + 'cohort' legs: ordered view->click->purchase
-        # reach counts and the daily retention triangle
-        fu = funnel_counts(ev).select(
-            F.lit("funnel").alias("kind"),
-            F.lit(None).cast(dict(r.dtypes)["window_start"]).alias("window_start"),
-            F.col("step").alias("event_type"),
-            F.col("n_users").cast("long").alias("n_events"),
-            F.lit(None).cast("double").alias("sum_value"),
-        )
-        co = cohort_retention(ev).select(
-            F.lit("cohort").alias("kind"),
-            F.col("cohort").alias("window_start"),
-            F.col("offset_days").cast("string").alias("event_type"),
-            F.col("n_active").cast("long").alias("n_events"),
-            F.lit(None).cast("double").alias("sum_value"),
-        )
-        return (
-            t.unionByName(s)
-            .unionByName(r)
-            .unionByName(fu)
-            .unionByName(co)
-        )
-
-    def q_sessions_props(spark, sf):
-        # session windows + JSON-props agg in one tagged result (merged
-        # r2 — same 50-query-cap motivation as q_windows above; both
-        # halves stay individually oracle-checked through the union)
-        ev = _ev(spark, sf)
-        s = session_agg(ev).select(
-            F.lit("session").alias("kind"),
-            "user_id",
-            F.lit(None).cast("string").alias("event_type"),
-            F.col("session_start").alias("t0"),
-            "n_events",
-            F.lit(None).cast("long").alias("sum_k"),
-            F.lit(None).cast("double").alias("avg_k"),
-        )
-        p = json_props_agg(ev).select(
-            F.lit("props").alias("kind"),
-            F.lit(None).cast("long").alias("user_id"),
-            "event_type",
-            F.lit(None).cast("timestamp").alias("t0"),
-            "n_events",
-            "sum_k",
-            "avg_k",
-        )
-        # 'vprops' leg: the VARIANT path must reproduce the JSON-text
-        # path value-for-value (user_id carries the malformed-row
-        # count — 0 on this table, and the oracle expects exactly 0)
-        vp = variant_props_agg(ev).select(
-            F.lit("vprops").alias("kind"),
-            F.col("n_bad").alias("user_id"),
-            "event_type",
-            F.lit(None).cast("timestamp").alias("t0"),
-            "n_events",
-            "sum_k",
-            "avg_k",
-        )
-        # r8 'rolling' leg: per-event trailing-1h window stats keyed by
-        # user (exact microsecond range frame — see _event_micros);
-        # 'anomaly' leg: rolling z-score outlier counts per event_type
-        roll = rolling_agg(ev).select(
-            F.lit("rolling").alias("kind"),
-            "user_id",
-            "event_type",
-            F.col("ts").alias("t0"),
-            F.col("n_window").cast("long").alias("n_events"),
-            F.lit(None).cast("long").alias("sum_k"),
-            F.col("avg_value").alias("avg_k"),
-        )
-        # previous-day baseline keyed by event_type (per-user 1h
-        # windows are too sparse on this table to ever reach min_n);
-        # z=2.0 flags a real set at sf0.01 so the leg binds. The
-        # BUCKETED variant, not the sliding one: Spark's sliding
-        # range frame is O(n*w) (no retraction) — the 24h sliding
-        # form of this exact leg measured 12 s at sf0.1 vs ~0 for
-        # the bucketed join, and only the bucketed shape survives
-        # 100 TB anyway.
-        anom = bucketed_anomalies(
-            ev, bucket="day", z=2.0, key="event_type"
-        ).select(
-            F.lit("anomaly").alias("kind"),
-            F.lit(None).cast("long").alias("user_id"),
-            "event_type",
-            F.lit(None).cast("timestamp").alias("t0"),
-            F.col("n_anomalies").cast("long").alias("n_events"),
-            F.lit(None).cast("long").alias("sum_k"),
-            F.lit(None).cast("double").alias("avg_k"),
-        )
-        # r8 'hll_rollup' verdict: mergeable per-day HLL sketches vs
-        # the exact distinct-user count (sum_k carries the verdict,
-        # n_events the exact count — the oracle emits both exactly)
-        hll = daily_uniques_rollup(ev).select(
-            F.lit("hll_rollup").alias("kind"),
-            F.lit(None).cast("long").alias("user_id"),
-            F.lit(None).cast("string").alias("event_type"),
-            F.lit(None).cast("timestamp").alias("t0"),
-            F.col("exact").cast("long").alias("n_events"),
-            F.col("ok").alias("sum_k"),
-            F.lit(None).cast("double").alias("avg_k"),
-        )
-        return (
-            s.unionByName(p)
-            .unionByName(vp)
-            .unionByName(roll)
-            .unionByName(anom)
-            .unionByName(hll)
-        )
-
-    return {
-        "events_windows": q_windows,
-        "events_sessions_props": q_sessions_props,
-    }
+def q_events_windows(spark: SparkSession, sf: str) -> DataFrame:
+    # tumbling + sliding window aggs in one tagged result (merged
+    # from r1's events_tumbling / events_sliding — the driver's
+    # correctness pass records at most 50 queries)
+    ev = load_events(spark, sf)
+    t = tumbling_agg(ev).select(
+        F.lit("tumbling").alias("kind"), "window_start", "event_type", "n_events", "sum_value"
+    )
+    s = sliding_agg(ev).select(
+        F.lit("sliding").alias("kind"),
+        "window_start",
+        F.lit(None).cast("string").alias("event_type"),
+        "n_events",
+        F.lit(None).cast("double").alias("sum_value"),
+    )
+    # r8 'resample' leg: densified hourly spine per event_type with
+    # zero-count gap rows and forward-filled hourly sums
+    r = resample_ffill(ev).select(
+        F.lit("resample").alias("kind"),
+        "window_start",
+        "event_type",
+        "n_events",
+        "sum_value",
+    )
+    # r8 'funnel' + 'cohort' legs: ordered view->click->purchase
+    # reach counts and the daily retention triangle
+    fu = funnel_counts(ev).select(
+        F.lit("funnel").alias("kind"),
+        F.lit(None).cast(dict(r.dtypes)["window_start"]).alias("window_start"),
+        F.col("step").alias("event_type"),
+        F.col("n_users").cast("long").alias("n_events"),
+        F.lit(None).cast("double").alias("sum_value"),
+    )
+    co = cohort_retention(ev).select(
+        F.lit("cohort").alias("kind"),
+        F.col("cohort").alias("window_start"),
+        F.col("offset_days").cast("string").alias("event_type"),
+        F.col("n_active").cast("long").alias("n_events"),
+        F.lit(None).cast("double").alias("sum_value"),
+    )
+    return (
+        t.unionByName(s)
+        .unionByName(r)
+        .unionByName(fu)
+        .unionByName(co)
+    )
 
 
-def events_oracles() -> dict[str, str]:
-    return {
-        # tumbling rows + sliding rows (each event belongs to 2
-        # one-hour windows on a 30-min grid: the one starting at its
-        # 30-min bucket and the previous one)
-        "events_windows": """
+def q_events_sessions_props(spark: SparkSession, sf: str) -> DataFrame:
+    # session windows + JSON-props agg in one tagged result (merged
+    # r2 — same 50-query-cap motivation as q_events_windows above; both
+    # halves stay individually oracle-checked through the union)
+    ev = load_events(spark, sf)
+    s = session_agg(ev).select(
+        F.lit("session").alias("kind"),
+        "user_id",
+        F.lit(None).cast("string").alias("event_type"),
+        F.col("session_start").alias("t0"),
+        "n_events",
+        F.lit(None).cast("long").alias("sum_k"),
+        F.lit(None).cast("double").alias("avg_k"),
+    )
+    p = json_props_agg(ev).select(
+        F.lit("props").alias("kind"),
+        F.lit(None).cast("long").alias("user_id"),
+        "event_type",
+        F.lit(None).cast("timestamp").alias("t0"),
+        "n_events",
+        "sum_k",
+        "avg_k",
+    )
+    # 'vprops' leg: the VARIANT path must reproduce the JSON-text
+    # path value-for-value (user_id carries the malformed-row
+    # count — 0 on this table, and the oracle expects exactly 0)
+    vp = variant_props_agg(ev).select(
+        F.lit("vprops").alias("kind"),
+        F.col("n_bad").alias("user_id"),
+        "event_type",
+        F.lit(None).cast("timestamp").alias("t0"),
+        "n_events",
+        "sum_k",
+        "avg_k",
+    )
+    # r8 'rolling' leg: per-event trailing-1h window stats keyed by
+    # user (exact microsecond range frame — see _event_micros);
+    # 'anomaly' leg: rolling z-score outlier counts per event_type
+    roll = rolling_agg(ev).select(
+        F.lit("rolling").alias("kind"),
+        "user_id",
+        "event_type",
+        F.col("ts").alias("t0"),
+        F.col("n_window").cast("long").alias("n_events"),
+        F.lit(None).cast("long").alias("sum_k"),
+        F.col("avg_value").alias("avg_k"),
+    )
+    # previous-day baseline keyed by event_type (per-user 1h
+    # windows are too sparse on this table to ever reach min_n);
+    # z=2.0 flags a real set at sf0.01 so the leg binds. The
+    # BUCKETED variant, not the sliding one: Spark's sliding
+    # range frame is O(n*w) (no retraction) — the 24h sliding
+    # form of this exact leg measured 12 s at sf0.1 vs ~0 for
+    # the bucketed join, and only the bucketed shape survives
+    # 100 TB anyway.
+    anom = bucketed_anomalies(
+        ev, bucket="day", z=2.0, key="event_type"
+    ).select(
+        F.lit("anomaly").alias("kind"),
+        F.lit(None).cast("long").alias("user_id"),
+        "event_type",
+        F.lit(None).cast("timestamp").alias("t0"),
+        F.col("n_anomalies").cast("long").alias("n_events"),
+        F.lit(None).cast("long").alias("sum_k"),
+        F.lit(None).cast("double").alias("avg_k"),
+    )
+    # r8 'hll_rollup' verdict: mergeable per-day HLL sketches vs
+    # the exact distinct-user count (sum_k carries the verdict,
+    # n_events the exact count — the oracle emits both exactly)
+    hll = daily_uniques_rollup(ev).select(
+        F.lit("hll_rollup").alias("kind"),
+        F.lit(None).cast("long").alias("user_id"),
+        F.lit(None).cast("string").alias("event_type"),
+        F.lit(None).cast("timestamp").alias("t0"),
+        F.col("exact").cast("long").alias("n_events"),
+        F.col("ok").alias("sum_k"),
+        F.lit(None).cast("double").alias("avg_k"),
+    )
+    return (
+        s.unionByName(p)
+        .unionByName(vp)
+        .unionByName(roll)
+        .unionByName(anom)
+        .unionByName(hll)
+    )
+
+
+# tumbling rows + sliding rows (each event belongs to 2
+# one-hour windows on a 30-min grid: the one starting at its
+# 30-min bucket and the previous one)
+EVENTS_WINDOWS_SQL = """
 WITH f1 AS (
   SELECT user_id, min(ts) AS t FROM events
   WHERE event_type = 'view' GROUP BY 1
@@ -607,10 +596,11 @@ FROM (
         FROM events GROUP BY 1) fs USING (user_id)
 )
 GROUP BY 1, 2, 3
-""",
-        # session half: gaps-and-islands with a 10-minute gap;
-        # props half: JSON-path extraction agg
-        "events_sessions_props": """
+"""
+
+# session half: gaps-and-islands with a 10-minute gap;
+# props half: JSON-path extraction agg
+EVENTS_SESSIONS_PROPS_SQL = """
 WITH d AS (
   SELECT user_id, ts,
          CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
@@ -679,5 +669,4 @@ SELECT 'hll_rollup' AS kind, CAST(NULL AS BIGINT) AS user_id,
        count(DISTINCT user_id)::BIGINT AS n_events,
        1::BIGINT AS sum_k, CAST(NULL AS DOUBLE) AS avg_k
 FROM events
-""",
-    }
+"""

@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_integration_and_harmonization_spark.operators.dedup import duplicate_clusters
@@ -463,9 +463,36 @@ def merge_entities(
     )
 
 
-# ------------------------------------------------------- query registry
+# ------------------------------------------------------- queries and oracles
 
-def linkage_queries():
+def _dirty_contacts(spark, sf):
+    g = F.expr("c_custkey DIV 2")
+    gs = g.cast("string")
+    ck = F.col("c_custkey").cast("string")
+    name = (
+        F.when(
+            F.col("c_custkey") % 7 == 0,
+            F.concat(F.lit("zeta"), ck, F.lit(" solo ltd")),
+        )
+        .when(
+            F.col("c_custkey") % 2 == 0,
+            F.concat(F.lit("alpha"), gs, F.lit(" beta"), gs, F.lit(" inc")),
+        )
+        .otherwise(
+            F.concat(F.lit("beta"), gs, F.lit(" alpha"), gs, F.lit(" inc"))
+        )
+    )
+    return spark.read.parquet(f"{sf}/customer.parquet").select(
+        F.col("c_custkey").alias("id"),
+        name.alias("name"),
+        (g % 5).alias("country"),
+        (g % 100).alias("blk"),
+        "c_nationkey",
+        "c_acctbal",
+    )
+
+
+def q_link_golden(spark: SparkSession, sf: str) -> DataFrame:
     """Driver-artifact coverage for the golden-record half of the
     linkage family (token_links -> assign_entity_ids_from_links ->
     merge_entities, plus blocking_stats), previously pytest-only.
@@ -495,119 +522,87 @@ def linkage_queries():
                 min_by-id survivor name (pins the deterministic
                 first_non_null rule without comparing raw strings).
     """
-    from pyspark.sql import functions as F
+    from data_integration_and_harmonization_spark.functions.caching import track
 
-    def _dirty_contacts(spark, sf):
-        g = F.expr("c_custkey DIV 2")
-        gs = g.cast("string")
-        ck = F.col("c_custkey").cast("string")
-        name = (
-            F.when(
-                F.col("c_custkey") % 7 == 0,
-                F.concat(F.lit("zeta"), ck, F.lit(" solo ltd")),
+    recs = _dirty_contacts(spark, sf)
+    # links feed BOTH the 'tok' rows and the closure -> persist;
+    # released by the driver wrapper at the next query boundary
+    links = track(
+        token_links(recs, "id", "name", ["country", "blk"], threshold=0.6).persist()
+    )
+    tok_rows = links.select(
+        F.lit("tok").alias("kind"),
+        F.concat_ws(":", "id_a", "id_b").alias("key"),
+        F.lit("jaccard").alias("metric"),
+        F.col("jaccard").alias("val"),
+    )
+    stats = blocking_stats(recs, ["country", "blk"])
+    stat_rows = stats.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(c).alias("metric"),
+                        F.col(c).cast("double").alias("val"),
+                    )
+                    for c in stats.columns
+                ]
             )
-            .when(
-                F.col("c_custkey") % 2 == 0,
-                F.concat(F.lit("alpha"), gs, F.lit(" beta"), gs, F.lit(" inc")),
+        ).alias("s")
+    ).select(
+        F.lit("stats").alias("kind"),
+        F.lit("").alias("key"),
+        F.col("s.metric").alias("metric"),
+        F.col("s.val").alias("val"),
+    )
+    labeled = track(
+        assign_entity_ids_from_links(recs, links, "id").persist()
+    )
+    assign_rows = labeled.select(
+        F.lit("assign").alias("kind"),
+        F.col("id").cast("string").alias("key"),
+        F.lit("entity_id").alias("metric"),
+        F.col("entity_id").cast("double").alias("val"),
+    )
+    golden = merge_entities(
+        labeled, "id", rules={"c_acctbal": "max", "c_nationkey": "min"}
+    )
+    golden_rows = golden.select(
+        F.col("entity_id").cast("string").alias("key"),
+        F.explode(
+            F.array(
+                F.struct(
+                    F.lit("n_records").alias("metric"),
+                    F.col("n_records").cast("double").alias("val"),
+                ),
+                F.struct(
+                    F.lit("bal_max").alias("metric"),
+                    F.round("c_acctbal", 6).alias("val"),
+                ),
+                F.struct(
+                    F.lit("nat_min").alias("metric"),
+                    F.col("c_nationkey").cast("double").alias("val"),
+                ),
+                F.struct(
+                    F.lit("name_len").alias("metric"),
+                    F.length("name").cast("double").alias("val"),
+                ),
             )
-            .otherwise(
-                F.concat(F.lit("beta"), gs, F.lit(" alpha"), gs, F.lit(" inc"))
-            )
-        )
-        return spark.read.parquet(f"{sf}/customer.parquet").select(
-            F.col("c_custkey").alias("id"),
-            name.alias("name"),
-            (g % 5).alias("country"),
-            (g % 100).alias("blk"),
-            "c_nationkey",
-            "c_acctbal",
-        )
-
-    def q_golden(spark, sf):
-        from data_integration_and_harmonization_spark.functions.caching import track
-
-        recs = _dirty_contacts(spark, sf)
-        # links feed BOTH the 'tok' rows and the closure -> persist;
-        # released by the driver wrapper at the next query boundary
-        links = track(
-            token_links(recs, "id", "name", ["country", "blk"], threshold=0.6).persist()
-        )
-        tok_rows = links.select(
-            F.lit("tok").alias("kind"),
-            F.concat_ws(":", "id_a", "id_b").alias("key"),
-            F.lit("jaccard").alias("metric"),
-            F.col("jaccard").alias("val"),
-        )
-        stats = blocking_stats(recs, ["country", "blk"])
-        stat_rows = stats.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(c).alias("metric"),
-                            F.col(c).cast("double").alias("val"),
-                        )
-                        for c in stats.columns
-                    ]
-                )
-            ).alias("s")
-        ).select(
-            F.lit("stats").alias("kind"),
-            F.lit("").alias("key"),
-            F.col("s.metric").alias("metric"),
-            F.col("s.val").alias("val"),
-        )
-        labeled = track(
-            assign_entity_ids_from_links(recs, links, "id").persist()
-        )
-        assign_rows = labeled.select(
-            F.lit("assign").alias("kind"),
-            F.col("id").cast("string").alias("key"),
-            F.lit("entity_id").alias("metric"),
-            F.col("entity_id").cast("double").alias("val"),
-        )
-        golden = merge_entities(
-            labeled, "id", rules={"c_acctbal": "max", "c_nationkey": "min"}
-        )
-        golden_rows = golden.select(
-            F.col("entity_id").cast("string").alias("key"),
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit("n_records").alias("metric"),
-                        F.col("n_records").cast("double").alias("val"),
-                    ),
-                    F.struct(
-                        F.lit("bal_max").alias("metric"),
-                        F.round("c_acctbal", 6).alias("val"),
-                    ),
-                    F.struct(
-                        F.lit("nat_min").alias("metric"),
-                        F.col("c_nationkey").cast("double").alias("val"),
-                    ),
-                    F.struct(
-                        F.lit("name_len").alias("metric"),
-                        F.length("name").cast("double").alias("val"),
-                    ),
-                )
-            ).alias("s"),
-        ).select(
-            F.lit("golden").alias("kind"),
-            "key",
-            F.col("s.metric").alias("metric"),
-            F.col("s.val").alias("val"),
-        )
-        return (
-            stat_rows.unionByName(tok_rows)
-            .unionByName(assign_rows)
-            .unionByName(golden_rows)
-        )
-
-    return {"link_golden": q_golden}
+        ).alias("s"),
+    ).select(
+        F.lit("golden").alias("kind"),
+        "key",
+        F.col("s.metric").alias("metric"),
+        F.col("s.val").alias("val"),
+    )
+    return (
+        stat_rows.unionByName(tok_rows)
+        .unionByName(assign_rows)
+        .unionByName(golden_rows)
+    )
 
 
-def linkage_oracles():
-    recs = """
+_RECS = """
   SELECT c_custkey AS id,
     CASE WHEN c_custkey % 7 = 0
            THEN concat('zeta', c_custkey, ' solo ltd')
@@ -620,9 +615,9 @@ def linkage_oracles():
     c_nationkey, c_acctbal
   FROM customer
 """
-    return {
-        "link_golden": f"""
-WITH RECURSIVE recs AS ({recs}
+
+LINK_GOLDEN_SQL = f"""
+WITH RECURSIVE recs AS ({_RECS}
 ), tok AS (
   SELECT id, country, blk,
          len(list_distinct(string_split(name, ' '))) AS n_tok,
@@ -686,5 +681,4 @@ SELECT 'golden', CAST(entity_id AS VARCHAR), u.metric, u.val FROM golden, LATERA
          unnest([n_records::DOUBLE, round(bal_max, 6), nat_min::DOUBLE,
                  name_len::DOUBLE]) AS val
 ) u
-""",
-    }
+"""

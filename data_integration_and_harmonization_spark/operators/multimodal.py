@@ -24,8 +24,6 @@ per-payload C-speed (zlib/numpy) under a thin Python chunk walk.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -669,7 +667,7 @@ def sample_frames(media: DataFrame, n_frames: int = 4, frame_size: int = 16) -> 
     )
 
 
-# ------------------------------------------------------- query registry
+# ------------------------------------------------------- queries and oracles
 
 def video_duration_table(
     videos: DataFrame, id_col: str = "video_id", payload_col: str = "payload"
@@ -763,395 +761,392 @@ def transcript_video_alignment(
     )
 
 
-def multimodal_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    def _media(spark, sf):
-        # documents.text encoded as bytes stands in for media payloads:
-        # deterministic, present at every sf, exercises binary plumbing.
-        docs = spark.read.parquet(f"{sf}/documents.parquet")
-        return to_media_table(
-            docs.select("doc_id", F.encode("text", "UTF-8").alias("payload")),
-            "doc_id",
-            "payload",
-            "text/plain",
-        )
+def _media(spark, sf):
+    # documents.text encoded as bytes stands in for media payloads:
+    # deterministic, present at every sf, exercises binary plumbing.
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    return to_media_table(
+        docs.select("doc_id", F.encode("text", "UTF-8").alias("payload")),
+        "doc_id",
+        "payload",
+        "text/plain",
+    )
 
-    def _synthetic_media(spark):
-        """Two REAL media payloads with analytically-known pixel
-        stats, built with the engine's own encoders:
 
-        - media_id -1: 16x16 RGB PNG with px[y,x,c] = (x*16+y+c) % 256
-          — every stat (mean/std/min/max) is a closed-form expression
-          over that formula, so the oracle derives the expected
-          feature values from the SPEC, independent of the decoder.
-        - media_id -2: 3-frame 8x8 GIF of constant colors 30/60/90 —
-          first-frame stats are trivial, n_frames pins the animation
-          walk.
-        - media_id -3: 12x9 GRAYSCALE baseline JPEG, constant 77.
-          Constant blocks survive baseline DCT quantization EXACTLY
-          (only the DC coefficient is nonzero, 8*(v-128) is a
-          multiple of every Annex-K DC step's rounding unit), so
-          mean/min/max are spec-derivable closed forms and std is 0.
-        - media_id -4: 10x13 RGB 4:2:0 JPEG with r=g=b=201 and a
-          2-MCU restart interval — r=g=b makes Cb=Cr=128 exactly
-          (zero after level shift, zero error through subsampling),
-          so the color+subsample+restart decode path is ALSO exact.
+def _synthetic_media(spark):
+    """Two REAL media payloads with analytically-known pixel
+    stats, built with the engine's own encoders:
 
-        Payload BYTES vary with zlib/palette/entropy details, so only
-        decoded values (not n_bytes/digest) are oracle-compared.
-        """
-        import numpy as np
+    - media_id -1: 16x16 RGB PNG with px[y,x,c] = (x*16+y+c) % 256
+      — every stat (mean/std/min/max) is a closed-form expression
+      over that formula, so the oracle derives the expected
+      feature values from the SPEC, independent of the decoder.
+    - media_id -2: 3-frame 8x8 GIF of constant colors 30/60/90 —
+      first-frame stats are trivial, n_frames pins the animation
+      walk.
+    - media_id -3: 12x9 GRAYSCALE baseline JPEG, constant 77.
+      Constant blocks survive baseline DCT quantization EXACTLY
+      (only the DC coefficient is nonzero, 8*(v-128) is a
+      multiple of every Annex-K DC step's rounding unit), so
+      mean/min/max are spec-derivable closed forms and std is 0.
+    - media_id -4: 10x13 RGB 4:2:0 JPEG with r=g=b=201 and a
+      2-MCU restart interval — r=g=b makes Cb=Cr=128 exactly
+      (zero after level shift, zero error through subsampling),
+      so the color+subsample+restart decode path is ALSO exact.
 
-        y, x, c = np.ogrid[0:16, 0:16, 0:3]
-        png = MC.encode_png(((x * 16 + y + c) % 256).astype(np.uint8))
-        gif = MC.encode_gif(
-            [np.full((8, 8, 3), v, dtype=np.uint8) for v in (30, 60, 90)]
-        )
-        jpg_gray = MC.encode_jpeg(np.full((12, 9), 77, dtype=np.uint8), quality=90)
-        jpg_rgb = MC.encode_jpeg(
-            np.full((10, 13, 3), 201, dtype=np.uint8),
-            quality=90,
-            subsampling="420",
-            restart_interval=2,
-        )
-        # local_media_frame (r14): JVM LocalTableScan, not 32 pickled
-        # parallelize slices — see the helper's docstring.
-        return local_media_frame(
-            spark,
-            [
-                (-1, bytearray(png), "image/png"),
-                (-2, bytearray(gif), "image/gif"),
-                (-3, bytearray(jpg_gray), "image/jpeg"),
-                (-4, bytearray(jpg_rgb), "image/jpeg"),
-            ],
-            "media_id long, payload binary, media_type string",
-        ).withColumn("n_bytes", F.length("payload").cast("long"))
+    Payload BYTES vary with zlib/palette/entropy details, so only
+    decoded values (not n_bytes/digest) are oracle-compared.
+    """
+    import numpy as np
 
-    def q_meta_features(spark, sf):
-        # metadata projection + pandas-UDF feature extraction + the
-        # resize->frame-sample chain in one tagged result (merged under
-        # the 50-query cap; every leg stays individually hash-checked).
-        # Feature half is long-format (media_id, bucket, freq): every
-        # histogram bucket the decode produced is checked against a
-        # DuckDB twin replaying the stub's (byte+pos)%dim binning. The
-        # 'real' rows run the ACTUAL codecs over synthetic media whose
-        # pixel stats are analytic — the oracle recomputes them from
-        # the pixel formula (spec-derived, not a tautology over the
-        # decoder). The synthetic payloads are UNIONED into the corpus
-        # before extract_features so the whole query pays ONE
-        # mapInPandas stage instead of two: a 2-row Python stage still
-        # costs a full Arrow worker round-trip (~1.4 s measured at
-        # sf0.1 — the r4 bench regression on this query was exactly
-        # that second stage, not the decode work).
-        media = _media(spark, sf)
-        meta = media.select(
-            F.lit("meta").alias("kind"),
+    y, x, c = np.ogrid[0:16, 0:16, 0:3]
+    png = MC.encode_png(((x * 16 + y + c) % 256).astype(np.uint8))
+    gif = MC.encode_gif(
+        [np.full((8, 8, 3), v, dtype=np.uint8) for v in (30, 60, 90)]
+    )
+    jpg_gray = MC.encode_jpeg(np.full((12, 9), 77, dtype=np.uint8), quality=90)
+    jpg_rgb = MC.encode_jpeg(
+        np.full((10, 13, 3), 201, dtype=np.uint8),
+        quality=90,
+        subsampling="420",
+        restart_interval=2,
+    )
+    # local_media_frame (r14): JVM LocalTableScan, not 32 pickled
+    # parallelize slices — see the helper's docstring.
+    return local_media_frame(
+        spark,
+        [
+            (-1, bytearray(png), "image/png"),
+            (-2, bytearray(gif), "image/gif"),
+            (-3, bytearray(jpg_gray), "image/jpeg"),
+            (-4, bytearray(jpg_rgb), "image/jpeg"),
+        ],
+        "media_id long, payload binary, media_type string",
+    ).withColumn("n_bytes", F.length("payload").cast("long"))
+
+
+def q_mm_meta_features(spark: SparkSession, sf: str) -> DataFrame:
+    # metadata projection + pandas-UDF feature extraction + the
+    # resize->frame-sample chain in one tagged result (merged under
+    # the 50-query cap; every leg stays individually hash-checked).
+    # Feature half is long-format (media_id, bucket, freq): every
+    # histogram bucket the decode produced is checked against a
+    # DuckDB twin replaying the stub's (byte+pos)%dim binning. The
+    # 'real' rows run the ACTUAL codecs over synthetic media whose
+    # pixel stats are analytic — the oracle recomputes them from
+    # the pixel formula (spec-derived, not a tautology over the
+    # decoder). The synthetic payloads are UNIONED into the corpus
+    # before extract_features so the whole query pays ONE
+    # mapInPandas stage instead of two: a 2-row Python stage still
+    # costs a full Arrow worker round-trip (~1.4 s measured at
+    # sf0.1 — the r4 bench regression on this query was exactly
+    # that second stage, not the decode work).
+    media = _media(spark, sf)
+    meta = media.select(
+        F.lit("meta").alias("kind"),
+        "media_id",
+        "media_type",
+        "n_bytes",
+        F.lit(None).cast("int").alias("bucket"),
+        "digest",
+        F.lit(None).cast("double").alias("freq"),
+    )
+    # project the digest away BEFORE the Arrow transfer: the
+    # union's branches each execute the _media projection, and
+    # without this prune the feature branch would compute a second
+    # sha2 over every payload and ship it into Python
+    slim = media.select("media_id", "payload", "media_type", "n_bytes")
+    feats = (
+        extract_features(slim.unionByName(_synthetic_media(spark)))
+        .select("media_id", "n_bytes", F.posexplode("feature").alias("bucket", "freq"))
+        .select(
+            # synthetic ids are negative by construction
+            F.when(F.col("media_id") < 0, F.lit("real"))
+            .otherwise(F.lit("feature"))
+            .alias("kind"),
             "media_id",
-            "media_type",
-            "n_bytes",
-            F.lit(None).cast("int").alias("bucket"),
-            "digest",
-            F.lit(None).cast("double").alias("freq"),
-        )
-        # project the digest away BEFORE the Arrow transfer: the
-        # union's branches each execute the _media projection, and
-        # without this prune the feature branch would compute a second
-        # sha2 over every payload and ship it into Python
-        slim = media.select("media_id", "payload", "media_type", "n_bytes")
-        feats = (
-            extract_features(slim.unionByName(_synthetic_media(spark)))
-            .select("media_id", "n_bytes", F.posexplode("feature").alias("bucket", "freq"))
-            .select(
-                # synthetic ids are negative by construction
-                F.when(F.col("media_id") < 0, F.lit("real"))
-                .otherwise(F.lit("feature"))
-                .alias("kind"),
-                "media_id",
-                F.lit(None).cast("string").alias("media_type"),
-                F.when(F.col("media_id") >= 0, F.col("n_bytes")).alias("n_bytes"),
-                "bucket",
-                F.lit(None).cast("string").alias("digest"),
-                F.round("freq", 6).alias("freq"),
-            )
-        )
-        # 'audio' + 'video' rows (r10): both temporal modalities run
-        # through extract_temporal_features — ONE Arrow stage for the
-        # three synthetic payloads (the r4 lesson: each extra 2-row
-        # mapInPandas stage costs ~1.4 s of fixed overhead at sf0.1).
-        #
-        # audio (-5): spectral band shares + n_frames + rms of a
-        # synthesized sine WAV. f = rate/4 makes every sample exactly
-        # 0 or +-0.5 (16-bit PCM quantizes them EXACTLY, since
-        # 0.5*32767 rounds half-even to 16384 = 0.5*32768), the FFT
-        # bin (frame/4 = 64 of 129) is leakage-free, and band/rms are
-        # closed forms: all energy in band 64*8//129 = 3, rms =
-        # 0.5/sqrt(2).
-        #
-        # video (-6, -7): Y4M streams built with the engine's own
-        # spec encoder, constant-luma frames so every sampled-frame
-        # mean and inter-frame |delta| is a closed form:
-        #   -6 mono 16x12, 6 frames of luma 20+10k at F25:1 —
-        #      sample picks i*6//4 = frames 0/1/3/4;
-        #   -7 C420 color 8x8, 4 frames of Y=100+5k, Cb=Cr=128, at
-        #      F30000:1001 (NTSC) — constant chroma survives the 2x2
-        #      box subsample exactly, so the color plane path is also
-        #      spec-exact.
-        import numpy as np
-
-        sine = 0.5 * np.sin(np.pi * np.arange(2048) / 2)
-        v_mono = MC.encode_y4m(
-            [np.full((12, 16), 20 + 10 * k, dtype=np.uint8) for k in range(6)],
-            fps=(25, 1),
-        )
-        v_color = MC.encode_y4m(
-            [
-                np.stack(
-                    [
-                        np.full((8, 8), 100 + 5 * k, dtype=np.uint8),
-                        np.full((8, 8), 128, dtype=np.uint8),
-                        np.full((8, 8), 128, dtype=np.uint8),
-                    ],
-                    axis=2,
-                )
-                for k in range(4)
-            ],
-            fps=(30000, 1001),
-        )
-        # video -8 (r11): an MP4/ISO-BMFF container fixture — the
-        # engine's own from-spec box encoder, so every emitted value
-        # is sample-table arithmetic: n_frames = the stts run length
-        # (48), fps = timescale/frame_delta = 30000/1001 (NTSC),
-        # geometry from tkhd 16.16 fixed-point; luma/motion are NULL
-        # by design (metadata tier — no frame decode in a compressed
-        # container).
-        av_media = local_media_frame(
-            spark,
-            [
-                (-5, bytearray(MC.encode_wav(8192, sine))),
-                (-6, bytearray(v_mono)),
-                (-7, bytearray(v_color)),
-                (
-                    -8,
-                    bytearray(
-                        MC.encode_mp4_meta(
-                            640, 360, 48, timescale=30000, frame_delta=1001
-                        )
-                    ),
-                ),
-                # audio_meta -9 (r11): an MP3 CBR fixture behind an
-                # ID3v2 tag — 30 MPEG-1 Layer III frames at 128 kbps /
-                # 44100 Hz, every emitted value frame-header
-                # arithmetic: duration = 30*1152/44100.
-                (
-                    -9,
-                    bytearray(
-                        MC.encode_mp3_meta(30, 128, 44100, with_id3=True)
-                    ),
-                ),
-                # video_meta -16 (r12): a WebM/EBML fixture — 854x480
-                # VP8 + 48 kHz stereo Opus, duration 2.5 s at the
-                # default 1 ms timescale; every value is element
-                # arithmetic, no cluster decode.
-                (
-                    -16,
-                    bytearray(
-                        MC.encode_webm_meta(2500.0, 854, 480, 48000.0, 2)
-                    ),
-                ),
-                # audio_meta -15 (r12): a FLAC STREAMINFO fixture —
-                # 110250 samples at 44100 Hz stereo 16-bit, every
-                # value closed-form block arithmetic (duration 2.5 s).
-                (
-                    -15,
-                    bytearray(MC.encode_flac_meta(110250, 44100, 2, 16)),
-                ),
-                # video -17 (r13): an MJPEG AVI — a real container
-                # whose frames DECODE (T.81 tier), so luma/motion are
-                # real closed forms: 4 constant 16x16 frames of luma
-                # 131+6k (values in 128+3Z round-trip the q90 JPEG
-                # byte-exactly) at 10 fps -> luma k = (131+6k)/255,
-                # motion = 6/255, n_frames 4, fps 10, geometry 16x16.
-                (
-                    -17,
-                    bytearray(
-                        MC.encode_avi_mjpeg(
-                            [
-                                np.full((16, 16), 131 + 6 * k, dtype=np.uint8)
-                                for k in range(4)
-                            ],
-                            fps=10,
-                        )
-                    ),
-                ),
-                # audio_meta -18 (r13): an Opus-in-Ogg fixture — a
-                # BOS OpusHead page + an EOS page whose granule is
-                # preskip + 120000; every value is page-header
-                # arithmetic (RFC 7845: granules tick at 48 kHz, so
-                # duration = 120000/48000 = 2.5 s exactly).
-                (
-                    -18,
-                    bytearray(
-                        MC.encode_ogg_opus_meta(120000, channels=1, preskip=312)
-                    ),
-                ),
-                # audio -20 (r13): the SAME sine as -5 but a FLOAT32
-                # WAV (format tag 3 — the extended-width family the
-                # stdlib wave module rejects): every band share / rms
-                # closed form is identical to -5, pinning the RIFF
-                # fallback decode end-to-end.
-                (-20, bytearray(MC.encode_wav_ext(8192, sine, "float32"))),
-                # image_meta -19 (r13): a multi-page TIFF scan
-                # envelope — A4-at-300dpi geometry, 1-bit CCITT G4
-                # (compression 4), 3 chained IFDs; every value is IFD
-                # entry arithmetic.
-                (
-                    -19,
-                    bytearray(
-                        MC.encode_tiff_meta(
-                            2480, 3508, 1, 4, 1, n_pages=3, big_endian=True
-                        )
-                    ),
-                ),
-                # image_meta -10/-11 (r11): WebP fixtures — a lossy
-                # VP8 key-frame header (320x180) and an extended VP8X
-                # canvas (1920x1080, alpha + animation flags) — every
-                # value is header arithmetic, no entropy decode.
-                (-10, bytearray(MC.encode_webp_meta(320, 180, "vp8"))),
-                (
-                    -11,
-                    bytearray(
-                        MC.encode_webp_meta(
-                            1920, 1080, "vp8x", has_alpha=True, has_anim=True
-                        )
-                    ),
-                ),
-            ],
-            "media_id long, payload binary",
-        )  # JVM LocalTableScan, not 32 pickled slices (r14)
-        av_rows = (
-            extract_temporal_features(av_media, n_bands=8, frame=256, n_sample=4)
-            .select(
-                "kind",
-                "media_id",
-                F.posexplode("vals").alias("bucket", "freq"),
-            )
-            .select(
-                "kind",
-                "media_id",
-                F.lit(None).cast("string").alias("media_type"),
-                F.lit(None).cast("long").alias("n_bytes"),
-                "bucket",
-                F.lit(None).cast("string").alias("digest"),
-                F.round("freq", 6).alias("freq"),
-            )
-        )
-        # 'align' rows (r12): transcript<->video temporal alignment —
-        # SRT cues (driver-written fixtures, parsed back by the
-        # all-JVM read_srt pipeline) joined to the temporal segments
-        # of two engine-encoded MP4 containers by time range
-        # (transcript_video_alignment). Durations are pure stts/mdhd
-        # arithmetic (-8: 48*1001/30000 s -> 1601 ms; -12: 24/25 s ->
-        # 960 ms), segment bounds are the i*D//4 index map, cue times
-        # are closed forms of the cue index — the oracle rebuilds
-        # every (video, segment, cue, overlap) row from that
-        # arithmetic alone.
-        import os as _os
-
-        from data_integration_and_harmonization_spark.functions.caching import (
-            scratch_dir,
-        )
-        from data_integration_and_harmonization_spark.sources.readers import (
-            read_srt,
-        )
-
-        def _tc(ms: int) -> str:
-            return (
-                f"{ms // 3600000:02d}:{ms % 3600000 // 60000:02d}:"
-                f"{ms % 60000 // 1000:02d},{ms % 1000:03d}"
-            )
-
-        ad = scratch_dir("align_srt")
-        for name, cue_spans in (
-            ("v8.srt", [(400 * k + 100, 400 * k + 600) for k in range(5)]),
-            ("v12.srt", [(300 * k + 50, 300 * k + 350) for k in range(3)]),
-        ):
-            with open(_os.path.join(ad, name), "w") as fh:
-                for i, (s, e) in enumerate(cue_spans):
-                    fh.write(f"{i + 1}\n{_tc(s)} --> {_tc(e)}\ncue {i}\n\n")
-        vid_map = spark.createDataFrame(
-            [("v8.srt", -8), ("v12.srt", -12)], "_src_file string, video_id long"
-        )
-        cues_df = (
-            read_srt(spark, ad)
-            .join(F.broadcast(vid_map), "_src_file")
-            .select("video_id", "seq", "start_ms", "end_ms")
-        )
-        align_videos = local_media_frame(
-            spark,
-            [
-                (
-                    -8,
-                    bytearray(
-                        MC.encode_mp4_meta(
-                            640, 360, 48, timescale=30000, frame_delta=1001
-                        )
-                    ),
-                ),
-                (
-                    -12,
-                    bytearray(
-                        MC.encode_mp4_meta(320, 240, 24, timescale=25, frame_delta=1)
-                    ),
-                ),
-            ],
-            "video_id long, payload binary",
-        )  # JVM LocalTableScan, not 32 pickled slices (r14)
-        align_rows = transcript_video_alignment(cues_df, align_videos).select(
-            F.lit("align").alias("kind"),
-            F.col("video_id").alias("media_id"),
             F.lit(None).cast("string").alias("media_type"),
-            F.col("cue_seq").cast("long").alias("n_bytes"),
-            F.col("seg_idx").cast("int").alias("bucket"),
+            F.when(F.col("media_id") >= 0, F.col("n_bytes")).alias("n_bytes"),
+            "bucket",
             F.lit(None).cast("string").alias("digest"),
-            F.round(F.col("overlap_ms").cast("double"), 6).alias("freq"),
+            F.round("freq", 6).alias("freq"),
         )
-        # 'frame' rows: per-frame byte stats through the full
-        # media -> resize -> frame-sample -> agg chain (the former
-        # mm_frames query, folded in to free a registry slot); pruned
-        # to (id, payload) so this branch never computes the digest
-        frames = sample_frames(
-            resize_media(media.select("media_id", "payload"), target=64), n_frames=4
+    )
+    # 'audio' + 'video' rows (r10): both temporal modalities run
+    # through extract_temporal_features — ONE Arrow stage for the
+    # three synthetic payloads (the r4 lesson: each extra 2-row
+    # mapInPandas stage costs ~1.4 s of fixed overhead at sf0.1).
+    #
+    # audio (-5): spectral band shares + n_frames + rms of a
+    # synthesized sine WAV. f = rate/4 makes every sample exactly
+    # 0 or +-0.5 (16-bit PCM quantizes them EXACTLY, since
+    # 0.5*32767 rounds half-even to 16384 = 0.5*32768), the FFT
+    # bin (frame/4 = 64 of 129) is leakage-free, and band/rms are
+    # closed forms: all energy in band 64*8//129 = 3, rms =
+    # 0.5/sqrt(2).
+    #
+    # video (-6, -7): Y4M streams built with the engine's own
+    # spec encoder, constant-luma frames so every sampled-frame
+    # mean and inter-frame |delta| is a closed form:
+    #   -6 mono 16x12, 6 frames of luma 20+10k at F25:1 —
+    #      sample picks i*6//4 = frames 0/1/3/4;
+    #   -7 C420 color 8x8, 4 frames of Y=100+5k, Cb=Cr=128, at
+    #      F30000:1001 (NTSC) — constant chroma survives the 2x2
+    #      box subsample exactly, so the color plane path is also
+    #      spec-exact.
+    import numpy as np
+
+    sine = 0.5 * np.sin(np.pi * np.arange(2048) / 2)
+    v_mono = MC.encode_y4m(
+        [np.full((12, 16), 20 + 10 * k, dtype=np.uint8) for k in range(6)],
+        fps=(25, 1),
+    )
+    v_color = MC.encode_y4m(
+        [
+            np.stack(
+                [
+                    np.full((8, 8), 100 + 5 * k, dtype=np.uint8),
+                    np.full((8, 8), 128, dtype=np.uint8),
+                    np.full((8, 8), 128, dtype=np.uint8),
+                ],
+                axis=2,
+            )
+            for k in range(4)
+        ],
+        fps=(30000, 1001),
+    )
+    # video -8 (r11): an MP4/ISO-BMFF container fixture — the
+    # engine's own from-spec box encoder, so every emitted value
+    # is sample-table arithmetic: n_frames = the stts run length
+    # (48), fps = timescale/frame_delta = 30000/1001 (NTSC),
+    # geometry from tkhd 16.16 fixed-point; luma/motion are NULL
+    # by design (metadata tier — no frame decode in a compressed
+    # container).
+    av_media = local_media_frame(
+        spark,
+        [
+            (-5, bytearray(MC.encode_wav(8192, sine))),
+            (-6, bytearray(v_mono)),
+            (-7, bytearray(v_color)),
+            (
+                -8,
+                bytearray(
+                    MC.encode_mp4_meta(
+                        640, 360, 48, timescale=30000, frame_delta=1001
+                    )
+                ),
+            ),
+            # audio_meta -9 (r11): an MP3 CBR fixture behind an
+            # ID3v2 tag — 30 MPEG-1 Layer III frames at 128 kbps /
+            # 44100 Hz, every emitted value frame-header
+            # arithmetic: duration = 30*1152/44100.
+            (
+                -9,
+                bytearray(
+                    MC.encode_mp3_meta(30, 128, 44100, with_id3=True)
+                ),
+            ),
+            # video_meta -16 (r12): a WebM/EBML fixture — 854x480
+            # VP8 + 48 kHz stereo Opus, duration 2.5 s at the
+            # default 1 ms timescale; every value is element
+            # arithmetic, no cluster decode.
+            (
+                -16,
+                bytearray(
+                    MC.encode_webm_meta(2500.0, 854, 480, 48000.0, 2)
+                ),
+            ),
+            # audio_meta -15 (r12): a FLAC STREAMINFO fixture —
+            # 110250 samples at 44100 Hz stereo 16-bit, every
+            # value closed-form block arithmetic (duration 2.5 s).
+            (
+                -15,
+                bytearray(MC.encode_flac_meta(110250, 44100, 2, 16)),
+            ),
+            # video -17 (r13): an MJPEG AVI — a real container
+            # whose frames DECODE (T.81 tier), so luma/motion are
+            # real closed forms: 4 constant 16x16 frames of luma
+            # 131+6k (values in 128+3Z round-trip the q90 JPEG
+            # byte-exactly) at 10 fps -> luma k = (131+6k)/255,
+            # motion = 6/255, n_frames 4, fps 10, geometry 16x16.
+            (
+                -17,
+                bytearray(
+                    MC.encode_avi_mjpeg(
+                        [
+                            np.full((16, 16), 131 + 6 * k, dtype=np.uint8)
+                            for k in range(4)
+                        ],
+                        fps=10,
+                    )
+                ),
+            ),
+            # audio_meta -18 (r13): an Opus-in-Ogg fixture — a
+            # BOS OpusHead page + an EOS page whose granule is
+            # preskip + 120000; every value is page-header
+            # arithmetic (RFC 7845: granules tick at 48 kHz, so
+            # duration = 120000/48000 = 2.5 s exactly).
+            (
+                -18,
+                bytearray(
+                    MC.encode_ogg_opus_meta(120000, channels=1, preskip=312)
+                ),
+            ),
+            # audio -20 (r13): the SAME sine as -5 but a FLOAT32
+            # WAV (format tag 3 — the extended-width family the
+            # stdlib wave module rejects): every band share / rms
+            # closed form is identical to -5, pinning the RIFF
+            # fallback decode end-to-end.
+            (-20, bytearray(MC.encode_wav_ext(8192, sine, "float32"))),
+            # image_meta -19 (r13): a multi-page TIFF scan
+            # envelope — A4-at-300dpi geometry, 1-bit CCITT G4
+            # (compression 4), 3 chained IFDs; every value is IFD
+            # entry arithmetic.
+            (
+                -19,
+                bytearray(
+                    MC.encode_tiff_meta(
+                        2480, 3508, 1, 4, 1, n_pages=3, big_endian=True
+                    )
+                ),
+            ),
+            # image_meta -10/-11 (r11): WebP fixtures — a lossy
+            # VP8 key-frame header (320x180) and an extended VP8X
+            # canvas (1920x1080, alpha + animation flags) — every
+            # value is header arithmetic, no entropy decode.
+            (-10, bytearray(MC.encode_webp_meta(320, 180, "vp8"))),
+            (
+                -11,
+                bytearray(
+                    MC.encode_webp_meta(
+                        1920, 1080, "vp8x", has_alpha=True, has_anim=True
+                    )
+                ),
+            ),
+        ],
+        "media_id long, payload binary",
+    )  # JVM LocalTableScan, not 32 pickled slices (r14)
+    av_rows = (
+        extract_temporal_features(av_media, n_bands=8, frame=256, n_sample=4)
+        .select(
+            "kind",
+            "media_id",
+            F.posexplode("vals").alias("bucket", "freq"),
         )
-        frame_rows = frames.groupBy("frame_idx").agg(
-            F.count(F.lit(1)).alias("nf"),
-            F.sum(F.length("frame")).alias("total_bytes"),
-        ).select(
-            F.lit("frame").alias("kind"),
-            F.col("frame_idx").cast("long").alias("media_id"),
+        .select(
+            "kind",
+            "media_id",
             F.lit(None).cast("string").alias("media_type"),
-            F.col("total_bytes").cast("long").alias("n_bytes"),
-            F.lit(None).cast("int").alias("bucket"),
+            F.lit(None).cast("long").alias("n_bytes"),
+            "bucket",
             F.lit(None).cast("string").alias("digest"),
-            F.col("nf").cast("double").alias("freq"),
+            F.round("freq", 6).alias("freq"),
         )
+    )
+    # 'align' rows (r12): transcript<->video temporal alignment —
+    # SRT cues (driver-written fixtures, parsed back by the
+    # all-JVM read_srt pipeline) joined to the temporal segments
+    # of two engine-encoded MP4 containers by time range
+    # (transcript_video_alignment). Durations are pure stts/mdhd
+    # arithmetic (-8: 48*1001/30000 s -> 1601 ms; -12: 24/25 s ->
+    # 960 ms), segment bounds are the i*D//4 index map, cue times
+    # are closed forms of the cue index — the oracle rebuilds
+    # every (video, segment, cue, overlap) row from that
+    # arithmetic alone.
+    import os as _os
+
+    from data_integration_and_harmonization_spark.functions.caching import (
+        scratch_dir,
+    )
+    from data_integration_and_harmonization_spark.sources.readers import (
+        read_srt,
+    )
+
+    def _tc(ms: int) -> str:
         return (
-            meta.unionByName(feats)
-            .unionByName(av_rows)
-            .unionByName(align_rows)
-            .unionByName(frame_rows)
+            f"{ms // 3600000:02d}:{ms % 3600000 // 60000:02d}:"
+            f"{ms % 60000 // 1000:02d},{ms % 1000:03d}"
         )
 
-    return {"mm_meta_features": q_meta_features}
+    ad = scratch_dir("align_srt")
+    for name, cue_spans in (
+        ("v8.srt", [(400 * k + 100, 400 * k + 600) for k in range(5)]),
+        ("v12.srt", [(300 * k + 50, 300 * k + 350) for k in range(3)]),
+    ):
+        with open(_os.path.join(ad, name), "w") as fh:
+            for i, (s, e) in enumerate(cue_spans):
+                fh.write(f"{i + 1}\n{_tc(s)} --> {_tc(e)}\ncue {i}\n\n")
+    vid_map = spark.createDataFrame(
+        [("v8.srt", -8), ("v12.srt", -12)], "_src_file string, video_id long"
+    )
+    cues_df = (
+        read_srt(spark, ad)
+        .join(F.broadcast(vid_map), "_src_file")
+        .select("video_id", "seq", "start_ms", "end_ms")
+    )
+    align_videos = local_media_frame(
+        spark,
+        [
+            (
+                -8,
+                bytearray(
+                    MC.encode_mp4_meta(
+                        640, 360, 48, timescale=30000, frame_delta=1001
+                    )
+                ),
+            ),
+            (
+                -12,
+                bytearray(
+                    MC.encode_mp4_meta(320, 240, 24, timescale=25, frame_delta=1)
+                ),
+            ),
+        ],
+        "video_id long, payload binary",
+    )  # JVM LocalTableScan, not 32 pickled slices (r14)
+    align_rows = transcript_video_alignment(cues_df, align_videos).select(
+        F.lit("align").alias("kind"),
+        F.col("video_id").alias("media_id"),
+        F.lit(None).cast("string").alias("media_type"),
+        F.col("cue_seq").cast("long").alias("n_bytes"),
+        F.col("seg_idx").cast("int").alias("bucket"),
+        F.lit(None).cast("string").alias("digest"),
+        F.round(F.col("overlap_ms").cast("double"), 6).alias("freq"),
+    )
+    # 'frame' rows: per-frame byte stats through the full
+    # media -> resize -> frame-sample -> agg chain (the former
+    # mm_frames query, folded in to free a registry slot); pruned
+    # to (id, payload) so this branch never computes the digest
+    frames = sample_frames(
+        resize_media(media.select("media_id", "payload"), target=64), n_frames=4
+    )
+    frame_rows = frames.groupBy("frame_idx").agg(
+        F.count(F.lit(1)).alias("nf"),
+        F.sum(F.length("frame")).alias("total_bytes"),
+    ).select(
+        F.lit("frame").alias("kind"),
+        F.col("frame_idx").cast("long").alias("media_id"),
+        F.lit(None).cast("string").alias("media_type"),
+        F.col("total_bytes").cast("long").alias("n_bytes"),
+        F.lit(None).cast("int").alias("bucket"),
+        F.lit(None).cast("string").alias("digest"),
+        F.col("nf").cast("double").alias("freq"),
+    )
+    return (
+        meta.unionByName(feats)
+        .unionByName(av_rows)
+        .unionByName(align_rows)
+        .unionByName(frame_rows)
+    )
 
 
-def multimodal_oracles() -> dict[str, str]:
-    return {
-        # meta half: metadata computed from the raw payload bytes;
-        # feature half replays decode_stub's binning byte-for-byte:
-        # bucket of byte at 0-based position j is (byte + j) % 8;
-        # freq = bucket count over payload length (length 1 floor for
-        # empty payloads). Every bucket appears (bincount minlength),
-        # hence the generate-all-buckets cross join.
-        "mm_meta_features": """
+# meta half: metadata computed from the raw payload bytes;
+# feature half replays decode_stub's binning byte-for-byte:
+# bucket of byte at 0-based position j is (byte + j) % 8;
+# freq = bucket count over payload length (length 1 floor for
+# empty payloads). Every bucket appears (bincount minlength),
+# hence the generate-all-buckets cross join.
+MM_META_FEATURES_SQL = """
 WITH m AS (
   SELECT doc_id AS media_id, hex(encode(text)) AS ph,
          octet_length(encode(text))::BIGINT AS n_bytes,
@@ -1413,5 +1408,4 @@ FROM (
          sum(least(16, len - fstart))::BIGINT AS total_bytes
   FROM ff GROUP BY 1
 )
-""",
-    }
+"""

@@ -20,13 +20,14 @@ narrow per-row ``sequence``/``explode``.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_integration_and_harmonization_spark.functions.caching import track
 from data_integration_and_harmonization_spark.functions.indexing import PID
+from data_integration_and_harmonization_spark.operators.text import TOKEN_RE
 
 
 def with_global_cumsum(
@@ -174,37 +175,30 @@ def chunk_documents(
     return ex.select(*out_cols)
 
 
-# ------------------------------------------------------- query registry
+# ------------------------------------------------------- queries and oracles
 
 _BUDGET = 512
 _CHUNK, _STRIDE = 128, 96
 
 
-def packing_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    def q_pack(spark, sf):
-        # the REAL pre-training layout pipeline, both stages in one
-        # oracle-checked query: long docs -> overlapping token chunks
-        # -> chunks packed into fixed-budget context windows on one
-        # global token stream
-        docs = spark.read.parquet(f"{sf}/documents.parquet")
-        chunks = chunk_documents(
-            docs, chunk_size=_CHUNK, stride=_STRIDE, with_text=False
-        ).select("id", "chunk_idx", "n_chunk_tokens")
-        return pack_sequences(
-            chunks,
-            ["id", "chunk_idx"],
-            "n_chunk_tokens",
-            budget=_BUDGET,
-        ).select(F.col("id").alias("doc_id"), "chunk_idx", "pack_id", "tok_in_pack")
-
-    return {"seq_pack": q_pack}
+def q_seq_pack(spark: SparkSession, sf: str) -> DataFrame:
+    # the REAL pre-training layout pipeline, both stages in one
+    # oracle-checked query: long docs -> overlapping token chunks
+    # -> chunks packed into fixed-budget context windows on one
+    # global token stream
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    chunks = chunk_documents(
+        docs, chunk_size=_CHUNK, stride=_STRIDE, with_text=False
+    ).select("id", "chunk_idx", "n_chunk_tokens")
+    return pack_sequences(
+        chunks,
+        ["id", "chunk_idx"],
+        "n_chunk_tokens",
+        budget=_BUDGET,
+    ).select(F.col("id").alias("doc_id"), "chunk_idx", "pack_id", "tok_in_pack")
 
 
-def packing_oracles() -> dict[str, str]:
-    from data_integration_and_harmonization_spark.operators.text import TOKEN_RE
-
-    return {
-        "seq_pack": f"""
+SEQ_PACK_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
          len(regexp_extract_all(lower(text), '{TOKEN_RE}'))::BIGINT AS n_tok
@@ -228,5 +222,4 @@ SELECT doc_id, chunk_idx::INTEGER AS chunk_idx, p AS pack_id,
         - greatest(cum - n_tok, p * {_BUDGET}) + 1)::BIGINT AS tok_in_pack
 FROM c, unnest(generate_series(CAST((cum - n_tok) // {_BUDGET} AS BIGINT),
                                CAST((cum - 1) // {_BUDGET} AS BIGINT))) AS u(p)
-""",
-    }
+"""

@@ -21,7 +21,7 @@ makes vs randomSplit.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -297,142 +297,140 @@ def budget_cap(
     )
 
 
-# ------------------------------------------------------- query registry
+# ------------------------------------------------------- queries and oracles
 
-def sampling_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    def q_sample(spark, sf):
-        """Four tagged legs through one hash-matched result:
+def q_samp_deterministic(spark: SparkSession, sf: str) -> DataFrame:
+    """Four tagged legs through one hash-matched result:
 
-        - 'hash' / 'stratified': the two sampling modes;
-        - 'shuffle': deterministic_shuffle order pinned by an
-          order-SENSITIVE checksum — sum((pos+1) * l_quantity) per
-          group changes under any row permutation, and the products
-          stay integral so the double sum is exact at any partition
-          order. Ranked over the 10% hash-sample subset (composing the
-          two operators): the subset's shuffle order is the full
-          order restricted, so the order contract is pinned at a
-          tenth of the rank-pass cost;
-        - 'mix_<source>': mix_sources weighted union (even orderkeys
-          kept at 30%, odd kept whole), per-source accounting via the
-          source tag.
-        - 'cap': cap_per_group quota — at most 1000 rows per
-          returnflag group by deterministic hash order (the
-          per-domain cap of a curation mix), group sums replayed by
-          the oracle's rank window.
-        - 'budget': budget_cap quota — rows kept per returnflag group
-          in the same hash order while the running l_quantity stays
-          within 20000 (the token-budget dial of a training mix,
-          with quantity standing in for token counts), replayed by
-          the oracle's running-sum window.
-        """
-        from data_integration_and_harmonization_spark.functions.caching import track
+    - 'hash' / 'stratified': the two sampling modes;
+    - 'shuffle': deterministic_shuffle order pinned by an
+      order-SENSITIVE checksum — sum((pos+1) * l_quantity) per
+      group changes under any row permutation, and the products
+      stay integral so the double sum is exact at any partition
+      order. Ranked over the 10% hash-sample subset (composing the
+      two operators): the subset's shuffle order is the full
+      order restricted, so the order contract is pinned at a
+      tenth of the rank-pass cost;
+    - 'mix_<source>': mix_sources weighted union (even orderkeys
+      kept at 30%, odd kept whole), per-source accounting via the
+      source tag.
+    - 'cap': cap_per_group quota — at most 1000 rows per
+      returnflag group by deterministic hash order (the
+      per-domain cap of a curation mix), group sums replayed by
+      the oracle's rank window.
+    - 'budget': budget_cap quota — rows kept per returnflag group
+      in the same hash order while the running l_quantity stays
+      within 20000 (the token-budget dial of a training mix,
+      with quantity standing in for token counts), replayed by
+      the oracle's running-sum window.
+    """
+    from data_integration_and_harmonization_spark.functions.caching import track
 
-        # the synthetic lineitem duplicates (l_orderkey, l_linenumber);
-        # sampling keys must be a UNIQUE composite or cutoff-boundary
-        # ties pick nondeterministically across sessions. All-integer
-        # columns only: a double in the key would hash its STRING form,
-        # and Spark/DuckDB double-to-string formats differ.
-        keys = ["l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"]
-        # Four legs = four consumers of the same projection. Read once,
-        # spread across the session parallelism, persist — WITH the
-        # sampling hashes precomputed: the md5 over the netstring key
-        # is the family's dominant per-row cost, and without the
-        # hash_col reuse every leg recomputed it (5 md5 passes; the r4
-        # bench showed 6.1 s for what is otherwise a handful of
-        # filtered aggs). Hash once at persist time, filter many.
-        # Tracked persist — the driver wrapper releases it at the next
-        # query boundary.
-        slim = track(
-            spark.read.parquet(f"{sf}/lineitem.parquet")
-            .select(*keys, "l_returnflag", "l_quantity")
-            .withColumn("__hu", sample_hash(keys, 42))
-            .withColumn("__net", _injective_key(keys))
-            .withColumn("__sh", shuffle_hash(keys, 42))
-            .repartition(spark.sparkContext.defaultParallelism)
-            .persist()
-        )
-        agg = [
-            F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
-        ]
-        h = (
-            hash_sample(slim, keys, rate=0.1, hash_col="__hu")
-            .groupBy("l_returnflag")
-            .agg(*agg)
-        )
-        s = stratified_sample(
-            slim, "l_returnflag", keys, rate=0.05, hash_col="__hu", key_col="__net"
-        ).groupBy("l_returnflag").agg(*agg)
-        sh = deterministic_shuffle(
-            hash_sample(slim, keys, rate=0.1, hash_col="__hu"),
-            keys,
-            rank_col="__pos",
-            shuffle_col="__sh",
-        ).groupBy(
-            "l_returnflag"
-        ).agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum((F.col("__pos") + 1) * F.col("l_quantity")), 6).alias(
-                "sum_qty"
-            ),
-        )
-        mixed = mix_sources(
-            {
-                "even": slim.where(F.col("l_orderkey") % 2 == 0),
-                "odd": slim.where(F.col("l_orderkey") % 2 == 1),
-            },
-            weights={"even": 0.3},
-            key_cols=keys,
-            hash_col="__hu",
-        )
-        m = mixed.groupBy(
-            F.concat(F.lit("mix_"), F.col("__mix_source")).alias("kind"),
-            "l_returnflag",
-        ).agg(*agg)
-        cap = (
-            cap_per_group(slim, ["l_returnflag"], keys, 1000, shuffle_col="__sh")
-            .groupBy("l_returnflag")
-            .agg(*agg)
-        )
-        budget = (
-            budget_cap(
-                slim, ["l_returnflag"], keys, "l_quantity", 20000,
-                shuffle_col="__sh",
-            )
-            .groupBy("l_returnflag")
-            .agg(*agg)
-        )
-        return (
-            h.select(F.lit("hash").alias("kind"), "*")
-            .unionByName(s.select(F.lit("stratified").alias("kind"), "*"))
-            .unionByName(sh.select(F.lit("shuffle").alias("kind"), "*"))
-            .unionByName(m)
-            .unionByName(cap.select(F.lit("cap").alias("kind"), "*"))
-            .unionByName(budget.select(F.lit("budget").alias("kind"), "*"))
-        )
-
-    return {"samp_deterministic": q_sample}
-
-
-def sampling_oracles() -> dict[str, str]:
-    # netstring-injective key encoding, mirrored from _injective_key:
-    # each field is <len>:<value>, null -> -1: (keys here are non-null
-    # integers, but the encoding is mirrored in full for fidelity)
-    net = "concat(" + ", ".join(
-        f"CASE WHEN {c} IS NULL THEN '-1:' ELSE "
-        f"concat(length(CAST({c} AS VARCHAR)), ':', CAST({c} AS VARCHAR)) END"
-        for c in ["l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"]
-    ) + ")"
-    hu = (
-        f"CAST(concat('0x', substr(md5(concat({net}, ':42')), 1, 15)) "
-        "AS BIGINT) % 1000000"
+    # the synthetic lineitem duplicates (l_orderkey, l_linenumber);
+    # sampling keys must be a UNIQUE composite or cutoff-boundary
+    # ties pick nondeterministically across sessions. All-integer
+    # columns only: a double in the key would hash its STRING form,
+    # and Spark/DuckDB double-to-string formats differ.
+    keys = ["l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"]
+    # Four legs = four consumers of the same projection. Read once,
+    # spread across the session parallelism, persist — WITH the
+    # sampling hashes precomputed: the md5 over the netstring key
+    # is the family's dominant per-row cost, and without the
+    # hash_col reuse every leg recomputed it (5 md5 passes; the r4
+    # bench showed 6.1 s for what is otherwise a handful of
+    # filtered aggs). Hash once at persist time, filter many.
+    # Tracked persist — the driver wrapper releases it at the next
+    # query boundary.
+    slim = track(
+        spark.read.parquet(f"{sf}/lineitem.parquet")
+        .select(*keys, "l_returnflag", "l_quantity")
+        .withColumn("__hu", sample_hash(keys, 42))
+        .withColumn("__net", _injective_key(keys))
+        .withColumn("__sh", shuffle_hash(keys, 42))
+        .repartition(spark.sparkContext.defaultParallelism)
+        .persist()
     )
-    shuf = f"md5(concat({net}, ':42'))"
-    return {
-        "samp_deterministic": f"""
+    agg = [
+        F.count(F.lit(1)).alias("n_rows"),
+        F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
+    ]
+    h = (
+        hash_sample(slim, keys, rate=0.1, hash_col="__hu")
+        .groupBy("l_returnflag")
+        .agg(*agg)
+    )
+    s = stratified_sample(
+        slim, "l_returnflag", keys, rate=0.05, hash_col="__hu", key_col="__net"
+    ).groupBy("l_returnflag").agg(*agg)
+    sh = deterministic_shuffle(
+        hash_sample(slim, keys, rate=0.1, hash_col="__hu"),
+        keys,
+        rank_col="__pos",
+        shuffle_col="__sh",
+    ).groupBy(
+        "l_returnflag"
+    ).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.round(F.sum((F.col("__pos") + 1) * F.col("l_quantity")), 6).alias(
+            "sum_qty"
+        ),
+    )
+    mixed = mix_sources(
+        {
+            "even": slim.where(F.col("l_orderkey") % 2 == 0),
+            "odd": slim.where(F.col("l_orderkey") % 2 == 1),
+        },
+        weights={"even": 0.3},
+        key_cols=keys,
+        hash_col="__hu",
+    )
+    m = mixed.groupBy(
+        F.concat(F.lit("mix_"), F.col("__mix_source")).alias("kind"),
+        "l_returnflag",
+    ).agg(*agg)
+    cap = (
+        cap_per_group(slim, ["l_returnflag"], keys, 1000, shuffle_col="__sh")
+        .groupBy("l_returnflag")
+        .agg(*agg)
+    )
+    budget = (
+        budget_cap(
+            slim, ["l_returnflag"], keys, "l_quantity", 20000,
+            shuffle_col="__sh",
+        )
+        .groupBy("l_returnflag")
+        .agg(*agg)
+    )
+    return (
+        h.select(F.lit("hash").alias("kind"), "*")
+        .unionByName(s.select(F.lit("stratified").alias("kind"), "*"))
+        .unionByName(sh.select(F.lit("shuffle").alias("kind"), "*"))
+        .unionByName(m)
+        .unionByName(cap.select(F.lit("cap").alias("kind"), "*"))
+        .unionByName(budget.select(F.lit("budget").alias("kind"), "*"))
+    )
+
+
+# netstring-injective key encoding, mirrored from _injective_key:
+# each field is <len>:<value>, null -> -1: (keys here are non-null
+# integers, but the encoding is mirrored in full for fidelity)
+_NET = "concat(" + ", ".join(
+    f"CASE WHEN {c} IS NULL THEN '-1:' ELSE "
+    f"concat(length(CAST({c} AS VARCHAR)), ':', CAST({c} AS VARCHAR)) END"
+    for c in ["l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"]
+) + ")"
+
+_HU = (
+    f"CAST(concat('0x', substr(md5(concat({_NET}, ':42')), 1, 15)) "
+    "AS BIGINT) % 1000000"
+)
+
+_SHUF = f"md5(concat({_NET}, ':42'))"
+
+SAMP_DETERMINISTIC_SQL = f"""
 SELECT 'hash' AS kind, l_returnflag, count(*)::BIGINT AS n_rows,
        round(sum(l_quantity), 6) AS sum_qty
-FROM lineitem WHERE {hu} < 100000
+FROM lineitem WHERE {_HU} < 100000
 GROUP BY 2
 UNION ALL
 SELECT 'stratified' AS kind, l_returnflag, n_rows, sum_qty FROM (
@@ -442,7 +440,7 @@ SELECT 'stratified' AS kind, l_returnflag, n_rows, sum_qty FROM (
     SELECT l_returnflag, l_quantity,
            row_number() OVER (
              PARTITION BY l_returnflag
-             ORDER BY {hu}, {net}
+             ORDER BY {_HU}, {_NET}
            ) AS rn,
            count(*) OVER (PARTITION BY l_returnflag) AS n
     FROM lineitem
@@ -455,8 +453,8 @@ SELECT 'shuffle' AS kind, l_returnflag, count(*)::BIGINT AS n_rows,
        round(sum(pos * l_quantity), 6) AS sum_qty
 FROM (
   SELECT l_returnflag, l_quantity,
-         row_number() OVER (ORDER BY {shuf}) AS pos
-  FROM lineitem WHERE {hu} < 100000
+         row_number() OVER (ORDER BY {_SHUF}) AS pos
+  FROM lineitem WHERE {_HU} < 100000
 )
 GROUP BY 2
 UNION ALL
@@ -464,7 +462,7 @@ SELECT concat('mix_', src) AS kind, l_returnflag, count(*)::BIGINT AS n_rows,
        round(sum(l_quantity), 6) AS sum_qty
 FROM (
   SELECT 'even' AS src, l_returnflag, l_quantity
-  FROM lineitem WHERE l_orderkey % 2 = 0 AND {hu} < 300000
+  FROM lineitem WHERE l_orderkey % 2 = 0 AND {_HU} < 300000
   UNION ALL
   SELECT 'odd', l_returnflag, l_quantity
   FROM lineitem WHERE l_orderkey % 2 = 1
@@ -477,7 +475,7 @@ FROM (
   SELECT l_returnflag, l_quantity,
          row_number() OVER (
            PARTITION BY l_returnflag
-           ORDER BY {shuf}, l_orderkey, l_linenumber, l_partkey, l_suppkey
+           ORDER BY {_SHUF}, l_orderkey, l_linenumber, l_partkey, l_suppkey
          ) AS rn
   FROM lineitem
 )
@@ -490,12 +488,11 @@ FROM (
   SELECT l_returnflag, l_quantity,
          sum(l_quantity) OVER (
            PARTITION BY l_returnflag
-           ORDER BY {shuf}, l_orderkey, l_linenumber, l_partkey, l_suppkey
+           ORDER BY {_SHUF}, l_orderkey, l_linenumber, l_partkey, l_suppkey
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
          ) AS run_qty
   FROM lineitem
 )
 WHERE run_qty <= 20000
 GROUP BY 2
-""",
-    }
+"""

@@ -32,12 +32,12 @@ stats aggregate.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_integration_and_harmonization_spark.operators.text import tokens
+from data_integration_and_harmonization_spark.operators.text import TOKEN_RE, tokens
 
 
 def bm25_scores(
@@ -210,7 +210,7 @@ def inverted_index(
     return stats.join(heads, "term")
 
 
-# ------------------------------------------------------- query registry
+# ------------------------------------------------------- queries and oracles
 
 QUERY_TERMS = ["spark", "window", "hash", "table", "fast"]
 
@@ -273,63 +273,59 @@ def zipf_stats(
     return slope_row.unionByName(mass_row).unionByName(vocab_row)
 
 
-def scoring_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    def q_bm25(spark, sf):
-        # two tagged legs in one frame: 'score' = the BM25 top-50
-        # (deterministic: ordered by the ROUNDED score with doc_id as
-        # the tiebreak), 'postings' = the 25 highest-df entries of the
-        # inverted index with capped posting heads. Uniform schema
-        # (leg, key, m1, m2, aux).
-        docs = spark.read.parquet(f"{sf}/documents.parquet")
-        s = bm25_scores(docs, QUERY_TERMS).orderBy(F.desc("bm25"), "doc_id").limit(50)
-        score_rows = s.select(
-            F.lit("score").alias("leg"),
-            F.col("doc_id").cast("string").alias("key"),
-            F.col("n_terms_hit").cast("double").alias("m1"),
-            F.col("bm25").alias("m2"),
-            F.lit(None).cast("string").alias("aux"),
-        )
-        idx = inverted_index(docs).orderBy(F.desc("df"), "term").limit(25)
-        post_rows = idx.select(
-            F.lit("postings").alias("leg"),
-            F.col("term").alias("key"),
-            F.col("df").cast("double").alias("m1"),
-            F.col("cf").cast("double").alias("m2"),
-            F.col("postings_head").alias("aux"),
-        )
-        # r9 third wave, 'zipf' leg: corpus rank-frequency diagnostics
-        # (slope / top-mass / type-token ratio) — see zipf_stats
-        zipf_rows = zipf_stats(docs).select(
-            F.lit("zipf").alias("leg"),
-            F.col("key"),
-            "m1",
-            "m2",
-            F.lit(None).cast("string").alias("aux"),
-        )
-        return score_rows.unionByName(post_rows).unionByName(zipf_rows)
-
-    def q_lm(spark, sf):
-        docs = spark.read.parquet(f"{sf}/documents.parquet")
-        return bigram_lm_scores(docs)
-
-    return {"text_bm25_topk": q_bm25, "text_lm_quality": q_lm}
+def q_text_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
+    # two tagged legs in one frame: 'score' = the BM25 top-50
+    # (deterministic: ordered by the ROUNDED score with doc_id as
+    # the tiebreak), 'postings' = the 25 highest-df entries of the
+    # inverted index with capped posting heads. Uniform schema
+    # (leg, key, m1, m2, aux).
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    s = bm25_scores(docs, QUERY_TERMS).orderBy(F.desc("bm25"), "doc_id").limit(50)
+    score_rows = s.select(
+        F.lit("score").alias("leg"),
+        F.col("doc_id").cast("string").alias("key"),
+        F.col("n_terms_hit").cast("double").alias("m1"),
+        F.col("bm25").alias("m2"),
+        F.lit(None).cast("string").alias("aux"),
+    )
+    idx = inverted_index(docs).orderBy(F.desc("df"), "term").limit(25)
+    post_rows = idx.select(
+        F.lit("postings").alias("leg"),
+        F.col("term").alias("key"),
+        F.col("df").cast("double").alias("m1"),
+        F.col("cf").cast("double").alias("m2"),
+        F.col("postings_head").alias("aux"),
+    )
+    # r9 third wave, 'zipf' leg: corpus rank-frequency diagnostics
+    # (slope / top-mass / type-token ratio) — see zipf_stats
+    zipf_rows = zipf_stats(docs).select(
+        F.lit("zipf").alias("leg"),
+        F.col("key"),
+        "m1",
+        "m2",
+        F.lit(None).cast("string").alias("aux"),
+    )
+    return score_rows.unionByName(post_rows).unionByName(zipf_rows)
 
 
-def scoring_oracles() -> dict[str, str]:
-    from data_integration_and_harmonization_spark.operators.text import TOKEN_RE
+def q_text_lm_quality(spark: SparkSession, sf: str) -> DataFrame:
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    return bigram_lm_scores(docs)
 
-    toks = f"regexp_extract_all(lower(text), '{TOKEN_RE}')"
-    terms_sql = ", ".join(f"'{t}'" for t in QUERY_TERMS)
-    return {
-        "text_bm25_topk": f"""
+
+_TOKS = f"regexp_extract_all(lower(text), '{TOKEN_RE}')"
+
+_TERMS_SQL = ", ".join(f"'{t}'" for t in QUERY_TERMS)
+
+TEXT_BM25_TOPK_SQL = f"""
 WITH tok AS (
-  SELECT doc_id AS id, len({toks}) AS dl, unnest({toks}) AS term
+  SELECT doc_id AS id, len({_TOKS}) AS dl, unnest({_TOKS}) AS term
   FROM documents
 ), stats AS (
-  SELECT count(*)::DOUBLE AS n_docs, avg(len({toks})) AS avgdl FROM documents
+  SELECT count(*)::DOUBLE AS n_docs, avg(len({_TOKS})) AS avgdl FROM documents
 ), tf AS (
   SELECT id, term, count(*)::DOUBLE AS tf, any_value(dl)::DOUBLE AS dl
-  FROM tok WHERE term IN ({terms_sql}) GROUP BY 1, 2
+  FROM tok WHERE term IN ({_TERMS_SQL}) GROUP BY 1, 2
 ), dfreq AS (
   SELECT term, count(*)::DOUBLE AS df FROM tf GROUP BY 1
 ), scores AS (
@@ -385,11 +381,12 @@ FROM (
   UNION ALL
   SELECT 'vocab', v, round(v / n_total, 6) FROM zt
 ) z
-""",
-        "text_lm_quality": f"""
+"""
+
+TEXT_LM_QUALITY_SQL = f"""
 WITH pairs AS (
   SELECT id, l[i] AS w1, l[i + 1] AS w2
-  FROM (SELECT doc_id AS id, {toks} AS l FROM documents),
+  FROM (SELECT doc_id AS id, {_TOKS} AS l FROM documents),
        unnest(range(1, greatest(len(l) - 1, 0) + 1)) AS r(i)
 ), c2 AS (
   SELECT w1, w2, count(*)::DOUBLE AS c2 FROM pairs GROUP BY 1, 2
@@ -397,11 +394,10 @@ WITH pairs AS (
   SELECT w1, count(*)::DOUBLE AS c1 FROM pairs GROUP BY 1
 ), vocab AS (
   SELECT count(DISTINCT tok)::DOUBLE AS v
-  FROM (SELECT unnest({toks}) AS tok FROM documents)
+  FROM (SELECT unnest({_TOKS}) AS tok FROM documents)
 )
 SELECT id AS doc_id, count(*)::BIGINT AS n_bigrams,
        round(avg(ln((c2 + 1.0) / (c1 + v))), 6) AS avg_logp
 FROM pairs JOIN c2 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN vocab
 GROUP BY id
-""",
-    }
+"""

@@ -22,8 +22,6 @@ Scale shape:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -235,90 +233,89 @@ def k_anonymity_report(
     )
 
 
-# ------------------------------------------------------- query registry
+# ------------------------------------------------------- queries and oracles
 
 
-def scrub_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    def q_decontaminate(spark, sf):
-        docs = spark.read.parquet(f"{sf}/documents.parquet")
-        # eval set = 200-char passages of every 50th doc — how
-        # benchmark contamination manifests (verbatim spans of corpus
-        # docs inside the eval set), deterministic at every sf
-        ev = docs.where(F.col("doc_id") % 50 == 0).select(
-            F.substring("text", 1, 200).alias("text")
-        )
-        return decontaminate(docs, ev, gram=5, threshold=0.2)
-
-    def q_scrub(spark, sf):
-        docs = spark.read.parquet(f"{sf}/documents.parquet")
-        # deterministic PII injection: the synthetic corpus carries no
-        # PII, so the query plants one span per class keyed on doc_id
-        # (both engines replay the same concat), then redacts
-        d = F.col("doc_id")
-        injected = F.concat_ws(
-            " ",
-            F.col("text"),
-            F.concat(F.lit("user"), d.cast("string"), F.lit("@example.com")),
-            F.concat(F.lit("555-010-"), F.lpad((d % 10000).cast("string"), 4, "0")),
-            F.concat(
-                F.lpad((d % 1000).cast("string"), 3, "0"),
-                F.lit("-"),
-                F.lpad((d % 100).cast("string"), 2, "0"),
-                F.lit("-"),
-                F.lpad((d % 10000).cast("string"), 4, "0"),
-            ),
-            F.concat(
-                F.lit("10.0."),
-                (d % 256).cast("string"),
-                F.lit("."),
-                ((d / 256).cast("long") % 256).cast("string"),
-            ),
-        )
-        red = redact_pii(docs.select("doc_id", injected.alias("text")))
-        # r9 third wave: pseudonymization rides as the author token —
-        # ~50 docs share each synthetic author, so identical tokens
-        # across rows prove the join-preserving property end to end
-        authored = red.withColumn(
-            "author",
-            F.concat(F.lit("author"), (F.col("id") % 50).cast("string")),
-        )
-        tok = pseudonymize(authored, ["author"], salt="s3cret")
-        return tok.select(
-            "id",
-            "n_email",
-            "n_ssn",
-            "n_phone",
-            "n_ip",
-            F.md5("redacted").alias("redacted_fp"),
-            "redacted_len",
-            F.col("author").alias("author_token"),
-        )
-
-    return {"text_decontaminate": q_decontaminate, "text_scrub": q_scrub}
-
-
-def scrub_oracles() -> dict[str, str]:
-    toks = "regexp_extract_all(lower(text), '[A-Za-z0-9_]+')"
-    gram5 = (
-        "list_distinct(list_transform(range(1, greatest(len(t) - 4, 0) + 1), "
-        "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4]))"
+def q_text_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    # eval set = 200-char passages of every 50th doc — how
+    # benchmark contamination manifests (verbatim spans of corpus
+    # docs inside the eval set), deterministic at every sf
+    ev = docs.where(F.col("doc_id") % 50 == 0).select(
+        F.substring("text", 1, 200).alias("text")
     )
-    email, ssn, phone, ip = (
-        PII_PATTERNS["email"],
-        PII_PATTERNS["ssn"],
-        PII_PATTERNS["phone"],
-        PII_PATTERNS["ip"],
+    return decontaminate(docs, ev, gram=5, threshold=0.2)
+
+
+def q_text_scrub(spark: SparkSession, sf: str) -> DataFrame:
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    # deterministic PII injection: the synthetic corpus carries no
+    # PII, so the query plants one span per class keyed on doc_id
+    # (both engines replay the same concat), then redacts
+    d = F.col("doc_id")
+    injected = F.concat_ws(
+        " ",
+        F.col("text"),
+        F.concat(F.lit("user"), d.cast("string"), F.lit("@example.com")),
+        F.concat(F.lit("555-010-"), F.lpad((d % 10000).cast("string"), 4, "0")),
+        F.concat(
+            F.lpad((d % 1000).cast("string"), 3, "0"),
+            F.lit("-"),
+            F.lpad((d % 100).cast("string"), 2, "0"),
+            F.lit("-"),
+            F.lpad((d % 10000).cast("string"), 4, "0"),
+        ),
+        F.concat(
+            F.lit("10.0."),
+            (d % 256).cast("string"),
+            F.lit("."),
+            ((d / 256).cast("long") % 256).cast("string"),
+        ),
     )
-    return {
-        "text_decontaminate": f"""
+    red = redact_pii(docs.select("doc_id", injected.alias("text")))
+    # r9 third wave: pseudonymization rides as the author token —
+    # ~50 docs share each synthetic author, so identical tokens
+    # across rows prove the join-preserving property end to end
+    authored = red.withColumn(
+        "author",
+        F.concat(F.lit("author"), (F.col("id") % 50).cast("string")),
+    )
+    tok = pseudonymize(authored, ["author"], salt="s3cret")
+    return tok.select(
+        "id",
+        "n_email",
+        "n_ssn",
+        "n_phone",
+        "n_ip",
+        F.md5("redacted").alias("redacted_fp"),
+        "redacted_len",
+        F.col("author").alias("author_token"),
+    )
+
+
+_TOKS = "regexp_extract_all(lower(text), '[A-Za-z0-9_]+')"
+
+_GRAM5 = (
+    "list_distinct(list_transform(range(1, greatest(len(t) - 4, 0) + 1), "
+    "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4]))"
+)
+
+_EMAIL, _SSN, _PHONE, _IP = (
+    PII_PATTERNS["email"],
+    PII_PATTERNS["ssn"],
+    PII_PATTERNS["phone"],
+    PII_PATTERNS["ip"],
+)
+
+TEXT_DECONTAMINATE_SQL = f"""
 WITH ev_src AS (
   SELECT substr(text, 1, 200) AS text FROM documents WHERE doc_id % 50 = 0
 ), evg AS (
-  SELECT DISTINCT md5(unnest({gram5})) AS h
-  FROM (SELECT {toks} AS t FROM ev_src)
+  SELECT DISTINCT md5(unnest({_GRAM5})) AS h
+  FROM (SELECT {_TOKS} AS t FROM ev_src)
 ), ex AS (
-  SELECT doc_id AS id, md5(unnest({gram5})) AS g
-  FROM (SELECT doc_id, {toks} AS t FROM documents)
+  SELECT doc_id AS id, md5(unnest({_GRAM5})) AS g
+  FROM (SELECT doc_id, {_TOKS} AS t FROM documents)
 ), pd AS (
   SELECT id, count(*)::BIGINT AS n_grams,
          sum(CASE WHEN ev.h IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_hit
@@ -333,8 +330,9 @@ SELECT d.doc_id AS id,
              THEN pd.n_hit::DOUBLE / pd.n_grams ELSE 0.0 END, 6) >= 0.2
              THEN 1 ELSE 0 END)::INT AS contaminated
 FROM documents d LEFT JOIN pd ON pd.id = d.doc_id
-""",
-        "text_scrub": f"""
+"""
+
+TEXT_SCRUB_SQL = f"""
 WITH inj AS (
   SELECT doc_id,
          text || ' user' || doc_id || '@example.com'
@@ -349,19 +347,18 @@ WITH inj AS (
          regexp_replace(
            regexp_replace(
              regexp_replace(
-               regexp_replace(text, '{email}', '<EMAIL>', 'g'),
-               '{ssn}', '<SSN>', 'g'),
-             '{phone}', '<PHONE>', 'g'),
-           '{ip}', '<IP>', 'g') AS redacted,
-         len(regexp_extract_all(text, '{email}'))::BIGINT AS n_email,
-         len(regexp_extract_all(text, '{ssn}'))::BIGINT AS n_ssn,
-         len(regexp_extract_all(text, '{phone}'))::BIGINT AS n_phone,
-         len(regexp_extract_all(text, '{ip}'))::BIGINT AS n_ip
+               regexp_replace(text, '{_EMAIL}', '<EMAIL>', 'g'),
+               '{_SSN}', '<SSN>', 'g'),
+             '{_PHONE}', '<PHONE>', 'g'),
+           '{_IP}', '<IP>', 'g') AS redacted,
+         len(regexp_extract_all(text, '{_EMAIL}'))::BIGINT AS n_email,
+         len(regexp_extract_all(text, '{_SSN}'))::BIGINT AS n_ssn,
+         len(regexp_extract_all(text, '{_PHONE}'))::BIGINT AS n_phone,
+         len(regexp_extract_all(text, '{_IP}'))::BIGINT AS n_ip
   FROM inj
 )
 SELECT doc_id AS id, n_email, n_ssn, n_phone, n_ip,
        md5(redacted) AS redacted_fp, length(redacted)::BIGINT AS redacted_len,
        'tok_' || md5('s3cret:author' || (doc_id % 50)) AS author_token
 FROM red
-""",
-    }
+"""

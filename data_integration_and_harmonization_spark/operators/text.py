@@ -554,66 +554,63 @@ def document_text_table(
     )
 
 
-# ------------------------------------------------------- query registry
+# ------------------------------------------------------- queries and oracles
 
-def text_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    def q_profile(spark, sf):
-        # one query covering quality + langid + fingerprints + token
-        # counts (merged from r1's four text_* queries — the driver's
-        # correctness pass records at most 50 queries; one projection
-        # also IS the right scale shape: one scan, not four), plus the
-        # corpus-level duplicated-5-gram fraction (r5): the one
-        # profile column that needs a cross-document pass — a digest
-        # groupBy + join, see dedup.duplicated_ngram_stats
-        from data_integration_and_harmonization_spark.operators.dedup import (
-            duplicated_ngram_stats,
-            exact_substring_spans,
-            line_dedup,
-        )
+def q_text_profile(spark: SparkSession, sf: str) -> DataFrame:
+    # one query covering quality + langid + fingerprints + token
+    # counts (merged from r1's four text_* queries — the driver's
+    # correctness pass records at most 50 queries; one projection
+    # also IS the right scale shape: one scan, not four), plus the
+    # corpus-level duplicated-5-gram fraction (r5): the one
+    # profile column that needs a cross-document pass — a digest
+    # groupBy + join, see dedup.duplicated_ngram_stats
+    from data_integration_and_harmonization_spark.operators.dedup import (
+        duplicated_ngram_stats,
+        exact_substring_spans,
+        line_dedup,
+    )
 
-        docs = spark.read.parquet(f"{sf}/documents.parquet")
-        dup = duplicated_ngram_stats(docs, gram=5).select(
-            F.col("id").alias("doc_id"),
-            F.col("n_grams").alias("n_5grams"),
-            F.col("dup_frac").alias("dup_5gram_frac"),
-        )
-        # r8: C4-style cross-document line dedup as three more profile
-        # columns — same per-doc join shape as the 5-gram pass; the
-        # reassembled text rides as an md5 so only 16 bytes/doc reach
-        # the result (the full text_deduped column is for pipelines,
-        # not profiles)
-        ld = line_dedup(docs).select(
-            F.col("id").alias("doc_id"),
-            "n_lines",
-            "n_dup_lines",
-            F.md5("text_deduped").alias("dedup_text_md5"),
-        )
-        # r9: HTML->text extraction checksum — each doc wrapped in the
-        # deterministic HTML shell, extracted by html_to_text, md5'd;
-        # the oracle replays the identical regex pipeline in SQL
-        hx = docs.select(
-            "doc_id", html_roundtrip_md5("text").alias("html_extract_md5")
-        )
-        # r9 second wave: ExactSubstr-style duplicated-span geometry
-        # (dedup.exact_substring_spans) — merged >=2-occurrence 5-token
-        # windows per doc; same per-doc join shape as the 5-gram and
-        # line-dedup passes (k=5 suits the fixture's ~30-token docs;
-        # production k is 50)
-        ss = exact_substring_spans(docs, k=5).select(
-            F.col("id").alias("doc_id"),
-            "n_dup_spans",
-            "dup_span_tokens",
-            "dup_span_frac",
-        )
-        return (
-            document_profile(docs)
-            .join(dup, "doc_id")
-            .join(ld, "doc_id")
-            .join(hx, "doc_id")
-            .join(ss, "doc_id")
-        )
-
-    return {"text_profile": q_profile}
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    dup = duplicated_ngram_stats(docs, gram=5).select(
+        F.col("id").alias("doc_id"),
+        F.col("n_grams").alias("n_5grams"),
+        F.col("dup_frac").alias("dup_5gram_frac"),
+    )
+    # r8: C4-style cross-document line dedup as three more profile
+    # columns — same per-doc join shape as the 5-gram pass; the
+    # reassembled text rides as an md5 so only 16 bytes/doc reach
+    # the result (the full text_deduped column is for pipelines,
+    # not profiles)
+    ld = line_dedup(docs).select(
+        F.col("id").alias("doc_id"),
+        "n_lines",
+        "n_dup_lines",
+        F.md5("text_deduped").alias("dedup_text_md5"),
+    )
+    # r9: HTML->text extraction checksum — each doc wrapped in the
+    # deterministic HTML shell, extracted by html_to_text, md5'd;
+    # the oracle replays the identical regex pipeline in SQL
+    hx = docs.select(
+        "doc_id", html_roundtrip_md5("text").alias("html_extract_md5")
+    )
+    # r9 second wave: ExactSubstr-style duplicated-span geometry
+    # (dedup.exact_substring_spans) — merged >=2-occurrence 5-token
+    # windows per doc; same per-doc join shape as the 5-gram and
+    # line-dedup passes (k=5 suits the fixture's ~30-token docs;
+    # production k is 50)
+    ss = exact_substring_spans(docs, k=5).select(
+        F.col("id").alias("doc_id"),
+        "n_dup_spans",
+        "dup_span_tokens",
+        "dup_span_frac",
+    )
+    return (
+        document_profile(docs)
+        .join(dup, "doc_id")
+        .join(ld, "doc_id")
+        .join(hx, "doc_id")
+        .join(ss, "doc_id")
+    )
 
 
 def _sql_stop_hits(lang: str) -> str:
@@ -624,21 +621,25 @@ def _sql_stop_hits(lang: str) -> str:
     )
 
 
-def text_oracles() -> dict[str, str]:
-    hits = {lang: _sql_stop_hits(lang) for lang in sorted(STOPWORDS)}
-    best = f"greatest({hits['de']}, {hits['en']}, {hits['es']}, {hits['fr']})"
-    langid_case = "CASE " + " ".join(
-        f"WHEN {best} > 0 AND {hits[lang]} = {best} THEN '{lang}'" for lang in sorted(STOPWORDS)
-    ) + " ELSE 'und' END"
-    return {
-        "text_profile": f"""
+# stopword hits per language and the language-id CASE over them: most
+# hits wins, ties go to the first language in sorted order, no hits is
+# 'und' (plans.curation filters on the same CASE)
+_HITS = {lang: _sql_stop_hits(lang) for lang in sorted(STOPWORDS)}
+_BEST = "greatest(" + ", ".join(_HITS.values()) + ")"
+_LANGID_CASE = (
+    "CASE "
+    + " ".join(f"WHEN {_BEST} > 0 AND {hits} = {_BEST} THEN '{lang}'" for lang, hits in _HITS.items())
+    + " ELSE 'und' END"
+)
+
+TEXT_PROFILE_SQL = f"""
 WITH t AS (
   SELECT doc_id, text,
          regexp_extract_all(lower(text), '{TOKEN_RE}') AS toks,
          length(text) AS n_chars,
          length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
-         {hits['en']} AS stop_hits,
-         {langid_case} AS lang_pred
+         {_HITS['en']} AS stop_hits,
+         {_LANGID_CASE} AS lang_pred
   FROM documents
 ), s AS (
   SELECT doc_id, text, lang_pred, len(toks) AS n_tokens, n_chars,
@@ -739,5 +740,4 @@ SELECT s.doc_id AS doc_id, n_tokens::INTEGER AS n_tokens, n_chars::INTEGER AS n_
 FROM s LEFT JOIN pd ON pd.doc_id = s.doc_id
 JOIN lpd ON lpd.id = s.doc_id
 LEFT JOIN ssa ON ssa.id = s.doc_id
-""",
-    }
+"""

@@ -29,9 +29,10 @@ prefix-sum (no single-task stage).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_integration_and_harmonization_spark.operators.dedup import _SHINGLES, _md5_minhash_cte
 from data_integration_and_harmonization_spark.operators.packing import (
     chunk_documents,
     pack_sequences,
@@ -39,6 +40,8 @@ from data_integration_and_harmonization_spark.operators.packing import (
 from data_integration_and_harmonization_spark.operators.sampling import sample_hash
 from data_integration_and_harmonization_spark.operators.scrub import decontaminate
 from data_integration_and_harmonization_spark.operators.text import (
+    _LANGID_CASE,
+    TOKEN_RE,
     fingerprint,
     language_id_column,
 )
@@ -269,97 +272,72 @@ def curate_and_pack(
     return pack_sequences(chunks, ["id", "chunk_idx"], "n_chunk_tokens", budget=budget)
 
 
-# ------------------------------------------------------- query registry
+# ------------------------------------------------------- queries and oracles
 
 
-def curation_queries():
-    def q_curate(spark, sf):
-        """The whole funnel as one driver-visible query: per-stage
-        (n_docs, n_tokens) rows plus a final 'packed' row
-        (n_docs = number of context windows, n_tokens = tokens
-        packed). Eval set for decontamination = 200-char passages of
-        every 50th doc (the same shape text_decontaminate pins)."""
-        from data_integration_and_harmonization_spark.functions.caching import track
+def q_curate_pipeline(spark: SparkSession, sf: str) -> DataFrame:
+    """The whole funnel as one driver-visible query: per-stage
+    (n_docs, n_tokens) rows plus a final 'packed' row
+    (n_docs = number of context windows, n_tokens = tokens
+    packed). Eval set for decontamination = 200-char passages of
+    every 50th doc (the same shape text_decontaminate pins)."""
+    from data_integration_and_harmonization_spark.functions.caching import track
 
-        docs = spark.read.parquet(f"{sf}/documents.parquet")
-        ev = docs.where(F.col("doc_id") % 50 == 0).select(
-            F.substring("text", 1, 200).alias("text")
-        )
-        ann = track(curate_annotate(docs, ev).persist())
-        rows = curation_report(ann)
-        packs = curate_and_pack(ann)
-        packed_row = packs.agg(
-            F.lit("packed").alias("stage"),
-            F.countDistinct("pack_id").alias("n_docs"),
-            F.coalesce(F.sum("tok_in_pack"), F.lit(0)).cast("long").alias("n_tokens"),
-        )
-        return rows.unionByName(packed_row)
-
-    return {"curate_pipeline": q_curate}
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    ev = docs.where(F.col("doc_id") % 50 == 0).select(
+        F.substring("text", 1, 200).alias("text")
+    )
+    ann = track(curate_annotate(docs, ev).persist())
+    rows = curation_report(ann)
+    packs = curate_and_pack(ann)
+    packed_row = packs.agg(
+        F.lit("packed").alias("stage"),
+        F.countDistinct("pack_id").alias("n_docs"),
+        F.coalesce(F.sum("tok_in_pack"), F.lit(0)).cast("long").alias("n_tokens"),
+    )
+    return rows.unionByName(packed_row)
 
 
-def curation_oracles():
-    from data_integration_and_harmonization_spark.operators.dedup import (
-        _md5_minhash_cte,
-    )
-    from data_integration_and_harmonization_spark.operators.text import (
-        STOPWORDS,
-        TOKEN_RE,
-        _sql_stop_hits,
-    )
+_GRAM5 = (
+    "list_distinct(list_transform(range(1, greatest(len(toks) - 4, 0) + 1), "
+    "i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3] || ' ' || toks[i+4]))"
+)
 
-    hits = {lang: _sql_stop_hits(lang) for lang in sorted(STOPWORDS)}
-    best = "greatest(" + ", ".join(hits[lang] for lang in sorted(STOPWORDS)) + ")"
-    langid_case = (
-        "CASE "
-        + " ".join(
-            f"WHEN {best} > 0 AND {hits[lang]} = {best} THEN '{lang}'"
-            for lang in sorted(STOPWORDS)
-        )
-        + " ELSE 'und' END"
-    )
-    gram5 = (
-        "list_distinct(list_transform(range(1, greatest(len(toks) - 4, 0) + 1), "
-        "i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3] || ' ' || toks[i+4]))"
-    )
-    # MinHash-LSH candidate graph over the exact-dedup survivors —
-    # the shared md5-family CTE chain from operators.dedup, spliced
-    # bare into this WITH block with the survivor set as its source
-    gram3 = (
-        f"list_distinct(list_transform("
-        f"range(1, greatest(len(regexp_extract_all(lower(text), '{TOKEN_RE}')) - 2, 0) + 1), "
-        f"i -> regexp_extract_all(lower(text), '{TOKEN_RE}')[i] || ' ' || "
-        f"regexp_extract_all(lower(text), '{TOKEN_RE}')[i+1] || ' ' || "
-        f"regexp_extract_all(lower(text), '{TOKEN_RE}')[i+2]))"
-    )
-    minhash = _md5_minhash_cte(
-        gram3,
-        source="(SELECT doc_id, text FROM f3 WHERE dedup_pass)",
-        bare=True,
-    )
-    net = "concat(length(CAST(doc_id AS VARCHAR)), ':', CAST(doc_id AS VARCHAR))"
-    hu = f"CAST(concat('0x', substr(md5(concat({net}, ':42')), 1, 15)) AS BIGINT) % 1000000"
-    chunk, stride, budget = 128, 96, 512
-    stage_rows = "\nUNION ALL\n".join(
-        f"SELECT '{name}', sum(CASE WHEN {flag} THEN 1 ELSE 0 END)::BIGINT, "
-        f"coalesce(sum(CASE WHEN {flag} THEN n_tok END), 0)::BIGINT FROM f5"
-        for name, flag in [
-            ("quality", "q_pass"),
-            ("language", "lang_pass"),
-            ("exact_dedup", "dedup_pass"),
-            ("near_dedup", "near_pass"),
-            ("decontaminate", "decon_pass"),
-            ("sample", "sample_pass"),
-        ]
-    )
-    return {
-        "curate_pipeline": f"""
+# MinHash-LSH candidate graph over the exact-dedup survivors —
+# the shared md5-family CTE chain from operators.dedup, spliced
+# bare into this WITH block with the survivor set as its source
+_MINHASH = _md5_minhash_cte(
+    _SHINGLES,
+    source="(SELECT doc_id, text FROM f3 WHERE dedup_pass)",
+    bare=True,
+)
+
+_NET = "concat(length(CAST(doc_id AS VARCHAR)), ':', CAST(doc_id AS VARCHAR))"
+
+_HU = f"CAST(concat('0x', substr(md5(concat({_NET}, ':42')), 1, 15)) AS BIGINT) % 1000000"
+
+_CHUNK, _STRIDE, _BUDGET = 128, 96, 512
+
+_STAGE_ROWS = "\nUNION ALL\n".join(
+    f"SELECT '{name}', sum(CASE WHEN {flag} THEN 1 ELSE 0 END)::BIGINT, "
+    f"coalesce(sum(CASE WHEN {flag} THEN n_tok END), 0)::BIGINT FROM f5"
+    for name, flag in [
+        ("quality", "q_pass"),
+        ("language", "lang_pass"),
+        ("exact_dedup", "dedup_pass"),
+        ("near_dedup", "near_pass"),
+        ("decontaminate", "decon_pass"),
+        ("sample", "sample_pass"),
+    ]
+)
+
+CURATE_PIPELINE_SQL = f"""
 WITH RECURSIVE t AS MATERIALIZED (
   SELECT doc_id, text,
          regexp_extract_all(lower(text), '{TOKEN_RE}') AS toks,
          length(text) AS n_chars,
          length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
-         {langid_case} AS lang_pred
+         {_LANGID_CASE} AS lang_pred
   FROM documents
 ), f AS (
   SELECT doc_id, text, toks, coalesce(len(toks), 0) AS n_tok, lang_pred,
@@ -375,7 +353,7 @@ WITH RECURSIVE t AS MATERIALIZED (
 ), f3 AS MATERIALIZED (
   SELECT f2.*, coalesce(f2.lang_pass AND f2.doc_id = k.keep_id, FALSE) AS dedup_pass
   FROM f2 LEFT JOIN keep k ON k.fp = f2.fp
-), {minhash}, verified AS (
+), {_MINHASH}, verified AS (
   SELECT c.id_a, c.id_b
   FROM cand c JOIN sh a ON a.id = c.id_a JOIN sh b ON b.id = c.id_b
   WHERE round(CASE WHEN len(list_distinct(a.shl || b.shl)) > 0
@@ -399,9 +377,9 @@ WITH RECURSIVE t AS MATERIALIZED (
   SELECT regexp_extract_all(lower(substr(text, 1, 200)), '{TOKEN_RE}') AS toks
   FROM documents WHERE doc_id % 50 = 0
 ), evg AS (
-  SELECT DISTINCT md5(unnest({gram5})) AS h FROM ev
+  SELECT DISTINCT md5(unnest({_GRAM5})) AS h FROM ev
 ), cx AS (
-  SELECT doc_id, md5(unnest({gram5})) AS g FROM f3b WHERE near_pass
+  SELECT doc_id, md5(unnest({_GRAM5})) AS g FROM f3b WHERE near_pass
 ), pd AS (
   SELECT doc_id, count(*)::BIGINT AS n_grams,
          sum(CASE WHEN ev.h IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_hit
@@ -413,15 +391,15 @@ WITH RECURSIVE t AS MATERIALIZED (
            FALSE) AS decon_pass
   FROM f3b LEFT JOIN pd ON pd.doc_id = f3b.doc_id
 ), f5 AS MATERIALIZED (
-  SELECT *, decon_pass AND ({hu} < 500000) AS sample_pass FROM f4
+  SELECT *, decon_pass AND ({_HU} < 500000) AS sample_pass FROM f4
 ), chunks AS (
-  SELECT doc_id, (s / {stride})::BIGINT AS chunk_idx,
-         least({chunk}, n_tok - s)::BIGINT AS ctok
+  SELECT doc_id, (s / {_STRIDE})::BIGINT AS chunk_idx,
+         least({_CHUNK}, n_tok - s)::BIGINT AS ctok
   FROM (SELECT doc_id, n_tok FROM f5 WHERE sample_pass AND n_tok > 0),
        unnest(generate_series(
          0,
-         CAST({stride} * ceil(greatest(n_tok - {chunk}, 0) / {stride}.0) AS BIGINT),
-         {stride})) AS u(s)
+         CAST({_STRIDE} * ceil(greatest(n_tok - {_CHUNK}, 0) / {_STRIDE}.0) AS BIGINT),
+         {_STRIDE})) AS u(s)
 ), c AS (
   SELECT doc_id, chunk_idx, ctok,
          sum(ctok) OVER (ORDER BY doc_id, chunk_idx
@@ -429,17 +407,16 @@ WITH RECURSIVE t AS MATERIALIZED (
   FROM chunks
 ), spans AS (
   SELECT doc_id, p,
-         (least(cum - 1, (p + 1) * {budget} - 1)
-          - greatest(cum - ctok, p * {budget}) + 1)::BIGINT AS tok_in_pack
-  FROM c, unnest(generate_series(CAST((cum - ctok) // {budget} AS BIGINT),
-                                 CAST((cum - 1) // {budget} AS BIGINT))) AS u(p)
+         (least(cum - 1, (p + 1) * {_BUDGET} - 1)
+          - greatest(cum - ctok, p * {_BUDGET}) + 1)::BIGINT AS tok_in_pack
+  FROM c, unnest(generate_series(CAST((cum - ctok) // {_BUDGET} AS BIGINT),
+                                 CAST((cum - 1) // {_BUDGET} AS BIGINT))) AS u(p)
 )
 SELECT stage, n_docs, n_tokens FROM (
   SELECT 'input' AS stage, count(*)::BIGINT AS n_docs, sum(n_tok)::BIGINT AS n_tokens FROM f5
   UNION ALL
-  {stage_rows}
+  {_STAGE_ROWS}
   UNION ALL
   SELECT 'packed', count(DISTINCT p)::BIGINT, coalesce(sum(tok_in_pack), 0)::BIGINT FROM spans
 )
-""",
-    }
+"""

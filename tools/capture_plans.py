@@ -33,9 +33,14 @@ def main() -> int:
         "plans",
         os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r14"),
     )
+    qs = entrymod.queries()
+    unknown = only - set(qs)
+    if unknown:
+        # a typo'd name would otherwise capture nothing and return 0
+        print(f"unknown queries: {sorted(unknown)}", file=sys.stderr)
+        return 2
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("capture_plans")
-    qs = entrymod.queries()
     rc = 0
     for name in sorted(qs):
         if only and name not in only:

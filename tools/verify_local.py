@@ -11,10 +11,11 @@ Usage: python tools/verify_local.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
@@ -77,13 +78,19 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from data_integration_and_harmonization_spark import get_spark
 
+    qs = entrymod.queries()
+    unknown = only - set(qs)
+    if unknown:
+        # a typo'd name would otherwise check nothing and report ALL GREEN
+        print(f"unknown queries: {sorted(unknown)}", file=sys.stderr)
+        return 2
+    oracles = entrymod.oracle_sql()
+
     spark = get_spark("verify_local")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
