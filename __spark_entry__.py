@@ -9,7 +9,12 @@
 Both are derived from ``CATALOG``, the one ordered table of
 ``(name, builder, oracle_sql)`` rows at the end of this module; each
 builder and its oracle string live in the module whose operators they
-exercise.
+exercise. A builder slot holds either a builder ``(spark, sf) ->
+DataFrame`` (one leg, named ``all``) or a declared ``(setup, legs)``
+pair that ``_run_legs`` runs: ``setup(spark, sf) -> ctx`` builds what
+the legs share, every ``(leg_name, build)`` in ``legs`` maps
+``build(ctx) -> DataFrame`` on its own driver thread, and the result is
+their union in declared order. No leg reads another leg's result.
 
 Column names are aliased identically on both sides; float outputs are
 rounded to 6 decimals on both sides so the order-insensitive value
@@ -18,12 +23,25 @@ hash is deterministic across engines.
 
 from __future__ import annotations
 
+import functools
+import json
+import os
+import uuid
+import zipfile
 from collections.abc import Callable
+from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from data_integration_and_harmonization_spark.functions.caching import release_all, scratch_dir, track
 from data_integration_and_harmonization_spark.functions.concurrency import overlap
+from data_integration_and_harmonization_spark.functions.pdf import (
+    encode_pdf,
+    encode_pdf_cid,
+    encode_pdf_positioned,
+)
 from data_integration_and_harmonization_spark.functions.indexing import with_global_index
 from data_integration_and_harmonization_spark.operators import clean as C
 from data_integration_and_harmonization_spark.operators import dedup as DD
@@ -46,6 +64,30 @@ from data_integration_and_harmonization_spark.operators import text as TX
 from data_integration_and_harmonization_spark.plans import curation as CUR
 from data_integration_and_harmonization_spark.plans import pipeline as PL
 from data_integration_and_harmonization_spark.plans import sql as _SQL
+from data_integration_and_harmonization_spark.sources import manifest as MF
+from data_integration_and_harmonization_spark.sources.cdf_stream import read_manifest_cdf
+from data_integration_and_harmonization_spark.sources.docx import encode_docx, encode_pptx
+from data_integration_and_harmonization_spark.sources.epub import encode_epub
+from data_integration_and_harmonization_spark.sources.pyds import read_xlsx_corpus
+from data_integration_and_harmonization_spark.sources.readers import (
+    preview,
+    read_ass,
+    read_csv_audited,
+    read_sources,
+    read_srt,
+    read_vtt,
+    write_parquet,
+)
+from data_integration_and_harmonization_spark.sources.warc import (
+    encode_warc,
+    read_warc,
+    read_zip_corpus,
+)
+from data_integration_and_harmonization_spark.sources.wiki import encode_mediawiki, read_mediawiki
+from data_integration_and_harmonization_spark.sources.writers import compact_files, write_zordered
+from data_integration_and_harmonization_spark.sources.xlsx import write_xlsx
+from data_integration_and_harmonization_spark.streaming import pipeline as SP
+from data_integration_and_harmonization_spark.streaming import stateful as ST
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -64,18 +106,46 @@ def _ensure_session_defaults(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.ansi.enabled", "false")
 
 
-def _guarded(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:
+Builder = Callable[[SparkSession, str], DataFrame]
+Setup = Callable[[SparkSession, str], dict[str, Any]]
+Legs = tuple[tuple[str, Callable[[dict[str, Any]], DataFrame]], ...]
+
+
+def _guarded(fn: Builder) -> Builder:
     def wrapped(spark: SparkSession, sf: str) -> DataFrame:
         _ensure_session_defaults(spark)
         # Release persisted frames the PREVIOUS query tracked (its
         # actions have completed by the time the runner invokes the
         # next query) — keeps long sessions from accumulating caches.
-        from data_integration_and_harmonization_spark.functions.caching import release_all
-
         release_all()
         return fn(spark, sf)
 
     return wrapped
+
+
+def as_legs(slot: Builder | tuple[Setup, Legs]) -> tuple[Setup, Legs]:
+    """The ``(setup, legs)`` of a catalog builder slot; a plain builder
+    is one leg named ``all`` whose setup hands on the session and sf."""
+    if callable(slot):
+        return (
+            lambda spark, sf: {"spark": spark, "sf": sf},
+            (("all", lambda ctx: slot(ctx["spark"], ctx["sf"])),),
+        )
+    return slot
+
+
+def _run_legs(setup: Setup, legs: Legs) -> Builder:
+    """The one runner of declared legs: ``ctx = setup(spark, sf)``, then
+    every leg's build on its own driver thread (``overlap``: the legs'
+    short driver actions back-fill each other's idle cores), then the
+    union in declared order."""
+
+    def run(spark: SparkSession, sf: str) -> DataFrame:
+        ctx = setup(spark, sf)
+        frames = overlap(*(functools.partial(build, ctx) for _, build in legs))
+        return functools.reduce(DataFrame.unionByName, frames)
+
+    return run
 
 LINEITEM_NUM = [
     "l_orderkey",
@@ -263,36 +333,54 @@ def q_clean_cascade(spark: SparkSession, sf: str) -> DataFrame:
     return C.process_data(cust, order_col="c_custkey")
 
 
-def q_describe_all(spark: SparkSession, sf: str) -> DataFrame:
-    """describe(include='all') — the reference's mixed numeric+object
-    summary frame (C6), tagged by kind in one query entry."""
-    li = spark.read.parquet(f"{sf}/lineitem.parquet")
-    cust = spark.read.parquet(f"{sf}/customer.parquet")
-    stats = ["mean", "std", "min", "p25", "p50", "p75", "max"]
-    num = P.describe_numeric(li, LINEITEM_NUM).select(
+_DESCRIBE_STATS = ["mean", "std", "min", "p25", "p50", "p75", "max"]
+
+
+def _null_stats() -> list[Column]:
+    """NULL double slots for every describe stat after ``mean``."""
+    return [F.lit(None).cast("double").alias(c) for c in _DESCRIBE_STATS[1:]]
+
+
+def _describe_setup(spark: SparkSession, sf: str) -> dict[str, Any]:
+    return {
+        "spark": spark,
+        "li": spark.read.parquet(f"{sf}/lineitem.parquet"),
+        "cust": spark.read.parquet(f"{sf}/customer.parquet"),
+        "orders": spark.read.parquet(f"{sf}/orders.parquet"),
+    }
+
+
+def _describe_numeric(ctx: dict[str, Any]) -> DataFrame:
+    return P.describe_numeric(ctx["li"], LINEITEM_NUM).select(
         F.lit("numeric").alias("kind"),
         F.col("column").alias("col_name"),
         "count",
-        *[F.round(c, 6).alias(c) for c in stats],
+        *[F.round(c, 6).alias(c) for c in _DESCRIBE_STATS],
         F.lit(None).cast("long").alias("n_unique"),
         F.lit(None).cast("string").alias("top"),
         F.lit(None).cast("long").alias("freq"),
     )
-    obj = P.describe_object(cust, ["c_name", "c_mktsegment"]).select(
+
+
+def _describe_object(ctx: dict[str, Any]) -> DataFrame:
+    return P.describe_object(ctx["cust"], ["c_name", "c_mktsegment"]).select(
         F.lit("object").alias("kind"),
         F.col("column").alias("col_name"),
         "count",
-        *[F.lit(None).cast("double").alias(c) for c in stats],
+        *[F.lit(None).cast("double").alias(c) for c in _DESCRIBE_STATS],
         F.col("unique").alias("n_unique"),
         "top",
         "freq",
     )
+
+
+def _describe_dq(ctx: dict[str, Any]) -> DataFrame:
     # r8 'dq' legs: Deequ-style declarative validation — four rule
     # families in ONE agg pass over orders plus the referential-
     # integrity anti-join, mapped into the describe schema
     # (count=n_checked, n_unique=n_violations, mean=violation_rate,
     # freq=ok).
-    orders = spark.read.parquet(f"{sf}/orders.parquet")
+    orders, cust = ctx["orders"], ctx["cust"]
     rules = P.dq_report(
         orders,
         [
@@ -325,16 +413,19 @@ def q_describe_all(spark: SparkSession, sf: str) -> DataFrame:
             ],
         )
     )
-    dq = rules.select(
+    return rules.select(
         F.lit("dq").alias("kind"),
         F.col("rule").alias("col_name"),
         F.col("n_checked").alias("count"),
         F.col("violation_rate").alias("mean"),
-        *[F.lit(None).cast("double").alias(c) for c in stats[1:]],
+        *_null_stats(),
         F.col("n_violations").alias("n_unique"),
         F.col("col_name").alias("top"),
         F.col("ok").alias("freq"),
     )
+
+
+def _describe_split(ctx: dict[str, Any]) -> DataFrame:
     # r9 'dq_split' legs: row-level quarantine routing (P.dq_split,
     # the Deequ row-level-results shape) under rules that genuinely
     # fire on this data — high prices out of range, low priorities
@@ -345,14 +436,14 @@ def q_describe_all(spark: SparkSession, sf: str) -> DataFrame:
     # distinct violation LABEL SETS on the quarantined side (pins the
     # per-row array annotation, not just the split).
     passed, quarantined = P.dq_split(
-        orders,
+        ctx["orders"],
         [
             ("in_range", "o_totalprice", 0.0, 150000.0),
             ("accepted", "o_orderpriority", ["1-URGENT", "2-HIGH", "3-MEDIUM"]),
             ("unique", "o_custkey"),
         ],
     )
-    split_rows = (
+    return (
         passed.agg(
             F.count(F.lit(1)).alias("count"),
             F.lit(None).cast("long").alias("n_unique"),
@@ -373,12 +464,15 @@ def q_describe_all(spark: SparkSession, sf: str) -> DataFrame:
             "col_name",
             "count",
             F.lit(None).cast("double").alias("mean"),
-            *[F.lit(None).cast("double").alias(c) for c in stats[1:]],
+            *_null_stats(),
             "n_unique",
             F.lit(None).cast("string").alias("top"),
             F.lit(None).cast("long").alias("freq"),
         )
     )
+
+
+def _describe_privacy(ctx: dict[str, Any]) -> DataFrame:
     # r9 second wave, 'privacy' legs: k-anonymity / l-diversity release
     # audit (SCRUB.k_anonymity_report) over the customer
     # quasi-identifiers (nation, segment) with bucketized account
@@ -387,7 +481,7 @@ def q_describe_all(spark: SparkSession, sf: str) -> DataFrame:
     # mean=rows-at-risk rate, n_unique=n_failing_classes,
     # top=min class size (k row), freq=rule ok.
     audit = SCRUB.k_anonymity_report(
-        cust.withColumn(
+        ctx["cust"].withColumn(
             "acct_bucket", F.floor(F.col("c_acctbal") / 1000).cast("long")
         ),
         ["c_nationkey", "c_mktsegment"],
@@ -395,13 +489,12 @@ def q_describe_all(spark: SparkSession, sf: str) -> DataFrame:
         k=5,
         l=2,
     )
-    null_stats = [F.lit(None).cast("double").alias(c) for c in stats[1:]]
-    priv_rows = audit.select(
+    return audit.select(
         F.lit("dq").alias("kind"),
         F.concat(F.lit("k_anon:"), F.col("quasi_cols")).alias("col_name"),
         F.col("n_classes").alias("count"),
         F.round(F.col("n_rows_at_risk") / F.col("n_rows"), 6).alias("mean"),
-        *null_stats,
+        *_null_stats(),
         F.col("n_small_classes").alias("n_unique"),
         F.col("min_class_size").cast("string").alias("top"),
         (F.col("n_small_classes") == 0).cast("long").alias("freq"),
@@ -411,12 +504,15 @@ def q_describe_all(spark: SparkSession, sf: str) -> DataFrame:
             F.lit("l_div:acct_bucket").alias("col_name"),
             F.col("n_classes").alias("count"),
             F.lit(None).cast("double").alias("mean"),
-            *null_stats,
+            *_null_stats(),
             F.col("n_low_diversity").alias("n_unique"),
             F.lit(None).cast("string").alias("top"),
             (F.col("n_low_diversity") == 0).cast("long").alias("freq"),
         )
     )
+
+
+def _describe_sketch(ctx: dict[str, Any]) -> DataFrame:
     # r10 'sketch' legs: mergeable-HLL cardinality profiling
     # (P.sketch_distinct_report) — the distinct-count a 100-TB profile
     # ships. count carries the exact twin (the oracle pin); freq
@@ -424,8 +520,8 @@ def q_describe_all(spark: SparkSession, sf: str) -> DataFrame:
     # sketches both within 5% of exact (merge path = how 1000
     # executors would profile: per-shard sketches, register-max
     # union, one tiny merge instead of a distinct-value shuffle).
-    sketch = P.sketch_distinct_report(
-        orders,
+    return P.sketch_distinct_report(
+        ctx["orders"],
         ["o_custkey", "o_orderdate", "o_orderpriority"],
         shard_key="o_orderkey",
     ).select(
@@ -433,11 +529,14 @@ def q_describe_all(spark: SparkSession, sf: str) -> DataFrame:
         F.concat(F.lit("hll:"), F.col("col_name")).alias("col_name"),
         F.col("n_exact").alias("count"),
         F.lit(None).cast("double").alias("mean"),
-        *null_stats,
+        *_null_stats(),
         F.lit(None).cast("long").alias("n_unique"),
         F.col("col_name").alias("top"),
         (F.col("merge_ok") * F.col("err_ok")).cast("long").alias("freq"),
     )
+
+
+def _describe_inc(ctx: dict[str, Any]) -> DataFrame:
     # r10 'sketch' INCREMENTAL legs: the store-backed profile
     # (P.profile_store_update / profile_store_estimate) — orders
     # arrives as two batches, each appends ~KB of per-column HLL
@@ -447,14 +546,9 @@ def q_describe_all(spark: SparkSession, sf: str) -> DataFrame:
     # n_unique the batch count (oracle: 2), freq the fused verdict —
     # store estimate within 5% of the whole-table exact distinct AND
     # row counts conserved across batches.
-    import os as _os
-
-    from data_integration_and_harmonization_spark.functions.caching import (
-        scratch_dir as _scratch,
-    )
-
+    orders = ctx["orders"]
     inc_cols = ["o_custkey", "o_orderpriority"]
-    store = _os.path.join(_scratch("profstore"), "orders_profile")
+    store = os.path.join(scratch_dir("profstore"), "orders_profile")
     P.profile_store_update(
         orders.where(F.col("o_orderkey") % 2 == 0), store, inc_cols
     )
@@ -469,15 +563,15 @@ def q_describe_all(spark: SparkSession, sf: str) -> DataFrame:
     x_of = F.when(
         F.col("col_name") == "o_custkey", F.col("x_o_custkey")
     ).otherwise(F.col("x_o_orderpriority"))
-    inc_rows = (
-        P.profile_store_estimate(spark, store)
+    return (
+        P.profile_store_estimate(ctx["spark"], store)
         .crossJoin(F.broadcast(exact))
         .select(
             F.lit("sketch").alias("kind"),
             F.concat(F.lit("inc:"), F.col("col_name")).alias("col_name"),
             F.col("n_rows").alias("count"),
             F.lit(None).cast("double").alias("mean"),
-            *null_stats,
+            *_null_stats(),
             F.col("n_batches").alias("n_unique"),
             F.col("col_name").alias("top"),
             (
@@ -486,14 +580,23 @@ def q_describe_all(spark: SparkSession, sf: str) -> DataFrame:
             ).cast("long").alias("freq"),
         )
     )
-    return (
-        num.unionByName(obj)
-        .unionByName(dq)
-        .unionByName(split_rows)
-        .unionByName(priv_rows)
-        .unionByName(sketch)
-        .unionByName(inc_rows)
-    )
+
+
+# describe(include='all') — the reference's mixed numeric+object
+# summary frame (C6), tagged by kind in one query entry, plus the
+# data-quality, privacy and sketch profiles in the same row shape.
+DESCRIBE_ALL_LEGS: tuple[Setup, Legs] = (
+    _describe_setup,
+    (
+        ("numeric", _describe_numeric),
+        ("object", _describe_object),
+        ("dq", _describe_dq),
+        ("split", _describe_split),
+        ("privacy", _describe_privacy),
+        ("sketch", _describe_sketch),
+        ("inc", _describe_inc),
+    ),
+)
 
 
 def q_corr_matrix(spark: SparkSession, sf: str) -> DataFrame:
@@ -832,42 +935,65 @@ def q_ml_regression(spark: SparkSession, sf: str) -> DataFrame:
     return ML.train_models_df(spark, res)
 
 
-def q_src_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    """S1/S2/S3/S5/S6/S7 through the hash gate (the reference's
-    multi-format front door, ref:165-187): write two lineitem slices
-    out as csv + ndjson (distributed writers), the nation dims as a
-    whole-document JSON file (the pandas ``read_json`` orientation),
+# ------------------------------------------------ src_roundtrip legs
+#
+# S1/S2/S3/S5/S6/S7 through the hash gate (the reference's
+# multi-format front door, ref:165-187): every leg writes its own
+# slice or fixture under one per-call scratch base and reads it back
+# through an engine reader; each emits verdict rows in one shared
+# schema, (l_returnflag, n_rows, sum_qty, sum_nkey, sum_rkey), that the
+# oracle replays straight off the parquet tables. The legs touch
+# separate directories and lineages, so they share no mutable state
+# (r13: run back to back, the build was ~16 s of short,
+# low-parallelism driver actions; overlapped, the scheduler back-fills
+# one leg's tail with another's tasks).
+
+_RT_COLS = ["l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"]
+
+
+def _rt_row(
+    tag: str | Column,
+    n_rows: Column | None = None,
+    sum_qty: Column | None = None,
+    sum_nkey: Column | None = None,
+    sum_rkey: Column | None = None,
+) -> list[Column]:
+    """One src_roundtrip verdict row's columns: ``tag`` (a literal or
+    a column) and the non-null values; every other slot is a typed
+    NULL."""
+
+    def slot(v: Column | None, name: str, dtype: str) -> Column:
+        return (F.lit(None).cast(dtype) if v is None else v).alias(name)
+
+    return [
+        (F.lit(tag) if isinstance(tag, str) else tag).alias("l_returnflag"),
+        slot(n_rows, "n_rows", "long"),
+        slot(sum_qty, "sum_qty", "double"),
+        slot(sum_nkey, "sum_nkey", "long"),
+        slot(sum_rkey, "sum_rkey", "long"),
+    ]
+
+
+def _qty_row(df: DataFrame, tag: str, sum_nkey: Column | None = None) -> DataFrame:
+    """A lineitem read-back's verdict row: row count and rounded
+    quantity sum, plus the leg's structural verdict in sum_nkey."""
+    return df.agg(
+        *_rt_row(
+            tag,
+            F.count(F.lit(1)),
+            F.round(F.sum("l_quantity"), 6),
+            sum_nkey,
+        )
+    )
+
+
+def _rt_setup(spark: SparkSession, sf: str) -> dict[str, Any]:
+    """The lineitem read, the per-call scratch base, and the two dim
+    fixtures the ingest leg re-reads: the nation dims as a
+    whole-document JSON file (the pandas ``read_json`` orientation)
     and the region dims as an xlsx workbook (S2 — written with the
     engine's stdlib SpreadsheetML codec, read back through the Excel
-    scan path); re-ingest all four via ``read_sources`` (extension
-    dispatch, empty-input guard), harmonize, aggregate. A final
-    '__preview' row pins the preview sink (S7): its n_rows is the
-    bounded ``preview()`` collect's length, least(5, |union|). Oracle
-    = the same aggregate straight off the parquet tables.
-
-    The '__part_R' row pins the PARTITIONED parquet sink
-    (``write_parquet(partition_by=...)``): a third lineitem slice is
-    written partitioned by l_returnflag, read back with a
-    partition-key predicate — Catalyst turns that into partition
-    pruning (PartitionFilters on the scan; only the R directory is
-    listed/read — pinned by tests/test_sources.py's plan assertion) —
-    and aggregated; the oracle replays the same filter off the raw
-    table, so a hash match proves the partitioned write+pruned read
-    lost nothing."""
-    import json
-    import os
-
-    from data_integration_and_harmonization_spark.sources.readers import (
-        preview,
-        read_sources,
-    )
-    from data_integration_and_harmonization_spark.functions.caching import (
-        scratch_dir,
-    )
-    from data_integration_and_harmonization_spark.sources.xlsx import write_xlsx
-
-    li = spark.read.parquet(f"{sf}/lineitem.parquet")
-    cols = ["l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"]
+    scan path). ``region_rows`` seeds every other region fixture."""
     # per-invocation scratch dir under the process scratch root:
     # portable, race-free across concurrent invocations, and reaped at
     # interpreter exit (the files must outlive this CALL — the
@@ -877,8 +1003,6 @@ def q_src_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         scratch_dir("roundtrip"),
         f"roundtrip_{os.path.basename(sf.rstrip('/'))}",
     )
-    csv_dir = base + "_li.csv"
-    nd_dir = base + "_li.ndjson"
     # whole-document JSON (array of records), written driver-side —
     # nation is a 25-row dim, the one shape multiLine JSON is for
     nation = spark.read.parquet(f"{sf}/nation.parquet").select("n_nationkey", "n_name")
@@ -891,140 +1015,88 @@ def q_src_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     xlsx_file = base + "_region.xlsx"
     region_rows = [[r["r_regionkey"], r["r_name"]] for r in region.collect()]
     write_xlsx(xlsx_file, ["r_regionkey", "r_name"], region_rows)
+    return {
+        "spark": spark,
+        "li": spark.read.parquet(f"{sf}/lineitem.parquet"),
+        "base": base,
+        "json_file": json_file,
+        "xlsx_file": xlsx_file,
+        "region_rows": region_rows,
+    }
 
-    # r13 optimization (guide §2.6): this query's build was ~16 s of
-    # back-to-back driver actions — fixture writes, the lakehouse
-    # version chains, schema-inferring re-ingestion, a preview
-    # collect — each a short, low-parallelism job leaving the rest of
-    # the cluster idle. The build decomposes into independent chains
-    # (separate directories, separate lineages, no shared mutable
-    # state): (A) csv/ndjson write -> re-ingest -> preview; (B) the
-    # partitioned sink; (C) the z-order -> versions -> delete ->
-    # merge -> evolve chain; (D) the shatter -> compact -> vacuum
-    # chain; (E) the driver-side document/transcript fixture encodes
-    # (pure Python — overlaps the JVM-bound chains). Submitted from
-    # driver threads, the scheduler back-fills one chain's tail with
-    # another's tasks; within each chain the original order (and so
-    # every computed value) is unchanged.
-    def _ingest_chain():
-        li.where(F.col("l_orderkey") % 10 == 0).select(*cols).write.mode(
-            "overwrite"
-        ).option("header", True).csv(csv_dir)
-        li.where(F.col("l_orderkey") % 10 == 5).select(*cols).write.mode(
-            "overwrite"
-        ).json(nd_dir)
-        srcs = read_sources(
-            spark,
-            [csv_dir, nd_dir, json_file, xlsx_file],
-            reject_empty=True,
-            skip_errors=False,
-        )
-        u = H.harmonize(srcs)
-        agg = u.groupBy("l_returnflag").agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
-            F.sum(F.col("n_nationkey").cast("long")).alias("sum_nkey"),
-            F.sum(F.col("r_regionkey").cast("long")).alias("sum_rkey"),
-        )
-        n_prev = len(preview(u))  # S7: bounded limit-5 collect
-        prev_row = spark.createDataFrame(
-            [("__preview", n_prev)], "l_returnflag string, n_rows long"
-        ).select(
-            "l_returnflag",
-            "n_rows",
-            F.lit(None).cast("double").alias("sum_qty"),
-            F.lit(None).cast("long").alias("sum_nkey"),
-            F.lit(None).cast("long").alias("sum_rkey"),
-        )
-        return agg, prev_row
-    # '__xlsx_ds' row: the DISTRIBUTED xlsx path (sources/pyds.py, a
-    # Spark-4 Python DataSource: one executor partition per workbook,
-    # stdlib ECMA-376 decode on the executors) — the corpus-scale
-    # sibling of the driver-side S2 bridge above. Region is split
-    # into TWO workbooks with different header orders; the scan must
-    # align by name across both files. sum_nkey carries the number of
-    # distinct source files seen (pins the per-file partitioning and
-    # the _src_file provenance column); sum_rkey the key checksum
-    # through the all-string schema-on-read cast back to long.
-    from data_integration_and_harmonization_spark.sources.pyds import (
-        read_xlsx_corpus,
-    )
 
-    ds_dir = base + "_region_corpus"
-    os.makedirs(ds_dir, exist_ok=True)
-    write_xlsx(
-        os.path.join(ds_dir, "part1.xlsx"),
-        ["r_regionkey", "r_name"],
-        region_rows[:2],
+def _rt_ingest(ctx: dict[str, Any]) -> DataFrame:
+    """Two lineitem slices written out as csv + ndjson (distributed
+    writers), re-ingested with the JSON and xlsx dims via
+    ``read_sources`` (extension dispatch, empty-input guard),
+    harmonized and aggregated per l_returnflag. A final '__preview'
+    row pins the preview sink (S7): its n_rows is the bounded
+    ``preview()`` collect's length, least(5, |union|)."""
+    spark, li, base = ctx["spark"], ctx["li"], ctx["base"]
+    csv_dir = base + "_li.csv"
+    nd_dir = base + "_li.ndjson"
+    li.where(F.col("l_orderkey") % 10 == 0).select(*_RT_COLS).write.mode(
+        "overwrite"
+    ).option("header", True).csv(csv_dir)
+    li.where(F.col("l_orderkey") % 10 == 5).select(*_RT_COLS).write.mode(
+        "overwrite"
+    ).json(nd_dir)
+    srcs = read_sources(
+        spark,
+        [csv_dir, nd_dir, ctx["json_file"], ctx["xlsx_file"]],
+        reject_empty=True,
+        skip_errors=False,
     )
-    write_xlsx(
-        os.path.join(ds_dir, "part2.xlsx"),
-        ["r_name", "r_regionkey"],
-        [[n, k] for k, n in region_rows[2:]],
-    )
-    xlsx_ds_row = read_xlsx_corpus(spark, ds_dir).agg(
-        F.lit("__xlsx_ds").alias("l_returnflag"),
+    u = H.harmonize(srcs)
+    agg = u.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.lit(None).cast("double").alias("sum_qty"),
-        F.countDistinct("_src_file").alias("sum_nkey"),
+        F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
+        F.sum(F.col("n_nationkey").cast("long")).alias("sum_nkey"),
         F.sum(F.col("r_regionkey").cast("long")).alias("sum_rkey"),
     )
-    # '__csv_dlq' row: PERMISSIVE csv ingestion with corrupt-record
-    # ROUTING (read_csv_audited — the batch dead-letter queue): the
-    # region rows are written as csv text with two deliberately
-    # corrupt lines (a type failure and an extra-column row); good
-    # rows aggregate as usual, n_rows carries the good count,
-    # sum_nkey the quarantined line count — the oracle derives both
-    # from region + the two synthetic bad lines.
-    from data_integration_and_harmonization_spark.sources.readers import (
-        read_csv_audited,
+    n_prev = len(preview(u))  # S7: bounded limit-5 collect
+    prev_row = spark.createDataFrame([(n_prev,)], "n_rows long").select(
+        *_rt_row("__preview", F.col("n_rows"))
+    )
+    return agg.unionByName(prev_row)
+
+
+def _rt_part(ctx: dict[str, Any]) -> DataFrame:
+    """'__part_R': the PARTITIONED parquet sink
+    (``write_parquet(partition_by=...)``). A third lineitem slice is
+    written partitioned by l_returnflag and read back with a
+    partition-key predicate — Catalyst turns that into partition
+    pruning (PartitionFilters on the scan; only the R directory is
+    listed/read — pinned by tests/test_sources.py's plan assertion);
+    the oracle replays the same filter off the raw table, so a hash
+    match proves the partitioned write+pruned read lost nothing."""
+    part_dir = ctx["base"] + "_li_part.parquet"
+    write_parquet(
+        ctx["li"].where(F.col("l_orderkey") % 10 == 3).select(*_RT_COLS),
+        part_dir,
+        partition_by=["l_returnflag"],
+    )
+    return _qty_row(
+        ctx["spark"].read.parquet(part_dir).where(F.col("l_returnflag") == "R"),
+        "__part_R",
     )
 
-    dlq_file = base + "_region_dlq.csv"
-    with open(dlq_file, "w") as fh:
-        fh.write("r_regionkey,r_name\n")
-        for k, n in region_rows:
-            fh.write(f"{k},{n}\n")
-        fh.write("not_a_key,GARBAGE\n")
-        fh.write("9,EXTRA,trailing_field\n")
-    good_csv, bad_csv = read_csv_audited(
-        spark, dlq_file, "r_regionkey long, r_name string"
-    )
-    # quarantine count joins in lazily (a 1-row broadcast) — an eager
-    # bad_csv.count() here would cost one extra job per invocation,
-    # including every warmup pass
-    dlq_row = good_csv.agg(
-        F.lit("__csv_dlq").alias("l_returnflag"),
-        F.count(F.lit(1)).alias("n_rows"),
-        F.lit(None).cast("double").alias("sum_qty"),
-        F.sum(F.col("r_regionkey").cast("long")).alias("sum_rkey"),
-    ).crossJoin(
-        F.broadcast(bad_csv.agg(F.count(F.lit(1)).alias("sum_nkey")))
-    ).select("l_returnflag", "n_rows", "sum_qty", "sum_nkey", "sum_rkey")
-    # partitioned sink + pruned read-back (see docstring)
-    from data_integration_and_harmonization_spark.sources.readers import (
-        write_parquet,
-    )
 
-    part_dir = base + "_li_part.parquet"
+# the z-ordered slice and the key range its '__zorder' read-back and
+# '__delete' rewrite both target
+_RT_Z_LO, _RT_Z_HI = 1000, 2000
 
-    def _part_chain():
-        write_parquet(
-            li.where(F.col("l_orderkey") % 10 == 3).select(*cols),
-            part_dir,
-            partition_by=["l_returnflag"],
-        )
-        return (
-            spark.read.parquet(part_dir)
-            .where(F.col("l_returnflag") == "R")
-            .agg(
-                F.lit("__part_R").alias("l_returnflag"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
-                F.lit(None).cast("long").alias("sum_nkey"),
-                F.lit(None).cast("long").alias("sum_rkey"),
-            )
-        )
+
+def _rt_key_range(a: int, b: int) -> Column:
+    return (F.col("l_orderkey") >= a) & (F.col("l_orderkey") < b)
+
+
+def _rt_zver(ctx: dict[str, Any]) -> DataFrame:
+    """The z-order -> versions -> skip -> delete -> merge -> evolve
+    chain over one lineitem slice; every step commits a manifest
+    version on the previous one, so the chain is one leg."""
+    spark, base = ctx["spark"], ctx["base"]
+    lo, hi = _RT_Z_LO, _RT_Z_HI
     # '__zorder' row: Z-order-clustered parquet sink + range-predicate
     # read-back (write_zordered): a fourth lineitem slice is laid out
     # by the Morton key of (l_orderkey, l_quantity), read back with a
@@ -1034,88 +1106,49 @@ def q_src_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     # file a tight min/max envelope on BOTH keyed columns (skipping
     # effectiveness is pinned by tests/test_sources.py's per-file
     # span assertion).
-    from data_integration_and_harmonization_spark.sources.writers import (
-        write_zordered,
-    )
-
     z_dir = base + "_li_zorder.parquet"
-    z_slice = li.where(F.col("l_orderkey") % 10 == 7).select(*cols)
-    lo, hi = 1000, 2000
-
-    def _z_row():
-        # head of the z-order -> versions -> delete -> merge -> evolve
-        # chain (_zver_chain below); split out only for readability
-        write_zordered(z_slice, z_dir, ["l_orderkey", "l_quantity"], num_files=8)
-        return (
-            spark.read.parquet(z_dir)
-            .where((F.col("l_orderkey") >= lo) & (F.col("l_orderkey") < hi))
-            .agg(
-                F.lit("__zorder").alias("l_returnflag"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
-                F.lit(None).cast("long").alias("sum_nkey"),
-                F.lit(None).cast("long").alias("sum_rkey"),
-            )
-        )
-    # '__compact' row: small-file compaction (writers.compact_files,
-    # the lakehouse OPTIMIZE primitive): a fifth lineitem slice is
-    # deliberately shattered into 48 tiny files, compacted into
-    # byte-sized-from-listing output files (shuffle-free coalesce),
-    # read back and aggregated — the oracle replays the same filter
-    # off the raw table, so a hash match proves the rewrite moved
-    # every row exactly once. sum_nkey carries the structural verdict
-    # (1 iff the file count actually shrank to the byte-budget plan);
-    # the oracle expects literal 1.
-    from data_integration_and_harmonization_spark.sources.writers import (
-        compact_files,
+    z_slice = ctx["li"].where(F.col("l_orderkey") % 10 == 7).select(*_RT_COLS)
+    write_zordered(z_slice, z_dir, ["l_orderkey", "l_quantity"], num_files=8)
+    z_row = _qty_row(
+        spark.read.parquet(z_dir).where(_rt_key_range(lo, hi)), "__zorder"
     )
-
-    small_dir = base + "_li_small.parquet"
-    comp_dir = base + "_li_compact.parquet"
-
-    def _compact_chain():
-        li.where(F.col("l_orderkey") % 10 == 9).select(*cols).repartition(
-            48
-        ).write.mode("overwrite").parquet(small_dir)
-        stats = compact_files(spark, small_dir, comp_dir, target_bytes=64 << 20)
-        # VACUUM retention rides the compaction chain: v1 pins the 48
-        # shattered files, v2 the compacted ones; vacuum keeping only v2
-        # must physically delete exactly v1's unshared files and drop its
-        # manifest — all driver-side FS metadata, no data scan. (The
-        # DELETE chain can't host this: its v1 files back the lazily-read
-        # '__zorder' leg.)
-        from data_integration_and_harmonization_spark.sources.manifest import (
-            commit_version as _commit,
-            list_versions as _versions,
-            read_manifest as _manifest,
-            vacuum as _vacuum,
+    # v1 carries per-file min/max stats for l_orderkey — the
+    # data-skipping statistics a Delta/Iceberg manifest records, and
+    # the z-ordered layout is exactly what makes them tight.
+    tbl_root = base + "_li_versions"
+    v1 = MF.commit_version_with_stats(
+        spark, tbl_root, z_dir, ["l_orderkey"], note="zordered slice"
+    )
+    # '__skip' row: manifest-stats file pruning (read_version(prune=))
+    # — the reader opens ONLY the files whose recorded [min,max] can
+    # intersect the range; at 100 TB that is the difference between a
+    # key range's few files and the whole table. sum_nkey carries the
+    # structural verdict (1 iff the prune skipped at least one file
+    # while keeping at least one); the value columns are the filtered
+    # aggregate the oracle replays off the raw table — a hash match
+    # proves pruning lost no row the residual filter would keep.
+    skip_lo, skip_hi = 2500, 2999
+    n_skip_kept = len(
+        MF.prune_files(
+            MF.read_manifest(spark, tbl_root, v1),
+            {"l_orderkey": (skip_lo, skip_hi)},
         )
-
-        tbl2 = base + "_li_compact_versions"
-        c1 = _commit(spark, tbl2, small_dir, note="48 small files")
-        c2 = _commit(spark, tbl2, comp_dir, note="compacted")
-        m_small = {f["path"] for f in _manifest(spark, tbl2, c1)["files"]}
-        m_comp = {f["path"] for f in _manifest(spark, tbl2, c2)["files"]}
-        vac = _vacuum(spark, tbl2, keep_versions=[c2])
-        vac_ok = (
-            set(vac["deleted"]) == m_small - m_comp
-            and _versions(spark, tbl2) == [c2]
-        )
-        comp_ok = int(
-            stats["files_after"] < stats["files_before"]
-            and stats["files_after"] <= stats["planned_files"]
-            and vac_ok
-        )
-        return (
-            spark.read.parquet(comp_dir)
-            .agg(
-                F.lit("__compact").alias("l_returnflag"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
-                F.lit(comp_ok).cast("long").alias("sum_nkey"),
-                F.lit(None).cast("long").alias("sum_rkey"),
-            )
-        )
+    )
+    n_skip_total = len(MF.read_manifest(spark, tbl_root, v1)["files"])
+    # at sf0.001 the slice's keys end below skip_lo, so pruning
+    # rightly keeps ZERO files — that is data skipping working
+    # perfectly, not a structural failure; require a kept file only
+    # when the data actually reaches the probed range.
+    z_max_key = z_slice.agg(F.max("l_orderkey")).first()[0] or 0
+    skip_ok = int(
+        n_skip_kept < n_skip_total
+        and (n_skip_kept > 0 or z_max_key < skip_lo)
+    )
+    skip_row = _qty_row(
+        MF.read_version(spark, tbl_root, v1, prune={"l_orderkey": (skip_lo, skip_hi)}),
+        "__skip",
+        F.lit(skip_ok).cast("long"),
+    )
     # '__delete' row: targeted row deletion (writers.delete_rows, the
     # GDPR rewrite): DELETE the same l_orderkey range from the
     # z-ordered copy — the clustered layout confines matches to a
@@ -1138,711 +1171,437 @@ def q_src_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     #   rows as 'removed' and nothing 'added'.
     # del_row itself reads through read_version(v2), so the hash match
     # also covers the pinned-file-list scan path.
-    from data_integration_and_harmonization_spark.sources.manifest import (
-        commit_version,
-        delete_rows_versioned,
-        read_manifest,
-        read_version,
-        version_diff,
+    dstats = MF.delete_rows_versioned(
+        spark, tbl_root, base + "_li_deleted.parquet", _rt_key_range(lo, hi)
+    )
+    v2 = dstats["version"]
+    n_v1 = MF.read_version(spark, tbl_root, v1).count()
+    n_v2 = MF.read_version(spark, tbl_root, v2).count()
+    m1 = {f["path"] for f in MF.read_manifest(spark, tbl_root, v1)["files"]}
+    m2 = {f["path"] for f in MF.read_manifest(spark, tbl_root, v2)["files"]}
+    cdf = {
+        r["change"]: r["n"]
+        for r in MF.version_diff(
+            spark, tbl_root, v1, v2, ["l_orderkey", "l_linenumber"]
+        )
+        .groupBy("change")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    del_ok = int(
+        dstats["files_affected"] < dstats["files_total"]
+        and v2 == v1 + 1
+        and n_v1 == n_v2 + dstats["rows_deleted"]
+        and len(m1 & m2) == dstats["files_total"] - dstats["files_affected"]
+        and cdf.get("removed", 0) == dstats["rows_deleted"]
+        and cdf.get("added", 0) == 0
+    )
+    del_row = _qty_row(
+        MF.read_version(spark, tbl_root, v2), "__delete", F.lit(del_ok).cast("long")
+    )
+    merge_row, evolve_row = _rt_merge_evolve(ctx, tbl_root, v2)
+    return (
+        z_row.unionByName(skip_row)
+        .unionByName(del_row)
+        .unionByName(merge_row)
+        .unionByName(evolve_row)
     )
 
-    del_dir = base + "_li_deleted.parquet"
-    tbl_root = base + "_li_versions"
 
-    def _zver_chain():
-        z_row = _z_row()
-        # v1 carries per-file min/max stats for l_orderkey — the
-        # data-skipping statistics a Delta/Iceberg manifest records, and
-        # the z-ordered layout is exactly what makes them tight.
-        from data_integration_and_harmonization_spark.sources.manifest import (
-            commit_version_with_stats,
-            prune_files,
+def _rt_dedup_arm(df: DataFrame, op: str) -> DataFrame:
+    """A merge change batch, deduped per key (max over dup
+    (okey, lineno) keys — the synthetic lineitem has them; merge
+    enforces unique change keys) and tagged with its ``op``."""
+    return (
+        df.groupBy("l_orderkey", "l_linenumber")
+        .agg(
+            F.max("l_quantity").alias("l_quantity"),
+            F.max("l_returnflag").alias("l_returnflag"),
         )
+        .select(*_RT_COLS)
+        .withColumn("op", F.lit(op))
+    )
 
-        v1 = commit_version_with_stats(
-            spark, tbl_root, z_dir, ["l_orderkey"], note="zordered slice"
+
+def _rt_merge_evolve(
+    ctx: dict[str, Any], tbl_root: str, v2: int
+) -> tuple[DataFrame, DataFrame]:
+    """The '__merge' and '__evolve' rows of the zver leg, committed on
+    top of its post-delete version ``v2``."""
+    spark, base = ctx["spark"], ctx["base"]
+    rng = _rt_key_range
+    # '__merge' row: three-arm MERGE (manifest.merge_upsert_versioned)
+    # on top of the post-delete version — Delta's WHEN MATCHED UPDATE /
+    # WHEN NOT MATCHED INSERT / WHEN MATCHED DELETE in ONE commit:
+    # keys in [500,1000) are MATCHED (whole row replaced, quantity
+    # +100), the earlier-deleted [1000,1100) keys come back as INSERTS
+    # (quantity +100), and keys in [2000,2500) are merge-DELETED. Only
+    # files holding matched keys are rewritten; untouched files
+    # referenced in place. The oracle replays all three arms off the
+    # raw table, so the hash match proves MERGE semantics end to end;
+    # sum_nkey carries the structural verdict (targeted subset +
+    # matched/inserted/deleted counts exactly as composed).
+    z_all = ctx["li"].where(F.col("l_orderkey") % 10 == 7).select(*_RT_COLS)
+    upd_match = _rt_dedup_arm(z_all.where(rng(500, 1000)), "U").withColumn(
+        "l_quantity", F.col("l_quantity") + 100
+    )
+    upd_ins = _rt_dedup_arm(z_all.where(rng(_RT_Z_LO, 1100)), "I").withColumn(
+        "l_quantity", F.col("l_quantity") + 100
+    )
+    upd_del = _rt_dedup_arm(z_all.where(rng(2000, 2500)), "D")
+    upd = upd_match.unionByName(upd_ins).unionByName(upd_del)
+    # r13: the four merge-gate probes (matched rows, deduped insert
+    # keys, deleted rows, slice size) were four separate jobs over the
+    # same slice; ONE aggregate computes all four (countDistinct over
+    # a when()-guarded struct == the dedup arm's distinct key count;
+    # count/sum semantics unchanged value for value).
+    _gate = z_all.agg(
+        F.count(F.lit(1)).alias("n_slice"),
+        F.sum((rng(500, 1000) | rng(2000, 2500)).cast("long")).alias("n_match"),
+        F.sum(rng(2000, 2500).cast("long")).alias("n_del"),
+        F.countDistinct(
+            F.when(rng(_RT_Z_LO, 1100), F.struct("l_orderkey", "l_linenumber"))
+        ).alias("n_ins"),
+    ).first()
+    n_match = _gate["n_match"] or 0
+    n_ins = _gate["n_ins"]
+    n_del = _gate["n_del"] or 0
+    # locality clause only above a row floor: below ~1000 slice rows
+    # the 8-file z-layout has so few rows per file that every file
+    # legitimately spans the whole key range and the merge rightly
+    # rewrites all of them (observed at sf0.001); the semantics checks
+    # below stay unconditional.
+    n_slice = _gate["n_slice"]
+    mstats = MF.merge_upsert_versioned(
+        spark, tbl_root, base + "_li_merged.parquet", upd,
+        ["l_orderkey", "l_linenumber"], op_col="op",
+    )
+    merge_ok = int(
+        (mstats["files_affected"] < mstats["files_total"] or n_slice < 1000)
+        and mstats["version"] == v2 + 1
+        and mstats["rows_matched"] == n_match
+        and mstats["rows_inserted"] == n_ins
+        and mstats["rows_deleted"] == n_del
+    )
+    merge_row = _qty_row(
+        MF.read_version(spark, tbl_root, mstats["version"]),
+        "__merge",
+        F.lit(merge_ok).cast("long"),
+    )
+    # '__evolve' row: MERGE schema evolution — a second merge whose
+    # change batch carries a NEW column (priority). Default must
+    # REFUSE (never silently drop a CDC feed's column); with
+    # evolve_schema=True the column is adopted: rewritten files carry
+    # it, untouched files stay old-schema referenced in place, and
+    # read_version(merge_schema=True) unions the schemas. The change
+    # rows replace [500,600) with their own current values + priority,
+    # so row count and quantity sum are UNCHANGED from the __merge
+    # version (the oracle replays that equality for free) and
+    # sum_rkey carries the non-null priority count = the deduped key
+    # count of the replaced slice.
+    ev_upd = (
+        _rt_dedup_arm(z_all.where(rng(500, 600)), "U")
+        .drop("op")
+        .withColumn("l_quantity", F.col("l_quantity") + 100)
+        .withColumn("priority", F.lit(1.0))
+    )
+    try:
+        MF.merge_upsert_versioned(
+            spark, tbl_root, base + "_li_evolve_refused.parquet", ev_upd,
+            ["l_orderkey", "l_linenumber"],
         )
-        # '__skip' row: manifest-stats file pruning (read_version(prune=))
-        # — the reader opens ONLY the files whose recorded [min,max] can
-        # intersect the range; at 100 TB that is the difference between a
-        # key range's few files and the whole table. sum_nkey carries the
-        # structural verdict (1 iff the prune skipped at least one file
-        # while keeping at least one); the value columns are the filtered
-        # aggregate the oracle replays off the raw table — a hash match
-        # proves pruning lost no row the residual filter would keep.
-        skip_lo, skip_hi = 2500, 2999
-        n_skip_kept = len(
-            prune_files(
-                read_manifest(spark, tbl_root, v1),
-                {"l_orderkey": (skip_lo, skip_hi)},
+        refused = 0
+    except ValueError:
+        refused = 1
+    estats = MF.merge_upsert_versioned(
+        spark, tbl_root, base + "_li_evolved.parquet", ev_upd,
+        ["l_orderkey", "l_linenumber"], evolve_schema=True,
+    )
+    evolve_ok = int(
+        refused == 1
+        and estats["rows_inserted"] == 0
+        and "schema evolved +priority"
+        in MF.read_manifest(spark, tbl_root, estats["version"])["note"]
+    )
+    evolve_row = MF.read_version(
+        spark, tbl_root, estats["version"], merge_schema=True
+    ).agg(
+        *_rt_row(
+            "__evolve",
+            F.count(F.lit(1)),
+            F.round(F.sum("l_quantity"), 6),
+            F.lit(evolve_ok).cast("long"),
+            F.sum(F.col("priority").isNotNull().cast("long")),
+        )
+    )
+    return merge_row, evolve_row
+
+
+def _rt_compact(ctx: dict[str, Any]) -> DataFrame:
+    """'__compact': small-file compaction (writers.compact_files, the
+    lakehouse OPTIMIZE primitive). A fifth lineitem slice is
+    deliberately shattered into 48 tiny files, compacted into
+    byte-sized-from-listing output files (shuffle-free coalesce),
+    read back and aggregated — the oracle replays the same filter off
+    the raw table, so a hash match proves the rewrite moved every row
+    exactly once. sum_nkey carries the structural verdict (1 iff the
+    file count actually shrank to the byte-budget plan and the vacuum
+    below held); the oracle expects literal 1."""
+    spark, base = ctx["spark"], ctx["base"]
+    small_dir = base + "_li_small.parquet"
+    comp_dir = base + "_li_compact.parquet"
+    ctx["li"].where(F.col("l_orderkey") % 10 == 9).select(*_RT_COLS).repartition(
+        48
+    ).write.mode("overwrite").parquet(small_dir)
+    stats = compact_files(spark, small_dir, comp_dir, target_bytes=64 << 20)
+    # VACUUM retention rides the compaction leg: v1 pins the 48
+    # shattered files, v2 the compacted ones; vacuum keeping only v2
+    # must physically delete exactly v1's unshared files and drop its
+    # manifest — all driver-side FS metadata, no data scan. (The
+    # zver leg can't host this: its v1 files back the lazily-read
+    # '__zorder' row.)
+    tbl2 = base + "_li_compact_versions"
+    c1 = MF.commit_version(spark, tbl2, small_dir, note="48 small files")
+    c2 = MF.commit_version(spark, tbl2, comp_dir, note="compacted")
+    m_small = {f["path"] for f in MF.read_manifest(spark, tbl2, c1)["files"]}
+    m_comp = {f["path"] for f in MF.read_manifest(spark, tbl2, c2)["files"]}
+    vac = MF.vacuum(spark, tbl2, keep_versions=[c2])
+    vac_ok = (
+        set(vac["deleted"]) == m_small - m_comp
+        and MF.list_versions(spark, tbl2) == [c2]
+    )
+    comp_ok = int(
+        stats["files_after"] < stats["files_before"]
+        and stats["files_after"] <= stats["planned_files"]
+        and vac_ok
+    )
+    return _qty_row(
+        spark.read.parquet(comp_dir), "__compact", F.lit(comp_ok).cast("long")
+    )
+
+
+def _rt_xlsx_ds(ctx: dict[str, Any]) -> DataFrame:
+    """'__xlsx_ds': the DISTRIBUTED xlsx path (sources/pyds.py, a
+    Spark-4 Python DataSource: one executor partition per workbook,
+    stdlib ECMA-376 decode on the executors) — the corpus-scale
+    sibling of the driver-side S2 bridge. Region is split into TWO
+    workbooks with different header orders; the scan must align by
+    name across both files. sum_nkey carries the number of distinct
+    source files seen (pins the per-file partitioning and the
+    _src_file provenance column); sum_rkey the key checksum through
+    the all-string schema-on-read cast back to long."""
+    region_rows = ctx["region_rows"]
+    ds_dir = ctx["base"] + "_region_corpus"
+    os.makedirs(ds_dir, exist_ok=True)
+    write_xlsx(
+        os.path.join(ds_dir, "part1.xlsx"),
+        ["r_regionkey", "r_name"],
+        region_rows[:2],
+    )
+    write_xlsx(
+        os.path.join(ds_dir, "part2.xlsx"),
+        ["r_name", "r_regionkey"],
+        [[n, k] for k, n in region_rows[2:]],
+    )
+    return read_xlsx_corpus(ctx["spark"], ds_dir).agg(
+        *_rt_row(
+            "__xlsx_ds",
+            F.count(F.lit(1)),
+            sum_nkey=F.countDistinct("_src_file"),
+            sum_rkey=F.sum(F.col("r_regionkey").cast("long")),
+        )
+    )
+
+
+def _rt_csv_dlq(ctx: dict[str, Any]) -> DataFrame:
+    """'__csv_dlq': PERMISSIVE csv ingestion with corrupt-record
+    ROUTING (read_csv_audited — the batch dead-letter queue). The
+    region rows are written as csv text with two deliberately corrupt
+    lines (a type failure and an extra-column row); good rows
+    aggregate as usual, n_rows carries the good count, sum_nkey the
+    quarantined line count — the oracle derives both from region +
+    the two synthetic bad lines."""
+    dlq_file = ctx["base"] + "_region_dlq.csv"
+    with open(dlq_file, "w") as fh:
+        fh.write("r_regionkey,r_name\n")
+        for k, n in ctx["region_rows"]:
+            fh.write(f"{k},{n}\n")
+        fh.write("not_a_key,GARBAGE\n")
+        fh.write("9,EXTRA,trailing_field\n")
+    good_csv, bad_csv = read_csv_audited(
+        ctx["spark"], dlq_file, "r_regionkey long, r_name string"
+    )
+    # quarantine count joins in lazily (a 1-row broadcast) — an eager
+    # bad_csv.count() here would cost one extra job per invocation,
+    # including every warmup pass
+    return (
+        good_csv.agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.col("r_regionkey").cast("long")).alias("sum_rkey"),
+        )
+        .crossJoin(F.broadcast(bad_csv.agg(F.count(F.lit(1)).alias("sum_nkey"))))
+        .select(
+            *_rt_row(
+                "__csv_dlq",
+                F.col("n_rows"),
+                sum_nkey=F.col("sum_nkey"),
+                sum_rkey=F.col("sum_rkey"),
             )
         )
-        n_skip_total = len(read_manifest(spark, tbl_root, v1)["files"])
-        # at sf0.001 the slice's keys end below skip_lo, so pruning
-        # rightly keeps ZERO files — that is data skipping working
-        # perfectly, not a structural failure; require a kept file only
-        # when the data actually reaches the probed range.
-        z_max_key = z_slice.agg(F.max("l_orderkey")).first()[0] or 0
-        skip_ok = int(
-            n_skip_kept < n_skip_total
-            and (n_skip_kept > 0 or z_max_key < skip_lo)
-        )
-        skip_row = (
-            read_version(
-                spark, tbl_root, v1, prune={"l_orderkey": (skip_lo, skip_hi)}
-            )
-            .agg(
-                F.lit("__skip").alias("l_returnflag"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
-                F.lit(skip_ok).cast("long").alias("sum_nkey"),
-                F.lit(None).cast("long").alias("sum_rkey"),
-            )
-        )
-        dstats = delete_rows_versioned(
-            spark,
-            tbl_root,
-            del_dir,
-            (F.col("l_orderkey") >= lo) & (F.col("l_orderkey") < hi),
-        )
-        v2 = dstats["version"]
-        n_v1 = read_version(spark, tbl_root, v1).count()
-        n_v2 = read_version(spark, tbl_root, v2).count()
-        m1 = {f["path"] for f in read_manifest(spark, tbl_root, v1)["files"]}
-        m2 = {f["path"] for f in read_manifest(spark, tbl_root, v2)["files"]}
-        cdf = {
-            r["change"]: r["n"]
-            for r in version_diff(
-                spark, tbl_root, v1, v2, ["l_orderkey", "l_linenumber"]
-            )
-            .groupBy("change")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        del_ok = int(
-            dstats["files_affected"] < dstats["files_total"]
-            and v2 == v1 + 1
-            and n_v1 == n_v2 + dstats["rows_deleted"]
-            and len(m1 & m2) == dstats["files_total"] - dstats["files_affected"]
-            and cdf.get("removed", 0) == dstats["rows_deleted"]
-            and cdf.get("added", 0) == 0
-        )
-        del_row = (
-            read_version(spark, tbl_root, v2)
-            .agg(
-                F.lit("__delete").alias("l_returnflag"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
-                F.lit(del_ok).cast("long").alias("sum_nkey"),
-                F.lit(None).cast("long").alias("sum_rkey"),
-            )
-        )
-        # '__merge' row: three-arm MERGE (manifest.merge_upsert_versioned)
-        # on top of the post-delete version — Delta's WHEN MATCHED UPDATE /
-        # WHEN NOT MATCHED INSERT / WHEN MATCHED DELETE in ONE commit:
-        # keys in [500,1000) are MATCHED (whole row replaced, quantity
-        # +100), the earlier-deleted [1000,1100) keys come back as INSERTS
-        # (quantity +100), and keys in [2000,2500) are merge-DELETED. The
-        # change batch is deduped per key (max over dup (okey,lineno) keys
-        # — the synthetic lineitem has them; merge enforces unique change
-        # keys). Only files holding matched keys are rewritten; untouched
-        # files referenced in place. The oracle replays all three arms off
-        # the raw table, so the hash match proves MERGE semantics end to
-        # end; sum_nkey carries the structural verdict (targeted subset +
-        # matched/inserted/deleted counts exactly as composed).
-        from data_integration_and_harmonization_spark.sources.manifest import (
-            merge_upsert_versioned,
-        )
+    )
 
-        z_all = li.where(F.col("l_orderkey") % 10 == 7).select(*cols)
 
-        def _dedup_arm(df, op):
-            return (
-                df.groupBy("l_orderkey", "l_linenumber")
-                .agg(
-                    F.max("l_quantity").alias("l_quantity"),
-                    F.max("l_returnflag").alias("l_returnflag"),
-                )
-                .select(*cols)
-                .withColumn("op", F.lit(op))
-            )
+def _rt_text_rows(texts: DataFrame, tag: str, key_re: str) -> list[DataFrame]:
+    """The two verdict rows of an extracted-text fixture over
+    ``(id, text)``: '__<tag>' carries the text count, the total text
+    length and the key checksum REPARSED FROM THE TEXT by ``key_re``;
+    '__<tag>md5_<md5>' embeds the md5 of every text in id order, so
+    one byte of drift anywhere in encode -> extract misses the hash."""
+    count_row = texts.agg(
+        *_rt_row(
+            f"__{tag}",
+            F.count("text"),
+            sum_nkey=F.sum(F.length("text")),
+            sum_rkey=F.sum(F.regexp_extract("text", key_re, 1).cast("long")),
+        )
+    )
+    return [count_row, _rt_md5_row(texts, tag, "id")]
 
-        rng = lambda a, b: (F.col("l_orderkey") >= a) & (F.col("l_orderkey") < b)
-        upd_match = _dedup_arm(z_all.where(rng(500, 1000)), "U").withColumn(
-            "l_quantity", F.col("l_quantity") + 100
-        )
-        upd_ins = _dedup_arm(z_all.where(rng(lo, 1100)), "I").withColumn(
-            "l_quantity", F.col("l_quantity") + 100
-        )
-        upd_del = _dedup_arm(z_all.where(rng(2000, 2500)), "D")
-        upd = upd_match.unionByName(upd_ins).unionByName(upd_del)
-        # r13: the four merge-gate probes (matched rows, deduped insert
-        # keys, deleted rows, slice size) were four separate jobs over the
-        # same slice; ONE aggregate computes all four (countDistinct over
-        # a when()-guarded struct == the dedup arm's distinct key count;
-        # count/sum semantics unchanged value for value).
-        _gate = z_all.agg(
-            F.count(F.lit(1)).alias("n_slice"),
-            F.sum((rng(500, 1000) | rng(2000, 2500)).cast("long")).alias("n_match"),
-            F.sum(rng(2000, 2500).cast("long")).alias("n_del"),
-            F.countDistinct(
-                F.when(rng(lo, 1100), F.struct("l_orderkey", "l_linenumber"))
-            ).alias("n_ins"),
-        ).first()
-        n_match = _gate["n_match"] or 0
-        n_ins = _gate["n_ins"]
-        n_del = _gate["n_del"] or 0
-        # locality clause only above a row floor: below ~1000 slice rows
-        # the 8-file z-layout has so few rows per file that every file
-        # legitimately spans the whole key range and the merge rightly
-        # rewrites all of them (observed at sf0.001); the semantics checks
-        # below stay unconditional.
-        n_slice = _gate["n_slice"]
-        merge_dir = base + "_li_merged.parquet"
-        mstats = merge_upsert_versioned(
-            spark, tbl_root, merge_dir, upd, ["l_orderkey", "l_linenumber"],
-            op_col="op",
-        )
-        merge_ok = int(
-            (mstats["files_affected"] < mstats["files_total"] or n_slice < 1000)
-            and mstats["version"] == v2 + 1
-            and mstats["rows_matched"] == n_match
-            and mstats["rows_inserted"] == n_ins
-            and mstats["rows_deleted"] == n_del
-        )
-        merge_row = (
-            read_version(spark, tbl_root, mstats["version"])
-            .agg(
-                F.lit("__merge").alias("l_returnflag"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
-                F.lit(merge_ok).cast("long").alias("sum_nkey"),
-                F.lit(None).cast("long").alias("sum_rkey"),
-            )
-        )
-        # '__evolve' row: MERGE schema evolution — a second merge whose
-        # change batch carries a NEW column (priority). Default must
-        # REFUSE (never silently drop a CDC feed's column); with
-        # evolve_schema=True the column is adopted: rewritten files carry
-        # it, untouched files stay old-schema referenced in place, and
-        # read_version(merge_schema=True) unions the schemas. The change
-        # rows replace [500,600) with their own current values + priority,
-        # so row count and quantity sum are UNCHANGED from the __merge
-        # version (the oracle replays that equality for free) and
-        # sum_rkey carries the non-null priority count = the deduped key
-        # count of the replaced slice. (read_manifest comes from the
-        # enclosing function's import — re-importing it here would
-        # shadow it as a chain-local for the WHOLE chain body.)
-        ev_upd = (
-            _dedup_arm(z_all.where(rng(500, 600)), "U")
-            .drop("op")
-            .withColumn("l_quantity", F.col("l_quantity") + 100)
-            .withColumn("priority", F.lit(1.0))
-        )
-        try:
-            merge_upsert_versioned(
-                spark, tbl_root, base + "_li_evolve_refused.parquet", ev_upd,
-                ["l_orderkey", "l_linenumber"],
-            )
-            refused = 0
-        except ValueError:
-            refused = 1
-        estats = merge_upsert_versioned(
-            spark, tbl_root, base + "_li_evolved.parquet", ev_upd,
-            ["l_orderkey", "l_linenumber"], evolve_schema=True,
-        )
-        evolve_ok = int(
-            refused == 1
-            and estats["rows_inserted"] == 0
-            and "schema evolved +priority"
-            in read_manifest(spark, tbl_root, estats["version"])["note"]
-        )
-        evolve_row = (
-            read_version(spark, tbl_root, estats["version"], merge_schema=True)
-            .agg(
-                F.lit("__evolve").alias("l_returnflag"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
-                F.lit(evolve_ok).cast("long").alias("sum_nkey"),
-                F.sum(F.col("priority").isNotNull().cast("long")).alias("sum_rkey"),
-            )
-        )
-        return z_row, skip_row, del_row, merge_row, evolve_row
 
-    # The driver-side fixture ENCODES below (pdf/docx/pptx/epub/zip/
-    # warc/wiki byte builders — pure Python) run as a fifth chain next
-    # to the four Spark-bound ones, overlapping the chains' JVM work
-    # instead of serializing after it.
-    def _fixture_chain():
-        # '__pdf' + '__pdfmd5_*' rows (r11): baseline PDF text extraction
-        # (functions/pdf.py — Flate content streams + Tj/TJ show
-        # operators, ISO 32000-1). One two-page PDF per region row is
-        # ENGINE-ENCODED with text derived purely from the region table
-        # (page 1: 'Region (<name>)', page 2: 'key \\ <k>' — parens and a
-        # backslash in every document, so the string-escape grammar is on
-        # the oracle path), extracted back by the distributed Arrow stage.
-        # The '__pdf' row carries count / total extracted length / the
-        # key checksum REPARSED FROM THE TEXT; the second row's
-        # l_returnflag embeds the md5 of every extracted text in key
-        # order — one byte of drift anywhere in encode->extract and the
-        # hash row misses. The oracle reconstructs both from region alone.
-        from data_integration_and_harmonization_spark.functions.pdf import encode_pdf
-        from data_integration_and_harmonization_spark.operators.text import (
-            document_text_table,
-        )
-        from data_integration_and_harmonization_spark.sources.docx import encode_docx
-
-        # '__docx' + '__docxmd5_*' rows (r12): DOCX text extraction
-        # (sources/docx.py — stdlib ECMA-376 zip + word/document.xml run
-        # walk). One two-paragraph document per region row with a w:tab
-        # in paragraph 2 ('key\t<k>' — the tab element is on the oracle
-        # path), riding in the SAME fused Arrow stage as the PDFs
-        # (document_text_table dispatches by magic bytes): a mixed
-        # document corpus pays ONE Python worker round-trip. docx ids
-        # offset by 100 so both modalities split out of one frame.
-        # '__pdf15' + '__pdfcid' rows (r12): the modern-PDF document tier.
-        # ids 200+k: PDF-1.5 fixtures with every non-stream object in a
-        # compressed /ObjStm and a /Type /XRef cross-reference STREAM
-        # behind the PNG Up predictor (the layout real writers emit) —
-        # ASCII text, so the leg isolates the xref/ObjStm machinery.
-        # ids 300+k: Identity-H CID fixtures whose 2-byte codes only
-        # decode through the /ToUnicode CMap, with non-latin text (é/ö/—)
-        # a simple-font tier cannot even represent. Both ride the same
-        # fused Arrow stage; both get count/length/key rows AND byte-exact
-        # md5 rows, all reconstructed by the oracle from region alone.
-        from data_integration_and_harmonization_spark.functions.pdf import (
-            encode_pdf_cid,
-            encode_pdf_positioned,
-        )
-        from data_integration_and_harmonization_spark.sources.epub import encode_epub
-
-        # '__zip' row (r13): zip-archive corpus ingestion — an
-        # engine-written zip of mixed pdf/docx/pptx members (one per
-        # region row, format by key mod 3) plus a non-document member,
-        # read by the distributed read_zip_corpus stage (one binaryFile
-        # task per archive, one Arrow member walk). The members UNION
-        # into doc_df below (ids 500+k), so the whole mixed corpus —
-        # loose docs and zip members — extracts in ONE fused Arrow
-        # stage. n_rows counts members whose magic-byte fmt matches the
-        # format implied by their id (pins the dispatch, not just the
-        # text); the readme member's id parses NULL and quarantines out
-        # of every range filter. Totals are reconstructed by the oracle
-        # from region alone.
-        import zipfile as _zipfile
-
-        from data_integration_and_harmonization_spark.sources.docx import encode_pptx
-        from data_integration_and_harmonization_spark.sources.warc import (
-            read_zip_corpus,
-        )
-
-        zip_file = base + "_region.zip"
-        _zip_enc = {
-            0: ("pdf", lambda t: encode_pdf([t])),
-            1: ("docx", lambda t: encode_docx([t])),
-            2: ("pptx", lambda t: encode_pptx([t])),
-        }
-        with _zipfile.ZipFile(zip_file, "w") as zf:
-            for k, n in region_rows:
-                m_ext, enc = _zip_enc[k % 3]
-                zf.writestr(f"docs/r{k}.{m_ext}", enc(f"zip {n} doc zkey {k}"))
-            zf.writestr("docs/readme.txt", b"not a document")
-        zip_docs = read_zip_corpus(spark, zip_file).select(
-            (
-                F.lit(500)
-                + F.regexp_extract("member", r"r(\d+)\.", 1).cast("long")
-            ).alias("doc_id"),
-            "payload",
-        )
-        from data_integration_and_harmonization_spark.operators.multimodal import (
-            local_media_frame,
-        )
-
-        # JVM LocalTableScan, not defaultParallelism pickled slices —
-        # each slice of a plain-list local frame costs the downstream
-        # Arrow stage a Python-worker round-trip per task (r14)
-        doc_df = local_media_frame(
-            spark,
-            [
-                (k, bytearray(encode_pdf([f"Region ({n})", f"key \\ {k}"])))
-                for k, n in region_rows
-            ]
-            + [
-                (100 + k, bytearray(encode_docx([f"Region ({n})", f"key\t{k}"])))
-                for k, n in region_rows
-            ]
-            + [
-                (
-                    200 + k,
-                    bytearray(
-                        encode_pdf_cid(
-                            [f"Region ({n})", f"key {k}"], predictor=True
-                        )
-                    ),
-                )
-                for k, n in region_rows
-            ]
-            + [
-                (300 + k, bytearray(encode_pdf_cid([f"Régiön ({n}) — clé {k}"])))
-                for k, n in region_rows
-            ]
-            # ids 400+k ('__pdf2col', r13): absolutely-positioned pages
-            # whose STREAM order is scrambled (right column first,
-            # bottom row first) — the extractor's y-then-x reading-order
-            # pass must reassemble top row first / left first, which the
-            # oracle pins byte-exactly. Linear documents keep stream
-            # order (the md5 legs above stay byte-identical).
-            + [
-                (
-                    400 + k,
-                    bytearray(
-                        encode_pdf_positioned(
-                            [
-                                (306, 706, f"tail {k}"),
-                                (72, 706, f"key2 {k}"),
-                                (306, 720, f"R col2 {n}"),
-                                (72, 720, f"Region ({n})"),
-                            ]
-                        )
-                    ),
-                )
-                for k, n in region_rows
-            ]
-            # ids 600+k ('__epub', r13): EPUB books — OCF mimetype +
-            # container.xml -> OPF spine -> XHTML chapters, extracted in
-            # spine order by the same fused stage (sources/epub.py).
-            + [
-                (
-                    600 + k,
-                    bytearray(encode_epub([f"EPUB ({n})", f"chap key3 {k}"])),
-                )
-                for k, n in region_rows
-            ],
-            "doc_id long, payload binary",
-        ).unionByName(zip_docs)
-        from data_integration_and_harmonization_spark.functions.caching import track
-
-        # persisted: all four leg rows consume the extraction, and a
-        # 10-row Arrow stage still costs a full Python worker round-trip
-        # (~1 s at sf0.1 — the r4 fixed-overhead lesson); one stage
-        doc_texts = track(document_text_table(doc_df).persist())
-        pdf_texts = doc_texts.where(F.col("id") < 100).select("id", "text")
-        docx_texts = doc_texts.where(F.col("id").between(100, 199)).select(
-            (F.col("id") - 100).alias("id"), "text"
-        )
-        pdf15_texts = doc_texts.where(F.col("id").between(200, 299)).select(
-            (F.col("id") - 200).alias("id"), "text"
-        )
-        pdfcid_texts = doc_texts.where(F.col("id").between(300, 399)).select(
-            (F.col("id") - 300).alias("id"), "text"
-        )
-        pdf2col_texts = doc_texts.where(F.col("id").between(400, 499)).select(
-            (F.col("id") - 400).alias("id"), "text"
-        )
-        zip_texts = doc_texts.where(F.col("id").between(500, 599)).select(
-            (F.col("id") - 500).alias("id"), "fmt", "text"
-        )
-        epub_texts = doc_texts.where(F.col("id") >= 600).select(
-            (F.col("id") - 600).alias("id"), "text"
-        )
-
-        def _doc_rows(texts, tag: str, key_re: str):
-            count_row = texts.agg(
-                F.lit(f"__{tag}").alias("l_returnflag"),
-                F.count("text").alias("n_rows"),
-                F.lit(None).cast("double").alias("sum_qty"),
-                F.sum(F.length("text")).alias("sum_nkey"),
-                F.sum(
-                    F.regexp_extract("text", key_re, 1).cast("long")
-                ).alias("sum_rkey"),
-            )
-            md5_row = texts.agg(
-                F.concat(
-                    F.lit(f"__{tag}md5_"),
-                    F.md5(
-                        F.array_join(
-                            F.transform(
-                                F.array_sort(F.collect_list(F.struct("id", "text"))),
-                                lambda s: s["text"],
-                            ),
-                            "\x1f",
-                        )
-                    ),
-                ).alias("l_returnflag"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.lit(None).cast("double").alias("sum_qty"),
-                F.lit(None).cast("long").alias("sum_nkey"),
-                F.lit(None).cast("long").alias("sum_rkey"),
-            )
-            return count_row, md5_row
-
-        pdf15_row, pdf15_md5_row = _doc_rows(pdf15_texts, "pdf15", r"key (\d+)")
-        pdfcid_row, pdfcid_md5_row = _doc_rows(
-            pdfcid_texts, "pdfcid", r"clé (\d+)"
-        )
-        pdf2col_row, pdf2col_md5_row = _doc_rows(
-            pdf2col_texts, "pdf2col", r"key2 (\d+)"
-        )
-        epub_row, epub_md5_row = _doc_rows(epub_texts, "epub", r"key3 (\d+)")
-        docx_row = docx_texts.agg(
-            F.lit("__docx").alias("l_returnflag"),
-            F.count("text").alias("n_rows"),
-            F.lit(None).cast("double").alias("sum_qty"),
-            F.sum(F.length("text")).alias("sum_nkey"),
-            F.sum(
-                F.regexp_extract("text", r"key\t(\d+)", 1).cast("long")
-            ).alias("sum_rkey"),
-        )
-        docx_md5_row = docx_texts.agg(
+def _rt_md5_row(texts: DataFrame, tag: str, key: str) -> DataFrame:
+    return texts.agg(
+        *_rt_row(
             F.concat(
-                F.lit("__docxmd5_"),
+                F.lit(f"__{tag}md5_"),
                 F.md5(
                     F.array_join(
                         F.transform(
-                            F.array_sort(F.collect_list(F.struct("id", "text"))),
+                            F.array_sort(F.collect_list(F.struct(key, "text"))),
                             lambda s: s["text"],
                         ),
                         "\x1f",
                     )
                 ),
-            ).alias("l_returnflag"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.lit(None).cast("double").alias("sum_qty"),
-            F.lit(None).cast("long").alias("sum_nkey"),
-            F.lit(None).cast("long").alias("sum_rkey"),
-        )
-        pdf_row = pdf_texts.agg(
-            F.lit("__pdf").alias("l_returnflag"),
-            F.count("text").alias("n_rows"),
-            F.lit(None).cast("double").alias("sum_qty"),
-            F.sum(F.length("text")).alias("sum_nkey"),
-            F.sum(
-                F.regexp_extract("text", r"key \\ (\d+)", 1).cast("long")
-            ).alias("sum_rkey"),
-        )
-        # '__srt' row (r11): SubRip transcript ingestion — one cue per
-        # region row (start = 60000*k + 1500, 2500 ms long, two text
-        # lines), written driver-side like the DLQ csv, parsed back by
-        # the all-JVM read_srt pipeline. n_rows = cue count, sum_nkey =
-        # sum(start_ms + end_ms), sum_rkey = the key REPARSED from the cue
-        # text — the oracle rebuilds all three from region arithmetic.
-        from data_integration_and_harmonization_spark.sources.readers import read_srt
-
-        srt_file = base + "_region.srt"
-        with open(srt_file, "w") as fh:
-            for k, n in region_rows:
-                s_ms = 60000 * k + 1500
-                fh.write(f"{k + 1}\n")
-                fh.write(
-                    f"00:{s_ms // 60000:02d}:01,500 --> 00:{s_ms // 60000:02d}:04,000\n"
-                )
-                fh.write(f"Region {n}\nkey {k}\n\n")
-        srt_row = read_srt(spark, srt_file).agg(
-            F.lit("__srt").alias("l_returnflag"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.lit(None).cast("double").alias("sum_qty"),
-            F.sum(F.col("start_ms") + F.col("end_ms")).alias("sum_nkey"),
-            F.sum(F.regexp_extract("text", r"key (\d+)", 1).cast("long")).alias(
-                "sum_rkey"
             ),
+            F.count(F.lit(1)),
         )
-        # '__vtt' row (r12): WebVTT ingestion — one cue per region row
-        # with an identifier line and an HOURS-LESS timecode
-        # (MM:SS.mmm), start = 60000*k + 2500 for 3000 ms; sum_rkey
-        # reparses the key from both the cue id AND the text (they must
-        # agree). The oracle rebuilds everything from region arithmetic.
-        from data_integration_and_harmonization_spark.sources.readers import read_vtt
+    )
 
-        vtt_file = base + "_region.vtt"
-        with open(vtt_file, "w") as fh:
-            fh.write("WEBVTT - engine fixture\n\n")
-            fh.write("NOTE\nno timing line here, dropped by the reader\n\n")
-            for k, n in region_rows:
-                fh.write(f"c{k}\n")
-                fh.write(f"{k:02d}:02.500 --> {k:02d}:05.500 align:start\n")
-                fh.write(f"Region {n}\nkey {k}\n\n")
-        vtt_row = read_vtt(spark, vtt_file).agg(
-            F.lit("__vtt").alias("l_returnflag"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.lit(None).cast("double").alias("sum_qty"),
-            F.sum(F.col("start_ms") + F.col("end_ms")).alias("sum_nkey"),
-            F.sum(
-                F.regexp_extract("text", r"key (\d+)", 1).cast("long")
-                + F.regexp_extract("cue_id", r"c(\d+)", 1).cast("long")
-            ).alias("sum_rkey"),
-        )
-        # '__ass' row (r13): ASS/SSA subtitle ingestion — one Dialogue
-        # event per region row (layer k%2, centisecond timecodes: start =
-        # 60000*k + 3500 for 2800 ms, override tags stripped, a \\N
-        # midline) plus a Comment event and section headers the reader
-        # must drop. sum_rkey reparses the key from the CLEANED text and
-        # adds the layer; the oracle rebuilds everything from region.
-        from data_integration_and_harmonization_spark.sources.readers import read_ass
 
-        ass_file = base + "_region.ass"
-        with open(ass_file, "w") as fh:
-            fh.write("[Script Info]\nTitle: engine fixture\n\n[Events]\n")
-            fh.write(
-                "Format: Layer, Start, End, Style, Name, MarginL, MarginR, "
-                "MarginV, Effect, Text\n"
-            )
-            fh.write(
-                "Comment: 0,0:00:00.10,0:00:00.20,Default,,0,0,0,,not a cue\n"
-            )
-            for k, n in region_rows:
-                fh.write(
-                    f"Dialogue: {k % 2},0:{k:02d}:03.50,0:{k:02d}:06.30,"
-                    f"Default,,0,0,0,,"
-                    f"Region {n}\\N{{\\i1}}key6 {k}{{\\i0}}, tail\n"
-                )
-        ass_row = read_ass(spark, ass_file).agg(
-            F.lit("__ass").alias("l_returnflag"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.lit(None).cast("double").alias("sum_qty"),
-            F.sum(F.col("start_ms") + F.col("end_ms")).alias("sum_nkey"),
-            F.sum(
-                F.regexp_extract("text", r"key6 (\d+)", 1).cast("long")
-                + F.col("layer")
-            ).alias("sum_rkey"),
-        )
-        # '__warc' + '__warcmd5_*' rows (r12, hardened r13): web-crawl
-        # ingestion — an engine-written .warc.gz (one gzip member per
-        # record, the Common Crawl layout) holding one HTML response per
-        # region row, parsed by the distributed read_warc stage and
-        # text-extracted by the all-JVM html_to_text pipeline. Odd-key
-        # responses are captured the way real wire responses look:
-        # Transfer-Encoding chunked framing (read_warc must reassemble
-        # the entity or hex chunk sizes leak into the text) and a
-        # windows-1252 charset with non-ASCII typography (the reader's
-        # charset-aware `text` column must honor the DECLARED charset —
-        # a latin-1 fallback would decode U+201C as the C1 control
-        # U+0093; same length, so the md5 row is what catches it). The
-        # expected plain text is the html pipeline's CONTRACT (title/p
-        # closers -> newlines, script blocks dropped, &amp; decoded).
-        from data_integration_and_harmonization_spark.operators.text import (
-            html_to_text,
-        )
-        from data_integration_and_harmonization_spark.sources.warc import (
-            encode_warc,
-            read_warc,
-        )
+def _rt_fixtures(ctx: dict[str, Any]) -> DataFrame:
+    """Driver-encoded document, transcript and web fixtures (pure
+    Python byte builders) read back by the engine's readers; every
+    value is reconstructed by the oracle from the region table alone."""
+    spark, base, region_rows = ctx["spark"], ctx["base"], ctx["region_rows"]
+    rows = (
+        _rt_documents(spark, base, region_rows)
+        + _rt_captions(spark, base, region_rows)
+        + _rt_web(spark, base, region_rows)
+    )
+    return functools.reduce(DataFrame.unionByName, rows)
 
-        warc_file = base + "_region.warc.gz"
-        with open(warc_file, "wb") as fh:
-            fh.write(
-                encode_warc(
-                    [
-                        (
-                            f"http://crawl.example/r/{k}",
-                            f"2026-01-01T00:00:{k:02d}Z",
-                            (
-                                f"<html><head><title>Región ({n})</title>"
-                                f"</head><body><p>key &amp; {k} “q”</p>"
-                                f"<script>var x = 1 < 2;</script></body></html>"
-                            ),
-                            {"chunked": True, "charset": "windows-1252"},
-                        )
-                        if k % 2 == 1
-                        else (
-                            f"http://crawl.example/r/{k}",
-                            f"2026-01-01T00:00:{k:02d}Z",
-                            f"<html><head><title>Region ({n})</title></head>"
-                            f"<body><p>key &amp; {k}</p>"
-                            f"<script>var x = 1 < 2;</script></body></html>",
-                        )
-                        for k, n in region_rows
-                    ],
-                    gzip_members=True,
-                )
-            )
-        warc_texts = (
-            read_warc(spark, warc_file)
-            .where(F.col("warc_type") == "response")
-            .select("url", html_to_text(F.col("text")).alias("text"))
-        )
-        warc_row = warc_texts.agg(
-            F.lit("__warc").alias("l_returnflag"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.lit(None).cast("double").alias("sum_qty"),
-            F.sum(F.length("text")).alias("sum_nkey"),
-            F.sum(
-                F.regexp_extract("text", r"key & (\d+)", 1).cast("long")
-            ).alias("sum_rkey"),
-        )
-        # '__wiki' row (r13): MediaWiki dump ingestion — an engine-written
-        # bz2 export (the dump wire format) holding one ns-0 article per
-        # region row PLUS a redirect and a Category page that the article
-        # filter (ns = 0 AND redirect IS NULL) must exclude; parsed by
-        # the streaming iterparse stage of read_mediawiki. Totals are
-        # reconstructed by the oracle from region alone.
-        from data_integration_and_harmonization_spark.sources.wiki import (
-            encode_mediawiki,
-            read_mediawiki,
-        )
 
-        wiki_file = base + "_region.xml.bz2"
-        with open(wiki_file, "wb") as fh:
-            fh.write(
-                encode_mediawiki(
-                    [
-                        (k + 1, 0, f"Region ({n})", f"wiki {n} key4 {k}")
-                        for k, n in region_rows
-                    ]
-                    + [
-                        (900, 0, "Old name", "#REDIRECT [[Region]]", "Region"),
-                        (901, 14, "Category:Regions", "not an article"),
-                    ],
-                    compress="bz2",
-                )
-            )
-        wiki_row = (
-            read_mediawiki(spark, wiki_file)
-            .where((F.col("ns") == 0) & F.col("redirect").isNull())
-            .agg(
-                F.lit("__wiki").alias("l_returnflag"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.lit(None).cast("double").alias("sum_qty"),
-                F.sum(F.length("text")).alias("sum_nkey"),
-                F.sum(
-                    F.regexp_extract("text", r"key4 (\d+)", 1).cast("long")
-                ).alias("sum_rkey"),
-            )
-        )
-        # '__wikitxt' row (r13): the wikitext -> plain-text cleaner (the
-        # stage between read_mediawiki and quality/dedup) over per-region
-        # markup exercising templates, piped links, refs and bold runs —
-        # all-JVM column expressions; the oracle reconstructs the CLEANED
-        # strings from region alone (fixture in, expected out — no
-        # cross-engine regex replay needed).
-        from data_integration_and_harmonization_spark.operators.text import (
-            wikitext_to_text,
-        )
+def _rt_documents(spark: SparkSession, base: str, region_rows: list) -> list[DataFrame]:
+    """The document rows: one fused Arrow extraction stage over every
+    engine-encoded document (``document_text_table`` dispatches by
+    magic bytes) — ids 0+k PDF, 100+k DOCX, 200+k PDF-1.5, 300+k CID
+    PDF, 400+k two-column PDF, 500+k zip members, 600+k EPUB."""
+    # '__pdf' + '__pdfmd5_*' rows (r11): baseline PDF text extraction
+    # (functions/pdf.py — Flate content streams + Tj/TJ show
+    # operators, ISO 32000-1). One two-page PDF per region row is
+    # ENGINE-ENCODED with text derived purely from the region table
+    # (page 1: 'Region (<name>)', page 2: 'key \\ <k>' — parens and a
+    # backslash in every document, so the string-escape grammar is on
+    # the oracle path), extracted back by the distributed Arrow stage.
+    # '__docx' + '__docxmd5_*' rows (r12): DOCX text extraction
+    # (sources/docx.py — stdlib ECMA-376 zip + word/document.xml run
+    # walk). One two-paragraph document per region row with a w:tab
+    # in paragraph 2 ('key\t<k>' — the tab element is on the oracle
+    # path), riding in the SAME fused Arrow stage as the PDFs: a mixed
+    # document corpus pays ONE Python worker round-trip.
+    # '__pdf15' + '__pdfcid' rows (r12): the modern-PDF document tier.
+    # ids 200+k: PDF-1.5 fixtures with every non-stream object in a
+    # compressed /ObjStm and a /Type /XRef cross-reference STREAM
+    # behind the PNG Up predictor (the layout real writers emit) —
+    # ASCII text, so the leg isolates the xref/ObjStm machinery.
+    # ids 300+k: Identity-H CID fixtures whose 2-byte codes only
+    # decode through the /ToUnicode CMap, with non-latin text (é/ö/—)
+    # a simple-font tier cannot even represent.
 
-        wikitxt_row = (
-            spark.createDataFrame(region_rows, "k long, n string")
-            .select(
-                "k",
-                wikitext_to_text(
-                    F.format_string(
-                        "'''wiki''' [[X|%s place]] {{infobox|k=%d}} "
-                        "<ref>cite</ref>clean key5 %d",
-                        F.col("n"),
-                        F.col("k"),
-                        F.col("k"),
+    # JVM LocalTableScan, not defaultParallelism pickled slices —
+    # each slice of a plain-list local frame costs the downstream
+    # Arrow stage a Python-worker round-trip per task (r14)
+    doc_df = MM.local_media_frame(
+        spark,
+        [
+            (k, bytearray(encode_pdf([f"Region ({n})", f"key \\ {k}"])))
+            for k, n in region_rows
+        ]
+        + [
+            (100 + k, bytearray(encode_docx([f"Region ({n})", f"key\t{k}"])))
+            for k, n in region_rows
+        ]
+        + [
+            (
+                200 + k,
+                bytearray(
+                    encode_pdf_cid([f"Region ({n})", f"key {k}"], predictor=True)
+                ),
+            )
+            for k, n in region_rows
+        ]
+        + [
+            (300 + k, bytearray(encode_pdf_cid([f"Régiön ({n}) — clé {k}"])))
+            for k, n in region_rows
+        ]
+        # ids 400+k ('__pdf2col', r13): absolutely-positioned pages
+        # whose STREAM order is scrambled (right column first,
+        # bottom row first) — the extractor's y-then-x reading-order
+        # pass must reassemble top row first / left first, which the
+        # oracle pins byte-exactly. Linear documents keep stream
+        # order (the md5 rows above stay byte-identical).
+        + [
+            (
+                400 + k,
+                bytearray(
+                    encode_pdf_positioned(
+                        [
+                            (306, 706, f"tail {k}"),
+                            (72, 706, f"key2 {k}"),
+                            (306, 720, f"R col2 {n}"),
+                            (72, 720, f"Region ({n})"),
+                        ]
                     )
-                ).alias("text"),
+                ),
             )
-            .agg(
-                F.lit("__wikitxt").alias("l_returnflag"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.lit(None).cast("double").alias("sum_qty"),
-                F.sum(F.length("text")).alias("sum_nkey"),
-                F.sum(
-                    F.regexp_extract("text", r"key5 (\d+)", 1).cast("long")
-                ).alias("sum_rkey"),
-            )
+            for k, n in region_rows
+        ]
+        # ids 600+k ('__epub', r13): EPUB books — OCF mimetype +
+        # container.xml -> OPF spine -> XHTML chapters, extracted in
+        # spine order by the same fused stage (sources/epub.py).
+        + [
+            (600 + k, bytearray(encode_epub([f"EPUB ({n})", f"chap key3 {k}"])))
+            for k, n in region_rows
+        ],
+        "doc_id long, payload binary",
+    ).unionByName(_rt_zip_docs(spark, base, region_rows))
+    # persisted: every document row consumes the extraction, and a
+    # 10-row Arrow stage still costs a full Python worker round-trip
+    # (~1 s at sf0.1 — the r4 fixed-overhead lesson); one stage
+    doc_texts = track(TX.document_text_table(doc_df).persist())
+
+    def texts(lo: int, hi: int, *cols: str) -> DataFrame:
+        return doc_texts.where(F.col("id").between(lo, hi)).select(
+            (F.col("id") - lo).alias("id"), *cols, "text"
         )
-        zip_row = zip_texts.agg(
-            F.lit("__zip").alias("l_returnflag"),
+
+    # '__zip' row: n_rows counts members whose magic-byte fmt matches
+    # the format implied by their id (pins the dispatch, not just the
+    # text); the readme member's id parses NULL and quarantines out of
+    # every range filter
+    zip_row = texts(500, 599, "fmt").agg(
+        *_rt_row(
+            "__zip",
             F.sum(
                 (
                     F.col("fmt")
@@ -1851,94 +1610,260 @@ def q_src_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
                         (F.col("id") % 3 + 1).cast("int"),
                     )
                 ).cast("long")
-            ).alias("n_rows"),
-            F.lit(None).cast("double").alias("sum_qty"),
-            F.sum(F.length("text")).alias("sum_nkey"),
-            F.sum(
-                F.regexp_extract("text", r"zkey (\d+)", 1).cast("long")
-            ).alias("sum_rkey"),
+            ),
+            sum_nkey=F.sum(F.length("text")),
+            sum_rkey=F.sum(F.regexp_extract("text", r"zkey (\d+)", 1).cast("long")),
         )
-        warc_md5_row = warc_texts.agg(
-            F.concat(
-                F.lit("__warcmd5_"),
-                F.md5(
-                    F.array_join(
-                        F.transform(
-                            F.array_sort(F.collect_list(F.struct("url", "text"))),
-                            lambda s: s["text"],
-                        ),
-                        "\x1f",
-                    )
-                ),
-            ).alias("l_returnflag"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.lit(None).cast("double").alias("sum_qty"),
-            F.lit(None).cast("long").alias("sum_nkey"),
-            F.lit(None).cast("long").alias("sum_rkey"),
-        )
-        pdf_md5_row = pdf_texts.agg(
-            F.concat(
-                F.lit("__pdfmd5_"),
-                F.md5(
-                    F.array_join(
-                        F.transform(
-                            F.array_sort(F.collect_list(F.struct("id", "text"))),
-                            lambda s: s["text"],
-                        ),
-                        "\x1f",
-                    )
-                ),
-            ).alias("l_returnflag"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.lit(None).cast("double").alias("sum_qty"),
-            F.lit(None).cast("long").alias("sum_nkey"),
-            F.lit(None).cast("long").alias("sum_rkey"),
-        )
-        return [
-            pdf_row,
-            pdf_md5_row,
-            docx_row,
-            docx_md5_row,
-            pdf15_row,
-            pdf15_md5_row,
-            pdfcid_row,
-            pdfcid_md5_row,
-            pdf2col_row,
-            pdf2col_md5_row,
-            epub_row,
-            epub_md5_row,
-            srt_row,
-            vtt_row,
-            warc_row,
-            warc_md5_row,
-            zip_row,
-            wiki_row,
-            wikitxt_row,
-            ass_row,
-        ]
-
-    (
-        (agg, prev_row),
-        part_row,
-        (z_row, skip_row, del_row, merge_row, evolve_row),
-        comp_row,
-        fixture_rows,
-    ) = overlap(_ingest_chain, _part_chain, _zver_chain, _compact_chain, _fixture_chain)
-    out = (
-        agg.unionByName(prev_row)
-        .unionByName(part_row)
-        .unionByName(z_row)
-        .unionByName(comp_row)
-        .unionByName(del_row)
-        .unionByName(merge_row)
-        .unionByName(evolve_row)
-        .unionByName(skip_row)
-        .unionByName(xlsx_ds_row)
-        .unionByName(dlq_row)
     )
-    for row in fixture_rows:
-        out = out.unionByName(row)
-    return out
+    return (
+        _rt_text_rows(texts(0, 99), "pdf", r"key \\ (\d+)")
+        + _rt_text_rows(texts(100, 199), "docx", r"key\t(\d+)")
+        + _rt_text_rows(texts(200, 299), "pdf15", r"key (\d+)")
+        + _rt_text_rows(texts(300, 399), "pdfcid", r"clé (\d+)")
+        + _rt_text_rows(texts(400, 499), "pdf2col", r"key2 (\d+)")
+        + _rt_text_rows(
+            doc_texts.where(F.col("id") >= 600).select(
+                (F.col("id") - 600).alias("id"), "text"
+            ),
+            "epub",
+            r"key3 (\d+)",
+        )
+        + [zip_row]
+    )
+
+
+def _rt_zip_docs(spark: SparkSession, base: str, region_rows: list) -> DataFrame:
+    """'__zip' members (r13): zip-archive corpus ingestion — an
+    engine-written zip of mixed pdf/docx/pptx members (one per region
+    row, format by key mod 3) plus a non-document member, read by the
+    distributed read_zip_corpus stage (one binaryFile task per
+    archive, one Arrow member walk). The members join the loose
+    documents as ids 500+k, so the whole mixed corpus extracts in ONE
+    fused Arrow stage."""
+    zip_file = base + "_region.zip"
+    enc = {
+        0: ("pdf", lambda t: encode_pdf([t])),
+        1: ("docx", lambda t: encode_docx([t])),
+        2: ("pptx", lambda t: encode_pptx([t])),
+    }
+    with zipfile.ZipFile(zip_file, "w") as zf:
+        for k, n in region_rows:
+            m_ext, encode = enc[k % 3]
+            zf.writestr(f"docs/r{k}.{m_ext}", encode(f"zip {n} doc zkey {k}"))
+        zf.writestr("docs/readme.txt", b"not a document")
+    return read_zip_corpus(spark, zip_file).select(
+        (
+            F.lit(500) + F.regexp_extract("member", r"r(\d+)\.", 1).cast("long")
+        ).alias("doc_id"),
+        "payload",
+    )
+
+
+def _rt_captions(spark: SparkSession, base: str, region_rows: list) -> list[DataFrame]:
+    """The transcript rows: one cue per region row in each of SubRip,
+    WebVTT and ASS, written driver-side and parsed back by the
+    all-JVM readers; n_rows = cue count, sum_nkey = sum(start_ms +
+    end_ms), sum_rkey = the key REPARSED from the cue text — the
+    oracle rebuilds all three from region arithmetic."""
+    def cue_row(df: DataFrame, tag: str, rkey: Column) -> DataFrame:
+        return df.agg(
+            *_rt_row(
+                tag,
+                F.count(F.lit(1)),
+                sum_nkey=F.sum(F.col("start_ms") + F.col("end_ms")),
+                sum_rkey=F.sum(rkey),
+            )
+        )
+
+    # '__srt' row (r11): start = 60000*k + 1500, 2500 ms long, two
+    # text lines.
+    srt_file = base + "_region.srt"
+    with open(srt_file, "w") as fh:
+        for k, n in region_rows:
+            s_ms = 60000 * k + 1500
+            fh.write(f"{k + 1}\n")
+            fh.write(
+                f"00:{s_ms // 60000:02d}:01,500 --> 00:{s_ms // 60000:02d}:04,000\n"
+            )
+            fh.write(f"Region {n}\nkey {k}\n\n")
+    # '__vtt' row (r12): an identifier line and an HOURS-LESS timecode
+    # (MM:SS.mmm), start = 60000*k + 2500 for 3000 ms; sum_rkey
+    # reparses the key from both the cue id AND the text (they must
+    # agree).
+    vtt_file = base + "_region.vtt"
+    with open(vtt_file, "w") as fh:
+        fh.write("WEBVTT - engine fixture\n\n")
+        fh.write("NOTE\nno timing line here, dropped by the reader\n\n")
+        for k, n in region_rows:
+            fh.write(f"c{k}\n")
+            fh.write(f"{k:02d}:02.500 --> {k:02d}:05.500 align:start\n")
+            fh.write(f"Region {n}\nkey {k}\n\n")
+    # '__ass' row (r13): ASS/SSA subtitles — one Dialogue event per
+    # region row (layer k%2, centisecond timecodes: start = 60000*k +
+    # 3500 for 2800 ms, override tags stripped, a \\N midline) plus a
+    # Comment event and section headers the reader must drop.
+    # sum_rkey reparses the key from the CLEANED text and adds the
+    # layer.
+    ass_file = base + "_region.ass"
+    with open(ass_file, "w") as fh:
+        fh.write("[Script Info]\nTitle: engine fixture\n\n[Events]\n")
+        fh.write(
+            "Format: Layer, Start, End, Style, Name, MarginL, MarginR, "
+            "MarginV, Effect, Text\n"
+        )
+        fh.write("Comment: 0,0:00:00.10,0:00:00.20,Default,,0,0,0,,not a cue\n")
+        for k, n in region_rows:
+            fh.write(
+                f"Dialogue: {k % 2},0:{k:02d}:03.50,0:{k:02d}:06.30,"
+                f"Default,,0,0,0,,"
+                f"Region {n}\\N{{\\i1}}key6 {k}{{\\i0}}, tail\n"
+            )
+    return [
+        cue_row(
+            read_srt(spark, srt_file),
+            "__srt",
+            F.regexp_extract("text", r"key (\d+)", 1).cast("long"),
+        ),
+        cue_row(
+            read_vtt(spark, vtt_file),
+            "__vtt",
+            F.regexp_extract("text", r"key (\d+)", 1).cast("long")
+            + F.regexp_extract("cue_id", r"c(\d+)", 1).cast("long"),
+        ),
+        cue_row(
+            read_ass(spark, ass_file),
+            "__ass",
+            F.regexp_extract("text", r"key6 (\d+)", 1).cast("long") + F.col("layer"),
+        ),
+    ]
+
+
+def _rt_web(spark: SparkSession, base: str, region_rows: list) -> list[DataFrame]:
+    """The web rows: a crawl archive, a wiki dump and wikitext markup,
+    one page per region row."""
+    def text_row(df: DataFrame, tag: str, key_re: str) -> DataFrame:
+        return df.agg(
+            *_rt_row(
+                tag,
+                F.count(F.lit(1)),
+                sum_nkey=F.sum(F.length("text")),
+                sum_rkey=F.sum(F.regexp_extract("text", key_re, 1).cast("long")),
+            )
+        )
+
+    # '__warc' + '__warcmd5_*' rows (r12, hardened r13): web-crawl
+    # ingestion — an engine-written .warc.gz (one gzip member per
+    # record, the Common Crawl layout) holding one HTML response per
+    # region row, parsed by the distributed read_warc stage and
+    # text-extracted by the all-JVM html_to_text pipeline. Odd-key
+    # responses are captured the way real wire responses look:
+    # Transfer-Encoding chunked framing (read_warc must reassemble
+    # the entity or hex chunk sizes leak into the text) and a
+    # windows-1252 charset with non-ASCII typography (the reader's
+    # charset-aware `text` column must honor the DECLARED charset —
+    # a latin-1 fallback would decode U+201C as the C1 control
+    # U+0093; same length, so the md5 row is what catches it). The
+    # expected plain text is the html pipeline's CONTRACT (title/p
+    # closers -> newlines, script blocks dropped, &amp; decoded).
+    warc_file = base + "_region.warc.gz"
+    with open(warc_file, "wb") as fh:
+        fh.write(
+            encode_warc(
+                [
+                    (
+                        f"http://crawl.example/r/{k}",
+                        f"2026-01-01T00:00:{k:02d}Z",
+                        (
+                            f"<html><head><title>Región ({n})</title>"
+                            f"</head><body><p>key &amp; {k} “q”</p>"
+                            f"<script>var x = 1 < 2;</script></body></html>"
+                        ),
+                        {"chunked": True, "charset": "windows-1252"},
+                    )
+                    if k % 2 == 1
+                    else (
+                        f"http://crawl.example/r/{k}",
+                        f"2026-01-01T00:00:{k:02d}Z",
+                        f"<html><head><title>Region ({n})</title></head>"
+                        f"<body><p>key &amp; {k}</p>"
+                        f"<script>var x = 1 < 2;</script></body></html>",
+                    )
+                    for k, n in region_rows
+                ],
+                gzip_members=True,
+            )
+        )
+    warc_texts = (
+        read_warc(spark, warc_file)
+        .where(F.col("warc_type") == "response")
+        .select("url", TX.html_to_text(F.col("text")).alias("text"))
+    )
+    # '__wiki' row (r13): MediaWiki dump ingestion — an engine-written
+    # bz2 export (the dump wire format) holding one ns-0 article per
+    # region row PLUS a redirect and a Category page that the article
+    # filter (ns = 0 AND redirect IS NULL) must exclude; parsed by
+    # the streaming iterparse stage of read_mediawiki.
+    wiki_file = base + "_region.xml.bz2"
+    with open(wiki_file, "wb") as fh:
+        fh.write(
+            encode_mediawiki(
+                [
+                    (k + 1, 0, f"Region ({n})", f"wiki {n} key4 {k}")
+                    for k, n in region_rows
+                ]
+                + [
+                    (900, 0, "Old name", "#REDIRECT [[Region]]", "Region"),
+                    (901, 14, "Category:Regions", "not an article"),
+                ],
+                compress="bz2",
+            )
+        )
+    # '__wikitxt' row (r13): the wikitext -> plain-text cleaner (the
+    # stage between read_mediawiki and quality/dedup) over per-region
+    # markup exercising templates, piped links, refs and bold runs —
+    # all-JVM column expressions; the oracle reconstructs the CLEANED
+    # strings from region alone (fixture in, expected out — no
+    # cross-engine regex replay needed).
+    wikitxt = spark.createDataFrame(region_rows, "k long, n string").select(
+        "k",
+        TX.wikitext_to_text(
+            F.format_string(
+                "'''wiki''' [[X|%s place]] {{infobox|k=%d}} "
+                "<ref>cite</ref>clean key5 %d",
+                F.col("n"),
+                F.col("k"),
+                F.col("k"),
+            )
+        ).alias("text"),
+    )
+    return [
+        text_row(warc_texts, "__warc", r"key & (\d+)"),
+        _rt_md5_row(warc_texts, "warc", "url"),
+        text_row(
+            read_mediawiki(spark, wiki_file).where(
+                (F.col("ns") == 0) & F.col("redirect").isNull()
+            ),
+            "__wiki",
+            r"key4 (\d+)",
+        ),
+        text_row(wikitxt, "__wikitxt", r"key5 (\d+)"),
+    ]
+
+
+# The legs run concurrently and union in this order; the oracle is
+# SRC_ROUNDTRIP_SQL.
+SRC_ROUNDTRIP_LEGS: tuple[Setup, Legs] = (
+    _rt_setup,
+    (
+        ("ingest", _rt_ingest),
+        ("part", _rt_part),
+        ("zver", _rt_zver),
+        ("compact", _rt_compact),
+        ("fixtures", _rt_fixtures),
+        ("xlsx_ds", _rt_xlsx_ds),
+        ("csv_dlq", _rt_csv_dlq),
+    ),
+)
 
 
 def q_ml_exact_split(spark: SparkSession, sf: str) -> DataFrame:
@@ -2019,63 +1944,55 @@ def q_ml_tuned(spark: SparkSession, sf: str) -> DataFrame:
     return ML.train_models_df(spark, res)
 
 
-def q_stream_batch_twin(spark: SparkSession, sf: str) -> DataFrame:
-    """Streaming/batch agreement as a driver-visible query, one
-    summary row per streaming path (all three drain through the
-    production parquet sink — ``foreachBatch`` writes distributed,
-    nothing funnels through the driver):
+# ------------------------------------------------ stream_batch_twin legs
+#
+# Streaming/batch agreement as a driver-visible query: one leg per
+# streaming path, each draining its Structured Streaming query through
+# the production parquet sink (``foreachBatch`` writes distributed,
+# nothing funnels through the driver) and comparing the drained output
+# against its batch twin in one verdict row (kind, n_windows, n_agree,
+# all_agree). The memory-sink drain stays covered by
+# tests/test_streaming.py. The drains are independent streaming
+# queries, so their fixed per-query costs (checkpoint setup,
+# micro-batch planning: ~2.5 s each alone) overlap across the legs;
+# results are deterministic per drain, so concurrency cannot change
+# values.
 
-    - 'tumbling': the windowed agg (complete mode) full-outer joined
-      against its batch twin — n_windows windows, all must agree.
-    - 'dedup': ``dedup_stream`` (``dropDuplicatesWithinWatermark``,
-      append mode) with a horizon wider than the data's time range, so
-      its emitted key set must EQUAL the batch distinct set — compared
-      as a full-outer join on the key, not just by count.
-    - 'stateful': ``user_running_stats`` (``applyInPandasWithState``,
-      update mode): each user's final carried state (count, sum) after
-      all micro-batches must equal the batch groupBy. Last-writer-wins
-      via the drain's __batch_id.
-    - 'join': ``interval_join_stream`` — a watermarked STREAM-STREAM
-      interval join (views attributed to same-user purchases within 30
-      minutes, both sides streams with bounded join state) — its
-      emitted (l_id, r_id) pair SET full-outer compared against the
-      batch interval join's.
-    - 'session': ``session_stream`` (``F.session_window``, the
-      stateful MERGING window — state is per-session intervals that
-      coalesce as late events bridge gaps, unlike tumbling's fixed
-      buckets) — every (user_id, session_start, n_events) session
-      full-outer compared against the batch ``session_agg`` twin;
-      the oracle independently replays the session set as
-      gaps-and-islands SQL.
-    - 'versioned': ``stream_to_versioned_table`` — transactional
-      append ingestion, one manifest version per micro-batch; final
-      pinned version holds exactly the batch count, per-version
-      counts strictly increase.
-    - 'cdc': ``stream_cdc_to_versioned_table`` — streaming CDC MERGE
-      with newer-wins resolution; the merged table's final row per
-      (user_id, event_type) must equal the batch per-key argmax by
-      (ts, event_id), key-for-key (batching-independent because
-      event_id totalizes the order).
-    - 'dq': ``stream_dq_split`` — dead-letter-queue quarantine
-      routing on row-local rules; the streamed passed/quarantined
-      label-group counts must equal the batch ``dq_split`` of the
-      same rules, group-for-group (row-local routing is micro-batch-
-      boundary-invariant by construction).
+_TWIN_DD_KEYS = ["user_id", "event_type"]
+# row-local rules only, so the union of per-batch routings must equal
+# the batch dq_split exactly, label-group for label-group
+_TWIN_DQ_RULES = [
+    ("in_range", "value", 0.0, 250.0),
+    ("accepted", "event_type", ["click", "view", "purchase", "signup"]),
+    ("not_null", "user_id"),
+]
 
-    The memory-sink drain stays covered by tests/test_streaming.py.
-    """
-    import uuid
 
-    from data_integration_and_harmonization_spark.streaming import pipeline as SP
-    from data_integration_and_harmonization_spark.streaming import stateful as ST
+def _twin_row(
+    kind: str, n_windows: Column, n_agree: Column, all_agree: Column
+) -> list[Column]:
+    """One stream_batch_twin verdict row's columns."""
+    return [
+        F.lit(kind).alias("kind"),
+        n_windows.alias("n_windows"),
+        n_agree.alias("n_agree"),
+        all_agree.alias("all_agree"),
+    ]
 
+
+def _agree_row(df: DataFrame, kind: str, agree: Column) -> DataFrame:
+    """The verdict over a twin comparison frame: rows compared, rows
+    where ``agree`` holds, and whether all do."""
+    return df.agg(
+        *_twin_row(
+            kind, F.count(F.lit(1)), F.sum(agree.cast("long")), F.min(agree)
+        )
+    )
+
+
+def _twin_setup(spark: SparkSession, sf: str) -> dict[str, Any]:
+    """The batch events and the cloned session every drain runs on."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    run_id = uuid.uuid4().hex[:8]
-    # normalize BOTH twin sides' event time to TimestampType
-    # (watermarks reject TIMESTAMP_NTZ; cast is value-preserving under
-    # the pinned UTC session tz)
-    events = SP.ensure_event_time(EV.load_events(spark, sf))
-    batch = EV.tumbling_agg(events)
     # All drains run on a CLONED session (shared SparkContext,
     # isolated SQLConf): stateful streaming cost scales with
     # STATE-STORE COUNT = shuffle partitions at query start (each
@@ -2096,158 +2013,36 @@ def q_stream_batch_twin(spark: SparkSession, sf: str) -> DataFrame:
     s2 = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
     s2.conf.set("spark.sql.shuffle.partitions", "8")
     s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream_ev = SP.ensure_event_time(SP.stream_events(s2, f"{sf}/events.parquet"))
+    return {
+        "spark": spark,
+        "s2": s2,
+        "src": f"{sf}/events.parquet",
+        "run_id": uuid.uuid4().hex[:8],
+        # normalize BOTH twin sides' event time to TimestampType
+        # (watermarks reject TIMESTAMP_NTZ; cast is value-preserving
+        # under the pinned UTC session tz)
+        "events": SP.ensure_event_time(EV.load_events(spark, sf)),
+    }
 
-    # The drains are independent Structured Streaming queries — start
-    # them from concurrent driver threads so their fixed per-query
-    # costs (checkpoint setup, micro-batch planning) overlap instead of
-    # serializing (~2.5 s each alone; ~one query's cost concurrent).
-    # Results are deterministic per drain, so concurrency cannot change
-    # values.
-    dd_keys = ["user_id", "event_type"]
 
-    # 6th leg: transactional versioned-table sink — every micro-batch
-    # commits a manifest version (append), so a pinned reader never
-    # sees a half-visible batch. The 9th leg's DRAIN (r11), the
-    # manifest_cdf streaming source over this table, follows it in the
-    # same thread: its input is this drain's commit chain, and its
-    # fixed streaming-query cost still overlaps the remaining drains.
-    def _drain_versioned():
-        import os as _os
+def _twin_stream(ctx: dict[str, Any], **kw: Any) -> DataFrame:
+    return SP.stream_events(ctx["s2"], ctx["src"], **kw)
 
-        from data_integration_and_harmonization_spark.functions.caching import (
-            scratch_dir as _scratch,
-        )
-        from data_integration_and_harmonization_spark.sources.cdf_stream import (
-            read_manifest_cdf,
-        )
 
-        b = _scratch(f"twin_ver_{run_id}")
-        root = _os.path.join(b, "tbl")
-        vs = SP.stream_to_versioned_table(
-            SP.stream_events(s2, f"{sf}/events.parquet"),
-            root,
-            _os.path.join(b, "data"),
-        )
-        fb = _scratch(f"twin_cdf_feed_{run_id}")
-        out = _os.path.join(fb, "out")
-        (
-            read_manifest_cdf(spark, root, ["event_id"])
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", _os.path.join(fb, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        return root, vs, out
+def _twin_drain(ctx: dict[str, Any], stream: DataFrame, tag: str, *mode: Any) -> DataFrame:
+    return SP.run_availablenow(stream, f"twin{tag}_{ctx['run_id']}", "parquet", *mode)
 
-    # 7th leg: streaming CDC MERGE — per-batch upserts into a manifest
-    # table with newer-wins conflict resolution; the final state must
-    # equal the batch per-key argmax regardless of micro-batch
-    # boundaries.
-    def _drain_cdc():
-        import os as _os
 
-        from data_integration_and_harmonization_spark.functions.caching import (
-            scratch_dir as _scratch,
-        )
-
-        b = _scratch(f"twin_cdc_{run_id}")
-        root = _os.path.join(b, "tbl")
-        SP.stream_cdc_to_versioned_table(
-            SP.stream_events(
-                s2, f"{sf}/events.parquet", max_files_per_trigger=2
-            ).where(F.col("user_id") % 25 == 0),
-            root,
-            _os.path.join(b, "data"),
-            ["user_id", "event_type"],
-            ["ts", "event_id"],
-        )
-        return root
-
-    # 8th leg: streaming DQ quarantine routing (dead-letter queue) —
-    # row-local rules only, so the union of per-batch routings must
-    # equal the batch dq_split exactly, label-group for label-group.
-    _dq_rules = [
-        ("in_range", "value", 0.0, 250.0),
-        ("accepted", "event_type", ["click", "view", "purchase", "signup"]),
-        ("not_null", "user_id"),
-    ]
-
-    def _drain_dq():
-        import os as _os
-
-        from data_integration_and_harmonization_spark.functions.caching import (
-            scratch_dir as _scratch,
-        )
-
-        b = _scratch(f"twin_dq_{run_id}")
-        p_dir = _os.path.join(b, "passed")
-        q_dir = _os.path.join(b, "quarantined")
-        SP.stream_dq_split(
-            SP.stream_events(s2, f"{sf}/events.parquet"),
-            _dq_rules,
-            p_dir,
-            q_dir,
-        )
-        return p_dir, q_dir
-
-    (
-        drained,
-        dd,
-        st,
-        sj_pairs,
-        sess,
-        (ver_root, ver_versions, cdf_out),
-        cdc_root,
-        (dq_passed_dir, dq_quar_dir),
-    ) = overlap(
-        lambda: SP.run_availablenow(
-            SP.tumbling_stream(stream_ev), f"twin_{run_id}", "parquet"
-        ),
-        lambda: SP.run_availablenow(
-            ST.dedup_stream(
-                SP.stream_events(s2, f"{sf}/events.parquet"),
-                dd_keys,
-                "ts",
-                delay="3650 days",
-            ),
-            f"twin_dd_{run_id}",
-            "parquet",
-            None,
-            "append",
-        ),
-        lambda: SP.run_availablenow(
-            ST.user_running_stats(SP.stream_events(s2, f"{sf}/events.parquet")),
-            f"twin_st_{run_id}",
-            "parquet",
-            None,
-            "update",
-        ),
-        lambda: SP.run_availablenow(
-            SP.interval_join_stream(
-                SP.stream_events(s2, f"{sf}/events.parquet"),
-                SP.stream_events(s2, f"{sf}/events.parquet"),
-            ),
-            f"twin_j_{run_id}",
-            "parquet",
-            None,
-            "append",
-        ),
-        lambda: SP.run_availablenow(
-            SP.session_stream(SP.stream_events(s2, f"{sf}/events.parquet")),
-            f"twin_sess_{run_id}",
-            "parquet",
-        ),
-        _drain_versioned,
-        _drain_cdc,
-        _drain_dq,
+def _twin_tumbling(ctx: dict[str, Any]) -> DataFrame:
+    """'tumbling': the windowed agg (complete mode) full-outer joined
+    against its batch twin — n_windows windows, all must agree."""
+    drained = _twin_drain(
+        ctx, SP.tumbling_stream(SP.ensure_event_time(_twin_stream(ctx))), ""
     )
     s = drained.select(
         "window_start", "event_type", F.col("n_events").alias("s_n"), F.col("sum_value").alias("s_sum")
     )
-    b = batch.select(
+    b = EV.tumbling_agg(ctx["events"]).select(
         "window_start", "event_type", F.col("n_events").alias("b_n"), F.col("sum_value").alias("b_sum")
     )
     j = s.join(b, ["window_start", "event_type"], "full_outer")
@@ -2259,62 +2054,74 @@ def q_stream_batch_twin(spark: SparkSession, sf: str) -> DataFrame:
         F.col("s_sum").isNull() | F.col("b_sum").isNull(),
         F.col("s_sum").eqNullSafe(F.col("b_sum")),
     ).otherwise(F.abs(F.col("s_sum") - F.col("b_sum")) < 1.5e-6)
-    agree = F.col("s_n").eqNullSafe(F.col("b_n")) & sums_agree
-    tumbling_row = j.agg(
-        F.lit("tumbling").alias("kind"),
-        F.count(F.lit(1)).alias("n_windows"),
-        F.sum(agree.cast("long")).alias("n_agree"),
-        F.min(agree).alias("all_agree"),
+    return _agree_row(j, "tumbling", F.col("s_n").eqNullSafe(F.col("b_n")) & sums_agree)
+
+
+def _twin_dedup(ctx: dict[str, Any]) -> DataFrame:
+    """'dedup': ``dedup_stream`` (``dropDuplicatesWithinWatermark``,
+    append mode) with a horizon wider than the data's time range, so
+    no id is ever evicted and its emitted key set must EQUAL the batch
+    distinct set. Rows themselves are arrival-order-dependent (first
+    occurrence wins), the KEY SET is not — compared as a full-outer
+    join on the key, not just by count."""
+    dd = _twin_drain(
+        ctx,
+        ST.dedup_stream(_twin_stream(ctx), _TWIN_DD_KEYS, "ts", delay="3650 days"),
+        "_dd",
+        None,
+        "append",
+    )
+    dj = dd.select(*_TWIN_DD_KEYS, F.lit(1).alias("s_seen")).join(
+        ctx["events"].select(*_TWIN_DD_KEYS).distinct().withColumn("b_seen", F.lit(1)),
+        _TWIN_DD_KEYS,
+        "full_outer",
+    )
+    return _agree_row(
+        dj, "dedup", F.col("s_seen").isNotNull() & F.col("b_seen").isNotNull()
     )
 
-    # ---- dedup leg: emitted key set == batch distinct set. The
-    # horizon exceeds the dataset's span, so no id is ever evicted and
-    # the streaming dedup is exact; rows themselves are
-    # arrival-order-dependent (first occurrence wins), the KEY SET is
-    # not — compare that.
-    dj = (
-        dd.select(*dd_keys, F.lit(1).alias("s_seen"))
-        .join(
-            events.select(*dd_keys).distinct().withColumn("b_seen", F.lit(1)),
-            dd_keys,
-            "full_outer",
-        )
-    )
-    dd_agree = F.col("s_seen").isNotNull() & F.col("b_seen").isNotNull()
-    dedup_row = dj.agg(
-        F.lit("dedup").alias("kind"),
-        F.count(F.lit(1)).alias("n_windows"),
-        F.sum(dd_agree.cast("long")).alias("n_agree"),
-        F.min(dd_agree).alias("all_agree"),
-    )
 
-    # ---- stateful leg: final carried (count, sum) per user vs the
-    # batch groupBy. Sum tolerance as above (state accumulates in
-    # micro-batch arrival order).
+def _twin_stateful(ctx: dict[str, Any]) -> DataFrame:
+    """'stateful': ``user_running_stats`` (``applyInPandasWithState``,
+    update mode): each user's final carried state (count, sum) after
+    all micro-batches must equal the batch groupBy. Last-writer-wins
+    via the drain's __batch_id; sum tolerance as in 'tumbling' (state
+    accumulates in micro-batch arrival order)."""
+    st = _twin_drain(
+        ctx, ST.user_running_stats(_twin_stream(ctx)), "_st", None, "update"
+    )
     st_final = SP.latest_by_key(st, ["user_id"]).select(
         "user_id", F.col("n_events").alias("s_n"), F.col("sum_value").alias("s_sum")
     )
-    st_batch = events.groupBy("user_id").agg(
+    st_batch = ctx["events"].groupBy("user_id").agg(
         F.count(F.lit(1)).alias("b_n"), F.sum("value").alias("b_sum")
     )
     sj = st_final.join(st_batch, "user_id", "full_outer")
-    st_agree = (
+    return _agree_row(
+        sj,
+        "stateful",
         F.col("s_n").eqNullSafe(F.col("b_n"))
         & F.col("s_sum").isNotNull()
         & F.col("b_sum").isNotNull()
-        & (F.abs(F.col("s_sum") - F.col("b_sum")) < 1.5e-6)
-    )
-    stateful_row = sj.agg(
-        F.lit("stateful").alias("kind"),
-        F.count(F.lit(1)).alias("n_windows"),
-        F.sum(st_agree.cast("long")).alias("n_agree"),
-        F.min(st_agree).alias("all_agree"),
+        & (F.abs(F.col("s_sum") - F.col("b_sum")) < 1.5e-6),
     )
 
-    # ---- stream-stream join leg: emitted (l_id, r_id) pair set vs
-    # the batch interval join. Inner-join emission is eager (not
-    # watermark-gated), so with a horizon-spanning watermark the sets
-    # must be EQUAL — compared pair-for-pair, not by count.
+
+def _twin_join(ctx: dict[str, Any]) -> DataFrame:
+    """'join': ``interval_join_stream`` — a watermarked STREAM-STREAM
+    interval join (views attributed to same-user purchases within 30
+    minutes, both sides streams with bounded join state). Inner-join
+    emission is eager (not watermark-gated), so with a
+    horizon-spanning watermark the emitted (l_id, r_id) pair set must
+    EQUAL the batch interval join's — compared pair-for-pair."""
+    sj_pairs = _twin_drain(
+        ctx,
+        SP.interval_join_stream(_twin_stream(ctx), _twin_stream(ctx)),
+        "_j",
+        None,
+        "append",
+    )
+    events = ctx["events"]
     v = events.where(F.col("event_type") == "view").select(
         "user_id", F.col("event_id").alias("l_id"), F.col("ts").alias("l_ts")
     )
@@ -2330,156 +2137,87 @@ def q_stream_batch_twin(spark: SparkSession, sf: str) -> DataFrame:
         & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 30 minutes")),
         "inner",
     ).select("l_id", "r_id")
-    jj = (
-        sj_pairs.select("l_id", "r_id", F.lit(1).alias("s_seen"))
-        .join(
-            batch_pairs.withColumn("b_seen", F.lit(1)),
-            ["l_id", "r_id"],
-            "full_outer",
-        )
+    jj = sj_pairs.select("l_id", "r_id", F.lit(1).alias("s_seen")).join(
+        batch_pairs.withColumn("b_seen", F.lit(1)),
+        ["l_id", "r_id"],
+        "full_outer",
     )
-    jn_agree = F.col("s_seen").isNotNull() & F.col("b_seen").isNotNull()
-    join_row = jj.agg(
-        F.lit("join").alias("kind"),
-        F.count(F.lit(1)).alias("n_windows"),
-        F.sum(jn_agree.cast("long")).alias("n_agree"),
-        F.min(jn_agree).alias("all_agree"),
+    return _agree_row(
+        jj, "join", F.col("s_seen").isNotNull() & F.col("b_seen").isNotNull()
     )
-    # ---- session leg: the streamed merging-window result must equal
-    # the batch session_agg session-for-session (session_start is the
-    # merged window's start, so a mis-merged session shifts the key
-    # and shows up as two unmatched rows, not a near-miss).
+
+
+def _twin_session(ctx: dict[str, Any]) -> DataFrame:
+    """'session': ``session_stream`` (``F.session_window``, the
+    stateful MERGING window — state is per-session intervals that
+    coalesce as late events bridge gaps, unlike tumbling's fixed
+    buckets) — every (user_id, session_start, n_events) session
+    full-outer compared against the batch ``session_agg`` twin.
+    session_start is the merged window's start, so a mis-merged
+    session shifts the key and shows up as two unmatched rows, not a
+    near-miss; the oracle independently replays the session set as
+    gaps-and-islands SQL."""
+    sess = _twin_drain(ctx, SP.session_stream(_twin_stream(ctx)), "_sess")
     s_sess = sess.select(
         "user_id", "session_start", F.col("n_events").alias("s_n")
     )
-    b_sess = EV.session_agg(events).select(
+    b_sess = EV.session_agg(ctx["events"]).select(
         "user_id", "session_start", F.col("n_events").alias("b_n")
     )
     sessj = s_sess.join(b_sess, ["user_id", "session_start"], "full_outer")
-    sess_agree = F.col("s_n").eqNullSafe(F.col("b_n"))
-    session_row = sessj.agg(
-        F.lit("session").alias("kind"),
-        F.count(F.lit(1)).alias("n_windows"),
-        F.sum(sess_agree.cast("long")).alias("n_agree"),
-        F.min(sess_agree).alias("all_agree"),
-    )
-    # ---- versioned-sink leg: final pinned version must hold exactly
-    # the batch row count, and per-version counts must be strictly
-    # increasing (each commit = previous files + one batch, no batch
-    # half-visible, no batch lost). Counts are bounded scans of the
-    # committed files.
-    from data_integration_and_harmonization_spark.sources.manifest import (
-        read_version as _read_version,
-    )
+    return _agree_row(sessj, "session", F.col("s_n").eqNullSafe(F.col("b_n")))
 
-    ver_counts = [
-        _read_version(spark, ver_root, v).count() for v in ver_versions
-    ]
+
+def _twin_versioned(ctx: dict[str, Any]) -> DataFrame:
+    """'versioned': ``stream_to_versioned_table`` — transactional
+    append ingestion, one manifest version per micro-batch, so a
+    pinned reader never sees a half-visible batch; the final pinned
+    version holds exactly the batch count and per-version counts
+    strictly increase. Then 'cdf_feed' (r11): the streaming CHANGE
+    DATA FEED source (sources/cdf_stream.py, a Spark-4 Python
+    streaming DataSource whose offsets ARE the manifest version
+    numbers) drains this table's own commit sequence with
+    availableNow, so it runs in this leg, after the versioned drain."""
+    spark, events, run_id = ctx["spark"], ctx["events"], ctx["run_id"]
+    b = scratch_dir(f"twin_ver_{run_id}")
+    root = os.path.join(b, "tbl")
+    ver_versions = SP.stream_to_versioned_table(
+        _twin_stream(ctx), root, os.path.join(b, "data")
+    )
+    fb = scratch_dir(f"twin_cdf_feed_{run_id}")
+    cdf_out = os.path.join(fb, "out")
+    (
+        read_manifest_cdf(spark, root, ["event_id"])
+        .writeStream.format("parquet")
+        .option("path", cdf_out)
+        .option("checkpointLocation", os.path.join(fb, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    # Counts are bounded scans of the committed files: each commit =
+    # previous files + one batch, no batch half-visible, no batch lost.
+    ver_counts = [MF.read_version(spark, root, v).count() for v in ver_versions]
     n_events = events.count()
     ver_ok = (
         bool(ver_counts)
         and ver_counts[-1] == n_events
         and all(a < b for a, b in zip(ver_counts, ver_counts[1:]))
     )
-    versioned_row = spark.createDataFrame(
-        [("versioned", ver_counts[-1] if ver_counts else 0,
-          n_events if ver_ok else 0, ver_ok)],
-        "kind string, n_windows long, n_agree long, all_agree boolean",
-    )
-    # ---- CDC leg: the merged table's final row per (user_id,
-    # event_type) must be the argmax by (ts, event_id) over the whole
-    # slice — batching-independent by construction (event_id makes the
-    # order total), compared key-for-key.
-    cdc_final = _read_version(spark, cdc_root).select(
-        "user_id",
-        "event_type",
-        F.col("event_id").alias("s_eid"),
-        F.col("value").alias("s_val"),
-    )
-    from pyspark.sql import Window as _W
-
-    cdc_twin = (
-        events.where(F.col("user_id") % 25 == 0)
-        .withColumn(
-            "__rn",
-            F.row_number().over(
-                _W.partitionBy("user_id", "event_type").orderBy(
-                    F.desc("ts"), F.desc("event_id")
-                )
-            ),
-        )
-        .where(F.col("__rn") == 1)
-        .select(
-            "user_id",
-            "event_type",
-            F.col("event_id").alias("b_eid"),
-            F.col("value").alias("b_val"),
+    versioned_row = spark.range(1).select(
+        *_twin_row(
+            "versioned",
+            F.lit(ver_counts[-1] if ver_counts else 0).cast("long"),
+            F.lit(n_events if ver_ok else 0).cast("long"),
+            F.lit(ver_ok),
         )
     )
-    cdcj = cdc_final.join(cdc_twin, ["user_id", "event_type"], "full_outer")
-    cdc_agree = F.col("s_eid").eqNullSafe(F.col("b_eid")) & F.col(
-        "s_val"
-    ).eqNullSafe(F.col("b_val"))
-    cdc_row = cdcj.agg(
-        F.lit("cdc").alias("kind"),
-        F.count(F.lit(1)).alias("n_windows"),
-        F.sum(cdc_agree.cast("long")).alias("n_agree"),
-        F.min(cdc_agree).alias("all_agree"),
-    )
-    # ---- DQ leg: the streamed quarantine routing, compared
-    # label-group for label-group against the batch dq_split of the
-    # same rules over the full slice (passed rows ride as the ''
-    # label group; quarantined groups by their '|'-joined labels —
-    # the routing is row-local, so micro-batch boundaries cannot
-    # change any group's count).
-    # explicit schemas on both sink reads (r9 advice): a fixture where
-    # every row routes one way leaves the other sink with ZERO part
-    # files, and schema inference on an empty dir throws — the
-    # stream_dq_split docstring's own caveat, defended here
-    from pyspark.sql import types as _T
-
-    _q_schema = _T.StructType(
-        list(events.schema.fields) + [_T.StructField("__dq_labels", _T.StringType())]
-    )
-    s_dq = (
-        spark.read.schema(events.schema).parquet(dq_passed_dir)
-        .select(F.lit("").alias("labels"))
-        .unionByName(
-            spark.read.schema(_q_schema).parquet(dq_quar_dir).select(
-                F.col("__dq_labels").alias("labels")
-            )
-        )
-        .groupBy("labels")
-        .agg(F.count(F.lit(1)).alias("s_n"))
-    )
-    b_passed, b_quar = P.dq_split(events, _dq_rules)
-    b_dq = (
-        b_passed.select(F.lit("").alias("labels"))
-        .unionByName(
-            b_quar.select(F.array_join("__dq_violations", "|").alias("labels"))
-        )
-        .groupBy("labels")
-        .agg(F.count(F.lit(1)).alias("b_n"))
-    )
-    dqj = s_dq.join(b_dq, "labels", "full_outer")
-    dq_agree = F.col("s_n").eqNullSafe(F.col("b_n"))
-    dq_row = dqj.agg(
-        F.lit("dq").alias("kind"),
-        F.count(F.lit(1)).alias("n_windows"),
-        F.sum(dq_agree.cast("long")).alias("n_agree"),
-        F.min(dq_agree).alias("all_agree"),
-    )
-    # ---- 9th leg (r11): the streaming CHANGE DATA FEED source
-    # (sources/cdf_stream.py, a Spark-4 Python streaming DataSource
-    # whose offsets ARE the manifest version numbers) drained the
-    # versioned drain's own commit sequence with availableNow (inside
-    # the pool above, gated on that drain). The table is append-only
-    # here, so the cumulative feed must be exactly one 'added' row per
-    # event — compared key-for-key against the raw events (an
-    # INDEPENDENT twin: the feed computes its diffs executor-side with
-    # pyarrow, never through Spark's exceptAll). The dirs the feed
-    # reads are the versioned leg's committed manifests — so this leg
-    # also re-checks that chain.
+    # The table is append-only here, so the cumulative feed must be
+    # exactly one 'added' row per event — compared key-for-key against
+    # the raw events (an INDEPENDENT twin: the feed computes its diffs
+    # executor-side with pyarrow, never through Spark's exceptAll). The
+    # dirs the feed reads are the versioned drain's committed
+    # manifests — so this row also re-checks that chain.
     s_feed = (
         spark.read.schema("version int, change string, event_id long")
         .parquet(cdf_out)
@@ -2499,22 +2237,114 @@ def q_stream_batch_twin(spark: SparkSession, sf: str) -> DataFrame:
         & F.coalesce(F.col("s_added"), F.lit(False))
         & F.col("b_seen").isNotNull()
     )
-    cdf_feed_row = fj.agg(
-        F.lit("cdf_feed").alias("kind"),
-        F.count(F.lit(1)).alias("n_windows"),
-        F.sum(feed_agree.cast("long")).alias("n_agree"),
-        F.min(feed_agree).alias("all_agree"),
+    return versioned_row.unionByName(_agree_row(fj, "cdf_feed", feed_agree))
+
+
+def _twin_cdc(ctx: dict[str, Any]) -> DataFrame:
+    """'cdc': ``stream_cdc_to_versioned_table`` — streaming CDC MERGE
+    with newer-wins resolution; the merged table's final row per
+    (user_id, event_type) must equal the batch per-key argmax by
+    (ts, event_id), key-for-key (batching-independent because
+    event_id totalizes the order)."""
+    b = scratch_dir(f"twin_cdc_{ctx['run_id']}")
+    root = os.path.join(b, "tbl")
+    SP.stream_cdc_to_versioned_table(
+        _twin_stream(ctx, max_files_per_trigger=2).where(F.col("user_id") % 25 == 0),
+        root,
+        os.path.join(b, "data"),
+        ["user_id", "event_type"],
+        ["ts", "event_id"],
     )
-    return (
-        tumbling_row.unionByName(dedup_row)
-        .unionByName(stateful_row)
-        .unionByName(join_row)
-        .unionByName(session_row)
-        .unionByName(versioned_row)
-        .unionByName(cdc_row)
-        .unionByName(dq_row)
-        .unionByName(cdf_feed_row)
+    cdc_final = MF.read_version(ctx["spark"], root).select(
+        "user_id",
+        "event_type",
+        F.col("event_id").alias("s_eid"),
+        F.col("value").alias("s_val"),
     )
+    cdc_twin = (
+        ctx["events"].where(F.col("user_id") % 25 == 0)
+        .withColumn(
+            "__rn",
+            F.row_number().over(
+                Window.partitionBy("user_id", "event_type").orderBy(
+                    F.desc("ts"), F.desc("event_id")
+                )
+            ),
+        )
+        .where(F.col("__rn") == 1)
+        .select(
+            "user_id",
+            "event_type",
+            F.col("event_id").alias("b_eid"),
+            F.col("value").alias("b_val"),
+        )
+    )
+    cdcj = cdc_final.join(cdc_twin, ["user_id", "event_type"], "full_outer")
+    return _agree_row(
+        cdcj,
+        "cdc",
+        F.col("s_eid").eqNullSafe(F.col("b_eid"))
+        & F.col("s_val").eqNullSafe(F.col("b_val")),
+    )
+
+
+def _twin_dq(ctx: dict[str, Any]) -> DataFrame:
+    """'dq': ``stream_dq_split`` — dead-letter-queue quarantine routing
+    on row-local rules; the streamed passed/quarantined label-group
+    counts must equal the batch ``dq_split`` of the same rules over
+    the full slice, group-for-group (passed rows ride as the ''
+    label group, quarantined groups by their '|'-joined labels;
+    row-local routing is micro-batch-boundary-invariant by
+    construction)."""
+    spark, events = ctx["spark"], ctx["events"]
+    b = scratch_dir(f"twin_dq_{ctx['run_id']}")
+    p_dir = os.path.join(b, "passed")
+    q_dir = os.path.join(b, "quarantined")
+    SP.stream_dq_split(_twin_stream(ctx), _TWIN_DQ_RULES, p_dir, q_dir)
+    # explicit schemas on both sink reads (r9 advice): a fixture where
+    # every row routes one way leaves the other sink with ZERO part
+    # files, and schema inference on an empty dir throws — the
+    # stream_dq_split docstring's own caveat, defended here
+    q_schema = T.StructType(
+        list(events.schema.fields) + [T.StructField("__dq_labels", T.StringType())]
+    )
+    s_dq = (
+        spark.read.schema(events.schema).parquet(p_dir)
+        .select(F.lit("").alias("labels"))
+        .unionByName(
+            spark.read.schema(q_schema).parquet(q_dir).select(
+                F.col("__dq_labels").alias("labels")
+            )
+        )
+        .groupBy("labels")
+        .agg(F.count(F.lit(1)).alias("s_n"))
+    )
+    b_passed, b_quar = P.dq_split(events, _TWIN_DQ_RULES)
+    b_dq = (
+        b_passed.select(F.lit("").alias("labels"))
+        .unionByName(
+            b_quar.select(F.array_join("__dq_violations", "|").alias("labels"))
+        )
+        .groupBy("labels")
+        .agg(F.count(F.lit(1)).alias("b_n"))
+    )
+    dqj = s_dq.join(b_dq, "labels", "full_outer")
+    return _agree_row(dqj, "dq", F.col("s_n").eqNullSafe(F.col("b_n")))
+
+
+STREAM_BATCH_TWIN_LEGS: tuple[Setup, Legs] = (
+    _twin_setup,
+    (
+        ("tumbling", _twin_tumbling),
+        ("dedup", _twin_dedup),
+        ("stateful", _twin_stateful),
+        ("join", _twin_join),
+        ("session", _twin_session),
+        ("versioned", _twin_versioned),
+        ("cdc", _twin_cdc),
+        ("dq", _twin_dq),
+    ),
+)
 
 
 # ---------------------------------------------------------------- oracles
@@ -3548,13 +3378,13 @@ SELECT 'cdf_feed', count(*)::BIGINT, count(*)::BIGINT, true FROM events
 # runner records at most 50 queries in registration order (r1 registered
 # 55 and the last 5 were silently untested), so the previously-unchecked
 # and newly-added queries come FIRST and the expensive ML fits come last.
-CATALOG: tuple[tuple[str, Callable[[SparkSession, str], DataFrame], str | None], ...] = (
+CATALOG: tuple[tuple[str, Builder | tuple[Setup, Legs], str | None], ...] = (
     # unchecked in r1 (registered past the cap); session+props and
     # meta+features pairs each merged to one tagged query in r2
     ("events_sessions_props", EV.q_events_sessions_props, EV.EVENTS_SESSIONS_PROPS_SQL),
     # r5: mm_frames folded into mm_meta_features as its 'frame' leg;
     # the freed slot carries the golden-record linkage pipeline
-    ("mm_meta_features", MM.q_mm_meta_features, MM.MM_META_FEATURES_SQL),
+    ("mm_meta_features", MM.MM_META_FEATURES_LEGS, MM.MM_META_FEATURES_SQL),
     ("link_golden", LK.q_link_golden, LK.LINK_GOLDEN_SQL),
     # r5: rel_set_ops folded into rel_semi_anti_join (both membership
     # predicates); the freed slot carries the composed curation funnel
@@ -3563,12 +3393,12 @@ CATALOG: tuple[tuple[str, Callable[[SparkSession, str], DataFrame], str | None],
     ("text_decontaminate", SCRUB.q_text_decontaminate, SCRUB.TEXT_DECONTAMINATE_SQL),
     ("text_scrub", SCRUB.q_text_scrub, SCRUB.TEXT_SCRUB_SQL),
     ("samp_deterministic", SAMP.q_samp_deterministic, SAMP.SAMP_DETERMINISTIC_SQL),
-    ("dedup_clusters", DD.q_dedup_clusters, DD.DEDUP_CLUSTERS_SQL),
+    ("dedup_clusters", DD.DEDUP_CLUSTERS_LEGS, DD.DEDUP_CLUSTERS_SQL),
     ("seq_pack", PK.q_seq_pack, PK.SEQ_PACK_SQL),
-    ("src_roundtrip", q_src_roundtrip, SRC_ROUNDTRIP_SQL),
+    ("src_roundtrip", SRC_ROUNDTRIP_LEGS, SRC_ROUNDTRIP_SQL),
     ("ml_exact_split", q_ml_exact_split, ML_EXACT_SPLIT_SQL),
     ("dedup_lsh_pipeline", DD.q_dedup_lsh_pipeline, DD.DEDUP_LSH_PIPELINE_SQL),
-    ("stream_batch_twin", q_stream_batch_twin, STREAM_BATCH_TWIN_SQL),
+    ("stream_batch_twin", STREAM_BATCH_TWIN_LEGS, STREAM_BATCH_TWIN_SQL),
     # new in r3: corpus-statistics scoring + embedding transforms
     ("text_bm25_topk", SC.q_text_bm25_topk, SC.TEXT_BM25_TOPK_SQL),
     ("text_lm_quality", SC.q_text_lm_quality, SC.TEXT_LM_QUALITY_SQL),
@@ -3578,7 +3408,7 @@ CATALOG: tuple[tuple[str, Callable[[SparkSession, str], DataFrame], str | None],
     ("clean_coerce", q_clean_coerce, CLEAN_COERCE_SQL),
     ("clean_repair", q_clean_repair, CLEAN_REPAIR_SQL),
     ("clean_cascade", q_clean_cascade, CLEAN_CASCADE_SQL),
-    ("describe_all", q_describe_all, DESCRIBE_ALL_SQL),
+    ("describe_all", DESCRIBE_ALL_LEGS, DESCRIBE_ALL_SQL),
     ("corr_matrix", q_corr_matrix, CORR_MATRIX_SQL),
     ("feat_zscore", q_feat_zscore, FEAT_ZSCORE_SQL),
     ("feat_label_encode", q_feat_label_encode, FEAT_LABEL_ENCODE_SQL),
@@ -3605,9 +3435,9 @@ CATALOG: tuple[tuple[str, Callable[[SparkSession, str], DataFrame], str | None],
     ("rel_running_window", REL.q_rel_running_window, REL.REL_RUNNING_WINDOW_SQL),
     # text / dedup / similarity / events
     ("text_profile", TX.q_text_profile, TX.TEXT_PROFILE_SQL),
-    ("dedup_exact_fp", DD.q_dedup_exact_fp, DD.DEDUP_EXACT_FP_SQL),
+    ("dedup_exact_fp", DD.DEDUP_EXACT_FP_LEGS, DD.DEDUP_EXACT_FP_SQL),
     ("dedup_ngram_jaccard", DD.q_dedup_ngram_jaccard, DD.DEDUP_NGRAM_JACCARD_SQL),
-    ("dedup_simhash", DD.q_dedup_simhash, DD.DEDUP_SIMHASH_SQL),
+    ("dedup_simhash", DD.DEDUP_SIMHASH_LEGS, DD.DEDUP_SIMHASH_SQL),
     ("dedup_embedding_cosine", DD.q_dedup_embedding_cosine, DD.DEDUP_EMBEDDING_COSINE_SQL),
     ("sim_topk_recall", SIM.q_sim_topk_recall, SIM.SIM_TOPK_RECALL_SQL),
     ("sim_ivf_recall", SIM.q_sim_ivf_recall, SIM.SIM_IVF_RECALL_SQL),
@@ -3619,13 +3449,13 @@ CATALOG: tuple[tuple[str, Callable[[SparkSession, str], DataFrame], str | None],
 )
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def queries() -> dict[str, Builder]:
     # RuntimeError, not assert: this guard protects against the exact
     # silent-truncation failure r1 hit (the correctness runner records
     # only the first 50 queries), and asserts vanish under ``python -O``.
     if len(CATALOG) > 50:
         raise RuntimeError("driver correctness pass caps at 50 queries")
-    return {n: _guarded(b) for n, b, _ in CATALOG}
+    return {n: _guarded(b if callable(b) else _run_legs(*b)) for n, b, _ in CATALOG}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -1,4 +1,4 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: runs every declared query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "split": {name: [build_sec, serve_sec]},
@@ -10,6 +10,12 @@ arrays overflowed it — 7 queries unrecoverable). Everything heavy —
 per-run arrays, per-LEG timings, code-cache stats, row counts — goes
 to the file named by "full" (default BENCH_FULL.json at the repo
 root), written atomically before the stdout line prints.
+
+Per-leg timings come from the catalog's declared legs
+(``__spark_entry__.as_legs``): after the timed passes, ``leg_pass``
+runs each query's setup, then builds and serves every leg on its own
+driver thread, recording wall time and Spark jobs for the setup and
+for each leg's build and serve.
 """
 
 from __future__ import annotations
@@ -18,52 +24,14 @@ import json
 import os
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
 from data_integration_and_harmonization_spark import get_spark
+from data_integration_and_harmonization_spark.functions.concurrency import overlap
 
-
-def _union_legs(df, spark):
-    """Split a query's analyzed plan at its top-level Union into one
-    DataFrame per leg, in source (registration) order.
-
-    The catalog packs 5-8 verdict legs per query via unionByName —
-    one action, one artifact row-set — which makes per-query timings
-    unattributable when a single leg spikes (r9: a 21.9 s run on
-    dedup_embedding_cosine, invisible in the artifact). DataFrame
-    union flattens eagerly, so the analyzed plan's top node is ONE
-    Union whose children are the legs; each child is rebuilt as its
-    own DataFrame and timed separately. Queries whose top node is not
-    a Union (a final sort/projection over the union would change leg
-    semantics if split) time as a single "all" leg. Legs may share
-    un-persisted upstream scans, so the per-leg SUM can legally
-    exceed the fused single-action time — the per-leg numbers
-    attribute cost, the "queries" timings remain the headline.
-    """
-    from pyspark.sql import DataFrame
-
-    plan = df._jdf.queryExecution().analyzed()
-    if plan.getClass().getSimpleName() != "Union":
-        return None
-    kids = []
-    stack = [plan]
-    while stack:
-        node = stack.pop()
-        if node.getClass().getSimpleName() == "Union":
-            ch = node.children()
-            # children() preserves source order; reverse for the stack
-            stack.extend(ch.apply(i) for i in range(ch.size() - 1, -1, -1))
-        else:
-            kids.append(node)
-    out = []
-    for child in kids:
-        jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-            spark._jsparkSession, child
-        )
-        out.append(DataFrame(jdf, spark))
-    return out
 
 # Headline set: the operators that dominate real pipelines — union
 # harmonization, order-sensitive repair, wide aggs, scaling, encoding,
@@ -155,6 +123,64 @@ def _jvm_cpu_ns(spark) -> int | None:
         return None
 
 
+def leg_pass(spark, rows, sf_dir: str) -> dict[str, dict]:
+    """Time the declared legs of each ``(name, builder_slot)`` catalog
+    row: ``{name: {"setup": {"wall", "jobs"}, "legs": {leg: {"build",
+    "serve", "rows", "jobs"}}}}``, or ``{name: {"error": ...}}``.
+
+    Composes what the catalog's runner does: the guarded setup on this
+    thread, then every leg on its own ``overlap`` thread, timing the
+    leg's build (its eager driver work) and then its frame's
+    ``count()`` (serve) inside the thread. Jobs are counted per job
+    group, set inside each leg's thread; jobs that nested ``overlap``
+    threads submit inherit the group. Concurrent legs share the
+    cluster, so a leg's times attribute cost within its query; the
+    fused timed passes remain the headline.
+    """
+    sc = spark.sparkContext
+    run_id = uuid.uuid4().hex[:8]
+
+    def jobs(group: str) -> int:
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def timed(group: str, build, ctx):
+        def run() -> list:
+            sc.setJobGroup(group, group)
+            t0 = time.time()
+            df = build(ctx)
+            t1 = time.time()
+            n = df.count()
+            return [round(t1 - t0, 3), round(time.time() - t1, 3), n]
+
+        return run
+
+    out: dict[str, dict] = {}
+    for name, slot in rows:
+        setup, legs = entrymod.as_legs(slot)
+        gid = f"bench-{run_id}-{name}"
+        try:
+            sc.setJobGroup(f"{gid}-setup", f"{gid}-setup")
+            t0 = time.time()
+            try:
+                ctx = entrymod._guarded(setup)(spark, sf_dir)
+            finally:
+                sc.setJobGroup(None, None)
+            entry: dict = {
+                "setup": {"wall": round(time.time() - t0, 3), "jobs": jobs(f"{gid}-setup")},
+                "legs": {},
+            }
+            res = overlap(*(timed(f"{gid}-{leg}", build, ctx) for leg, build in legs))
+            for (leg, _), (b, s, n) in zip(legs, res):
+                entry["legs"][leg] = {
+                    "build": b, "serve": s, "rows": n, "jobs": jobs(f"{gid}-{leg}")
+                }
+            out[name] = entry
+        except Exception as e:  # noqa: BLE001 — attribution must never sink the bench
+            out[name] = {"error": str(e)[:200]}
+            print(f"# leg pass {name} FAILED: {e}", file=sys.stderr)
+    return out
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("bench")
@@ -181,7 +207,6 @@ def main() -> None:
     # the 32-way md5 MinHash expression tree: ~20s cold, ~12s on the
     # second run, ~3s steady). One warmup would time the C2 ramp, not
     # the plan.
-    warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", sf_dir)
     warm_passes = int(os.environ.get("SPARK_GRAFT_WARM_PASSES", "2"))
     t0 = time.time()
     warm_failures = 0
@@ -189,7 +214,7 @@ def main() -> None:
         warm_failures = 0
         for name in names:
             try:
-                qs[name](spark, warm_dir).count()
+                qs[name](spark, sf_dir).count()
             except Exception as e:  # one warmup failure must not sink the bench
                 warm_failures += 1
                 print(f"# warmup {name} FAILED: {e}", file=sys.stderr)
@@ -197,9 +222,9 @@ def main() -> None:
         # every query failing means the warm dir is bogus (absent dir,
         # bad env override) — a silently-cold timed pass would report
         # codegen, not plans; fail loudly instead.
-        raise RuntimeError(f"warmup pass failed for all queries at {warm_dir!r}")
+        raise RuntimeError(f"warmup pass failed for all queries at {sf_dir!r}")
     print(
-        f"# warmup ({warm_passes} passes x {len(names)} queries @ {warm_dir}):"
+        f"# warmup ({warm_passes} passes x {len(names)} queries @ {sf_dir}):"
         f" {time.time() - t0:.1f}s untimed",
         file=sys.stderr,
     )
@@ -286,38 +311,15 @@ def main() -> None:
     for name in names:
         print(f"# {name}: {timings[name]:.2f}s ({rows[name]} rows)", file=sys.stderr)
 
-    # Per-LEG attribution pass (one extra steady-state pass, env-gated):
-    # rebuild each query, split its top-level Union, and time each
-    # leg's own count. "build" is the query-construction time — it
-    # includes any driver-side fit actions the query runs before
-    # returning its frame, which the fused timings also pay.
-    legs: dict[str, dict] = {}
-    if os.environ.get("SPARK_GRAFT_LEG_PASS", "1") != "0":
-        t_leg0 = time.time()
-        for name in names:
-            try:
-                t0 = time.time()
-                df = qs[name](spark, sf_dir)
-                entry: dict = {"build": round(time.time() - t0, 3)}
-                parts = _union_legs(df, spark)
-                if parts is None:
-                    t0 = time.time()
-                    n = df.count()
-                    entry["all"] = [round(time.time() - t0, 3), n]
-                else:
-                    for i, p in enumerate(parts):
-                        t0 = time.time()
-                        n = p.count()
-                        entry[f"L{i:02d}"] = [round(time.time() - t0, 3), n]
-                legs[name] = entry
-            except Exception as e:  # noqa: BLE001 — attribution must never sink the bench
-                legs[name] = {"error": str(e)[:200]}
-                print(f"# leg pass {name} FAILED: {e}", file=sys.stderr)
-        print(
-            f"# leg pass: {time.time() - t_leg0:.1f}s untimed "
-            f"({sum(len(v) - 1 for v in legs.values())} legs)",
-            file=sys.stderr,
-        )
+    # Per-LEG attribution pass (one extra steady-state pass).
+    slots = {n: slot for n, slot, _ in entrymod.CATALOG}
+    t_leg0 = time.time()
+    legs = leg_pass(spark, [(n, slots[n]) for n in names], sf_dir)
+    print(
+        f"# leg pass: {time.time() - t_leg0:.1f}s untimed "
+        f"({sum(len(v.get('legs', ())) for v in legs.values())} legs)",
+        file=sys.stderr,
+    )
 
     cpu_probe["end"] = _cpu_probe_sec()
     cpu_probe["end_mt"], _ = _cpu_probe_mt_sec()
@@ -371,10 +373,12 @@ def main() -> None:
         # query is JIT/host noise, a tight spread at a new level is a
         # real plan change
         "runs": runs,
-        # per-leg attribution: {query: {"build": sec,
-        # "L00": [sec, rows], ...}} — legs in source union order;
-        # leg sums may exceed the fused "queries" time where legs
-        # share un-persisted scans
+        # per-leg attribution from the declared legs (leg_pass):
+        # {query: {"setup": {"wall", "jobs"}, "legs": {leg: {"build",
+        # "serve", "rows", "jobs"}}}} — legs in declared order, a
+        # plain builder as one leg named "all"; legs run concurrently,
+        # so leg times attribute cost, the "queries" timings remain
+        # the headline
         "legs": legs,
         "rows": rows,
         "codecache": codecache,

@@ -24,6 +24,8 @@ Five levels, cheapest first; each is the standard scale architecture:
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -1602,153 +1604,147 @@ def semantic_dedup(
 
 # ------------------------------------------------------- queries and oracles
 
-def q_dedup_exact_fp(spark: SparkSession, sf: str) -> DataFrame:
-    # exact + normalized-fingerprint dedup in one tagged result
-    # (merged from r1's dedup_exact / dedup_fingerprint — the
-    # driver's correctness pass records at most 50 queries, so
-    # same-shaped operators share an entry), plus the
-    # incremental_exact_dedup two-batch admit sequence as
-    # 'inc1'/'inc2' legs: the even-keyed half is admitted first,
-    # then the odd half runs against the persisted fingerprint
-    # store — batch-2 survivors are exactly the odd fingerprints
-    # never seen in batch 1, which the oracle replays as a
-    # groupBy + anti-join. The per-call store (under the process
-    # scratch root, reaped at exit) keeps repeated invocations
-    # (bench warm passes) independent; n_copies is null for the
-    # inc legs (survivor rows, not group counts).
-    #
-    # 'diff_added'/'diff_removed'/'diff_changed' legs: snapshot_diff
-    # between two deterministic corpus versions — old drops ids
-    # with doc_id % 11 == 3 (so those classify 'added'), new drops
-    # doc_id % 7 == 0 ('removed') and rewrites the text of
-    # doc_id % 5 == 0 survivors ('changed'). The oracle replays the
-    # same two snapshots and the same full-outer fp compare in SQL.
-    from data_integration_and_harmonization_spark.functions.caching import (
-        scratch_dir,
-    )
+# dedup_exact_fp: exact + normalized-fingerprint dedup in one tagged
+# result (merged from r1's dedup_exact / dedup_fingerprint — the
+# driver's correctness pass records at most 50 queries, so same-shaped
+# operators share an entry), plus the store-backed admit sequences and
+# a snapshot diff; each leg's rows are (kind, fp, n_copies, keep_id).
 
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    e = exact_dedup(docs).select(
+def _exact_fp_setup(spark: SparkSession, sf: str) -> dict:
+    return {"spark": spark, "docs": spark.read.parquet(f"{sf}/documents.parquet")}
+
+
+def _exact_fp_exact(ctx: dict) -> DataFrame:
+    return exact_dedup(ctx["docs"]).select(
         F.lit("exact").alias("kind"),
         F.col("text_fp").alias("fp"),
         "n_copies",
         "keep_id",
     )
-    fp = fingerprint_dedup(docs).select(
+
+
+def _exact_fp_normalized(ctx: dict) -> DataFrame:
+    return fingerprint_dedup(ctx["docs"]).select(
         F.lit("normalized").alias("kind"), "fp", "n_copies", "keep_id"
     )
-    # 'cdfnd' leg (r12): the CDF-DRIVEN maintenance consumer
-    # (stream_cdf_neardedup_maintenance, the signature store's
-    # sibling of the profile consumer) checked VALUE-FOR-VALUE:
-    # the 20% subset (doc_id % 5 == 0) is committed as TWO
-    # manifest versions (even ids, then odd ids) and ONE
-    # availableNow drain catches up across both — a true
-    # multi-version drain, one micro-batch admit. Each leg row is
-    # a stored signature with fp = md5 of the rendered sig array,
-    # so the ORACLE pins the streamed store's full content (ids
-    # AND all 32 minima) by replaying the subset admit with the
-    # 'c_'-prefixed CTE chain — no Spark-side batch twin needed.
-    # Sequential drains / history hits / tag replay are pinned by
-    # tests/test_streaming.py. The chain runs on a DRIVER THREAD
-    # so its streaming fixed costs overlap the main sequence's
-    # store builds (independent stores — no ordering between the
-    # chains).
-    def _cdfnd_chain():
-        import os as _os
 
-        from data_integration_and_harmonization_spark.functions.stores import (
-            complete_batches,
-        )
-        from data_integration_and_harmonization_spark.sources.cdf_stream import (
-            stream_cdf_neardedup_maintenance,
-        )
-        from data_integration_and_harmonization_spark.sources.manifest import (
-            commit_files,
-            commit_version,
-            read_manifest,
-        )
-        from data_integration_and_harmonization_spark.sources.writers import (
-            list_data_files,
-        )
 
-        sub = docs.where(F.col("doc_id") % 5 == 0).select("doc_id", "text")
-        cb = scratch_dir("cdfnd")
-        root = _os.path.join(cb, "tbl")
-        s_stream = _os.path.join(cb, "store")
-        ckpt = _os.path.join(cb, "ckpt")
-        d1 = _os.path.join(cb, "d1")
-        d2 = _os.path.join(cb, "d2")
-        sub.where(F.col("doc_id") % 2 == 0).write.parquet(d1)
-        commit_version(spark, root, d1, note="even")
-        sub.where(F.col("doc_id") % 2 == 1).write.parquet(d2)
-        commit_files(
-            spark,
-            root,
-            read_manifest(spark, root)["files"]
-            + [{"path": p, "bytes": b} for p, b in list_data_files(spark, d2)],
-            note="odd",
-        )
-        stream_cdf_neardedup_maintenance(
-            spark, root, s_stream, ckpt, threshold=0.5, hash_family="md5"
-        )
-        streamed = spark.read.parquet(
-            *[f"{p}/sigs" for p in complete_batches(spark, s_stream)]
-        )
-        return streamed.select(
-            F.lit("cdfnd").alias("kind"),
-            F.md5(
-                F.array_join(
-                    F.transform("sig", lambda x: x.cast("string")), ","
-                )
-            ).alias("fp"),
-            F.lit(None).cast("long").alias("n_copies"),
-            F.col("id").alias("keep_id"),
-        )
+def _inc_rows(b: DataFrame, kind: str) -> DataFrame:
+    """Admitted survivor rows; n_copies is null (survivor rows, not
+    group counts)."""
+    # same null-text sentinel the store uses, so a null-text
+    # survivor reports the fingerprint it was admitted under
+    return b.select(
+        F.lit(kind).alias("kind"),
+        F.coalesce(F.md5("text"), F.lit("__null_text__")).alias("fp"),
+        F.lit(None).cast("long").alias("n_copies"),
+        F.col("doc_id").alias("keep_id"),
+    )
 
-    # r13 threaded the exact chain alongside the near chain and
-    # REVERTED it (then: 13.4 s sequential vs 14.5 s threaded —
-    # the near chain was wall-to-wall 32-wide stages). r14 cut the
-    # near chain's sequential actions (post-write emptiness probe,
-    # threaded history-key probe), which re-opened scheduler gaps;
-    # a fresh interleaved A/B (min-of-5, same process) now reads
-    # threaded 11.1 s vs sequential 11.4 s min (12.0 vs 13.4
-    # median), so the exact chain rides a driver thread again,
-    # next to the CDF drain.
-    def _exact_chain():
-        store = scratch_dir("fp_store") + "/store"
-        eb1 = incremental_exact_dedup(docs.where(F.col("doc_id") % 2 == 0), store)
-        eb2 = incremental_exact_dedup(docs.where(F.col("doc_id") % 2 == 1), store)
-        return eb1, eb2
 
-    # 'nd1'/'nd2' legs: the NEAR-dup admit sequence
-    # (incremental_near_dedup) over the same even/odd batches —
-    # signature-store matching (banded LSH + estimated Jaccard at
-    # 0.5), md5 family so the oracle replays signatures, in-batch
-    # components, and history hits bit-for-bit.
-    def _near_chain():
-        nd_store = scratch_dir("nd_store") + "/store"
-        n1 = incremental_near_dedup(
-            docs.where(F.col("doc_id") % 2 == 0), nd_store,
-            threshold=0.5, hash_family="md5",
-        )
-        n2 = incremental_near_dedup(
-            docs.where(F.col("doc_id") % 2 == 1), nd_store,
-            threshold=0.5, hash_family="md5",
-        )
-        return n1, n2
+def _exact_fp_inc(ctx: dict) -> DataFrame:
+    """'inc1'/'inc2': the incremental_exact_dedup two-batch admit
+    sequence — the even-keyed half is admitted first, then the odd
+    half runs against the persisted fingerprint store; batch-2
+    survivors are exactly the odd fingerprints never seen in batch 1,
+    which the oracle replays as a groupBy + anti-join. The per-call
+    store (under the process scratch root, reaped at exit) keeps
+    repeated invocations (bench warm passes) independent."""
+    from data_integration_and_harmonization_spark.functions.caching import scratch_dir
 
-    cdfnd, (b1, b2), (n1, n2) = overlap(_cdfnd_chain, _exact_chain, _near_chain)
+    docs = ctx["docs"]
+    store = scratch_dir("fp_store") + "/store"
+    eb1 = incremental_exact_dedup(docs.where(F.col("doc_id") % 2 == 0), store)
+    eb2 = incremental_exact_dedup(docs.where(F.col("doc_id") % 2 == 1), store)
+    return _inc_rows(eb1, "inc1").unionByName(_inc_rows(eb2, "inc2"))
 
-    def inc_rows(b: DataFrame, kind: str) -> DataFrame:
-        # same null-text sentinel the store uses, so a null-text
-        # survivor reports the fingerprint it was admitted under
-        return b.select(
-            F.lit(kind).alias("kind"),
-            F.coalesce(F.md5("text"), F.lit("__null_text__")).alias("fp"),
-            F.lit(None).cast("long").alias("n_copies"),
-            F.col("doc_id").alias("keep_id"),
-        )
 
+def _exact_fp_nd(ctx: dict) -> DataFrame:
+    """'nd1'/'nd2': the NEAR-dup admit sequence
+    (incremental_near_dedup) over the same even/odd batches —
+    signature-store matching (banded LSH + estimated Jaccard at 0.5),
+    md5 family so the oracle replays signatures, in-batch components,
+    and history hits bit-for-bit."""
+    from data_integration_and_harmonization_spark.functions.caching import scratch_dir
+
+    docs = ctx["docs"]
+    nd_store = scratch_dir("nd_store") + "/store"
+    n1 = incremental_near_dedup(
+        docs.where(F.col("doc_id") % 2 == 0), nd_store,
+        threshold=0.5, hash_family="md5",
+    )
+    n2 = incremental_near_dedup(
+        docs.where(F.col("doc_id") % 2 == 1), nd_store,
+        threshold=0.5, hash_family="md5",
+    )
+    return _inc_rows(n1, "nd1").unionByName(_inc_rows(n2, "nd2"))
+
+
+def _exact_fp_cdfnd(ctx: dict) -> DataFrame:
+    """'cdfnd' (r12): the CDF-DRIVEN maintenance consumer
+    (stream_cdf_neardedup_maintenance, the signature store's sibling
+    of the profile consumer) checked VALUE-FOR-VALUE: the 20% subset
+    (doc_id % 5 == 0) is committed as TWO manifest versions (even ids,
+    then odd ids) and ONE availableNow drain catches up across both —
+    a true multi-version drain, one micro-batch admit. Each row is a
+    stored signature with fp = md5 of the rendered sig array, so the
+    ORACLE pins the streamed store's full content (ids AND all 32
+    minima) by replaying the subset admit with the 'c_'-prefixed CTE
+    chain — no Spark-side batch twin needed. Sequential drains /
+    history hits / tag replay are pinned by tests/test_streaming.py."""
+    import os
+
+    from data_integration_and_harmonization_spark.functions.caching import scratch_dir
+    from data_integration_and_harmonization_spark.sources import manifest as MF
+    from data_integration_and_harmonization_spark.sources.cdf_stream import (
+        stream_cdf_neardedup_maintenance,
+    )
+    from data_integration_and_harmonization_spark.sources.writers import list_data_files
+
+    spark = ctx["spark"]
+    sub = ctx["docs"].where(F.col("doc_id") % 5 == 0).select("doc_id", "text")
+    cb = scratch_dir("cdfnd")
+    root = os.path.join(cb, "tbl")
+    s_stream = os.path.join(cb, "store")
+    ckpt = os.path.join(cb, "ckpt")
+    d1 = os.path.join(cb, "d1")
+    d2 = os.path.join(cb, "d2")
+    sub.where(F.col("doc_id") % 2 == 0).write.parquet(d1)
+    MF.commit_version(spark, root, d1, note="even")
+    sub.where(F.col("doc_id") % 2 == 1).write.parquet(d2)
+    MF.commit_files(
+        spark,
+        root,
+        MF.read_manifest(spark, root)["files"]
+        + [{"path": p, "bytes": b} for p, b in list_data_files(spark, d2)],
+        note="odd",
+    )
+    stream_cdf_neardedup_maintenance(
+        spark, root, s_stream, ckpt, threshold=0.5, hash_family="md5"
+    )
+    streamed = spark.read.parquet(
+        *[f"{p}/sigs" for p in stores.complete_batches(spark, s_stream)]
+    )
+    return streamed.select(
+        F.lit("cdfnd").alias("kind"),
+        F.md5(
+            F.array_join(
+                F.transform("sig", lambda x: x.cast("string")), ","
+            )
+        ).alias("fp"),
+        F.lit(None).cast("long").alias("n_copies"),
+        F.col("id").alias("keep_id"),
+    )
+
+
+def _exact_fp_diff(ctx: dict) -> DataFrame:
+    """'diff_added'/'diff_removed'/'diff_changed': snapshot_diff
+    between two deterministic corpus versions — old drops ids with
+    doc_id % 11 == 3 (so those classify 'added'), new drops
+    doc_id % 7 == 0 ('removed') and rewrites the text of doc_id % 5 == 0
+    survivors ('changed'). The oracle replays the same two snapshots
+    and the same full-outer fp compare in SQL."""
+    docs = ctx["docs"]
     v_old = docs.where(F.col("doc_id") % 11 != 3)
     v_new = docs.where(F.col("doc_id") % 7 != 0).withColumn(
         "text",
@@ -1756,22 +1752,28 @@ def q_dedup_exact_fp(spark: SparkSession, sf: str) -> DataFrame:
             F.col("doc_id") % 5 == 0, F.concat(F.col("text"), F.lit("!"))
         ).otherwise(F.col("text")),
     )
-    diff = snapshot_diff(v_old, v_new).select(
+    return snapshot_diff(v_old, v_new).select(
         F.concat(F.lit("diff_"), F.col("status")).alias("kind"),
         F.coalesce("new_fp", "old_fp").alias("fp"),
         F.lit(None).cast("long").alias("n_copies"),
         F.col("id").alias("keep_id"),
     )
 
-    return (
-        e.unionByName(fp)
-        .unionByName(inc_rows(b1, "inc1"))
-        .unionByName(inc_rows(b2, "inc2"))
-        .unionByName(inc_rows(n1, "nd1"))
-        .unionByName(inc_rows(n2, "nd2"))
-        .unionByName(cdfnd)
-        .unionByName(diff)
-    )
+
+# The store-backed legs (inc, nd, cdfnd) write independent stores, so
+# they overlap: r14 measured the exact and near admit chains threaded
+# at 11.1 s vs 11.4 s sequential (min-of-5, same process).
+DEDUP_EXACT_FP_LEGS = (
+    _exact_fp_setup,
+    (
+        ("exact", _exact_fp_exact),
+        ("normalized", _exact_fp_normalized),
+        ("inc", _exact_fp_inc),
+        ("nd", _exact_fp_nd),
+        ("cdfnd", _exact_fp_cdfnd),
+        ("diff", _exact_fp_diff),
+    ),
+)
 
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
@@ -1807,80 +1809,76 @@ def q_dedup_lsh_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     return cand.unionByName(ver)
 
 
-def q_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
-    """Three tagged graph-family legs through one hash-matched result:
+# dedup_clusters: four tagged graph-family legs through one
+# hash-matched result, each (kind, id, cluster_id). The doc, er and pr
+# legs' builds (persist/count/collect components, ER blocking, the
+# 5-round PageRank loop) are independent lineages of many short,
+# low-parallelism jobs, so overlapping them lets the scheduler
+# back-fill; per-leg results are unchanged (each is deterministic in
+# isolation).
 
-    - kind='doc': LSH-propose -> Jaccard-verify -> connected
-      components over documents (md5 family => the component
-      assignment is checked node-for-node by a recursive-CTE
-      oracle);
-    - kind='er': entity resolution over customer records —
-      blocked (nation, mktsegment) Levenshtein<=1 name linkage
-      resolved by the same connected-components operator, the
-      classic record-linkage pipeline (operators/linkage.py);
-    - kind='pr': 5-iteration PageRank over the co-purchase part
-      graph (operators/graph.py) — the engine's second iterative
-      graph algorithm; rank rides as parts-per-billion in
-      cluster_id, replayed node-for-node by an unrolled 5-CTE
-      oracle.
-    """
-    from data_integration_and_harmonization_spark.operators.graph import (
-        pagerank_ppb_leg,
-        triangle_counts,
+def _clusters_setup(spark: SparkSession, sf: str) -> dict:
+    from data_integration_and_harmonization_spark.functions.caching import track
+
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    # persisted ONCE for its two consumers (the doc leg materializes
+    # it; the tri leg's serve action then reads the cache instead of
+    # re-running the whole LSH propose+verify pipeline — r13: the tri
+    # leg was the query's slowest served leg, 1.0 s of pure recompute)
+    pairs = track(
+        lsh_verified_pairs(docs, threshold=0.5, hash_family="md5").persist()
     )
+    return {"spark": spark, "sf": sf, "pairs": pairs}
+
+
+def _clusters_doc(ctx: dict) -> DataFrame:
+    """kind='doc': LSH-propose -> Jaccard-verify -> connected components
+    over documents (md5 family => the component assignment is checked
+    node-for-node by a recursive-CTE oracle)."""
+    return duplicate_clusters(ctx["pairs"]).select(
+        F.lit("doc").alias("kind"), "id", "cluster_id"
+    )
+
+
+def _clusters_er(ctx: dict) -> DataFrame:
+    """kind='er': entity resolution over customer records — blocked
+    (nation, mktsegment) Levenshtein<=1 name linkage resolved by the
+    same connected-components operator, the classic record-linkage
+    pipeline (operators/linkage.py)."""
     from data_integration_and_harmonization_spark.operators.linkage import (
         resolve_entities,
     )
 
-    from data_integration_and_harmonization_spark.functions.caching import (
-        track,
+    cust = ctx["spark"].read.parquet(f"{ctx['sf']}/customer.parquet")
+    return resolve_entities(
+        cust,
+        id_col="c_custkey",
+        name_col="c_name",
+        block_cols=["c_nationkey", "c_mktsegment"],
+        max_edit=1,
+    ).select(F.lit("er").alias("kind"), "id", "cluster_id")
+
+
+def _clusters_pr(ctx: dict) -> DataFrame:
+    """kind='pr': 5-iteration PageRank over the co-purchase part graph
+    (operators/graph.py) — the engine's second iterative graph
+    algorithm; rank rides as parts-per-billion in cluster_id, replayed
+    node-for-node by an unrolled 5-CTE oracle."""
+    return _graph.pagerank_ppb_leg(
+        ctx["spark"].read.parquet(f"{ctx['sf']}/lineitem.parquet")
     )
 
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    # persisted ONCE for its two consumers (the components chain
-    # materializes it; the triangle leg's serve action then reads
-    # the cache instead of re-running the whole LSH propose+verify
-    # pipeline — r13: the tri leg was the query's slowest served
-    # leg, 1.0 s of pure recompute)
-    pairs = track(
-        lsh_verified_pairs(docs, threshold=0.5, hash_family="md5").persist()
-    )
 
-    # r13 optimization (guide §2.6): the three build-side chains —
-    # doc components (persist/count/collect), ER blocking +
-    # components, and the 5-round PageRank loop (3 counts + 5
-    # eager checkpoints) — are independent lineages; sequentially
-    # each runs many short, low-parallelism jobs. Concurrent
-    # driver threads let the scheduler back-fill; per-chain
-    # results are unchanged (each is deterministic in isolation).
-    def _doc_chain():
-        return duplicate_clusters(pairs).select(
-            F.lit("doc").alias("kind"), "id", "cluster_id"
-        )
-
-    def _er_chain():
-        cust = spark.read.parquet(f"{sf}/customer.parquet")
-        return resolve_entities(
-            cust,
-            id_col="c_custkey",
-            name_col="c_name",
-            block_cols=["c_nationkey", "c_mktsegment"],
-            max_edit=1,
-        ).select(F.lit("er").alias("kind"), "id", "cluster_id")
-
-    def _pr_chain():
-        return pagerank_ppb_leg(spark.read.parquet(f"{sf}/lineitem.parquet"))
-
-    doc_cl, er_cl, pr_leg = overlap(_doc_chain, _er_chain, _pr_chain)
-    # kind='tri': per-node triangle counts over the NEAR-DUP doc
-    # graph (the LSH-verified pairs already computed above) —
-    # triangle density measures duplicate-cluster cohesion
-    # (transitive near-dups triangulate; chains don't). The
-    # degree-ordered orientation keeps wedges O(E^1.5) and
-    # hub-safe. NOT run on the co-purchase graph: basket cliques
-    # make triangle counting cubic in basket size (measured 166 s
-    # at sf0.1 — an order with 40 parts alone contributes ~10k
-    # triangles); the near-dup graph is sparse by construction.
+def _clusters_tri(ctx: dict) -> DataFrame:
+    """kind='tri': per-node triangle counts over the NEAR-DUP doc graph
+    (the LSH-verified pairs) — triangle density measures
+    duplicate-cluster cohesion (transitive near-dups triangulate;
+    chains don't). The degree-ordered orientation keeps wedges
+    O(E^1.5) and hub-safe. NOT run on the co-purchase graph: basket
+    cliques make triangle counting cubic in basket size (measured
+    166 s at sf0.1 — an order with 40 parts alone contributes ~10k
+    triangles); the near-dup graph is sparse by construction."""
+    pairs = ctx["pairs"]
     sym_pairs = pairs.select(
         F.explode(
             F.array(
@@ -1889,26 +1887,37 @@ def q_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
             )
         ).alias("e")
     ).select("e.src", "e.dst")
-    tri_leg = triangle_counts(sym_pairs).select(
+    return _graph.triangle_counts(sym_pairs).select(
         F.lit("tri").alias("kind"),
         "id",
         F.col("n_triangles").alias("cluster_id"),
     )
-    return (
-        doc_cl.unionByName(er_cl).unionByName(pr_leg).unionByName(tri_leg)
-    )
 
 
-def q_dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    # md5 hash family => banded candidates + exact Hamming filter
-    # are reproduced by the DuckDB oracle pair-for-pair (murmur3
-    # stays the 64-bit scale default in the API).
-    text = simhash_pairs(
-        docs, max_hamming=3, bands=4, hash_family="md5"
-    ).select(F.lit("text").alias("kind"), "id_a", "id_b", "hamming")
+DEDUP_CLUSTERS_LEGS = (
+    _clusters_setup,
+    (
+        ("doc", _clusters_doc),
+        ("er", _clusters_er),
+        ("pr", _clusters_pr),
+        ("tri", _clusters_tri),
+    ),
+)
 
-    # 'img_bits' + 'img_pair' legs (r11): image near-dup via the
+
+# dedup_simhash: text near-dup pairs plus image, audio and video
+# near-dup legs over engine-encoded media, each (kind, id_a, id_b,
+# hamming). md5 hash family => banded candidates + exact Hamming
+# filter are reproduced by the DuckDB oracle pair-for-pair (murmur3
+# stays the 64-bit scale default in the API).
+
+def _simhash_media_payloads() -> list[tuple[int, bytes]]:
+    """The synthetic media corpus: (media_id, encoded payload)."""
+    import numpy as np
+
+    from data_integration_and_harmonization_spark.functions import media_codecs as MC
+
+    # 'img_bits' + 'img_pair' rows (r11): image near-dup via the
     # 64-bit DCT perceptual hash. The corpus is engine-ENCODED
     # synthetic images whose pixel values are pure integer
     # formulas, so the oracle replays the ENTIRE pHash pipeline in
@@ -1924,14 +1933,7 @@ def q_dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     # column bump tuned to land at Hamming distance 2 — a true
     # near-dup the banded join must find (recall is EXACT for
     # hamming <= bands-1 by pigeonhole).
-    import numpy as np
-
-    from data_integration_and_harmonization_spark.functions import (
-        media_codecs as MC,
-    )
-    from data_integration_and_harmonization_spark.functions.caching import track
-
-    # 'aud_bits' / 'aud_pair' legs (r11 second wave): audio
+    # 'aud_bits' / 'aud_pair' rows (r11 second wave): audio
     # near-dup via the spectral band-energy fingerprint
     # (media_codecs.audio_simhash64). The corpus is tone SEQUENCES
     # whose per-segment bins are leakage-free (bin 8+16b of a
@@ -1970,7 +1972,7 @@ def q_dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
             v = v + np.where(bx == bump_col, bump, 0)
         return v.astype(np.uint8)
 
-    payloads = [
+    return [
         (-1, MC.encode_png(quad.astype(np.uint8))),
         # -9 (r13): the SAME quad pattern as PNG -1, BMP-encoded
         # (24-bit BI_RGB bottom-up) — both formats are lossless,
@@ -2077,6 +2079,10 @@ def q_dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
             ),
         ),
     ]
+
+
+def _simhash_setup(spark: SparkSession, sf: str) -> dict:
+    from data_integration_and_harmonization_spark.functions.caching import track
     from data_integration_and_harmonization_spark.operators.multimodal import (
         local_media_frame,
     )
@@ -2086,52 +2092,70 @@ def q_dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     # Arrow stage a Python-worker round-trip per task (r14)
     media = local_media_frame(
         spark,
-        [(i, bytearray(p)) for i, p in payloads],
+        [(i, bytearray(p)) for i, p in _simhash_media_payloads()],
         "media_id long, payload binary",
     )
-    # persisted: the signature table feeds FOUR legs, so the Arrow
+    # persisted: the signature table feeds SIX legs, so the Arrow
     # decode stage runs once (a few dozen rows — the persist is
     # bookkeeping, not a size concern)
     sig = track(media_signature_table(media).persist())
+    return {"spark": spark, "sf": sf, "sig": sig}
 
-    def bit_rows(kind_tag, kind_val):
-        return (
-            sig.where(F.col("kind") == kind_val)
-            .select(
-                F.lit(kind_tag).alias("kind"),
-                F.col("id").alias("id_a"),
-                F.posexplode(
-                    F.array(
-                        *[
-                            F.shiftright("sig", i)
-                            .bitwiseAND(F.lit(1))
-                            .cast("long")
-                            for i in range(64)
-                        ]
-                    )
-                ).alias("id_b", "hamming"),
-            )
-            .select(
-                "kind", "id_a", F.col("id_b").cast("long").alias("id_b"), "hamming"
-            )
-        )
 
-    def pair_rows(kind_tag, kind_val):
-        return hamming_pairs(
-            sig.where(F.col("kind") == kind_val).select("id", "sig"),
-            bits=64,
-            bands=4,
-            max_hamming=3,
-        ).select(F.lit(kind_tag).alias("kind"), "id_a", "id_b", "hamming")
+def _simhash_text(ctx: dict) -> DataFrame:
+    docs = ctx["spark"].read.parquet(f"{ctx['sf']}/documents.parquet")
+    return simhash_pairs(
+        docs, max_hamming=3, bands=4, hash_family="md5"
+    ).select(F.lit("text").alias("kind"), "id_a", "id_b", "hamming")
 
+
+def _simhash_bits(kind_tag: str, kind_val: str, ctx: dict) -> DataFrame:
+    """Every signature bit of one modality as (id_a=id, id_b=bit
+    position, hamming=bit)."""
     return (
-        text.unionByName(bit_rows("img_bits", "image"))
-        .unionByName(pair_rows("img_pair", "image"))
-        .unionByName(bit_rows("aud_bits", "audio"))
-        .unionByName(pair_rows("aud_pair", "audio"))
-        .unionByName(bit_rows("vid_bits", "video"))
-        .unionByName(pair_rows("vid_pair", "video"))
+        ctx["sig"].where(F.col("kind") == kind_val)
+        .select(
+            F.lit(kind_tag).alias("kind"),
+            F.col("id").alias("id_a"),
+            F.posexplode(
+                F.array(
+                    *[
+                        F.shiftright("sig", i)
+                        .bitwiseAND(F.lit(1))
+                        .cast("long")
+                        for i in range(64)
+                    ]
+                )
+            ).alias("id_b", "hamming"),
+        )
+        .select(
+            "kind", "id_a", F.col("id_b").cast("long").alias("id_b"), "hamming"
+        )
     )
+
+
+def _simhash_pairs(kind_tag: str, kind_val: str, ctx: dict) -> DataFrame:
+    """One modality's banded near-dup pairs."""
+    return hamming_pairs(
+        ctx["sig"].where(F.col("kind") == kind_val).select("id", "sig"),
+        bits=64,
+        bands=4,
+        max_hamming=3,
+    ).select(F.lit(kind_tag).alias("kind"), "id_a", "id_b", "hamming")
+
+
+DEDUP_SIMHASH_LEGS = (
+    _simhash_setup,
+    (
+        ("text", _simhash_text),
+        ("img_bits", partial(_simhash_bits, "img_bits", "image")),
+        ("img_pair", partial(_simhash_pairs, "img_pair", "image")),
+        ("aud_bits", partial(_simhash_bits, "aud_bits", "audio")),
+        ("aud_pair", partial(_simhash_pairs, "aud_pair", "audio")),
+        ("vid_bits", partial(_simhash_bits, "vid_bits", "video")),
+        ("vid_pair", partial(_simhash_pairs, "vid_pair", "video")),
+    ),
+)
 
 
 def q_dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:

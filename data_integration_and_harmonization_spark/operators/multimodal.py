@@ -825,24 +825,29 @@ def _synthetic_media(spark):
     ).withColumn("n_bytes", F.length("payload").cast("long"))
 
 
-def q_mm_meta_features(spark: SparkSession, sf: str) -> DataFrame:
-    # metadata projection + pandas-UDF feature extraction + the
-    # resize->frame-sample chain in one tagged result (merged under
-    # the 50-query cap; every leg stays individually hash-checked).
-    # Feature half is long-format (media_id, bucket, freq): every
-    # histogram bucket the decode produced is checked against a
-    # DuckDB twin replaying the stub's (byte+pos)%dim binning. The
-    # 'real' rows run the ACTUAL codecs over synthetic media whose
-    # pixel stats are analytic — the oracle recomputes them from
-    # the pixel formula (spec-derived, not a tautology over the
-    # decoder). The synthetic payloads are UNIONED into the corpus
-    # before extract_features so the whole query pays ONE
-    # mapInPandas stage instead of two: a 2-row Python stage still
-    # costs a full Arrow worker round-trip (~1.4 s measured at
-    # sf0.1 — the r4 bench regression on this query was exactly
-    # that second stage, not the decode work).
-    media = _media(spark, sf)
-    meta = media.select(
+# mm_meta_features: metadata projection + pandas-UDF feature
+# extraction + the resize->frame-sample chain in one tagged result
+# (merged under the 50-query cap; every leg stays individually
+# hash-checked), each leg's rows (kind, media_id, media_type, n_bytes,
+# bucket, digest, freq). Feature half is long-format (media_id,
+# bucket, freq): every histogram bucket the decode produced is checked
+# against a DuckDB twin replaying the stub's (byte+pos)%dim binning.
+# The 'real' rows run the ACTUAL codecs over synthetic media whose
+# pixel stats are analytic — the oracle recomputes them from the pixel
+# formula (spec-derived, not a tautology over the decoder). The
+# synthetic payloads are UNIONED into the corpus before
+# extract_features so the whole query pays ONE mapInPandas stage
+# instead of two: a 2-row Python stage still costs a full Arrow worker
+# round-trip (~1.4 s measured at sf0.1 — the r4 bench regression on
+# this query was exactly that second stage, not the decode work).
+
+
+def _mm_setup(spark: SparkSession, sf: str) -> dict:
+    return {"spark": spark, "media": _media(spark, sf)}
+
+
+def _mm_meta(ctx: dict) -> DataFrame:
+    return ctx["media"].select(
         F.lit("meta").alias("kind"),
         "media_id",
         "media_type",
@@ -851,13 +856,16 @@ def q_mm_meta_features(spark: SparkSession, sf: str) -> DataFrame:
         "digest",
         F.lit(None).cast("double").alias("freq"),
     )
+
+
+def _mm_feature(ctx: dict) -> DataFrame:
     # project the digest away BEFORE the Arrow transfer: the
     # union's branches each execute the _media projection, and
     # without this prune the feature branch would compute a second
     # sha2 over every payload and ship it into Python
-    slim = media.select("media_id", "payload", "media_type", "n_bytes")
-    feats = (
-        extract_features(slim.unionByName(_synthetic_media(spark)))
+    slim = ctx["media"].select("media_id", "payload", "media_type", "n_bytes")
+    return (
+        extract_features(slim.unionByName(_synthetic_media(ctx["spark"])))
         .select("media_id", "n_bytes", F.posexplode("feature").alias("bucket", "freq"))
         .select(
             # synthetic ids are negative by construction
@@ -872,6 +880,9 @@ def q_mm_meta_features(spark: SparkSession, sf: str) -> DataFrame:
             F.round("freq", 6).alias("freq"),
         )
     )
+
+
+def _mm_av(ctx: dict) -> DataFrame:
     # 'audio' + 'video' rows (r10): both temporal modalities run
     # through extract_temporal_features — ONE Arrow stage for the
     # three synthetic payloads (the r4 lesson: each extra 2-row
@@ -923,7 +934,7 @@ def q_mm_meta_features(spark: SparkSession, sf: str) -> DataFrame:
     # by design (metadata tier — no frame decode in a compressed
     # container).
     av_media = local_media_frame(
-        spark,
+        ctx["spark"],
         [
             (-5, bytearray(MC.encode_wav(8192, sine))),
             (-6, bytearray(v_mono)),
@@ -1026,7 +1037,7 @@ def q_mm_meta_features(spark: SparkSession, sf: str) -> DataFrame:
         ],
         "media_id long, payload binary",
     )  # JVM LocalTableScan, not 32 pickled slices (r14)
-    av_rows = (
+    return (
         extract_temporal_features(av_media, n_bands=8, frame=256, n_sample=4)
         .select(
             "kind",
@@ -1043,6 +1054,9 @@ def q_mm_meta_features(spark: SparkSession, sf: str) -> DataFrame:
             F.round("freq", 6).alias("freq"),
         )
     )
+
+
+def _mm_align(ctx: dict) -> DataFrame:
     # 'align' rows (r12): transcript<->video temporal alignment —
     # SRT cues (driver-written fixtures, parsed back by the
     # all-JVM read_srt pipeline) joined to the temporal segments
@@ -1061,6 +1075,8 @@ def q_mm_meta_features(spark: SparkSession, sf: str) -> DataFrame:
     from data_integration_and_harmonization_spark.sources.readers import (
         read_srt,
     )
+
+    spark = ctx["spark"]
 
     def _tc(ms: int) -> str:
         return (
@@ -1104,7 +1120,7 @@ def q_mm_meta_features(spark: SparkSession, sf: str) -> DataFrame:
         ],
         "video_id long, payload binary",
     )  # JVM LocalTableScan, not 32 pickled slices (r14)
-    align_rows = transcript_video_alignment(cues_df, align_videos).select(
+    return transcript_video_alignment(cues_df, align_videos).select(
         F.lit("align").alias("kind"),
         F.col("video_id").alias("media_id"),
         F.lit(None).cast("string").alias("media_type"),
@@ -1113,14 +1129,17 @@ def q_mm_meta_features(spark: SparkSession, sf: str) -> DataFrame:
         F.lit(None).cast("string").alias("digest"),
         F.round(F.col("overlap_ms").cast("double"), 6).alias("freq"),
     )
+
+
+def _mm_frame(ctx: dict) -> DataFrame:
     # 'frame' rows: per-frame byte stats through the full
     # media -> resize -> frame-sample -> agg chain (the former
     # mm_frames query, folded in to free a registry slot); pruned
     # to (id, payload) so this branch never computes the digest
     frames = sample_frames(
-        resize_media(media.select("media_id", "payload"), target=64), n_frames=4
+        resize_media(ctx["media"].select("media_id", "payload"), target=64), n_frames=4
     )
-    frame_rows = frames.groupBy("frame_idx").agg(
+    return frames.groupBy("frame_idx").agg(
         F.count(F.lit(1)).alias("nf"),
         F.sum(F.length("frame")).alias("total_bytes"),
     ).select(
@@ -1132,12 +1151,18 @@ def q_mm_meta_features(spark: SparkSession, sf: str) -> DataFrame:
         F.lit(None).cast("string").alias("digest"),
         F.col("nf").cast("double").alias("freq"),
     )
-    return (
-        meta.unionByName(feats)
-        .unionByName(av_rows)
-        .unionByName(align_rows)
-        .unionByName(frame_rows)
-    )
+
+
+MM_META_FEATURES_LEGS = (
+    _mm_setup,
+    (
+        ("meta", _mm_meta),
+        ("feature", _mm_feature),
+        ("av", _mm_av),
+        ("align", _mm_align),
+        ("frame", _mm_frame),
+    ),
+)
 
 
 # meta half: metadata computed from the raw payload bytes;

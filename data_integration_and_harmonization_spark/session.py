@@ -21,8 +21,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def _default_driver_mem() -> str:
     """24g on large hosts, else ~half of physical RAM (min 2g): the
@@ -45,14 +43,16 @@ def get_spark(
 
     On a real cluster, pass ``master=None`` and let spark-submit /
     the cluster manager supply the master; locally defaults to
-    ``local[$SPARK_GRAFT_CPUS]``.
+    ``local[$SPARK_GRAFT_CPUS]``. ``$SPARK_GRAFT_CPUS`` (default: the
+    CPUs this process may run on) also sets the default shuffle
+    partition count.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.appName(app_name)
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -16,9 +16,11 @@ full-catalog single-session run (the bench) caught it. Two guards:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry
 from tools.plan_audit import scan_observe_sources
@@ -56,7 +58,7 @@ def test_plan_audit_global_window_classifier(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     import plan_audit as PA
 
     df = spark.range(1000).select(F.col("id"), (F.col("id") % 7).alias("g"))

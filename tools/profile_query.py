@@ -24,17 +24,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _jvm_cpu_ns(spark) -> int | None:
-    try:
-        pid = int(spark._jvm.java.lang.ProcessHandle.current().pid())
-        with open(f"/proc/{pid}/stat") as fh:
-            parts = fh.read().rsplit(") ", 1)[1].split()
-        ticks = int(parts[11]) + int(parts[12])
-        return ticks * (10**9 // os.sysconf("SC_CLK_TCK"))
-    except Exception:  # noqa: BLE001
-        return None
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
@@ -44,6 +33,7 @@ def main() -> int:
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod
+    from bench import _jvm_cpu_ns
     from data_integration_and_harmonization_spark import get_spark
     from data_integration_and_harmonization_spark.functions.caching import release_all
 

@@ -45,7 +45,7 @@ OPERATORS = {
     "curate_pipeline": "full curation funnel incl. LSH near-dedup + pack",
     # r8 additions (new driver legs)
     "rel_revenue_by_nation": "broadcast rollup + salted hot-key join",
-    "stream_batch_twin": "5 streaming drains incl. stream-stream join + sessions",
+    "stream_batch_twin": "8 streaming drains incl. stream-stream join + sessions",
     "dedup_exact_fp": "exact/normalized/incremental dedup + snapshot diff",
     # late-r8 additions
     "text_profile": "per-doc profile + dup-5gram + C4 line dedup",
