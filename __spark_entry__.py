@@ -841,7 +841,6 @@ def q_ml_classification(spark: SparkSession, sf: str) -> DataFrame:
       the row's value is 1.0 iff it did.
     """
     import os
-    import tempfile
 
     li = spark.read.parquet(f"{sf}/lineitem.parquet").where(F.col("l_orderkey") % 20 == 0)
     labeled = li.select(
@@ -887,7 +886,7 @@ def q_ml_classification(spark: SparkSession, sf: str) -> DataFrame:
                     DecisionTreeClassifier(seed=42),
                 ]
             ).fit(small)
-            path = os.path.join(tempfile.mkdtemp(prefix="dih_model_"), "dt")
+            path = os.path.join(scratch_dir("model"), "dt")
             ML.save_model(pipe, path)
             loaded = ML.load_model(path)
             return (

@@ -73,9 +73,13 @@ def scan_files(spark: SparkSession, path: str, glob: str) -> DataFrame:
     inside directory ``path`` (or the file or pattern ``path`` itself)
     as ``(_src_file, payload)`` — the file's basename, computed
     JVM-side, and its bytes. The scan is distributed; payloads never
-    touch the driver."""
-    pattern = os.path.join(path, glob) if os.path.isdir(path) else path
-    return spark.read.format("binaryFile").load(pattern).select(
+    touch the driver. A directory is read with ``pathGlobFilter``, not
+    as a ``dir/glob`` path: a glob path makes Spark's sink-metadata
+    probe log a FileNotFoundException stack trace on every read."""
+    reader = spark.read.format("binaryFile")
+    if os.path.isdir(path):
+        reader = reader.option("pathGlobFilter", glob)
+    return reader.load(path).select(
         F.element_at(F.split("path", "/"), -1).alias("_src_file"),
         F.col("content").alias("payload"),
     )

@@ -9,17 +9,18 @@ Five levels, cheapest first; each is the standard scale architecture:
                 whitespace/punct/case variants
 - minhash_lsh:  shingle -> minhash signature -> band buckets ->
                 candidate pairs join within buckets. All column
-                expressions; the shingle hash family is murmur3
-                (``F.hash``, fastest) or md5-derived (reproducible in
-                any engine — the oracle twin). The pair join only ever
+                expressions; the shingle hash is md5-derived, so any
+                engine reproduces it (the oracle twin). The pair join
+                (one banded self-join, :func:`_bucket_pairs`) only ever
                 touches bucket-mates, which is what makes near-dup
                 feasible at 100 TB, and no corpus-sized side is ever
                 broadcast anywhere in this module.
-- simhash:      64-bit (murmur3) / 60-bit (md5, oracle-reproducible)
-                weighted-bit signature; near-dups = banded bucket-mates
-                at small Hamming distance
+- simhash:      60-bit (md5, oracle-reproducible) weighted-bit
+                signature; near-dups = banded bucket-mates at small
+                Hamming distance
 - ngram_jaccard: exact Jaccard over word-shingle sets for candidate
-                pairs (the verifier of the approximate stages)
+                pairs (the verifier of the approximate stages), through
+                the one set-similarity join, ``functions.setsim``
 """
 
 from __future__ import annotations
@@ -33,29 +34,26 @@ from pyspark.sql import types as T
 from data_integration_and_harmonization_spark.functions import stores
 from data_integration_and_harmonization_spark.functions.arrow import payload_stage
 from data_integration_and_harmonization_spark.functions.concurrency import overlap
+from data_integration_and_harmonization_spark.functions.setsim import jaccard_pairs
 from data_integration_and_harmonization_spark.operators import graph as _graph
 from data_integration_and_harmonization_spark.operators.text import TOKEN_RE, normalized, tokens
 
 # minhash: h_i(x) = (a_i * base(x) + b_i) mod p — classic affine
 # permutation family over a Mersenne prime. ``base`` is the shingle
-# hash: murmur3 (fastest, JVM ``F.hash``) by default, or md5-derived
-# (``hash_family='md5'``) when the signature must be reproducible in an
-# external engine — md5 exists everywhere; murmur3 seeds don't.
+# hash, md5-derived so the signature is reproducible in an external
+# engine — md5 exists everywhere; murmur3 seeds don't.
 _P = 2147483647
 
+# SimHash signature width: 15 md5 hex chars, the widest slice that
+# stays positive in a signed long (the slice the MinHash hash uses)
+SIMHASH_BITS = 60
 
-def _shingle_hash(col: Column, hash_family: str) -> Column:
-    if hash_family == "md5":
-        # first 15 hex chars = 60 bits, positive in a long; DuckDB
-        # mirrors this exactly as CAST('0x' || substr(md5(s),1,15) AS
-        # BIGINT). One md5 per shingle; permutations stay affine.
-        # Reduced mod P here so the affine step (x * 63 max) cannot
-        # overflow a 64-bit signed int — DuckDB errors on overflow
-        # where Spark's non-ANSI mode silently wraps.
-        return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long") % _P
-    if hash_family == "murmur3":
-        return F.abs(F.hash(col).cast("long"))
-    raise ValueError(f"unknown hash_family: {hash_family!r}")
+
+def _md5_long(col: Column) -> Column:
+    """First 15 md5 hex chars = 60 bits, positive in a long; DuckDB
+    mirrors this exactly as CAST('0x' || substr(md5(s),1,15) AS
+    BIGINT)."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def word_shingles(toks: Column, gram: int = 3) -> Column:
@@ -91,10 +89,9 @@ def minhash_signatures(
     id_col: str = "doc_id",
     num_hashes: int = 32,
     gram: int = 3,
-    hash_family: str = "murmur3",
 ) -> DataFrame:
     """MinHash signatures as ONE exploded-aggregate pass: explode the
-    shingle set to rows, murmur3 each shingle exactly once, then
+    shingle set to rows, hash each shingle exactly once, then
     compute all ``num_hashes`` permutation minima as plain codegen'd
     aggregates with map-side partial combine.
 
@@ -119,9 +116,13 @@ def minhash_signatures(
     # a non-cheap multiply-referenced alias staged, so this projection
     # makes the tokenizer run once per document instead of ~6x.
     staged = src.select("id", tokens("t").alias("__tk"))
+    # One md5 per shingle; permutations stay affine. Reduced mod P here
+    # so the affine step (x * 63 max) cannot overflow a 64-bit signed
+    # int — DuckDB errors on overflow where Spark's non-ANSI mode
+    # silently wraps.
     ex = staged.select(
         "id", F.explode(word_shingles(F.col("__tk"), gram)).alias("s")
-    ).select("id", _shingle_hash(F.col("s"), hash_family).alias("h"))
+    ).select("id", (_md5_long(F.col("s")) % _P).alias("h"))
     aggs = [
         F.min((F.col("h") * (2 * i + 1) + (7 * i + 3)) % _P).alias(f"m{i}")
         for i in range(num_hashes)
@@ -137,54 +138,59 @@ def minhash_lsh_candidates(
     num_hashes: int = 32,
     bands: int = 8,
     gram: int = 3,
-    hash_family: str = "murmur3",
 ) -> DataFrame:
     """Near-dup candidate pairs via banded LSH: split the signature
     into ``bands`` rows of ``num_hashes/bands``; docs sharing any
-    band hash are candidates. The self-join is a shuffle equi-join on
-    (band, bucket) — per-bucket groups are tiny, so the quadratic
-    blowup is local to real near-dup clusters, not the corpus; neither
-    side is ever broadcast or collected.
-
-    With ``hash_family='md5'`` the bucket is the concatenated band
-    minima (strings) instead of a murmur3 fold, so an external oracle
-    can reproduce the candidate graph bit-for-bit.
+    band bucket (the concatenated band minima, so an external oracle
+    can reproduce the candidate graph bit-for-bit) are candidates,
+    through the one (band, bucket) self-join, :func:`_bucket_pairs`.
 
     Output: (id_a, id_b, n_shared_bands), id_a < id_b.
     """
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, gram, hash_family)
-    banded = _banded_rows(sig, num_hashes, bands, hash_family)
-    left = banded.alias("l")
-    right = banded.alias("r")
+    sig = minhash_signatures(df, text_col, id_col, num_hashes, gram)
+    return _bucket_pairs(_banded_rows(sig, num_hashes, bands))
+
+
+def _bucket_pairs(banded: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """The one (band, bucket) self-join under every banded candidate
+    generator (MinHash LSH, SimHash/pHash Hamming, the incremental
+    store's within-batch step): rows of ``banded`` (id, band, bucket,
+    *carry) that meet in a bucket become one row per pair,
+    (id_a, id_b, *{c}_a, *{c}_b, n_shared_bands) with id_a < id_b — a
+    pair sharing k bands meets k times and the group-by collapses it.
+
+    A shuffle equi-join on (band, bucket): per-bucket groups are tiny,
+    so the quadratic blowup is local to real near-dup clusters, not the
+    corpus; neither side is ever broadcast or collected. ``carry``
+    names per-id columns the caller needs on both sides of the pair
+    (they are functions of id, so grouping on them splits nothing)."""
+    l, r = banded.alias("l"), banded.alias("r")
     return (
-        left.join(
-            right,
+        l.join(
+            r,
             (F.col("l.band") == F.col("r.band"))
             & (F.col("l.bucket") == F.col("r.bucket"))
             & (F.col("l.id") < F.col("r.id")),
         )
-        .groupBy(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
+        .groupBy(
+            F.col("l.id").alias("id_a"),
+            F.col("r.id").alias("id_b"),
+            *[F.col(f"l.{c}").alias(f"{c}_a") for c in carry],
+            *[F.col(f"r.{c}").alias(f"{c}_b") for c in carry],
+        )
         .agg(F.count(F.lit(1)).alias("n_shared_bands"))
     )
-
-
-def simhash_bits(hash_family: str) -> int:
-    """Signature width: 64 for murmur3; 60 for md5 (15 hex chars —
-    the widest slice that stays positive in a signed long, and the
-    same slice the md5 MinHash family uses)."""
-    return 60 if hash_family == "md5" else 64
 
 
 def simhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_family: str = "murmur3",
 ) -> DataFrame:
     """SimHash per document: each distinct token votes its hash bit
     pattern; signature bit b is 1 iff the vote sum is positive.
-    64-bit with murmur3 (scale default), 60-bit with md5 (externally
-    reproducible — the oracle twin).
+    ``SIMHASH_BITS`` (60) wide, md5-derived so the oracle twin
+    reproduces it.
 
     Same exploded-aggregate shape as :func:`minhash_signatures` — one
     token-row pass, ``bits`` codegen'd conditional-sum aggregates,
@@ -192,15 +198,11 @@ def simhash_signatures(
 
     Output: (id, sig long).
     """
-    bits = simhash_bits(hash_family)
+    bits = SIMHASH_BITS
     n = df.sparkSession.sparkContext.defaultParallelism
     src = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("txt")).repartition(n, "id")
     tok = src.select("id", F.explode(F.array_distinct(tokens("txt"))).alias("t"))
-    if hash_family == "md5":
-        h = F.conv(F.substring(F.md5(F.col("t")), 1, 15), 16, 10).cast("long")
-    else:
-        h = F.hash("t", F.lit(41)).cast("long") * F.lit(2654435761).cast("long")
-    ex = tok.select("id", h.alias("h"))
+    ex = tok.select("id", _md5_long(F.col("t")).alias("h"))
     votes = [
         F.sum(
             F.when(F.shiftright("h", b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
@@ -225,7 +227,6 @@ def simhash_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     bands: int = 4,
-    hash_family: str = "murmur3",
     max_bucket: int | None = None,
 ) -> DataFrame:
     """SimHash near-dup pairs: split each signature into ``bands``
@@ -243,10 +244,10 @@ def simhash_pairs(
 
     Output: (id_a, id_b, hamming), id_a < id_b.
     """
-    sig = simhash_signatures(df, text_col, id_col, hash_family)
+    sig = simhash_signatures(df, text_col, id_col)
     return hamming_pairs(
         sig,
-        bits=simhash_bits(hash_family),
+        bits=SIMHASH_BITS,
         bands=bands,
         max_hamming=max_hamming,
         max_bucket=max_bucket,
@@ -353,24 +354,7 @@ def hamming_pairs(
             .where(F.col("_bn") <= max_bucket)
             .drop("_bn")
         )
-    left, right = banded.alias("l"), banded.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        # a pair sharing k bands appears k times — collapse before the
-        # (cheap) hamming filter so the output is one row per pair
-        .groupBy(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            F.col("l.sig").alias("sig_a"),
-            F.col("r.sig").alias("sig_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("_nb"))
-    )
+    cand = _bucket_pairs(banded, ("sig",))
     hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("long")
     return (
         cand.select("id_a", "id_b", hamming.alias("hamming"))
@@ -722,19 +706,16 @@ def incremental_exact_dedup(
     return fresh.drop("__fp")
 
 
-def _banded_rows(
-    sig: DataFrame, num_hashes: int, bands: int, hash_family: str
-) -> DataFrame:
+def _banded_rows(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(id, band, bucket) rows from an (id, sig) signature frame —
     the banding step of :func:`minhash_lsh_candidates`, factored out
-    so the incremental store path bands the SAME way."""
+    so the incremental store path bands the SAME way. The bucket is
+    the band's minima joined with '|'."""
     rows_per_band = num_hashes // bands
 
     def bucket_of(b: int) -> Column:
         cols = [F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-        if hash_family == "md5":
-            return F.concat_ws("|", *[c.cast("string") for c in cols])
-        return F.hash(*cols).cast("string")
+        return F.concat_ws("|", *[c.cast("string") for c in cols])
 
     return sig.select(
         "id",
@@ -770,7 +751,6 @@ def incremental_near_dedup(
     num_hashes: int = 32,
     bands: int = 8,
     gram: int = 3,
-    hash_family: str = "murmur3",
     store_partitions: int = 8,
     tag: str | None = None,
 ) -> DataFrame:
@@ -841,23 +821,10 @@ def incremental_near_dedup(
 
     spark = new_docs.sparkSession
     sig = track(
-        minhash_signatures(
-            new_docs, text_col, id_col, num_hashes, gram, hash_family
-        ).persist()
+        minhash_signatures(new_docs, text_col, id_col, num_hashes, gram).persist()
     )
-    banded = _banded_rows(sig, num_hashes, bands, hash_family)
     # (a) within-batch components over estimated near-dup pairs
-    l, r = banded.alias("l"), banded.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-    )
+    cand = _bucket_pairs(_banded_rows(sig, num_hashes, bands))
     sa = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
     pairs = (
@@ -895,7 +862,7 @@ def incremental_near_dedup(
         # independence from the component chain, so the two run
         # concurrently. Still bounded by bands x store_partitions,
         # never by batch or corpus size.
-        all_banded = _banded_rows(sig, num_hashes, bands, hash_family).withColumn(
+        all_banded = _banded_rows(sig, num_hashes, bands).withColumn(
             "pbucket", pb(F.col("bucket"))
         )
         _k = (F.col("band") * P + F.col("pbucket")).alias("k")
@@ -908,7 +875,7 @@ def incremental_near_dedup(
 
     keys, keep_sig = overlap(_keys, _keepers)
     nb = (
-        _banded_rows(keep_sig, num_hashes, bands, hash_family)
+        _banded_rows(keep_sig, num_hashes, bands)
         .withColumn("pbucket", pb(F.col("bucket")))
         .alias("n")
     )
@@ -977,7 +944,7 @@ def incremental_near_dedup(
             fs.delete(jvm.org.apache.hadoop.fs.Path(out_dir), True)
         else:
             (
-                _banded_rows(keep_sig, num_hashes, bands, hash_family)
+                _banded_rows(keep_sig, num_hashes, bands)
                 .withColumn("pbucket", pb(F.col("bucket")))
                 # co-locate each (band, pbucket) into one task so every
                 # partition directory gets one file, not one per task
@@ -1322,6 +1289,29 @@ def line_dedup(
     return per_doc
 
 
+def _shingle_sets(
+    df: DataFrame, text_col: str, id_col: str, gram: int, keys: dict | None = None
+) -> DataFrame:
+    """(id, *keys, set) word-shingle sets, ``keys`` naming key columns.
+
+    The raw text shuffles ONCE, on the keys (on id without keys;
+    explicit n => a single-file scan still fans out); the expensive
+    tokenize + shingle projection then runs distributed, after the
+    exchange. Staged tokenize (r14): see :func:`minhash_signatures`."""
+    keys = keys or {}
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return (
+        df.select(
+            F.col(id_col).alias("id"),
+            *[c.alias(k) for k, c in keys.items()],
+            F.col(text_col).alias("__t"),
+        )
+        .repartition(n, *(list(keys) or ["id"]))
+        .select("id", *keys, tokens("__t").alias("__tk"))
+        .select("id", *keys, word_shingles(F.col("__tk"), gram).alias("set"))
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -1337,48 +1327,22 @@ def ngram_jaccard_pairs(
     MinHash path above is the unblocked scale route.
 
     Scale shape: ONE shuffle of (id, text) on the blocking key, then
-    the shingle projection runs distributed post-shuffle, then a
-    shuffle equi self-join on (blk[, lang]) — both children share the
-    exchange (Catalyst reuses it), and NOTHING corpus-sized is ever
-    broadcast. A blocking group with pathological skew is bounded by
-    construction (documents of one length bucket + language); the
-    unblocked scale route for heavy corpora is
+    the shingle projection runs distributed post-shuffle, then
+    :func:`..functions.setsim.jaccard_pairs` pairs within the blocking
+    key (a keyed self-join at threshold 0, the prefix filter above it)
+    — the self-join's children share the exchange, and NOTHING
+    corpus-sized is ever broadcast. A blocking group with pathological
+    skew is bounded by construction (documents of one length bucket +
+    language); the unblocked scale route for heavy corpora is
     :func:`lsh_verified_pairs`.
 
     Output: (id_a, id_b, jaccard) for pairs above ``threshold``.
     """
-    keys = ["blk"] + (["lang"] if "lang" in df.columns else [])
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.floor(F.length(F.col(text_col)) / length_bucket).alias("blk"),
-        *([F.col("lang")] if "lang" in df.columns else []),
-        F.col(text_col).alias("__t"),
-    )
-    # Shuffle the raw text ONCE on the join key (explicit n => a
-    # single-file scan still fans out); the expensive shingle
-    # projection then runs distributed, after the exchange.
-    n = df.sparkSession.sparkContext.defaultParallelism
-    base = base.repartition(n, *[F.col(k) for k in keys])
-    # staged tokenize (r14): see minhash_signatures
-    s = base.select("id", *keys, tokens("__t").alias("__tk")).select(
-        "id", *keys, word_shingles(F.col("__tk"), gram).alias("sh")
-    )
-    left, right = s.alias("l"), s.alias("r")
-    on = (F.col("l.id") < F.col("r.id"))
-    for k in keys:
-        on = on & (F.col(f"l.{k}") == F.col(f"r.{k}"))
-    inter = F.size(F.array_intersect(F.col("l.sh"), F.col("r.sh")))
-    union = F.size(F.array_union(F.col("l.sh"), F.col("r.sh")))
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
-    return (
-        left.join(right, on)
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            F.round(jac, 6).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    keys = {"blk": F.floor(F.length(F.col(text_col)) / length_bucket)}
+    if "lang" in df.columns:
+        keys["lang"] = F.col("lang")
+    sets = _shingle_sets(df, text_col, id_col, gram, keys)
+    return jaccard_pairs(sets, threshold, list(keys))
 
 
 def lsh_verified_pairs(
@@ -1389,34 +1353,18 @@ def lsh_verified_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     gram: int = 3,
-    hash_family: str = "murmur3",
 ) -> DataFrame:
     """The 100 TB near-dup pipeline: MinHash-LSH proposes candidate
-    pairs (near-linear), exact shingle Jaccard verifies ONLY those
+    pairs (near-linear), exact shingle Jaccard
+    (:func:`..functions.setsim.jaccard_pairs`) verifies ONLY those
     pairs. Cost scales with the number of real near-dup pairs, not
     with corpus size squared.
 
     Output: (id_a, id_b, jaccard) for verified pairs >= threshold.
     """
-    cands = minhash_lsh_candidates(df, text_col, id_col, num_hashes, bands, gram, hash_family)
-    n = df.sparkSession.sparkContext.defaultParallelism
-    sh = (
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
-        .repartition(n, "id")
-        # staged tokenize (r14): see minhash_signatures
-        .select("id", tokens("t").alias("__tk"))
-        .select("id", word_shingles(F.col("__tk"), gram).alias("sh"))
-    )
-    j = (
-        cands.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-    )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.array_union(F.col("sh_a"), F.col("sh_b")))
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
-    return j.select("id_a", "id_b", F.round(jac, 6).alias("jaccard")).where(
-        F.col("jaccard") >= threshold
-    )
+    cands = minhash_lsh_candidates(df, text_col, id_col, num_hashes, bands, gram)
+    sets = _shingle_sets(df, text_col, id_col, gram)
+    return jaccard_pairs(sets, threshold, candidates=cands)
 
 
 def embedding_near_dup_pairs(
@@ -1663,19 +1611,17 @@ def _exact_fp_nd(ctx: dict) -> DataFrame:
     """'nd1'/'nd2': the NEAR-dup admit sequence
     (incremental_near_dedup) over the same even/odd batches —
     signature-store matching (banded LSH + estimated Jaccard at 0.5),
-    md5 family so the oracle replays signatures, in-batch components,
+    md5 hashes so the oracle replays signatures, in-batch components,
     and history hits bit-for-bit."""
     from data_integration_and_harmonization_spark.functions.caching import scratch_dir
 
     docs = ctx["docs"]
     nd_store = scratch_dir("nd_store") + "/store"
     n1 = incremental_near_dedup(
-        docs.where(F.col("doc_id") % 2 == 0), nd_store,
-        threshold=0.5, hash_family="md5",
+        docs.where(F.col("doc_id") % 2 == 0), nd_store, threshold=0.5
     )
     n2 = incremental_near_dedup(
-        docs.where(F.col("doc_id") % 2 == 1), nd_store,
-        threshold=0.5, hash_family="md5",
+        docs.where(F.col("doc_id") % 2 == 1), nd_store, threshold=0.5
     )
     return _inc_rows(n1, "nd1").unionByName(_inc_rows(n2, "nd2"))
 
@@ -1719,9 +1665,7 @@ def _exact_fp_cdfnd(ctx: dict) -> DataFrame:
         + [{"path": p, "bytes": b} for p, b in list_data_files(spark, d2)],
         note="odd",
     )
-    stream_cdf_neardedup_maintenance(
-        spark, root, s_stream, ckpt, threshold=0.5, hash_family="md5"
-    )
+    stream_cdf_neardedup_maintenance(spark, root, s_stream, ckpt, threshold=0.5)
     streamed = spark.read.parquet(
         *[f"{p}/sigs" for p in stores.complete_batches(spark, s_stream)]
     )
@@ -1793,20 +1737,20 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
 def q_dedup_lsh_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     # the banded candidate graph AND the Jaccard-verified pair set
     # in one tagged entry (candidate rows val=n_shared_bands,
-    # verified rows val=jaccard). md5 hash family => both stages
-    # are reproduced by the DuckDB oracle pair-for-pair (murmur3
-    # stays the scale default in the API).
+    # verified rows val=jaccard); the candidate frame is built once
+    # and verified as is. Both stages are reproduced by the DuckDB
+    # oracle pair-for-pair.
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    cand = minhash_lsh_candidates(docs, hash_family="md5").select(
+    cands = minhash_lsh_candidates(docs)
+    ver = jaccard_pairs(_shingle_sets(docs, "text", "doc_id", 3), 0.5, candidates=cands)
+    return cands.select(
         F.lit("candidate").alias("kind"),
         "id_a",
         "id_b",
         F.col("n_shared_bands").cast("double").alias("val"),
+    ).unionByName(
+        ver.select(F.lit("verified").alias("kind"), "id_a", "id_b", F.col("jaccard").alias("val"))
     )
-    ver = lsh_verified_pairs(docs, threshold=0.5, hash_family="md5").select(
-        F.lit("verified").alias("kind"), "id_a", "id_b", F.col("jaccard").alias("val")
-    )
-    return cand.unionByName(ver)
 
 
 # dedup_clusters: four tagged graph-family legs through one
@@ -1826,14 +1770,14 @@ def _clusters_setup(spark: SparkSession, sf: str) -> dict:
     # re-running the whole LSH propose+verify pipeline — r13: the tri
     # leg was the query's slowest served leg, 1.0 s of pure recompute)
     pairs = track(
-        lsh_verified_pairs(docs, threshold=0.5, hash_family="md5").persist()
+        lsh_verified_pairs(docs, threshold=0.5).persist()
     )
     return {"spark": spark, "sf": sf, "pairs": pairs}
 
 
 def _clusters_doc(ctx: dict) -> DataFrame:
     """kind='doc': LSH-propose -> Jaccard-verify -> connected components
-    over documents (md5 family => the component assignment is checked
+    over documents (md5 hashes => the component assignment is checked
     node-for-node by a recursive-CTE oracle)."""
     return duplicate_clusters(ctx["pairs"]).select(
         F.lit("doc").alias("kind"), "id", "cluster_id"
@@ -1907,9 +1851,8 @@ DEDUP_CLUSTERS_LEGS = (
 
 # dedup_simhash: text near-dup pairs plus image, audio and video
 # near-dup legs over engine-encoded media, each (kind, id_a, id_b,
-# hamming). md5 hash family => banded candidates + exact Hamming
-# filter are reproduced by the DuckDB oracle pair-for-pair (murmur3
-# stays the 64-bit scale default in the API).
+# hamming). md5 hashes => banded candidates + exact Hamming filter
+# are reproduced by the DuckDB oracle pair-for-pair.
 
 def _simhash_media_payloads() -> list[tuple[int, bytes]]:
     """The synthetic media corpus: (media_id, encoded payload)."""
@@ -2104,9 +2047,7 @@ def _simhash_setup(spark: SparkSession, sf: str) -> dict:
 
 def _simhash_text(ctx: dict) -> DataFrame:
     docs = ctx["spark"].read.parquet(f"{ctx['sf']}/documents.parquet")
-    return simhash_pairs(
-        docs, max_hamming=3, bands=4, hash_family="md5"
-    ).select(F.lit("text").alias("kind"), "id_a", "id_b", "hamming")
+    return simhash_pairs(docs, max_hamming=3, bands=4).select(F.lit("text").alias("kind"), "id_a", "id_b", "hamming")
 
 
 def _simhash_bits(kind_tag: str, kind_val: str, ctx: dict) -> DataFrame:
@@ -2299,7 +2240,7 @@ def _md5_minhash_cte(
     bare: bool = False,
     prefix: str = "",
 ) -> str:
-    """DuckDB twin of ``minhash_signatures(hash_family='md5')`` +
+    """DuckDB twin of ``minhash_signatures`` +
     ``minhash_lsh_candidates``: same shingle hash (first 15 md5 hex
     chars as a 60-bit int, reduced mod the Mersenne prime), same affine
     permutation family, same band buckets (concatenated minima).
@@ -2344,10 +2285,10 @@ def _md5_minhash_cte(
 
 
 def _md5_simhash_sql(max_hamming: int = 3, bands: int = 4) -> str:
-    """DuckDB twin of ``simhash_pairs(hash_family='md5')``: same token
+    """DuckDB twin of ``simhash_pairs``: same token
     hash (first 15 md5 hex chars = 60 bits), same per-bit vote sums,
     same 15-bit band buckets, same Hamming filter."""
-    bits = simhash_bits("md5")
+    bits = SIMHASH_BITS
     rpb = bits // bands
     mask = (1 << rpb) - 1
     votes = ",\n    ".join(

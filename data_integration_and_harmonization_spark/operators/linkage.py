@@ -34,9 +34,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_integration_and_harmonization_spark.functions.setsim import jaccard_pairs
 from data_integration_and_harmonization_spark.operators.dedup import duplicate_clusters
 
 __all__ = [
@@ -57,7 +58,6 @@ def token_links(
     name_col: str,
     block_cols: Sequence[str],
     threshold: float = 0.5,
-    prefix_filter: bool = True,
 ) -> DataFrame:
     """Order-insensitive name matching: records sharing every block
     key link when the Jaccard similarity of their DISTINCT name-token
@@ -67,23 +67,15 @@ def token_links(
     to :func:`candidate_links`' typo tolerance; feed either (or the
     union of both) into :func:`~.dedup.duplicate_clusters`.
 
-    Scale shape: names explode to (block, token) rows — pairs are
-    generated by an equi-join on (block_cols, token), so only pairs
-    sharing at least one token in the same block ever materialize
-    (never block² for blocks with diverse names). With
-    ``prefix_filter`` (default), the join keys are further cut to each
-    record's PREFIX — its ``m - ceil(threshold*m) + 1`` globally
-    rarest tokens (m = its token count), the classic AllPairs/PPJoin
-    bound: any pair with Jaccard >= threshold MUST share a prefix
-    token, so corporate-suffix hot tokens ("inc", "llc") stop
-    generating block-wide candidate floods while the result stays
-    EXACTLY the unfiltered output (pinned by tests). Candidates are
-    then verified against the full token sets (equi-joins on id).
-    Token order for the prefix is (document frequency, token) — df via
-    groupBy+join rather than a count-over-window so a degenerate
-    mega-token skews an AQE-splittable join, not an unsplittable
-    window partition. Tokens are the canonical :func:`~.text.normalized`
-    words, so case and punctuation never split a token.
+    Scale shape: the token sets go through the one set-similarity join,
+    :func:`..functions.setsim.jaccard_pairs`, keyed on ``block_cols``.
+    Above threshold 0 its AllPairs prefix filter generates pairs by an
+    equi-join on (block_cols, token) over each record's few globally
+    rarest tokens, so corporate-suffix hot tokens ("inc", "llc") never
+    flood a block with candidates, and the result stays exact; at
+    threshold 0 every block pair qualifies. Tokens are the canonical
+    :func:`~.text.normalized` words, so case and punctuation never
+    split a token.
 
     Output: (id_a, id_b, jaccard), id_a < id_b.
     """
@@ -95,86 +87,12 @@ def token_links(
     from data_integration_and_harmonization_spark.operators.text import normalized
 
     toks = F.array_distinct(F.split(normalized(name_col), " "))
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.size(toks).alias("n_tok"),
-        F.explode(toks).alias("__t"),
-        *block_cols,
-    ).where(F.col("__t") != "")
-    if not prefix_filter:
-        left = base.select(
-            F.col("id").alias("id_a"), F.col("n_tok").alias("n_a"), "__t", *block_cols
-        )
-        right = base.select(
-            F.col("id").alias("id_b"), F.col("n_tok").alias("n_b"), "__t", *block_cols
-        )
-        inter = (
-            left.join(right, [*block_cols, "__t"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b", "n_a", "n_b")
-            .agg(F.count(F.lit(1)).alias("__inter"))
-        )
-        jac = F.col("__inter") / (F.col("n_a") + F.col("n_b") - F.col("__inter"))
-        return (
-            inter.select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
-            .where(F.col("jaccard") >= threshold)
-        )
-    # ---- prefix-filtered path (lossless for the given threshold)
-    df_freq = base.groupBy("__t").agg(F.count(F.lit(1)).alias("__df"))
-    ranked = base.join(df_freq, "__t")
-    w_id = Window.partitionBy("id").orderBy("__df", "__t")
-    m = F.count(F.lit(1)).over(Window.partitionBy("id"))
-    # minimum overlap for Jaccard >= t is ceil(t*m) — computed with an
-    # epsilon guard: the double product overshoots exact integers
-    # (0.56 * 25 = 14.000000000000002 -> ceil 15 instead of 14), which
-    # would shorten the prefix by one and silently drop pairs whose
-    # Jaccard EQUALS the threshold (caught in review; pinned by
-    # test_token_links_prefix_filter_is_lossless's boundary case)
-    min_overlap = F.ceil(F.lit(threshold) * F.col("__m") - F.lit(1e-9))
-    prefix = (
-        ranked.withColumn("__rn", F.row_number().over(w_id))
-        .withColumn("__m", m)
-        .where(F.col("__rn") <= F.col("__m") - min_overlap + 1)
-        .select("id", "__t", *block_cols)
-    )
-    cand = (
-        prefix.withColumnRenamed("id", "id_a")
-        .join(prefix.withColumnRenamed("id", "id_b"), [*block_cols, "__t"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # exact verify against the full token sets: n_tok keeps the
-    # unfiltered size and the intersection ignores empty tokens, so
-    # the Jaccard matches the unfiltered path's arithmetic exactly
-    ne = F.filter(toks, lambda x: x != "")
     sets = df.select(
-        F.col(id_col).alias("id"), F.size(toks).alias("n_tok"), ne.alias("__set")
+        F.col(id_col).alias("id"),
+        *block_cols,
+        F.filter(toks, lambda x: x != "").alias("set"),
     )
-    j = (
-        cand.join(
-            sets.select(
-                F.col("id").alias("id_a"),
-                F.col("n_tok").alias("n_a"),
-                F.col("__set").alias("__set_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            sets.select(
-                F.col("id").alias("id_b"),
-                F.col("n_tok").alias("n_b"),
-                F.col("__set").alias("__set_b"),
-            ),
-            "id_b",
-        )
-    )
-    inter = F.size(F.array_intersect(F.col("__set_a"), F.col("__set_b")))
-    jac = inter / (F.col("n_a") + F.col("n_b") - inter)
-    return (
-        j.select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
+    return jaccard_pairs(sets, threshold, block_cols)
 
 
 def blocking_stats(df: DataFrame, block_cols: Sequence[str]) -> DataFrame:

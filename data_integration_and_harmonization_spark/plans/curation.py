@@ -87,7 +87,7 @@ def curate_annotate(
     - language:      stopword-overlap language id == ``lang``;
     - exact_dedup:   keep the minimum id per normalized-text
                      fingerprint AMONG language survivors;
-    - near_dedup:    MinHash-LSH verified pairs (md5 family, Jaccard
+    - near_dedup:    MinHash-LSH verified pairs (md5 hashes, Jaccard
                      >= ``near_threshold``) over exact survivors ->
                      connected components -> keep each cluster's
                      minimum id (the fuzzy-dedup stage every
@@ -180,7 +180,7 @@ def curate_annotate(
     ann = track(ann.persist())
     ann.count()
     # near_dedup: LSH-verified clusters over exact survivors (md5
-    # family so the oracle replays the candidate graph); a doc not in
+    # hashes so the oracle replays the candidate graph); a doc not in
     # any cluster keeps itself, a clustered doc survives iff it is the
     # cluster minimum
     from data_integration_and_harmonization_spark.operators.dedup import (
@@ -191,7 +191,6 @@ def curate_annotate(
     pairs = lsh_verified_pairs(
         ann.where(F.col(_FLAG["exact_dedup"])).select("doc_id", "text"),
         threshold=near_threshold,
-        hash_family="md5",
     )
     clusters = duplicate_clusters(pairs).select(
         F.col("id").alias("doc_id"), F.col("cluster_id").alias("__cl")

@@ -315,7 +315,6 @@ def stream_cdf_neardedup_maintenance(
     num_hashes: int = 32,
     bands: int = 8,
     gram: int = 3,
-    hash_family: str = "murmur3",
     store_partitions: int = 8,
 ) -> None:
     """The near-dup SIGNATURE store's streaming maintenance consumer —
@@ -356,7 +355,6 @@ def stream_cdf_neardedup_maintenance(
             num_hashes=num_hashes,
             bands=bands,
             gram=gram,
-            hash_family=hash_family,
             store_partitions=store_partitions,
             tag=f"cdf{batch_id:06d}",
         )

@@ -260,6 +260,23 @@ def read_any(
     raise ValueError(f"unsupported source format: {ext!r} ({path})")
 
 
+def _wholetext(spark: SparkSession, path: str, glob: str) -> DataFrame:
+    """(content, _src_file): one row per file — the whole text and its
+    basename — for a file, a pattern, or every ``glob`` match directly
+    inside a directory. A directory is read with ``pathGlobFilter``
+    (see :func:`..functions.arrow.scan_files` for why not a glob
+    path)."""
+    from pyspark.sql import functions as F
+
+    reader = spark.read
+    if os.path.isdir(path):
+        reader = reader.option("pathGlobFilter", glob)
+    return reader.text(path, wholetext=True).select(
+        F.col("value").alias("content"),
+        F.element_at(F.split(F.input_file_name(), "/"), -1).alias("_src_file"),
+    )
+
+
 def read_srt(spark: SparkSession, path: str) -> DataFrame:
     """SubRip subtitle ingestion — the transcript side of a video
     corpus (every curation pipeline that touches video wants the
@@ -281,14 +298,7 @@ def read_srt(spark: SparkSession, path: str) -> DataFrame:
     front-door reader)."""
     from pyspark.sql import functions as F
 
-    pattern = os.path.join(path, "*.srt") if os.path.isdir(path) else path
-    raw = (
-        spark.read.text(pattern, wholetext=True)
-        .select(
-            F.col("value").alias("content"),
-            F.element_at(F.split(F.input_file_name(), "/"), -1).alias("_src_file"),
-        )
-    )
+    raw = _wholetext(spark, path, "*.srt")
     ts = r"(\d{2}):(\d{2}):(\d{2})[,.](\d{3})"
 
     def _ms(prefix: str) -> F.Column:
@@ -350,14 +360,7 @@ def read_vtt(spark: SparkSession, path: str) -> DataFrame:
     yield NULL times via ``try_cast`` instead of an ANSI cast error."""
     from pyspark.sql import functions as F
 
-    pattern = os.path.join(path, "*.vtt") if os.path.isdir(path) else path
-    raw = (
-        spark.read.text(pattern, wholetext=True)
-        .select(
-            F.col("value").alias("content"),
-            F.element_at(F.split(F.input_file_name(), "/"), -1).alias("_src_file"),
-        )
-    )
+    raw = _wholetext(spark, path, "*.vtt")
     ts = r"(?:(\d+):)?(\d{2}):(\d{2})\.(\d{3})"
 
     def _ms(prefix: str) -> F.Column:
@@ -441,14 +444,7 @@ def read_ass(spark: SparkSession, path: str) -> DataFrame:
     keeps torn timecodes NULL instead of failing an ANSI session."""
     from pyspark.sql import functions as F
 
-    pattern = os.path.join(path, "*.ass") if os.path.isdir(path) else path
-    raw = (
-        spark.read.text(pattern, wholetext=True)
-        .select(
-            F.col("value").alias("content"),
-            F.element_at(F.split(F.input_file_name(), "/"), -1).alias("_src_file"),
-        )
-    )
+    raw = _wholetext(spark, path, "*.ass")
     lines = raw.select(
         "_src_file",
         F.posexplode(F.split(F.regexp_replace("content", "\r", ""), "\n")).alias(

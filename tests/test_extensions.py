@@ -62,14 +62,13 @@ def test_simhash_near_dups_close(spark):
 
 def test_simhash_pairs_pigeonhole_and_filter(spark):
     # any pair within hamming < bands is guaranteed a shared band, so
-    # the identical-token pair (1,2) must surface at every family
-    for fam in ("murmur3", "md5"):
-        pairs = {
-            frozenset((r["id_a"], r["id_b"])): r["hamming"]
-            for r in DD.simhash_pairs(_docs(spark), max_hamming=3, hash_family=fam).collect()
-        }
-        assert pairs[frozenset((1, 2))] == 0
-        assert all(h <= 3 for h in pairs.values())
+    # the identical-token pair (1,2) must surface
+    pairs = {
+        frozenset((r["id_a"], r["id_b"])): r["hamming"]
+        for r in DD.simhash_pairs(_docs(spark), max_hamming=3).collect()
+    }
+    assert pairs[frozenset((1, 2))] == 0
+    assert all(h <= 3 for h in pairs.values())
 
 
 def test_duplicate_clusters_chain_and_island(spark):
@@ -835,7 +834,7 @@ def test_near_dedup_store_layout_prunes(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
-    incremental_near_dedup(b1, store, threshold=0.5, hash_family="md5")
+    incremental_near_dedup(b1, store, threshold=0.5)
     (root,) = complete_batches(spark, store)
     assert os.path.dirname(root) == store
     assert os.path.isdir(os.path.join(root, "sigs"))
@@ -859,7 +858,7 @@ def test_near_dedup_store_layout_prunes(spark, tmp_path):
         [(100, " ".join(f"w7x{j}" for j in range(20)) + " tail")],
         "doc_id long, text string",
     )
-    out = incremental_near_dedup(b2, store, threshold=0.5, hash_family="md5")
+    out = incremental_near_dedup(b2, store, threshold=0.5)
     assert out.count() == 0  # near-dups admitted doc 7 at 0.5
 
     # quantitative pruning proof, same read shape the operator uses:
@@ -908,9 +907,9 @@ def test_near_dedup_store_compaction(spark, tmp_path):
         [(i, " ".join(f"w{i}x{j}" for j in range(20))) for i in range(lo, hi)],
         "doc_id long, text string",
     )
-    incremental_near_dedup(mk(0, 10), store, threshold=0.5, hash_family="md5")
-    incremental_near_dedup(mk(10, 20), store, threshold=0.5, hash_family="md5")
-    incremental_near_dedup(mk(20, 30), store, threshold=0.5, hash_family="md5")
+    incremental_near_dedup(mk(0, 10), store, threshold=0.5)
+    incremental_near_dedup(mk(10, 20), store, threshold=0.5)
+    incremental_near_dedup(mk(20, 30), store, threshold=0.5)
     assert len(complete_batches(spark, store)) == 3
 
     stats = compact_near_dedup_store(spark, store)
@@ -923,7 +922,7 @@ def test_near_dedup_store_compaction(spark, tmp_path):
     assert os.path.isdir(os.path.join(stats["out_dir"], "index"))
 
     # replaying an admitted batch against the compacted store: no-op
-    out = incremental_near_dedup(mk(10, 20), store, threshold=0.5, hash_family="md5")
+    out = incremental_near_dedup(mk(10, 20), store, threshold=0.5)
     assert out.count() == 0
     # idempotence guard: a single-batch store does not re-compact
     assert compact_near_dedup_store(spark, store)["batches_compacted"] == 0

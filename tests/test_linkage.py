@@ -215,10 +215,30 @@ def test_token_links_edges_feed_clusters(spark):
     assert got == {1: 1, 2: 1}
 
 
+def _brute_token_links(rows, threshold):
+    """Python brute force of token_links over (id, name, country)
+    rows: every same-country pair, normalized distinct name tokens."""
+    import itertools
+    import re
+
+    from tests.test_setsim import brute_jaccard_pairs
+
+    sets = {
+        i: set(re.sub("[^a-z0-9]+", " ", name.lower()).split()) for i, name, _ in rows
+    }
+    country = {i: c for i, _, c in rows}
+    pairs = [
+        (a, b)
+        for a, b in itertools.combinations(sorted(sets), 2)
+        if country[a] == country[b]
+    ]
+    return brute_jaccard_pairs(sets, threshold, pairs)
+
+
 def test_token_links_prefix_filter_is_lossless(spark):
     """The AllPairs/PPJoin prefix filter prunes candidate GENERATION
-    only — for any threshold the result must equal the unfiltered
-    path pair-for-pair (including jaccard values). Names engineered
+    only — for any threshold the result must equal a Python brute
+    force pair-for-pair (including jaccard values). Names engineered
     with a block-wide hot suffix token ('inc') so the prefix path
     actually prunes something."""
     from data_integration_and_harmonization_spark.operators.linkage import token_links
@@ -237,12 +257,7 @@ def test_token_links_prefix_filter_is_lossless(spark):
             (r.id_a, r.id_b): r.jaccard
             for r in token_links(df, "id", "name", ["country"], thr).collect()
         }
-        slow = {
-            (r.id_a, r.id_b): r.jaccard
-            for r in token_links(
-                df, "id", "name", ["country"], thr, prefix_filter=False
-            ).collect()
-        }
+        slow = _brute_token_links(rows, thr)
         assert fast == slow, f"threshold {thr}: {fast} != {slow}"
     assert (1, 2) in fast and (3, 4) in fast
 
@@ -253,7 +268,7 @@ def test_token_links_prefix_boundary_threshold(spark):
     the threshold. 0.56 * 25 = 14.000000000000002 in doubles; a naive
     ceil makes the required overlap 15 and shortens A's prefix by one,
     silently dropping the pair. The epsilon-guarded ceil must keep the
-    prefix path identical to the unfiltered path here."""
+    prefix path identical to a Python brute force here."""
     from data_integration_and_harmonization_spark.operators.linkage import token_links
 
     a = " ".join(f"t{i:02d}" for i in range(1, 26))    # t01..t25
@@ -265,10 +280,5 @@ def test_token_links_prefix_boundary_threshold(spark):
         (r.id_a, r.id_b): r.jaccard
         for r in token_links(df, "id", "name", ["country"], 0.56).collect()
     }
-    slow = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in token_links(
-            df, "id", "name", ["country"], 0.56, prefix_filter=False
-        ).collect()
-    }
+    slow = _brute_token_links([(1, a, "US"), (2, b, "US")], 0.56)
     assert fast == slow == {(1, 2): 0.56}

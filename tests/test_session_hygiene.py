@@ -34,6 +34,24 @@ def test_no_observe_in_engine_source():
     )
 
 
+def test_side_state_goes_through_scratch_dir():
+    """Query side state (stores, roundtrip files, saved models) lives
+    under ``caching.scratch_dir``, which is removed at exit; a bare
+    ``mkdtemp(`` anywhere else in the engine leaks a directory per
+    call."""
+    pkg = os.path.join(ROOT, "data_integration_and_harmonization_spark")
+    files = [os.path.join(ROOT, "__spark_entry__.py")] + [
+        os.path.join(d, f) for d, _, fs in os.walk(pkg) for f in fs if f.endswith(".py")
+    ]
+    offenders = [
+        os.path.relpath(p, ROOT)
+        for p in files
+        if "mkdtemp(" in open(p).read()
+        and os.path.relpath(p, pkg) != os.path.join("functions", "caching.py")
+    ]
+    assert offenders == []
+
+
 def test_rdd_closure_alive_after_planning_catalog(spark, sf_dir):
     """Plan (don't execute) a representative slice of the catalog —
     including the integration-funnel query where the r9 incident

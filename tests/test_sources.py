@@ -1286,6 +1286,25 @@ def test_read_any_pdf_corpus(spark, tmp_path):
     assert read_any(spark, str(d / "a.pdf")).first()["text"] == "alpha beta"
 
 
+def test_subtitle_readers_take_only_top_level_matches(spark, tmp_path):
+    """A directory read returns only the matching files directly inside
+    it: not other extensions, not files in subdirectories."""
+    cue = {
+        "srt": "1\n00:00:01,000 --> 00:00:02,000\n{}\n\n",
+        "vtt": "WEBVTT\n\n00:01.000 --> 00:02.000\n{}\n\n",
+        "ass": "[Events]\nDialogue: 0,0:00:01.00,0:00:02.00,Default,,0,0,0,,{}\n",
+    }
+    readers = {"srt": R.read_srt, "vtt": R.read_vtt, "ass": R.read_ass}
+    for ext, fmt in cue.items():
+        d = tmp_path / ext
+        (d / "sub").mkdir(parents=True)
+        (d / f"a.{ext}").write_text(fmt.format("top"))
+        (d / "b.txt").write_text(fmt.format("other"))
+        (d / "sub" / f"c.{ext}").write_text(fmt.format("nested"))
+        rows = [(r["_src_file"], r["text"]) for r in readers[ext](spark, str(d)).collect()]
+        assert rows == [(f"a.{ext}", "top")], ext
+
+
 def test_read_srt_transcript_corpus(spark, tmp_path):
     """read_srt / read_any(fmt='srt'): all-JVM SubRip parse — cue
     rows with ms-exact timecodes, multi-line text joined, comma AND
