@@ -633,16 +633,16 @@ def q_feat_zscore(spark: SparkSession, sf: str) -> DataFrame:
     exact interpolated values of r_qty/r_price); above the gate the
     r_* parity columns are NULL on BOTH sides — exact percentile's
     single-reducer value->count merge never executes at scale, the
-    production robust fit there is the sketch
-    (FE.robust_scale_fit_auto), and ra_ok carries the sketch's
+    robust fit there is this pass's own fused percentile_approx
+    sketch (the qa_* quantiles), and ra_ok carries the sketch's
     rank-contract correctness at every scale."""
     li = spark.read.parquet(f"{sf}/lineitem.parquet").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
         "l_discount", "l_returnflag",
     )
-    # ONE fit pass for all three scaler families (the separate
-    # *_fit helpers each scan once; at bench this tripled the scan +
-    # paid two standalone percentile sorts — 0.4 s -> 5.3 s at sf0.1,
+    # ONE fit pass for all three scaler families (a separate fit per
+    # family scans once each; at bench that tripled the scan + paid
+    # two standalone percentile sorts — 0.4 s -> 5.3 s at sf0.1,
     # fixed by fusing the aggregates into a single job)
     stats = li.agg(
         *[
@@ -723,8 +723,8 @@ def q_feat_zscore(spark: SparkSession, sf: str) -> DataFrame:
     }
     # r_* are the EXACT-fit parity columns: present at validation
     # scale (where the oracle's quantile_cont pins them value for
-    # value), NULL above the gate — the production robust fit at
-    # scale is the GK sketch (FE.robust_scale_fit_auto), whose
+    # value), NULL above the gate — the robust fit at scale is the
+    # fused percentile_approx sketch above (qa_*), whose
     # correctness the ra_ok rank-contract verdict carries at every
     # scale. Emitting sketch-scaled values here instead would make
     # the column mean different things at different scales AND be
@@ -741,8 +741,8 @@ def q_feat_zscore(spark: SparkSession, sf: str) -> DataFrame:
 
     def sc(stats, c, alias):
         # (x - center) / scale with each family's zero-scale guard —
-        # the same arithmetic the *_transform functions apply, inlined
-        # so all three scalers ride ONE projection (no joins)
+        # FE.zscore_transform's arithmetic, inlined so all three
+        # scalers ride ONE projection (no joins)
         center, scale = stats[c]
         denom = scale if (scale is not None and scale > 0.0) else 1.0
         return F.round(
@@ -1148,11 +1148,11 @@ def _rt_zver(ctx: dict[str, Any]) -> DataFrame:
         "__skip",
         F.lit(skip_ok).cast("long"),
     )
-    # '__delete' row: targeted row deletion (writers.delete_rows, the
-    # GDPR rewrite): DELETE the same l_orderkey range from the
+    # '__delete' row: targeted row deletion (MF.delete_rows_versioned,
+    # the GDPR rewrite): DELETE the same l_orderkey range from the
     # z-ordered copy — the clustered layout confines matches to a
     # subset of the 8 files, so the rewrite touches only those;
-    # untouched files carry over by copy. The read-back aggregate is
+    # untouched files are referenced in place. The read-back aggregate is
     # oracle-replayed with the inverted predicate (a hash match proves
     # exactly the targeted rows vanished); sum_nkey carries the
     # structural verdict (1 iff affected file count < total, i.e. the

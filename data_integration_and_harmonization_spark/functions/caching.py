@@ -27,10 +27,6 @@ def track(df: DataFrame) -> DataFrame:
     return df
 
 
-def tracked_count() -> int:
-    return len(_TRACKED)
-
-
 def release_all() -> int:
     """Unpersist every tracked frame (non-blocking). Returns the number
     of frames released.

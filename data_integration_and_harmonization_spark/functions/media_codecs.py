@@ -590,8 +590,6 @@ def encode_wav(rate: int, samples: np.ndarray) -> bytes:
 # arithmetic coding, and 12-bit precision raise ValueError (the PIL
 # rescue path covers them when PIL exists).
 
-JPEG_MAGIC = b"\xff\xd8\xff"
-
 # zigzag scan order (T.81 figure A.6): index i holds the raster
 # position of the i-th zigzag coefficient
 _ZIGZAG = np.array([
@@ -1703,87 +1701,6 @@ def _id3v2_size(payload: bytes) -> int:
     if payload[5] & 0x10:
         size += 10  # footer flag (ID3v2.4 §3.1): footer is NOT counted
     return size
-
-
-_ID3_ENCODINGS = {0: "latin-1", 1: "utf-16", 2: "utf-16-be", 3: "utf-8"}
-
-
-def parse_id3_tags(payload: bytes) -> dict:
-    """Text frames of a leading ID3v2.3/2.4 tag as
-    ``{frame_id: text}`` (e.g. TIT2 title, TPE1 artist, TALB album,
-    TDRC/TYER date) — the provenance metadata an audio-corpus triage
-    pass wants next to the codec envelope. Text encodings per the
-    spec's first content byte (0 latin-1, 1 UTF-16 w/ BOM,
-    2 UTF-16BE, 3 UTF-8); NUL terminators and v2.4 multi-value
-    separators surface as '\\x1f'-joined values. Empty dict when no
-    tag or no text frames; torn frames end the walk with what
-    parsed."""
-    out: dict[str, str] = {}
-    size = _id3v2_size(payload)
-    if size == 0:
-        return out
-    data = bytes(payload[:size])
-    size = len(data)  # a truncated payload undercuts the declared size
-    ver = data[3]
-    syncsafe_frames = ver >= 4  # v2.4 frame sizes are syncsafe
-    pos = 10
-    if data[5] & 0x40:  # extended header present: skip by its size
-        if pos + 4 > size:
-            return out
-        es = int.from_bytes(data[pos : pos + 4], "big")
-        pos += es if ver >= 4 else es + 4
-    while pos + 10 <= size:
-        fid = data[pos : pos + 4]
-        if not fid.isalnum():
-            break  # padding or torn frame
-        raw = data[pos + 4 : pos + 8]
-        if syncsafe_frames:
-            if any(b & 0x80 for b in raw):
-                break
-            flen = (raw[0] << 21) | (raw[1] << 14) | (raw[2] << 7) | raw[3]
-        else:
-            flen = int.from_bytes(raw, "big")
-        body = data[pos + 10 : pos + 10 + flen]
-        if len(body) < flen:
-            break
-        pos += 10 + flen
-        if not fid.startswith(b"T") or not body:
-            continue
-        enc = _ID3_ENCODINGS.get(body[0])
-        if enc is None:
-            continue
-        try:
-            text = body[1:].decode(enc)
-        except (UnicodeDecodeError, ValueError):
-            continue
-        vals = [v for v in text.split("\x00") if v]
-        if vals:
-            out[fid.decode("ascii")] = "\x1f".join(vals)
-    return out
-
-
-def encode_id3_tags(tags: dict[str, str], version: int = 4) -> bytes:
-    """Minimal spec-shaped ID3v2.3/2.4 tag holding UTF-8 text frames
-    — prepend to an MP3 fixture to exercise :func:`parse_id3_tags`
-    (and the tag-skip arithmetic every frame walker shares)."""
-
-    def syncsafe(v: int) -> bytes:
-        return bytes(
-            [(v >> 21) & 0x7F, (v >> 14) & 0x7F, (v >> 7) & 0x7F, v & 0x7F]
-        )
-
-    body = bytearray()
-    for fid, text in tags.items():
-        payload = b"\x03" + text.encode("utf-8")
-        size = (
-            syncsafe(len(payload))
-            if version >= 4
-            else len(payload).to_bytes(4, "big")
-        )
-        body += fid.encode("ascii") + size + b"\x00\x00" + payload
-    return (
-        b"ID3" + bytes([version, 0, 0]) + syncsafe(len(body)) + bytes(body)
-    )
 
 
 def _mp3_frame(payload: bytes, pos: int) -> tuple[int, int, int, int, int] | None:

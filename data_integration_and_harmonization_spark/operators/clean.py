@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -239,7 +239,6 @@ def _repair_plan(
     order_cols: str | Sequence[str],
     cols: Sequence[str],
     num_partitions: int | None,
-    need_next: bool,
     pre_partitioned: bool = False,
 ):
     """Shared machinery for interpolate/ffill, fused to ONE range
@@ -288,12 +287,9 @@ def _repair_plan(
         proj += [
             F.last(val, ignorenulls=True).over(fwd).alias(f"__pv_{c}"),
             F.last(rnv, ignorenulls=True).over(fwd).alias(f"__pp_{c}"),
+            F.last(val, ignorenulls=True).over(bwd).alias(f"__nv_{c}"),
+            F.last(rnv, ignorenulls=True).over(bwd).alias(f"__np_{c}"),
         ]
-        if need_next:
-            proj += [
-                F.last(val, ignorenulls=True).over(bwd).alias(f"__nv_{c}"),
-                F.last(rnv, ignorenulls=True).over(bwd).alias(f"__np_{c}"),
-            ]
     part = part.select(*proj)
     # Pin one physical partitioning: repartitionByRange re-samples range
     # boundaries on EVERY job, and the edge-collect below plus the
@@ -335,56 +331,51 @@ def _repair_plan(
                 if edges[q][f"last_{c}"] is not None:
                     prev, prev_q = edges[q][f"last_{c}"], q
                     break
-            if need_next:
-                for q in pids[i + 1 :]:
-                    if edges[q][f"first_{c}"] is not None:
-                        next_, next_q = edges[q][f"first_{c}"], q
-                        break
+            for q in pids[i + 1 :]:
+                if edges[q][f"first_{c}"] is not None:
+                    next_, next_q = edges[q][f"first_{c}"], q
+                    break
             row += [
                 glob(prev_q, prev) if prev else None,
                 float(prev["v"]) if prev else None,
+                glob(next_q, next_) if next_ else None,
+                float(next_["v"]) if next_ else None,
             ]
-            if need_next:
-                row += [
-                    glob(next_q, next_) if next_ else None,
-                    float(next_["v"]) if next_ else None,
-                ]
         carry_rows.append(tuple(row))
 
     fields = [f"{PID} int", "__off long"]
     for c in cols:
-        fields += [f"__cpp_{c} double", f"__cpv_{c} double"]
-        if need_next:
-            fields += [f"__cnp_{c} double", f"__cnv_{c} double"]
+        fields += [
+            f"__cpp_{c} double", f"__cpv_{c} double", f"__cnp_{c} double", f"__cnv_{c} double"
+        ]
     carry = spark.createDataFrame(carry_rows, ", ".join(fields))
     return part.join(F.broadcast(carry), PID), dtypes
 
 
-def ffill(
-    df: DataFrame,
-    order_col: str | Sequence[str],
-    cols: Sequence[str] | None = None,
-    num_partitions: int | None = None,
-    pre_partitioned: bool = False,
-) -> DataFrame:
-    """C4 (ref:31): forward fill over the global ``order_col`` order.
+def _repaired(c: str, dtype: str) -> tuple[Column, Column]:
+    """(interpolated, forward-filled) ``c`` over the valid-value
+    anchors :func:`_repair_plan` staged.
 
-    Nulls take the last prior valid value; leading nulls stay null
-    (pandas ``ffill`` semantics). Distributed via boundary exchange.
+    Positions are global and 0-based: partition-local anchors are
+    shifted by the partition offset, carries from other partitions are
+    already global. A valid value passes through; otherwise the
+    interpolation needs both neighbors and clamps to whichever exists,
+    and the fill takes the previous one.
     """
-    cols = list(cols if cols is not None else numeric_cols(df))
-    joined, dtypes = _repair_plan(
-        df, order_col, cols, num_partitions, need_next=False, pre_partitioned=pre_partitioned
+    value = F.col(c).cast("double")
+    pos = (F.col("__off") + F.col(RN) - 1).cast("double")
+    pv = F.coalesce(F.col(f"__pv_{c}"), F.col(f"__cpv_{c}"))
+    pp = F.coalesce(F.col("__off") + F.col(f"__pp_{c}") - 1, F.col(f"__cpp_{c}"))
+    nv = F.coalesce(F.col(f"__nv_{c}"), F.col(f"__cnv_{c}"))
+    np_ = F.coalesce(F.col("__off") + F.col(f"__np_{c}") - 1, F.col(f"__cnp_{c}"))
+    interp = pv + (nv - pv) * (pos - pp) / (np_ - pp)
+    is_valid = _valid(c, dtype)
+    return (
+        F.when(is_valid, value)
+        .when(pv.isNotNull() & nv.isNotNull(), interp)
+        .otherwise(F.coalesce(pv, nv)),
+        F.when(is_valid, value).otherwise(pv),
     )
-    out_cols = []
-    for c in df.columns:
-        if c in cols:
-            prev_v = F.coalesce(F.col(f"__pv_{c}"), F.col(f"__cpv_{c}"))
-            filled = F.when(_valid(c, dtypes[c]), F.col(c).cast("double")).otherwise(prev_v)
-            out_cols.append(filled.alias(c))
-        else:
-            out_cols.append(F.col(c))
-    return joined.select(*out_cols)
 
 
 def interpolate_linear(
@@ -408,28 +399,11 @@ def interpolate_linear(
     """
     cols = list(cols if cols is not None else numeric_cols(df))
     joined, dtypes = _repair_plan(
-        df, order_col, cols, num_partitions, need_next=True, pre_partitioned=pre_partitioned
+        df, order_col, cols, num_partitions, pre_partitioned=pre_partitioned
     )
-    out_cols = []
-    # global 0-based position of the current row / partition-local
-    # anchors (carries from other partitions are already global)
-    pos = (F.col("__off") + F.col(RN) - 1).cast("double")
-    for c in df.columns:
-        if c in cols:
-            pv = F.coalesce(F.col(f"__pv_{c}"), F.col(f"__cpv_{c}"))
-            pp = F.coalesce(F.col("__off") + F.col(f"__pp_{c}") - 1, F.col(f"__cpp_{c}"))
-            nv = F.coalesce(F.col(f"__nv_{c}"), F.col(f"__cnv_{c}"))
-            np_ = F.coalesce(F.col("__off") + F.col(f"__np_{c}") - 1, F.col(f"__cnp_{c}"))
-            interp = pv + (nv - pv) * (pos - pp) / (np_ - pp)
-            repaired = (
-                F.when(_valid(c, dtypes[c]), F.col(c).cast("double"))
-                .when(pv.isNotNull() & nv.isNotNull(), interp)
-                .otherwise(F.coalesce(pv, nv))
-            )
-            out_cols.append(repaired.alias(c))
-        else:
-            out_cols.append(F.col(c))
-    return joined.select(*out_cols)
+    return joined.select(
+        *[_repaired(c, dtypes[c])[0].alias(c) if c in cols else F.col(c) for c in df.columns]
+    )
 
 
 def interpolate_and_ffill(
@@ -445,33 +419,21 @@ def interpolate_and_ffill(
     method='linear', limit_direction='both')`` and ``ffill`` derive
     from the same prev/next valid-anchor windows, so computing them
     together costs one range shuffle + one boundary exchange total —
-    half of running :func:`interpolate_linear` then :func:`ffill`.
+    half of running two separate repair passes. The ffill column keeps
+    pandas semantics: nulls take the last prior valid value, leading
+    nulls stay null.
 
     Adds ``<c><interp_suffix>`` and ``<c><ffill_suffix>`` for each
     repaired column; the original columns pass through unchanged.
     """
     cols = list(cols if cols is not None else numeric_cols(df))
     joined, dtypes = _repair_plan(
-        df, order_col, cols, num_partitions, need_next=True, pre_partitioned=pre_partitioned
+        df, order_col, cols, num_partitions, pre_partitioned=pre_partitioned
     )
-    pos = (F.col("__off") + F.col(RN) - 1).cast("double")
     out_cols = [F.col(c) for c in df.columns]
     for c in cols:
-        valid = _valid(c, dtypes[c])
-        pv = F.coalesce(F.col(f"__pv_{c}"), F.col(f"__cpv_{c}"))
-        pp = F.coalesce(F.col("__off") + F.col(f"__pp_{c}") - 1, F.col(f"__cpp_{c}"))
-        nv = F.coalesce(F.col(f"__nv_{c}"), F.col(f"__cnv_{c}"))
-        np_ = F.coalesce(F.col("__off") + F.col(f"__np_{c}") - 1, F.col(f"__cnp_{c}"))
-        interp = pv + (nv - pv) * (pos - pp) / (np_ - pp)
-        out_cols.append(
-            F.when(valid, F.col(c).cast("double"))
-            .when(pv.isNotNull() & nv.isNotNull(), interp)
-            .otherwise(F.coalesce(pv, nv))
-            .alias(f"{c}{interp_suffix}")
-        )
-        out_cols.append(
-            F.when(valid, F.col(c).cast("double")).otherwise(pv).alias(f"{c}{ffill_suffix}")
-        )
+        interp, filled = _repaired(c, dtypes[c])
+        out_cols += [interp.alias(f"{c}{interp_suffix}"), filled.alias(f"{c}{ffill_suffix}")]
     return joined.select(*out_cols)
 
 
@@ -493,6 +455,6 @@ def process_data(
     # ref:31's ffill is provably a no-op after both-direction
     # interpolation (any column with >=1 valid value is fully repaired;
     # all-null columns are un-fillable and dropped next), so the
-    # pipeline skips its extra shuffle. ffill() remains available as a
-    # standalone operator with exact pandas semantics.
+    # pipeline skips its extra shuffle. interpolate_and_ffill's ffill
+    # column keeps exact pandas ffill semantics where a caller needs it.
     return drop_all_null_cols(out)

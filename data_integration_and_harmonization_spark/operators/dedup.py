@@ -323,8 +323,8 @@ def hamming_pairs(
 ) -> DataFrame:
     """Banded-Hamming self-join over any (id, sig) signature table —
     the shared candidate machinery under text SimHash
-    (:func:`simhash_pairs`) and image perceptual-hash near-dup
-    (:func:`phash_pairs`): split each signature into ``bands``
+    (:func:`simhash_pairs`) and media perceptual-hash near-dup (over
+    :func:`media_signature_table`): split each signature into ``bands``
     contiguous bit-bands, candidates share at least one exact band
     (pigeonhole: any pair within Hamming distance < ``bands`` is
     guaranteed a matching band), exact ``bit_count(xor)`` filter after.
@@ -362,44 +362,13 @@ def hamming_pairs(
     )
 
 
-def image_phash_table(
-    media: DataFrame, id_col: str = "media_id", payload_col: str = "payload"
-) -> DataFrame:
-    """(id, sig) perceptual-hash signatures over an image corpus: ONE
-    Arrow ``mapInPandas`` stage decodes each payload with the engine's
-    from-spec codecs (PNG/JPEG/first-GIF-frame, PIL rescue for exotic
-    variants) and emits the 64-bit DCT pHash
-    (:func:`..functions.media_codecs.phash64` — public pHash recipe:
-    BT.601 luma, 32x32 nearest resample, 8x8 low-frequency DCT block,
-    median threshold). Undecodable payloads emit sig NULL so a
-    curation pass can SEE them; the pair join drops them.
-
-    Scale shape: the payload bytes cross into Python once, batch-wise,
-    and only (id, 8-byte hash) comes back — the hash table is ~1/10^4
-    the corpus size, and everything downstream (banding, self-join,
-    clustering) is JVM-side on longs. This is the standard web-corpus
-    image-dedup recipe: re-encodes, quality shifts and minor touch-ups
-    land within a few bits (pinned by the recompression test), while
-    distinct content sits ~32 bits apart."""
-    from data_integration_and_harmonization_spark.functions.media_codecs import (
-        phash64_of_payload,
-    )
-
-    src = media.select(
-        F.col(id_col).cast("long").alias("id"), F.col(payload_col).alias("payload")
-    )
-    return payload_stage(
-        src, ["id"], lambda p: [(phash64_of_payload(p),)], "id long, sig long"
-    )
-
-
 def media_signature_table(
     media: DataFrame, id_col: str = "media_id", payload_col: str = "payload"
 ) -> DataFrame:
     """(id, kind, sig) perceptual signatures over a MIXED media corpus
     in ONE Arrow stage, dispatched by sniffed format: still images
     (PNG/JPEG/single-frame GIF) hash with the DCT pHash
-    (:func:`image_phash_table`'s kernel), WAV audio with the spectral
+    (``media_codecs.phash64``), WAV audio with the spectral
     band-energy fingerprint (``media_codecs.audio_simhash64``), and
     VIDEO (Y4M / animated GIF) with the temporal-average pHash
     (``media_codecs.video_phash64``). kind marks the modality so pair
@@ -421,28 +390,6 @@ def media_signature_table(
     # count (animated -> video hash, single-frame -> image hash)
     return payload_stage(
         src, ["id"], lambda p: [MC.media_signature(p)], "id long, kind string, sig long"
-    )
-
-
-def phash_pairs(
-    media: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    max_hamming: int = 3,
-    bands: int = 4,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Image near-duplicate pairs: :func:`image_phash_table` then the
-    shared banded-Hamming self-join (:func:`hamming_pairs`). With the
-    default 4 bands over 64 bits, recall is EXACT for
-    ``max_hamming <= 3`` (pigeonhole), so the output is the true
-    near-dup pair set, not an approximation — feed it to
-    :func:`duplicate_clusters` for keep-one-per-cluster decisions.
-    ``max_bucket``: the hot-bucket guard, passed through to
-    :func:`hamming_pairs` (see there for the recall trade)."""
-    sig = image_phash_table(media, id_col, payload_col)
-    return hamming_pairs(
-        sig, bits=64, bands=bands, max_hamming=max_hamming, max_bucket=max_bucket
     )
 
 
@@ -1390,7 +1337,7 @@ def embedding_near_dup_pairs(
     )
 
     # Per-vector norm computed ONCE before the self-join (r14, guide
-    # §1.2): cosine(l.v, r.v) spelled per pair re-runs BOTH norms —
+    # §1.2): a cosine spelled per pair re-runs BOTH norms —
     # interpreted O(d) HOF aggregates — once per candidate pair; the
     # exact same sqrt values staged per vector ride the (one) bucket
     # exchange as 8 bytes/row and the per-pair work drops to the dot
@@ -1514,8 +1461,8 @@ def semantic_dedup(
     from data_integration_and_harmonization_spark.functions.caching import track
 
     # per-vector norm staged into the PERSISTED assignment (r14, guide
-    # §1.2): the in-cell join evaluated cosine(l.v, r.v) per candidate
-    # pair, re-running both interpreted O(d) norm aggregates per pair;
+    # §1.2): the in-cell join evaluated a cosine per candidate pair,
+    # re-running both interpreted O(d) norm aggregates per pair;
     # cached once per vector, the per-pair work drops to the dot
     # product. Same expression tree and order — bit-identical cosines.
     assigned = track(

@@ -105,48 +105,6 @@ def rolling_agg(events: DataFrame, width_s: int = 3600, key: str = "user_id") ->
     )
 
 
-def rolling_anomalies(
-    events: DataFrame,
-    width_s: int = 3600,
-    z: float = 3.0,
-    min_n: int = 5,
-    key: str = "user_id",
-) -> DataFrame:
-    """Rolling z-score anomaly counts: an event is anomalous when its
-    value exceeds ``mean + z*std`` of its key's trailing window
-    EXCLUDING the current row (frame ``[ts - width, ts)`` — a spike
-    inside its own baseline inflates the std enough to mask itself;
-    the strictly-preceding frame is the standard fix). Baselines
-    thinner than ``min_n`` events never flag. Returns per-event_type
-    anomaly counts.
-
-    The threshold is rounded to 6 decimals BEFORE the comparison so an
-    external oracle computing the same window reproduces the exact
-    flag set (both engines compare the raw value against an identical
-    rounded threshold, rather than two independently-accumulated
-    doubles). The -1 upper bound is exact: the ordering key is integer
-    microseconds, so "strictly before" is "at least 1 micro earlier",
-    and identical-timestamp peers are excluded in both engines."""
-    w = (
-        Window.partitionBy(key)
-        .orderBy(_event_micros())
-        .rangeBetween(-width_s * 1_000_000, -1)
-    )
-    flagged = events.select(
-        "event_type",
-        "value",
-        F.count(F.lit(1)).over(w).alias("n_prev"),
-        F.round(F.avg("value").over(w), 6).alias("m"),
-        F.stddev_samp("value").over(w).alias("s"),
-    ).where(
-        (F.col("n_prev") >= min_n)
-        & (F.col("value") > F.round(F.col("m") + F.lit(z) * F.col("s"), 6))
-    )
-    return flagged.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_anomalies")
-    )
-
-
 def resample_ffill(events: DataFrame, key: str = "event_type") -> DataFrame:
     """Resample to a regular 1-hour grid per key, gap-filled: every key
     gets a contiguous hourly spine from its first to its last event;
@@ -202,7 +160,7 @@ def bucketed_anomalies(
     """Anomaly counts against a BUCKETED baseline: an event is
     anomalous when its value exceeds ``mean + z*std`` of its key's
     PREVIOUS bucket (day by default). This is the linear-scale form of
-    :func:`rolling_anomalies` — Spark evaluates sliding range frames
+    a trailing-window z-score — Spark evaluates sliding range frames
     without retraction (SlidingWindowFunctionFrame re-aggregates the
     frame per row, O(n*w); the 24h-window leg cost 12 s at sf0.1 —
     measured, see PLANS.md), while this is one map-side-combinable

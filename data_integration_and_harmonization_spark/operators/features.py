@@ -28,7 +28,7 @@ from data_integration_and_harmonization_spark.operators.clean import numeric_col
 
 NULL_TOKEN = "nan"  # ref:50 stringifies before encoding: NaN -> "nan"
 
-# Scale gate for the exact-percentile robust fit: Spark's exact
+# Scale gate for ``q_feat_zscore``'s exact-percentile robust fit: Spark's exact
 # `percentile` aggregate keeps a value->count map per partial and
 # merges/sorts them on ONE reducer, so its cost is n-proportional for
 # continuous columns (the worst 10x-probe growth in the catalog before
@@ -66,163 +66,6 @@ def zscore_transform(df: DataFrame, stats: dict[str, tuple[float, float]]) -> Da
 def zscore(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     """F1 end-to-end: fit + transform (ref:41-43)."""
     return zscore_transform(df, zscore_fit(df, cols))
-
-
-def robust_scale(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    """sklearn ``RobustScaler`` parity: (x - median) / (p75 - p25),
-    with EXACT linearly-interpolated percentiles (Spark's ``percentile``
-    aggregate == numpy's default interpolation == DuckDB
-    ``quantile_cont``) and the zero-IQR guard (center only, scale 1 —
-    sklearn maps a zero denominator to 1.0). The robust companion to
-    :func:`zscore` for heavy-tailed features where mean/std are
-    outlier-dominated.
-
-    Fit is ONE aggregation pass producing 3 scalars per column
-    (bounded driver traffic); the transform is a broadcast of those
-    literals into a narrow projection — identical scale shape to
-    zscore. Exact percentile costs a sort-based aggregate; at 100 TB
-    swap ``percentile`` for ``percentile_approx`` if the fit pass
-    dominates (the API is the same shape, parity tests pin the exact
-    variant).
-    """
-    return robust_scale_transform(df, robust_scale_fit(df, cols))
-
-
-def robust_scale_fit(
-    df: DataFrame, cols: Sequence[str] | None = None
-) -> dict[str, tuple[float, float]]:
-    """One agg pass: {col: (median, IQR)} with exact percentiles."""
-    cols = list(cols if cols is not None else numeric_cols(df))
-    # array form: ONE percentile state (value->count map) per column;
-    # three scalar percentile exprs would each keep and sort their own
-    aggs = [
-        F.expr(f"percentile({c}, array(0.25, 0.5, 0.75))").alias(f"q_{c}")
-        for c in cols
-    ]
-    row = df.agg(*aggs).first()
-    out = {}
-    for c in cols:
-        q = row[f"q_{c}"]
-        q1, med, q3 = (q[0], q[1], q[2]) if q is not None else (None, None, None)
-        iqr = (q3 - q1) if (q1 is not None and q3 is not None) else None
-        out[c] = (med, iqr)
-    return out
-
-
-def robust_scale_fit_approx(
-    df: DataFrame,
-    cols: Sequence[str] | None = None,
-    accuracy: int = 10_000,
-) -> dict[str, tuple[float, float]]:
-    """The 100-TB fit: ``percentile_approx`` (Greenwald–Khanna
-    sketch) instead of exact ``percentile``.
-
-    Spark's exact percentile keeps a value→count map per partial and
-    merges them on ONE reducer — its final merge scales with distinct
-    values (≈ row count for continuous columns), a driver-side
-    bottleneck shape at scale. The GK sketch is O(accuracy) per
-    partial regardless of n, merges map-side, and guarantees rank
-    error ≤ n/accuracy — at accuracy=10⁴ the quantile lands within
-    0.01 % of the true rank, far tighter than any downstream scaling
-    needs. Same return shape as :func:`robust_scale_fit`, so the two
-    fits are drop-in interchangeable into
-    :func:`robust_scale_transform`."""
-    cols = list(cols if cols is not None else numeric_cols(df))
-    aggs = [
-        F.percentile_approx(
-            F.col(c).cast("double"), [0.25, 0.5, 0.75], accuracy
-        ).alias(f"q_{c}")
-        for c in cols
-    ]
-    row = df.agg(*aggs).first()
-    out = {}
-    for c in cols:
-        q = row[f"q_{c}"]
-        q1, med, q3 = (q[0], q[1], q[2]) if q is not None else (None, None, None)
-        iqr = (q3 - q1) if (q1 is not None and q3 is not None) else None
-        out[c] = (med, iqr)
-    return out
-
-
-def robust_scale_fit_auto(
-    df: DataFrame,
-    cols: Sequence[str] | None = None,
-    n_rows: int | None = None,
-    accuracy: int = 10_000,
-) -> dict[str, tuple[float, float]]:
-    """Scale-gated robust fit: exact interpolated percentiles at
-    validation scale (``n_rows`` <= :data:`EXACT_FIT_MAX_ROWS`, where
-    parity oracles pin exact values), the Greenwald–Khanna sketch
-    above it. Pass ``n_rows`` when the caller already knows the count
-    (saves the extra count job); otherwise one ``count()`` runs first
-    — still far cheaper than an unconditional exact percentile at
-    scale, which is the failure shape this gate exists to prevent."""
-    n = df.count() if n_rows is None else int(n_rows)
-    if n <= EXACT_FIT_MAX_ROWS:
-        return robust_scale_fit(df, cols)
-    return robust_scale_fit_approx(df, cols, accuracy)
-
-
-def robust_scale_transform(
-    df: DataFrame, stats: dict[str, tuple[float, float]]
-) -> DataFrame:
-    out = []
-    for c in df.columns:
-        if c in stats:
-            med, iqr = stats[c]
-            denom = iqr if (iqr is not None and iqr > 0.0) else 1.0
-            out.append(
-                ((F.col(c).cast("double") - F.lit(med)) / F.lit(denom)).alias(c)
-            )
-        else:
-            out.append(F.col(c))
-    return df.select(*out)
-
-
-def minmax_scale(
-    df: DataFrame, cols: Sequence[str] | None = None
-) -> DataFrame:
-    """sklearn ``MinMaxScaler`` parity: (x - min) / (max - min) onto
-    [0, 1], constant columns mapping to 0.0 (sklearn's zero-range
-    guard sets scale to 1). One min/max aggregation pass, then a
-    broadcast-literal projection — the cheapest of the scaler family
-    and the one bounded-output normalization for quantization /
-    histogram pipelines."""
-    return minmax_scale_transform(df, minmax_scale_fit(df, cols))
-
-
-def minmax_scale_fit(
-    df: DataFrame, cols: Sequence[str] | None = None
-) -> dict[str, tuple[float, float]]:
-    """One agg pass: {col: (min, range)}."""
-    cols = list(cols if cols is not None else numeric_cols(df))
-    aggs = []
-    for c in cols:
-        col = F.col(c).cast("double")
-        aggs += [F.min(col).alias(f"mn_{c}"), F.max(col).alias(f"mx_{c}")]
-    row = df.agg(*aggs).first()
-    out = {}
-    for c in cols:
-        mn, mx = row[f"mn_{c}"], row[f"mx_{c}"]
-        rng = (mx - mn) if (mn is not None and mx is not None) else None
-        out[c] = (mn, rng)
-    return out
-
-
-def minmax_scale_transform(
-    df: DataFrame, stats: dict[str, tuple[float, float]]
-) -> DataFrame:
-    out = []
-    for c in df.columns:
-        if c in stats:
-            mn, rng = stats[c]
-            denom = rng if (rng is not None and rng > 0.0) else 1.0
-            out.append(
-                ((F.col(c).cast("double") - F.lit(mn)) / F.lit(denom)).alias(c)
-            )
-        else:
-            out.append(F.col(c))
-    return df.select(*out)
 
 
 def label_encode_fit(df: DataFrame, col: str) -> DataFrame:
@@ -269,32 +112,6 @@ def label_encode(df: DataFrame, cols: Sequence[str] | None = None) -> tuple[Data
         (F.col(f"__dih_code_{c}").alias(c) if c in cols else F.col(c)) for c in df.columns
     ]
     return out.select(*proj), encoders
-
-
-def label_decode(df: DataFrame, col: str, mapping: DataFrame) -> DataFrame:
-    """Inverse transform (sklearn ``LabelEncoder.inverse_transform``):
-    join codes back to their original string values via the broadcast
-    label map returned by :func:`label_encode`."""
-    m = mapping.select(
-        F.col("code").alias("__dih_code"), F.col("value").alias("__dih_value")
-    )
-    out = (
-        df.withColumn("__dih_code", F.col(col).cast("long"))
-        .join(F.broadcast(m), "__dih_code", "left")
-        .drop("__dih_code")
-    )
-    return out.select(
-        *[
-            (F.col("__dih_value").alias(col) if c == col else F.col(c))
-            for c in df.columns
-        ]
-    )
-
-
-def preprocess_data(df: DataFrame) -> tuple[DataFrame, dict[str, DataFrame]]:
-    """The full ref:36-52 pipeline: scale numerics, encode strings."""
-    scaled = zscore(df)
-    return label_encode(scaled)
 
 
 def one_hot(

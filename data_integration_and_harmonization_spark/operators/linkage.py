@@ -25,9 +25,10 @@ The classic three-stage shape, each stage a plain DataFrame op:
    deterministic at any parallelism.
 
 Singleton records (no match partner) never appear in the pair graph;
-:func:`assign_entity_ids` completes the picture by left-joining the
-clusters back and defaulting every unmatched record to its own id —
-the full-corpus "golden record key" a downstream merge needs.
+:func:`assign_entity_ids_from_links` completes the picture by
+left-joining the clusters of any link table back and defaulting every
+unmatched record to its own id — the full-corpus "golden record key"
+a downstream merge (:func:`merge_entities`) needs.
 """
 
 from __future__ import annotations
@@ -41,12 +42,10 @@ from data_integration_and_harmonization_spark.functions.setsim import jaccard_pa
 from data_integration_and_harmonization_spark.operators.dedup import duplicate_clusters
 
 __all__ = [
-    "phonetic_key",
     "blocking_stats",
     "candidate_links",
     "token_links",
     "resolve_entities",
-    "assign_entity_ids",
     "assign_entity_ids_from_links",
     "merge_entities",
 ]
@@ -163,22 +162,6 @@ def blocking_stats(df: DataFrame, block_cols: Sequence[str]) -> DataFrame:
     )
 
 
-def phonetic_key(name_col: str | Column) -> Column:
-    """Soundex blocking key: records whose names SOUND alike land in
-    one block even when spelled differently ("Jon Smith" / "John
-    Smyth"), the standard recall-booster edit-distance blocking
-    misses. Derive it as a column and pass it as a block key:
-
-        df = df.withColumn("ph", phonetic_key("name"))
-        candidate_links(df, "id", "name", ["country", "ph"], ...)
-
-    Pure JVM (``F.soundex``), null-safe (null name -> null key, which
-    equi-join semantics then exclude from every block).
-    """
-    col = F.col(name_col) if isinstance(name_col, str) else name_col
-    return F.soundex(F.upper(F.trim(col)))
-
-
 def _name_expr(name_col: str, canonicalize: bool) -> Column:
     if canonicalize:
         # lower + collapse non-alnum runs: make "Acme Corp." link to
@@ -245,32 +228,11 @@ def resolve_entities(
 
     Output: (id, cluster_id) for every record that matched at least
     one other record; cluster_id = the component's minimum id. Records
-    with no match partner are absent (see :func:`assign_entity_ids`).
+    with no match partner are absent (see
+    :func:`assign_entity_ids_from_links`).
     """
     links = candidate_links(df, id_col, name_col, block_cols, max_edit, canonicalize)
     return duplicate_clusters(links)
-
-
-def assign_entity_ids(
-    df: DataFrame,
-    id_col: str,
-    name_col: str,
-    block_cols: Sequence[str],
-    max_edit: int = 2,
-    canonicalize: bool = False,
-    entity_col: str = "entity_id",
-) -> DataFrame:
-    """The full-corpus resolution: every record gets an ``entity_col``
-    — its component's minimum id if it matched anything, its own id
-    otherwise. Downstream "merge duplicates / pick golden record"
-    steps group by this column.
-
-    The join back is on the record id (shuffle equi-join; the cluster
-    side holds only matched records, which is small whenever matches
-    are — AQE broadcasts it when it can prove that).
-    """
-    links = candidate_links(df, id_col, name_col, block_cols, max_edit, canonicalize)
-    return assign_entity_ids_from_links(df, links, id_col, entity_col)
 
 
 def assign_entity_ids_from_links(
@@ -314,7 +276,8 @@ def merge_entities(
 ) -> DataFrame:
     """Survivorship: collapse each entity to ONE golden record.
 
-    Input is :func:`assign_entity_ids` output (every record labeled).
+    Input is :func:`assign_entity_ids_from_links` output (every record
+    labeled).
     Per attribute the survivor value follows ``rules`` —
     ``{'col': 'min'|'max'|'sum'|'avg'|'first_non_null'}`` — and
     attributes without a rule default to ``first_non_null``: the value

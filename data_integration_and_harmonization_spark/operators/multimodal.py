@@ -31,16 +31,6 @@ from pyspark.sql import types as T
 from data_integration_and_harmonization_spark.functions import media_codecs as MC
 from data_integration_and_harmonization_spark.functions.arrow import payload_stage
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("media_type", T.StringType(), True),
-        T.StructField("n_bytes", T.LongType(), True),
-        T.StructField("digest", T.StringType(), True),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),

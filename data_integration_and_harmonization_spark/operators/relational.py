@@ -446,45 +446,6 @@ def scd2_build(
     )
 
 
-def merge_upsert(
-    base: DataFrame,
-    changes: DataFrame,
-    key_col: str,
-    op_col: str = "op",
-) -> DataFrame:
-    """Type-1 CDC apply (MERGE INTO semantics): fold a batch of change
-    records into the current state of a keyed table. ``changes`` rows
-    carry ``op_col`` in {'I','U','D'} (insert / update / delete —
-    'I' and 'U' are both upserts: last state wins, so a changed key's
-    base row is replaced and a new key's row is added); every other
-    column must match ``base``'s schema. The SCD2 counterpart that
-    KEEPS history is :func:`scd2_build`.
-
-    Scale shape: one left-anti equi-join on the key (drop base rows
-    the batch touches) + one union with the batch's surviving upserts
-    — the change batch is typically tiny vs the base, so Catalyst
-    broadcasts the anti side and the base never shuffles. If the same
-    key appears multiple times in one batch the LAST row by ``op_col``
-    order of appearance is ambiguous — callers must pre-dedup the
-    batch (one row per key), and this function enforces that.
-    """
-    dup = (
-        changes.groupBy(key_col).count().where(F.col("count") > 1).limit(1).count()
-    )
-    if dup:
-        raise ValueError(
-            "merge_upsert requires one change row per key; pre-dedup the batch"
-        )
-    ops = {r[0] for r in changes.select(op_col).distinct().collect()}
-    bad = ops - {"I", "U", "D"}
-    if bad:
-        raise ValueError(f"unknown ops {sorted(bad)}; expected I/U/D")
-    touched = changes.select(key_col)
-    kept = base.join(touched, key_col, "left_anti")
-    upserts = changes.where(F.col(op_col) != "D").drop(op_col)
-    return kept.unionByName(upserts)
-
-
 # ------------------------------------------------------- queries and oracles
 
 def q_rel_pricing_summary(spark: SparkSession, sf: str) -> DataFrame:

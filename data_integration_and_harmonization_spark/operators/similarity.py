@@ -48,10 +48,6 @@ def norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def _lit_vec(vals) -> Column:
     """array<double> literal built as ONE SQL string (r13): spelling a
     center as d separate F.lit() py4j calls dominated the DRIVER time
@@ -98,8 +94,9 @@ def brute_force_topk(
     # per-vector norms staged per side (r14, guide §1.2): cosine per
     # (query, candidate) pair re-ran both interpreted O(d) norm
     # aggregates once per pair; staged, the per-pair work is the dot
-    # product. dot/(q_nrm*c_nrm) keeps cosine's exact operand order,
-    # so every similarity is bit-identical.
+    # product. dot/(q_nrm*c_nrm) keeps the per-pair formula's
+    # dot(a, b) / (norm(a) * norm(b)) operand order, so every
+    # similarity is bit-identical.
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
@@ -374,43 +371,6 @@ def _subvec(vec: Column, i: int, ds: int) -> Column:
     return F.slice(vec, i * ds + 1, ds)
 
 
-def pq_distortion(
-    corpus: DataFrame,
-    *codebooks: list[list[list[float]]],
-    vec_col: str = "embedding",
-) -> list[float]:
-    """Mean quantization distortion of each codebook over the corpus:
-    avg over vectors of sum over subspaces of the squared distance to
-    the chosen (nearest) centroid — exactly the objective Lloyd
-    minimizes, and the standard index-quality gauge for comparing PQ
-    codebooks (recall@k additionally depends on the query set, so it
-    can prefer query-aligned seeds on near-uniform corpora). All
-    codebooks are measured in ONE JVM-side aggregate pass (one corpus
-    scan however many books are compared); centers inline as literals
-    (tiny). Returns one mean per codebook, in argument order."""
-
-    def _err(books: list[list[list[float]]]) -> Column:
-        ds = len(books[0][0])
-        err: Column | None = None
-        for i, centers in enumerate(books):
-            sub = _subvec(F.col(vec_col), i, ds)
-            d2s = F.array_min(
-                F.array(
-                    *[
-                        squared_distance(sub, _lit_vec(c))
-                        for c in centers
-                    ]
-                )
-            )
-            err = d2s if err is None else err + d2s
-        return err
-
-    row = corpus.agg(
-        *[F.avg(_err(b)).alias(f"d{i}") for i, b in enumerate(codebooks)]
-    ).collect()[0]
-    return [float(row[f"d{i}"]) for i in range(len(codebooks))]
-
-
 def _nearest_index(vec: Column, centers: list[list[float]]) -> Column:
     """Index of the squared-distance-nearest center — the (d2, idx)
     struct-argmin every quantizer here shares (IVF cell assignment,
@@ -489,8 +449,7 @@ def pq_encode(
     a post-aggregate projection, zero extra passes — and
     ``avg(err_col)`` over the encode IS the codebooks' mean
     distortion, exactly the objective Lloyd minimizes (the one-scan
-    index-quality gauge; :func:`pq_distortion` computes the same
-    number standalone when no encode is being built).
+    index-quality gauge).
 
     Output: (id, code array<int> length m[, extras][, err]).
     """
@@ -1192,7 +1151,7 @@ def q_sim_ivf_recall(spark: SparkSession, sf: str) -> DataFrame:
       driver row is an in-query quality assertion (val=1.0 when it
       holds): trained mean quantization DISTORTION — Lloyd's own
       objective, read off each persisted encode's ``err_col`` at
-      agg cost (standalone gauge: :func:`pq_distortion`) — must be
+      agg cost — must be
       <= the seed books', and the trained ladder must return a
       full k rows per query. Training is deterministic (ordered
       sample, seeded RNG), so the check is stable run to run.

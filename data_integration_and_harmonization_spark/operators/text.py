@@ -9,8 +9,6 @@ is JVM-side and the operators scale linearly with no Arrow transfer.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,125 +42,6 @@ def bpe_token_count(col: Column | str) -> Column:
     corpus-triage time — no vocab needed, pure regex, codegen'd."""
     c = F.col(col) if isinstance(col, str) else col
     return F.size(F.regexp_extract_all(c, F.lit(BPE_RE), 0))
-
-
-def train_bpe_merges(
-    df,
-    text_col: str = "text",
-    n_merges: int = 50,
-):
-    """Train byte-pair-encoding merge rules over a corpus — the
-    Sennrich et al. (2016) algorithm, distributed: the pair statistics
-    each round come from ONE Spark aggregation over the distinct-word
-    table, and only the (pair, count) winner reaches the driver.
-
-    Round structure (the driver loop is inherent — each merge depends
-    on the statistics AFTER the previous merge):
-
-    1. distinct words + corpus frequencies (one groupBy, done once —
-       all later rounds operate on this ~|vocab|-row table, NOT the
-       corpus);
-    2. per round: adjacent-symbol-pair counts weighted by word
-       frequency (explode + groupBy, max-by-count with lexicographic
-       tie-break so training is deterministic), then a codegen'd
-       left-to-right greedy merge of the winning pair inside every
-       word's symbol array (``aggregate`` fold — no Python);
-    3. stop early when no pair repeats.
-
-    Returns the ordered merge list [(a, b), ...]. At 100 TB step 1 is
-    the only corpus-sized pass; the per-round work scales with
-    DISTINCT words (Zipf-bounded), which is why classic BPE trainers
-    are feasible at web scale. ``n_merges`` Spark jobs of vocab-table
-    size are the honest cost of the sequential algorithm.
-
-    Lineage truncation (r10 verdict item; the documented
-    connected-components lesson, ``dedup.py`` loop): each round wraps
-    ``syms`` in another codegen'd ``aggregate`` fold, so round k would
-    otherwise analyze k nested lambdas — O(n^2) analysis time and an
-    eventual codegen blowup at large ``n_merges``. Every 16 rounds the
-    words table is ``localCheckpoint``-ed (eager), restarting the plan
-    from materialized partitions; 16 nested folds stay comfortably
-    under the analyzer/Janino limits while amortizing the checkpoint
-    I/O (vocab-sized, not corpus-sized) across rounds.
-    """
-    base = (
-        df.select(F.explode(tokens(text_col)).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .withColumn("syms", F.split(F.col("w"), ""))
-        .select("syms", "freq")
-        .persist()
-    )
-    words = base
-    merges: list[tuple[str, str]] = []
-    try:
-        for round_no in range(n_merges):
-            if round_no and round_no % 16 == 0:
-                # truncate the nested-fold lineage (see docstring)
-                words = words.localCheckpoint(eager=True)
-            pairs = (
-                words.select(
-                    F.explode(
-                        F.expr(
-                            "transform(slice(syms, 1, size(syms) - 1),"
-                            " (s, i) -> struct(s AS a, element_at(syms, i + 2) AS b))"
-                        )
-                    ).alias("p"),
-                    "freq",
-                )
-                .groupBy("p")
-                .agg(F.sum("freq").alias("n"))
-                .where(F.col("n") >= 2)
-                # deterministic winner: max count, then lexicographic
-                .orderBy(F.desc("n"), F.col("p.a"), F.col("p.b"))
-                .limit(1)
-                .collect()
-            )
-            if not pairs:
-                break
-            a, b = pairs[0]["p"]["a"], pairs[0]["p"]["b"]
-            merges.append((a, b))
-            merged = a + b
-            # greedy non-overlapping left-to-right merge as a fold:
-            # append x, except when the accumulated tail is 'a' and x
-            # is 'b' — then replace the tail with the merged symbol
-            words = words.withColumn(
-                "syms",
-                F.expr(
-                    f"aggregate(syms, cast(array() AS array<string>),"
-                    f" (acc, x) -> CASE WHEN size(acc) > 0"
-                    f"   AND element_at(acc, -1) = '{a}' AND x = '{b}'"
-                    f"  THEN concat(slice(acc, 1, size(acc) - 1),"
-                    f"              array('{merged}'))"
-                    f"  ELSE concat(acc, array(x)) END)"
-                ),
-            )
-        return merges
-    finally:
-        # unpersist the frame that was actually persisted (the loop
-        # reassigns `words` to derived frames, whose unpersist would
-        # be a no-op on the cached vocab table)
-        base.unpersist(False)
-
-
-def bpe_segment_sql(col_sql: str, merges: list[tuple[str, str]]) -> Column:
-    """SQL-composed variant of merge replay: pass a column NAME (or
-    SQL expression) and get the segmented symbol array after all
-    merges. Each merge nests one ``aggregate`` fold around the
-    previous — n_merges folds in one whole-stage-codegen projection."""
-    src = f"split({col_sql}, '')"
-    for a, b in merges:
-        ae = a.replace("'", "\\'")
-        be = b.replace("'", "\\'")
-        me = (a + b).replace("'", "\\'")
-        src = (
-            f"aggregate({src}, cast(array() AS array<string>),"
-            f" (acc, x) -> CASE WHEN size(acc) > 0"
-            f"   AND element_at(acc, -1) = '{ae}' AND x = '{be}'"
-            f"  THEN concat(slice(acc, 1, size(acc) - 1), array('{me}'))"
-            f"  ELSE concat(acc, array(x)) END)"
-        )
-    return F.expr(src)
 
 
 def normalized(col: Column | str) -> Column:
@@ -385,10 +264,6 @@ def quality_columns(text_col: str = "text", toks: Column | None = None) -> list[
     ]
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.select("doc_id", *quality_columns(text_col))
-
-
 def language_id_column(text_col: str = "text", toks: Column | None = None) -> Column:
     """Stopword-overlap language ID: score each language by stopword
     hits (with multiplicity); predict the argmax, 'und' (undetermined)
@@ -405,10 +280,6 @@ def language_id_column(text_col: str = "text", toks: Column | None = None) -> Co
     for lang, s in reversed(scores):
         pred = F.when((s == best) & (best > 0), F.lit(lang)).otherwise(pred)
     return pred
-
-
-def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.select("doc_id", language_id_column(text_col).alias("lang_pred"))
 
 
 def repetition_columns(text_col: str = "text", toks: Column | None = None) -> list[Column]:
@@ -478,58 +349,6 @@ def document_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _document_stage(
-    df: DataFrame, id_col: str, payload_col: str, fn: Callable, schema: str
-) -> DataFrame:
-    """``fn`` per payload of ``df`` in one Arrow stage, keyed by the
-    long-cast ``id_col``."""
-    from data_integration_and_harmonization_spark.functions.arrow import (
-        payload_stage,
-    )
-
-    src = df.select(
-        F.col(id_col).cast("long").alias("id"), F.col(payload_col).alias("payload")
-    )
-    return payload_stage(src, ["id"], fn, schema)
-
-
-def _extract_table(df: DataFrame, id_col: str, payload_col: str, fmt: str) -> DataFrame:
-    from data_integration_and_harmonization_spark.sources.readers import DOC_FORMATS
-
-    extract = DOC_FORMATS[fmt][1]
-    return _document_stage(
-        df, id_col, payload_col, lambda p: [(extract(p),)], "id long, text string"
-    )
-
-
-def pdf_text_table(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """(id, text) extraction over a PDF corpus: ONE Arrow
-    ``mapInPandas`` stage runs the engine's from-spec baseline
-    extractor (:mod:`..functions.pdf` — Flate content streams +
-    Tj/TJ/'/\" show operators, ISO 32000-1) per payload. Non-PDF or
-    text-free payloads surface with text NULL so a curation pass can
-    quarantine them; everything downstream (``document_profile``,
-    dedup, quality gates) consumes the text column like any other
-    document source. Same cost model as the media codecs: payload
-    bytes cross into Python once, batch-wise; only the extracted text
-    comes back."""
-    return _extract_table(df, id_col, payload_col, "pdf")
-
-
-def docx_text_table(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """(id, text) extraction over a DOCX corpus — the
-    WordprocessingML sibling of :func:`pdf_text_table`: ONE Arrow
-    ``mapInPandas`` stage runs the engine's stdlib ECMA-376 extractor
-    (:mod:`..sources.docx` — zip + ``word/document.xml`` run walk)
-    per payload. Non-docx or text-free payloads surface with text
-    NULL for quarantine; only the extracted text crosses back."""
-    return _extract_table(df, id_col, payload_col, "docx")
-
-
 def document_text_table(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
@@ -543,14 +362,14 @@ def document_text_table(
     Python worker round-trip instead of one per format (the r4
     fixed-overhead lesson). Unrecognized or text-free payloads ride
     with fmt/text NULL for quarantine."""
+    from data_integration_and_harmonization_spark.functions.arrow import payload_stage
     from data_integration_and_harmonization_spark.sources.readers import document_text
 
-    return _document_stage(
-        df,
-        id_col,
-        payload_col,
-        lambda p: [document_text(p)],
-        "id long, fmt string, text string",
+    src = df.select(
+        F.col(id_col).cast("long").alias("id"), F.col(payload_col).alias("payload")
+    )
+    return payload_stage(
+        src, ["id"], lambda p: [document_text(p)], "id long, fmt string, text string"
     )
 
 

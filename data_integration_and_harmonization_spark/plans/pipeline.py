@@ -80,9 +80,7 @@ def run_harmonization_pipeline(
     pre = cleaned
     encoders: dict[str, DataFrame] = {}
     if scale:
-        pre = FE.zscore_transform(
-            pre, FE.zscore_fit(pre, [c for c in C.numeric_cols(pre) if c != H.INGEST_INDEX])
-        )
+        pre = FE.zscore(pre, [c for c in C.numeric_cols(pre) if c != H.INGEST_INDEX])
     if encode:
         pre, encoders = FE.label_encode(pre)
 

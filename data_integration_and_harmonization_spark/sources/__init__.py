@@ -3,7 +3,6 @@
 from data_integration_and_harmonization_spark.sources.readers import (
     read_any,
     read_sources,
-    load_sf_tables,
 )
 
-__all__ = ["read_any", "read_sources", "load_sf_tables"]
+__all__ = ["read_any", "read_sources"]

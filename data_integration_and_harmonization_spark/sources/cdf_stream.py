@@ -1,8 +1,8 @@
 """Streaming CHANGE DATA FEED over a manifest-versioned table — the
 closing of the lakehouse loop (r10 verdict item 5): ``version_diff``
 (:mod:`.manifest`) answers "what changed between v_i and v_j" in
-batch, but a downstream incremental consumer (ANN index maintenance,
-the sketch-profile store) had to poll it manually. This module serves
+batch, but a downstream incremental consumer (the near-dup signature
+store) had to poll it manually. This module serves
 the commit sequence as a real Structured Streaming source
 (``spark.readStream.format("manifest_cdf")``), so those consumers
 become ordinary streaming queries with checkpointed offsets, restart
@@ -24,9 +24,9 @@ removed files and m times in the added files nets ``max(n-m, 0)``
 removals and ``max(m-n, 0)`` additions.
 
 Executor-side decode is pyarrow (the engine ships no JVM code with a
-Python data source); local/shared-FS paths, like the xlsx corpus
-sink. Key columns are restricted to scalar parquet types — the keys
-identify rows, payloads stay in the table.
+Python data source); local/shared-FS paths. Key columns are restricted
+to scalar parquet types — the keys identify rows, payloads stay in the
+table.
 """
 
 from __future__ import annotations
@@ -99,25 +99,19 @@ class _VersionStep(InputPartition):
 
 
 class ManifestCDFStreamReader(DataSourceStreamReader):
-    def __init__(
-        self, root: str, keys: list[str], start_version: int | None = None
-    ) -> None:
+    def __init__(self, root: str, keys: list[str]) -> None:
         self._root = root
         self._keys = keys
         vs = _versions(root)
         if not vs:
             raise FileNotFoundError(f"no manifests under {root!r}")
         self._first = vs[0]
-        self._start = start_version
 
     def initialOffset(self) -> dict:
-        # default: one before the first committed version, so the
-        # first micro-batch bootstraps with that version's full
-        # content as 'added'. startVersion V anchors the feed AT V
-        # instead (changes strictly after V) — the consumer-was-
-        # initialized-from-a-snapshot case (e.g. an ANN index built
-        # from version V must not re-ingest V's rows).
-        return {"version": self._start if self._start is not None else self._first - 1}
+        # one before the first committed version, so the first
+        # micro-batch bootstraps with that version's full content as
+        # 'added'.
+        return {"version": self._first - 1}
 
     def latestOffset(self) -> dict:
         vs = _versions(self._root)
@@ -245,63 +239,7 @@ class ManifestCDFDataSource(DataSource):
         return T.StructType(fields)
 
     def streamReader(self, schema: T.StructType) -> ManifestCDFStreamReader:
-        sv = self.options.get("startVersion")
-        return ManifestCDFStreamReader(
-            self._root(), self._keys(), None if sv is None else int(sv)
-        )
-
-
-def register_manifest_cdf(spark: SparkSession) -> None:
-    """Idempotent registration on a session."""
-    spark.dataSource.register(ManifestCDFDataSource)
-
-
-def stream_cdf_profile_maintenance(
-    spark: SparkSession,
-    table_root: str,
-    store_path: str,
-    cols: list[str],
-    checkpoint: str,
-    lg_k: int = 12,
-) -> None:
-    """The loop the CDF source exists to close: keep a sketch-profile
-    store (:mod:`..operators.profile`) in sync with a versioned table
-    WITHOUT rescanning it — each availableNow drain profiles only the
-    rows versions committed since the checkpoint added. ``cols``
-    double as the feed's key columns, so the added rows carry their
-    values directly (multiset — a value added twice sketches twice's
-    counts).
-
-    Replay-idempotent: the profile batch is tagged with the
-    checkpointed micro-batch id, so a crash between the store append
-    and the checkpoint commit re-runs the batch as a no-op instead of
-    doubling the counts. Removals are NOT subtracted — HLL sketches
-    are add-only, so after deletes the store's distinct estimates are
-    upper bounds and its row counts count ever-ingested rows; rebuild
-    the store when that drift matters (the same caveat every
-    sketch-based profiler carries).
-    """
-    from pyspark.sql import functions as F
-
-    from data_integration_and_harmonization_spark.operators.profile import (
-        profile_store_update,
-    )
-
-    feed = read_manifest_cdf(spark, table_root, cols)
-
-    def admit(batch_df: DataFrame, batch_id: int) -> None:
-        added = batch_df.where(F.col("change") == "added").select(*cols)
-        profile_store_update(
-            added, store_path, cols, lg_k=lg_k, tag=f"cdf{batch_id:06d}"
-        )
-
-    (
-        feed.writeStream.foreachBatch(admit)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+        return ManifestCDFStreamReader(self._root(), self._keys())
 
 
 def stream_cdf_neardedup_maintenance(
@@ -317,9 +255,8 @@ def stream_cdf_neardedup_maintenance(
     gram: int = 3,
     store_partitions: int = 8,
 ) -> None:
-    """The near-dup SIGNATURE store's streaming maintenance consumer —
-    the twin of :func:`stream_cdf_profile_maintenance` (r11 verdict
-    item 4): keep :func:`..operators.dedup.incremental_near_dedup`'s
+    """The near-dup SIGNATURE store's streaming maintenance consumer
+    (r11 verdict item 4): keep :func:`..operators.dedup.incremental_near_dedup`'s
     partitioned MinHash store in sync with a versioned document table
     WITHOUT rescanning it. Each availableNow drain admits only the
     rows the versions committed since the checkpoint added; the store
@@ -333,8 +270,7 @@ def stream_cdf_neardedup_maintenance(
     ``incremental_near_dedup``'s ``tag``). Removals are NOT
     subtracted — signatures are admit-only (dropping a doc's
     signature would re-admit its future near-dups); rebuild or
-    compact the store when removed history matters, the same caveat
-    the profile-store consumer carries.
+    compact the store when removed history matters.
     """
     from pyspark.sql import functions as F
 
@@ -368,113 +304,16 @@ def stream_cdf_neardedup_maintenance(
     )
 
 
-def stream_cdf_ann_maintenance(
-    spark: SparkSession,
-    table_root: str,
-    index_path: str,
-    checkpoint: str,
-    keys: list[str] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    start_version: int | None = None,
-) -> None:
-    """Keep a persisted ANN index (:mod:`..operators.similarity`) in
-    sync with a versioned vector table — the third consumer the CDF
-    source exists for (after the profile and near-dup signature
-    stores): each availableNow drain tombstones the ids the versions
-    since the checkpoint REMOVED (``delete_from_ann_index``) and
-    appends the vectors they ADDED (``append_ann_index``, encoded
-    with the chain's frozen codebooks), so served queries track the
-    table at O(increment) cost with zero code bytes rewritten. Run
-    ``compact_ann_index`` when the chain length, not history, is the
-    cost.
-
-    ``keys`` defaults to ``[id_col]``: row additions and removals by
-    id. An IN-PLACE vector update under id-only keys nets NO change
-    (the multiset diff sees the same key in both versions) — tables
-    that mutate vectors must carry a scalar content digest column
-    and pass ``keys=[id_col, digest_col]``, so an update nets a
-    removal of the old (id, digest) and an addition of the new one:
-    the drain then tombstones the id and re-appends the current
-    vector. Added vectors are fetched from the table's LATEST
-    version by key (the feed carries keys, not payloads — arrays
-    are not scalar key material); an id added then removed across
-    the drained span simply finds no current row and is skipped, so
-    the index converges to the table's final state.
-
-    Replay-idempotent: the delete and the append of each micro-batch
-    carry distinct checkpoint-derived tags, so a crash between the
-    two (or before the checkpoint commit) re-applies exactly the
-    missing half and nothing twice. Deletes apply BEFORE appends so
-    a digest-keyed update (remove+add of one id) re-admits cleanly
-    against the post-tombstone live set.
-
-    ``start_version``: the table version the index was BUILT from —
-    anchors the feed there so the bootstrap does not re-ingest the
-    rows the index already holds (append's id-disjointness check
-    would rightly refuse them). Omit only when the index starts
-    empty-equivalent relative to the feed."""
-    from pyspark.sql import functions as F
-
-    from data_integration_and_harmonization_spark.operators.similarity import (
-        append_ann_index,
-        delete_from_ann_index,
-    )
-    from data_integration_and_harmonization_spark.sources.manifest import (
-        read_version,
-    )
-
-    keys = list(keys) if keys is not None else [id_col]
-    feed = read_manifest_cdf(spark, table_root, keys, start_version=start_version)
-
-    def admit(batch_df: DataFrame, batch_id: int) -> None:
-        removed = (
-            batch_df.where(F.col("change") == "removed")
-            .select(id_col)
-            .dropDuplicates()
-        )
-        added = (
-            batch_df.where(F.col("change") == "added")
-            .select(*keys)
-            .dropDuplicates()
-        )
-        if not removed.isEmpty():
-            delete_from_ann_index(
-                removed, index_path, tag=f"cdf{batch_id:06d}d"
-            )
-        if not added.isEmpty():
-            current = read_version(spark, table_root)
-            vecs = current.join(added, keys, "left_semi").select(id_col, vec_col)
-            if not vecs.isEmpty():
-                append_ann_index(vecs, index_path, tag=f"cdf{batch_id:06d}a")
-
-    (
-        feed.writeStream.foreachBatch(admit)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def read_manifest_cdf(
-    spark: SparkSession,
-    table_root: str,
-    keys: list[str],
-    start_version: int | None = None,
-) -> DataFrame:
+def read_manifest_cdf(spark: SparkSession, table_root: str, keys: list[str]) -> DataFrame:
     """Streaming change feed of a manifest table: one 'added'/'removed'
     row per net row change per committed version (bootstrap = first
-    version all 'added'; ``start_version=V`` anchors at V instead —
-    changes strictly after V, for consumers initialized from a
-    version-V snapshot). Drain with availableNow for catch-up
-    consumers, or leave running against a live table."""
-    register_manifest_cdf(spark)
-    reader = (
+    version all 'added'). Drain with availableNow for catch-up
+    consumers, or leave running against a live table. Registering the
+    source on the session is idempotent."""
+    spark.dataSource.register(ManifestCDFDataSource)
+    return (
         spark.readStream.format("manifest_cdf")
         .option("path", table_root)
         .option("keys", ",".join(keys))
+        .load()
     )
-    if start_version is not None:
-        reader = reader.option("startVersion", str(start_version))
-    return reader.load()

@@ -1,12 +1,13 @@
 """Manifest-based table versions — time travel from first principles.
 
-The lakehouse trick that makes :func:`~.writers.compact_files` and
-:func:`~.writers.delete_rows` safe in production is that a "table" is
-a MANIFEST (the list of data files making up a version), not a
-directory: maintenance writes new files to the side, then commits a
-new manifest; readers pin a version and never see a half-rewritten
-table; old versions stay readable until vacuumed (Delta/Iceberg do
-exactly this, with manifest spill-out past ~millions of files).
+The lakehouse trick that makes table maintenance (compaction,
+:func:`delete_rows_versioned`, :func:`merge_upsert_versioned`) safe in
+production is that a "table" is a MANIFEST (the list of data files
+making up a version), not a directory: maintenance writes new files to
+the side, then commits a new manifest; readers pin a version and never
+see a half-rewritten table; old versions stay readable until vacuumed
+(Delta/Iceberg do exactly this, with manifest spill-out past ~millions
+of files).
 
 This is the minimal filesystem-portable version of that contract:
 
@@ -187,8 +188,7 @@ def delete_rows_versioned(
     predicate,
     version: int | None = None,
 ) -> dict:
-    """DELETE against a manifest table — the zero-copy variant of
-    :func:`~.writers.delete_rows`.
+    """DELETE against a manifest table, zero-copy.
 
     Finds the files holding matches with one pushdown-pruned scan of
     the pinned version, rewrites ONLY those into ``rewrite_dir`` with
@@ -265,9 +265,8 @@ def merge_upsert_versioned(
     evolve_schema: bool = False,
     allow_missing_update_cols: bool = False,
 ) -> dict:
-    """MERGE against a manifest table — completes the maintenance
-    trilogy next to :func:`delete_rows_versioned` and
-    ``writers.compact_files``.
+    """MERGE against a manifest table — the upsert sibling of
+    :func:`delete_rows_versioned`.
 
     Schema evolution (the Delta ``autoMerge`` contract): update
     columns absent from the table are an ERROR by default — silently
@@ -290,8 +289,7 @@ def merge_upsert_versioned(
     version; survivors + the surviving upserts land in
     ``rewrite_dir``. ``updates`` is assumed CDC-batch-sized (it
     broadcasts); keys must be unique within ``updates`` — enforced
-    (duplicate change keys make "last writer" ambiguous; same guard as
-    ``relational.merge_upsert``).
+    (duplicate change keys make "last writer" ambiguous).
 
     Returns {version, files_total, files_affected, rows_matched,
     rows_inserted, rows_deleted}. ``rows_matched`` counts matched
@@ -504,8 +502,8 @@ def vacuum(
     """Retention: physically delete data files (or directory entries)
     referenced ONLY by versions outside ``keep_versions`` (default:
     keep the latest), and drop the vacuumed manifests. Files shared
-    with a kept version — e.g. everything ``delete_rows`` carried over
-    untouched — survive, exactly like Delta's VACUUM.
+    with a kept version — e.g. every file :func:`delete_rows_versioned`
+    referenced in place — survive, exactly like Delta's VACUUM.
 
     Driver-side FS metadata work, O(files across versions); nothing
     scans data. Returns {"deleted": [paths], "kept_versions": [...]}.

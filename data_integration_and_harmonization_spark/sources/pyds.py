@@ -38,56 +38,14 @@ from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 
-def _read_manifest(path: str) -> dict | None:
-    """The sink's committed ``_SUCCESS`` manifest for a directory, or
-    None when absent / not a directory. A manifest that EXISTS but
-    fails to parse raises: the commit path writes it atomically
-    (temp + ``os.replace``), so a torn file signals real corruption —
-    silently falling back to a glob would serve exactly the
-    torn/speculative parts the manifest exists to exclude."""
-    import json
-
-    marker = os.path.join(path, "_SUCCESS")
-    if not (os.path.isdir(path) and os.path.exists(marker)):
-        return None
-    try:
-        with open(marker) as fh:
-            m = json.load(fh)
-    except (OSError, ValueError) as e:
-        raise ValueError(
-            f"xlsx_corpus: manifest {marker!r} exists but is unreadable "
-            f"({e}) — refusing the glob fallback, which could serve "
-            "uncommitted part files"
-        ) from e
-    if not (isinstance(m, dict) and "files" in m and "columns" in m):
-        raise ValueError(
-            f"xlsx_corpus: manifest {marker!r} parsed but lacks the "
-            "files/columns keys — not a corpus manifest"
-        )
-    return m
-
-
-def _matched_paths(path: str) -> tuple[list[str], list[str] | None]:
-    """(workbook paths, committed columns or None).
-
-    A directory carrying the sink's manifest is read through it: ONLY
-    committed parts are served — a crashed or speculative task attempt
-    may have left torn/duplicate .xlsx files on disk, and a glob would
-    serve them as data. The manifest also carries the column list, so
-    an EMPTY committed corpus still has a schema. Plain directories
-    and globs (workbooks from outside the sink) fall back to matching
-    files directly."""
-    m = _read_manifest(path)
-    if m is not None:
-        return [os.path.join(path, f) for f in m["files"]], list(m["columns"])
-    if os.path.isdir(path):
-        pattern = os.path.join(path, "*.xlsx")
-    else:
-        pattern = path
+def _matched_paths(path: str) -> list[str]:
+    """Workbook paths: every ``*.xlsx`` directly in a directory, or the
+    files a glob (or single path) matches."""
+    pattern = os.path.join(path, "*.xlsx") if os.path.isdir(path) else path
     paths = sorted(_glob.glob(pattern))
     if not paths:
         raise FileNotFoundError(f"no workbooks match {path!r}")
-    return paths, None
+    return paths
 
 
 def _render(v: object) -> str | None:
@@ -118,8 +76,6 @@ class XlsxCorpusReader(DataSourceReader):
         return [_WorkbookPartition(p) for p in self._paths]
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
-        if partition is None:  # empty corpus: partitions() returned []
-            return
         # executor-side: stdlib decode of ONE workbook
         from data_integration_and_harmonization_spark.sources.xlsx import read_xlsx
 
@@ -147,170 +103,27 @@ class XlsxCorpusDataSource(DataSource):
         return p
 
     def schema(self) -> T.StructType:
-        # manifest-committed corpora carry their column list; otherwise
         # the driver reads ONE header row of the first workbook
         # (read_xlsx_header stops the sheet parse after row 1 — never
         # the full cell grid) — the only driver-side byte touch in the
         # whole scan
-        paths, cols = _matched_paths(self._path())
-        if cols is None:
-            from data_integration_and_harmonization_spark.sources.xlsx import (
-                read_xlsx_header,
-            )
+        from data_integration_and_harmonization_spark.sources.xlsx import (
+            read_xlsx_header,
+        )
 
-            cols = read_xlsx_header(paths[0])
+        cols = read_xlsx_header(_matched_paths(self._path())[0])
         return T.StructType(
             [T.StructField(c, T.StringType(), True) for c in cols]
             + [T.StructField("_src_file", T.StringType(), False)]
         )
 
     def reader(self, schema: T.StructType) -> DataSourceReader:
-        return XlsxCorpusReader(schema, _matched_paths(self._path())[0])
-
-    def writer(self, schema: T.StructType, overwrite: bool) -> "XlsxCorpusWriter":
-        # Python data sources support Append and Overwrite only (the
-        # API rejects ErrorIfExists/Ignore before reaching here):
-        # overwrite REPLACES the committed corpus, but destruction is
-        # DEFERRED to commit() — new parts (uuid-named, so they never
-        # collide with the old ones) are written alongside the prior
-        # corpus, the manifest is atomically swapped to name only the
-        # new parts, and only then are the old parts removed. A failed
-        # or aborted overwrite therefore leaves the prior committed
-        # corpus fully readable. Append adds parts and the commit
-        # merges the manifest — after checking the columns agree,
-        # since a part written under a different header would silently
-        # read as misaligned NULLs.
-        if "_src_file" in [f.name for f in schema.fields]:
-            raise ValueError(
-                "xlsx_corpus sink: drop the _src_file column before writing "
-                "— it is the read side's provenance column and would "
-                "collide on read-back"
-            )
-        path = self._path()
-        os.makedirs(path, exist_ok=True)
-        if not overwrite:
-            m = _read_manifest(path)
-            if m is not None and list(m["columns"]) != [f.name for f in schema.fields]:
-                raise ValueError(
-                    "xlsx_corpus append: column mismatch with the committed "
-                    f"corpus — existing {m['columns']}, appending "
-                    f"{[f.name for f in schema.fields]}"
-                )
-        return XlsxCorpusWriter(schema, path, overwrite=overwrite)
-
-
-def register_xlsx_corpus(spark: SparkSession) -> None:
-    """Idempotent registration of the corpus source on a session."""
-    spark.dataSource.register(XlsxCorpusDataSource)
+        return XlsxCorpusReader(schema, _matched_paths(self._path()))
 
 
 def read_xlsx_corpus(spark: SparkSession, path: str) -> DataFrame:
     """Distributed scan of an xlsx corpus: one executor partition per
-    workbook, stdlib decode, all-string schema + ``_src_file``."""
-    register_xlsx_corpus(spark)
+    workbook, stdlib decode, all-string schema + ``_src_file``.
+    Registering the source on the session is idempotent."""
+    spark.dataSource.register(XlsxCorpusDataSource)
     return spark.read.format("xlsx_corpus").load(path)
-
-
-def write_xlsx_corpus(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Distributed xlsx SINK: one workbook per non-empty partition,
-    encoded executor-side, with a driver-committed ``_SUCCESS``
-    manifest naming the parts. The export shape for handing query
-    results back to spreadsheet consumers — the reverse of the
-    reference's upload-a-workbook front door. Local/shared-FS paths
-    (the stdlib encoder writes with plain ``open``)."""
-    register_xlsx_corpus(df.sparkSession)
-    df.write.format("xlsx_corpus").mode(mode).save(path)
-
-
-# ----------------------------------------------------------- the sink
-
-
-from dataclasses import dataclass
-
-from pyspark.sql.datasource import DataSourceWriter, WriterCommitMessage
-
-
-@dataclass
-class _XlsxCommit(WriterCommitMessage):
-    file: str | None = None
-    n_rows: int = 0
-
-
-class XlsxCorpusWriter(DataSourceWriter):
-    """One workbook per NON-EMPTY partition, written executor-side
-    with the stdlib ECMA-376 encoder; empty partitions write nothing
-    (the empty-batch-dir lesson from the dedup stores). The driver's
-    ``commit`` writes a ``_SUCCESS`` manifest naming every part —
-    readers that care about torn writes can check it; ``abort``
-    removes whatever partial parts reported back."""
-
-    def __init__(
-        self, schema: T.StructType, path: str, overwrite: bool = False
-    ) -> None:
-        self._cols = [f.name for f in schema.fields]
-        self._path = path
-        self._overwrite = overwrite
-
-    def write(self, iterator) -> _XlsxCommit:
-        from pyspark import TaskContext
-
-        from data_integration_and_harmonization_spark.sources.xlsx import write_xlsx
-
-        rows = []
-        for row in iterator:
-            rows.append([
-                v if isinstance(v, (int, float, bool, str)) or v is None
-                else str(v)
-                for v in row
-            ])
-        if not rows:
-            return _XlsxCommit(None, 0)
-        import uuid
-
-        ctx = TaskContext.get()
-        # uuid, not taskAttemptId: attempt ids restart per application,
-        # and a retried/speculative attempt must never reuse a name the
-        # committed manifest might already carry
-        name = f"part-{ctx.partitionId():05d}-{uuid.uuid4().hex[:8]}.xlsx"
-        write_xlsx(os.path.join(self._path, name), self._cols, rows)
-        return _XlsxCommit(name, len(rows))
-
-    def commit(self, messages) -> None:
-        # only files whose tasks REPORTED BACK are committed — a
-        # crashed or speculative attempt's torn workbook stays on disk
-        # but outside the manifest, and manifest-aware reads never
-        # serve it. The manifest itself lands atomically (temp file in
-        # the same directory + os.replace): a driver crash mid-commit
-        # leaves either the prior manifest or the new one, never a
-        # torn JSON that would force readers onto the glob fallback.
-        import json
-        import tempfile
-
-        files = {m.file for m in messages if m and m.file}
-        prior = _read_manifest(self._path)
-        if prior is not None and not self._overwrite:
-            files.update(prior["files"])  # append job: merge the manifest
-        fd, tmp = tempfile.mkstemp(
-            prefix="._SUCCESS.", dir=self._path, text=True
-        )
-        with os.fdopen(fd, "w") as fh:
-            json.dump({"columns": self._cols, "files": sorted(files)}, fh)
-        os.replace(tmp, os.path.join(self._path, "_SUCCESS"))
-        if self._overwrite and prior is not None:
-            # the swap above is the commit point: prior parts are now
-            # unreferenced, and removing them is pure housekeeping —
-            # a crash mid-sweep leaves orphan files the manifest never
-            # serves
-            for f in set(prior["files"]) - files:
-                try:
-                    os.remove(os.path.join(self._path, f))
-                except OSError:
-                    pass
-
-    def abort(self, messages) -> None:
-        for m in messages:
-            if m and m.file:
-                try:
-                    os.remove(os.path.join(self._path, m.file))
-                except OSError:
-                    pass

@@ -610,13 +610,6 @@ def read_sources_with_errors(
     return dfs, errors
 
 
-def load_sf_tables(
-    spark: SparkSession, sf_dir: str, tables: Sequence[str] = TPCH_TABLES
-) -> dict[str, DataFrame]:
-    """Load the driver-generated test tables from an sf directory."""
-    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in tables}
-
-
 def preview(df: DataFrame, n: int = 5) -> list:
     """Preview sink (S7, ref:185/193): bounded collect of ``limit(n)``."""
     return df.limit(n).collect()

@@ -1,10 +1,10 @@
-"""Bucketed table sinks — the co-located-join layout.
+"""Table-layout maintenance on immutable parquet files.
 
-Writing both sides of a recurring join bucketed by the join key into
-the same bucket count lets every subsequent join run with NO exchange
-of either side: each task reads matching bucket files directly. At
-100 TB this turns the nightly fact-dim join from a full shuffle into
-a local merge.
+``compact_files`` rewrites a table that decayed into many small files
+as ~target-size files, and ``write_zordered`` clusters a table by the
+Morton key of several columns so a predicate on any of them skips most
+files. Row-level deletes and merges are versioned by
+``sources.manifest``.
 """
 
 from __future__ import annotations
@@ -12,28 +12,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: Sequence[str],
-    num_buckets: int = 16,
-    path: str | None = None,
-    sort_cols: Sequence[str] | None = None,
-) -> None:
-    """Persist as a bucketed (optionally sorted) table. Sorting within
-    buckets additionally removes the Sort from sort-merge joins."""
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    if path:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table_name)
-
-
-def read_table(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
 
 
 def list_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
@@ -99,103 +77,6 @@ def compact_files(
         "bytes_before": bytes_before,
         "files_after": files_after,
         "planned_files": n_out,
-    }
-
-
-def delete_rows(
-    spark: SparkSession,
-    src_path: str,
-    dst_path: str,
-    predicate,
-    fmt: str = "parquet",
-    partition_by: Sequence[str] | None = None,
-) -> dict[str, int]:
-    """Targeted row deletion — the GDPR/right-to-be-forgotten rewrite,
-    a DELETE on an immutable-file lake.
-
-    At 100 TB the only affordable DELETE rewrites the FILES THAT
-    CONTAIN MATCHES, not the table: with a clustered layout
-    (``write_zordered`` / partitioning) a selective predicate touches
-    a handful of files, so deletion cost tracks the deleted data, not
-    the table size.
-
-    1. Find affected files: one scan with the predicate pushed down,
-       ``input_file_name()`` distinct — driver traffic is O(matching
-       files), the same metadata scale any planner handles.
-    2. Rewrite ONLY those files with the predicate inverted.
-    3. Carry every untouched file into ``dst_path`` by FileUtil copy,
-       preserving relative subpaths (a production lake swaps manifest
-       pointers / renames instead — zero data movement; the copy here
-       is the filesystem-portable equivalent).
-
-    Side-dir contract as in :func:`compact_files`. For
-    partition-dir layouts pass ``partition_by`` so rewritten rows land
-    back in their partition directories.
-
-    Returns {files_total, files_affected, rows_deleted}.
-    """
-    from urllib.parse import unquote, urlparse
-
-    from pyspark.sql import functions as F
-
-    def _norm(p: str) -> str:
-        return unquote(urlparse(p).path)
-
-    df = spark.read.format(fmt).load(src_path)
-    # one pushdown-pruned pass: matching files AND the deleted-row
-    # count together (no post-hoc full-table recount)
-    per_file = (
-        df.where(predicate)
-        .groupBy(F.input_file_name().alias("f"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    affected = sorted(r["f"] for r in per_file)
-    rows_deleted = int(sum(r["n"] for r in per_file))
-    all_files = list_data_files(spark, src_path)
-    affected_norm = {_norm(p) for p in affected}
-    untouched = [p for p, _ in all_files if _norm(p) not in affected_norm]
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    dst_root = HPath(dst_path)
-    fs = dst_root.getFileSystem(hconf)
-    fs.mkdirs(dst_root)
-
-    if affected:
-        # DELETE semantics match Delta/ANSI: rows where the predicate
-        # is TRUE are deleted; rows where it evaluates NULL are KEPT.
-        # A bare ~predicate would drop NULL-evaluating rows too (only
-        # in files containing a true match — silently co-location
-        # dependent), so null-safe it with coalesce(…, false).
-        kept = (
-            spark.read.format(fmt)
-            .option("basePath", src_path)
-            .load(affected)
-            .where(~F.coalesce(predicate, F.lit(False)))
-        )
-        writer = kept.write.mode("overwrite").format(fmt)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(dst_path)
-        # overwrite wiped dst: re-create root before the copies below
-        fs.mkdirs(dst_root)
-
-    src_prefix = _norm(
-        HPath(src_path).getFileSystem(hconf).makeQualified(HPath(src_path)).toString()
-    ).rstrip("/")
-    for p in untouched:
-        rel = _norm(p)[len(src_prefix):].lstrip("/")
-        target = HPath(dst_path + "/" + rel)
-        fs.mkdirs(target.getParent())
-        jvm.org.apache.hadoop.fs.FileUtil.copy(
-            HPath(p).getFileSystem(hconf), HPath(p), fs, target, False, hconf
-        )
-    return {
-        "files_total": len(all_files),
-        "files_affected": len(affected),
-        "rows_deleted": rows_deleted,
     }
 
 

@@ -51,8 +51,8 @@ def test_interpolate_all_null_stays_null(spark):
 
 def test_ffill_leading_nulls_stay(spark):
     df = _seq_df(spark, [None, 1.0, None, None, 4.0, None])
-    out = C.ffill(df, "pos", ["v"], num_partitions=3)
-    assert _vals(out) == [None, 1.0, 1.0, 1.0, 4.0, 4.0]
+    out = C.interpolate_and_ffill(df, "pos", ["v"], num_partitions=3)
+    assert _vals(out, "v__ffill") == [None, 1.0, 1.0, 1.0, 4.0, 4.0]
 
 
 def test_coerce_numeric_cascade(spark):

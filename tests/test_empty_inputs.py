@@ -170,25 +170,26 @@ def test_r9_third_wave_ops_on_empty(spark, empty_docs):
 
 
 def test_r11_ops_on_empty(spark, tmp_path):
-    """r11 operators on empty inputs: phash table/pairs, the fused
-    temporal stage's new metadata tiers, PDF extraction, and the CDF
-    maintenance consumer over a table with no NEW versions."""
+    """r11 operators on empty inputs: media signature table and its
+    Hamming pairs, the fused temporal stage's new metadata tiers,
+    document extraction, and the CDF feed over a table root with no
+    manifests."""
     from data_integration_and_harmonization_spark.operators import dedup as DD2
     from data_integration_and_harmonization_spark.operators import multimodal as MM
-    from data_integration_and_harmonization_spark.operators.text import pdf_text_table
+    from data_integration_and_harmonization_spark.operators.text import document_text_table
 
     empty_media = spark.createDataFrame([], "media_id long, payload binary")
-    sig = DD2.image_phash_table(empty_media)
-    assert sig.columns == ["id", "sig"] and sig.count() == 0
-    assert DD2.phash_pairs(empty_media).count() == 0
+    sig = DD2.media_signature_table(empty_media)
+    assert sig.columns == ["id", "kind", "sig"] and sig.count() == 0
+    assert DD2.hamming_pairs(sig.select("id", "sig")).count() == 0
     assert MM.extract_temporal_features(empty_media).count() == 0
-    pt = pdf_text_table(empty_media, "media_id", "payload")
-    assert pt.columns == ["id", "text"] and pt.count() == 0
+    pt = document_text_table(empty_media, "media_id", "payload")
+    assert pt.columns == ["id", "fmt", "text"] and pt.count() == 0
     # a NULL-payload row never raises anywhere in the family
     nulls = spark.createDataFrame([(1, None)], "media_id long, payload binary")
-    assert DD2.image_phash_table(nulls).first()["sig"] is None
+    assert DD2.media_signature_table(nulls).first()["sig"] is None
     assert MM.extract_temporal_features(nulls).first()["kind"] is None
-    assert pdf_text_table(nulls, "media_id", "payload").first()["text"] is None
+    assert document_text_table(nulls, "media_id", "payload").first()["text"] is None
     # manifest_cdf over a table root with no manifests: clear error
     from data_integration_and_harmonization_spark.sources.cdf_stream import (
         read_manifest_cdf,

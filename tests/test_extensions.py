@@ -165,13 +165,16 @@ def test_lsh_recall_reasonable(spark, sf_dir):
 
 
 def test_language_id(spark):
-    out = {r["doc_id"]: r["lang_pred"] for r in TX.language_id(_docs(spark)).collect()}
+    out = {
+        r["doc_id"]: r["lang_pred"]
+        for r in _docs(spark).select("doc_id", TX.language_id_column().alias("lang_pred")).collect()
+    }
     assert out[1] == "en" and out[4] == "de"
     assert out[5] in ("en", "und")
 
 
 def test_quality_features_ranges(spark):
-    out = TX.quality_features(_docs(spark)).collect()
+    out = _docs(spark).select("doc_id", *TX.quality_columns()).collect()
     for r in out:
         assert 0.0 <= r["quality_score"] <= 1.0
         assert 0.0 <= r["alpha_ratio"] <= 1.0
@@ -227,25 +230,6 @@ def test_rolling_agg_hand_computed(spark):
     assert out[(1, t0 + dt.timedelta(hours=1))] == (3, 3.0)
     assert out[(1, t0 + dt.timedelta(minutes=61))] == (3, 5.0)
     assert out[(2, t0)] == (1, 100.0)
-
-
-def test_rolling_anomalies_flags_spike(spark):
-    import datetime as dt
-
-    t0 = dt.datetime(2024, 1, 1)
-    # nine calm events then one 100x spike inside the same hour; a
-    # second user stays calm throughout -> exactly one anomaly row
-    rows = [
-        (1, t0 + dt.timedelta(minutes=i), "a", 1.0 + 0.01 * i) for i in range(9)
-    ]
-    rows.append((1, t0 + dt.timedelta(minutes=9), "a", 100.0))
-    rows += [
-        (2, t0 + dt.timedelta(minutes=i), "b", 2.0 + 0.01 * (i % 3))
-        for i in range(10)
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_type string, value double")
-    out = {r["event_type"]: r["n_anomalies"] for r in EV.rolling_anomalies(df).collect()}
-    assert out == {"a": 1}
 
 
 def test_resample_ffill_densifies_and_fills(spark):
@@ -612,110 +596,6 @@ def test_line_dedup_blank_lines_and_order(spark):
     assert got[1].n_lines == 5 and got[1].n_dup_lines == 2
 
 
-def _ref_bpe(word_freqs, n_merges):
-    # straight Sennrich reference: count adjacent pairs weighted by
-    # word freq, merge the (count desc, pair lexicographic) winner
-    # greedily left-to-right, repeat
-    words = {tuple(w): f for w, f in word_freqs.items()}
-    merges = []
-    for _ in range(n_merges):
-        counts = {}
-        for syms, f in words.items():
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                counts[p] = counts.get(p, 0) + f
-        counts = {p: n for p, n in counts.items() if n >= 2}
-        if not counts:
-            break
-        best = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        merges.append(best)
-        a, b = best
-        new_words = {}
-        for syms, f in words.items():
-            out = []
-            for x in syms:
-                if out and out[-1] == a and x == b:
-                    out[-1] = a + b
-                else:
-                    out.append(x)
-            new_words[tuple(out)] = new_words.get(tuple(out), 0) + f
-        words = new_words
-    return merges
-
-
-def test_train_bpe_matches_reference(spark):
-    corpus = ["low lower lowest", "low low newer newest", "wider wide new"]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(corpus)], "doc_id long, text string"
-    )
-    freqs = {}
-    for t in corpus:
-        for w in t.split():
-            freqs[w] = freqs.get(w, 0) + 1
-    want = _ref_bpe(freqs, 8)
-    got = TX.train_bpe_merges(docs, n_merges=8)
-    assert got == want and len(got) >= 4
-
-
-def test_bpe_segment_sql_replays_merges(spark):
-    docs = spark.createDataFrame(
-        [(0, "banana banana bandana")], "doc_id long, text string"
-    )
-    merges = TX.train_bpe_merges(docs, n_merges=4)
-    seg = (
-        spark.createDataFrame([("banana",), ("aaa",)], "w string")
-        .select(TX.bpe_segment_sql("w", merges).alias("s"))
-        .collect()
-    )
-    # replaying the trainer's own merges reproduces its segmentation
-    freqs = {"banana": 2, "bandana": 1}
-    ref_words = {tuple(w): f for w, f in freqs.items()}
-    for a, b in merges:
-        new = {}
-        for syms, f in ref_words.items():
-            out = []
-            for x in syms:
-                if out and out[-1] == a and x == b:
-                    out[-1] = a + b
-                else:
-                    out.append(x)
-            new[tuple(out)] = new.get(tuple(out), 0) + f
-        ref_words = new
-    ref_banana = next(list(k) for k in ref_words if "".join(k) == "banana")
-    assert seg[0]["s"] == ref_banana
-    # greedy left-to-right on overlapping pairs: 'aaa' + ('a','a')
-    # merges once then can't re-merge the new tail with plain 'a'
-    if ("a", "a") in merges:
-        assert seg[1]["s"] in (["aa", "a"], ["aaa"])
-
-
-def test_merge_upsert_applies_cdc_batch(spark):
-    from data_integration_and_harmonization_spark.operators.relational import (
-        merge_upsert,
-    )
-
-    base = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k long, v string"
-    )
-    changes = spark.createDataFrame(
-        [(2, "B", "U"), (3, None, "D"), (4, "d", "I")],
-        "k long, v string, op string",
-    )
-    got = {r.k: r.v for r in merge_upsert(base, changes, "k").collect()}
-    assert got == {1: "a", 2: "B", 4: "d"}
-    # duplicate key in one batch is rejected
-    import pytest as _pytest
-
-    dup = spark.createDataFrame(
-        [(2, "x", "U"), (2, "y", "U")], "k long, v string, op string"
-    )
-    with _pytest.raises(ValueError):
-        merge_upsert(base, dup, "k")
-    bad = spark.createDataFrame([(9, "z", "Q")], "k long, v string, op string")
-    with _pytest.raises(ValueError):
-        merge_upsert(base, bad, "k")
-
-
 def test_bucketed_anomalies_prev_day_baseline(spark):
     import datetime as dt
 
@@ -1048,9 +928,10 @@ def test_phash64_recompression_collides_distinct_content_does_not():
 
 
 def test_phash_pairs_banded_recall_and_null_drop(spark):
-    """phash_pairs: the banded join finds every pair within hamming
-    <= bands-1 (pigeonhole-exact recall), undecodable payloads ride
-    the signature table as NULL and never pair."""
+    """Image pHash pairs (media_signature_table + hamming_pairs): the
+    banded join finds every pair within hamming <= bands-1
+    (pigeonhole-exact recall), undecodable payloads ride the signature
+    table as NULL and never pair."""
     import numpy as np
 
     from data_integration_and_harmonization_spark.functions import media_codecs as MC
@@ -1071,35 +952,17 @@ def test_phash_pairs_banded_recall_and_null_drop(spark):
         ],
         "media_id long, payload binary",
     )
-    sig = {r["id"]: r["sig"] for r in DD.image_phash_table(media).collect()}
+    table = DD.media_signature_table(media)
+    sig = {r["id"]: r["sig"] for r in table.collect()}
     assert sig[4] is None and sig[1] is not None
-    pairs = {
-        frozenset((r["id_a"], r["id_b"])): r["hamming"]
-        for r in DD.phash_pairs(media, max_hamming=3).collect()
-    }
+    image_pairs = DD.hamming_pairs(table.select("id", "sig"), max_hamming=3)
+    pairs = {frozenset((r["id_a"], r["id_b"])): r["hamming"] for r in image_pairs.collect()}
     assert frozenset((1, 2)) in pairs and pairs[frozenset((1, 2))] <= 3
     assert all(4 not in p for p in pairs)
     assert frozenset((1, 3)) not in pairs
     # pairs feed the existing clustering: one keep-decision per cluster
-    clusters = DD.duplicate_clusters(DD.phash_pairs(media, max_hamming=3)).collect()
+    clusters = DD.duplicate_clusters(image_pairs).collect()
     assert {r["id"]: r["cluster_id"] for r in clusters} == {1: 1, 2: 1}
-
-
-def test_bpe_trainer_lineage_truncation_deep_merges(spark):
-    """train_bpe_merges at n_merges far past the 16-round checkpoint
-    cadence: the nested-fold lineage is truncated, so a deep training
-    run completes without analyzer blowup AND produces the identical
-    merge sequence as the shallow runs pinned elsewhere (the
-    checkpoint must be semantically invisible)."""
-    rows = [
-        (i, " ".join(["lower lowest newer newest wider widest"] * 2))
-        for i in range(6)
-    ] + [(99, "low low low new new wide wide est est er er")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    deep = TX.train_bpe_merges(df, n_merges=40)
-    shallow = TX.train_bpe_merges(df, n_merges=12)
-    assert deep[: len(shallow)] == shallow
-    assert len(deep) > 16  # crossed at least one checkpoint boundary
 
 
 def test_audio_fingerprint_invariants_and_pairs(spark):

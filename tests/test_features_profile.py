@@ -64,69 +64,6 @@ def test_describe_object_top_freq(spark):
     assert row["top"] == "b" and row["freq"] == 2
 
 
-def test_robust_scale_median_iqr(spark):
-    # values 0..8: median 4, q1 2, q3 6 (numpy linear interpolation)
-    df = spark.createDataFrame([(float(i),) for i in range(9)], "v double")
-    out = sorted(r.v for r in FE.robust_scale(df, ["v"]).collect())
-    exp = sorted((i - 4.0) / 4.0 for i in range(9))
-    assert all(abs(a - b) < 1e-9 for a, b in zip(out, exp))
-
-
-def test_robust_scale_fit_approx_tracks_exact(spark, sf_dir):
-    """The GK-sketch fit (the 100-TB path) agrees with the exact fit
-    within 1% of IQR on a real continuous column, and is drop-in
-    interchangeable into robust_scale_transform."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_extendedprice"
-    )
-    exact = FE.robust_scale_fit(li, ["l_extendedprice"])
-    approx = FE.robust_scale_fit_approx(li, ["l_extendedprice"])
-    (med, iqr), (med_a, iqr_a) = exact["l_extendedprice"], approx["l_extendedprice"]
-    tol = abs(iqr) * 0.01
-    assert abs(med_a - med) <= tol
-    assert abs(iqr_a - iqr) <= tol
-    out = FE.robust_scale_transform(li, approx)
-    assert out.columns == ["l_extendedprice"]
-    assert out.count() == li.count()
-
-
-def test_robust_scale_fit_auto_gates_on_scale(spark):
-    """The auto fit picks the exact interpolated fit at validation
-    scale and the GK sketch above EXACT_FIT_MAX_ROWS (r9 verdict:
-    the exact percentile's single-reducer merge must never execute
-    at scale). Pinned via n_rows override: values 0..8 interpolate
-    to IQR 4.0 exactly; the sketch returns data ELEMENTS (no
-    interpolation), so q1/q3 land on 2.0/6.0 either way but the
-    median of an even split would differ — use a frame where exact
-    and approx provably diverge."""
-    # 0..9: exact median interpolates to 4.5; GK returns an element
-    df = spark.createDataFrame([(float(i),) for i in range(10)], "v double")
-    exact = FE.robust_scale_fit_auto(df, ["v"], n_rows=10)
-    assert abs(exact["v"][0] - 4.5) < 1e-9  # interpolated -> exact path
-    approx = FE.robust_scale_fit_auto(
-        df, ["v"], n_rows=FE.EXACT_FIT_MAX_ROWS + 1
-    )
-    assert float(approx["v"][0]).is_integer()  # element -> sketch path
-
-
-def test_robust_scale_zero_iqr_centers_only(spark):
-    # constant column: IQR 0 -> sklearn scale_=1, center only
-    df = spark.createDataFrame([(5.0,), (5.0,), (5.0,)], "v double")
-    assert [r.v for r in FE.robust_scale(df, ["v"]).collect()] == [0.0, 0.0, 0.0]
-
-
-def test_minmax_scale_unit_interval(spark):
-    df = spark.createDataFrame([(2.0,), (4.0,), (6.0,)], "v double")
-    assert sorted(r.v for r in FE.minmax_scale(df, ["v"]).collect()) == [
-        0.0,
-        0.5,
-        1.0,
-    ]
-    # constant column maps to 0.0 (zero-range guard)
-    c = spark.createDataFrame([(3.0,), (3.0,)], "v double")
-    assert [r.v for r in FE.minmax_scale(c, ["v"]).collect()] == [0.0, 0.0]
-
-
 def test_drift_report_hand_computed(spark):
     import math
 

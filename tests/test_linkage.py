@@ -1,18 +1,16 @@
 """Entity-resolution pins: blocking confinement, edit-threshold
 semantics, transitive closure to a deterministic min-id entity, the
-singleton-completion contract of assign_entity_ids, and the plan shape
-(blocked equi-join, never a cartesian product)."""
+singleton-completion contract of assign_entity_ids_from_links, and the
+plan shape (blocked equi-join, never a cartesian product)."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from data_integration_and_harmonization_spark.operators.linkage import (
-    assign_entity_ids,
+    assign_entity_ids_from_links,
     candidate_links,
     merge_entities,
-    phonetic_key,
     resolve_entities,
 )
 
@@ -53,7 +51,10 @@ def test_transitive_closure_min_id_label(spark):
 
 
 def test_assign_entity_ids_completes_singletons(spark):
-    out = assign_entity_ids(_df(spark), "id", "name", ["country"], max_edit=1)
+    df = _df(spark)
+    out = assign_entity_ids_from_links(
+        df, candidate_links(df, "id", "name", ["country"], max_edit=1), "id"
+    )
     got = {r.id: r.entity_id for r in out.collect()}
     # matched records share the component min; everyone else keeps
     # their own id — every input record is present exactly once
@@ -84,22 +85,6 @@ def test_null_block_key_matches_nothing(spark):
         "id long, name string, country string",
     )
     assert candidate_links(df, "id", "name", ["country"], max_edit=2).count() == 0
-
-
-def test_phonetic_blocking_recalls_sound_alikes(spark):
-    df = spark.createDataFrame(
-        [(1, "John Smyth", "US"), (2, "Jon Smith", "US"), (3, None, "US")],
-        "id long, name string, country string",
-    )
-    blocked = df.withColumn("ph", phonetic_key("name"))
-    # a strict typo threshold misses Jon Smith/John Smyth at edit 2;
-    # the phonetic key confines the looser threshold to a sound-alike
-    # block instead of loosening it corpus-wide
-    assert candidate_links(df, "id", "name", ["country"], max_edit=1).count() == 0
-    got = candidate_links(blocked, "id", "name", ["country", "ph"], max_edit=2).collect()
-    assert [(r.id_a, r.id_b) for r in got] == [(1, 2)]
-    # null name -> null phonetic key -> no pairs, not a giant block
-    assert blocked.where(F.col("id") == 3).first().ph is None
 
 
 def test_merge_entities_survivorship(spark):

@@ -991,42 +991,6 @@ def test_tiff_metadata_tier():
         MC.parse_tiff_meta(b"not tiff")
 
 
-def test_id3v2_text_frames():
-    """ID3v2 text-frame extraction: v2.4 syncsafe and v2.3 plain
-    frame sizes, all four text encodings, multi-value NUL joins,
-    tag-prefixed MP3s still walk their frames, and tagless or torn
-    payloads degrade to what parsed."""
-    tags = {"TIT2": "A Título", "TPE1": "Artist “X”", "TALB": "Album"}
-    for ver in (3, 4):
-        p = MC.encode_id3_tags(tags, version=ver) + MC.encode_mp3_meta(4)
-        assert MC.parse_id3_tags(p) == tags, ver
-        # the tag-skip arithmetic keeps the frame walk intact
-        assert MC.parse_mp3_meta(p)["n_frames"] == 4
-    # per-encoding bytes: latin-1 / UTF-16 BOM / UTF-16BE / UTF-8
-    import struct as _s
-
-    frames = b""
-    for enc_byte, enc in ((0, "latin-1"), (1, "utf-16"), (2, "utf-16-be"), (3, "utf-8")):
-        payload = bytes([enc_byte]) + "téxt".encode(enc)
-        frames += (
-            f"TXX{enc_byte}".encode() + _s.pack(">I", len(payload))
-            + b"\x00\x00" + payload
-        )
-    L = len(frames)
-    tag = b"ID3\x03\x00\x00" + bytes(
-        [(L >> 21) & 0x7F, (L >> 14) & 0x7F, (L >> 7) & 0x7F, L & 0x7F]
-    ) + frames
-    got = MC.parse_id3_tags(tag)
-    assert got == {f"TXX{i}": "téxt" for i in range(4)}
-    # multi-value v2.4 NUL separators join with \x1f
-    multi = MC.encode_id3_tags({"TPE1": "a\x00b"}, version=4)
-    assert MC.parse_id3_tags(multi) == {"TPE1": "a\x1fb"}
-    # tagless and torn
-    assert MC.parse_id3_tags(MC.encode_mp3_meta(2)) == {}
-    torn = MC.encode_id3_tags(tags)[:20]
-    assert isinstance(MC.parse_id3_tags(torn), dict)
-
-
 def test_ogg_opus_metadata_tier():
     """Ogg/Opus metadata tier: page walk + OpusHead arithmetic
     (granules tick at 48 kHz, duration subtracts the pre-skip),

@@ -9,7 +9,6 @@ import tempfile
 import pytest
 from pyspark.sql import types as T
 
-from data_integration_and_harmonization_spark.operators import features as FE
 from data_integration_and_harmonization_spark.operators import harmonize as H
 from data_integration_and_harmonization_spark.sources import readers as R
 
@@ -29,15 +28,6 @@ def test_read_sources_skips_bad_files(spark, sf_dir):
 def test_read_sources_strict_raises(spark, sf_dir):
     with pytest.raises(Exception):
         R.read_sources(spark, ["/nonexistent/x.parquet"], skip_errors=False)
-
-
-def test_label_roundtrip(spark):
-    df = spark.createDataFrame([("b",), ("a",), (None,), ("c",)], "v string")
-    enc, maps = FE.label_encode(df, ["v"])
-    back = FE.label_decode(enc, "v", maps["v"])
-    vals = sorted((r["v"] or "") for r in back.collect())
-    # null became "nan" on encode (ref:50 astype(str)) and stays "nan"
-    assert vals == ["a", "b", "c", "nan"]
 
 
 @pytest.mark.parametrize(

@@ -159,9 +159,9 @@ def test_compact_shrink_plan_is_narrow(spark, sf_dir, tmp_path):
 
 
 def test_delete_affected_file_scan_pushes_predicate(spark, sf_dir, tmp_path):
-    """delete_rows' affected-file search must reach the parquet reader
-    as a pushed filter: that's what lets stats/zorder confine the scan
-    to few row groups at scale."""
+    """delete_rows_versioned's affected-file search must reach the
+    parquet reader as a pushed filter: that's what lets stats/zorder
+    confine the scan to few row groups at scale."""
     src = str(tmp_path / "s.parquet")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_quantity"

@@ -38,13 +38,17 @@ def test_pre_partitioned_matches_default_when_contract_holds(spark):
 
 def test_pre_partitioned_ffill_contract(spark):
     df = _base(spark)
-    expected = {r["pos"]: r["v"] for r in C.ffill(df, "pos", ["v"]).collect()}
+    expected = {
+        r["pos"]: r["v__ffill"] for r in C.interpolate_and_ffill(df, "pos", ["v"]).collect()
+    }
     ranged = df.repartitionByRange(4, F.col("pos")).persist()
     ranged.count()
     try:
         got = {
-            r["pos"]: r["v"]
-            for r in C.ffill(ranged, "pos", ["v"], pre_partitioned=True).collect()
+            r["pos"]: r["v__ffill"]
+            for r in C.interpolate_and_ffill(
+                ranged, "pos", ["v"], pre_partitioned=True
+            ).collect()
         }
         assert got == expected
     finally:

@@ -144,16 +144,19 @@ name_strat = st.text(
 )
 @SET
 def test_entity_ids_total_and_stable(spark, rows):
-    """assign_entity_ids is total (every record labeled exactly once),
-    labels are component minima (entity_id <= id for every member),
-    and co-members always share a block — blocking is never crossed."""
+    """assign_entity_ids_from_links over candidate_links is total
+    (every record labeled exactly once), labels are component minima
+    (entity_id <= id for every member), and co-members always share a
+    block — blocking is never crossed."""
     from data_integration_and_harmonization_spark.operators.linkage import (
-        assign_entity_ids,
+        assign_entity_ids_from_links,
+        candidate_links,
     )
 
     data = [(i, nm, blk) for i, (nm, blk) in enumerate(rows)]
     df = spark.createDataFrame(data, "id long, name string, blk string")
-    out = assign_entity_ids(df, "id", "name", ["blk"], max_edit=2).collect()
+    links = candidate_links(df, "id", "name", ["blk"], max_edit=2)
+    out = assign_entity_ids_from_links(df, links, "id").collect()
     assert len(out) == len(data)
     by_id = {r.id: r.entity_id for r in out}
     assert set(by_id) == {i for i, _, _ in data}

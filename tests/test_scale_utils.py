@@ -1,14 +1,11 @@
-"""Scale utilities: salted joins equal unsalted; bucketed tables join
-without an exchange."""
+"""Scale utilities: salted joins equal unsalted, the persist registry
+releases, and deterministic shuffles, samples and source mixes."""
 
 from __future__ import annotations
-
-import tempfile
 
 from pyspark.sql import functions as F
 
 from data_integration_and_harmonization_spark.functions.skew import salted_join
-from data_integration_and_harmonization_spark.sources import writers as W
 
 
 def _canon(df):
@@ -36,31 +33,6 @@ def test_salted_left_join_keeps_unmatched(spark):
     assert rows == {1: "X", 2: "Y", 99: None}
 
 
-def test_bucketed_join_has_no_exchange(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
-    )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
-    )
-    with tempfile.TemporaryDirectory(prefix="dih_bkt_") as d:
-        W.write_bucketed(li, "t_li_b", ["l_orderkey"], 8, path=f"{d}/li")
-        W.write_bucketed(orders, "t_ord_b", ["l_orderkey"], 8, path=f"{d}/ord")
-        a = W.read_table(spark, "t_li_b")
-        b = W.read_table(spark, "t_ord_b")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            j = a.join(b, "l_orderkey")
-            plan = j._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in plan, plan[:2000]
-            # and it still computes the right thing
-            assert j.count() == li.join(orders, "l_orderkey").count()
-        finally:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-            spark.sql("DROP TABLE IF EXISTS t_li_b")
-            spark.sql("DROP TABLE IF EXISTS t_ord_b")
-
-
 def test_persist_registry_releases(spark, sf_dir):
     """with_global_index/_repair_plan persists are tracked and released
     at query boundaries — no session-lifetime cache leak (r1 VERDICT)."""
@@ -68,14 +40,11 @@ def test_persist_registry_releases(spark, sf_dir):
     from data_integration_and_harmonization_spark.functions.indexing import with_global_index
 
     caching.release_all()
-    base = caching.tracked_count()
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select("l_orderkey", "l_linenumber")
     idx = with_global_index(li, ["l_orderkey", "l_linenumber"], index_col="pos")
     idx.count()
-    assert caching.tracked_count() == base + 1
-    released = caching.release_all()
-    assert released >= 1
-    assert caching.tracked_count() == 0
+    assert caching.release_all() == 1  # the one frame tracked since the last release
+    assert caching.release_all() == 0  # and nothing is left tracked
 
 
 def test_deterministic_shuffle_reproducible_and_complete(spark, sf_dir):

@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_integration_and_harmonization_spark.sources import readers as R
-from data_integration_and_harmonization_spark.sources import writers as W
 
 
 @pytest.fixture(scope="module")
@@ -141,29 +140,6 @@ def test_orc_roundtrip(spark, tmpdir):
     src.write.mode("overwrite").orc(p)
     df = R.read_any(spark, p, fmt="orc")
     assert sorted((r["k"], r["v"]) for r in df.collect()) == [(1, "a"), (2, "b")]
-
-
-def test_bucketed_join_skips_shuffle(spark):
-    left = spark.range(0, 1000).selectExpr("id AS k", "id * 2 AS a")
-    right = spark.range(0, 1000).selectExpr("id AS k", "id * 3 AS b")
-    W.write_bucketed(left, "bkt_left", ["k"], 8, sort_cols=["k"])
-    W.write_bucketed(right, "bkt_right", ["k"], 8, sort_cols=["k"])
-    # disable broadcast so the planner exercises the bucketed path (at
-    # real scale neither side of a fact-fact join is broadcastable;
-    # with tiny test tables broadcast would win and bypass bucketing)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = spark.table("bkt_left").join(spark.table("bkt_right"), "k")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        # both sides bucketed on the join key -> zero Exchange operators
-        assert "Exchange" not in plan
-        assert "Bucketed: true" in plan
-        assert j.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bkt_left")
-        spark.sql("DROP TABLE IF EXISTS bkt_right")
 
 
 def test_read_txt_line_corpus(spark, tmp_path):
@@ -383,132 +359,51 @@ def test_compact_files_shrinks_and_preserves(spark, sf_dir, tmp_path):
 def test_compact_files_grow_path(spark, sf_dir, tmp_path):
     from data_integration_and_harmonization_spark.sources.writers import (
         compact_files,
+        list_data_files,
     )
 
     src = str(tmp_path / "one.parquet")
     dst = str(tmp_path / "split.parquet")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     docs.coalesce(1).write.mode("overwrite").parquet(src)
-    # 1-byte budget forces n_out > files_before: the grow path shuffles
-    stats = compact_files(spark, src, dst, target_bytes=1)
+    # a third of the listed bytes per output plans 3 files from 1: the
+    # grow path shuffles (a 1-byte budget would plan one task per byte)
+    bytes_before = sum(sz for _, sz in list_data_files(spark, src))
+    target = -(-bytes_before // 3)
+    stats = compact_files(spark, src, dst, target_bytes=target)
     assert stats["files_before"] == 1
-    assert stats["planned_files"] == stats["bytes_before"]
+    assert stats["bytes_before"] == bytes_before
+    assert stats["planned_files"] == -(-stats["bytes_before"] // target) == 3
+    assert stats["planned_files"] > stats["files_before"]
     assert stats["files_after"] > 1
     assert spark.read.parquet(dst).count() == docs.count()
-
-
-def test_compact_files_shrinks_and_preserves(spark, sf_dir, tmp_path):
-    from data_integration_and_harmonization_spark.sources.writers import (
-        compact_files,
-        list_data_files,
-    )
-
-    src = str(tmp_path / "shattered.parquet")
-    dst = str(tmp_path / "compacted.parquet")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    docs.repartition(16).write.mode("overwrite").parquet(src)
-    assert len(list_data_files(spark, src)) >= 16
-    stats = compact_files(spark, src, dst, target_bytes=64 << 20)
-    assert stats["files_before"] >= 16
-    assert stats["planned_files"] == 1  # tiny table, one 64 MiB budget
-    assert stats["files_after"] < stats["files_before"]
-    assert stats["files_after"] <= stats["planned_files"]
-    # content moved exactly once, losslessly
-    a = sorted(r["doc_id"] for r in spark.read.parquet(dst).collect())
-    b = sorted(r["doc_id"] for r in docs.collect())
-    assert a == b
-    assert spark.read.parquet(dst).schema == docs.schema
-
-
-def test_compact_files_grow_path(spark, sf_dir, tmp_path):
-    from data_integration_and_harmonization_spark.sources.writers import (
-        compact_files,
-    )
-
-    src = str(tmp_path / "one.parquet")
-    dst = str(tmp_path / "split.parquet")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    docs.coalesce(1).write.mode("overwrite").parquet(src)
-    # 1-byte budget forces n_out > files_before: the grow path shuffles
-    stats = compact_files(spark, src, dst, target_bytes=1)
-    assert stats["files_before"] == 1
-    assert stats["planned_files"] == stats["bytes_before"]
-    assert stats["files_after"] > 1
-    assert spark.read.parquet(dst).count() == docs.count()
-
-
-def test_delete_rows_targets_only_matching_files(spark, sf_dir, tmp_path):
-    from data_integration_and_harmonization_spark.sources.writers import (
-        delete_rows,
-        list_data_files,
-    )
-    from pyspark.sql import functions as F
-
-    src = str(tmp_path / "lake.parquet")
-    dst = str(tmp_path / "lake_deleted.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity", "l_returnflag"
-    )
-    # sort by orderkey into 8 range files => a key-range predicate hits
-    # a strict subset of files
-    li.repartitionByRange(8, "l_orderkey").sortWithinPartitions(
-        "l_orderkey"
-    ).write.mode("overwrite").parquet(src)
-    pred = (F.col("l_orderkey") >= 1000) & (F.col("l_orderkey") < 1500)
-    n_match = li.where(pred).count()
-    assert n_match > 0
-    stats = delete_rows(spark, src, dst, pred)
-    assert stats["files_total"] == 8
-    assert 0 < stats["files_affected"] < stats["files_total"]
-    assert stats["rows_deleted"] == n_match
-    out = spark.read.parquet(dst)
-    assert out.count() == li.count() - n_match
-    assert out.where(pred).count() == 0
-    # untouched rows byte-identical (same multiset of keys)
-    a = sorted(r["l_orderkey"] for r in out.collect())
-    b = sorted(r["l_orderkey"] for r in li.where(~pred).collect())
-    assert a == b
-    # untouched files carried over without rewrite: dst holds MORE
-    # files than the rewrite alone would produce
-    assert len(list_data_files(spark, dst)) >= stats["files_total"] - stats["files_affected"]
-
-
-def test_delete_rows_partitioned_layout(spark, sf_dir, tmp_path):
-    from data_integration_and_harmonization_spark.sources.writers import (
-        delete_rows,
-    )
-    from pyspark.sql import functions as F
-
-    src = str(tmp_path / "part_lake.parquet")
-    dst = str(tmp_path / "part_lake_deleted.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity", "l_returnflag"
-    )
-    li.write.mode("overwrite").partitionBy("l_returnflag").parquet(src)
-    pred = F.col("l_returnflag") == "A"
-    stats = delete_rows(spark, src, dst, pred, partition_by=["l_returnflag"])
-    assert stats["files_affected"] < stats["files_total"]
-    out = spark.read.parquet(dst)
-    assert out.where(pred).count() == 0
-    assert out.count() == li.where(~pred).count()
-    # partition pruning still works on the rewritten lake
-    assert "l_returnflag" in out.columns
 
 
 def test_delete_rows_no_matches_copies_everything(spark, sf_dir, tmp_path):
-    from data_integration_and_harmonization_spark.sources.writers import (
-        delete_rows,
-    )
+    """A predicate matching nothing rewrites nothing: the new version
+    references every file of the old one and serves every row."""
     from pyspark.sql import functions as F
 
+    from data_integration_and_harmonization_spark.sources.manifest import (
+        commit_version,
+        delete_rows_versioned,
+        read_manifest,
+        read_version,
+    )
+
+    root = str(tmp_path / "nm_tbl")
     src = str(tmp_path / "nm.parquet")
-    dst = str(tmp_path / "nm_out.parquet")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     docs.repartition(4).write.mode("overwrite").parquet(src)
-    stats = delete_rows(spark, src, dst, F.col("doc_id") < 0)
+    v1 = commit_version(spark, root, src)
+    stats = delete_rows_versioned(spark, root, str(tmp_path / "nm_rw"), F.col("doc_id") < 0)
     assert stats["files_affected"] == 0
     assert stats["rows_deleted"] == 0
-    assert spark.read.parquet(dst).count() == docs.count()
+    def files(v):
+        return {f["path"] for f in read_manifest(spark, root, v)["files"]}
+
+    assert files(stats["version"]) == files(v1)
+    assert read_version(spark, root, stats["version"]).count() == docs.count()
 
 
 def test_delete_rows_null_predicate_rows_are_kept(spark, tmp_path):
@@ -522,7 +417,6 @@ def test_delete_rows_null_predicate_rows_are_kept(spark, tmp_path):
         read_version,
     )
     from data_integration_and_harmonization_spark.sources.writers import (
-        delete_rows,
         list_data_files,
     )
     from pyspark.sql import functions as F
@@ -546,13 +440,6 @@ def test_delete_rows_null_predicate_rows_are_kept(spark, tmp_path):
         shutil.copy(part, Path(src) / f"file{i}.parquet")
     pred = F.col("v") > 7  # TRUE for id=1, NULL for id in (2,4)
 
-    dst = str(tmp_path / "nullpred_out.parquet")
-    stats = delete_rows(spark, src, dst, pred)
-    assert stats["rows_deleted"] == 1
-    kept = sorted(r["id"] for r in spark.read.parquet(dst).collect())
-    assert kept == [2, 3, 4, 5], kept  # NULL rows 2 and 4 both kept
-
-    # same semantics on the manifest variant
     root = str(tmp_path / "mtab")
     files = [{"path": p, "bytes": b} for p, b in list_data_files(spark, src)]
     commit_files(spark, root, files, note="init")
@@ -562,7 +449,7 @@ def test_delete_rows_null_predicate_rows_are_kept(spark, tmp_path):
     vkept = sorted(
         r["id"] for r in read_version(spark, root, vstats["version"]).collect()
     )
-    assert vkept == [2, 3, 4, 5], vkept
+    assert vkept == [2, 3, 4, 5], vkept  # NULL rows 2 and 4 both kept
 
 
 def test_manifest_versions_time_travel(spark, sf_dir, tmp_path):
@@ -652,11 +539,9 @@ def test_vacuum_spares_files_shared_with_kept_version(spark, sf_dir, tmp_path):
 
     from data_integration_and_harmonization_spark.sources.manifest import (
         commit_version,
+        delete_rows_versioned,
         read_version,
         vacuum,
-    )
-    from data_integration_and_harmonization_spark.sources.writers import (
-        delete_rows,
     )
 
     root = str(tmp_path / "tbl")
@@ -670,12 +555,15 @@ def test_vacuum_spares_files_shared_with_kept_version(spark, sf_dir, tmp_path):
     ).write.mode("overwrite").parquet(d1)
     commit_version(spark, root, d1)
     pred = (F.col("l_orderkey") >= 1000) & (F.col("l_orderkey") < 1500)
-    stats = delete_rows(spark, d1, d2, pred)
-    # v2 = d2's files (rewritten + carried copies): nothing of d1
-    v2 = commit_version(spark, root, d2)
+    stats = delete_rows_versioned(spark, root, d2, pred)
+    # v2 = the rewritten files plus every untouched d1 file in place:
+    # vacuuming v1 deletes only the affected d1 files
+    v2 = stats["version"]
     out = vacuum(spark, root, keep_versions=[v2])
-    assert len(out["deleted"]) == stats["files_total"]
+    assert 0 < stats["files_affected"] < stats["files_total"]
+    assert len(out["deleted"]) == stats["files_affected"]
     assert read_version(spark, root, v2).where(pred).count() == 0
+    assert read_version(spark, root, v2).count() == li.count() - stats["rows_deleted"]
 
 
 def test_delete_rows_versioned_zero_copy_and_cdf(spark, sf_dir, tmp_path):
@@ -1065,125 +953,6 @@ def test_read_csv_audited_routes_corrupt_records(spark, tmp_path):
     ]
 
 
-def test_xlsx_corpus_writer_roundtrip(spark, tmp_path):
-    """The distributed xlsx SINK: one workbook per non-empty
-    partition, _SUCCESS manifest, overwrite semantics, and a full
-    write -> corpus-read roundtrip."""
-    from data_integration_and_harmonization_spark.sources.pyds import (
-        read_xlsx_corpus,
-        write_xlsx_corpus,
-    )
-
-    out = str(tmp_path / "export")
-    df = spark.range(10).select(
-        F.col("id"), (F.col("id") * 2).alias("twice")
-    ).repartition(3)
-    write_xlsx_corpus(df, out)
-    import os
-
-    import json
-
-    parts = sorted(f for f in os.listdir(out) if f.endswith(".xlsx"))
-    assert 1 <= len(parts) <= 3
-    manifest = json.load(open(os.path.join(out, "_SUCCESS")))
-    assert manifest["files"] == parts and manifest["columns"] == ["id", "twice"]
-    back = read_xlsx_corpus(spark, out)
-    got = sorted((int(r["id"]), int(r["twice"])) for r in back.collect())
-    assert got == [(i, 2 * i) for i in range(10)]
-    # append adds parts and merges the manifest
-    write_xlsx_corpus(df.limit(3), out, mode="append")
-    assert read_xlsx_corpus(spark, out).count() == 13
-    manifest2 = json.load(open(os.path.join(out, "_SUCCESS")))
-    assert len(manifest2["files"]) == len(
-        [f for f in os.listdir(out) if f.endswith(".xlsx")]
-    )
-    # a torn/speculative attempt's file on disk but OUTSIDE the
-    # manifest is never served
-    open(os.path.join(out, "part-99999-deadbeef.xlsx"), "wb").write(b"torn")
-    assert read_xlsx_corpus(spark, out).count() == 13
-    # append with different columns is refused (misaligned NULLs
-    # otherwise), and so is a _src_file column
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="column mismatch"):
-        write_xlsx_corpus(
-            df.selectExpr("id", "twice AS thrice"), out, mode="append"
-        )
-    with _pytest.raises(Exception, match="_src_file"):
-        write_xlsx_corpus(
-            df.selectExpr("id", "'x' AS _src_file"), out, mode="append"
-        )
-    # overwrite replaces, never appends
-    write_xlsx_corpus(df.limit(4), out)
-    assert read_xlsx_corpus(spark, out).count() == 4
-    # an EMPTY committed corpus reads back as an empty frame with the
-    # manifest's schema (the write->read roundtrip is total)
-    empty_out = str(tmp_path / "export_empty")
-    write_xlsx_corpus(df.where(F.lit(False)), empty_out)
-    e = read_xlsx_corpus(spark, empty_out)
-    assert e.columns == ["id", "twice", "_src_file"] and e.count() == 0
-
-
-def test_xlsx_corpus_failed_overwrite_preserves_prior(spark, tmp_path):
-    """Overwrite destruction is deferred to commit(): a job that fails
-    mid-write leaves the previously committed corpus fully readable
-    (old parts + manifest untouched); only a SUCCESSFUL overwrite
-    swaps the manifest and reaps the replaced parts."""
-    import os
-
-    from data_integration_and_harmonization_spark.sources.pyds import (
-        read_xlsx_corpus,
-        write_xlsx_corpus,
-    )
-
-    out = str(tmp_path / "export_ow")
-    v1 = spark.range(5).select(F.col("id"), (F.col("id") + 1).alias("nxt"))
-    write_xlsx_corpus(v1, out)
-    assert read_xlsx_corpus(spark, out).count() == 5
-    old_parts = {f for f in os.listdir(out) if f.endswith(".xlsx")}
-
-    # an overwrite whose tasks FAIL: the job aborts before commit()
-    import pytest as _pytest
-
-    bad = spark.range(3).select(
-        F.col("id"),
-        F.assert_true(F.col("id") < 0).alias("nxt"),  # every row raises
-    )
-    with _pytest.raises(Exception):
-        write_xlsx_corpus(bad, out, mode="overwrite")
-    # prior corpus intact: same manifest, same parts, same rows
-    assert {f for f in os.listdir(out) if f.endswith(".xlsx")} >= old_parts
-    assert read_xlsx_corpus(spark, out).count() == 5
-
-    # a SUCCESSFUL overwrite swaps the manifest and reaps old parts
-    write_xlsx_corpus(v1.limit(2), out, mode="overwrite")
-    assert read_xlsx_corpus(spark, out).count() == 2
-    assert not (
-        {f for f in os.listdir(out) if f.endswith(".xlsx")} & old_parts
-    )
-
-
-def test_xlsx_corpus_torn_manifest_raises(spark, tmp_path):
-    """A _SUCCESS manifest that exists but cannot be parsed must
-    RAISE, not silently fall back to globbing (which would serve
-    uncommitted torn/speculative part files as data)."""
-    import os
-
-    import pytest as _pytest
-
-    from data_integration_and_harmonization_spark.sources.pyds import (
-        read_xlsx_corpus,
-        write_xlsx_corpus,
-    )
-
-    out = str(tmp_path / "export_torn")
-    write_xlsx_corpus(spark.range(3).select("id"), out)
-    with open(os.path.join(out, "_SUCCESS"), "w") as fh:
-        fh.write('{"columns": ["id"], "fil')  # torn mid-write
-    with _pytest.raises(Exception, match="unreadable"):
-        read_xlsx_corpus(spark, out).count()
-
-
 def test_pdf_codec_roundtrip_and_string_grammar():
     """functions/pdf.py: the fixture writer round-trips through the
     baseline extractor (pages newline-joined, escapes intact), and the
@@ -1235,12 +1004,13 @@ def test_pdf_codec_roundtrip_and_string_grammar():
 
 
 def test_pdf_text_table_distributed_extraction(spark):
-    """operators/text.pdf_text_table: one Arrow stage, NULL for
-    non-PDF payloads, extracted text feeds document_profile."""
+    """operators/text.document_text_table over PDF payloads: one Arrow
+    stage, fmt/text NULL for non-PDF payloads, extracted text feeds
+    document_profile."""
     from data_integration_and_harmonization_spark.functions import pdf as P
     from data_integration_and_harmonization_spark.operators.text import (
         document_profile,
-        pdf_text_table,
+        document_text_table,
     )
 
     df = spark.createDataFrame(
@@ -1251,12 +1021,12 @@ def test_pdf_text_table_distributed_extraction(spark):
         ],
         "doc_id long, payload binary",
     )
-    rows = {r["id"]: r["text"] for r in pdf_text_table(df).collect()}
-    assert rows[1] == "alpha beta gamma\ndelta"
-    assert rows[2] == "the quick brown fox"
-    assert rows[3] is None
+    rows = {r["id"]: (r["fmt"], r["text"]) for r in document_text_table(df).collect()}
+    assert rows[1] == ("pdf", "alpha beta gamma\ndelta")
+    assert rows[2] == ("pdf", "the quick brown fox")
+    assert rows[3] == (None, None)
     prof = document_profile(
-        pdf_text_table(df).where(F.col("text").isNotNull()).select(
+        document_text_table(df).where(F.col("text").isNotNull()).select(
             F.col("id").alias("doc_id"), "text"
         )
     ).collect()
@@ -1336,7 +1106,7 @@ def test_read_srt_transcript_corpus(spark, tmp_path):
 
 def test_pdf_text_free_payload_returns_null():
     """A structurally valid PDF that shows no text extracts as None
-    (not ''), honoring the quarantine contract pdf_text_table/read_any
+    (not ''), honoring the quarantine contract document_text_table/read_any
     document: isNotNull filters must exclude text-free documents."""
     from data_integration_and_harmonization_spark.functions import pdf as P
 
@@ -1400,10 +1170,10 @@ def test_docx_codec_roundtrip_and_grammar():
 def test_docx_front_door_and_text_table(spark, tmp_path):
     """read_any(fmt='docx') over a directory of workbooks-of-words:
     distributed binaryFile scan + one Arrow stage -> (text, _src_file);
-    operators.text.docx_text_table gives the (id, text) corpus shape
-    with NULL quarantine for alien payloads."""
+    operators.text.document_text_table gives the (id, fmt, text) corpus
+    shape with NULL quarantine for alien payloads."""
     from data_integration_and_harmonization_spark.operators.text import (
-        docx_text_table,
+        document_text_table,
     )
     from data_integration_and_harmonization_spark.sources import docx as D
     from data_integration_and_harmonization_spark.sources.readers import read_any
@@ -1427,8 +1197,8 @@ def test_docx_front_door_and_text_table(spark, tmp_path):
         ],
         "doc_id long, payload binary",
     )
-    got = {r["id"]: r["text"] for r in docx_text_table(df).collect()}
-    assert got == {1: "alpha", 2: None, 3: None}
+    got = {r["id"]: (r["fmt"], r["text"]) for r in document_text_table(df).collect()}
+    assert got == {1: ("docx", "alpha"), 2: (None, None), 3: (None, None)}
 
 
 def test_avro_front_door(spark, tmp_path):

@@ -682,65 +682,6 @@ def test_manifest_cdf_stream_matches_batch_version_diff(spark, tmp_path):
     assert rows(got2) == sorted(rows(got) + [(v4, "added", 99)])
 
 
-def test_stream_cdf_profile_maintenance_incremental_and_idempotent(spark, tmp_path):
-    """stream_cdf_profile_maintenance: the profile store tracks a
-    versioned table through the CDF stream — estimates equal a
-    full-table profile after catch-up, a later commit adds ONE store
-    batch (history never rescanned), and a replayed drain with the
-    same checkpoint admits nothing twice."""
-    from data_integration_and_harmonization_spark.operators import profile as P
-    from data_integration_and_harmonization_spark.sources.cdf_stream import (
-        stream_cdf_profile_maintenance,
-    )
-    from data_integration_and_harmonization_spark.sources.manifest import (
-        commit_files,
-        commit_version,
-        read_manifest,
-    )
-    from data_integration_and_harmonization_spark.sources.writers import (
-        list_data_files,
-    )
-
-    root = str(tmp_path / "tbl")
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-    d1 = str(tmp_path / "d1")
-    spark.range(500).select(
-        F.col("id").alias("k"), (F.col("id") % 17).cast("string").alias("lab")
-    ).coalesce(2).write.parquet(d1)
-    commit_version(spark, root, d1, note="base")
-
-    stream_cdf_profile_maintenance(spark, root, store, ["k", "lab"], ckpt)
-    est = {r["col_name"]: r for r in P.profile_store_estimate(spark, store).collect()}
-    assert est["k"]["n_rows"] == 500
-    assert abs(est["k"]["est_distinct"] - 500) <= 0.05 * 500
-    assert est["lab"]["est_distinct"] == 17.0
-    n_batches_1 = est["k"]["n_batches"]
-
-    # replayed drain (same checkpoint, no new commits): store unchanged
-    stream_cdf_profile_maintenance(spark, root, store, ["k", "lab"], ckpt)
-    est2 = {r["col_name"]: r for r in P.profile_store_estimate(spark, store).collect()}
-    assert est2["k"]["n_rows"] == 500 and est2["k"]["n_batches"] == n_batches_1
-
-    # a new commit: exactly one more store batch, increment-only
-    d2 = str(tmp_path / "d2")
-    spark.range(500, 800).select(
-        F.col("id").alias("k"), (F.col("id") % 17).cast("string").alias("lab")
-    ).coalesce(1).write.parquet(d2)
-    commit_files(
-        spark,
-        root,
-        read_manifest(spark, root)["files"]
-        + [{"path": p, "bytes": b} for p, b in list_data_files(spark, d2)],
-        note="append",
-    )
-    stream_cdf_profile_maintenance(spark, root, store, ["k", "lab"], ckpt)
-    est3 = {r["col_name"]: r for r in P.profile_store_estimate(spark, store).collect()}
-    assert est3["k"]["n_rows"] == 800
-    assert est3["k"]["n_batches"] == n_batches_1 + 1
-    assert abs(est3["k"]["est_distinct"] - 800) <= 0.05 * 800
-
-
 def test_stream_cdf_neardedup_maintenance_matches_batch_store(spark, tmp_path):
     """stream_cdf_neardedup_maintenance: after a multi-version drain
     the streamed signature store equals the batch-built store
