@@ -1,8 +1,13 @@
 """Stdlib+numpy media codecs for the multimodal operators.
 
 This environment ships no codec library (PIL/opencv/ffmpeg), so the
-engine implements the three public formats its multimodal tests and
-fixtures need directly from their published specifications:
+engine implements the formats its multimodal operators need directly
+from their published specifications. :data:`FORMATS` (at the end of
+this module) declares each of the 14 sniffed formats once: its magic
+bytes, its modality, and which of the decoders below serve it — a
+content tier (frames or PCM samples), a metadata tier, a duration.
+The first codecs (later sections add BMP, MJPEG-in-AVI, MPEG-1 audio
+Layers I/II and the container metadata walks):
 
 - PNG  (W3C PNG spec / RFC 2083): zlib-compressed filtered scanlines.
   Supported: bit depth 8, color types 0/2/3/4/6, non-interlaced.
@@ -11,15 +16,16 @@ fixtures need directly from their published specifications:
 - JPEG (ITU-T T.81 + JFIF): baseline sequential DCT, Huffman coding.
   Supported: SOF0/SOF1, 8-bit, 1/3 components, sampling factors to
   2x2, DRI/RSTn; progressive and arithmetic raise (PIL rescue path).
-- WAV  (RIFF/PCM): via the stdlib ``wave`` module, 8/16-bit PCM.
+- WAV  (RIFF/PCM): the stdlib ``wave`` module for 8/16-bit PCM, a
+  RIFF walk for 24/32-bit PCM, IEEE float and WAVE_FORMAT_EXTENSIBLE.
 - Y4M  (YUV4MPEG2, mjpegtools yuv4mpeg(5)): uncompressed planar
   video. Supported: progressive, Cmono / C420* / C444.
 
 Decoding is per-payload Python — the right cost model here, because
 the operators call these inside Arrow-batched ``mapInPandas`` where
 the parallelism unit is the batch, not the byte. These spec-level
-codecs are CANONICAL for decode (``multimodal.decode_real`` tries
-them first — deterministic, dependency-free, covered by the
+codecs are CANONICAL for decode (the PNG and JPEG rows try them
+first — deterministic, dependency-free, covered by the
 spec-derived oracle); :func:`try_pil_decode` is only the rescue path
 for format variants outside the supported subset, when PIL happens
 to be importable.
@@ -34,6 +40,8 @@ from __future__ import annotations
 import io
 import struct
 import zlib
+from collections.abc import Callable
+from typing import NamedTuple
 
 import numpy as np
 
@@ -42,55 +50,6 @@ GIF_MAGICS = (b"GIF87a", b"GIF89a")
 
 # color type -> samples per pixel
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-
-
-def sniff_format(payload: bytes) -> str | None:
-    """Identify a payload by magic bytes:
-    'png' | 'gif' | 'jpeg' | 'wav' | 'y4m' | None."""
-    if payload is None:
-        return None
-    if payload[:8] == PNG_MAGIC:
-        return "png"
-    if payload[:6] in GIF_MAGICS:
-        return "gif"
-    if payload[:3] == b"\xff\xd8\xff":
-        return "jpeg"
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        return "wav"
-    if payload[:10] == b"YUV4MPEG2 ":
-        return "y4m"
-    if len(payload) >= 12 and payload[4:8] == b"ftyp":
-        return "mp4"
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        return "webp"
-    if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-        return "avi"
-    if payload[:4] == b"fLaC":
-        return "flac"
-    if payload[:4] == b"\x1a\x45\xdf\xa3":
-        return "webm"  # EBML magic (WebM / Matroska)
-    if payload[:4] == b"OggS":
-        return "ogg"
-    if payload[:4] in (b"II*\x00", b"MM\x00*"):
-        return "tiff"
-    if (
-        payload[:2] == b"BM"
-        and len(payload) >= 14
-        and struct.unpack("<I", payload[2:6])[0] == len(payload)
-    ):
-        # 'BM' alone is too loose (arbitrary text can start with it);
-        # require the header's declared file size to match
-        return "bmp"
-    if payload[:3] == b"ID3":
-        return "mp3"
-    if len(payload) >= 4:
-        # a lone 32-bit header is too loose a test (arbitrary binary
-        # can satisfy it); require a SECOND consecutive valid frame
-        # header at pos + frame_bytes before claiming mp3
-        fr = _mp3_frame(payload, 0)
-        if fr is not None and _mp3_frame(payload, fr[0]) is not None:
-            return "mp3"
-    return None
 
 
 # ---------------------------------------------------------------- PNG
@@ -1349,50 +1308,39 @@ def phash64(img: np.ndarray) -> int:
     barely move the low-frequency band) — pair it with the banded
     Hamming self-join for image near-dup at corpus scale.
     """
-    px = img.astype(np.float64)
-    if px.ndim == 3:
-        if px.shape[2] >= 3:
-            px = 0.299 * px[:, :, 0] + 0.587 * px[:, :, 1] + 0.114 * px[:, :, 2]
-        else:
-            px = px[:, :, 0]
-    g = resize_nearest(px, 32, 32)
+    g = resize_nearest(_bt601_luma(img), 32, 32)
     y = np.arange(32, dtype=np.float64)[None, :]
     u = np.arange(8, dtype=np.float64)[:, None]
     d = np.cos(np.pi * (2.0 * y + 1.0) * u / 64.0)  # 8x32 cosine rows
     block = np.round(d @ g @ d.T, 6)  # 8x8 low band, platform-stable
-    med = float(np.median(block))
+    return _median_bits64(block)  # pos = u*8 + v
+
+
+def _bt601_luma(f: np.ndarray) -> np.ndarray:
+    """Luma plane of a decoded frame as float64: BT.601
+    ``0.299 R + 0.587 G + 0.114 B`` for color, the first channel of a
+    gray or gray+alpha frame, a 2-D frame itself."""
+    if f.ndim == 2:
+        return f.astype(np.float64)
+    if f.shape[2] < 3:
+        return f[:, :, 0].astype(np.float64)
+    return (
+        0.299 * f[:, :, 0].astype(np.float64)
+        + 0.587 * f[:, :, 1].astype(np.float64)
+        + 0.114 * f[:, :, 2].astype(np.float64)
+    )
+
+
+def _median_bits64(grid: np.ndarray) -> int:
+    """Signed 64-bit hash of a 64-cell grid: bit i (row-major) is set
+    iff cell i exceeds the grid's median; bit 63 wraps negative so the
+    value round-trips through Spark's LongType unchanged."""
+    med = float(np.median(grid))
     h = 0
-    for i, b in enumerate((block > med).flatten()):  # pos = u*8 + v
+    for i, b in enumerate((grid > med).flatten()):
         if b:
             h |= 1 << i
     return h - (1 << 64) if h >= (1 << 63) else h
-
-
-def phash64_of_payload(payload: bytes) -> int | None:
-    """:func:`phash64` over an encoded image payload: own-spec decode
-    (PNG/JPEG, first GIF frame) with the PIL rescue path for variants
-    the canonical codecs don't cover — the same decode ladder as
-    ``multimodal.decode_real``. None when nothing decodes it."""
-    fmt = sniff_format(payload) if payload is not None else None
-    if fmt not in ("png", "jpeg", "gif"):
-        return None
-    try:
-        if fmt == "gif":
-            frames = decode_gif(payload)
-            if not frames:
-                return None
-            img = frames[0]
-        else:
-            dec = decode_png if fmt == "png" else decode_jpeg
-            try:
-                img = dec(payload)
-            except Exception:  # noqa: BLE001 — unsupported variant
-                img = try_pil_decode(payload)
-                if img is None:
-                    return None
-        return phash64(img)
-    except Exception:  # noqa: BLE001 — malformed image
-        return None
 
 
 # ------------------------------------------------------ MP4 / ISO-BMFF
@@ -1453,7 +1401,7 @@ def parse_mp4_meta(payload: bytes) -> dict:
       zero-duration tracks).
 
     Raises ValueError on payloads that violate the box grammar."""
-    if sniff_format(payload) != "mp4":
+    if not _is_mp4(payload):
         raise ValueError("not an ISO-BMFF payload")
     data = bytes(payload)
     meta: dict = {"brand": None, "timescale": None, "duration": None, "tracks": []}
@@ -1953,9 +1901,9 @@ def audio_simhash64(
 
     1. mono mix, split into ``n_buckets`` equal time segments;
     2. per segment: non-overlapping ``frame``-sample windows, rFFT
-       power, energy per linear band (the same binning as
-       ``audio_band_features``) — an ``n_buckets x n_bands`` cell
-       energy grid;
+       power, energy per linear band (:func:`band_power`, the binning
+       ``audio_band_features`` shares) — an ``n_buckets x n_bands``
+       cell energy grid;
     3. cells rounded to 3 decimals (quantization-noise cells — the
        int16 round-trip leaves ~1e-6 of leakage energy per cell —
        land on exactly 0.0; the same platform-stability move as
@@ -1964,213 +1912,33 @@ def audio_simhash64(
        set iff the cell exceeds the median of all 64 cells.
 
     Invariant under uniform amplitude scaling (all cells scale
-    together, the median with them). None for non-WAV payloads or
-    clips shorter than one frame per segment. Returns a SIGNED 64-bit
+    together, the median with them). None for payloads without PCM
+    samples (no WAV) or clips shorter than one frame per segment. Returns a SIGNED 64-bit
     int for Spark LongType, like :func:`phash64`."""
-    if sniff_format(payload) != "wav":
-        return None
-    try:
-        _, samples = decode_wav(payload)
-    except Exception:  # noqa: BLE001 — malformed audio
-        return None
-    mono = samples.mean(axis=1)
-    seg = len(mono) // n_buckets
-    if seg < frame:
-        return None
+
+    def grid_hash(row, pcm):
+        mono = pcm[1].mean(axis=1)
+        seg = len(mono) // n_buckets
+        if seg < frame:
+            return None
+        cells = np.array(
+            [band_power(mono[b * seg : (b + 1) * seg], n_bands, frame) for b in range(n_buckets)]
+        )
+        return _median_bits64(np.round(cells, 3))
+
+    return media_lookup(payload, samples=grid_hash)
+
+
+def band_power(x: np.ndarray, n_bands: int, frame: int) -> np.ndarray:
+    """Energy per linear frequency band of signal ``x`` cut into
+    ``frame``-sample windows (hop = frame, a partial tail window
+    dropped): rFFT power, bin b of ``frame//2 + 1`` summed into band
+    ``min(b * n_bands // (frame//2 + 1), n_bands - 1)``."""
+    m = (len(x) // frame) * frame
+    power = np.abs(np.fft.rfft(x[:m].reshape(-1, frame), axis=1)) ** 2
     n_bins = frame // 2 + 1
     band_of = np.minimum(np.arange(n_bins) * n_bands // n_bins, n_bands - 1)
-    cells = np.zeros((n_buckets, n_bands))
-    for b in range(n_buckets):
-        s = mono[b * seg : (b + 1) * seg]
-        m = (len(s) // frame) * frame
-        power = np.abs(np.fft.rfft(s[:m].reshape(-1, frame), axis=1)) ** 2
-        for band in range(n_bands):
-            cells[b, band] = power[:, band_of == band].sum()
-    cells = np.round(cells, 3)
-    med = float(np.median(cells))
-    h = 0
-    for i, bit in enumerate((cells > med).flatten()):
-        if bit:
-            h |= 1 << i
-    return h - (1 << 64) if h >= (1 << 63) else h
-
-
-def video_phash64(payload: bytes) -> int | None:
-    """64-bit perceptual hash of a VIDEO payload: sample 4 evenly
-    spaced frames (the ``i*T//4`` index map every sampler in the
-    engine uses), average their luma planes, and :func:`phash64` the
-    mean image — the standard cheap video near-dup signature (a
-    re-encode, container change, or small frame-rate shift barely
-    moves the temporal average's low-frequency band, while different
-    footage moves it completely). Decodable formats: Y4M streams and
-    ANIMATED GIFs (>1 frame — a single-frame GIF is an image and
-    belongs to :func:`phash64`'s family). None otherwise."""
-    fmt = sniff_format(payload) if payload is not None else None
-    try:
-        if fmt == "y4m":
-            _, frames = decode_y4m(payload)
-            lum = [
-                (f if f.ndim == 2 else f[:, :, 0]).astype(np.float64)
-                for f in frames
-            ]
-        elif fmt == "gif":
-            frames = decode_gif(payload)
-            if len(frames) <= 1:
-                return None
-            lum = [_bt601_luma(f) for f in frames]
-        else:
-            return None
-        return _temporal_phash64(lum)
-    except Exception:  # noqa: BLE001 — malformed video
-        return None
-
-
-def _bt601_luma(f: np.ndarray) -> np.ndarray:
-    """BT.601 luma plane of an (H, W, 3+) uint8 frame as float64."""
-    return (
-        0.299 * f[:, :, 0].astype(np.float64)
-        + 0.587 * f[:, :, 1].astype(np.float64)
-        + 0.114 * f[:, :, 2].astype(np.float64)
-    )
-
-
-def _temporal_phash64(lum: list[np.ndarray]) -> int | None:
-    """Temporal-average pHash kernel over decoded luma planes: sample
-    4 evenly spaced frames (the ``i*T//4`` index map), mean, pHash."""
-    if not lum:
-        return None
-    total = len(lum)
-    picks = [lum[(i * total) // 4] for i in range(4)]
-    mean = sum(picks) / 4.0
-    return phash64(mean)
-
-
-def media_duration_ms(payload: bytes) -> int | None:
-    """Playback duration of a media payload in integer milliseconds
-    (floor), from the cheapest tier each format allows — the temporal
-    axis every transcript/segment alignment joins on:
-
-    - mp4: the video track's mdhd duration/timescale (falling back to
-      the mvhd movie duration) — pure sample-table arithmetic;
-    - mp3: frame-header walk (``parse_mp3_meta``);
-    - avi: avih total_frames x us_per_frame (header arithmetic);
-    - ogg: Opus/Vorbis page walk, last granule on the codec clock
-      minus the Opus pre-skip (``parse_ogg_meta``);
-    - wav: data-chunk sample count / rate (header arithmetic);
-    - gif: sum of Graphic Control Extension delays (centiseconds);
-    - y4m: frame count / header rate (requires a stream walk).
-
-    None for unrecognized formats, timing-free payloads (e.g. a GIF
-    with no GCE delays), or malformed internals — alignment passes
-    quarantine on NULL rather than dying."""
-    fmt = sniff_format(payload) if payload is not None else None
-    try:
-        if fmt == "mp4":
-            meta = parse_mp4_meta(payload)
-            vid = next(
-                (t for t in meta["tracks"] if t["handler"] == "vide"), None
-            )
-            if vid is not None and vid["duration"] and vid["timescale"]:
-                return vid["duration"] * 1000 // vid["timescale"]
-            if meta["duration"] and meta["timescale"]:
-                return meta["duration"] * 1000 // meta["timescale"]
-            return None
-        if fmt == "mp3":
-            return int(parse_mp3_meta(payload)["duration_sec"] * 1000)
-        if fmt == "flac":
-            d = parse_flac_meta(payload)["duration_sec"]
-            return int(d * 1000) if d is not None else None
-        if fmt == "webm":
-            d = parse_webm_meta(payload)["duration_sec"]
-            return int(d * 1000) if d is not None else None
-        if fmt == "avi":
-            m = parse_avi_meta(payload)
-            if m["us_per_frame"] and m["total_frames"]:
-                return m["total_frames"] * m["us_per_frame"] // 1000
-            return None
-        if fmt == "ogg":
-            d = parse_ogg_meta(payload)["duration_sec"]
-            return int(d * 1000) if d is not None else None
-        if fmt == "wav":
-            rate, samples = decode_wav(payload)
-            return len(samples) * 1000 // rate if rate else None
-        if fmt == "gif":
-            total_cs = sum(gif_frame_delays(payload))
-            return total_cs * 10 if total_cs > 0 else None
-        if fmt == "y4m":
-            fps, frames = decode_y4m(payload)
-            return int(len(frames) * 1000 / fps) if fps else None
-    except Exception:  # noqa: BLE001 — malformed media
-        return None
-    return None
-
-
-def media_signature(payload: bytes) -> tuple[str | None, int | None]:
-    """(kind, sig) perceptual-signature dispatch with AT MOST ONE
-    decode per payload — the fused kernel under
-    ``dedup.media_signature_table``: still images (PNG/JPEG/
-    single-frame GIF) -> ('image', DCT pHash), video (Y4M / animated
-    GIF) -> ('video', temporal-average pHash), WAV audio ->
-    ('audio', spectral band-energy fingerprint). A GIF is decoded
-    ONCE and routed by its frame count (the naive
-    video-then-image ladder decodes single-frame GIFs twice).
-    (None, None) for undecodable or unfingerprintable payloads."""
-    fmt = sniff_format(payload) if payload is not None else None
-    if fmt == "gif":
-        try:
-            frames = decode_gif(payload)
-            if not frames:
-                return None, None
-            if len(frames) > 1:
-                s = _temporal_phash64([_bt601_luma(f) for f in frames])
-                return ("video", s) if s is not None else (None, None)
-            s = phash64(frames[0])
-            return "image", s
-        except Exception:  # noqa: BLE001 — malformed GIF
-            return None, None
-    if fmt == "y4m":
-        s = video_phash64(payload)
-        return ("video", s) if s is not None else (None, None)
-    if fmt == "avi":
-        # MJPEG-in-AVI: per-frame T.81 decode feeding the SAME
-        # temporal-average pHash as Y4M/animated-GIF, so a real
-        # container format joins the video near-dup family
-        try:
-            _fps, frames = decode_avi_mjpeg(payload)
-        except Exception:  # noqa: BLE001 — malformed/non-MJPEG AVI
-            return None, None
-        s = _temporal_phash64(
-            [
-                f[:, :, 0].astype(np.float64)
-                if f.ndim == 3 and f.shape[2] == 1
-                else _bt601_luma(f)
-                for f in frames
-            ]
-        )
-        return ("video", s) if s is not None else (None, None)
-    if fmt in ("png", "jpeg"):
-        s = phash64_of_payload(payload)
-        return ("image", s) if s is not None else (None, None)
-    if fmt == "bmp":
-        # BMP decodes fully (uncompressed BGR) — same pHash family;
-        # a BMP and PNG of one image hash IDENTICALLY (lossless both)
-        try:
-            s = phash64(decode_bmp(payload))
-        except Exception:  # noqa: BLE001 — malformed BMP
-            return None, None
-        return "image", s
-    if fmt == "wav":
-        s = audio_simhash64(payload)
-        return ("audio", s) if s is not None else (None, None)
-    if fmt == "mp3":
-        # MPEG audio: Layer I and Layer II mono decode to the
-        # compressed-domain band-energy fingerprint and join the SAME
-        # audio family as WAV (identical bit layout — pinned by the
-        # aud_mp1/aud_mp2 legs); Layer III stays on the metadata tier
-        # and quarantines here.
-        s = audio_simhash64_mpeg(payload)
-        return ("audio", s) if s is not None else (None, None)
-    return None, None
+    return np.array([power[:, band_of == b].sum() for b in range(n_bands)])
 
 
 # --------------------------------------------- MPEG-1 Audio Layer I
@@ -2925,13 +2693,7 @@ def _subband_simhash64(
         power = sb[b * seg : (b + 1) * seg] ** 2
         for band in range(n_bands):
             cells[b, band] = power[:, band_of == band].sum()
-    cells = np.round(cells, 3)
-    med = float(np.median(cells))
-    h = 0
-    for i, bit in enumerate((cells > med).flatten()):
-        if bit:
-            h |= 1 << i
-    return h - (1 << 64) if h >= (1 << 63) else h
+    return _median_bits64(np.round(cells, 3))
 
 
 def audio_simhash64_mp2(
@@ -3407,3 +3169,389 @@ def encode_webm_meta(
         _MKV_SEGMENT, info + _ebml_elem(_MKV_TRACKS, entries)
     )
     return header + segment
+
+
+# ------------------------------------------------------- format table
+#
+# Each sniffed format is declared ONCE, as one FORMATS row. The front
+# doors below (and multimodal's) look a payload's row up and run one
+# format-free computation over what the row decodes; a new format is
+# one new row.
+
+
+def _still(payload: bytes, decode) -> tuple[None, list[np.ndarray]]:
+    """(fps, frames) of a single-image codec. The own spec codec is
+    canonical — it produces the same pixels everywhere; PIL only
+    rescues variants it rejects (interlaced/16-bit PNG,
+    progressive/arithmetic JPEG), so a cluster with PIL on some
+    executors and not others still computes identical results for
+    every payload the canonical codec handles."""
+    try:
+        img = decode(payload)
+    except Exception:  # noqa: BLE001 — unsupported variant
+        img = try_pil_decode(payload)
+        if img is None:
+            raise
+    return None, [img]
+
+
+def _gif_frames(payload: bytes) -> tuple[float | None, list[np.ndarray]]:
+    """(fps, frames) of a GIF: fps is the nominal rate its Graphic
+    Control Extension delays imply (100 / the median positive delay,
+    centiseconds), None when the animation carries no timing."""
+    frames = decode_gif(payload)
+    delays = sorted(d for d in gif_frame_delays(payload) if d > 0)
+    return (round(100.0 / delays[len(delays) // 2], 9) if delays else None), frames
+
+
+def _y4m_duration_ms(payload: bytes) -> int | None:
+    fps, frames = decode_y4m(payload)
+    return int(len(frames) * 1000 / fps) if fps else None
+
+
+def _wav_duration_ms(payload: bytes) -> int | None:
+    rate, samples = decode_wav(payload)
+    return len(samples) * 1000 // rate if rate else None
+
+
+def _avi_duration_ms(payload: bytes) -> int | None:
+    m = parse_avi_meta(payload)
+    if m["us_per_frame"] and m["total_frames"]:
+        return m["total_frames"] * m["us_per_frame"] // 1000
+    return None
+
+
+def _seconds_ms(meta: dict) -> int | None:
+    """A metadata walk's ``duration_sec`` as integer milliseconds."""
+    d = meta["duration_sec"]
+    return int(d * 1000) if d is not None else None
+
+
+def _mp4_video_track(meta: dict) -> dict | None:
+    return next((t for t in meta["tracks"] if t["handler"] == "vide"), None)
+
+
+def _mp4_duration_ms(payload: bytes) -> int | None:
+    """The video track's mdhd duration/timescale, falling back to the
+    mvhd movie duration."""
+    meta = parse_mp4_meta(payload)
+    vid = _mp4_video_track(meta)
+    if vid is not None and vid["duration"] and vid["timescale"]:
+        return vid["duration"] * 1000 // vid["timescale"]
+    if meta["duration"] and meta["timescale"]:
+        return meta["duration"] * 1000 // meta["timescale"]
+    return None
+
+
+def _mp4_envelope(payload: bytes) -> tuple[int, float | None, int, int]:
+    """(n_frames, fps, height, width) of the video track from the
+    sample tables (stts run-lengths, stts/mdhd rate, tkhd geometry)
+    without a frame decode — full H.264 is out of scope."""
+    vid = _mp4_video_track(parse_mp4_meta(payload))
+    if vid is None or not vid["n_samples"]:
+        raise ValueError("no video track with samples")
+    fps = None if vid["fps"] is None else round(vid["fps"], 9)
+    return int(vid["n_samples"]), fps, int(vid["height"] or 0), int(vid["width"] or 0)
+
+
+def _tiff_meta(payload: bytes) -> tuple[str, list]:
+    m = parse_tiff_meta(payload)
+    return "image_meta", [
+        float(m["height"] or 0),
+        float(m["width"] or 0),
+        float(m["bits_per_sample"] or 0),
+        float(m["compression"] or 0),
+        float(m["n_ifds"]),
+    ]
+
+
+def _webp_meta(payload: bytes) -> tuple[str, list]:
+    m = parse_webp_meta(payload)
+    return "image_meta", [
+        float(m["height"]),
+        float(m["width"]),
+        float(m["has_alpha"]),
+        float(m["has_anim"]),
+    ]
+
+
+def _webm_meta(payload: bytes) -> tuple[str, list]:
+    m = parse_webm_meta(payload)
+    vt = next((t for t in m["tracks"] if t["type"] == "video"), {})
+    at = next((t for t in m["tracks"] if t["type"] == "audio"), {})
+    return "video_meta", [
+        m["duration_sec"],
+        float(vt.get("height") or 0),
+        float(vt.get("width") or 0),
+        float(at.get("sample_rate") or 0),
+        float(at.get("channels") or 0),
+    ]
+
+
+def _ogg_meta(payload: bytes) -> tuple[str, list]:
+    m = parse_ogg_meta(payload)
+    return "audio_meta", [
+        m["duration_sec"],
+        float(m["preskip"]),
+        float(m["sample_rate"] or 0),
+        float(m["last_granule"] or 0),
+        float(m["channels"] or 0),
+    ]
+
+
+def _flac_meta(payload: bytes) -> tuple[str, list]:
+    m = parse_flac_meta(payload)
+    return "audio_meta", [
+        m["duration_sec"],
+        float(m["bits_per_sample"]),
+        float(m["sample_rate"]),
+        float(m["total_samples"]),
+        float(m["channels"]),
+    ]
+
+
+def _mp3_meta(payload: bytes) -> tuple[str, list]:
+    # slot 5: the Layer III side-info shell fraction — 1.0 = zero-filled
+    # header shell, ~0 = real encode, NULL for Layer I/II (no L3 side info)
+    m = parse_mp3_meta(payload)
+    return "audio_meta", [
+        m["duration_sec"],
+        float(m["bitrate_kbps"]),
+        float(m["sample_rate"] or 0),
+        float(m["n_frames"]),
+        float(m["channels"]),
+        mp3_shell_fraction(payload),
+    ]
+
+
+def _is_mp4(p: bytes) -> bool:
+    return len(p) >= 12 and p[4:8] == b"ftyp"
+
+
+def _is_bmp(p: bytes) -> bool:
+    # 'BM' alone is too loose (arbitrary text can start with it);
+    # require the header's declared file size to match
+    return p[:2] == b"BM" and len(p) >= 14 and struct.unpack("<I", p[2:6])[0] == len(p)
+
+
+def _is_mp3(p: bytes) -> bool:
+    if p[:3] == b"ID3":
+        return True
+    # a lone 32-bit frame header is too loose a test (arbitrary binary
+    # can satisfy it); require a SECOND consecutive valid header at
+    # pos + frame_bytes
+    fr = _mp3_frame(p, 0) if len(p) >= 4 else None
+    return fr is not None and _mp3_frame(p, fr[0]) is not None
+
+
+class MediaFormat(NamedTuple):
+    """One sniffed media format: a row of :data:`FORMATS`. Each
+    callable takes the payload and may raise on a malformed one
+    (:func:`media_lookup` quarantines)."""
+
+    sniff: Callable[[bytes], bool]  # magic-byte test
+    kind: str  # modality: 'image' | 'video' | 'audio'
+    frames: Callable | None = None  # -> (fps | None, [uint8 frames])
+    samples: Callable | None = None  # -> (rate, (n, channels) float64 PCM)
+    audio_sig: Callable | None = None  # -> 64-bit audio fingerprint | None
+    ycbcr: bool = False  # luma rule: frames are YCbCr, luma is plane 0
+    envelope: Callable | None = None  # -> (n_frames, fps, height, width), no frame decode
+    meta: Callable | None = None  # -> (kind, vals), no content decode
+    duration_ms: Callable | None = None  # -> integer ms (floor) | None
+    n_frames: Callable | None = None  # image that may animate: count, no pixel decode
+
+    def kind_of(self, payload: bytes) -> str:
+        """The payload's modality: the row's kind, except that an
+        image payload holding several frames (an animated GIF) is a
+        video."""
+        if self.n_frames is not None and self.n_frames(payload) > 1:
+            return "video"
+        return self.kind
+
+    def picture(self, frame: np.ndarray) -> np.ndarray:
+        """The uint8 pixels a still of ``frame`` shows: the luma plane
+        of a YCbCr frame (chroma siting varies; luma is the stable
+        statistic), the frame itself otherwise."""
+        if self.ycbcr and frame.ndim == 3:
+            return frame[:, :, 0]
+        return frame
+
+    def luma(self, frame: np.ndarray) -> np.ndarray:
+        """The frame's luma plane as float64."""
+        return _bt601_luma(self.picture(frame))
+
+
+# Sniff order is dispatch order: the first row whose magic matches.
+FORMATS: dict[str, MediaFormat] = {
+    "png": MediaFormat(
+        lambda p: p[:8] == PNG_MAGIC, "image", frames=lambda p: _still(p, decode_png)
+    ),
+    "gif": MediaFormat(
+        lambda p: p[:6] in GIF_MAGICS,
+        "image",
+        frames=_gif_frames,
+        duration_ms=lambda p: 10 * sum(gif_frame_delays(p)) or None,
+        n_frames=lambda p: len(gif_frame_delays(p)),
+    ),
+    "jpeg": MediaFormat(
+        lambda p: p[:3] == b"\xff\xd8\xff", "image", frames=lambda p: _still(p, decode_jpeg)
+    ),
+    "wav": MediaFormat(
+        lambda p: p[:4] == b"RIFF" and p[8:12] == b"WAVE",
+        "audio",
+        samples=decode_wav,
+        audio_sig=audio_simhash64,
+        duration_ms=_wav_duration_ms,
+    ),
+    "y4m": MediaFormat(
+        lambda p: p[:10] == Y4M_MAGIC,
+        "video",
+        frames=decode_y4m,
+        ycbcr=True,
+        duration_ms=_y4m_duration_ms,
+    ),
+    "mp4": MediaFormat(
+        _is_mp4,
+        "video",
+        envelope=_mp4_envelope,
+        duration_ms=_mp4_duration_ms,
+    ),
+    "webp": MediaFormat(lambda p: p[:4] == b"RIFF" and p[8:12] == b"WEBP", "image", meta=_webp_meta),
+    "avi": MediaFormat(
+        lambda p: p[:4] == b"RIFF" and p[8:12] == b"AVI ",
+        "video",
+        frames=decode_avi_mjpeg,
+        duration_ms=_avi_duration_ms,
+    ),
+    "flac": MediaFormat(
+        lambda p: p[:4] == b"fLaC",
+        "audio",
+        meta=_flac_meta,
+        duration_ms=lambda p: _seconds_ms(parse_flac_meta(p)),
+    ),
+    "webm": MediaFormat(
+        lambda p: p[:4] == _EBML_MAGIC,
+        "video",
+        meta=_webm_meta,
+        duration_ms=lambda p: _seconds_ms(parse_webm_meta(p)),
+    ),
+    "ogg": MediaFormat(
+        lambda p: p[:4] == b"OggS",
+        "audio",
+        meta=_ogg_meta,
+        duration_ms=lambda p: _seconds_ms(parse_ogg_meta(p)),
+    ),
+    "tiff": MediaFormat(lambda p: p[:4] in (b"II*\x00", b"MM\x00*"), "image", meta=_tiff_meta),
+    "bmp": MediaFormat(_is_bmp, "image", frames=lambda p: (None, [decode_bmp(p)])),
+    "mp3": MediaFormat(
+        _is_mp3,
+        "audio",
+        audio_sig=audio_simhash64_mpeg,
+        meta=_mp3_meta,
+        duration_ms=lambda p: _seconds_ms(parse_mp3_meta(p)),
+    ),
+}
+
+
+def sniff_format(payload: bytes | None) -> str | None:
+    """Name of the first :data:`FORMATS` row whose magic bytes match
+    the payload; None for None or unrecognized payloads."""
+    if payload is not None:
+        for name, row in FORMATS.items():
+            if row.sniff(payload):
+                return name
+    return None
+
+
+def media_lookup(payload: bytes | None, **computes):
+    """``compute(row, row.<field>(payload))`` for the first keyword
+    ``field=compute`` whose field (or the ``kind_of`` method) the
+    payload's :data:`FORMATS` row declares. None when no row matches,
+    the row declares none of the fields, or decoding or computing
+    raises: malformed media quarantines as None here, in one place (a
+    frameless decode raises at its first frame index)."""
+    row = FORMATS.get(sniff_format(payload))
+    for field, compute in computes.items():
+        decode = getattr(row, field, None)
+        if decode is not None:
+            try:
+                return compute(row, decode(payload))
+            except Exception:  # noqa: BLE001 — malformed media
+                return None
+    return None
+
+
+def pick_frames(frames: list, n: int) -> list:
+    """``n`` evenly spaced frames by the ``i*T//n`` index map every
+    sampler in the engine uses."""
+    return [frames[(i * len(frames)) // n] for i in range(n)]
+
+
+def phash64_of_payload(payload: bytes | None) -> int | None:
+    """:func:`phash64` of the payload's first frame (its luma plane),
+    for every format with a frames decoder — own-spec codecs with the
+    PIL rescue for PNG/JPEG variants they don't cover. None when
+    nothing decodes it."""
+    return media_lookup(payload, frames=lambda row, d: phash64(row.luma(d[1][0])))
+
+
+def _temporal_phash64(row: MediaFormat, frames: list) -> int:
+    """Temporal-average pHash: the luma planes of 4 evenly spaced
+    frames, averaged, then :func:`phash64` of the mean."""
+    return phash64(sum(row.luma(f) for f in pick_frames(frames, 4)) / 4.0)
+
+
+def video_phash64(payload: bytes | None) -> int | None:
+    """64-bit perceptual hash of a VIDEO payload: sample 4 evenly
+    spaced frames (the ``i*T//4`` index map every sampler in the
+    engine uses), average their luma planes, and :func:`phash64` the
+    mean image — the standard cheap video near-dup signature (a
+    re-encode, container change, or small frame-rate shift barely
+    moves the temporal average's low-frequency band, while different
+    footage moves it completely). Every video-kind format with a
+    frames decoder qualifies, and ANIMATED images (a GIF of >1
+    frame); a single-frame GIF is an image and belongs to
+    :func:`phash64`'s family. None otherwise."""
+
+    def video(row, kind):
+        if kind != "video" or row.frames is None:
+            return None
+        return _temporal_phash64(row, row.frames(payload)[1])
+
+    return media_lookup(payload, kind_of=video)
+
+
+def media_duration_ms(payload: bytes | None) -> int | None:
+    """Playback duration of a media payload in integer milliseconds
+    (floor), from the cheapest tier each format's row declares — the
+    temporal axis every transcript/segment alignment joins on:
+    container or header arithmetic (mp4 stts/mdhd, avi avih, wav data
+    chunk, flac STREAMINFO, webm Info), a frame-header or page walk
+    (mp3, ogg), the sum of GIF Graphic Control Extension delays, or a
+    Y4M stream walk. None for unrecognized formats, timing-free
+    payloads (e.g. a GIF with no GCE delays), or malformed internals
+    — alignment passes quarantine on NULL rather than dying."""
+    return media_lookup(payload, duration_ms=lambda row, ms: ms)
+
+
+def media_signature(payload: bytes | None) -> tuple[str | None, int | None]:
+    """(kind, sig) perceptual signature by the payload's modality, with
+    AT MOST ONE decode per payload — the fused kernel under
+    ``dedup.media_signature_table``: images -> ('image',
+    :func:`phash64_of_payload`), video -> ('video',
+    :func:`video_phash64`), audio -> ('audio', the row's fingerprint:
+    WAV band energies, MPEG Layer I/II subband energies — one bit
+    layout, so cross-format encodes of one clip collide). A GIF picks
+    image or video by its frame count, read without a pixel decode.
+    (None, None) for undecodable or unfingerprintable payloads."""
+
+    def sign(row, kind):
+        fingerprint = {
+            "image": phash64_of_payload,
+            "video": video_phash64,
+            "audio": row.audio_sig,
+        }[kind]
+        sig = fingerprint(payload) if fingerprint is not None else None
+        return None if sig is None else (kind, sig)
+
+    return media_lookup(payload, kind_of=sign) or (None, None)

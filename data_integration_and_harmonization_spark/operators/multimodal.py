@@ -3,10 +3,12 @@
 Design: media are opaque ``binary`` columns + a typed metadata struct.
 Everything Spark-side is real — schema, partition-friendly layout,
 Arrow-batched UDF signatures, batch shapes — and the decode itself is
-REAL for the formats the engine's codecs cover
-(:mod:`..functions.media_codecs`: PNG, GIF, JPEG, WAV, Y4M video
-from their public specs on stdlib+numpy; PIL preferred when
-importable). Payloads no
+REAL for every format with a content decoder in
+:data:`..functions.media_codecs.FORMATS` (images, GIF, Y4M and MJPEG
+AVI video, WAV audio, from their public specs on stdlib+numpy; PIL
+rescues PNG/JPEG variants when importable). This module names no
+format: each kernel looks the payload's row up and runs one
+format-free computation over what it decodes. Payloads no
 decoder recognizes fall back to the clearly-marked deterministic
 stubs (``decode_stub``/``resize_stub``/``frame_sample_stub``) so
 pipelines stay total: a corpus with undecodable blobs degrades to
@@ -24,6 +26,7 @@ per-payload C-speed (zlib/numpy) under a thin Python chunk walk.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -84,98 +87,57 @@ def decode_real(payload: bytes, dim: int = 8) -> list[float] | None:
     """Real media decode -> fixed-width feature vector, or None when
     no codec recognizes the payload (caller falls back to the stub).
 
-    Feature layout (padded/truncated to ``dim``), by modality:
+    Feature layout (padded/truncated to ``dim``), by what the format's
+    ``media_codecs.FORMATS`` row decodes:
 
-    - image (PNG/JPEG via own-codec-then-PIL, GIF first frame):
-      [height, width, channels, mean/255, std/255, min/255, max/255,
-      n_frames]
-    - audio (WAV): [n_samples, n_channels, sample_rate, mean, std,
-      min, max, duration_sec]
-    - video (Y4M): [height, width, planes, meanY/255, stdY/255,
-      minY/255, maxY/255, n_frames] — pixel stats over the LUMA
-      plane of the first frame (chroma is siting-dependent; luma is
-      the modality-stable statistic)
+    - frames (images, GIF, Y4M, MJPEG AVI, BMP): [height, width,
+      channels, mean/255, std/255, min/255, max/255, n_frames] — pixel
+      stats of the FIRST frame's picture: every channel of an RGB or
+      gray frame, the LUMA plane of a YCbCr (Y4M) frame (chroma is
+      siting-dependent; luma is the modality-stable statistic)
+    - PCM samples (WAV): [n_samples, n_channels, sample_rate, mean,
+      std, min, max, duration_sec]
 
     Leading spatial/temporal dims are >= 1, so real features are
     distinguishable from the stub's all-in-[0,1) histogram at a
     glance. Values rounded to 9 decimals like the stub's.
     """
-    import numpy as np
+    feats = MC.media_lookup(payload, frames=_picture_stats, samples=_pcm_stats)
+    if feats is None:
+        return None
+    return [round(x, 9) for x in (feats + [0.0] * dim)[:dim]]
 
-    fmt = MC.sniff_format(payload)
-    if fmt is None:
+
+def _picture_stats(row: MC.MediaFormat, decoded) -> list[float]:
+    _, frames = decoded
+    f0 = frames[0]
+    px = row.picture(f0).astype(np.float64) / 255.0
+    return [
+        float(f0.shape[0]),
+        float(f0.shape[1]),
+        float(1 if f0.ndim == 2 else f0.shape[2]),
+        float(px.mean()),
+        float(px.std()),
+        float(px.min()),
+        float(px.max()),
+        float(len(frames)),
+    ]
+
+
+def _pcm_stats(row: MC.MediaFormat, pcm) -> list[float] | None:
+    rate, samples = pcm
+    if samples.size == 0:
         return None
-    try:
-        if fmt in ("png", "gif", "jpeg"):
-            if fmt in ("png", "jpeg"):
-                # OWN spec codec is canonical — it produces the same
-                # bands everywhere; PIL only rescues payloads the own
-                # codec can't parse (interlaced/16-bit PNG,
-                # progressive/arithmetic JPEG), so a cluster with PIL
-                # on some executors and not others still computes
-                # identical features for every payload the canonical
-                # codec handles.
-                dec = MC.decode_png if fmt == "png" else MC.decode_jpeg
-                try:
-                    img = dec(payload)
-                except Exception:  # noqa: BLE001 — unsupported variant
-                    img = MC.try_pil_decode(payload)
-                    if img is None:
-                        return None
-                n_frames = 1.0
-            else:
-                frames = MC.decode_gif(payload)
-                if not frames:
-                    return None
-                img = frames[0]
-                n_frames = float(len(frames))
-            if img.ndim == 2:
-                img = img[:, :, None]
-            px = img.astype(np.float64) / 255.0
-            feats = [
-                float(img.shape[0]),
-                float(img.shape[1]),
-                float(img.shape[2]),
-                float(px.mean()),
-                float(px.std()),
-                float(px.min()),
-                float(px.max()),
-                n_frames,
-            ]
-        elif fmt == "y4m":
-            _, vframes = MC.decode_y4m(payload)
-            if not vframes:
-                return None
-            f0 = vframes[0]
-            yp = (f0 if f0.ndim == 2 else f0[:, :, 0]).astype(np.float64) / 255.0
-            feats = [
-                float(f0.shape[0]),
-                float(f0.shape[1]),
-                float(1 if f0.ndim == 2 else f0.shape[2]),
-                float(yp.mean()),
-                float(yp.std()),
-                float(yp.min()),
-                float(yp.max()),
-                float(len(vframes)),
-            ]
-        else:  # wav
-            rate, samples = MC.decode_wav(payload)
-            if samples.size == 0:
-                return None
-            feats = [
-                float(samples.shape[0]),
-                float(samples.shape[1]),
-                float(rate),
-                float(samples.mean()),
-                float(samples.std()),
-                float(samples.min()),
-                float(samples.max()),
-                float(samples.shape[0]) / rate,
-            ]
-    except Exception:  # noqa: BLE001 — malformed media: stub fallback
-        return None
-    feats = (feats + [0.0] * dim)[:dim]
-    return [round(x, 9) for x in feats]
+    return [
+        float(samples.shape[0]),
+        float(samples.shape[1]),
+        float(rate),
+        float(samples.mean()),
+        float(samples.std()),
+        float(samples.min()),
+        float(samples.max()),
+        float(samples.shape[0]) / rate,
+    ]
 
 
 def decode_stub(payload: bytes, media_type: str, dim: int = 8) -> list[float]:
@@ -190,8 +152,6 @@ def decode_stub(payload: bytes, media_type: str, dim: int = 8) -> list[float]:
     """
     if payload is None:
         return None
-    import numpy as np
-
     arr = np.frombuffer(payload, dtype=np.uint8)
     total = float(len(arr)) or 1.0
     idx = (arr.astype(np.int64) + np.arange(len(arr), dtype=np.int64)) % dim
@@ -211,8 +171,10 @@ def extract_features(media: DataFrame, dim: int = 8, batch_size_hint: int | None
     """Arrow-batched feature extraction over the media table via
     ``mapInPandas``. One pandas batch in, one out; payload column is
     dropped on output so only fixed-width features shuffle
-    downstream. Per payload: real decode (PNG/GIF/WAV, PIL when
-    available) with stub fallback — see :func:`decode_features`."""
+    downstream. Per payload: real decode (every format with a frames
+    or PCM decoder in ``media_codecs.FORMATS``; PIL rescues PNG/JPEG
+    variants when importable) with stub fallback — see
+    :func:`decode_features`."""
     # media_type rides through as a key AND feeds the kernel
     src = media.select(
         "media_id", "media_type", "n_bytes", "payload", F.col("media_type").alias("_type")
@@ -226,27 +188,17 @@ def extract_features(media: DataFrame, dim: int = 8, batch_size_hint: int | None
 
 
 def resize_real(payload: bytes, target: int = 64) -> bytes | None:
-    """Real image resize: decode (PNG/JPEG, or first GIF frame),
-    nearest-neighbor resample to target x target, re-encode as PNG
-    (lossless — resizing shouldn't add a second generation loss).
-    None when no codec recognizes the payload (caller falls back to
-    the byte-striding stub)."""
-    fmt = MC.sniff_format(payload) if payload is not None else None
-    if fmt not in ("png", "gif", "jpeg"):
-        return None
-    try:
-        if fmt == "png":
-            img = MC.decode_png(payload)
-        elif fmt == "jpeg":
-            img = MC.decode_jpeg(payload)
-        else:
-            frames = MC.decode_gif(payload)
-            if not frames:
-                return None
-            img = frames[0]
+    """Real image resize: decode the first frame's picture (see
+    :func:`decode_real`), nearest-neighbor resample to target x target,
+    re-encode as PNG (lossless — resizing shouldn't add a second
+    generation loss). None when no codec recognizes the payload
+    (caller falls back to the byte-striding stub)."""
+
+    def resize(row, decoded):
+        img = row.picture(decoded[1][0])
         return MC.encode_png(MC.resize_nearest(img, target, target))
-    except Exception:  # noqa: BLE001 — malformed media: stub fallback
-        return None
+
+    return MC.media_lookup(payload, frames=resize)
 
 
 def resize_stub(payload: bytes, target: int = 64) -> bytes:
@@ -258,8 +210,6 @@ def resize_stub(payload: bytes, target: int = 64) -> bytes:
         return None
     if len(payload) <= target:
         return bytes(payload)
-    import numpy as np
-
     step = len(payload) / target
     arr = np.frombuffer(payload, dtype=np.uint8)
     picks = (np.arange(target, dtype=np.float64) * step).astype(np.int64)
@@ -267,32 +217,17 @@ def resize_stub(payload: bytes, target: int = 64) -> bytes:
 
 
 def frame_sample_real(payload: bytes, n_frames: int = 4) -> list[bytes] | None:
-    """Real frame sampling for animated media: decode the GIF, pick
-    ``n_frames`` evenly spaced frames (the standard video-sampling
-    index formula i*T//n), re-encode each as PNG. A static PNG payload
-    yields its single frame repeated; a Y4M video yields its sampled
-    LUMA planes re-encoded as grayscale PNG. None when no codec
-    recognizes the payload (caller falls back to the byte-window
-    stub)."""
-    fmt = MC.sniff_format(payload) if payload is not None else None
-    if fmt not in ("png", "gif", "jpeg", "y4m"):
-        return None
-    try:
-        if fmt == "png":
-            frames = [MC.decode_png(payload)]
-        elif fmt == "jpeg":
-            frames = [MC.decode_jpeg(payload)]
-        elif fmt == "y4m":
-            _, vf = MC.decode_y4m(payload)
-            frames = [f if f.ndim == 2 else f[:, :, 0] for f in vf]
-        else:
-            frames = MC.decode_gif(payload)
-        if not frames:
-            return None
-        picks = [frames[(i * len(frames)) // n_frames] for i in range(n_frames)]
-        return [MC.encode_png(f) for f in picks]
-    except Exception:  # noqa: BLE001 — malformed media: stub fallback
-        return None
+    """Real frame sampling: decode the frames, pick ``n_frames`` evenly
+    spaced ones (the standard video-sampling index formula i*T//n),
+    re-encode each frame's picture as PNG — a still yields its single
+    frame repeated, a Y4M video its sampled LUMA planes as grayscale
+    PNG. None when no codec recognizes the payload (caller falls back
+    to the byte-window stub)."""
+
+    def sample(row, decoded):
+        return [MC.encode_png(row.picture(f)) for f in MC.pick_frames(decoded[1], n_frames)]
+
+    return MC.media_lookup(payload, frames=sample)
 
 
 def frame_sample_stub(payload: bytes, n_frames: int = 4, frame_size: int = 16) -> list[bytes]:
@@ -314,41 +249,31 @@ def frame_sample_stub(payload: bytes, n_frames: int = 4, frame_size: int = 16) -
 def audio_band_features(
     payload: bytes, n_bands: int = 8, frame: int = 256
 ) -> tuple[int, float, list[float]] | None:
-    """Spectral triage features for one WAV payload: frame the mono
-    mix into ``frame``-sample windows (hop = frame, no overlap —
+    """Spectral triage features for one PCM (WAV) payload: frame the
+    mono mix into ``frame``-sample windows (hop = frame, no overlap —
     deterministic), rFFT power per frame, energy SHARE per linear
-    frequency band (bin b of frame//2+1 maps to band
-    ``min(b * n_bands // (frame//2 + 1), n_bands - 1)``), plus RMS —
-    the music/speech/tone/noise discriminators an audio-corpus
-    curation pass bins on. None for non-WAV or shorter-than-one-frame
-    payloads (caller decides the fallback)."""
-    import numpy as np
+    frequency band (``media_codecs.band_power``: bin b of frame//2+1
+    maps to band ``min(b * n_bands // (frame//2 + 1), n_bands - 1)``),
+    plus RMS — the music/speech/tone/noise discriminators an
+    audio-corpus curation pass bins on. None for payloads without PCM
+    samples or shorter than one frame (caller decides the fallback)."""
 
-    if MC.sniff_format(payload) != "wav":
-        return None
-    try:
-        _, samples = MC.decode_wav(payload)
-    except Exception:  # noqa: BLE001 — malformed audio
-        return None
-    mono = samples.mean(axis=1)
-    n = (len(mono) // frame) * frame
-    if n == 0:
-        return None
-    frames = mono[:n].reshape(-1, frame)
-    power = np.abs(np.fft.rfft(frames, axis=1)) ** 2
-    n_bins = frame // 2 + 1
-    band_of = np.minimum(np.arange(n_bins) * n_bands // n_bins, n_bands - 1)
-    band_power = np.zeros(n_bands)
-    for b in range(n_bands):
-        band_power[b] = power[:, band_of == b].sum()
-    total = band_power.sum()
-    shares = (band_power / total) if total > 0 else np.zeros(n_bands)
-    rms = float(np.sqrt(np.mean(mono[:n] ** 2)))
-    return (
-        int(n // frame),
-        round(rms, 9),
-        [round(float(s), 9) for s in shares],
-    )
+    def bands(row, pcm):
+        mono = pcm[1].mean(axis=1)
+        n = (len(mono) // frame) * frame
+        if n == 0:
+            return None
+        band_power = MC.band_power(mono, n_bands, frame)
+        total = band_power.sum()
+        shares = (band_power / total) if total > 0 else np.zeros(n_bands)
+        rms = float(np.sqrt(np.mean(mono[:n] ** 2)))
+        return (
+            int(n // frame),
+            round(rms, 9),
+            [round(float(s), 9) for s in shares],
+        )
+
+    return MC.media_lookup(payload, samples=bands)
 
 
 def video_temporal_features(
@@ -366,89 +291,38 @@ def video_temporal_features(
       standard cheap shot-change statistic).
 
     Returns ``(n_frames, fps, height, width, luma[n_sample],
-    motion[n_sample-1])``. Y4M carries a real stream rate; animated
-    GIF reports the nominal rate its Graphic Control Extension
-    delays imply (100 / median positive delay, centiseconds), or
-    fps None when the animation carries no timing. None when no
-    video codec recognizes the payload.
+    motion[n_sample-1])``, fps rounded to 9 decimals. Every format with
+    a frames decoder qualifies: Y4M and MJPEG AVI carry a real stream
+    rate; a GIF reports the nominal rate its Graphic Control Extension
+    delays imply, or fps None when it carries no timing; a still image
+    is a one-frame clip with fps None. None when no codec recognizes
+    the payload.
 
-    MP4/ISO-BMFF (r11): compressed containers get the METADATA tier —
-    n_frames from the stts run-lengths, fps from the sample-table
-    arithmetic, geometry from tkhd (``media_codecs.parse_mp4_meta``,
-    ISO/IEC 14496-12 box grammar) — with luma/motion NULL, since
-    those need frame decode and full H.264 is out of scope. ~100% of
-    real web video is compressed-container, so the envelope features
-    a triage pass bins on (duration, rate, geometry, codec presence)
-    must not require a from-scratch AVC decoder."""
-    import numpy as np
+    Compressed containers (MP4/ISO-BMFF) get the METADATA tier: the
+    row's stream ``envelope`` — n_frames from the stts run-lengths, fps
+    from the sample-table arithmetic, geometry from tkhd — with
+    luma/motion NULL, since those need frame decode and full H.264 is
+    out of scope. ~100% of real web video is compressed-container, so
+    the envelope features a triage pass bins on (duration, rate,
+    geometry, codec presence) must not require a from-scratch AVC
+    decoder."""
 
-    fmt = MC.sniff_format(payload) if payload is not None else None
-    try:
-        if fmt == "mp4":
-            meta = MC.parse_mp4_meta(payload)
-            vid = next(
-                (t for t in meta["tracks"] if t["handler"] == "vide"), None
-            )
-            if vid is None or not vid["n_samples"]:
-                return None
-            return (
-                int(vid["n_samples"]),
-                None if vid["fps"] is None else round(vid["fps"], 9),
-                int(vid["height"] or 0),
-                int(vid["width"] or 0),
-                [None] * n_sample,
-                [None] * (n_sample - 1),
-            )
-        if fmt == "y4m":
-            fps, frames = MC.decode_y4m(payload)
-            lum = [
-                (f if f.ndim == 2 else f[:, :, 0]).astype(np.float64)
-                for f in frames
-            ]
-        elif fmt == "gif":
-            # nominal rate from the Graphic Control Extension delays
-            # (centiseconds): 100 / median delay; None when the GIF
-            # carries no timing (static or GCE-less animations)
-            delays = [d for d in MC.gif_frame_delays(payload) if d > 0]
-            if delays:
-                delays.sort()
-                med = delays[len(delays) // 2]
-                fps = round(100.0 / med, 9)
-            else:
-                fps = None
-            frames = MC.decode_gif(payload)
-            # BT.601 luma over the RGB palette output
-            lum = [
-                f.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
-                for f in frames
-            ]
-        elif fmt == "avi":
-            # MJPEG-in-AVI (r13): a real container with a CONTENT
-            # tier — every frame is a T.81 JPEG the engine decodes,
-            # so luma/motion are real here, unlike the MP4 envelope
-            fps, frames = MC.decode_avi_mjpeg(payload)
-            fps = round(fps, 9)
-            lum = [
-                f[:, :, 0].astype(np.float64)
-                if f.ndim == 3 and f.shape[2] == 1
-                else f.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
-                for f in frames
-            ]
-        else:
-            return None
-        if not lum:
-            return None
-    except Exception:  # noqa: BLE001 — malformed video
-        return None
-    total = len(lum)
-    picks = [lum[(i * total) // n_sample] for i in range(n_sample)]
-    luma = [round(float(p.mean()) / 255.0, 9) for p in picks]
-    motion = [
-        round(float(np.abs(b - a).mean()) / 255.0, 9)
-        for a, b in zip(picks, picks[1:])
-    ]
-    h, w = picks[0].shape
-    return total, fps, h, w, luma, motion
+    def walk(row, decoded):
+        fps, frames = decoded
+        picks = [row.luma(f) for f in MC.pick_frames(frames, n_sample)]
+        luma = [round(float(p.mean()) / 255.0, 9) for p in picks]
+        motion = [
+            round(float(np.abs(b - a).mean()) / 255.0, 9)
+            for a, b in zip(picks, picks[1:])
+        ]
+        h, w = picks[0].shape
+        return len(frames), None if fps is None else round(fps, 9), h, w, luma, motion
+
+    return MC.media_lookup(
+        payload,
+        frames=walk,
+        envelope=lambda row, env: (*env, [None] * n_sample, [None] * (n_sample - 1)),
+    )
 
 
 TEMPORAL_SCHEMA = T.StructType(
@@ -473,11 +347,12 @@ def extract_temporal_features(
 
     - kind 'audio' (WAV): ``vals = band_share[n_bands] + [n_frames,
       rms]`` — exactly :func:`audio_band_features`'s layout.
-    - kind 'video' (Y4M / animated GIF / MP4 container / MJPEG AVI):
+    - kind 'video' (every format with frames — Y4M, MJPEG AVI, GIF,
+      a still as a one-frame clip — and the MP4 container):
       ``vals = luma[n_sample] + motion[n_sample-1] + [n_frames, fps,
       height, width]`` — see :func:`video_temporal_features` (fps
-      NULL for timing-less GIF; luma/motion NULL for the MP4
-      metadata tier, REAL for MJPEG AVI, whose frames the T.81
+      NULL for timing-less GIFs and stills; luma/motion NULL for the
+      MP4 metadata tier, REAL for MJPEG AVI, whose frames the T.81
       decoder reads).
     - kind 'audio_meta' (MP3): the frame-header walk
       (``media_codecs.parse_mp3_meta`` — ISO/IEC 11172-3 framing, no
@@ -528,85 +403,15 @@ def temporal_features(
     """``(kind, vals)`` of one payload — the per-payload kernel of
     :func:`extract_temporal_features`, which documents each kind's
     ``vals`` layout; ``(None, None)`` when no codec recognizes it."""
-    fmt = MC.sniff_format(payload) if payload is not None else None
-    if fmt == "wav":
-        r = audio_band_features(payload, n_bands, frame)
-        if r is None:
-            return None, None
-        return "audio", r[2] + [float(r[0]), r[1]]
-    if fmt in ("y4m", "gif", "mp4", "avi"):
-        r = video_temporal_features(payload, n_sample)
-        if r is None:
-            return None, None
-        nf, fps, h, w, luma, motion = r
-        tail = [float(nf), None if fps is None else round(fps, 9), float(h), float(w)]
-        return "video", luma + motion + tail
-    parse = {
-        "tiff": MC.parse_tiff_meta,
-        "webp": MC.parse_webp_meta,
-        "webm": MC.parse_webm_meta,
-        "ogg": MC.parse_ogg_meta,
-        "flac": MC.parse_flac_meta,
-        "mp3": MC.parse_mp3_meta,
-    }.get(fmt)
-    if parse is None:
-        return None, None
-    try:
-        m = parse(payload)
-    except ValueError:
-        return None, None
-    if fmt == "tiff":
-        return "image_meta", [
-            float(m["height"] or 0),
-            float(m["width"] or 0),
-            float(m["bits_per_sample"] or 0),
-            float(m["compression"] or 0),
-            float(m["n_ifds"]),
-        ]
-    if fmt == "webp":
-        return "image_meta", [
-            float(m["height"]),
-            float(m["width"]),
-            float(m["has_alpha"]),
-            float(m["has_anim"]),
-        ]
-    if fmt == "webm":
-        vt = next((t for t in m["tracks"] if t["type"] == "video"), {})
-        at = next((t for t in m["tracks"] if t["type"] == "audio"), {})
-        return "video_meta", [
-            m["duration_sec"],
-            float(vt.get("height") or 0),
-            float(vt.get("width") or 0),
-            float(at.get("sample_rate") or 0),
-            float(at.get("channels") or 0),
-        ]
-    if fmt == "ogg":
-        return "audio_meta", [
-            m["duration_sec"],
-            float(m["preskip"]),
-            float(m["sample_rate"] or 0),
-            float(m["last_granule"] or 0),
-            float(m["channels"] or 0),
-        ]
-    if fmt == "flac":
-        return "audio_meta", [
-            m["duration_sec"],
-            float(m["bits_per_sample"]),
-            float(m["sample_rate"]),
-            float(m["total_samples"]),
-            float(m["channels"]),
-        ]
-    # mp3; slot 5 (r13): Layer III shell fraction from the side-info
-    # walk — 1.0 = zero-filled header shell, ~0 = real encode, NULL for
-    # Layer I/II (they have no L3 side info)
-    return "audio_meta", [
-        m["duration_sec"],
-        float(m["bitrate_kbps"]),
-        float(m["sample_rate"] or 0),
-        float(m["n_frames"]),
-        float(m["channels"]),
-        MC.mp3_shell_fraction(payload),
-    ]
+    audio = audio_band_features(payload, n_bands, frame)
+    if audio is not None:
+        n_frames, rms, shares = audio
+        return "audio", shares + [float(n_frames), rms]
+    video = video_temporal_features(payload, n_sample)
+    if video is not None:
+        nf, fps, h, w, luma, motion = video
+        return "video", luma + motion + [float(nf), fps, float(h), float(w)]
+    return MC.media_lookup(payload, meta=lambda row, meta: meta) or (None, None)
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -787,8 +592,6 @@ def _synthetic_media(spark):
     Payload BYTES vary with zlib/palette/entropy details, so only
     decoded values (not n_bytes/digest) are oracle-compared.
     """
-    import numpy as np
-
     y, x, c = np.ogrid[0:16, 0:16, 0:3]
     png = MC.encode_png(((x * 16 + y + c) % 256).astype(np.uint8))
     gif = MC.encode_gif(
@@ -895,8 +698,6 @@ def _mm_av(ctx: dict) -> DataFrame:
     #      F30000:1001 (NTSC) — constant chroma survives the 2x2
     #      box subsample exactly, so the color plane path is also
     #      spec-exact.
-    import numpy as np
-
     sine = 0.5 * np.sin(np.pi * np.arange(2048) / 2)
     v_mono = MC.encode_y4m(
         [np.full((12, 16), 20 + 10 * k, dtype=np.uint8) for k in range(6)],
