@@ -1040,12 +1040,7 @@ def _rt_ingest(ctx: dict[str, Any]) -> DataFrame:
     li.where(F.col("l_orderkey") % 10 == 5).select(*_RT_COLS).write.mode(
         "overwrite"
     ).json(nd_dir)
-    srcs = read_sources(
-        spark,
-        [csv_dir, nd_dir, ctx["json_file"], ctx["xlsx_file"]],
-        reject_empty=True,
-        skip_errors=False,
-    )
+    srcs = read_sources(spark, [csv_dir, nd_dir, ctx["json_file"], ctx["xlsx_file"]])
     u = H.harmonize(srcs)
     agg = u.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -2372,7 +2367,9 @@ WITH base AS (
 """
 
 
-def _describe_all_oracle() -> str:
+def _describe_numeric_sql() -> list[str]:
+    """The 'numeric' leg's oracle arms:
+    describe_numeric over the numeric lineitem columns."""
     parts = []
     for c in LINEITEM_NUM:
         parts.append(
@@ -2389,6 +2386,13 @@ def _describe_all_oracle() -> str:
   CAST(NULL AS BIGINT) AS freq
 FROM lineitem"""
         )
+    return parts
+
+
+def _describe_object_sql() -> list[str]:
+    """The 'object' leg's oracle arms:
+    describe_object over two customer string columns."""
+    parts = []
     for c in ["c_name", "c_mktsegment"]:
         parts.append(
             f"""SELECT 'object' AS kind, '{c}' AS col_name, count,
@@ -2406,6 +2410,13 @@ FROM (
   )
 )"""
         )
+    return parts
+
+
+def _describe_dq_sql() -> list[str]:
+    """The 'dq' leg's oracle arms:
+    dq_report rules, the referential-integrity check and fd_report."""
+    parts = []
     # 'dq' legs — same rule arithmetic as profile.dq_report /
     # dq_ref_integrity, one scalar subquery block per rule
     dq_rules = [
@@ -2478,6 +2489,12 @@ FROM (
         FROM customer GROUP BY ALL)
 )"""
         )
+    return parts
+
+
+def _describe_split_sql() -> list[str]:
+    """The 'split' leg's oracle arms: dq_split passed/quarantined counts."""
+    parts = []
     # dq_split twin: per-row violation labels in the engine's rule
     # order, joined by '|' — passed/quarantined row counts + distinct
     # label-set count on the quarantined side
@@ -2520,6 +2537,12 @@ FROM ({split_labels}) WHERE labels = ''"""
   CAST(NULL AS VARCHAR) AS top, CAST(NULL AS BIGINT) AS freq
 FROM ({split_labels}) WHERE labels <> ''"""
     )
+    return parts
+
+
+def _describe_privacy_sql() -> list[str]:
+    """The 'privacy' leg's oracle arms: the k-anonymity / l-diversity release audit."""
+    parts = []
     # privacy legs — k-anonymity / l-diversity rollup over the
     # (c_nationkey, c_mktsegment) equivalence classes, sensitive
     # attribute = floor(c_acctbal / 1000)
@@ -2554,6 +2577,13 @@ FROM ({k_anon_agg})"""
   (CASE WHEN n_low_diversity = 0 THEN 1 ELSE 0 END)::BIGINT AS freq
 FROM ({k_anon_agg})"""
     )
+    return parts
+
+
+def _describe_sketch_sql() -> list[str]:
+    """The 'sketch' leg's oracle arms:
+    HLL distinct sketches, pinned by the exact distinct count."""
+    parts = []
     # 'sketch' legs — the exact-distinct twin pins count; freq = 1
     # expects BOTH the global HLL estimate and the union-of-shard
     # estimate within 5% of exact (engine-side fused verdict, the
@@ -2568,6 +2598,12 @@ FROM ({k_anon_agg})"""
   CAST(NULL AS BIGINT) AS n_unique, '{c}' AS top, 1::BIGINT AS freq
 FROM orders"""
         )
+    return parts
+
+
+def _describe_inc_sql() -> list[str]:
+    """The 'inc' leg's oracle arms: the incremental sketch store."""
+    parts = []
     # incremental sketch-store legs: count = total rows conserved
     # across the two store batches, n_unique = the batch count, freq =
     # the engine-side estimate-vs-exact + row-conservation verdict
@@ -2581,8 +2617,20 @@ FROM orders"""
   2::BIGINT AS n_unique, '{c}' AS top, 1::BIGINT AS freq
 FROM orders"""
         )
-    return "\nUNION ALL\n".join(parts)
+    return parts
 
+
+def _describe_all_oracle() -> str:
+    legs = (
+        _describe_numeric_sql,
+        _describe_object_sql,
+        _describe_dq_sql,
+        _describe_split_sql,
+        _describe_privacy_sql,
+        _describe_sketch_sql,
+        _describe_inc_sql,
+    )
+    return "\nUNION ALL\n".join(part for leg in legs for part in leg())
 
 def _corr_matrix_oracle() -> str:
     cols = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]

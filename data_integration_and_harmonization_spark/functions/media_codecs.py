@@ -384,12 +384,15 @@ def encode_gif(
 # ---------------------------------------------------------------- WAV
 
 
-def decode_wav(payload: bytes) -> tuple[int, np.ndarray]:
-    """WAV -> (sample_rate, (n_samples, n_channels) float64 in [-1, 1]).
+def _wav_view(payload: bytes) -> tuple[int, np.ndarray, Callable[[np.ndarray], np.ndarray]]:
+    """The WAV header and chunk walk, converting no sample:
+    (sample_rate, a zero-copy (n_samples, n_channels)-leading view of
+    the stored samples, the function that scales that view to float64
+    in [-1, 1]).
 
     8/16-bit integer PCM rides the stdlib ``wave`` module; everything
     the stdlib rejects falls back to a direct RIFF chunk walk
-    (:func:`_decode_wav_riff`) covering 24/32-bit integer PCM, 32/64
+    (:func:`_wav_riff_view`) covering 24/32-bit integer PCM, 32/64
     -bit IEEE float (format tag 3), and WAVE_FORMAT_EXTENSIBLE
     (0xFFFE, real tag from the SubFormat GUID) — the widths ML audio
     corpora actually contain (r13: a float32 WAV previously
@@ -403,25 +406,56 @@ def decode_wav(payload: bytes) -> tuple[int, np.ndarray]:
             width = wf.getsampwidth()
             raw = wf.readframes(wf.getnframes())
         if width == 2:
-            arr = np.frombuffer(raw, dtype="<i2").astype(np.float64) / 32768.0
-        elif width == 1:  # 8-bit WAV is unsigned
-            arr = (
-                np.frombuffer(raw, dtype=np.uint8).astype(np.float64) - 128.0
-            ) / 128.0
-        else:
-            return _decode_wav_riff(payload)
-        return rate, arr.reshape(-1, ch)
+            return rate, np.frombuffer(raw, dtype="<i2").reshape(-1, ch), _pcm16
+        if width == 1:
+            return rate, np.frombuffer(raw, dtype=np.uint8).reshape(-1, ch), _pcm8
+        return _wav_riff_view(payload)
     except (wave.Error, EOFError):
         # the stdlib raises bare EOFError on truncated chunk headers
         # (fuzz find, r13); the RIFF walk re-raises torn payloads as
         # the documented ValueError quarantine type
-        return _decode_wav_riff(payload)
+        return _wav_riff_view(payload)
 
 
-def _decode_wav_riff(payload: bytes) -> tuple[int, np.ndarray]:
+def decode_wav(payload: bytes) -> tuple[int, np.ndarray]:
+    """WAV -> (sample_rate, (n_samples, n_channels) float64 in [-1, 1]),
+    every format :func:`_wav_view` walks."""
+    rate, view, to_float = _wav_view(payload)
+    return rate, to_float(view)
+
+
+def _pcm16(v: np.ndarray) -> np.ndarray:
+    return v.astype(np.float64) / 32768.0
+
+
+def _pcm8(v: np.ndarray) -> np.ndarray:  # 8-bit WAV is unsigned
+    return (v.astype(np.float64) - 128.0) / 128.0
+
+
+def _pcm24(v: np.ndarray) -> np.ndarray:  # (..., 3) little-endian bytes
+    x = v[..., 0].astype(np.int64) | (v[..., 1].astype(np.int64) << 8) | (
+        v[..., 2].astype(np.int64) << 16
+    )
+    return (((x ^ 0x800000) - 0x800000).astype(np.float64)) / float(1 << 23)
+
+
+# (format tag, bits) -> (numpy sample layout, scale to float64)
+_RIFF_SAMPLES: dict[tuple[int, int], tuple[str, Callable[[np.ndarray], np.ndarray]]] = {
+    (3, 32): ("<f4", lambda v: v.astype(np.float64)),
+    (3, 64): ("<f8", lambda v: v.astype(np.float64)),
+    (1, 24): ("u1", _pcm24),
+    (1, 32): ("<i4", lambda v: v.astype(np.float64) / float(1 << 31)),
+    # torn header made the stdlib bail but the layout is plain PCM
+    (1, 16): ("<i2", _pcm16),
+    (1, 8): ("u1", _pcm8),
+}
+
+
+def _wav_riff_view(payload: bytes) -> tuple[int, np.ndarray, Callable[[np.ndarray], np.ndarray]]:
     """Direct RIFF/WAVE walk for the formats the stdlib rejects:
     PCM 24/32-bit, IEEE float 32/64-bit, and the EXTENSIBLE wrapper.
-    Raises ValueError on non-WAV or unsupported format tags."""
+    Trailing partial samples and frames are dropped. Raises ValueError
+    on non-WAV or unsupported format tags."""
     data = bytes(payload)
     if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
@@ -444,49 +478,22 @@ def _decode_wav_riff(payload: bytes) -> tuple[int, np.ndarray]:
         tag = struct.unpack("<H", fmt[24:26])[0]
     if ch < 1:
         raise ValueError("zero-channel WAV")
-    if tag == 3 and bits == 32:
-        arr = np.frombuffer(raw[: len(raw) // 4 * 4], dtype="<f4").astype(
-            np.float64
-        )
-    elif tag == 3 and bits == 64:
-        arr = np.frombuffer(raw[: len(raw) // 8 * 8], dtype="<f8").astype(
-            np.float64
-        )
-    elif tag == 1 and bits == 24:
-        b = np.frombuffer(raw[: len(raw) // 3 * 3], dtype=np.uint8).reshape(
-            -1, 3
-        )
-        x = (
-            b[:, 0].astype(np.int64)
-            | (b[:, 1].astype(np.int64) << 8)
-            | (b[:, 2].astype(np.int64) << 16)
-        )
-        arr = (((x ^ 0x800000) - 0x800000).astype(np.float64)) / float(1 << 23)
-    elif tag == 1 and bits == 32:
-        arr = np.frombuffer(raw[: len(raw) // 4 * 4], dtype="<i4").astype(
-            np.float64
-        ) / float(1 << 31)
-    elif tag == 1 and bits in (8, 16):
-        # torn header made the stdlib bail but the layout is plain PCM
-        if bits == 16:
-            arr = np.frombuffer(raw[: len(raw) // 2 * 2], dtype="<i2").astype(
-                np.float64
-            ) / 32768.0
-        else:
-            arr = (
-                np.frombuffer(raw, dtype=np.uint8).astype(np.float64) - 128.0
-            ) / 128.0
-    else:
+    if (tag, bits) not in _RIFF_SAMPLES:
         raise ValueError(f"unsupported WAV format tag {tag} / {bits} bits")
-    usable = len(arr) // ch * ch
-    return rate, arr[:usable].reshape(-1, ch)
+    layout, to_float = _RIFF_SAMPLES[tag, bits]
+    width = bits // 8
+    flat = np.frombuffer(raw[: len(raw) // width * width], dtype=layout)
+    if width == 3:  # 24-bit: one row of 3 bytes per sample
+        flat = flat.reshape(-1, 3)
+    usable = len(flat) // ch * ch
+    return rate, flat[:usable].reshape(-1, ch, *flat.shape[1:]), to_float
 
 
 def encode_wav_ext(
     rate: int, samples: np.ndarray, kind: str = "float32"
 ) -> bytes:
     """Fixture writer for the extended-width WAV family
-    (:func:`_decode_wav_riff`): ``kind`` in float32 | float64 |
+    (:func:`_wav_riff_view`): ``kind`` in float32 | float64 |
     pcm24 | pcm32."""
     arr = np.asarray(samples, dtype=np.float64)
     if arr.ndim == 1:
@@ -1136,12 +1143,11 @@ def _parse_y4m_tags(line: bytes) -> dict[str, bytes]:
     return tags
 
 
-def decode_y4m(payload: bytes) -> tuple[float, list[np.ndarray]]:
-    """Y4M -> (fps, frames). Frames are uint8 arrays: (h, w) for mono,
-    (h, w, 3) YCbCr for subsampled/full chroma (chroma planes
-    nearest-upsampled to luma geometry — exact for chroma constant
-    within each 2x2 site, the fixture regime). Values are YCbCr as
-    stored; no RGB conversion (features read the Y plane directly)."""
+def _y4m_walk(payload: bytes) -> tuple[float, int, int, int, list[int]]:
+    """The Y4M stream header and FRAME-marker walk, touching no pixel:
+    (fps, w, h, chroma_div, byte offset of each frame's planes).
+    ``chroma_div`` is 0 for mono, else the chroma subsampling factor.
+    Raises ValueError on anything :func:`decode_y4m` cannot decode."""
     if payload[: len(Y4M_MAGIC)] != Y4M_MAGIC:
         raise ValueError("not a YUV4MPEG2 stream")
     nl = payload.index(b"\n")
@@ -1166,7 +1172,7 @@ def decode_y4m(payload: bytes) -> tuple[float, list[np.ndarray]]:
         raise ValueError(f"unsupported Y4M colorspace C{cs}")
     y_len = w * h
     c_len = 0 if chroma_div == 0 else (w // chroma_div) * (h // chroma_div)
-    frames: list[np.ndarray] = []
+    offsets: list[int] = []
     pos = nl + 1
     n = len(payload)
     while pos < n:
@@ -1177,23 +1183,36 @@ def decode_y4m(payload: bytes) -> tuple[float, list[np.ndarray]]:
         end = pos + y_len + 2 * c_len
         if end > n:
             raise ValueError("truncated Y4M frame")
-        ybuf = np.frombuffer(payload, dtype=np.uint8, count=y_len, offset=pos)
-        yp = ybuf.reshape(h, w)
+        offsets.append(pos)
+        pos = end
+    return fps, w, h, chroma_div, offsets
+
+
+def decode_y4m(payload: bytes) -> tuple[float, list[np.ndarray]]:
+    """Y4M -> (fps, frames). Frames are uint8 arrays: (h, w) for mono,
+    (h, w, 3) YCbCr for subsampled/full chroma (chroma planes
+    nearest-upsampled to luma geometry — exact for chroma constant
+    within each 2x2 site, the fixture regime). Values are YCbCr as
+    stored; no RGB conversion (features read the Y plane directly)."""
+    fps, w, h, chroma_div, offsets = _y4m_walk(payload)
+    y_len = w * h
+    frames: list[np.ndarray] = []
+    for pos in offsets:
+        yp = np.frombuffer(payload, dtype=np.uint8, count=y_len, offset=pos).reshape(h, w)
         if chroma_div == 0:
             frames.append(yp.copy())
-        else:
-            ch, cw = h // chroma_div, w // chroma_div
-            cb = np.frombuffer(
-                payload, dtype=np.uint8, count=c_len, offset=pos + y_len
+            continue
+        ch, cw = h // chroma_div, w // chroma_div
+        cb, cr = (
+            np.frombuffer(
+                payload, dtype=np.uint8, count=ch * cw, offset=pos + y_len + k * ch * cw
             ).reshape(ch, cw)
-            cr = np.frombuffer(
-                payload, dtype=np.uint8, count=c_len, offset=pos + y_len + c_len
-            ).reshape(ch, cw)
-            if chroma_div > 1:  # nearest upsample to luma geometry
-                cb = np.repeat(np.repeat(cb, chroma_div, 0), chroma_div, 1)
-                cr = np.repeat(np.repeat(cr, chroma_div, 0), chroma_div, 1)
-            frames.append(np.stack([yp, cb, cr], axis=2))
-        pos = end
+            for k in (0, 1)
+        )
+        if chroma_div > 1:  # nearest upsample to luma geometry
+            cb = np.repeat(np.repeat(cb, chroma_div, 0), chroma_div, 1)
+            cr = np.repeat(np.repeat(cr, chroma_div, 0), chroma_div, 1)
+        frames.append(np.stack([yp, cb, cr], axis=2))
     return fps, frames
 
 
@@ -3205,13 +3224,13 @@ def _gif_frames(payload: bytes) -> tuple[float | None, list[np.ndarray]]:
 
 
 def _y4m_duration_ms(payload: bytes) -> int | None:
-    fps, frames = decode_y4m(payload)
-    return int(len(frames) * 1000 / fps) if fps else None
+    fps, *_, offsets = _y4m_walk(payload)
+    return int(len(offsets) * 1000 / fps) if fps else None
 
 
 def _wav_duration_ms(payload: bytes) -> int | None:
-    rate, samples = decode_wav(payload)
-    return len(samples) * 1000 // rate if rate else None
+    rate, view, _ = _wav_view(payload)
+    return len(view) * 1000 // rate if rate else None
 
 
 def _avi_duration_ms(payload: bytes) -> int | None:

@@ -917,11 +917,10 @@ def encode_pdf(pages: list[str], compress: bool = True) -> bytes:
     return bytes(buf)
 
 
-def encode_pdf_positioned(
-    items: list[tuple[float, float, str]], compress: bool = True
-) -> bytes:
+def encode_pdf_positioned(items: list[tuple[float, float, str]]) -> bytes:
     """Spec-shaped single-page fixture whose text is ABSOLUTELY
-    positioned: one ``Tm`` + ``Tj`` per ``(x, y, text)`` item, shown
+    positioned (one FlateDecode content stream): one ``Tm`` + ``Tj``
+    per ``(x, y, text)`` item, shown
     in LIST order — which is the stream order, deliberately allowed
     to differ from reading order. Round-trips through
     :func:`extract_pdf_text` as the items sorted top row first / left
@@ -940,19 +939,14 @@ def encode_pdf_positioned(
     for x, y, text in items:
         ops.append(b"1 0 0 1 %g %g Tm (%s) Tj" % (x, y, esc(text)))
     ops.append(b"ET")
-    content = b"\n".join(ops)
-    if compress:
-        content = zlib.compress(content)
-        filt = b"/Filter /FlateDecode "
-    else:
-        filt = b""
+    content = zlib.compress(b"\n".join(ops))
     objects = [
         b"<< /Type /Catalog /Pages 2 0 R >>",
         b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
         b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
         b"/Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-        b"<< %s/Length %d >>\nstream\n%s\nendstream"
-        % (filt, len(content), content),
+        b"<< /Filter /FlateDecode /Length %d >>\nstream\n%s\nendstream"
+        % (len(content), content),
         b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
     ]
     buf = bytearray(b"%PDF-1.4\n%\xe2\xe3\xcf\xd3\n")

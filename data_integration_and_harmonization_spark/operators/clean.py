@@ -145,17 +145,13 @@ TIMESTAMP_FORMATS: list[tuple[str, str]] = [
 ]
 
 
-def coerce_timestamps(
-    df: DataFrame,
-    cols: Sequence[str],
-    formats: Sequence[str] | None = None,
-) -> DataFrame:
+def coerce_timestamps(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """Messy-string -> timestamp coercion, the temporal sibling of C1
     :func:`coerce_numeric` (the reference parses timestamps only
     implicitly via pandas read-time inference, ref:176-177; an
     integration engine meeting N upstream systems needs an explicit,
     deterministic multi-format chain). Each target column is replaced
-    by ``coalesce(try_to_timestamp(c, f) for f in formats)`` —
+    by ``coalesce(try_to_timestamp(c, f) for f in TIMESTAMP_FORMATS)`` —
     per-format strictness means a value parses under exactly the
     first format that fully consumes it, unparseable values become
     NULL (pd.to_datetime(errors='coerce') semantics).
@@ -163,9 +159,7 @@ def coerce_timestamps(
     Pure whole-stage-codegen projection — k strict parse attempts per
     value, no shuffle, no UDF; at 100 TB this runs at scan speed.
     """
-    fmts = list(formats) if formats is not None else [f for f, _ in TIMESTAMP_FORMATS]
-    if not fmts:
-        raise ValueError("at least one timestamp format is required")
+    fmts = [f for f, _ in TIMESTAMP_FORMATS]
     targets = set(cols)
     return df.select(
         *[
@@ -179,7 +173,7 @@ def coerce_timestamps(
     )
 
 
-def inf_nan_to_null(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
+def inf_nan_to_null(df: DataFrame) -> DataFrame:
     """C2 (ref:29): fold +/-inf AND NaN to null on float/double columns.
 
     The reference maps inf->NaN; Spark distinguishes NaN from null, and
@@ -192,7 +186,6 @@ def inf_nan_to_null(df: DataFrame, cols: Sequence[str] | None = None) -> DataFra
         for f in df.schema.fields
         if isinstance(f.dataType, (T.FloatType, T.DoubleType))
     }
-    targets = floaty if cols is None else (floaty & set(cols))
     inf = float("inf")
 
     def fold(c: str):
@@ -201,7 +194,7 @@ def inf_nan_to_null(df: DataFrame, cols: Sequence[str] | None = None) -> DataFra
             F.when(F.isnan(col) | (col == inf) | (col == -inf), F.lit(None)).otherwise(col).alias(c)
         )
 
-    return df.select(*[fold(c) if c in targets else F.col(c) for c in df.columns])
+    return df.select(*[fold(c) if c in floaty else F.col(c) for c in df.columns])
 
 
 def drop_all_null_cols(df: DataFrame) -> DataFrame:
@@ -441,7 +434,6 @@ def process_data(
     df: DataFrame,
     order_col: str | Sequence[str],
     coerce: bool = True,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """The full ref:26-33 pipeline as one lazy plan: coerce -> inf/nan
     fold -> interpolate -> ffill -> drop dead columns. ``coerce=False``
@@ -451,7 +443,7 @@ def process_data(
     out = coerce_numeric(df) if coerce else df
     out = inf_nan_to_null(out)
     repair = [c for c in numeric_cols(out) if c not in _as_cols(order_col)]
-    out = interpolate_linear(out, order_col, repair, num_partitions)
+    out = interpolate_linear(out, order_col, repair)
     # ref:31's ffill is provably a no-op after both-direction
     # interpolation (any column with >=1 valid value is fully repaired;
     # all-null columns are un-fillable and dropped next), so the

@@ -48,6 +48,20 @@ _P = 2147483647
 # stays positive in a signed long (the slice the MinHash hash uses)
 SIMHASH_BITS = 60
 
+# MinHash LSH settings, shared by the engine, the incremental signature
+# store and every DuckDB oracle twin: permutations per signature, the
+# bands they split into (MINHASH_PERMS // LSH_BANDS minima per bucket)
+# and the word-shingle width
+MINHASH_PERMS = 32
+LSH_BANDS = 8
+SHINGLE_GRAM = 3
+
+# banded-Hamming settings (text SimHash and media pHash): contiguous
+# bit-bands per signature and the distance cut. Any pair within
+# Hamming distance < SIMHASH_BANDS shares a band (pigeonhole)
+SIMHASH_BANDS = 4
+SIMHASH_MAX_HAMMING = 3
+
 
 def _md5_long(col: Column) -> Column:
     """First 15 md5 hex chars = 60 bits, positive in a long; DuckDB
@@ -87,23 +101,21 @@ def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 32,
-    gram: int = 3,
 ) -> DataFrame:
     """MinHash signatures as ONE exploded-aggregate pass: explode the
     shingle set to rows, hash each shingle exactly once, then
-    compute all ``num_hashes`` permutation minima as plain codegen'd
+    compute all ``MINHASH_PERMS`` permutation minima as plain codegen'd
     aggregates with map-side partial combine.
 
-    (The tempting pure-column form — ``num_hashes`` nested
+    (The tempting pure-column form — ``MINHASH_PERMS`` nested
     ``array_min(transform(...))`` expressions — re-evaluates the whole
     tokenize->shingle->hash subtree per permutation because Catalyst
     collapses projections and doesn't CSE across lambda trees, and
     higher-order functions run interpreted. The exploded form is
-    ~num_hashes× cheaper and is the shape that scales: shingle rows
+    ~MINHASH_PERMS× cheaper and is the shape that scales: shingle rows
     partial-aggregate locally, only (id, 32 longs) ever shuffles.)
 
-    Output: (id, sig array<long>); docs with < ``gram`` tokens get an
+    Output: (id, sig array<long>); docs with < ``SHINGLE_GRAM`` tokens get an
     all-null-free empty signature via left join (sig = null).
     """
     # Fan out before the per-doc shingle/hash work: a single-file scan
@@ -121,34 +133,31 @@ def minhash_signatures(
     # int — DuckDB errors on overflow where Spark's non-ANSI mode
     # silently wraps.
     ex = staged.select(
-        "id", F.explode(word_shingles(F.col("__tk"), gram)).alias("s")
+        "id", F.explode(word_shingles(F.col("__tk"), SHINGLE_GRAM)).alias("s")
     ).select("id", (_md5_long(F.col("s")) % _P).alias("h"))
     aggs = [
         F.min((F.col("h") * (2 * i + 1) + (7 * i + 3)) % _P).alias(f"m{i}")
-        for i in range(num_hashes)
+        for i in range(MINHASH_PERMS)
     ]
     sig = ex.groupBy("id").agg(*aggs)
-    return sig.select("id", F.array(*[f"m{i}" for i in range(num_hashes)]).alias("sig"))
+    return sig.select("id", F.array(*[f"m{i}" for i in range(MINHASH_PERMS)]).alias("sig"))
 
 
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    gram: int = 3,
 ) -> DataFrame:
     """Near-dup candidate pairs via banded LSH: split the signature
-    into ``bands`` rows of ``num_hashes/bands``; docs sharing any
+    into ``LSH_BANDS`` rows of ``MINHASH_PERMS/LSH_BANDS``; docs sharing any
     band bucket (the concatenated band minima, so an external oracle
     can reproduce the candidate graph bit-for-bit) are candidates,
     through the one (band, bucket) self-join, :func:`_bucket_pairs`.
 
     Output: (id_a, id_b, n_shared_bands), id_a < id_b.
     """
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, gram)
-    return _bucket_pairs(_banded_rows(sig, num_hashes, bands))
+    sig = minhash_signatures(df, text_col, id_col)
+    return _bucket_pairs(_banded_rows(sig))
 
 
 def _bucket_pairs(banded: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
@@ -225,45 +234,42 @@ def simhash_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_hamming: int = 3,
-    bands: int = 4,
-    max_bucket: int | None = None,
 ) -> DataFrame:
-    """SimHash near-dup pairs: split each signature into ``bands``
-    contiguous bit-bands; candidates share at least one exact band
-    (pigeonhole: any pair within Hamming distance < ``bands`` is
-    guaranteed a matching band), then the exact Hamming distance
-    filters candidates to ``<= max_hamming``.
+    """SimHash near-dup pairs: split each signature into
+    ``SIMHASH_BANDS`` contiguous bit-bands; candidates share at least
+    one exact band (pigeonhole: any pair within Hamming distance <
+    ``SIMHASH_BANDS`` is guaranteed a matching band), then the exact
+    Hamming distance filters candidates to ``<= SIMHASH_MAX_HAMMING``.
 
     Scale shape mirrors :func:`minhash_lsh_candidates`: the banded
     frame shuffles once on (band, bucket); the self-join only ever
     touches bucket-mates, so cost tracks true near-dup density —
     never all-pairs, and nothing corpus-sized is broadcast.
-    ``max_bucket``: the hot-bucket guard, passed through to
-    :func:`hamming_pairs` (see there for the recall trade).
 
     Output: (id_a, id_b, hamming), id_a < id_b.
     """
-    sig = simhash_signatures(df, text_col, id_col)
-    return hamming_pairs(
-        sig,
-        bits=SIMHASH_BITS,
-        bands=bands,
-        max_hamming=max_hamming,
-        max_bucket=max_bucket,
-    )
+    return hamming_pairs(simhash_signatures(df, text_col, id_col), bits=SIMHASH_BITS)
 
 
-def _banded_signatures(sig: DataFrame, bits: int, bands: int) -> DataFrame:
-    """(id, sig, band, bucket) banding of a signature table — the
-    shared front half of :func:`hamming_pairs` and
-    :func:`hamming_bucket_report`. NULL signatures are dropped (they
-    can match nothing); masking after the shift keeps band extraction
-    correct for NEGATIVE signatures."""
-    rpb = bits // bands
+def hamming_pairs(sig: DataFrame, bits: int = 64) -> DataFrame:
+    """Banded-Hamming self-join over any (id, sig) signature table of
+    ``bits``-wide signatures — the shared candidate machinery under
+    text SimHash (:func:`simhash_pairs`) and media perceptual-hash
+    near-dup (over :func:`media_signature_table`): split each
+    signature into ``SIMHASH_BANDS`` contiguous bit-bands, candidates
+    share at least one exact band (pigeonhole: any pair within Hamming
+    distance < ``SIMHASH_BANDS`` is guaranteed a matching band), exact
+    ``bit_count(xor) <= SIMHASH_MAX_HAMMING`` filter after.
+
+    NULL signatures (e.g. undecodable payloads) can match nothing and
+    are dropped before banding; masking after the shift keeps band
+    extraction correct for NEGATIVE signatures. A (band, bucket) group
+    of n signatures self-joins into O(n^2) candidates, so an
+    all-identical corpus is quadratic. Output: (id_a, id_b, hamming),
+    id_a < id_b."""
+    rpb = bits // SIMHASH_BANDS
     mask = (1 << rpb) - 1
-    sig = sig.where(F.col("sig").isNotNull())
-    return sig.select(
+    banded = sig.where(F.col("sig").isNotNull()).select(
         "id",
         "sig",
         F.explode(
@@ -275,90 +281,16 @@ def _banded_signatures(sig: DataFrame, bits: int, bands: int) -> DataFrame:
                         .bitwiseAND(F.lit(mask))
                         .alias("bucket"),
                     )
-                    for b in range(bands)
+                    for b in range(SIMHASH_BANDS)
                 ]
             )
         ).alias("bb"),
     ).select("id", "sig", "bb.band", "bb.bucket")
-
-
-def hamming_bucket_report(
-    sig: DataFrame, bits: int = 64, bands: int = 4, top_n: int = 5
-) -> DataFrame:
-    """Hot-bucket diagnostic for the banded-Hamming self-join — run it
-    BEFORE paying the shuffle: a (band, bucket) group of n signatures
-    emits O(n^2) candidate pairs, so a constant-content corpus (solid
-    images, silence -> sig 0) detonates quadratically in ONE bucket
-    while staying invisible in row counts. Reuses
-    :func:`..functions.skew.key_skew_report` over the banded keys:
-    the top row's ``x_mean`` IS the skew factor, and its ``key``
-    (``'band|bucket'``) names the bucket a ``max_bucket`` cap (or a
-    corpus fix) should target. Cost: one grouped count."""
-    from data_integration_and_harmonization_spark.functions.skew import key_skew_report
-
-    return key_skew_report(_banded_signatures(sig, bits, bands), ["band", "bucket"], top_n)
-
-
-def hamming_dropped_buckets(
-    sig: DataFrame, max_bucket: int, bits: int = 64, bands: int = 4
-) -> DataFrame:
-    """(band, bucket, n) groups a ``max_bucket``-capped
-    :func:`hamming_pairs` run SKIPPED — the flag side of
-    cap-and-flag: pair generation stays bounded while this report
-    makes the dropped candidates auditable instead of silent."""
-    return (
-        _banded_signatures(sig, bits, bands)
-        .groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > max_bucket)
-    )
-
-
-def hamming_pairs(
-    sig: DataFrame,
-    bits: int = 64,
-    bands: int = 4,
-    max_hamming: int = 3,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Banded-Hamming self-join over any (id, sig) signature table —
-    the shared candidate machinery under text SimHash
-    (:func:`simhash_pairs`) and media perceptual-hash near-dup (over
-    :func:`media_signature_table`): split each signature into ``bands``
-    contiguous bit-bands, candidates share at least one exact band
-    (pigeonhole: any pair within Hamming distance < ``bands`` is
-    guaranteed a matching band), exact ``bit_count(xor)`` filter after.
-
-    NULL signatures (e.g. undecodable payloads) are dropped before
-    banding — they can match nothing (banding details:
-    :func:`_banded_signatures`). Output: (id_a, id_b, hamming),
-    id_a < id_b.
-
-    ``max_bucket`` is the hot-bucket GUARD: a (band, bucket) group of
-    n signatures self-joins into O(n^2) candidates, so a degenerate
-    corpus (all-identical content) detonates in one bucket. With the
-    cap set, groups larger than ``max_bucket`` are skipped (one
-    window count over the banded keys — same shuffle key the join
-    pays anyway) and reported by :func:`hamming_dropped_buckets`;
-    a pair whose EVERY matching band is capped is lost, so the exact
-    pigeonhole recall guarantee holds only for the uncapped default.
-    Run :func:`hamming_bucket_report` first to see whether a corpus
-    needs the cap at all."""
-    banded = _banded_signatures(sig, bits, bands)
-    if max_bucket is not None:
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("band", "bucket")
-        banded = (
-            banded.withColumn("_bn", F.count(F.lit(1)).over(w))
-            .where(F.col("_bn") <= max_bucket)
-            .drop("_bn")
-        )
     cand = _bucket_pairs(banded, ("sig",))
     hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("long")
     return (
         cand.select("id_a", "id_b", hamming.alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
     )
 
 
@@ -589,7 +521,6 @@ def incremental_exact_dedup(
     store_path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    normalize: bool = False,
 ) -> DataFrame:
     """Batch-over-batch dedup against a persisted fingerprint store —
     the shape a continuously-ingesting corpus pipeline needs: each
@@ -616,9 +547,6 @@ def incremental_exact_dedup(
     ``CommitConflictError`` rather than admitting duplicates the
     winner holds. Returns the surviving rows of ``new_docs``
     (original columns).
-
-    ``normalize=True`` fingerprints the :func:`~.text.normalized`
-    form, admitting only one case/whitespace/punct variant corpus-wide.
     """
     spark = new_docs.sparkSession
     # md5(NULL) is NULL and a null key matches nothing in the keep
@@ -626,7 +554,7 @@ def incremental_exact_dedup(
     # dedup group (first one admitted corpus-wide) instead of
     # silently dropping them all
     fp_expr = F.coalesce(
-        F.md5(normalized(text_col) if normalize else F.col(text_col)),
+        F.md5(F.col(text_col)),
         F.lit("__null_text__"),
     )
     fresh = new_docs.withColumn("__fp", fp_expr)
@@ -653,12 +581,12 @@ def incremental_exact_dedup(
     return fresh.drop("__fp")
 
 
-def _banded_rows(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+def _banded_rows(sig: DataFrame) -> DataFrame:
     """(id, band, bucket) rows from an (id, sig) signature frame —
     the banding step of :func:`minhash_lsh_candidates`, factored out
     so the incremental store path bands the SAME way. The bucket is
     the band's minima joined with '|'."""
-    rows_per_band = num_hashes // bands
+    rows_per_band = MINHASH_PERMS // LSH_BANDS
 
     def bucket_of(b: int) -> Column:
         cols = [F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
@@ -670,14 +598,14 @@ def _banded_rows(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
             F.array(
                 *[
                     F.struct(F.lit(b).alias("band"), bucket_of(b).alias("bucket"))
-                    for b in range(bands)
+                    for b in range(LSH_BANDS)
                 ]
             )
         ).alias("bb"),
     ).select("id", "bb.band", "bb.bucket")
 
 
-def _sig_agreement(a: Column, b: Column, num_hashes: int) -> Column:
+def _sig_agreement(a: Column, b: Column) -> Column:
     """Estimated Jaccard from two MinHash signatures: the fraction of
     agreeing components (the unbiased MinHash estimator). Pure
     higher-order column math — runs only on LSH candidate pairs."""
@@ -686,7 +614,7 @@ def _sig_agreement(a: Column, b: Column, num_hashes: int) -> Column:
         F.lit(0),
         lambda acc, x: acc + x,
     )
-    return agree / F.lit(float(num_hashes))
+    return agree / F.lit(float(MINHASH_PERMS))
 
 
 def incremental_near_dedup(
@@ -695,9 +623,6 @@ def incremental_near_dedup(
     threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    gram: int = 3,
     store_partitions: int = 8,
     tag: str | None = None,
 ) -> DataFrame:
@@ -721,7 +646,7 @@ def incremental_near_dedup(
     signatures are committed to the store as a new data dir (same
     commit protocol and recompute-stability as the exact variant; a
     batch that admits nothing commits nothing). Docs too short to
-    shingle (< gram tokens) have no signature: always admitted, never
+    shingle (< ``SHINGLE_GRAM`` tokens) have no signature: always admitted, never
     stored — they cannot near-dup anything at signature granularity.
 
     Scale shape: signatures are one exploded aggregate; candidates are
@@ -735,7 +660,7 @@ def incremental_near_dedup(
 
     History matching reads the index with the new batch's collided
     (band, pbucket) set pushed as a PARTITION filter (the set is
-    bounded by bands x store_partitions, collected once — never
+    bounded by LSH_BANDS x store_partitions, collected once — never
     corpus-sized), so a small increment against years of history
     physically opens only colliding bucket directories instead of
     scanning — and re-banding — every admitted signature per batch.
@@ -768,17 +693,17 @@ def incremental_near_dedup(
 
     spark = new_docs.sparkSession
     sig = track(
-        minhash_signatures(new_docs, text_col, id_col, num_hashes, gram).persist()
+        minhash_signatures(new_docs, text_col, id_col).persist()
     )
     # (a) within-batch components over estimated near-dup pairs
-    cand = _bucket_pairs(_banded_rows(sig, num_hashes, bands))
+    cand = _bucket_pairs(_banded_rows(sig))
     sa = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
     pairs = (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
         .where(
-            _sig_agreement(F.col("sig_a"), F.col("sig_b"), num_hashes)
+            _sig_agreement(F.col("sig_a"), F.col("sig_b"))
             >= F.lit(threshold)
         )
         .select("id_a", "id_b")
@@ -807,9 +732,9 @@ def incremental_near_dedup(
         # — the join itself still pairs only keeper rows); the superset
         # costs at most a few extra directory opens and buys the probe
         # independence from the component chain, so the two run
-        # concurrently. Still bounded by bands x store_partitions,
+        # concurrently. Still bounded by LSH_BANDS x store_partitions,
         # never by batch or corpus size.
-        all_banded = _banded_rows(sig, num_hashes, bands).withColumn(
+        all_banded = _banded_rows(sig).withColumn(
             "pbucket", pb(F.col("bucket"))
         )
         _k = (F.col("band") * P + F.col("pbucket")).alias("k")
@@ -822,7 +747,7 @@ def incremental_near_dedup(
 
     keys, keep_sig = overlap(_keys, _keepers)
     nb = (
-        _banded_rows(keep_sig, num_hashes, bands)
+        _banded_rows(keep_sig)
         .withColumn("pbucket", pb(F.col("bucket")))
         .alias("n")
     )
@@ -858,7 +783,7 @@ def incremental_near_dedup(
                 "hid",
             )
             .where(
-                _sig_agreement(F.col("sig_a"), F.col("sig_b"), num_hashes)
+                _sig_agreement(F.col("sig_a"), F.col("sig_b"))
                 >= F.lit(threshold)
             )
             .select("id")
@@ -891,7 +816,7 @@ def incremental_near_dedup(
             fs.delete(jvm.org.apache.hadoop.fs.Path(out_dir), True)
         else:
             (
-                _banded_rows(keep_sig, num_hashes, bands)
+                _banded_rows(keep_sig)
                 .withColumn("pbucket", pb(F.col("bucket")))
                 # co-locate each (band, pbucket) into one task so every
                 # partition directory gets one file, not one per task
@@ -1237,9 +1162,10 @@ def line_dedup(
 
 
 def _shingle_sets(
-    df: DataFrame, text_col: str, id_col: str, gram: int, keys: dict | None = None
+    df: DataFrame, text_col: str, id_col: str, keys: dict | None = None
 ) -> DataFrame:
-    """(id, *keys, set) word-shingle sets, ``keys`` naming key columns.
+    """(id, *keys, set) word ``SHINGLE_GRAM``-shingle sets, ``keys``
+    naming key columns.
 
     The raw text shuffles ONCE, on the keys (on id without keys;
     explicit n => a single-file scan still fans out); the expensive
@@ -1255,7 +1181,7 @@ def _shingle_sets(
         )
         .repartition(n, *(list(keys) or ["id"]))
         .select("id", *keys, tokens("__t").alias("__tk"))
-        .select("id", *keys, word_shingles(F.col("__tk"), gram).alias("set"))
+        .select("id", *keys, word_shingles(F.col("__tk"), SHINGLE_GRAM).alias("set"))
     )
 
 
@@ -1263,7 +1189,6 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    gram: int = 3,
     threshold: float = 0.0,
     length_bucket: int = 100,
 ) -> DataFrame:
@@ -1288,7 +1213,7 @@ def ngram_jaccard_pairs(
     keys = {"blk": F.floor(F.length(F.col(text_col)) / length_bucket)}
     if "lang" in df.columns:
         keys["lang"] = F.col("lang")
-    sets = _shingle_sets(df, text_col, id_col, gram, keys)
+    sets = _shingle_sets(df, text_col, id_col, keys)
     return jaccard_pairs(sets, threshold, list(keys))
 
 
@@ -1297,9 +1222,6 @@ def lsh_verified_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    gram: int = 3,
 ) -> DataFrame:
     """The 100 TB near-dup pipeline: MinHash-LSH proposes candidate
     pairs (near-linear), exact shingle Jaccard
@@ -1309,8 +1231,8 @@ def lsh_verified_pairs(
 
     Output: (id_a, id_b, jaccard) for verified pairs >= threshold.
     """
-    cands = minhash_lsh_candidates(df, text_col, id_col, num_hashes, bands, gram)
-    sets = _shingle_sets(df, text_col, id_col, gram)
+    cands = minhash_lsh_candidates(df, text_col, id_col)
+    sets = _shingle_sets(df, text_col, id_col)
     return jaccard_pairs(sets, threshold, candidates=cands)
 
 
@@ -1689,7 +1611,7 @@ def q_dedup_lsh_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     # oracle pair-for-pair.
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     cands = minhash_lsh_candidates(docs)
-    ver = jaccard_pairs(_shingle_sets(docs, "text", "doc_id", 3), 0.5, candidates=cands)
+    ver = jaccard_pairs(_shingle_sets(docs, "text", "doc_id"), 0.5, candidates=cands)
     return cands.select(
         F.lit("candidate").alias("kind"),
         "id_a",
@@ -1994,7 +1916,7 @@ def _simhash_setup(spark: SparkSession, sf: str) -> dict:
 
 def _simhash_text(ctx: dict) -> DataFrame:
     docs = ctx["spark"].read.parquet(f"{ctx['sf']}/documents.parquet")
-    return simhash_pairs(docs, max_hamming=3, bands=4).select(F.lit("text").alias("kind"), "id_a", "id_b", "hamming")
+    return simhash_pairs(docs).select(F.lit("text").alias("kind"), "id_a", "id_b", "hamming")
 
 
 def _simhash_bits(kind_tag: str, kind_val: str, ctx: dict) -> DataFrame:
@@ -2025,10 +1947,7 @@ def _simhash_bits(kind_tag: str, kind_val: str, ctx: dict) -> DataFrame:
 def _simhash_pairs(kind_tag: str, kind_val: str, ctx: dict) -> DataFrame:
     """One modality's banded near-dup pairs."""
     return hamming_pairs(
-        ctx["sig"].where(F.col("kind") == kind_val).select("id", "sig"),
-        bits=64,
-        bands=4,
-        max_hamming=3,
+        ctx["sig"].where(F.col("kind") == kind_val).select("id", "sig")
     ).select(F.lit(kind_tag).alias("kind"), "id_a", "id_b", "hamming")
 
 
@@ -2179,10 +2098,14 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+# the MinHash agreement count of a candidate pair (sig rows a, b)
+_AGREE_SUM = " + ".join(
+    f"CASE WHEN a.m{i} = b.m{i} THEN 1 ELSE 0 END" for i in range(MINHASH_PERMS)
+)
+
+
 def _md5_minhash_cte(
     shingles: str,
-    num_hashes: int = 32,
-    bands: int = 8,
     source: str = "documents",
     bare: bool = False,
     prefix: str = "",
@@ -2199,17 +2122,17 @@ def _md5_minhash_cte(
     every CTE (``sh``/``ex``/``sig``/``banded``/``cand`` ->
     ``<p>sh``...) so two instances can coexist in one WITH block."""
     p = prefix
-    rpb = num_hashes // bands
+    rpb = MINHASH_PERMS // LSH_BANDS
     base = "(CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT) % 2147483647)"
     mins = ",\n    ".join(
         f"min(({base} * {2 * i + 1} + {7 * i + 3}) % 2147483647) AS m{i}"
-        for i in range(num_hashes)
+        for i in range(MINHASH_PERMS)
     )
     band_rows = "\n  UNION ALL\n".join(
         f"  SELECT id, {b} AS band, "
         + " || '|' || ".join(f"m{b * rpb + r}::VARCHAR" for r in range(rpb))
         + f" AS bucket FROM {p}sig"
-        for b in range(bands)
+        for b in range(LSH_BANDS)
     )
     return f"""
 {'' if bare else 'WITH '}{p}sh AS MATERIALIZED (
@@ -2231,12 +2154,12 @@ def _md5_minhash_cte(
 """
 
 
-def _md5_simhash_sql(max_hamming: int = 3, bands: int = 4) -> str:
+def _md5_simhash_sql() -> str:
     """DuckDB twin of ``simhash_pairs``: same token
     hash (first 15 md5 hex chars = 60 bits), same per-bit vote sums,
     same 15-bit band buckets, same Hamming filter."""
     bits = SIMHASH_BITS
-    rpb = bits // bands
+    rpb = bits // SIMHASH_BANDS
     mask = (1 << rpb) - 1
     votes = ",\n    ".join(
         f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
@@ -2247,7 +2170,7 @@ def _md5_simhash_sql(max_hamming: int = 3, bands: int = 4) -> str:
     )
     band_rows = "\n  UNION ALL\n".join(
         f"  SELECT id, sig, {b} AS band, (sig >> {b * rpb}) & {mask} AS bucket FROM sig"
-        for b in range(bands)
+        for b in range(SIMHASH_BANDS)
     )
     return f"""
 WITH tok AS (
@@ -2271,7 +2194,7 @@ WITH tok AS (
 )
 SELECT id_a, id_b, bit_count(xor(sa, sb))::BIGINT AS hamming
 FROM cand
-WHERE bit_count(xor(sa, sb)) <= {max_hamming}
+WHERE bit_count(xor(sa, sb)) <= {SIMHASH_MAX_HAMMING}
 """
 
 
@@ -2417,17 +2340,17 @@ SELECT 'img_bits' AS kind, mid AS id_a, pos AS id_b, bit AS hamming
 FROM bits WHERE mid > -10
 UNION ALL
 SELECT 'img_pair' AS kind, id_a, id_b, hamming
-FROM ham WHERE hamming <= 3 AND id_a > -10
+FROM ham WHERE hamming <= {SIMHASH_MAX_HAMMING} AND id_a > -10
 UNION ALL
 SELECT 'aud_bits' AS kind, mid AS id_a, pos AS id_b, bit AS hamming FROM aud_bits
 UNION ALL
-SELECT 'aud_pair' AS kind, id_a, id_b, hamming FROM aud_ham WHERE hamming <= 3
+SELECT 'aud_pair' AS kind, id_a, id_b, hamming FROM aud_ham WHERE hamming <= {SIMHASH_MAX_HAMMING}
 UNION ALL
 SELECT 'vid_bits' AS kind, mid AS id_a, pos AS id_b, bit AS hamming
 FROM bits WHERE mid < -20
 UNION ALL
 SELECT 'vid_pair' AS kind, id_a, id_b, hamming
-FROM ham WHERE hamming <= 3 AND id_a < -20
+FROM ham WHERE hamming <= {SIMHASH_MAX_HAMMING} AND id_a < -20
 """
 
 
@@ -2445,16 +2368,13 @@ def _nd_admit_cte(
     multiple admit replays coexist in one WITH block. Splice after
     ``WITH RECURSIVE`` (the component reachability is recursive)."""
     p = prefix
-    agree_sum = " + ".join(
-        f"CASE WHEN a.m{i} = b.m{i} THEN 1 ELSE 0 END" for i in range(32)
-    )
     return (
         _md5_minhash_cte(shingles, bare=True, source=source, prefix=p)
         + f""",
 {p}nd_agree AS (
   SELECT c.id_a, c.id_b
   FROM {p}cand c JOIN {p}sig a ON a.id = c.id_a JOIN {p}sig b ON b.id = c.id_b
-  WHERE ({agree_sum}) / 32.0 >= 0.5
+  WHERE ({_AGREE_SUM}) / {float(MINHASH_PERMS)} >= 0.5
 ),
 {p}nd_e_edges AS (
   SELECT id_a AS src, id_b AS dst FROM {p}nd_agree WHERE id_a % 2 = 0 AND id_b % 2 = 0
@@ -2503,12 +2423,12 @@ def _nd_admit_cte(
     )
 
 
+_TOKS = f"regexp_extract_all(lower(text), '{TOKEN_RE}')"
 _SHINGLES = (
     f"list_distinct(list_transform("
-    f"range(1, greatest(len(regexp_extract_all(lower(text), '{TOKEN_RE}')) - 2, 0) + 1), "
-    f"i -> regexp_extract_all(lower(text), '{TOKEN_RE}')[i] || ' ' || "
-    f"regexp_extract_all(lower(text), '{TOKEN_RE}')[i+1] || ' ' || "
-    f"regexp_extract_all(lower(text), '{TOKEN_RE}')[i+2]))"
+    f"range(1, greatest(len({_TOKS}) - {SHINGLE_GRAM - 1}, 0) + 1), i -> "
+    + " || ' ' || ".join(f"{_TOKS}[i{f'+{j}' if j else ''}]" for j in range(SHINGLE_GRAM))
+    + "))"
 )
 
 _MINHASH_CTE = _md5_minhash_cte(_SHINGLES)
@@ -2524,11 +2444,7 @@ _MINHASH_CTE = _md5_minhash_cte(_SHINGLES)
 # (the streamed multi-version drain lands both versions in one
 # micro-batch) — in-batch components keep the min id, stored =
 # signature-bearing keepers, fp pins all 32 minima per id
-_SIG_RENDER = " || ',' || ".join(f"m{i}::VARCHAR" for i in range(32))
-
-_AGREE_SUM = " + ".join(
-    f"CASE WHEN a.m{i} = b.m{i} THEN 1 ELSE 0 END" for i in range(32)
-)
+_SIG_RENDER = " || ',' || ".join(f"m{i}::VARCHAR" for i in range(MINHASH_PERMS))
 
 _CDF_CTE = (
     _md5_minhash_cte(
@@ -2541,7 +2457,7 @@ _CDF_CTE = (
 c_agree AS (
   SELECT c.id_a, c.id_b
   FROM c_cand c JOIN c_sig a ON a.id = c.id_a JOIN c_sig b ON b.id = c.id_b
-  WHERE ({_AGREE_SUM}) / 32.0 >= 0.5
+  WHERE ({_AGREE_SUM}) / {float(MINHASH_PERMS)} >= 0.5
 ),
 c_edges AS (
   SELECT id_a AS src, id_b AS dst FROM c_agree

@@ -40,9 +40,7 @@ def l2_norm(col: Column) -> Column:
     )
 
 
-def l2_normalize(
-    df: DataFrame, vec_col: str = "embedding", out_col: str | None = None
-) -> DataFrame:
+def l2_normalize(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Unit-normalize a vector column; all-zero vectors stay zero.
 
     The norm is materialized into a column FIRST so the division
@@ -58,7 +56,7 @@ def l2_normalize(
         F.col(nrm_col) > 0,
         F.transform(_as_double(F.col(vec_col)), lambda x: x / F.col(nrm_col)),
     ).otherwise(_as_double(F.col(vec_col)))
-    return out.withColumn(out_col or vec_col, unit).drop(nrm_col)
+    return out.withColumn(vec_col, unit).drop(nrm_col)
 
 
 def mean_pool(
@@ -131,11 +129,9 @@ def truncate_dim(
     df: DataFrame,
     dim: int,
     vec_col: str = "embedding",
-    out_col: str | None = None,
-    renormalize: bool = True,
 ) -> DataFrame:
     """Matryoshka-style dimension truncation: keep the first ``dim``
-    components and (by default) re-unit-normalize — the standard way
+    components and re-unit-normalize — the standard way
     MRL-trained embeddings trade recall for index size (a 4x-shorter
     prefix costs a few recall points but quarters every ANN
     structure's memory and the brute-force FLOPs). Pure narrow
@@ -144,10 +140,8 @@ def truncate_dim(
     """
     if dim <= 0:
         raise ValueError(f"dim must be positive, got {dim}")
-    out = df.withColumn(out_col or vec_col, F.slice(_as_double(F.col(vec_col)), 1, dim))
-    if renormalize:
-        out = l2_normalize(out, out_col or vec_col)
-    return out
+    out = df.withColumn(vec_col, F.slice(_as_double(F.col(vec_col)), 1, dim))
+    return l2_normalize(out, vec_col)
 
 
 def projection_matrix(in_dim: int, out_dim: int, seed: int = 42):
@@ -167,7 +161,6 @@ def random_projection(
     vec_col: str = "embedding",
     out_col: str | None = None,
     seed: int = 42,
-    in_dim: int | None = None,
 ) -> DataFrame:
     """Johnson-Lindenstrauss random projection: dense seeded-Gaussian
     dimensionality reduction for the embedding column — the cheap
@@ -183,12 +176,10 @@ def random_projection(
     table + exploded aggregate (the PQ-centers trade documented in
     q_dedup's SemDeDup notes).
     """
-    if in_dim is None:
-        row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-        if row is None:
-            return df.withColumn(out_col or vec_col, F.col(vec_col))
-        in_dim = row["d"]
-    R = projection_matrix(in_dim, out_dim, seed)
+    row = df.select(F.size(F.col(vec_col)).alias("d")).first()
+    if row is None:
+        return df.withColumn(out_col or vec_col, F.col(vec_col))
+    R = projection_matrix(row["d"], out_dim, seed)
     # r13: the k x d literal matrix used to be assembled as k*d
     # separate F.lit() calls plus k python-lambda HOF builds — ~2.4 s
     # of pure DRIVER py4j time per invocation at k=32, d=64 (the

@@ -195,14 +195,10 @@ def bucketed_anomalies(
     return flagged.groupBy(key).agg(F.count(F.lit(1)).alias("n_anomalies"))
 
 
-def funnel_counts(
-    events: DataFrame,
-    steps: list[str] | None = None,
-    user_col: str = "user_id",
-) -> DataFrame:
-    """Ordered-sequence funnel: how many users performed step 1, then
-    step 2 strictly after their first step 1, then step 3 strictly
-    after that first valid step 2, ... The min-time recursion
+def funnel_counts(events: DataFrame, user_col: str = "user_id") -> DataFrame:
+    """Ordered-sequence funnel over view -> click -> purchase: how many
+    users performed step 1, then step 2 strictly after their first
+    step 1, then step 3 strictly after that first valid step 2. The min-time recursion
     (t_k = earliest step-k event after t_{k-1}) is the greedy
     subsequence match, which maximizes reach at every depth.
 
@@ -214,7 +210,7 @@ def funnel_counts(
 
     Output: (step_idx, step, n_users).
     """
-    steps = steps or ["view", "click", "purchase"]
+    steps = ["view", "click", "purchase"]
     w = Window.partitionBy(user_col)
     cur = events.where(F.col("event_type").isin(steps))
     prev_t = None

@@ -114,50 +114,37 @@ def label_encode(df: DataFrame, cols: Sequence[str] | None = None) -> tuple[Data
     return out.select(*proj), encoders
 
 
-def one_hot(
-    df: DataFrame,
-    col: str,
-    categories: Sequence[str] | None = None,
-    drop_input: bool = False,
-) -> tuple[DataFrame, list[str]]:
+def one_hot(df: DataFrame, col: str) -> tuple[DataFrame, list[str]]:
     """One-hot encoding (pandas ``get_dummies`` / sklearn
     ``OneHotEncoder``): one 0/1 indicator column per category, named
     ``{col}__{category}``.
 
-    The category list is either given explicitly (the production path:
-    a frozen vocabulary survives train/serve skew) or derived from a
-    bounded distinct scan — legitimate to collect because k is by
-    definition small for a one-hot-able column; the guard raises past
-    ``max_categories`` = 64 rather than silently exploding the schema.
-    The encode itself is a narrow projection of k codegen'd indicator
-    expressions — no join, no shuffle, nulls get an all-zeros row
-    (sklearn ``handle_unknown='ignore'`` semantics).
+    The category list comes from a bounded distinct scan — legitimate
+    to collect because k is by definition small for a one-hot-able
+    column; the guard raises past ``max_categories`` = 64 rather than
+    silently exploding the schema. The encode itself is a narrow
+    projection of k codegen'd indicator expressions — no join, no
+    shuffle, nulls get an all-zeros row (sklearn
+    ``handle_unknown='ignore'`` semantics).
     """
-    if categories is None:
-        cats = [
-            r[0]
-            for r in df.select(F.col(col).cast("string").alias("v"))
-            .where(F.col("v").isNotNull())
-            .distinct()
-            .orderBy("v")
-            .limit(65)
-            .collect()
-        ]
-        if len(cats) > 64:
-            raise ValueError(
-                f"one_hot({col!r}): more than 64 distinct categories; "
-                "pass an explicit `categories` vocabulary"
-            )
-    else:
-        cats = [str(c) for c in categories]
+    cats = [
+        r[0]
+        for r in df.select(F.col(col).cast("string").alias("v"))
+        .where(F.col("v").isNotNull())
+        .distinct()
+        .orderBy("v")
+        .limit(65)
+        .collect()
+    ]
+    if len(cats) > 64:
+        raise ValueError(f"one_hot({col!r}): more than 64 distinct categories")
     ind = [
         F.when(F.col(col).cast("string") == F.lit(c), F.lit(1))
         .otherwise(F.lit(0))
         .alias(f"{col}__{c}")
         for c in cats
     ]
-    keep = [c for c in df.columns if not (drop_input and c == col)]
-    return df.select(*keep, *ind), cats
+    return df.select(*df.columns, *ind), cats
 
 
 def quantile_bucketize(
@@ -207,19 +194,17 @@ def target_encode(
     target_col: str,
     smoothing: float = 10.0,
     out_col: str | None = None,
-    loo: bool = True,
 ) -> DataFrame:
     """Smoothed target encoding of a categorical column (engine
     extension — the supervised encoder for high-cardinality
     categories, where F2's ordinal codes carry no signal):
 
-        enc = (sum_cat [- own y] + smoothing * prior) /
-              (n_cat   [- 1]     + smoothing)
+        enc = (sum_cat - own y + smoothing * prior) /
+              (n_cat   - 1     + smoothing)
 
-    ``loo=True`` (default) excludes the row's own target —
-    leave-one-out, the standard leakage guard when encoding the
-    training table itself; rows with a null target use the plain
-    smoothed mean. ``prior`` is the global target mean, pulling rare
+    The row's own target is excluded — leave-one-out, the standard
+    leakage guard when encoding the training table itself; rows with
+    a null target use the plain smoothed mean. ``prior`` is the global target mean, pulling rare
     categories toward it.
 
     Plan: one map-side-combinable groupBy for the per-category
@@ -248,14 +233,11 @@ def target_encode(
     m = F.lit(float(smoothing))
     prior = F.col("__te_prior")
     plain = (F.col("__te_s") + m * prior) / (F.col("__te_n") + m)
-    if loo:
-        enc = F.when(
-            t.isNull() | F.col("__te_s").isNull(), plain
-        ).otherwise(
-            (F.col("__te_s") - t + m * prior) / (F.col("__te_n") - 1 + m)
-        )
-    else:
-        enc = plain
+    enc = F.when(
+        t.isNull() | F.col("__te_s").isNull(), plain
+    ).otherwise(
+        (F.col("__te_s") - t + m * prior) / (F.col("__te_n") - 1 + m)
+    )
     # a category entirely absent from the fit (all-null targets) or a
     # null category falls back to the prior
     enc = F.coalesce(enc, prior)

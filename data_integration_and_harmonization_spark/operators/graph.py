@@ -340,9 +340,7 @@ def pagerank_cte_fragment(
     return head + "".join(steps)
 
 
-def pagerank_ppb_leg(
-    lineitem: DataFrame, edges: DataFrame | None = None
-) -> DataFrame:
+def pagerank_ppb_leg(lineitem: DataFrame) -> DataFrame:
     """The driver-visible PageRank leg (host: ``dedup_clusters``, the
     graph-family query — components and PageRank side by side).
 
@@ -350,12 +348,8 @@ def pagerank_ppb_leg(
     the host schema's cluster_id is BIGINT, so the rank rides as
     fixed-point round(pr * 1e9) — lossless to the oracle's 6-decimal
     convention (engine/oracle double drift is ~1e-8 ppb, far from any
-    rounding boundary) and reversible for human reading.
-
-    ``edges``: a prebuilt (persisted) co-purchase edge table, so a
-    host running several graph legs builds it once."""
-    if edges is None:
-        edges = copurchase_edges(lineitem, min_support=2)
+    rounding boundary) and reversible for human reading."""
+    edges = copurchase_edges(lineitem, min_support=2)
     pr = pagerank(edges, damping=0.85, n_iter=5)
     return pr.select(
         F.lit("pr").alias("kind"),

@@ -104,7 +104,6 @@ def unified_schema(dfs: Sequence[DataFrame]) -> dict[str, T.DataType]:
 def harmonize(
     dfs: Sequence[DataFrame],
     add_ingest_index: bool = False,
-    index_partitions: int | None = None,
 ) -> DataFrame:
     """U1: normalize names per source, cast to the least-common schema,
     outer-union by name. With ``add_ingest_index=True`` the result also
@@ -133,10 +132,7 @@ def harmonize(
     out = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), casted)
     if add_ingest_index:
         out = with_global_index(
-            out,
-            [INGEST_SOURCE, "_row_in_source"],
-            index_col=INGEST_INDEX,
-            num_partitions=index_partitions,
+            out, [INGEST_SOURCE, "_row_in_source"], index_col=INGEST_INDEX
         ).drop("_row_in_source")
     return out
 

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_integration_and_harmonization_spark.functions.setsim import jaccard_pairs
@@ -162,23 +162,12 @@ def blocking_stats(df: DataFrame, block_cols: Sequence[str]) -> DataFrame:
     )
 
 
-def _name_expr(name_col: str, canonicalize: bool) -> Column:
-    if canonicalize:
-        # lower + collapse non-alnum runs: make "Acme Corp." link to
-        # "acme corp" at edit distance 0 before typo tolerance kicks in
-        from data_integration_and_harmonization_spark.operators.text import normalized
-
-        return normalized(name_col)
-    return F.col(name_col)
-
-
 def candidate_links(
     df: DataFrame,
     id_col: str,
     name_col: str,
     block_cols: Sequence[str],
     max_edit: int = 2,
-    canonicalize: bool = False,
 ) -> DataFrame:
     """Blocked pairwise record matching: records sharing every
     ``block_cols`` value are compared by Levenshtein distance on
@@ -196,7 +185,7 @@ def candidate_links(
             "never the right plan (pick a coarse key, or use the "
             "LSH/SimHash families in operators.dedup for text blobs)"
         )
-    nm = _name_expr(name_col, canonicalize)
+    nm = F.col(name_col)
     left = df.select(
         F.col(id_col).alias("id_a"), nm.alias("__nm_a"), *block_cols
     )
@@ -221,7 +210,6 @@ def resolve_entities(
     name_col: str,
     block_cols: Sequence[str],
     max_edit: int = 2,
-    canonicalize: bool = False,
 ) -> DataFrame:
     """Link records and resolve the match graph to entities:
     connected components over :func:`candidate_links` edges.
@@ -231,7 +219,7 @@ def resolve_entities(
     with no match partner are absent (see
     :func:`assign_entity_ids_from_links`).
     """
-    links = candidate_links(df, id_col, name_col, block_cols, max_edit, canonicalize)
+    links = candidate_links(df, id_col, name_col, block_cols, max_edit)
     return duplicate_clusters(links)
 
 

@@ -368,7 +368,6 @@ def train_models(
     target_column: str,
     is_classification: bool,
     hyperparameter_tuning: bool = False,
-    feature_cols: list[str] | None = None,
     seed: int = 42,
     param_grids: dict[str, list] | None = None,
 ) -> dict[str, dict[str, float]]:
@@ -380,7 +379,7 @@ def train_models(
     if target_column not in df.columns:
         raise ValueError(f"Target column '{target_column}' not found in the dataset.")
 
-    feats = feature_cols or [c for c in numeric_cols(df) if c != target_column]
+    feats = [c for c in numeric_cols(df) if c != target_column]
     if not feats:
         raise ValueError("no numeric feature columns available")
 

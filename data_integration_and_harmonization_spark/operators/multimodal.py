@@ -167,7 +167,7 @@ def decode_features(payload: bytes, media_type: str, dim: int = 8) -> list[float
     return real if real is not None else decode_stub(payload, media_type, dim)
 
 
-def extract_features(media: DataFrame, dim: int = 8, batch_size_hint: int | None = None) -> DataFrame:
+def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
     """Arrow-batched feature extraction over the media table via
     ``mapInPandas``. One pandas batch in, one out; payload column is
     dropped on output so only fixed-width features shuffle

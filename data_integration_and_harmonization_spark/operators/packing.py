@@ -85,14 +85,13 @@ def pack_sequences(
     order_cols: Sequence[str],
     token_col: str,
     budget: int,
-    id_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """Assign documents to fixed-``budget`` context windows by global
     token offset. Output: one row per (document, pack) the document's
-    token span overlaps — (``id_cols``..., pack_id, tok_in_pack).
+    token span overlaps — (``order_cols``..., pack_id, tok_in_pack).
     Zero-token documents occupy no stream space and emit no rows.
     """
-    ids = list(id_cols if id_cols is not None else order_cols)
+    ids = list(order_cols)
     c = with_global_cumsum(df, order_cols, token_col, "__cum")
     start = F.col("__cum") - F.col(token_col)
     end = F.col("__cum") - 1

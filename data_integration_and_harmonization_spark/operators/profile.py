@@ -17,22 +17,16 @@ from data_integration_and_harmonization_spark.functions import stores
 from data_integration_and_harmonization_spark.operators.clean import numeric_cols, string_cols
 
 
-def describe_numeric(
-    df: DataFrame, cols: Sequence[str] | None = None, exact_quantiles: bool = True
-) -> DataFrame:
+def describe_numeric(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     """Numeric side of ref:33 ``describe``: one row per column with
     ``count, mean, std, min, 25%, 50%, 75%, max``.
 
     pandas uses sample std (ddof=1) and linearly-interpolated
     quantiles; Spark's ``stddev`` and exact ``percentile`` match both.
-    ``exact_quantiles=False`` switches to ``percentile_approx`` — the
-    right default at 100 TB, where exact percentile's full sort per
-    column is the bottleneck; exact is kept for oracle parity.
 
     Output: (column, count, mean, std, min, p25, p50, p75, max).
     """
     cols = list(cols if cols is not None else numeric_cols(df))
-    pct = F.percentile if exact_quantiles else F.percentile_approx
     aggs = []
     for c in cols:
         col = F.col(c).cast("double")
@@ -42,9 +36,9 @@ def describe_numeric(
                 F.avg(col).alias("mean"),
                 F.stddev(col).alias("std"),
                 F.min(col).alias("min"),
-                pct(col, F.lit(0.25)).alias("p25"),
-                pct(col, F.lit(0.5)).alias("p50"),
-                pct(col, F.lit(0.75)).alias("p75"),
+                F.percentile(col, F.lit(0.25)).alias("p25"),
+                F.percentile(col, F.lit(0.5)).alias("p50"),
+                F.percentile(col, F.lit(0.75)).alias("p75"),
                 F.max(col).alias("max"),
             ).alias(c)
         )

@@ -106,10 +106,9 @@ def redact_pii(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    patterns: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Typed PII redaction: count and replace each pattern class with
-    a ``<CLASS>`` tag, in the declared pattern order.
+    """Typed PII redaction: count and replace each ``PII_PATTERNS``
+    class with a ``<CLASS>`` tag, in the declared pattern order.
 
     Counts are taken against the ORIGINAL text (so overlapping classes
     report what a scanner would see); replacements chain in order, so
@@ -117,13 +116,12 @@ def redact_pii(
 
     Output: (id, n_<class>... , redacted, redacted_len).
     """
-    pats = patterns or PII_PATTERNS
     t = F.col(text_col)
     out = [F.col(id_col).alias("id")]
-    for name, pat in pats.items():
+    for name, pat in PII_PATTERNS.items():
         out.append(F.size(F.regexp_extract_all(t, F.lit(pat), 0)).cast("long").alias(f"n_{name}"))
     red = t
-    for name, pat in pats.items():
+    for name, pat in PII_PATTERNS.items():
         red = F.regexp_replace(red, pat, f"<{name.upper()}>")
     out.append(red.alias("redacted"))
     return df.select(*out).withColumn("redacted_len", F.length("redacted").cast("long"))

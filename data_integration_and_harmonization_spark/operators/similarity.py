@@ -756,9 +756,6 @@ def build_ann_index(
     n_clusters: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    trained: bool = False,
-    sample: int = 2048,
-    iters: int = 5,
 ) -> dict:
     """Persist the full IVF-PQ index as a VERSIONED table artifact (r9
     verdict item 6) — the build-once-serve-many split a real 100-TB
@@ -778,11 +775,9 @@ def build_ann_index(
     - ``centers/`` — (cell, center) coarse centroids (n_clusters,
       tiny);
 
-    and commits a version listing only that dir.
-
-    ``trained=True`` fits Lloyd codebooks (:func:`train_pq_codebooks`,
-    deterministic sample + seed) instead of the zero-training seeds.
-    Returns the meta dict (incl. the committed ``version``).
+    and commits a version listing only that dir. The codebooks are
+    the zero-training seeds (:func:`seed_pq_codebooks`). Returns the
+    meta dict (incl. the committed ``version``).
     """
     import os
 
@@ -790,12 +785,7 @@ def build_ann_index(
     doc = stores.head(spark, path)
     vdir = stores.new_dir(path, doc)
 
-    books = (
-        train_pq_codebooks(corpus, m=m, k=k, sample=sample, iters=iters,
-                           id_col=id_col, vec_col=vec_col)
-        if trained
-        else seed_pq_codebooks(corpus, m=m, k=k, id_col=id_col, vec_col=vec_col)
-    )
+    books = seed_pq_codebooks(corpus, m=m, k=k, id_col=id_col, vec_col=vec_col)
     centers = _seed_centers(corpus, n_clusters, id_col, vec_col)
     enc = pq_encode(
         corpus,
@@ -816,7 +806,6 @@ def build_ann_index(
         "m": m,
         "k": k,
         "n_clusters": n_clusters,
-        "trained": trained,
         "id_col": id_col,
         "vec_col": vec_col,
         "parent": None,
@@ -850,7 +839,6 @@ def _find_ann_tag(spark: SparkSession, path: str, tag: str) -> dict | None:
 def append_ann_index(
     new_vectors: DataFrame,
     path: str,
-    version: int | None = None,
     tag: str | None = None,
 ) -> dict:
     """Grow a persisted index INCREMENTALLY — the continuously
@@ -883,7 +871,7 @@ def append_ann_index(
         if prior is not None:
             return prior  # replayed batch: already admitted
     head = stores.head(spark, path)
-    doc = _ann_doc(spark, path, version, head)
+    doc = _ann_doc(spark, path, None, head)
     idx = _ann_from_doc(spark, doc)
     meta = idx["meta"]
     id_col, vec_col = meta["id_col"], meta["vec_col"]
@@ -920,7 +908,6 @@ def append_ann_index(
 def delete_from_ann_index(
     ids: DataFrame,
     path: str,
-    version: int | None = None,
     tag: str | None = None,
 ) -> dict:
     """Remove vectors from a persisted index without rewriting any
@@ -944,7 +931,7 @@ def delete_from_ann_index(
         if prior is not None:
             return prior  # replayed batch: already applied
     head = stores.head(spark, path)
-    doc = _ann_doc(spark, path, version, head)
+    doc = _ann_doc(spark, path, None, head)
     vdir = stores.new_dir(path, head)
     ids.toDF("id").dropDuplicates(["id"]).repartition(1).write.parquet(
         os.path.join(vdir, "tombstones")
@@ -1067,14 +1054,12 @@ def load_ann_index(
     spark: SparkSession,
     path: str,
     version: int | None = None,
-    meta_only: bool = False,
 ) -> dict:
     """Load a :func:`build_ann_index` artifact: {'books', 'centers',
     'codes' (lazy DataFrame, cell-partitioned), 'meta'}. The head
     version unless pinned. The books/centers collects are bounded by
     construction (m*k and n_clusters rows) — the corpus-sized part of
-    the index stays a lazy scan. ``meta_only=True`` skips them all
-    and returns just {'meta'}.
+    the index stays a lazy scan.
 
     An APPENDED version (:func:`append_ann_index`) lists every dir
     of its chain in one manifest: codes are the UNION of each listed
@@ -1084,7 +1069,7 @@ def load_ann_index(
     the base dir. Resolving a version reads one manifest, no Spark
     job."""
     doc = _ann_doc(spark, path, version, stores.head(spark, path))
-    return {"meta": doc["meta"]} if meta_only else _ann_from_doc(spark, doc)
+    return _ann_from_doc(spark, doc)
 
 
 # ------------------------------------------------------- queries and oracles

@@ -250,9 +250,6 @@ def stream_cdf_neardedup_maintenance(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    gram: int = 3,
     store_partitions: int = 8,
 ) -> None:
     """The near-dup SIGNATURE store's streaming maintenance consumer
@@ -288,9 +285,6 @@ def stream_cdf_neardedup_maintenance(
             threshold=threshold,
             text_col=text_col,
             id_col=id_col,
-            num_hashes=num_hashes,
-            bands=bands,
-            gram=gram,
             store_partitions=store_partitions,
             tag=f"cdf{batch_id:06d}",
         )

@@ -186,12 +186,11 @@ def delete_rows_versioned(
     table_root: str,
     rewrite_dir: str,
     predicate,
-    version: int | None = None,
 ) -> dict:
     """DELETE against a manifest table, zero-copy.
 
     Finds the files holding matches with one pushdown-pruned scan of
-    the pinned version, rewrites ONLY those into ``rewrite_dir`` with
+    the head version, rewrites ONLY those into ``rewrite_dir`` with
     the predicate inverted, and commits a new version that references
     every untouched file IN PLACE next to the rewritten ones. Nothing
     is copied: at 100 TB a selective delete moves exactly the affected
@@ -206,7 +205,7 @@ def delete_rows_versioned(
     def _norm(p: str) -> str:
         return unquote(urlparse(p).path)
 
-    doc = read_manifest(spark, table_root, version)
+    doc = read_manifest(spark, table_root)
     fmt = doc.get("format", "parquet")
     paths = [f["path"] for f in doc["files"]]
     df = spark.read.format(fmt).load(paths)
@@ -260,10 +259,8 @@ def merge_upsert_versioned(
     rewrite_dir: str,
     updates: DataFrame,
     key_cols: list[str],
-    version: int | None = None,
     op_col: str | None = None,
     evolve_schema: bool = False,
-    allow_missing_update_cols: bool = False,
 ) -> dict:
     """MERGE against a manifest table — the upsert sibling of
     :func:`delete_rows_versioned`.
@@ -284,7 +281,7 @@ def merge_upsert_versioned(
     (insert/update are both upserts); 'D' rows DELETE their matched
     table rows — Delta's ``WHEN MATCHED THEN DELETE`` arm — and are
     never inserted. Only the files that contain matched keys are
-    rewritten (found with one broadcast-semi-join scan of the pinned
+    rewritten (found with one broadcast-semi-join scan of the head
     version); every untouched file is referenced in place by the new
     version; survivors + the surviving upserts land in
     ``rewrite_dir``. ``updates`` is assumed CDC-batch-sized (it
@@ -347,7 +344,7 @@ def merge_upsert_versioned(
             upserts = updates
             n_upserts = int(_probe["n"])
 
-        doc = read_manifest(spark, table_root, version)
+        doc = read_manifest(spark, table_root)
         fmt = doc.get("format", "parquet")
         paths = [f["path"] for f in doc["files"]]
         # mergeSchema on EVERY load here (r9 advice): after a prior
@@ -417,27 +414,22 @@ def merge_upsert_versioned(
         else:
             survivors = None
         missing = [c for c in tbl.columns if c not in upserts.columns]
-        if missing and not (evolve_schema or allow_missing_update_cols):
-            # loud by default (r10 review): a change batch that silently
-            # DROPS a table column (producer bug) must not rewrite every
-            # matched row with NULLs. Post-evolution batches that
-            # legitimately omit adopted columns opt in explicitly.
+        if missing and not evolve_schema:
+            # loud (r10 review): a change batch that silently DROPS a
+            # table column (producer bug) must not rewrite every
+            # matched row with NULLs. Post-evolution batches supply
+            # adopted columns they leave empty as explicit NULLs.
             raise ValueError(
                 f"updates are missing table columns {missing}; matched rows "
-                "would be rewritten with NULLs — pass "
-                "allow_missing_update_cols=True if the omission is "
-                "intentional (e.g. columns adopted by an earlier "
-                "evolve_schema merge), or supply the columns"
+                "would be rewritten with NULLs — supply the columns (as "
+                "NULL where the omission is intentional)"
             )
         if survivors is None:
             out = upserts
         else:
-            # allowMissingColumns both ways: with evolve_schema the
-            # survivors take NULL for the adopted columns; with
-            # allow_missing_update_cols (post-evolution batches omitting
-            # adopted columns) whole-row replace semantics make NULL the
-            # faithful value for a column the update row didn't supply
-            # (column order follows the survivor/table side).
+            # allowMissingColumns: with evolve_schema the survivors
+            # take NULL for the adopted columns (column order follows
+            # the survivor/table side).
             out = survivors.unionByName(upserts, allowMissingColumns=True)
         out.write.mode("overwrite").format(fmt).save(rewrite_dir)
         from data_integration_and_harmonization_spark.sources.writers import (

@@ -569,43 +569,37 @@ def _read_excel_driver_side(spark: SparkSession, path: str) -> DataFrame:
         return spark.createDataFrame(data, schema)
 
 
-def read_sources(
-    spark: SparkSession,
-    paths: Sequence[str],
-    reject_empty: bool = True,
-    skip_errors: bool = False,
-) -> list[DataFrame]:
+def _read_source(spark: SparkSession, path: str) -> DataFrame:
+    df = read_any(spark, path)
+    if df.isEmpty():
+        raise ValueError(f"source {path} is empty")
+    return df
+
+
+def read_sources(spark: SparkSession, paths: Sequence[str]) -> list[DataFrame]:
     """Multi-file ingestion (S5, ref:168): one DataFrame per source.
 
-    ``reject_empty`` mirrors the reference's empty-file error
-    (ref:181-182) — checked lazily via ``df.isEmpty()`` (a LIMIT-1 job,
-    not a full count). ``skip_errors=True`` mirrors the reference's
-    per-file try/except (ref:171-187): a failing source is reported and
-    skipped, the remaining sources still load — use
-    :func:`read_sources_with_errors` to receive the error list.
+    An empty source raises, mirroring the reference's empty-file error
+    (ref:181-182) — checked lazily via ``df.isEmpty()`` (a LIMIT-1
+    job, not a full count); so does a source that fails to read.
+    :func:`read_sources_with_errors` mirrors the reference's per-file
+    try/except (ref:171-187) instead.
     """
-    dfs, _ = read_sources_with_errors(spark, paths, reject_empty, skip_errors)
-    return dfs
+    return [_read_source(spark, path) for path in paths]
 
 
 def read_sources_with_errors(
-    spark: SparkSession,
-    paths: Sequence[str],
-    reject_empty: bool = True,
-    skip_errors: bool = True,
+    spark: SparkSession, paths: Sequence[str]
 ) -> tuple[list[DataFrame], list[tuple[str, str]]]:
-    """Like :func:`read_sources` but returns (frames, [(path, error)])."""
+    """Like :func:`read_sources`, but a failing or empty source is
+    reported and skipped while the remaining sources still load:
+    returns (frames, [(path, error)])."""
     dfs: list[DataFrame] = []
     errors: list[tuple[str, str]] = []
     for path in paths:
         try:
-            df = read_any(spark, path)
-            if reject_empty and df.isEmpty():
-                raise ValueError(f"source {path} is empty")
-            dfs.append(df)
+            dfs.append(_read_source(spark, path))
         except Exception as exc:  # noqa: BLE001 — per-file isolation (ref:186)
-            if not skip_errors:
-                raise
             errors.append((path, str(exc)))
     return dfs, errors
 

@@ -47,6 +47,10 @@ def test_no_module_keeps_its_own_registry():
 
 
 def test_verify_local_rejects_unknown_names_before_spark(monkeypatch, capsys):
+    """verify_local, profile_query and scale_probe all exit 2 on an
+    unknown query name before they start a Spark session."""
+    import profile_query
+    import scale_probe
     import verify_local
 
     import data_integration_and_harmonization_spark as pkg
@@ -55,7 +59,12 @@ def test_verify_local_rejects_unknown_names_before_spark(monkeypatch, capsys):
         raise AssertionError("get_spark called for an unknown query name")
 
     monkeypatch.setattr(pkg, "get_spark", no_spark)
-    monkeypatch.setattr(sys, "argv", ["verify_local.py", "/nonexistent", "clean_repair", "no_such_query"])
-    assert verify_local.main() == 2
-    assert "no_such_query" in capsys.readouterr().err
+    for tool, argv in (
+        (verify_local, ["verify_local.py", "/nonexistent", "clean_repair", "no_such_query"]),
+        (profile_query, ["profile_query.py", "clean_repair", "no_such_query"]),
+        (scale_probe, ["scale_probe.py", "no_such_query"]),
+    ):
+        monkeypatch.setattr(sys, "argv", argv)
+        assert tool.main() == 2, tool.__name__
+        assert "no_such_query" in capsys.readouterr().err, tool.__name__
 

@@ -48,7 +48,7 @@ def test_ngram_jaccard_ranks_near_dup_highest(spark):
 
 
 def test_minhash_candidates_find_near_dups(spark):
-    cands = DD.minhash_lsh_candidates(_docs(spark), num_hashes=32, bands=16).collect()
+    cands = DD.minhash_lsh_candidates(_docs(spark)).collect()
     found = {frozenset((r["id_a"], r["id_b"])) for r in cands}
     assert frozenset((1, 2)) in found
 
@@ -65,7 +65,7 @@ def test_simhash_pairs_pigeonhole_and_filter(spark):
     # the identical-token pair (1,2) must surface
     pairs = {
         frozenset((r["id_a"], r["id_b"])): r["hamming"]
-        for r in DD.simhash_pairs(_docs(spark), max_hamming=3).collect()
+        for r in DD.simhash_pairs(_docs(spark)).collect()
     }
     assert pairs[frozenset((1, 2))] == 0
     assert all(h <= 3 for h in pairs.values())
@@ -955,7 +955,7 @@ def test_phash_pairs_banded_recall_and_null_drop(spark):
     table = DD.media_signature_table(media)
     sig = {r["id"]: r["sig"] for r in table.collect()}
     assert sig[4] is None and sig[1] is not None
-    image_pairs = DD.hamming_pairs(table.select("id", "sig"), max_hamming=3)
+    image_pairs = DD.hamming_pairs(table.select("id", "sig"))
     pairs = {frozenset((r["id_a"], r["id_b"])): r["hamming"] for r in image_pairs.collect()}
     assert frozenset((1, 2)) in pairs and pairs[frozenset((1, 2))] <= 3
     assert all(4 not in p for p in pairs)

@@ -62,18 +62,6 @@ def test_assign_entity_ids_completes_singletons(spark):
     assert out.count() == len(ROWS)
 
 
-def test_canonicalize_links_punctuation_variants(spark):
-    df = spark.createDataFrame(
-        [(1, "Acme Corp.", "US"), (2, "acme corp", "US")],
-        "id long, name string, country string",
-    )
-    assert candidate_links(df, "id", "name", ["country"], max_edit=0).count() == 0
-    got = candidate_links(
-        df, "id", "name", ["country"], max_edit=0, canonicalize=True
-    ).collect()
-    assert [(r.id_a, r.id_b, r.edit_distance) for r in got] == [(1, 2, 0)]
-
-
 def test_empty_block_cols_rejected(spark):
     with pytest.raises(ValueError, match="block_cols"):
         candidate_links(_df(spark), "id", "name", [], max_edit=1)

@@ -109,6 +109,40 @@ def test_every_lookup_quarantines_torn_media():
                 kernel(m)  # must not raise
 
 
+def _duration_by_decode(payload: bytes) -> int | None:
+    """Y4M/WAV duration by counting fully decoded frames or samples."""
+    decode = {"y4m": MC.decode_y4m, "wav": MC.decode_wav}[MC.sniff_format(payload)]
+    try:
+        rate, frames = decode(payload)
+    except Exception:  # noqa: BLE001 — torn media: no duration
+        return None
+    if not rate:
+        return None
+    return int(len(frames) * 1000 / rate) if decode is MC.decode_y4m else len(frames) * 1000 // rate
+
+
+def test_duration_walk_matches_the_full_decode():
+    """Y4M and WAV durations come from the header and frame/chunk walk
+    their decoders share, without converting a pixel or a sample. On
+    every payload of the fuzz corpus they equal counting the decoded
+    frames/samples, None wherever that decode raises, and the corpus's
+    durations (every format) hash to the value the full-decode
+    implementation produced."""
+    import hashlib
+
+    rng = random.Random(2026)
+    corpus = [m for p in _valid_media() for m in [p, *_mutations(p, rng, n=40)]]
+    walked = [m for m in corpus if MC.sniff_format(m) in ("y4m", "wav")]
+    assert len(walked) == 124
+    got = [MC.media_duration_ms(m) for m in walked]
+    assert got == [_duration_by_decode(m) for m in walked]
+    assert 0 < got.count(None) < len(got)
+    digest = hashlib.sha256(repr([MC.media_duration_ms(m) for m in corpus]).encode())
+    assert digest.hexdigest() == (
+        "02ed73d98e1092a60e55468ecc3e12e03632ef84b6a7fea5d431d4f8e30fb96b"
+    )
+
+
 def test_torn_metadata_payloads_are_null_rows():
     torn = [
         MC.encode_webm_meta(1000.0, 640, 360, 48000.0, 2)[:4],

@@ -919,7 +919,7 @@ def test_wav_extended_widths():
         struct.pack("<HH", 3, 1), struct.pack("<HH", 85, 1), 1
     )
     with _pytest.raises(ValueError):
-        MC._decode_wav_riff(bad)
+        MC.decode_wav(bad)
 
 
 def test_bmp_content_tier():

@@ -27,7 +27,7 @@ def test_read_sources_skips_bad_files(spark, sf_dir):
 
 def test_read_sources_strict_raises(spark, sf_dir):
     with pytest.raises(Exception):
-        R.read_sources(spark, ["/nonexistent/x.parquet"], skip_errors=False)
+        R.read_sources(spark, ["/nonexistent/x.parquet"])
 
 
 @pytest.mark.parametrize(

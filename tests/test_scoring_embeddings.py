@@ -225,12 +225,6 @@ def test_truncate_dim_prefix_and_renorm(vecs):
     assert len(full[0]) == 2
     n = math.sqrt(sum(x * x for x in full[0]))
     assert n == pytest.approx(1.0, abs=1e-9)
-    # renormalize=False keeps the raw prefix
-    raw = {
-        r["vec_id"]: r["embedding"]
-        for r in truncate_dim(vecs, 1, renormalize=False).collect()
-    }
-    assert raw[0] == pytest.approx([3.0], abs=1e-6)
 
 
 def test_random_projection_jl_properties(spark):

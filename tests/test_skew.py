@@ -106,33 +106,12 @@ def test_salted_join_fans_hot_key_across_partitions(spark):
     assert salted_parts > 1, "salting must spread the hot key"
 
 
-def test_hamming_hot_bucket_report_and_cap(spark):
-    """The banded-Hamming hot-bucket guard: on an all-identical
-    signature corpus the report names the hot (band, bucket) groups
-    with the full skew factor, and a max_bucket-capped hamming_pairs
-    run skips the quadratic blow-up while hamming_dropped_buckets
-    flags exactly what was skipped. Default (uncapped) behavior is
-    unchanged."""
+def test_hamming_identical_corpus_pairs_every_id(spark):
+    """hamming_pairs has no hot-bucket cap: an all-identical signature
+    corpus shares every band bucket and yields all n*(n-1)/2 pairs
+    (the quadratic bound the banded self-join documents)."""
     from data_integration_and_harmonization_spark.operators import dedup as DD
 
     n = 200
     ident = spark.range(n).select(F.col("id"), F.lit(-6148914691236517206).alias("sig"))
-    # report: every one of the 4 bands holds ONE bucket of all n ids
-    rep = DD.hamming_bucket_report(ident, top_n=4).collect()
-    assert len(rep) == 4
-    assert all(r["n_rows"] == n and r["x_mean"] == 1.0 and r["n_groups"] == 4 for r in rep)
-    # the key column names the band|bucket pair a cap should target
-    assert {r["key"].split("|")[0] for r in rep} == {"0", "1", "2", "3"}
-
-    # uncapped: the documented quadratic bound — n*(n-1)/2 pairs
     assert DD.hamming_pairs(ident).count() == n * (n - 1) // 2
-    # capped: the hot buckets are skipped, zero candidates generated
-    assert DD.hamming_pairs(ident, max_bucket=50).count() == 0
-    dropped = DD.hamming_dropped_buckets(ident, max_bucket=50).collect()
-    assert len(dropped) == 4 and all(r["n"] == n for r in dropped)
-
-    # a sparse corpus under the cap is untouched by it
-    sparse = spark.range(8).select(F.col("id"), (F.col("id") * 1099511628211).alias("sig"))
-    uncapped = {tuple(r) for r in DD.hamming_pairs(sparse, max_hamming=64).collect()}
-    capped = {tuple(r) for r in DD.hamming_pairs(sparse, max_hamming=64, max_bucket=50).collect()}
-    assert uncapped == capped

@@ -823,9 +823,8 @@ def test_merge_after_evolve_keeps_adopted_column(spark, tmp_path):
     infers from an arbitrary footer and survivor rows in new-schema
     files silently lose the adopted column on rewrite. Also pins the
     omission contract: a change batch missing table columns is LOUD
-    by default (producer-bug guard), and with the explicit
-    allow_missing_update_cols opt-in the omitted adopted column
-    NULL-fills under whole-row semantics instead of dropping."""
+    (producer-bug guard); a batch that supplies the adopted column as
+    NULL replaces it under whole-row semantics."""
     from data_integration_and_harmonization_spark.sources.manifest import (
         commit_version,
         merge_upsert_versioned,
@@ -852,17 +851,17 @@ def test_merge_after_evolve_keeps_adopted_column(spark, tmp_path):
     )
 
     # merge 2: touch BOTH schema generations (k=2 lives next to the
-    # adopted w=100 row; k=3 lives in a pre-evolution file), updates
-    # omit w entirely — loud by default, explicit opt-in applies
-    up2 = spark.createDataFrame([(2, 22.0), (3, 33.0)], "k long, v double")
+    # adopted w=100 row; k=3 lives in a pre-evolution file); omitting
+    # w is loud, supplying it as NULL applies
+    omits_w = spark.createDataFrame([(2, 22.0), (3, 33.0)], "k long, v double")
     import pytest
 
     with pytest.raises(ValueError, match="missing table columns"):
-        merge_upsert_versioned(spark, root, str(tmp_path / "rwx"), up2, ["k"])
-    s2 = merge_upsert_versioned(
-        spark, root, str(tmp_path / "rw2"), up2, ["k"],
-        allow_missing_update_cols=True,
+        merge_upsert_versioned(spark, root, str(tmp_path / "rwx"), omits_w, ["k"])
+    up2 = spark.createDataFrame(
+        [(2, 22.0, None), (3, 33.0, None)], "k long, v double, w double"
     )
+    s2 = merge_upsert_versioned(spark, root, str(tmp_path / "rw2"), up2, ["k"])
 
     got = {
         (r["k"], r["v"], r["w"])

@@ -7,6 +7,12 @@ package and in ``__spark_entry__.py`` must either be reached from those
 roots, following names through module bodies to a fixpoint, or be
 named in ``KEEP`` with a one-line reason. A definition that only its
 own tests call is a fork or an orphan: delete it, or argue for it here.
+
+The same holds one layer down, for parameters: a bool- or
+None-defaulted parameter of a surface function is a switch, and some
+call on the surface must set it to another value. A switch that only
+tests flip (or nothing does) is a dead fork: delete it with the branch
+it guards, or name it in ``SWITCH_KEEP`` with a one-line reason.
 """
 
 from __future__ import annotations
@@ -29,10 +35,44 @@ KEEP: tuple[tuple[str, str, str], ...] = (
     ("plans.pipeline", "HarmonizationResult",
      "result type of run_harmonization_pipeline, exported by plans/__init__"),
     ("streaming.pipeline", "incremental_drain", "README-documented streaming drain"),
-    ("operators.dedup", "hamming_bucket_report",
-     "audit half of hamming_pairs' max_bucket cap"),
-    ("operators.dedup", "hamming_dropped_buckets",
-     "audit half of hamming_pairs' max_bucket cap"),
+    ("sources.readers", "read_sources_with_errors",
+     "the reference's per-file try/except ingestion (ref:171-187), next to strict read_sources"),
+)
+
+_PARTITION_TEST = "tests vary the width to pin the result's partition independence"
+_STORE_TAG = "replay tag committed with the store entry: the store's idempotent-admit claim"
+_FIXTURE = "fixture-encoder option that builds decoder inputs the tests need"
+
+# (module, function, parameter, reason): switches no surface call flips.
+SWITCH_KEEP: tuple[tuple[str, str, str, str], ...] = (
+    ("operators.clean", "interpolate_linear", "num_partitions", _PARTITION_TEST),
+    ("operators.clean", "interpolate_linear", "pre_partitioned",
+     "test_prepartitioned.py forces the fast path and compares it with the default path"),
+    ("operators.clean", "interpolate_and_ffill", "num_partitions", _PARTITION_TEST),
+    ("operators.sampling", "deterministic_shuffle", "num_partitions", _PARTITION_TEST),
+    ("operators.similarity", "compact_ann_index", "sweep",
+     "test_pq.py pins the deferred sweep for readers that overlap maintenance"),
+    ("operators.similarity", "load_ann_index", "version",
+     "test_pq.py pins reading a retained older version"),
+    ("operators.similarity", "append_ann_index", "tag", _STORE_TAG),
+    ("operators.similarity", "delete_from_ann_index", "tag", _STORE_TAG),
+    ("operators.profile", "profile_store_update", "tag", _STORE_TAG),
+    ("session", "get_spark", "master", "deployment setting"),
+    ("session", "get_spark", "shuffle_partitions", "deployment setting"),
+    ("plans.pipeline", "run_harmonization_pipeline", "paths", "KEEP-listed library API"),
+    ("plans.pipeline", "run_harmonization_pipeline", "dfs", "KEEP-listed library API"),
+    ("plans.pipeline", "run_harmonization_pipeline", "coerce", "KEEP-listed library API"),
+    ("plans.pipeline", "run_harmonization_pipeline", "scale", "KEEP-listed library API"),
+    ("plans.pipeline", "run_harmonization_pipeline", "encode", "KEEP-listed library API"),
+    ("streaming.pipeline", "incremental_drain", "transform", "KEEP-listed library API"),
+    ("streaming.pipeline", "incremental_drain", "schema", "KEEP-listed library API"),
+    ("sources.readers", "read_any", "fmt", "the ingestion front door's format override"),
+    ("sources.readers", "read_any", "encoding", "the ingestion front door's text encoding"),
+    ("functions.media_codecs", "encode_gif", "delays", _FIXTURE),
+    ("functions.media_codecs", "encode_mp4_meta", "with_audio", _FIXTURE),
+    ("functions.media_codecs", "encode_webm_meta", "with_audio", _FIXTURE),
+    ("functions.pdf", "encode_pdf", "compress", _FIXTURE),
+    ("functions.pdf", "encode_pdf_cid", "objstm", _FIXTURE),
 )
 
 
@@ -174,4 +214,102 @@ def test_keep_entries_are_live_unreached_and_argued():
     for mod, name, reason in KEEP:
         assert (mod, name) in defined, (mod, name)
         assert (mod, name) not in reached, f"{mod}.{name} is reached; drop it from KEEP"
+        assert reason.strip() and "\n" not in reason
+
+
+def _switches(fn: ast.FunctionDef) -> list[tuple[int | None, str, object]]:
+    """(position or None for keyword-only, name, default) of every
+    parameter whose default is True, False or None."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    pairs = [(i, arg, d) for i, (arg, d) in enumerate(zip(pos[first:], a.defaults), first)]
+    pairs += [(None, arg, d) for arg, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return [
+        (i, arg.arg, d.value)
+        for i, arg, d in pairs
+        if isinstance(d, ast.Constant) and (d.value is None or isinstance(d.value, bool))
+    ]
+
+
+def _flips(call: ast.Call, params: list[tuple[int | None, str, object]], args: list[ast.expr]):
+    """Names of ``params`` that ``call`` (with positional ``args``) sets
+    to something other than the default. ``*args`` sets every position
+    from its own on; ``**kwargs`` sets every parameter."""
+    def other(node: ast.expr, default: object) -> bool:
+        return not (isinstance(node, ast.Constant) and node.value is default)
+
+    for i, name, default in params:
+        for j, arg in enumerate(args):
+            if i is not None and (
+                (isinstance(arg, ast.Starred) and j <= i) or (j == i and other(arg, default))
+            ):
+                yield name
+        for kw in call.keywords:
+            if kw.arg is None or (kw.arg == name and other(kw.value, default)):
+                yield name
+
+
+def unflipped_switches() -> set[tuple[str, str, str]]:
+    """(module, function, parameter) of every switch of a surface
+    function (reached from the roots or KEEP) that no call on the
+    surface, in the scripts or in a module body sets. Calls resolve
+    through the same name graph as ``unreached``; ``partial(f, ...)``
+    counts as a call of ``f``."""
+    g = _Graph()
+    surface = g.reached({(_full(m), n) for m, n, _ in KEEP})
+    flipped: set[tuple[str, str, str]] = set()
+
+    def scan(node: ast.AST, env, mod: str | None) -> None:
+        for call in ast.walk(node):
+            if not isinstance(call, ast.Call):
+                continue
+            func, args = call.func, list(call.args)
+            if getattr(func, "id", getattr(func, "attr", None)) == "partial" and args:
+                func, args = args[0], args[1:]
+            if isinstance(func, ast.Name):
+                hit = next(g.refs(func, env, mod), None)
+            elif isinstance(func, ast.Attribute) and isinstance(func.value, ast.Name):
+                target = env.get(func.value.id)  # module alias, else a method call
+                hit = g.resolve(target[0], func.attr) if target and target[1] is None else None
+            else:
+                continue
+            if hit is None or not isinstance(g.defs[hit[0]][hit[1]], ast.FunctionDef):
+                continue
+            params = _switches(g.defs[hit[0]][hit[1]])
+            flipped.update((*hit, name) for name in _flips(call, params, args))
+
+    scripts = [ROOT / "bench.py", ROOT / "perfbench" / "run.py"]
+    for path in scripts + sorted((ROOT / "tools").glob("*.py")):
+        tree = ast.parse(path.read_text())
+        scan(tree, _imports(tree, g.mods), None)
+    defs = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    for mod, tree in g.trees.items():
+        for node in tree.body:
+            if not isinstance(node, defs):
+                scan(node, g.env[mod], mod)
+    for mod, name in surface:
+        scan(g.defs[mod][name], g.env[mod], mod)
+    return {
+        (_short(mod), name, param)
+        for mod, name in surface
+        if isinstance(g.defs[mod][name], ast.FunctionDef)
+        for _, param, _ in _switches(g.defs[mod][name])
+        if (mod, name, param) not in flipped
+    }
+
+
+def test_every_switch_is_flipped_or_kept():
+    kept = {(m, f, p) for m, f, p, _ in SWITCH_KEEP}
+    assert sorted(unflipped_switches() - kept) == []
+
+
+def test_switch_keep_entries_are_live_unflipped_and_argued():
+    g = _Graph()
+    unflipped = unflipped_switches()
+    for mod, fn, param, reason in SWITCH_KEEP:
+        node = g.defs.get(_full(mod), {}).get(fn)
+        assert isinstance(node, ast.FunctionDef), (mod, fn)
+        assert param in {p for _, p, _ in _switches(node)}, (mod, fn, param)
+        assert (mod, fn, param) in unflipped, f"{mod}.{fn}({param}) is flipped; drop it from SWITCH_KEEP"
         assert reason.strip() and "\n" not in reason

@@ -37,13 +37,13 @@ def main() -> int:
     from data_integration_and_harmonization_spark import get_spark
     from data_integration_and_harmonization_spark.functions.caching import release_all
 
-    spark = get_spark("profile_query")
-    sc = spark.sparkContext
     qs = entrymod.queries()
     for q in args.queries:
         if q not in qs:
             print(f"unknown query {q!r}", file=sys.stderr)
             return 2
+    spark = get_spark("profile_query")
+    sc = spark.sparkContext
 
     for w in range(args.warm):
         for q in args.queries:

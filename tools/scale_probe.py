@@ -169,7 +169,6 @@ def main() -> int:
     from data_integration_and_harmonization_spark import get_spark
 
     global OPERATORS
-    spark = get_spark("scale_probe")
     qs = entrymod.queries()
     missing = set(OPERATORS) - set(qs)
     if missing:
@@ -181,6 +180,7 @@ def main() -> int:
             print(f"not in OPERATORS: {sorted(unknown)}", file=sys.stderr)
             return 2
         OPERATORS = {k: v for k, v in OPERATORS.items() if k in set(args.only)}
+    spark = get_spark("scale_probe")
 
     out = args.out or tempfile.mkdtemp(prefix="dih_scale_probe_")
     if args.reuse and os.path.exists(os.path.join(out, "lineitem.parquet")):
